@@ -15,6 +15,7 @@ Oracle-parity discipline (why results hash-match bit-for-bit):
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 from collections.abc import Callable
@@ -1502,35 +1503,43 @@ def q_stream_replay_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariant (``bin/fink_test_ztf:100-148``). The oracle *is* the batch
     group-count."""
     configure_session(spark)
-    return replay_to_table(
-        spark,
-        _stream_stage(sf_dir, "events"),
-        lambda sdf: sdf.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n_events")
-        ),
-        output_mode="complete",
-    )
+    with _stream_stage(sf_dir, "events") as stage:
+        return replay_to_table(
+            spark,
+            stage,
+            lambda sdf: sdf.groupBy("event_type").agg(
+                F.count(F.lit(1)).alias("n_events")
+            ),
+            output_mode="complete",
+        )
 
 
-def _stream_stage(sf_dir: str, table: str) -> str:
-    """Directory the file-stream source can replay for *table*.
+@contextlib.contextmanager
+def _stream_stage(sf_dir: str, table: str):
+    """Directory the file-stream source can replay for *table*, for the
+    length of the ``with`` block.
 
     The file source streams *directories*: a directory-of-parts table
     (multi-file lake) streams as-is; a single-file table gets staged
     behind a symlink dir (falling back to a copy on filesystems
-    without symlinks)."""
+    without symlinks), removed again when the block ends — a drained
+    replay's memory-sink table no longer reads it."""
     import shutil
     import tempfile
 
     src = os.path.join(sf_dir, f"{table}.parquet")
     if os.path.isdir(src):
-        return src
+        yield src
+        return
     stage = tempfile.mkdtemp(prefix="fbs_replay_")
     try:
-        os.symlink(src, os.path.join(stage, f"{table}.parquet"))
-    except OSError:
-        shutil.copy(src, os.path.join(stage, f"{table}.parquet"))
-    return stage
+        try:
+            os.symlink(src, os.path.join(stage, f"{table}.parquet"))
+        except OSError:
+            shutil.copy(src, os.path.join(stage, f"{table}.parquet"))
+        yield stage
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
 
 
 ORACLE_STREAM_REPLAY = """
@@ -1555,14 +1564,15 @@ def q_stream_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same per-key state.  NULL users carry no identity and are
     excluded on both sides."""
     configure_session(spark)
-    totals = replay_to_table(
-        spark,
-        _stream_stage(sf_dir, "events"),
-        lambda sdf: sdf.filter(F.col("user_id").isNotNull())
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events")),
-        output_mode="complete",
-    )
+    with _stream_stage(sf_dir, "events") as stage:
+        totals = replay_to_table(
+            spark,
+            stage,
+            lambda sdf: sdf.filter(F.col("user_id").isNotNull())
+            .groupBy("user_id")
+            .agg(F.count(F.lit(1)).alias("n_events")),
+            output_mode="complete",
+        )
     return totals.orderBy(F.desc("n_events"), "user_id").limit(10)
 
 
@@ -3545,32 +3555,24 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked streaming dedup (the §2.11 extension). Stateful
     streaming op → rows-only driver check; batch-equivalence is asserted
     in tests/test_streaming.py."""
-    import shutil
-    import tempfile
-
     from fink_broker_spark.core.time import ensure_event_ts
     from fink_broker_spark.streaming.dedup import stream_dedup
 
     configure_session(spark)
-    src = os.path.join(sf_dir, "events.parquet")
-    stage = tempfile.mkdtemp(prefix="fbs_dedup_")
-    try:
-        os.symlink(src, os.path.join(stage, "events.parquet"))
-    except OSError:
-        shutil.copy(src, os.path.join(stage, "events.parquet"))
-    return replay_to_table(
-        spark,
-        stage,
-        lambda sdf: stream_dedup(
-            ensure_event_ts(sdf).select(
-                "user_id", "event_type", "ts"
-            ),
-            keys=["user_id", "event_type"],
-            event_time_col="ts",
-            watermark_delay="1 hour",
-        ).drop("ts"),
-        output_mode="append",
-    )
+    with _stream_stage(sf_dir, "events") as stage:
+        return replay_to_table(
+            spark,
+            stage,
+            lambda sdf: stream_dedup(
+                ensure_event_ts(sdf).select(
+                    "user_id", "event_type", "ts"
+                ),
+                keys=["user_id", "event_type"],
+                event_time_col="ts",
+                watermark_delay="1 hour",
+            ).drop("ts"),
+            output_mode="append",
+        )
 
 
 # --------------------------------------------------------------------------
@@ -8336,11 +8338,8 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    # the LP rounds materialize eagerly (per-round checkpoints inside
-    # min_label_propagation), so the edge relation must be
-    # materialized FIRST — otherwise every round-job re-derives the
-    # basket self-join from scratch (measured 4.2→7.0 s regression
-    # before this cut, 4.2→3.3 s after)
+    # every LP round joins the edge relation, so it is materialized
+    # once — otherwise each round re-derives the basket self-join
     sym = _materialize(
         symmetrize(copurchase_edges(li, min_support=2))
     )
@@ -17472,24 +17471,26 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = F.floor(
         F.col("value").cast("double") * 100 + F.lit(0.5)
     ).cast("long")
-    return replay_to_table(
-        spark,
-        _stream_stage(sf_dir, "events"),
-        # finite-value domain (NULL kept — NULL cents SUM-skip as
-        # before): Spark floor(double) silently corrupts NaN/Inf where
-        # the oracle's BIGINT cast hard-errors (nanemb layout, r10)
-        lambda sdf: sdf.filter(
-            F.col("value").isNull() | _finite("value")
+    with _stream_stage(sf_dir, "events") as stage:
+        return replay_to_table(
+            spark,
+            stage,
+            # finite-value domain (NULL kept — NULL cents SUM-skip as
+            # before): Spark floor(double) silently corrupts NaN/Inf
+            # where the oracle's BIGINT cast hard-errors (nanemb
+            # layout, r10)
+            lambda sdf: sdf.filter(
+                F.col("value").isNull() | _finite("value")
+            )
+            .join(F.broadcast(dim), "user_id")
+            .select("segment", cents.alias("cents"))
+            .groupBy("segment")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum("cents").alias("value_cents"),
+            ),
+            output_mode="complete",
         )
-        .join(F.broadcast(dim), "user_id")
-        .select("segment", cents.alias("cents"))
-        .groupBy("segment")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("cents").alias("value_cents"),
-        ),
-        output_mode="complete",
-    )
 
 
 ORACLE_STREAM_STATIC_ENRICH = """
@@ -18389,12 +18390,10 @@ def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.window("ts", "2 hours", "1 hour"), "event_type"
         ).agg(F.count(F.lit(1)).alias("n_events"))
 
-    drained = replay_to_table(
-        spark,
-        _stream_stage(sf_dir, "events"),
-        _agg,
-        output_mode="complete",
-    )
+    with _stream_stage(sf_dir, "events") as stage:
+        drained = replay_to_table(
+            spark, stage, _agg, output_mode="complete"
+        )
     return drained.select(
         F.col("window.start").alias("window_start"),
         "event_type",
@@ -19443,57 +19442,32 @@ def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-converged chain hashes identically.  Docs in no pair are
     singletons and out of scope (this is the dedup-graph accounting).
 
-    Plan: per round ONE edge→label equi-join + min aggregate (shuffle
-    ∝ edges, bounded by the LSH verify output) and one label join —
-    the pointer-jumping CC (``ext/dedup.py``) stays the log-depth
-    100 TB regime; this bounded twin is what fits the exact gate.
+    Plan: the rounds are :func:`ext.graph.min_label_propagation`'s
+    closed-neighbourhood MIN — per round ONE edge→label equi-join + min
+    aggregate (shuffle ∝ edges, bounded by the LSH verify output); the
+    pointer-jumping CC (``ext/dedup.py``) stays the log-depth 100 TB
+    regime; this bounded twin is what fits the exact gate.
 
     Returns (cluster_size, n_clusters), exact integers.
     """
     from fink_broker_spark.ext.dedup import minhash_lsh_pairs_portable
+    from fink_broker_spark.ext.graph import (
+        min_label_propagation,
+        symmetrize,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs_portable(
         docs, num_hashes=16, nbands=4, n=3, threshold=0.5
     ).select("id_a", "id_b")
-    # checkpoint the edge set and each round's labels: labels_r
-    # references labels_{r-1} twice (directly and through the
-    # neighbor-min), so an uncut lineage re-evaluates the LSH subtree
-    # 2^rounds times — the Spark-side twin of the oracle's MATERIALIZED
-    # requirement (measured 12 s → ~3 s at sf0.1; the pointer-jumping
-    # CC in ext/dedup.py applies the same discipline)
-    edges = _materialize(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionAll(
-            pairs.select(
-                F.col("id_b").alias("src"), F.col("id_a").alias("dst")
-            )
+    # the edge set feeds every round: materialize it once so the rounds
+    # read the verified pairs instead of re-running the LSH pipeline
+    sym = _materialize(
+        symmetrize(
+            pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         )
     )
-    labels = edges.select(F.col("src").alias("id")).distinct().select(
-        "id", F.col("id").alias("lbl")
-    )
-    for _ in range(4):
-        nb = (
-            edges.join(
-                labels.select(
-                    F.col("id").alias("dst"), F.col("lbl").alias("nlbl")
-                ),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("nlbl").alias("nmin"))
-            .select(F.col("src").alias("id"), "nmin")
-        )
-        labels = _materialize(
-            labels.join(nb, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("lbl"), F.coalesce("nmin", "lbl")).alias(
-                    "lbl"
-                ),
-            )
-        )
+    labels = min_label_propagation(sym, rounds=4)
     sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("csize"))
     return sizes.groupBy(F.col("csize").alias("cluster_size")).agg(
         F.count(F.lit(1)).alias("n_clusters")

@@ -626,6 +626,70 @@ def simhash_pairs_portable(
     )
 
 
+#: Bytes per collected edge: two BIGINT ids.
+_EDGE_BYTES = 16
+
+
+def _driver_edge_limit(spark) -> int | None:
+    """Most edges :func:`dedup_groups` finishes on the driver: Spark's
+    broadcast bound (``spark.sql.autoBroadcastJoinThreshold``) at
+    :data:`_EDGE_BYTES` per edge. Spark already collects any relation
+    under that bound to the driver to broadcast it, so this adds no
+    setting and no memory exposure of its own. ``None`` (the bound is
+    ``-1``, or no JVM conf can be read, e.g. Spark Connect) keeps every
+    graph distributed."""
+    try:
+        conf = spark._jsparkSession.sessionState().conf()
+        bound = conf.autoBroadcastJoinThreshold()
+    except AttributeError:  # Spark Connect: no JVM session
+        return None
+    return bound // _EDGE_BYTES if bound >= 0 else None
+
+
+def _components_on_driver(spark, ids) -> DataFrame:
+    """``(id, component)`` of a collected ``(a, b)`` Arrow edge table:
+    union-find with the minimum id as root, returned through Arrow.
+
+    NULL ids join no component, exactly as in the distributed loop's
+    equi-joins: an edge with a NULL end still makes its other end a
+    node, and any NULL adds one ``(NULL, NULL)`` row."""
+    import pyarrow as pa
+
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        root = parent.setdefault(x, x)
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    saw_null = False
+    for a, b in zip(ids["a"].to_pylist(), ids["b"].to_pylist()):
+        if a is None or b is None:
+            saw_null = True
+            for x in (a, b):
+                if x is not None:
+                    find(x)
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    nodes = list(parent)
+    comps = [find(n) for n in nodes]
+    if saw_null:
+        nodes.append(None)
+        comps.append(None)
+    table = pa.table(
+        {
+            "id": pa.array(nodes, pa.int64()),
+            "component": pa.array(comps, pa.int64()),
+        }
+    )
+    return spark.createDataFrame(table, "id bigint, component bigint")
+
+
 def dedup_groups(
     pairs: DataFrame,
     a_col: str = "id_a",
@@ -638,21 +702,35 @@ def dedup_groups(
     (:func:`jaccard_pairs`, :func:`minhash_lsh_pairs`,
     :func:`embedding_neardup_pairs`) are edges; the documents to *drop*
     are every member of a connected component except its minimum id.
+    Returns (id, component) with ``component = min(id in component)``.
 
-    Algorithm: iterative min-label propagation with pointer jumping.
-    Each node starts with label = its own id; every round, each node
-    takes the min label in its neighborhood, then short-circuits through
-    its label's own label (``comp ← comp(comp)``, path doubling); stops
-    when no label changes. The doubling step turns O(diameter) rounds
-    into O(log diameter). Returns (id, component) with
-    ``component = min(id in component)``.
+    Small graphs — at most :func:`_driver_edge_limit` pairs, the size
+    Spark would broadcast anyway — finish on the driver: ONE job both
+    sizes and fetches the pairs (``limit(max + 1)``), union-find
+    labels them, and the answer comes back through Arrow. At these
+    sizes the loop below would spend its time on its few jobs per
+    round, not on the data.
 
-    Scale: each round is one equi-join edges⋈labels + one groupBy min —
-    both hash-shuffles on the node id; no driver-side graph. The loop is
-    checkpoint-free because each round's result is tiny (distinct node
-    ids), but ``localCheckpoint`` every few rounds would cap lineage on
-    very deep graphs.
+    Larger graphs run distributed: iterative min-label propagation with
+    pointer jumping. Each node starts with label = its own id; every
+    round, each node takes the min label in its neighborhood, then
+    short-circuits through its label's own label (``comp ← comp(comp)``,
+    path doubling); stops when no label changes. The doubling step
+    turns O(diameter) rounds into O(log diameter). Each round is one
+    equi-join edges⋈labels + one groupBy min — both hash-shuffles on
+    the node id — and its labels are checkpointed lazily inside the
+    round's convergence job, so lineage stays one round deep.
     """
+    spark = pairs.sparkSession
+    max_edges = _driver_edge_limit(spark)
+    if max_edges is not None:
+        ids = pairs.select(
+            F.col(a_col).cast("bigint").alias("a"),
+            F.col(b_col).cast("bigint").alias("b"),
+        )
+        fetched = ids.limit(max_edges + 1).toArrow()
+        if fetched.num_rows <= max_edges:
+            return _components_on_driver(spark, fetched)
     edges = (
         pairs.select(
             F.col(a_col).cast("bigint").alias("src"),

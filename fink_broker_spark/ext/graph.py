@@ -130,42 +130,47 @@ def symmetrize(edges: DataFrame) -> DataFrame:
 
 def min_label_propagation(sym: DataFrame, rounds: int = 3) -> DataFrame:
     """Bounded synchronous min-label propagation over a symmetrized
-    ``(src, dst)`` edge set: label(v) ← min(label(v), min over
-    neighbors), unrolled ``rounds`` times — pure integer MIN algebra,
-    so a fixed depth oracles exactly (the full-depth variant is the
-    checkpointed pointer-jumping CC in :mod:`ext.dedup`). Returns
-    ``(node, lbl)``. Per round ONE src-keyed join + ONE dst-keyed min —
-    the same shuffle pair as PageRank; label state stays distributed.
+    ``(src, dst)`` edge set: every round, label(v) ← min over the
+    closed neighbourhood N[v] = {v} ∪ neighbours(v), unrolled
+    ``rounds`` times — pure integer MIN algebra, so a fixed depth
+    oracles exactly (the full-depth variant is the pointer-jumping CC
+    in :mod:`ext.dedup`). Returns ``(node, lbl)``; ``rounds=0`` gives
+    ``(node, node)``. Node ids are non-NULL (every caller's edge set
+    passes a ``u < v`` filter).
 
-    Shared by the ``label_propagation`` and ``graph_modularity``
-    queries so the iteration count and tie rules can never drift
-    between the community finder and the community grader.
+    Every edge also yields the self-loop ``(src, src)``, so N[v] is a
+    single relation: round 1 is one ``groupBy(dst).min(src)`` (labels
+    start as the node ids, no label table to join) and every later
+    round is ONE src-keyed join with the previous labels + ONE
+    dst-keyed min — the PageRank shuffle pair; label state stays
+    distributed. Each round reads the previous labels ONCE, so the
+    unrolled plan grows linearly in ``rounds`` and needs no per-round
+    materialization. A node of degree d gets d copies of its
+    self-loop; MIN ignores them, and taking the loops per edge spares
+    a node-set ``distinct`` and its shuffle stage.
+
+    Shared by the ``label_propagation``, ``graph_modularity`` and
+    ``neardup_clusters`` queries so the iteration count and tie rules
+    can never drift between the community finders and the grader.
     """
-    labels = sym.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("lbl")
+    if rounds <= 0:
+        return sym.select(F.col("src").alias("node")).distinct().select(
+            "node", F.col("node").alias("lbl")
+        )
+    closed = sym.select("src", "dst").unionAll(
+        sym.select("src", F.col("src").alias("dst"))
     )
-    for _ in range(rounds):
-        nbr_min = (
-            sym.join(
+    labels = closed.groupBy(F.col("dst").alias("node")).agg(
+        F.min("src").alias("lbl")
+    )
+    for _ in range(rounds - 1):
+        labels = (
+            closed.join(
                 labels.select(F.col("node").alias("src"), "lbl"), "src"
             )
             .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("lbl").alias("nl"))
+            .agg(F.min("lbl").alias("lbl"))
         )
-        labels = labels.join(nbr_min, "node", "left").select(
-            "node",
-            F.least(F.col("lbl"), F.coalesce("nl", F.col("lbl"))).alias(
-                "lbl"
-            ),
-        )
-        # each round references the previous labels TWICE (join input
-        # + left-join base), so uncut lineage re-derives round i−1
-        # 2^i times — the neardup_clusters CC lesson; labels are
-        # node-sized, so the materialization is bounded (r9 scan
-        # census: graph_modularity's static plan hit 188 lineitem
-        # scans before the cut)
-        # lineage-truncation tradeoff: see __spark_entry__._materialize
-        labels = labels.transform(materialize)
     return labels
 
 

@@ -70,7 +70,11 @@ _SESSION_REFS: dict[str, object] = {}
 
 
 def _evict_dead_sessions(live_sid: str) -> None:
-    """Drop cache entries belonging to collected/stopped sessions."""
+    """Drop cache entries belonging to collected/stopped sessions.
+
+    A session whose context cannot be inspected (Spark Connect has no
+    ``sparkContext``) counts as live: only a session known to be gone
+    loses its plans."""
     import weakref  # local: stdlib, but keep module import surface flat
 
     dead = []
@@ -82,9 +86,10 @@ def _evict_dead_sessions(live_sid: str) -> None:
             dead.append(sid)
             continue
         try:
-            if sess.sparkContext._jsc is None:  # stopped context
-                dead.append(sid)
+            stopped = sess.sparkContext._jsc is None
         except Exception:
+            stopped = False
+        if stopped:
             dead.append(sid)
     for sid in dead:
         _SESSION_REFS.pop(sid, None)

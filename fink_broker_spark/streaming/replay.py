@@ -15,6 +15,8 @@ result.
 
 from __future__ import annotations
 
+import atexit
+import shutil
 import tempfile
 import uuid
 from collections.abc import Callable
@@ -49,7 +51,10 @@ def run_stream(
     elif fmt:
         writer = writer.format(fmt)
     if checkpoint_dir is None:
+        # the caller owns the query's lifetime, so the throwaway
+        # checkpoint goes when the process exits
         checkpoint_dir = tempfile.mkdtemp(prefix="fbs_ckpt_")
+        atexit.register(shutil.rmtree, checkpoint_dir, ignore_errors=True)
     writer = writer.option("checkpointLocation", checkpoint_dir)
     for key, value in options.items():
         writer = writer.option(key, value)
@@ -77,21 +82,27 @@ def replay_to_table(
     The stream drains with ``AvailableNow`` (bounded, respects
     ``maxFilesPerTrigger`` backpressure) into a memory-sink table; the
     returned DataFrame reads that table. Used to assert stream == batch.
+    The query's checkpoint directory is removed once it has stopped.
     """
     sdf = file_stream(
         spark, path, schema=schema, max_files_per_trigger=max_files_per_trigger
     )
     name = f"replay_{uuid.uuid4().hex[:8]}"
-    query = run_stream(
-        transform(sdf),
-        output_mode=output_mode,
-        available_now=True,
-        fmt="memory",
-        query_name=name,
-    )
+    checkpoint_dir = tempfile.mkdtemp(prefix="fbs_ckpt_")
     try:
-        query.awaitTermination(timeout_s)
+        query = run_stream(
+            transform(sdf),
+            checkpoint_dir=checkpoint_dir,
+            output_mode=output_mode,
+            available_now=True,
+            fmt="memory",
+            query_name=name,
+        )
+        try:
+            query.awaitTermination(timeout_s)
+        finally:
+            if query.isActive:
+                query.stop()
     finally:
-        if query.isActive:
-            query.stop()
+        shutil.rmtree(checkpoint_dir, ignore_errors=True)
     return spark.table(name)

@@ -296,6 +296,7 @@ def test_materialize_reliable_with_checkpoint_dir(spark, tmp_path):
 def test_load_table_cache_evicts_dead_sessions(spark):
     import weakref
 
+    from fink_broker_spark.core.session import session_id
     from fink_broker_spark.sources import parquet as pq
 
     class _Dummy:  # weakref-able stand-in for a collected session
@@ -305,24 +306,37 @@ def test_load_table_cache_evicts_dead_sessions(spark):
     pq._SESSION_REFS["dead-sid"] = weakref.ref(dead)
     pq._LOAD_TABLE_CACHE[("dead-sid", ("x", 1, 2), "orders")] = object()
     pq._LOAD_TABLE_CACHE[("dead-sid", ("y", 3, 4), "nation")] = object()
-    del dead  # referent collected -> entries must vanish on next miss
+    del dead  # referent collected -> entries must vanish on the sweep
 
-    # force a miss so the sweep runs (unique table via a fresh key)
-    pq._LOAD_TABLE_CACHE.pop(
-        next(
-            (
-                k
-                for k in pq._LOAD_TABLE_CACHE
-                if k[2] == "region" and k[0] != "dead-sid"
-            ),
-            ("nope",),
-        ),
-        None,
-    )
-    pq.load_table(spark, SF0001, "region")
+    pq._evict_dead_sessions(session_id(spark))
 
     assert not [k for k in pq._LOAD_TABLE_CACHE if k[0] == "dead-sid"]
     assert "dead-sid" not in pq._SESSION_REFS
+
+
+def test_load_table_cache_keeps_uninspectable_session(spark):
+    """A session whose context cannot be read (Spark Connect) is live."""
+    import weakref
+
+    from fink_broker_spark.core.session import session_id
+    from fink_broker_spark.sources import parquet as pq
+
+    class _ConnectLike:
+        @property
+        def sparkContext(self):
+            raise RuntimeError("no JVM context behind this session")
+
+    stub = _ConnectLike()
+    key = ("connect-sid", ("z", 5, 6), "region")
+    pq._SESSION_REFS["connect-sid"] = weakref.ref(stub)
+    pq._LOAD_TABLE_CACHE[key] = object()
+    try:
+        pq._evict_dead_sessions(session_id(spark))
+        assert key in pq._LOAD_TABLE_CACHE
+        assert "connect-sid" in pq._SESSION_REFS
+    finally:
+        pq._SESSION_REFS.pop("connect-sid", None)
+        pq._LOAD_TABLE_CACHE.pop(key, None)
 
 
 def test_load_table_cache_keeps_live_session(spark):

@@ -5,11 +5,12 @@ these guard the operators whose SQL oracles can't vary their inputs."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager, nullcontext
 from datetime import datetime, timedelta
 
 import pyspark.sql.functions as F
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 EPOCH = datetime(2024, 1, 1)
 
@@ -61,6 +62,97 @@ def test_dedup_groups_matches_union_find(spark, edges):
     got = {r.id: r.component for r in dedup_groups(pairs).collect()}
     want = _union_find(edges)
     assert got == want
+
+
+@contextmanager
+def _distributed_components(spark):
+    """Broadcast off: ``dedup_groups`` runs its pointer-jumping loop
+    instead of finishing the pairs on the driver."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(edges=pair_lists)
+def test_dedup_groups_distributed_matches_union_find(spark, edges):
+    from fink_broker_spark.ext.dedup import dedup_groups
+
+    pairs = spark.createDataFrame(
+        [(a, b) for a, b in edges], "id_a long, id_b long"
+    )
+    with _distributed_components(spark):
+        got = {r.id: r.component for r in dedup_groups(pairs).collect()}
+    assert got == _union_find(edges)
+
+
+@pytest.mark.parametrize("distributed", [False, True])
+def test_dedup_groups_null_ids(spark, distributed):
+    """A NULL id joins no component: its partner stays a node of its
+    own, and every NULL collapses into one ``(NULL, NULL)`` row."""
+    from fink_broker_spark.ext.dedup import dedup_groups
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (None, 5), (7, None), (2, 3), (None, None), (9, 9)],
+        "id_a long, id_b long",
+    )
+    with _distributed_components(spark) if distributed else nullcontext():
+        got = dedup_groups(pairs).collect()
+    assert sorted(got, key=lambda r: (r.id is None, r.id or 0)) == [
+        (1, 1), (2, 1), (3, 1), (5, 5), (7, 7), (9, 9), (None, None)
+    ]
+
+
+def _closed_min_rounds(edges, k):
+    """k synchronous rounds of label(v) ← min over {v} ∪ neighbours(v)."""
+    nbrs = {}
+    for u, v in edges:
+        nbrs.setdefault(u, {u}).add(v)
+        nbrs.setdefault(v, {v}).add(u)
+    lbl = {n: n for n in nbrs}
+    for _ in range(k):
+        lbl = {n: min(lbl[m] for m in ns) for n, ns in nbrs.items()}
+    return lbl
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 25), st.integers(0, 25)).filter(
+            lambda p: p[0] != p[1]
+        ),
+        min_size=0,
+        max_size=30,
+    ),
+    k=st.sampled_from((0, 1, 3)),
+)
+@example(edges=[], k=0)
+@example(edges=[], k=3)
+@example(edges=[(5, 4), (4, 3), (3, 2), (2, 1)], k=1)
+@example(edges=[(5, 4), (4, 3), (3, 2), (2, 1)], k=3)
+def test_min_label_propagation_matches_closed_min(spark, edges, k):
+    from fink_broker_spark.ext.graph import min_label_propagation, symmetrize
+
+    oriented = spark.createDataFrame(
+        sorted({(min(a, b), max(a, b)) for a, b in edges}), "u long, v long"
+    )
+    got = {
+        r.node: r.lbl
+        for r in min_label_propagation(symmetrize(oriented), k).collect()
+    }
+    assert got == _closed_min_rounds(edges, k)
 
 
 @settings(

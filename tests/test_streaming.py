@@ -754,3 +754,25 @@ def test_stream_stream_join_on_healpix_pixel(spark, tmp_path):
     )
     assert streamed == batch
     assert len(streamed) > 0
+
+
+def test_stream_queries_leave_no_temp_dirs(spark, tmp_path, monkeypatch):
+    """Replay queries remove their staging and checkpoint directories
+    once the drain is over; the drained table stays readable."""
+    import tempfile
+
+    import __spark_entry__ as entrymod
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    builders = entrymod.queries()
+    for name in (
+        "stream_replay_counts",
+        "stream_topk_users",
+        "stream_dedup_watermark",
+        "stream_static_enrich",
+        "stream_sliding_counts",
+    ):
+        assert builders[name](spark, SF0001).collect(), name
+    assert not [p.name for p in tmp.iterdir() if p.name.startswith("fbs_")]
