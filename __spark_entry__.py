@@ -4519,10 +4519,11 @@ FROM (
 
 def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup *groups*: connected components over the exact Jaccard
-    pair list by iterative min-label propagation (each round = equi-join
-    + groupBy min; no driver-side graph). The keeper of each group is
-    its min id — the component label. Oracle: recursive-CTE transitive
-    closure over the same pairs."""
+    pair list. Small pair sets are labelled by union-find on the
+    driver; only larger ones run the distributed min-label loop (each
+    round = equi-join + groupBy min), see ``ext.dedup.dedup_groups``.
+    The keeper of each group is its min id — the component label.
+    Oracle: recursive-CTE transitive closure over the same pairs."""
     from fink_broker_spark.ext.dedup import dedup_groups
 
     docs = load_table(spark, sf_dir, "documents")

@@ -20,7 +20,7 @@ from tests.conftest import SF0001
 #: shuffle stage or to run it twice.
 JOB_CEILINGS = {
     "label_propagation": 11,
-    "dedup_groups": 7,
+    "dedup_groups": 10,
     "graph_modularity": 22,
     "neardup_clusters": 28,
 }

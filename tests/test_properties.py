@@ -94,6 +94,28 @@ def test_dedup_groups_distributed_matches_union_find(spark, edges):
     assert got == _union_find(edges)
 
 
+def test_dedup_groups_driver_edge_limit(spark):
+    """The broadcast bound sizes the driver path, capped by a constant;
+    ``-1`` keeps every graph distributed."""
+    from fink_broker_spark.ext.dedup import (
+        _DRIVER_EDGE_CAP,
+        _EDGE_BYTES,
+        _driver_edge_limit,
+    )
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(10 * 1024 * 1024))
+        assert _driver_edge_limit(spark) == 10 * 1024 * 1024 // _EDGE_BYTES
+        spark.conf.set(key, str(1 << 40))
+        assert _driver_edge_limit(spark) == _DRIVER_EDGE_CAP
+        spark.conf.set(key, "-1")
+        assert _driver_edge_limit(spark) is None
+    finally:
+        spark.conf.set(key, old)
+
+
 @pytest.mark.parametrize("distributed", [False, True])
 def test_dedup_groups_null_ids(spark, distributed):
     """A NULL id joins no component: its partner stays a node of its
