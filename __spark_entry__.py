@@ -1,21441 +1,72 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-Every entry in ``queries()`` is implemented by the ``fink_broker_spark``
-package (one per operator family of SURVEY.md §2 plus the §7.1.8
-extensions); ``oracle_sql()`` carries a DuckDB-executable ANSI-SQL mirror.
-
-Oracle-parity discipline (why results hash-match bit-for-bit):
-- sums over floating columns go through exact DECIMAL aggregation and are
-  cast to DOUBLE at the very end;
-- derived doubles (jd, ratios, cosines) are written as the *same IEEE
-  operation tree* on both sides (left-to-right reductions, explicit double
-  casts), so no rounding tolerance is needed;
-- every computed column is explicitly aliased and typed identically.
+Every entry in ``queries()`` is a function in one of the
+``fink_broker_spark.queries`` family modules, registered there with
+``@query``; ``oracle_sql()`` carries the DuckDB-executable mirror of each
+oracled query (the oracle-parity discipline is stated in
+``fink_broker_spark/queries/common.py``).
 """
 
 from __future__ import annotations
 
-import contextlib
 import os
 import sys
 from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 
-from fink_broker_spark.core.session import configure_session
-from fink_broker_spark.core.time import (
-    jd_expr,
-    mjd_expr,
-    nanos_to_micros,
-    night_partition_cols,
+# Import order is registration order, which breaks ties inside a
+# rotation tier (admin/rotation.py).
+from fink_broker_spark.queries import (  # noqa: E402, F401
+    probes,
+    relational,
+    stats,
+    events,
+    spatial,
+    stream,
+    text,
+    dedup,
+    ann,
+    graph,
 )
-from fink_broker_spark.ext.ann import brute_force_topk
-from fink_broker_spark.ext.dedup import (
-    embedding_neardup_pairs,
-    exact_dedup,
-    jaccard_pairs,
-    minhash_lsh_pairs,
-    minhash_lsh_pairs_portable,
-    simhash_pairs,
-    simhash_pairs_portable,
-)
-from fink_broker_spark.functions.text import (
-    bpe_token_count_expr,
-    fingerprint_expr,
-    lang_id_expr,
-    punct_ratio_expr,
-    quality_score_expr,
-    stopword_ratio_expr,
-    token_count_expr,
-    tokens_expr,
-)
-from fink_broker_spark.functions.vector import norm2_expr
-from fink_broker_spark.operators.arrays import array_reduce_max
-from fink_broker_spark.operators.relational import (
-    broadcast_equi_join,
-    dedup_exact,
-    last_per_key,
-    top_k,
-    top_k_per_group,
-)
-from fink_broker_spark.operators.salting import salt_expr, salted_row_key
-from fink_broker_spark.plans.partitioning import (
-    ensure_keyed_parallelism,
-    ensure_scan_parallelism,
-)
-from fink_broker_spark.sources.parquet import load_table
-from fink_broker_spark.streaming.replay import replay_to_table
+from fink_broker_spark.queries.registry import ORACLES, QUERIES  # noqa: E402
 
 SF001 = "/root/testdata/sf0.001"
-
-
-def _finite(col):
-    """TRUE iff ``col`` is a finite double (not NaN, not ±Inf); NULL
-    for NULL.  The engine/oracle divergence this guards (measured,
-    nanemb driftlab layout r10): Spark's double→DECIMAL cast maps
-    NaN/Inf to NULL even under ANSI while DuckDB hard-errors, and
-    Spark's ``floor(double)`` returns a LONG with floor(NaN) = 0 /
-    floor(±Inf) = ±Long.MAX (silent corruption) while DuckDB's FLOOR
-    stays double and the BIGINT cast hard-errors.  Oracle mirror:
-    ``isfinite(x)``.  NaN is excluded explicitly first — Spark treats
-    NaN as an orderable greatest value, so ``abs(NaN) != Inf`` alone
-    would be TRUE."""
-    c = F.col(col) if isinstance(col, str) else col
-    return ~F.isnan(c) & (F.abs(c) != F.lit(float("inf")))
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Materialize a multiply-consumed derived relation exactly once
-    (``localCheckpoint(eager=True)``) — the r9 scan-census pattern that
-    collapsed 4×/30×/108× redundant corpus scans.
-
-    FAULT-TOLERANCE TRADEOFF (ADVICE r9 #1, explicit by design):
-    ``localCheckpoint`` stores the blocks in executor block-manager
-    storage AND TRUNCATES LINEAGE — a lost executor makes the blocks
-    unrecomputable and aborts the job.  That is the right trade on
-    this single-JVM local[32] bench (no executor can be "lost"
-    independently, and the driver re-runs a failed query anyway).  A
-    real 1000-executor / 100 TB deployment of these plans should swap
-    this call for ``spark.sparkContext.setCheckpointDir(<hdfs>)`` +
-    ``df.checkpoint(eager=True)`` (reliable storage, lineage intact on
-    loss) or ``df.persist(StorageLevel.DISK_ONLY)`` (lineage kept,
-    recompute on loss) — same plan shape, one line, and the
-    tokenize-once / explode-once savings these sites exist for are
-    preserved.  The swap point is
-    :func:`fink_broker_spark.plans.materialize.materialize`, which this
-    delegates to: configuring ``SparkContext.setCheckpointDir`` flips
-    every materialization in the engine to the RELIABLE ``checkpoint``
-    path (r10 VERDICT item 3); with no checkpoint dir the behavior is
-    byte-identical to the old inline ``localCheckpoint``."""
-    from fink_broker_spark.plans.materialize import materialize
-
-    return materialize(df)
-
-
-def _materialize_many(*dfs: DataFrame) -> tuple:
-    """Materialize several INDEPENDENT multi-consumer relations with
-    concurrently-submitted jobs (one thread per relation; py4j job
-    submission is thread-safe and the local scheduler interleaves the
-    stages), instead of paying each eager checkpoint's full job latency
-    serially during query construction.  Same results and same storage
-    tradeoff as :func:`_materialize` — only the submission overlaps.
-    Callers must pass relations with NO data dependency on each other
-    (a dependent relation would recompute its parent)."""
-    if len(dfs) == 1:
-        return (_materialize(dfs[0]),)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(dfs)) as ex:
-        return tuple(ex.map(_materialize, dfs))
-
-
-def _dec(col, scale: int = 9):
-    """Exact decimal view of a float column for deterministic aggregation.
-
-    NaN/±Inf fold to NULL: that is what Spark's double→decimal cast
-    already does (even ANSI-on, measured r10), so the ``F.when`` guard
-    is engine-semantics-preserving — it exists so the ORACLE mirror
-    ``CAST(CASE WHEN isfinite(x) THEN x END AS DECIMAL(18,s))`` is the
-    literal same tree (DuckDB's cast hard-errors on non-finite instead
-    of NULLing; nanemb driftlab layout, r10)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(_finite(c), c).cast(f"decimal(18,{scale})")
-
-
-def _day(col):
-    """Exact epoch-day of a normalized timestamp column — the ONE
-    integer day key every calendar-bucketed query shares (oracle twin:
-    ``CAST(FLOOR(epoch_us(c) / 86400000000) AS BIGINT)``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.floor(F.unix_micros(c) / F.lit(86_400_000_000)).cast("long")
-
-
-# --------------------------------------------------------------------------
-# SURVEY §2.6/§2.4 — aggregation + filter/projection families
-# --------------------------------------------------------------------------
-
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship: scan → filter → group-aggregate (TPC-H Q1 shape).
-
-    Exercises predicate pushdown + partial (map-side) aggregation — the
-    plan every nightly-statistics job in the reference reduces to
-    (``bin/ztf/archive_statistics.py:93-141``).
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    disc_price = _dec("l_extendedprice") * (
-        F.lit(1.0).cast("decimal(18,9)") - _dec("l_discount")
-    )
-    return (
-        li.filter(F.col("l_quantity") < 50)
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("count_order"),
-            F.round(F.sum(_dec("l_quantity")), 2).cast("double").alias("sum_qty"),
-            F.round(F.sum(_dec("l_extendedprice")), 2).cast("double").alias("sum_base_price"),
-            F.round(F.sum(disc_price), 2).cast("double").alias("sum_disc_price"),
-        )
-    )
-
-
-ORACLE_PRICING = """
-SELECT l_returnflag, l_linestatus,
-       count(*) AS count_order,
-       CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(18,9))), 2) AS DOUBLE) AS sum_qty,
-       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,9))), 2) AS DOUBLE) AS sum_base_price,
-       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,9)) *
-                (CAST(1.0 AS DECIMAL(18,9)) - CAST(l_discount AS DECIMAL(18,9)))), 2)
-            AS DOUBLE) AS sum_disc_price
-FROM lineitem
-WHERE l_quantity < 50
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: 3-way selective join (customer ⋈ orders ⋈
-    lineitem) with per-order revenue and a global top-10 — the plan
-    audit target for join ordering + TakeOrderedAndProject. Revenue
-    sums run in decimal for cross-engine exactness."""
-    cust = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1995-03-15").cast("timestamp")
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1995-03-15").cast("timestamp")
-    )
-    revenue = _dec("l_extendedprice") * (
-        F.lit(1.0).cast("decimal(18,9)") - _dec("l_discount")
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(F.sum(revenue), 2).cast("double").alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("o_orderdate"), F.asc("l_orderkey"))
-        .limit(10)
-        .select(
-            "l_orderkey",
-            F.datediff(
-                F.col("o_orderdate").cast("date"),
-                F.lit("1970-01-01").cast("date"),
-            ).alias("o_orderdate_day"),
-            "o_orderpriority",
-            "revenue",
-        )
-    )
-
-
-ORACLE_SHIPPING_PRIORITY = """
-SELECT l_orderkey,
-       CAST(datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS INTEGER)
-         AS o_orderdate_day,
-       o_orderpriority,
-       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,9)) *
-                (CAST(1.0 AS DECIMAL(18,9)) - CAST(l_discount AS DECIMAL(18,9)))), 2)
-            AS DOUBLE) AS revenue
-FROM customer, orders, lineitem
-WHERE c_mktsegment = 'BUILDING'
-  AND c_custkey = o_custkey AND l_orderkey = o_orderkey
-  AND o_orderdate < TIMESTAMP '1995-03-15'
-  AND l_shipdate > TIMESTAMP '1995-03-15'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, epoch_us(o_orderdate) ASC, l_orderkey ASC
-LIMIT 10
-"""
-
-
-def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: 5-way snowflake join (region → nation →
-    supplier/customer → orders → lineitem) with the dimension chain
-    broadcast — the canonical star-join plan the engine must keep
-    shuffle-free on every dimension edge."""
-    region = load_table(spark, sf_dir, "region").filter(
-        F.col("r_name") == "ASIA"
-    )
-    nation = load_table(spark, sf_dir, "nation")
-    supp = load_table(spark, sf_dir, "supplier")
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1994-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp"))
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    revenue = _dec("l_extendedprice") * (
-        F.lit(1.0).cast("decimal(18,9)") - _dec("l_discount")
-    )
-    dims = (
-        nation.join(
-            F.broadcast(region), nation.n_regionkey == region.r_regionkey
-        )
-        .select("n_nationkey", "n_name")
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(
-            F.broadcast(supp),
-            (li.l_suppkey == supp.s_suppkey)
-            & (cust.c_nationkey == supp.s_nationkey),
-        )
-        .join(F.broadcast(dims), supp.s_nationkey == dims.n_nationkey)
-        .groupBy("n_name")
-        .agg(F.round(F.sum(revenue), 2).cast("double").alias("revenue"))
-    )
-
-
-ORACLE_LOCAL_SUPPLIER_VOLUME = """
-SELECT n_name,
-       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,9)) *
-                (CAST(1.0 AS DECIMAL(18,9)) - CAST(l_discount AS DECIMAL(18,9)))), 2)
-            AS DOUBLE) AS revenue
-FROM customer, orders, lineitem, supplier, nation, region
-WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-  AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-  AND r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1994-01-01'
-  AND o_orderdate < TIMESTAMP '1996-01-01'
-GROUP BY n_name
-"""
-
-
-def q_anomaly_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust anomaly flagging (the reference's anomaly-module shape,
-    ``bin/ztf/archive_anomalies``-family, declaratively): per-type
-    median + MAD via exact ``percentile`` (bit-identical to DuckDB's
-    ``quantile_cont``), then |x − median| > 5·MAD outlier counts. Two
-    aggregations over the same grouping — Catalyst reuses the shuffle
-    via the self-join on the tiny per-type stats (broadcast)."""
-    ev = load_table(spark, sf_dir, "events")
-    # both percentiles as unbounded windows over the SAME partitioning:
-    # the aggregate-join form referenced the deviation relation twice
-    # and (subtrees recompute) scanned events four times; here events
-    # scans once and shuffles once — the two Window operators share the
-    # event_type exchange, the final aggregate is partial-ready
-    w = Window.partitionBy("event_type")
-    # value pinned to DOUBLE before the percentile: on a DECIMAL-typed
-    # lake Spark interpolates in double while DuckDB's quantile_cont
-    # would interpolate in decimal and round the midpoint to the
-    # column scale (decimalprice driftlab layout, r6)
-    dev = (
-        ev.withColumn("v", F.col("value").cast("double"))
-        .withColumn("med", F.expr("percentile(v, 0.5)").over(w))
-        .withColumn("adev", F.abs(F.col("v") - F.col("med")))
-    )
-    flagged = dev.withColumn(
-        "mad", F.expr("percentile(adev, 0.5)").over(w)
-    )
-    return flagged.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_if(
-            F.abs(F.col("v") - F.col("med")) > 5.0 * F.col("mad")
-        ).alias("n_anomalies"),
-        F.first("med").alias("med"),
-        F.first("mad").alias("mad"),
-    )
-
-
-ORACLE_ANOMALY_SCORES = """
--- CAST AS DOUBLE mirrors the operator's double-pinned percentile
--- (decimalprice driftlab layout, r6)
-WITH ev AS (
-  SELECT event_type, CAST(value AS DOUBLE) AS value FROM events
-), stats AS (
-  SELECT event_type, quantile_cont(value, 0.5) AS med
-  FROM ev GROUP BY event_type
-), dev AS (
-  SELECT e.event_type, e.value, s.med, abs(e.value - s.med) AS adev
-  FROM ev e JOIN stats s USING (event_type)
-), mads AS (
-  SELECT event_type, quantile_cont(adev, 0.5) AS mad, min(med) AS med
-  FROM dev GROUP BY event_type
-)
-SELECT d.event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(SUM(CASE WHEN abs(d.value - m.med) > 5.0 * m.mad
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalies,
-       min(m.med) AS med,
-       min(m.mad) AS mad
-FROM dev d JOIN mads m USING (event_type)
-GROUP BY d.event_type
-"""
-
-
-def q_order_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape through the SQL-string surface: a correlated
-    EXISTS subquery Catalyst rewrites into a left-semi join (the
-    rewrite itself is what's under test — the DataFrame twin is
-    ``semi_anti_join``). Uses ``spark.sql`` dataframe templating, the
-    engine's raw-SQL entry point (SURVEY §2.4 SQL-string filters)."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    return spark.sql(
-        """
-        SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders
-        FROM {orders} o
-        WHERE o.o_orderdate >= TIMESTAMP_NTZ '1996-01-01'
-          AND o.o_orderdate < TIMESTAMP_NTZ '1997-01-01'
-          AND EXISTS (
-            SELECT 1 FROM {lineitem} l
-            WHERE l.l_orderkey = o.o_orderkey
-              AND l.l_shipdate > o.o_orderdate
-          )
-        GROUP BY o_orderpriority
-        """,
-        orders=orders,
-        lineitem=li,
-    )
-
-
-ORACLE_ORDER_PRIORITY_EXISTS = """
-SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders
-FROM orders o
-WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o.o_orderdate < TIMESTAMP '1997-01-01'
-  AND EXISTS (
-    SELECT 1 FROM lineitem l
-    WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate
-  )
-GROUP BY o_orderpriority
-"""
-
-
-def q_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: left outer join + two-level aggregation —
-    customers bucketed by how many qualifying orders they have,
-    INCLUDING the zero-order customers the outer join preserves (the
-    classic correctness trap an inner join silently gets wrong)."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") != "1-URGENT"
-    )
-    per_cust = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(
-        F.count(F.lit(1)).alias("custdist")
-    )
-
-
-ORACLE_CUSTOMER_DISTRIBUTION = """
-SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-FROM (
-  SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
-  FROM customer LEFT OUTER JOIN orders
-    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-  GROUP BY c_custkey
-)
-GROUP BY c_count
-"""
-
-
-def q_quality_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chained boolean quality cuts (``bin/ztf/raw2science.py:92-95``
-    re-expressed on lineitem), then a per-status tally."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_quantity") < 25)
-        .filter(F.col("l_discount") >= 0.05)
-        .filter(F.col("l_returnflag") != "A")
-        .groupBy("l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(_dec("l_extendedprice")), 2).cast("double").alias("sum_price"),
-        )
-    )
-
-
-ORACLE_QUALITY_CUTS = """
-SELECT l_linestatus, count(*) AS n,
-       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,9))), 2) AS DOUBLE) AS sum_price
-FROM lineitem
-WHERE l_quantity < 25 AND l_discount >= 0.05 AND l_returnflag <> 'A'
-GROUP BY l_linestatus
-"""
-
-
-def q_event_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nightly-statistics shape: group count + distinct + extrema
-    (``bin/ztf/archive_statistics.py:98-133``)."""
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts_us", nanos_to_micros("ts_ns")
-    )
-    return ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("user_id").alias("n_users"),
-        F.round(F.sum(_dec("value")), 2).cast("double").alias("sum_value"),
-        F.min("ts_us").alias("min_ts_us"),
-        F.max("ts_us").alias("max_ts_us"),
-    )
-
-
-ORACLE_EVENT_TYPE_STATS = """
-SELECT event_type, count(*) AS n_events,
-       count(DISTINCT user_id) AS n_users,
-       CAST(ROUND(SUM(CAST(CASE WHEN isfinite(value) THEN value END AS DECIMAL(18,9))), 2) AS DOUBLE) AS sum_value,
-       min(epoch_us(ts)) AS min_ts_us,
-       max(epoch_us(ts)) AS max_ts_us
-FROM events
-GROUP BY event_type
-"""
-
-
-def q_conditional_recode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``when/otherwise`` recode (``ztf/science.py:102-154`` family)."""
-    ev = load_table(spark, sf_dir, "events")
-    recoded = (
-        F.when(F.col("event_type") == "purchase", F.lit("buy"))
-        .when(F.col("event_type").isin("click", "view"), F.lit("browse"))
-        .otherwise(F.lit("other"))
-    )
-    return ev.select(recoded.alias("action")).groupBy("action").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-
-
-ORACLE_CONDITIONAL_RECODE = """
-SELECT CASE WHEN event_type = 'purchase' THEN 'buy'
-            WHEN event_type IN ('click','view') THEN 'browse'
-            ELSE 'other' END AS action,
-       count(*) AS n
-FROM events GROUP BY 1
-"""
-
-
-# --------------------------------------------------------------------------
-# SURVEY §2.5 — joins
-# --------------------------------------------------------------------------
-
-def q_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast equi-join of dims (``bin/ztf/merge.py:81-83`` idiom)."""
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    joined = broadcast_equi_join(
-        nation,
-        region.withColumnRenamed("r_regionkey", "n_regionkey"),
-        on="n_regionkey",
-    )
-    return joined.groupBy("r_name").agg(F.count(F.lit(1)).alias("n_nations"))
-
-
-ORACLE_BROADCAST_JOIN = """
-SELECT r_name, count(*) AS n_nations
-FROM nation JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name
-"""
-
-
-def q_top_revenue_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-way join + aggregate + deterministic global top-k.
-
-    customer ⋈ orders ⋈ lineitem with revenue = Σ price·(1−disc); top 10
-    by revenue (top-k runs as TakeOrderedAndProject, not a global sort —
-    replaces the reference's driver-side pandas sort,
-    ``bin/ztf/archive_slsn_candidates.py:256-258``).
-    """
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    revenue = _dec("l_extendedprice") * (
-        F.lit(1.0).cast("decimal(18,9)") - _dec("l_discount")
-    )
-    per_cust = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .groupBy("c_custkey", "c_name")
-        .agg(F.round(F.sum(revenue), 2).cast("double").alias("revenue"))
-    )
-    return top_k(
-        per_cust, [F.desc_nulls_last("revenue"), F.asc("c_custkey")], 10
-    )
-
-
-ORACLE_TOP_REVENUE = """
-SELECT c_custkey, c_name,
-       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,9)) *
-                (CAST(1.0 AS DECIMAL(18,9)) - CAST(l_discount AS DECIMAL(18,9)))), 2)
-            AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-GROUP BY c_custkey, c_name
-ORDER BY revenue DESC NULLS LAST, c_custkey ASC
-LIMIT 10
-"""
-
-
-def q_semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-semi + left-anti joins (membership filters at scale — the
-    set-based form of ``col.isin(collected_list)``,
-    ``bin/ztf/archive_anomaly.py:112-113``)."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").select("o_custkey")
-    semi = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("label", F.lit("with_orders"))
-    )
-    anti = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("label", F.lit("without_orders"))
-    )
-    return semi.unionByName(anti)
-
-
-ORACLE_SEMI_ANTI = """
-SELECT c_mktsegment, count(*) AS n, 'with_orders' AS label
-FROM customer WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-GROUP BY c_mktsegment
-UNION ALL
-SELECT c_mktsegment, count(*) AS n, 'without_orders' AS label
-FROM customer WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-GROUP BY c_mktsegment
-"""
-
-
-# --------------------------------------------------------------------------
-# SURVEY §2.7 — window functions, last-per-key dedup
-# --------------------------------------------------------------------------
-
-def q_last_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unbounded window max + equality filter — the reference's batch
-    dedup (``rubin/hbase_utils.py:679-686``)."""
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts_us", nanos_to_micros("ts_ns")
-    )
-    return last_per_key(ev, "user_id", "ts_us").select(
-        "user_id", "ts_us", "event_id", "event_type"
-    )
-
-
-ORACLE_LAST_EVENT = """
-SELECT user_id, epoch_us(ts) AS ts_us, event_id, event_type
-FROM (
-  SELECT *, max(epoch_us(ts)) OVER (PARTITION BY user_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS mx
-  FROM events
-) WHERE epoch_us(ts) = mx
-"""
-
-
-def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-group top-k via ``row_number``."""
-    ev = load_table(spark, sf_dir, "events")
-    out = top_k_per_group(
-        ev,
-        ["event_type"],
-        [F.desc_nulls_last("value"), F.asc("event_id")],
-        3,
-        rank_col="rnk",
-    )
-    return out.select(
-        "event_type", "event_id", "value", F.col("rnk").cast("int").alias("rnk")
-    )
-
-
-ORACLE_TOPK_PER_GROUP = """
-SELECT event_type, event_id, value, CAST(rnk AS INTEGER) AS rnk
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY event_type
-             ORDER BY value DESC NULLS LAST, event_id ASC) AS rnk
-  FROM events
-) WHERE rnk <= 3
-"""
-
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup with deterministic keep-min representative
-    (``ztf/tracklet_identification.py:329`` made reproducible)."""
-    ev = load_table(spark, sf_dir, "events")
-    return dedup_exact(
-        ev, ["user_id", "event_type"], representative="event_id"
-    ).withColumnRenamed("event_id", "first_event_id")
-
-
-ORACLE_DEDUP_EXACT = """
-SELECT user_id, event_type, min(event_id) AS first_event_id
-FROM events GROUP BY user_id, event_type
-"""
-
-
-# --------------------------------------------------------------------------
-# SURVEY §2.10 — scalar functions: time, salting, row keys
-# --------------------------------------------------------------------------
-
-def q_jd_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """jd/mjd ⇄ time conversions as native exprs
-    (``common/partitioning.py:26-105`` without the pandas UDFs)."""
-    ev = load_table(spark, sf_dir, "events")
-    us = nanos_to_micros("ts_ns")
-    return ev.select(
-        "event_id",
-        us.alias("ts_us"),
-        jd_expr(us).alias("jd"),
-        mjd_expr(us).alias("mjd"),
-    )
-
-
-ORACLE_JD = """
-SELECT event_id, epoch_us(ts) AS ts_us,
-       epoch_us(ts) / 86400000000.0 + 2440587.5 AS jd,
-       (epoch_us(ts) / 86400000000.0 + 2440587.5) - 2400000.5 AS mjd
-FROM events
-"""
-
-
-def q_night_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """year/month/day partition derivation (``bin/ztf/stream2raw.py:154-158``)."""
-    ev = load_table(spark, sf_dir, "events")
-    parts = night_partition_cols("ts")
-    return (
-        ev.select(
-            parts["year"].alias("year"),
-            parts["month"].alias("month"),
-            parts["day"].alias("day"),
-        )
-        .groupBy("year", "month", "day")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-ORACLE_NIGHT_PARTITIONS = """
-SELECT CAST(year(ts) AS INTEGER) AS year, CAST(month(ts) AS INTEGER) AS month,
-       CAST(day(ts) AS INTEGER) AS day, count(*) AS n
-FROM events GROUP BY 1, 2, 3
-"""
-
-
-def q_salted_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Last-digits salt histogram (``common/hbase_utils.py:485-526``):
-    uniformity of the salt is the operator's contract."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.select(salt_expr("o_orderkey", 2).alias("salt"))
-        .groupBy("salt")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-ORACLE_SALTED_HISTOGRAM = """
-SELECT lpad(right(CAST(o_orderkey AS VARCHAR), 2), 2, '0') AS salt, count(*) AS n
-FROM orders GROUP BY 1
-"""
-
-
-def q_rowkey_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serving-table projection: composite salted row key + casts
-    (``common/hbase_utils.py:339``, ``ztf/hbase_utils.py:395-489``)."""
-    orders = load_table(spark, sf_dir, "orders")
-    return orders.select(
-        salted_row_key(
-            salt_expr("o_orderkey", 2), "o_custkey", "o_orderkey"
-        ).alias("rowkey"),
-        F.col("o_orderkey").cast("string").alias("o_orderkey_str"),
-        F.col("o_totalprice").alias("o_totalprice"),
-        F.col("o_orderstatus").alias("o_orderstatus"),
-    )
-
-
-ORACLE_ROWKEY_FLATTEN = """
-SELECT concat_ws('_', lpad(right(CAST(o_orderkey AS VARCHAR), 2), 2, '0'),
-                 CAST(o_custkey AS VARCHAR), CAST(o_orderkey AS VARCHAR)) AS rowkey,
-       CAST(o_orderkey AS VARCHAR) AS o_orderkey_str,
-       o_totalprice, o_orderstatus
-FROM orders
-"""
-
-
-def q_index_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full serving-index build (``bin/ztf/archive_index.py:47-296``
-    via ``archive/index_tables.build_index_table``): flatten/cast plan,
-    salt bucket, composite rowkey, bucket-partitioned sort — summarized
-    per bucket (count + min/max rowkey, i.e. exactly the parquet
-    min/max stats a prefix scan prunes on)."""
-    from fink_broker_spark.archive.index_tables import build_index_table
-
-    ev = load_table(spark, sf_dir, "events")
-    table = build_index_table(
-        ev,
-        flatten_plan={
-            "event_id": ("event_id", "bigint"),
-            "user_id": ("user_id", "bigint"),
-            "value": ("value", "double"),
-        },
-        key_cols=["event_id", "user_id"],
-    )
-    return table.groupBy("salt_bucket").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.min("rowkey").alias("min_key"),
-        F.max("rowkey").alias("max_key"),
-    )
-
-
-ORACLE_INDEX_BUCKETS = """
-WITH keyed AS (
-  SELECT lpad(right(CAST(event_id AS VARCHAR), 3), 3, '0') AS salt_bucket,
-         concat_ws('_', lpad(right(CAST(event_id AS VARCHAR), 3), 3, '0'),
-                   CAST(event_id AS VARCHAR), CAST(user_id AS VARCHAR)) AS rowkey
-  FROM events
-)
-SELECT salt_bucket,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       min(rowkey) AS min_key,
-       max(rowkey) AS max_key
-FROM keyed GROUP BY salt_bucket
-"""
-
-
-# --------------------------------------------------------------------------
-# SURVEY §2.10 — array ops / HOFs on the embeddings table
-# --------------------------------------------------------------------------
-
-def q_explode_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """posexplode of an array column (``bin/ztf/archive_index.py:186-205``
-    family: history arrays → long format)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "val")
-    ).select(
-        "vec_id",
-        F.col("pos").cast("int").alias("pos"),
-        # float32 → double is exact (same widening both engines); a raw
-        # float32 output column risks shortest-repr formatting drift in
-        # a typed canonicalizer (admin/typeaudit.py flags 32-bit floats)
-        F.col("val").cast("double").alias("val"),
-    )
-
-
-ORACLE_EXPLODE_EMBEDDINGS = """
-SELECT vec_id, CAST(i AS INTEGER) AS pos,
-       CAST(embedding[i + 1] AS DOUBLE) AS val
-FROM embeddings, range(0, 4096) t(i)
-WHERE i < len(embedding)
-"""
-
-
-def q_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-row HOF reductions: aggregate (dot), array extrema, filter count
-    (``rubin/hbase_utils.py:1124-1142`` family)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return emb.select(
-        "vec_id",
-        norm2_expr("embedding").alias("norm2"),
-        array_reduce_max("embedding").alias("max_val"),
-        F.array_min("embedding").cast("double").alias("min_val"),
-        F.size(F.filter("embedding", lambda x: x > 0)).alias("n_pos"),
-        F.size("embedding").alias("dim"),
-    )
-
-
-ORACLE_EMBEDDING_NORMS = """
-SELECT vec_id,
-       list_reduce([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-                    FOR i IN range(1, len(embedding) + 1)], (x, y) -> x + y) AS norm2,
-       list_reduce([CAST(x AS DOUBLE) FOR x IN embedding],
-                   (a, b) -> CASE WHEN b > a THEN b ELSE a END) AS max_val,
-       CAST(list_aggregate(embedding, 'min') AS DOUBLE) AS min_val,
-       CAST(len(list_filter(embedding, x -> x > 0)) AS INTEGER) AS n_pos,
-       CAST(len(embedding) AS INTEGER) AS dim
-FROM embeddings
-"""
-
-
-# --------------------------------------------------------------------------
-# ext — similarity search
-# --------------------------------------------------------------------------
-
-def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k (ANN exact baseline; crossmatch operator
-    generalized, ``ztf/science.py:84-197``)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    out = brute_force_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
-    return out.select(
-        "query_id", "vec_id", "cosine", F.col("rank").cast("int").alias("rnk")
-    )
-
-
-ORACLE_ANN_TOPK = """
-WITH n AS (
-  -- well-formed domain, mirroring the engine's well_formed_vectors
-  -- (brute_force_topk filters both sides): NULL elements propagated
-  -- symmetrically through the threshold, but a NaN cosine ranks FIRST
-  -- in both engines' DESC windows while the engine now drops the
-  -- vector (nanemb driftlab layout, r10)
-  SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS e,
-         sqrt(list_reduce([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) FOR x IN embedding],
-                          (a, b) -> a + b)) AS nrm
-  FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(list_filter(embedding,
-                        x -> x IS NULL OR NOT isfinite(x))) = 0
-), p AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-         list_reduce([c.e[i] * q.e[i] FOR i IN range(1, len(c.e) + 1)],
-                     (a, b) -> a + b) / (c.nrm * q.nrm) AS cosine
-  FROM n c, n q
-  WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id
-)
-SELECT query_id, vec_id, cosine, CAST(rnk AS INTEGER) AS rnk
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-             ORDER BY cosine DESC NULLS LAST, vec_id ASC) AS rnk
-  FROM p
-) WHERE rnk <= 5
-"""
-
-
-def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact pairwise cosine near-dup (embedding dedup baseline).
-
-    ``reduction="cumsum"`` pins sequential IEEE reductions so the cosine
-    doubles hash-match the DuckDB oracle bit-for-bit; production runs
-    the BLAS default (same pair set, last-ulp cosine variance)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return embedding_neardup_pairs(emb, threshold=0.45, reduction="cumsum")
-
-
-ORACLE_EMBEDDING_NEARDUP = """
-WITH n AS (
-  -- well-formed domain, mirroring the engine's well_formed_vectors
-  -- (embedding_neardup_pairs filters): NULL cosines fell out of the
-  -- >= threshold symmetrically, but NaN >= 0.45 is TRUE on both
-  -- engines (NaN compares greatest) while the engine now drops the
-  -- vector (nanemb driftlab layout, r10)
-  SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS e,
-         sqrt(list_reduce([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) FOR x IN embedding],
-                          (a, b) -> a + b)) AS nrm
-  FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(list_filter(embedding,
-                        x -> x IS NULL OR NOT isfinite(x))) = 0
-)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       list_reduce([a.e[i] * b.e[i] FOR i IN range(1, len(a.e) + 1)],
-                   (x, y) -> x + y) / (a.nrm * b.nrm) AS cosine
-FROM n a, n b
-WHERE a.vec_id < b.vec_id
-  AND list_reduce([a.e[i] * b.e[i] FOR i IN range(1, len(a.e) + 1)],
-                  (x, y) -> x + y) / (a.nrm * b.nrm) >= 0.45
-"""
-
-
-# --------------------------------------------------------------------------
-# ext — text analysis + document dedup
-# --------------------------------------------------------------------------
-
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counts, punctuation/stopword ratios, quality score."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        token_count_expr("text").alias("n_tokens"),
-        bpe_token_count_expr("text").alias("n_bpe_tokens"),
-        punct_ratio_expr("text").alias("punct_ratio"),
-        stopword_ratio_expr("text").alias("stop_ratio"),
-        quality_score_expr("text").alias("quality"),
-    )
-
-
-ORACLE_TEXT_QUALITY = r"""
-WITH t AS (
-  SELECT doc_id, text,
-         CASE WHEN length(trim(lower(text))) = 0 THEN 0
-              ELSE len(string_split_regex(trim(lower(text)), '\s+')) END AS n_tokens,
-         len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS n_bpe,
-         CASE WHEN length(text) = 0 THEN 0.0
-              ELSE CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS DOUBLE)
-                   / CAST(length(text) AS DOUBLE) END AS punct_ratio,
-         len(regexp_extract_all(lower(text),
-             '\b(the|a|an|and|or|of|to|in|is|it|on|for)\b')) AS stop_hits
-  FROM documents
-)
-SELECT doc_id,
-       CAST(n_tokens AS INTEGER) AS n_tokens,
-       CAST(n_bpe AS INTEGER) AS n_bpe_tokens,
-       punct_ratio,
-       CASE WHEN n_tokens = 0 THEN 0.0
-            ELSE CAST(stop_hits AS DOUBLE) / CAST(n_tokens AS DOUBLE) END AS stop_ratio,
-       0.4 * least(1.0, CAST(n_tokens AS DOUBLE) / 100.0)
-       + 0.3 * (1.0 - punct_ratio)
-       + 0.3 * least(1.0, (CASE WHEN n_tokens = 0 THEN 0.0
-                   ELSE CAST(stop_hits AS DOUBLE) / CAST(n_tokens AS DOUBLE) END) * 5.0)
-         AS quality
-FROM t
-"""
-
-
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Marker-stopword language heuristic (argmax with priority ties)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", "lang", lang_id_expr("text").alias("lang_pred")
-    )
-
-
-ORACLE_LANG_ID = r"""
-WITH s AS (
-  SELECT doc_id, lang,
-    len(regexp_extract_all(lower(text), '\b(the|and|of|to|is|in|that|it|for|with)\b')) AS s_en,
-    len(regexp_extract_all(lower(text), '\b(el|la|los|las|de|que|y|en|un|una|es|por)\b')) AS s_es,
-    len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|nicht|ein|eine|zu|mit|von)\b')) AS s_de,
-    len(regexp_extract_all(lower(text), '\b(le|la|les|des|et|est|une|dans|pour|que|qui)\b')) AS s_fr
-  FROM documents
-)
-SELECT doc_id, lang,
-       CASE WHEN s_en = greatest(s_en, s_es, s_de, s_fr) AND greatest(s_en, s_es, s_de, s_fr) > 0 THEN 'en'
-            WHEN s_es = greatest(s_en, s_es, s_de, s_fr) AND greatest(s_en, s_es, s_de, s_fr) > 0 THEN 'es'
-            WHEN s_de = greatest(s_en, s_es, s_de, s_fr) AND greatest(s_en, s_es, s_de, s_fr) > 0 THEN 'de'
-            WHEN s_fr = greatest(s_en, s_es, s_de, s_fr) AND greatest(s_en, s_es, s_de, s_fr) > 0 THEN 'fr'
-            ELSE 'und' END AS lang_pred
-FROM s
-"""
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-hash exact dedup (md5 of normalized text, keep-min-id)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return exact_dedup(docs)
-
-
-ORACLE_DOC_FINGERPRINT = r"""
-SELECT md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fingerprint,
-       min(doc_id) AS keep_id, count(*) AS dup_count
-FROM documents
-GROUP BY 1
-"""
-
-
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing for training: documents → fixed-token-budget
-    bins by exclusive prefix sum within deterministic shards. The window
-    is partitioned by shard (32 independent sorted streams — never a
-    global ORDER BY, which would serialize the corpus through one
-    task)."""
-    from fink_broker_spark.ext.pipeline import pack_by_prefix_sum
-    from fink_broker_spark.functions.text import token_count_expr
-
-    docs = load_table(spark, sf_dir, "documents")
-    staged = docs.select(
-        "doc_id", token_count_expr("text").alias("n_tokens")
-    )
-    packed = pack_by_prefix_sum(
-        staged, "n_tokens", budget=256, id_col="doc_id", nshards=32
-    )
-    return packed.groupBy("shard", "bin").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-        F.min("doc_id").alias("first_doc"),
-    )
-
-
-ORACLE_PACK_SEQUENCES = r"""
-WITH t AS (
-  SELECT doc_id, doc_id % 32 AS shard,
-         CASE WHEN length(trim(lower(text))) = 0 THEN 0
-              ELSE len(string_split_regex(trim(lower(text)), '\s+')) END AS n_tokens
-  FROM documents
-), c AS (
-  SELECT doc_id, shard, n_tokens,
-         COALESCE(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS excl
-  FROM t
-)
-SELECT CAST(shard AS BIGINT) AS shard,
-       CAST(floor(excl / 256.0) AS BIGINT) AS bin,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-       CAST(min(doc_id) AS BIGINT) AS first_doc
-FROM c GROUP BY 1, 2
-"""
-
-
-def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language down-sampling with a deterministic modulo predicate
-    (pushdown-friendly; the xxhash64 production twin shares the shape —
-    rate equivalence pinned in tests)."""
-    from fink_broker_spark.ext.pipeline import stratified_keep_expr
-
-    docs = load_table(spark, sf_dir, "documents")
-    keep = stratified_keep_expr(
-        "lang", {"en": 35, "zh": 80, "de": 100}, "doc_id", default_pct=50
-    )
-    return docs.filter(keep).groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.min("doc_id").alias("min_doc"),
-        F.max("doc_id").alias("max_doc"),
-    )
-
-
-ORACLE_STRATIFIED_SAMPLE = """
-SELECT lang, CAST(count(*) AS BIGINT) AS n_kept,
-       CAST(min(doc_id) AS BIGINT) AS min_doc,
-       CAST(max(doc_id) AS BIGINT) AS max_doc
-FROM documents
-WHERE doc_id % 100 < (CASE lang WHEN 'en' THEN 35 WHEN 'zh' THEN 80
-                                WHEN 'de' THEN 100 ELSE 50 END)
-GROUP BY lang
-"""
-
-
-def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII redaction as chained regexp_replace (emails then long digit
-    runs — whole-stage codegen, no UDF). PII is injected
-    deterministically per doc so the scrub provably fires on every
-    row, then counts and the redacted tail are oracle-checked."""
-    from fink_broker_spark.ext.pipeline import pii_counts, pii_scrub_expr
-
-    docs = load_table(spark, sf_dir, "documents")
-    injected = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com ref "),
-            (F.col("doc_id") + F.lit(100000000)).cast("string"),
-        ).alias("text"),
-    )
-    counts = pii_counts("text")
-    return injected.select(
-        "doc_id",
-        counts["n_emails"].cast("bigint").alias("n_emails"),
-        counts["n_digit_runs"].cast("bigint").alias("n_digit_runs"),
-        F.length(pii_scrub_expr("text")).cast("bigint").alias("len_scrubbed"),
-        F.right(pii_scrub_expr("text"), F.lit(24)).alias("tail"),
-    )
-
-
-ORACLE_PII_SCRUB = r"""
-WITH inj AS (
-  SELECT doc_id,
-         text || ' contact user' || CAST(doc_id AS VARCHAR) ||
-         '@example.com ref ' || CAST(doc_id + 100000000 AS VARCHAR) AS text
-  FROM documents
-), scrub AS (
-  SELECT doc_id, text,
-         regexp_replace(regexp_replace(text,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-             '[0-9]{6,}', '<NUM>', 'g') AS clean
-  FROM inj
-)
-SELECT doc_id,
-       CAST(len(regexp_extract_all(text,
-           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-       CAST(len(regexp_extract_all(text, '[0-9]{6,}')) AS BIGINT) AS n_digit_runs,
-       CAST(length(clean) AS BIGINT) AS len_scrubbed,
-       right(clean, 24) AS tail
-FROM scrub
-"""
-
-
-def q_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition filtering: most-common-token fraction and
-    distinct-token ratio per document (explode → two-level aggregate,
-    shuffle ∝ tokens with map-side partials), rolled up per language
-    with the keep rule applied."""
-    from fink_broker_spark.ext.pipeline import repetition_metrics
-    from fink_broker_spark.functions.text import tokens_expr
-
-    docs = load_table(spark, sf_dir, "documents")
-    # tuple-distinct on (doc_id, lang, text) — the SAME tuple the
-    # oracle's DISTINCT keeps — so a re-ingested duplicate row
-    # (duprows driftlab) is one document on both engines, and a
-    # re-ingest that drifts text or lang (ADVICE r7 #3) yields the
-    # same per-(doc, lang) token pools here and in DuckDB; metrics key
-    # on the full (doc_id, lang) tuple for the same reason.
-    staged = (
-        docs.dropDuplicates(["doc_id", "lang", "text"])
-        .select("doc_id", "lang", tokens_expr("text").alias("toks"))
-        .filter(F.size("toks") > 0)
-    )
-    joined = repetition_metrics(staged, ["doc_id", "lang"], "toks")
-    top_frac = F.col("top_token_count") / F.col("n_tokens")
-    distinct_ratio = F.col("distinct_tokens") / F.col("n_tokens")
-    keep = (top_frac < 0.12) & (distinct_ratio > 0.35)
-    return joined.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.count_if(keep).alias("n_kept"),
-        F.max(top_frac).alias("max_top_frac"),
-        F.min(distinct_ratio).alias("min_distinct_ratio"),
-    )
-
-
-ORACLE_REPETITION_RULES = r"""
-WITH uniq AS (
-  -- one row per document (duprows re-ingest parity)
-  SELECT DISTINCT doc_id, lang, text
-  FROM documents WHERE length(trim(lower(text))) > 0
-), toks AS (
-  SELECT doc_id, lang,
-         unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-  FROM uniq
-), per AS (
-  SELECT doc_id, lang, tok, count(*) AS c FROM toks GROUP BY 1, 2, 3
-), met AS (
-  SELECT doc_id, lang, SUM(c) AS n_tokens, COUNT(*) AS distinct_tokens,
-         MAX(c) AS top_cnt
-  FROM per GROUP BY 1, 2
-)
-SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(SUM(CASE WHEN CAST(top_cnt AS DOUBLE) / n_tokens < 0.12
-                      AND CAST(distinct_tokens AS DOUBLE) / n_tokens > 0.35
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-       max(CAST(top_cnt AS DOUBLE) / CAST(n_tokens AS DOUBLE)) AS max_top_frac,
-       min(CAST(distinct_tokens AS DOUBLE) / CAST(n_tokens AS DOUBLE)) AS min_distinct_ratio
-FROM met GROUP BY lang
-"""
-
-
-def q_corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixture accounting: per (lang, source) document/token totals and
-    each cell's share of the corpus token budget — the report that
-    drives training mixture weights. Token counting stays in codegen;
-    the share is one window over the tiny aggregate (never the raw
-    corpus)."""
-    from fink_broker_spark.functions.text import token_count_expr
-
-    docs = load_table(spark, sf_dir, "documents")
-    per_cell = (
-        docs.select(
-            "lang", "source", token_count_expr("text").alias("n_tokens")
-        )
-        .groupBy("lang", "source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").cast("bigint").alias("tokens"),
-        )
-    )
-    total = Window.partitionBy()
-    return per_cell.select(
-        "lang",
-        "source",
-        "n_docs",
-        "tokens",
-        (F.col("tokens") / F.sum("tokens").over(total)).alias("token_share"),
-    )
-
-
-ORACLE_CORPUS_MIXTURE = r"""
-WITH t AS (
-  SELECT lang, source,
-         CASE WHEN length(trim(lower(text))) = 0 THEN 0
-              ELSE len(string_split_regex(trim(lower(text)), '\s+')) END AS n_tokens
-  FROM documents
-), cell AS (
-  SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(SUM(n_tokens) AS BIGINT) AS tokens
-  FROM t GROUP BY 1, 2
-)
-SELECT lang, source, n_docs, tokens,
-       CAST(tokens AS DOUBLE) / CAST(SUM(tokens) OVER () AS DOUBLE) AS token_share
-FROM cell
-"""
-
-
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Test-set decontamination: docs sharing any word 3-gram with the
-    "benchmark" split (every 50th doc) are dropped via a broadcast
-    semi-join on exploded distinct shingles + one anti-join — the
-    corpus is never shuffled on content. Rolled up per language."""
-    from fink_broker_spark.ext.pipeline import decontaminate
-
-    docs = load_table(spark, sf_dir, "documents")
-    benchmark = docs.filter(F.col("doc_id") % 50 == 0)
-    corpus = docs.filter(F.col("doc_id") % 50 != 0)
-    clean = decontaminate(corpus, benchmark, n=3)
-    total = corpus.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-    kept = clean.groupBy("lang").agg(F.count(F.lit(1)).alias("n_clean"))
-    return (
-        total.join(kept, "lang", "left")
-        .select(
-            "lang",
-            "n_docs",
-            F.coalesce("n_clean", F.lit(0)).alias("n_clean"),
-            (F.col("n_docs") - F.coalesce("n_clean", F.lit(0))).alias(
-                "n_contaminated"
-            ),
-        )
-    )
-
-
-ORACLE_DECONTAMINATE = r"""
-WITH bench AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 50 = 0
-), corpus AS (
-  SELECT doc_id, lang, text FROM documents WHERE doc_id % 50 <> 0
-), btok AS (
-  SELECT string_split_regex(trim(lower(text)), '\s+') AS toks
-  FROM bench WHERE length(trim(text)) > 0
-), bsh AS (
-  SELECT DISTINCT array_to_string(toks[i:i+2], ' ') AS shingle
-  FROM btok, range(1, 100000) t(i) WHERE i <= len(toks) - 2
-), ctok AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
-  FROM corpus WHERE length(trim(text)) > 0
-), csh AS (
-  SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS shingle
-  FROM ctok, range(1, 100000) t(i) WHERE i <= len(toks) - 2
-), contaminated AS (
-  SELECT DISTINCT c.doc_id FROM csh c JOIN bsh USING (shingle)
-)
-SELECT corpus.lang,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(SUM(CASE WHEN k.doc_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_clean,
-       CAST(SUM(CASE WHEN k.doc_id IS NULL THEN 0 ELSE 1 END) AS BIGINT) AS n_contaminated
-FROM corpus LEFT JOIN contaminated k ON corpus.doc_id = k.doc_id
-GROUP BY corpus.lang
-"""
-
-
-def q_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word-3-shingle Jaccard near-dup pairs (threshold 0.8)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return jaccard_pairs(docs, threshold=0.8, n=3)
-
-
-ORACLE_JACCARD_NEARDUP = r"""
-WITH tok AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
-  FROM documents WHERE length(trim(text)) > 0
-), sh AS (
-  SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS shingle
-  FROM tok, range(1, 100000) t(i) WHERE i <= len(toks) - 2
-), sizes AS (
-  SELECT doc_id, count(*) AS nsh FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-  FROM sh a JOIN sh b USING (shingle)
-  WHERE a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b, inter, sa.nsh AS nsh_a, sb.nsh AS nsh_b,
-       CAST(inter AS DOUBLE) / CAST(sa.nsh + sb.nsh - inter AS DOUBLE) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE CAST(inter AS DOUBLE) / CAST(sa.nsh + sb.nsh - inter AS DOUBLE) >= 0.8
-"""
-
-
-def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup (banding). Signature hashing is engine-specific
-    (xxhash64), so no SQL oracle — the pytest suite checks it against the
-    exact-Jaccard result instead (recall/precision contract)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(docs, num_hashes=32, nbands=8, n=3, threshold=0.8)
-
-
-def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash hamming-ball near-dup pairs (engine-specific hash → no SQL
-    oracle; pytest checks overlap with exact Jaccard pairs)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return simhash_pairs(docs, max_hamming=3, n=2)
-
-
-def q_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH banding with the md5-portable hash family — the
-    exact-value-oracled twin of ``minhash_lsh_neardup`` (whose xxhash64
-    signatures cannot be replayed in ANSI SQL).  Same pipeline shape:
-    16-min signature, 4 bands of 4, band-bucket candidate join, exact
-    Jaccard ≥ 0.5 verification; the DuckDB oracle re-derives the same
-    hash bits, so banding semantics (not just row counts) sit under the
-    correctness gate."""
-    docs = load_table(spark, sf_dir, "documents")
-    return minhash_lsh_pairs_portable(
-        docs, num_hashes=16, nbands=4, n=3, threshold=0.5
-    )
-
-
-def q_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash hamming-ball pairs with the md5-portable 32-bit signature —
-    the exact-value-oracled twin of ``simhash_neardup``.  Pigeonhole
-    banding (4 bands of 8 bits, max hamming 3 < 4 bands → exact recall),
-    hamming via ``bit_count(xor)`` on both engines."""
-    docs = load_table(spark, sf_dir, "documents")
-    return simhash_pairs_portable(
-        docs, max_hamming=3, nbits=32, nbands=4, n=2
-    )
-
-
-def _oracle_minhash_lsh_portable(
-    num_hashes: int = 16, nbands: int = 4, threshold: float = 0.5
-) -> str:
-    """DuckDB twin of :func:`minhash_lsh_pairs_portable` — the 16 MIN
-    aggregates (affine Carter–Wegman family over the two 40-bit halves
-    of one md5 per shingle) and 4 band hashes are generated from the
-    same parameters the Spark plan uses, so the two sides cannot drift
-    independently."""
-    from fink_broker_spark.ext.dedup import MINHASH_PRIME
-
-    rpb = num_hashes // nbands
-    mins = ",\n         ".join(
-        f"MIN((a + {i} * b) % {MINHASH_PRIME}) AS h{i}"
-        for i in range(num_hashes)
-    )
-    band_rows = "\n  UNION ALL\n".join(
-        "  SELECT doc_id, {b} AS band,\n"
-        "         CAST('0x' || substr(md5({concat}), 1, 15) AS BIGINT)"
-        " AS bhash\n  FROM sig".format(
-            b=b,
-            concat=" || '#' || ".join(
-                f"CAST(h{i} AS VARCHAR)"
-                for i in range(b * rpb, (b + 1) * rpb)
-            ),
-        )
-        for b in range(nbands)
-    )
-    return rf"""
-WITH tok AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
-  FROM documents WHERE length(trim(text)) > 0
-), sh AS (
-  SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS shingle
-  FROM tok, range(1, 100000) t(i) WHERE i <= len(toks) - 2
-), seeds AS (
-  SELECT doc_id,
-         CAST('0x' || substr(md5(shingle), 1, 10) AS BIGINT) AS a,
-         CAST('0x' || substr(md5(shingle), 11, 10) AS BIGINT) AS b
-  FROM sh
-), sig AS (
-  SELECT doc_id,
-         {mins}
-  FROM seeds GROUP BY doc_id
-), bt AS (
-{band_rows}
-), cand AS (
-  SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-  FROM bt x JOIN bt y ON x.band = y.band AND x.bhash = y.bhash
-  WHERE x.doc_id < y.doc_id
-), sizes AS (
-  SELECT doc_id, count(*) AS nsh FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-  FROM sh a JOIN sh b USING (shingle)
-  WHERE a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT c.id_a, c.id_b,
-       CAST(i.inter AS DOUBLE)
-         / CAST(sa.nsh + sb.nsh - i.inter AS DOUBLE) AS jaccard
-FROM cand c
-JOIN inter i ON i.id_a = c.id_a AND i.id_b = c.id_b
-JOIN sizes sa ON sa.doc_id = c.id_a
-JOIN sizes sb ON sb.doc_id = c.id_b
-WHERE CAST(i.inter AS DOUBLE)
-        / CAST(sa.nsh + sb.nsh - i.inter AS DOUBLE) >= {threshold}
-"""
-
-
-def _oracle_simhash_portable(
-    nbits: int = 32, nbands: int = 4, max_hamming: int = 3
-) -> str:
-    """DuckDB twin of :func:`simhash_pairs_portable` — 32 bit-vote SUMs,
-    the power-of-two recombination, and the band split are generated from
-    the same parameters as the Spark plan."""
-    band_bits = nbits // nbands
-    votes = ",\n         ".join(
-        f"SUM(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
-        for b in range(nbits)
-    )
-    recombine = "\n           + ".join(
-        f"(CASE WHEN v{b} > 0 THEN CAST({1 << b} AS BIGINT)"
-        " ELSE CAST(0 AS BIGINT) END)"
-        for b in range(nbits)
-    )
-    band_rows = "\n  UNION ALL\n".join(
-        f"  SELECT doc_id, simhash, {b} AS band,"
-        f" (simhash >> {b * band_bits}) & {(1 << band_bits) - 1} AS bkey"
-        "\n  FROM sig"
-        for b in range(nbands)
-    )
-    return rf"""
-WITH tok AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
-  FROM documents WHERE length(trim(text)) > 0
-), sh AS (
-  SELECT DISTINCT doc_id, array_to_string(toks[i:i+1], ' ') AS shingle
-  FROM tok, range(1, 100000) t(i) WHERE i <= len(toks) - 1
-), h AS (
-  SELECT doc_id, CAST('0x' || substr(md5(shingle), 1, 8) AS BIGINT) AS h
-  FROM sh
-), v AS (
-  SELECT doc_id,
-         {votes}
-  FROM h GROUP BY doc_id
-), sig AS (
-  SELECT doc_id,
-         {recombine} AS simhash
-  FROM v
-), bt AS (
-{band_rows}
-)
-SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b,
-       CAST(bit_count(xor(x.simhash, y.simhash)) AS INTEGER) AS hamming
-FROM bt x JOIN bt y ON x.band = y.band AND x.bkey = y.bkey
-WHERE x.doc_id < y.doc_id
-  AND bit_count(xor(x.simhash, y.simhash)) <= {max_hamming}
-"""
-
-
-ORACLE_MINHASH_LSH_PORTABLE = _oracle_minhash_lsh_portable()
-ORACLE_SIMHASH_PORTABLE = _oracle_simhash_portable()
-
-
-# --------------------------------------------------------------------------
-# SURVEY §2.11 — streaming (batch-equivalent replay)
-# --------------------------------------------------------------------------
-
-def q_stream_replay_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured-Streaming replay of the events table (file stream,
-    AvailableNow drain) must equal the batch answer — the reference's CI
-    invariant (``bin/fink_test_ztf:100-148``). The oracle *is* the batch
-    group-count."""
-    configure_session(spark)
-    with _stream_stage(sf_dir, "events") as stage:
-        return replay_to_table(
-            spark,
-            stage,
-            lambda sdf: sdf.groupBy("event_type").agg(
-                F.count(F.lit(1)).alias("n_events")
-            ),
-            output_mode="complete",
-        )
-
-
-@contextlib.contextmanager
-def _stream_stage(sf_dir: str, table: str):
-    """Directory the file-stream source can replay for *table*, for the
-    length of the ``with`` block.
-
-    The file source streams *directories*: a directory-of-parts table
-    (multi-file lake) streams as-is; a single-file table gets staged
-    behind a symlink dir (falling back to a copy on filesystems
-    without symlinks), removed again when the block ends — a drained
-    replay's memory-sink table no longer reads it."""
-    import shutil
-    import tempfile
-
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(src):
-        yield src
-        return
-    stage = tempfile.mkdtemp(prefix="fbs_replay_")
-    try:
-        try:
-            os.symlink(src, os.path.join(stage, f"{table}.parquet"))
-        except OSError:
-            shutil.copy(src, os.path.join(stage, f"{table}.parquet"))
-        yield stage
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-
-
-ORACLE_STREAM_REPLAY = """
-SELECT event_type, count(*) AS n_events FROM events GROUP BY event_type
-"""
-
-
-def q_stream_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming top-k snapshot: replay the events table as a file
-    stream, maintain per-USER running counts in keyed streaming state
-    (|users| distinct keys — real keyed-state cardinality, unlike the
-    5-group event_type replay), and emit the final top-10 leaderboard.
-    The oracle is the batch top-k — the stream/batch equivalence
-    invariant, per key this time.
-
-    Plan: streaming groupBy state holds one long per user; the
-    leaderboard is a batch TakeOrderedAndProject over the drained
-    result table.  Complete output mode re-emits the running table per
-    trigger — fine for a drained AvailableNow replay; a continuous
-    100 TB deployment would run update mode into an idempotent
-    merge sink (`sinks/parquet.py` manifest writer) instead, keeping
-    the same per-key state.  NULL users carry no identity and are
-    excluded on both sides."""
-    configure_session(spark)
-    with _stream_stage(sf_dir, "events") as stage:
-        totals = replay_to_table(
-            spark,
-            stage,
-            lambda sdf: sdf.filter(F.col("user_id").isNotNull())
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n_events")),
-            output_mode="complete",
-        )
-    return totals.orderBy(F.desc("n_events"), "user_id").limit(10)
-
-
-ORACLE_STREAM_TOPK_USERS = """
-SELECT user_id, CAST(count(*) AS BIGINT) AS n_events
-FROM events WHERE user_id IS NOT NULL
-GROUP BY user_id
-ORDER BY n_events DESC, user_id
-LIMIT 10
-"""
-
-
-# --------------------------------------------------------------------------
-# SURVEY §2.6/§2.9/§2.10 — rollup, set ops, map recode, file provenance
-# --------------------------------------------------------------------------
-
-def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical rollup (free in Spark per SURVEY §2.6 note)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(_dec("l_quantity")), 2).cast("double").alias("sum_qty"),
-        )
-    )
-
-
-ORACLE_ROLLUP = """
-SELECT l_returnflag, l_linestatus, count(*) AS n,
-       CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(18,9))), 2) AS DOUBLE) AS sum_qty
-FROM lineitem
-GROUP BY ROLLUP (l_returnflag, l_linestatus)
-"""
-
-
-def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT / EXCEPT over derived key sets (§2.9: free Spark ops)."""
-    ev = load_table(spark, sf_dir, "events")
-    buyers = ev.filter(F.col("event_type") == "purchase").select("user_id").distinct()
-    erroring = ev.filter(F.col("event_type") == "error").select("user_id").distinct()
-    both = buyers.intersect(erroring).withColumn("label", F.lit("both"))
-    only_buy = buyers.exceptAll(erroring).withColumn("label", F.lit("buy_only"))
-    return both.unionByName(only_buy)
-
-
-ORACLE_SET_OPS = """
-SELECT user_id, 'both' AS label FROM (
-  SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'
-  INTERSECT
-  SELECT DISTINCT user_id FROM events WHERE event_type = 'error')
-UNION ALL
-SELECT user_id, 'buy_only' AS label FROM (
-  SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'
-  EXCEPT
-  SELECT DISTINCT user_id FROM events WHERE event_type = 'error')
-"""
-
-
-def q_map_recode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``create_map`` literal lookup with null fallback — the CATS
-    class-id remap idiom (``rubin/science.py:329-351``)."""
-    ev = load_table(spark, sf_dir, "events")
-    codes = F.create_map(
-        F.lit("click"), F.lit(1),
-        F.lit("view"), F.lit(2),
-        F.lit("purchase"), F.lit(3),
-        F.lit("signup"), F.lit(4),
-    )
-    return (
-        ev.select(
-            F.coalesce(codes[F.col("event_type")], F.lit(-1)).alias("type_code")
-        )
-        .groupBy("type_code")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-ORACLE_MAP_RECODE = """
-SELECT CASE event_type WHEN 'click' THEN 1 WHEN 'view' THEN 2
-            WHEN 'purchase' THEN 3 WHEN 'signup' THEN 4 ELSE -1 END AS type_code,
-       count(*) AS n
-FROM events GROUP BY 1
-"""
-
-
-def q_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row provenance via ``input_file_name`` (``bin/ztf/archive_images.py:51``,
-    ``rubin/hbase_utils.py:854``), normalized to basenames."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.withColumn(
-            "file", F.regexp_extract(F.input_file_name(), r"[^/]+$", 0)
-        )
-        .groupBy("file")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-ORACLE_FILE_PROVENANCE_TEMPLATE = r"""
-SELECT regexp_extract(filename, '[^/]+$', 0) AS file, count(*) AS n
-FROM read_parquet('{sf}/lineitem.parquet', filename = true)
-GROUP BY 1
-"""
-
-
-# --------------------------------------------------------------------------
-# sessionization: window-lag (declarative) and applyInPandas (imperative)
-# compute the SAME result — one oracle covers both (§2.7, §2.12)
-# --------------------------------------------------------------------------
-
-SESSION_GAP_US = 30 * 60 * 1000000  # 30 minutes
-
-
-def q_session_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization via lag window: a session break is a >30 min gap."""
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts_us", nanos_to_micros("ts_ns")
-    )
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    gapped = ev.withColumn("prev_us", F.lag("ts_us").over(w))
-    breaks = F.when(
-        F.col("prev_us").isNull()
-        | (F.col("ts_us") - F.col("prev_us") > SESSION_GAP_US),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    return (
-        gapped.withColumn("brk", breaks)
-        .groupBy("user_id")
-        .agg(
-            F.sum("brk").alias("n_sessions"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select("user_id", F.col("n_sessions").cast("bigint").alias("n_sessions"), "n_events")
-    )
-
-
-ORACLE_SESSIONS = f"""
-WITH g AS (
-  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-         lag(epoch_us(ts)) OVER (PARTITION BY user_id
-             ORDER BY epoch_us(ts), event_id) AS prev_us
-  FROM events
-)
-SELECT user_id,
-       CAST(SUM(CASE WHEN prev_us IS NULL
-                      OR ts_us - prev_us > {SESSION_GAP_US} THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_sessions,
-       count(*) AS n_events
-FROM g GROUP BY user_id
-"""
-
-
-def q_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Third sessionizer: Spark's native ``session_window`` (engine-side
-    window merging, watermark-aware in streaming — the recommended plan
-    when only session aggregates are needed). Boundary semantics match
-    the lag twin: sessions break only when the gap is strictly
-    exceeded; ``session_end = last_event + gap``. Timestamps exposed as
-    epoch micros for the oracle."""
-    from fink_broker_spark.streaming.sessions import sessionize
-
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .withColumn("ts_us", nanos_to_micros("ts_ns"))
-        .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-        .select("user_id", "event_id", "ts")
-    )
-    sess = sessionize(
-        ev,
-        "user_id",
-        "ts",
-        "30 minutes",
-        aggs={
-            "n_events": F.count(F.lit(1)).alias("n_events"),
-            "first_event": F.min("event_id"),
-            "last_event": F.max("event_id"),
-        },
-    )
-    return sess.select(
-        "user_id",
-        F.unix_micros("session_start").alias("start_us"),
-        F.unix_micros("session_end").alias("end_us"),
-        "n_events",
-        "first_event",
-        "last_event",
-    )
-
-
-ORACLE_SESSION_NATIVE = f"""
-WITH e AS (
-  SELECT user_id, event_id, epoch_us(ts) AS t FROM events
-), d AS (
-  SELECT user_id, event_id, t,
-         CASE WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t, event_id)
-                   > {SESSION_GAP_US} THEN 1 ELSE 0 END AS brk
-  FROM e
-), s AS (
-  SELECT user_id, event_id, t,
-         SUM(brk) OVER (PARTITION BY user_id ORDER BY t, event_id
-                        ROWS UNBOUNDED PRECEDING) AS sid
-  FROM d
-)
-SELECT user_id,
-       CAST(min(t) AS BIGINT) AS start_us,
-       CAST(max(t) + {SESSION_GAP_US} AS BIGINT) AS end_us,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(min(event_id) AS BIGINT) AS first_event,
-       CAST(max(event_id) AS BIGINT) AS last_event
-FROM s GROUP BY user_id, sid
-"""
-
-
-def q_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native ``session_window`` with a DYNAMIC per-event gap (errors
-    time out in 10 minutes, everything else in 45) — the Spark-only
-    capability the fixed-gap twins can't express: each event extends
-    its session by its own gap, so a session's end is the running max
-    of ``t + gap(event)``. The oracle mirrors that exactly with a
-    1-preceding running-max islands construction (break when the event
-    starts after every previous event's extension)."""
-    gap_col = F.when(
-        F.col("event_type") == "error", F.lit("10 minutes")
-    ).otherwise(F.lit("45 minutes"))
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .withColumn("ts_us", nanos_to_micros("ts_ns"))
-        .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-        .select("user_id", "event_id", "event_type", "ts")
-    )
-    sess = (
-        ev.groupBy(
-            F.col("user_id"), F.session_window(F.col("ts"), gap_col)
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("event_id").alias("first_event"),
-        )
-        .select(
-            "user_id",
-            F.unix_micros("session_window.start").alias("start_us"),
-            F.unix_micros("session_window.end").alias("end_us"),
-            "n_events",
-            "first_event",
-        )
-    )
-    return sess
-
-
-ORACLE_SESSION_DYNAMIC_GAP = """
-WITH e AS (
-  SELECT user_id, event_id, epoch_us(ts) AS t,
-         CASE WHEN event_type = 'error' THEN 600000000
-              ELSE 2700000000 END AS g
-  FROM events
-), d AS (
-  SELECT user_id, event_id, t, g,
-         MAX(t + g) OVER (PARTITION BY user_id ORDER BY t, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING
-                          AND 1 PRECEDING) AS prior_end
-  FROM e
-), s AS (
-  SELECT user_id, event_id, t, g,
-         SUM(CASE WHEN prior_end IS NULL OR t > prior_end
-                  THEN 1 ELSE 0 END)
-           OVER (PARTITION BY user_id ORDER BY t, event_id
-                 ROWS UNBOUNDED PRECEDING) AS sid
-  FROM d
-)
-SELECT user_id,
-       CAST(min(t) AS BIGINT) AS start_us,
-       CAST(max(t + g) AS BIGINT) AS end_us,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(min(event_id) AS BIGINT) AS first_event
-FROM s GROUP BY user_id, sid
-"""
-
-
-def q_session_applyinpandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same sessionization, computed imperatively per user group with
-    ``applyInPandas`` (§2.12 grouped-map surface) — must match the
-    declarative window answer exactly."""
-    import pandas as pd
-
-    # keyed spread (guide §2.5/§4): the grouped-map exchange is sized by
-    # BYTES under AQE and coalesced to ONE post-shuffle task at bench
-    # scale (profiled: 5.2 s single-task Python stage) — but the stage's
-    # cost is per-row Python/Arrow work, not bytes.  The pinned
-    # HashPartitioning(user_id) satisfies the grouped-map clustering
-    # (no second exchange) and holds the Python stage at core width;
-    # no-op when the scan already has ≥ cores splits.
-    from fink_broker_spark.plans.partitioning import ensure_keyed_parallelism
-
-    ev = ensure_keyed_parallelism(
-        load_table(spark, sf_dir, "events")
-        .withColumn("ts_us", nanos_to_micros("ts_ns"))
-        .select("user_id", "event_id", "ts_us"),
-        "user_id",
-    )
-
-    def sessions(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts_us", "event_id"])
-        gaps = pdf["ts_us"].diff()
-        n_sessions = int((gaps.isna() | (gaps > SESSION_GAP_US)).sum())
-        return pd.DataFrame(
-            {
-                "user_id": [pdf["user_id"].iloc[0]],
-                "n_sessions": [n_sessions],
-                "n_events": [len(pdf)],
-            }
-        )
-
-    return ev.groupBy("user_id").applyInPandas(
-        sessions, "user_id bigint, n_sessions bigint, n_events bigint"
-    )
-
-
-# --------------------------------------------------------------------------
-# archive layer: single-pass statistics; enrichment pipeline; cascade
-# --------------------------------------------------------------------------
-
-def q_nightly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-row nightly statistics in a single scan
-    (``bin/ztf/archive_statistics.py:93-141`` without one action per
-    counter)."""
-    from fink_broker_spark.archive.statistics import nightly_statistics
-
-    ev = load_table(spark, sf_dir, "events")
-    out = nightly_statistics(
-        ev,
-        filtered_counts={
-            "n_purchase": F.col("event_type") == "purchase",
-            "n_error": F.col("event_type") == "error",
-            "n_high_value": F.col("value") >= 500.0,
-        },
-        distinct_counts=["user_id", "event_type"],
-        sums={"sum_value_dec": _dec("value")},
-    )
-    return out.select(
-        "n_total", "n_purchase", "n_error", "n_high_value",
-        "n_distinct_user_id", "n_distinct_event_type",
-        F.round(F.col("sum_value_dec"), 2).cast("double").alias("sum_value"),
-    )
-
-
-ORACLE_NIGHTLY_STATS = """
-SELECT count(*) AS n_total,
-       count(*) FILTER (event_type = 'purchase') AS n_purchase,
-       count(*) FILTER (event_type = 'error') AS n_error,
-       count(*) FILTER (value >= 500.0) AS n_high_value,
-       count(DISTINCT user_id) AS n_distinct_user_id,
-       count(DISTINCT event_type) AS n_distinct_event_type,
-       CAST(ROUND(SUM(CAST(CASE WHEN isfinite(value) THEN value END AS DECIMAL(18,9))), 2) AS DOUBLE) AS sum_value
-FROM events
-"""
-
-
-def q_enrich_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The science-module pipeline shape (``ztf/science.py:201-436``) on
-    the events stream: ordered processors, temp-column lifecycle,
-    missing-input skip — all pure Column exprs here (zero Arrow
-    boundaries).
-
-    Domain: finite values only (NULL rows kept — their bucket stays a
-    NULL group, as before): Spark's floor(double) silently corrupts
-    NaN/Inf where DuckDB's BIGINT cast hard-errors (nanemb driftlab
-    layout, r10)."""
-    from fink_broker_spark.enrich.pipeline import EnrichmentPipeline, Processor
-
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("value").isNull() | _finite("value"))
-        .withColumn("ts_us", nanos_to_micros("ts_ns"))
-    )
-    pipe = EnrichmentPipeline(
-        processors=[
-            Processor("jd", ["ts_us"], "jd", lambda c: jd_expr(F.col(c))),
-            Processor(
-                "night",
-                ["ts"],
-                "night",
-                lambda c: (
-                    F.year(c) * 10000 + F.month(c) * 100 + F.dayofmonth(c)
-                ).cast("int"),
-            ),
-            Processor(
-                "value_bucket",
-                ["value"],
-                "value_bucket",
-                lambda c: F.floor(F.col(c) / 100.0).cast("long"),
-            ),
-            Processor(
-                "tmp_flag", ["event_type"], "tmp_flag",
-                lambda c: F.col(c) == "error", temporary=True,
-            ),
-            Processor(
-                "skipped_missing", ["no_such_col"], "never_made",
-                lambda c: F.lit(0),
-            ),
-        ]
-    )
-    out = pipe.apply(ev)
-    return out.groupBy("night", "value_bucket").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("jd").alias("min_jd"),
-    )
-
-
-ORACLE_ENRICH_PIPELINE = """
-SELECT CAST(year(ts) * 10000 + month(ts) * 100 + day(ts) AS INTEGER) AS night,
-       CAST(floor(value / 100.0) AS BIGINT) AS value_bucket,
-       count(*) AS n,
-       min(epoch_us(ts) / 86400000000.0 + 2440587.5) AS min_jd
-FROM events
--- finite-value domain, mirroring the engine (nanemb layout, r10)
-WHERE value IS NULL OR isfinite(value)
-GROUP BY 1, 2
-"""
-
-
-def q_classification_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Priority-rule cascade label (``extract_fink_classification`` shape,
-    ``bin/ztf/archive_index.py:100-116``) on lineitem."""
-    from fink_broker_spark.operators.classify import classification_cascade
-
-    li = load_table(spark, sf_dir, "lineitem")
-    label = classification_cascade(
-        [
-            (F.col("l_returnflag") == "R", "returned"),
-            (F.col("l_quantity") >= 45, "bulk"),
-            (F.col("l_discount") >= 0.08, "discounted"),
-        ],
-        default="regular",
-    )
-    return (
-        li.select(label.alias("class"))
-        .groupBy("class")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-ORACLE_CASCADE = """
-SELECT CASE WHEN l_returnflag = 'R' THEN 'returned'
-            WHEN l_quantity >= 45 THEN 'bulk'
-            WHEN l_discount >= 0.08 THEN 'discounted'
-            ELSE 'regular' END AS class,
-       count(*) AS n
-FROM lineitem GROUP BY 1
-"""
-
-
-# --------------------------------------------------------------------------
-# spatial bucketing + grouped-map clustering (tracklet family)
-# --------------------------------------------------------------------------
-
-def q_grid_pixelization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sky-bucketing operator (``ang2pix`` family,
-    ``common/spark_utils.py:529-564``) on synthetic coordinates derived
-    from the events table; grid variant is pure-Column + SQL-mirrorable.
-
-    Domain: finite values only (NULL rows kept — their pix stays a
-    NULL group, as before): Spark's floor(double) silently corrupts
-    NaN/Inf coordinates where DuckDB's BIGINT cast hard-errors
-    (nanemb driftlab layout, r10)."""
-    from fink_broker_spark.functions.spatial import grid_pixel_expr
-
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNull() | _finite("value")
-    )
-    ra = F.col("value") - F.floor(F.col("value") / 360.0) * 360.0
-    dec = (F.col("user_id") % 181 - 90).cast("double")
-    return (
-        ev.select(grid_pixel_expr(ra, dec, cell_deg=10.0).alias("pix"))
-        .groupBy("pix")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-ORACLE_GRID_PIX = """
-SELECT CAST(floor(((CAST(user_id % 181 AS DOUBLE) - 90) + 90.0) / 10.0) * 36
-            + floor((value - floor(value / 360.0) * 360.0) / 10.0) AS BIGINT) AS pix,
-       count(*) AS n
-FROM events
--- finite-value domain, mirroring the engine (nanemb layout, r10)
-WHERE value IS NULL OR isfinite(value)
-GROUP BY 1
-"""
-
-
-def q_healpix_pixelization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real HEALPix RING pixelization (``ang2pix``,
-    ``common/spark_utils.py:529-564``) as a pure Column expression over
-    the scan — no UDF, ANSI-SQL-transcribable (the oracle runs the
-    identical formula; floor boundaries are measure-zero so the integer
-    pixels agree exactly across libms). Output: per-pixel counts at
-    nside=16 plus the lexicographic-min multi-resolution key
-    (``pix@16_pix@64`` — the reference's ``ang2pix_array`` string,
-    ``common/spark_utils.py:567-609``). The numpy-UDF twin is pinned
-    equal in ``tests/test_spatial.py``.
-
-    Domain: finite values only (NULL rows kept — their pix stays a
-    NULL group, as before): a NaN/Inf coordinate silently corrupts
-    Spark's floor(double) where DuckDB's BIGINT cast hard-errors
-    (nanemb driftlab layout, r10)."""
-    from fink_broker_spark.functions.spatial import healpix_ring_expr
-
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNull() | _finite("value")
-    )
-    ra = F.col("value") - F.floor(F.col("value") / 360.0) * 360.0
-    dec = (F.col("user_id") % 181 - 90).cast("double")
-    pix16 = healpix_ring_expr(ra, dec, 16)
-    pix64 = healpix_ring_expr(ra, dec, 64)
-    mr = F.concat_ws("_", pix16.cast("string"), pix64.cast("string"))
-    return (
-        ev.select(pix16.alias("pix"), mr.alias("mr"))
-        .groupBy("pix")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("mr").alias("first_mr"),
-        )
-    )
-
-
-def _oracle_healpix() -> str:
-    from fink_broker_spark.functions.spatial import healpix_ring_sql
-
-    ra_sql = "(value - floor(value / 360.0) * 360.0)"
-    dec_sql = "(CAST(user_id % 181 - 90 AS DOUBLE))"
-    p16 = healpix_ring_sql(ra_sql, dec_sql, 16)
-    p64 = healpix_ring_sql(ra_sql, dec_sql, 64)
-    return f"""
-WITH px AS (
-  SELECT {p16} AS pix,
-         concat_ws('_', CAST({p16} AS VARCHAR), CAST({p64} AS VARCHAR)) AS mr
-  FROM events
-  -- finite-value domain, mirroring the engine (nanemb layout, r10)
-  WHERE value IS NULL OR isfinite(value)
-)
-SELECT pix, count(*) AS n, min(mr) AS first_mr FROM px GROUP BY pix
-"""
-
-
-ORACLE_HEALPIX = _oracle_healpix()
-
-
-def q_multires_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-radius lookup against a serving index keyed by the
-    multi-resolution pixel string (the reference's ``ang2pix_array``
-    column, ``common/spark_utils.py:567-609``, used as the HBase
-    ``pixel`` index-table row key, ``bin/ztf/archive_index.py:93-150``).
-
-    The index stores ONE string key ``pix@8_pix@64`` per row; a wide
-    cone (radius ~ the nside=8 scale) matches on the coarse component,
-    a tight cone (radius ~ the nside=64 scale) on the fine component —
-    component extraction is codegen ``split``+``cast`` on the stored
-    key, never a re-pixelization of the indexed side. Pixels use the
-    NESTED numbering (``healpix_nest_expr``) because its hierarchical
-    prefix property derives the coarse level from the fine one with a
-    shift (``pix@8 = pix@64 >> 6``): the 600k-row index side evaluates
-    ONE trig CASE tree instead of one per resolution level — the same
-    reason multi-order sky maps standardize on nested ids. Probes
-    broadcast (tiny), candidates refine with the exact haversine
-    predicate, and per-probe counts aggregate after the filter. Counts
-    only, so the oracle hash never touches a trig double."""
-    from fink_broker_spark.functions.spatial import with_healpix_nest
-
-    ev = load_table(spark, sf_dir, "events")
-    # serving index: payload + the one stored multires key
-    idx = ev.select(
-        "event_id",
-        (((F.col("event_id") * 193) % 3600) / 10.0).alias("ra"),
-        ((((F.col("user_id") * 37) % 1200) / 10.0) - 60.0).alias("dec"),
-    )
-    # staged pixelization: linear plan size (the inline Column form
-    # replicates the trig CASE tree ~2^5 times through the interleave)
-    idx = with_healpix_nest(idx, "ra", "dec", 64, out="hp64").select(
-        "event_id",
-        "ra",
-        "dec",
-        F.concat_ws(
-            "_",
-            F.shiftright("hp64", 6).cast("string"),
-            F.col("hp64").cast("string"),
-        ).alias("hpx"),
-    )
-    probes = (
-        load_table(spark, sf_dir, "supplier")
-        .filter(F.col("s_suppkey") % 3 == 0)
-        .select(
-            "s_suppkey",
-            (((F.col("s_suppkey") * 131) % 3600) / 10.0).alias("p_ra"),
-            ((((F.col("s_suppkey") * 61) % 1200) / 10.0) - 60.0).alias("p_dec"),
-        )
-    )
-    probes = with_healpix_nest(
-        probes, "p_ra", "p_dec", 64, out="p64"
-    ).select(
-        "s_suppkey",
-        "p_ra",
-        "p_dec",
-        F.shiftright("p64", 6).alias("p8"),
-        "p64",
-    )
-    from fink_broker_spark.functions.spatial import angular_sep_deg_expr
-
-    # ONE scan of the index: each stored key explodes into its
-    # (level, component) rows, probes explode the same way with their
-    # per-level radius, and a single broadcast equi-join on
-    # (level, pixel) serves both radii — the pixelization CASE trees
-    # evaluate once per side instead of once per lookup level
-    parts = F.split("hpx", "_")
-    lv_idx = idx.select(
-        "ra",
-        "dec",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit(0).alias("lvl"),
-                    parts.getItem(0).cast("long").alias("k"),
-                ),
-                F.struct(
-                    F.lit(1).alias("lvl"),
-                    parts.getItem(1).cast("long").alias("k"),
-                ),
-            )
-        ).alias("lk"),
-    ).select("ra", "dec", "lk.lvl", "lk.k")
-    lv_probes = probes.select(
-        "s_suppkey",
-        "p_ra",
-        "p_dec",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit(0).alias("lvl"),
-                    F.col("p8").alias("k"),
-                    F.lit(3.0).alias("radius"),
-                ),
-                F.struct(
-                    F.lit(1).alias("lvl"),
-                    F.col("p64").alias("k"),
-                    F.lit(0.9).alias("radius"),
-                ),
-            )
-        ).alias("lk"),
-    ).select("s_suppkey", "p_ra", "p_dec", "lk.lvl", "lk.k", "lk.radius")
-    hits = (
-        lv_idx.join(F.broadcast(lv_probes), on=["lvl", "k"])
-        .filter(
-            angular_sep_deg_expr("ra", "dec", "p_ra", "p_dec")
-            <= F.col("radius")
-        )
-        .groupBy("s_suppkey")
-        .agg(
-            F.count(F.when(F.col("lvl") == 0, 1)).alias("n_wide"),
-            F.count(F.when(F.col("lvl") == 1, 1)).alias("n_tight"),
-        )
-    )
-    return (
-        probes.select("s_suppkey")
-        .join(hits, "s_suppkey", "left")
-        .select(
-            "s_suppkey",
-            F.coalesce("n_wide", F.lit(0)).alias("n_wide"),
-            F.coalesce("n_tight", F.lit(0)).alias("n_tight"),
-        )
-    )
-
-
-def _oracle_multires_index() -> str:
-    from fink_broker_spark.functions.spatial import healpix_nest_sql
-
-    i_ra = "(((event_id * 193) % 3600) / 10.0)"
-    i_dec = "((((user_id * 37) % 1200) / 10.0) - 60.0)"
-    p_ra = "(((s_suppkey * 131) % 3600) / 10.0)"
-    p_dec = "((((s_suppkey * 61) % 1200) / 10.0) - 60.0)"
-    hav = (
-        "degrees(2.0 * atan2("
-        "sqrt(pow(sin((radians(i.dec) - radians(p.p_dec)) / 2), 2)"
-        " + cos(radians(p.p_dec)) * cos(radians(i.dec))"
-        "   * pow(sin((radians(i.ra) - radians(p.p_ra)) / 2), 2)),"
-        "sqrt(greatest(0.0, 1.0 - (pow(sin((radians(i.dec) - radians(p.p_dec)) / 2), 2)"
-        " + cos(radians(p.p_dec)) * cos(radians(i.dec))"
-        "   * pow(sin((radians(i.ra) - radians(p.p_ra)) / 2), 2))))))"
-    )
-    return f"""
-WITH idx0 AS (
-  SELECT event_id, {i_ra} AS ra, {i_dec} AS dec,
-         {healpix_nest_sql(i_ra, i_dec, 64)} AS hp64
-  FROM events
-), idx AS (
-  SELECT event_id, ra, dec,
-         concat_ws('_', CAST((hp64 >> 6) AS VARCHAR),
-                        CAST(hp64 AS VARCHAR)) AS hpx
-  FROM idx0
-), probes0 AS (
-  SELECT s_suppkey, {p_ra} AS p_ra, {p_dec} AS p_dec,
-         {healpix_nest_sql(p_ra, p_dec, 64)} AS p64
-  FROM supplier WHERE s_suppkey % 3 = 0
-), probes AS (
-  SELECT s_suppkey, p_ra, p_dec, (p64 >> 6) AS p8, p64 FROM probes0
-), wide AS (
-  SELECT p.s_suppkey, count(*) AS n_wide
-  FROM idx i JOIN probes p
-    ON CAST(string_split(i.hpx, '_')[1] AS BIGINT) = p.p8
-  WHERE {hav} <= 3.0
-  GROUP BY 1
-), tight AS (
-  SELECT p.s_suppkey, count(*) AS n_tight
-  FROM idx i JOIN probes p
-    ON CAST(string_split(i.hpx, '_')[2] AS BIGINT) = p.p64
-  WHERE {hav} <= 0.9
-  GROUP BY 1
-)
-SELECT probes.s_suppkey,
-       COALESCE(wide.n_wide, 0) AS n_wide,
-       COALESCE(tight.n_tight, 0) AS n_tight
-FROM probes
-LEFT JOIN wide ON probes.s_suppkey = wide.s_suppkey
-LEFT JOIN tight ON probes.s_suppkey = tight.s_suppkey
-"""
-
-
-ORACLE_MULTIRES_INDEX = _oracle_multires_index()
-
-
-_EPOCH_2024_US = 1_704_067_200_000_000  # 2024-01-01T00:00:00Z
-_DAY_US = 86_400_000_000
-
-
-def q_range_join_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyed interval (range) join: events fall into per-order
-    promotional windows (start/end synthesized from order keys into the
-    events' own epoch), matched on a shared customer hash.  The naive
-    plan is a non-equi BroadcastNestedLoopJoin; the bucketed equi-join
-    (``operators/relational.py:interval_join``) fixes that for
-    pair-level consumers, and since THIS query only aggregates counts
-    it rides the merge-sweep counting specialization
-    (``interval_event_counts``) — no pair materialization at all.
-    Counts only, so the oracle hash stays integer."""
-    from fink_broker_spark.operators.relational import interval_event_counts
-
-    ev = load_table(spark, sf_dir, "events").select(
-        (F.col("user_id") % 50).alias("k"), "ts"
-    )
-    start_us = (
-        F.lit(_EPOCH_2024_US)
-        + (F.col("o_orderkey") % 29).cast("long") * F.lit(_DAY_US)
-    )
-    end_us = (
-        start_us
-        + (F.col("o_orderkey") % 3 + 1).cast("long") * F.lit(_DAY_US)
-    )
-    windows = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderpriority",
-        (F.col("o_custkey") % 50).alias("k"),
-        F.timestamp_micros(start_us).alias("w_start"),
-        F.timestamp_micros(end_us).alias("w_end"),
-    )
-    # counting specialization (optimization guide §8): the query needs
-    # only per-priority pair COUNTS, so the merge-sweep running count
-    # replaces the bucketed pair join — the pair join materialized
-    # ~20M candidate rows at sf0.1 (its output ≈ the matches) where the
-    # sweep shuffles |events| + 2·|orders| rows once; results provably
-    # identical (exact integer counting; cnt>0 filter reproduces the
-    # inner join's emptiness semantics).  interval_join remains the
-    # plan for pair-level consumers (operators/relational.py).
-    counts = interval_event_counts(
-        ev,
-        windows,
-        "ts",
-        "w_start",
-        "w_end",
-        id_cols=["o_orderkey"],
-        on=["k"],
-        carry=["o_orderpriority"],
-        count_col="__cnt",
-    )
-    return (
-        counts.filter(F.col("__cnt") > 0)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.sum("__cnt").cast("long").alias("n_pairs"),
-            F.countDistinct("o_orderkey").alias("n_orders"),
-        )
-    )
-
-
-ORACLE_RANGE_JOIN_WINDOWS = f"""
-WITH ev AS (
-  SELECT user_id % 50 AS k, ts FROM events
-), w AS (
-  SELECT o_orderkey, o_orderpriority, o_custkey % 50 AS k,
-         make_timestamp({_EPOCH_2024_US} + (o_orderkey % 29) * {_DAY_US})
-           AS w_start,
-         make_timestamp({_EPOCH_2024_US} + (o_orderkey % 29) * {_DAY_US}
-                        + (o_orderkey % 3 + 1) * {_DAY_US}) AS w_end
-  FROM orders
-)
-SELECT w.o_orderpriority,
-       count(*) AS n_pairs,
-       count(DISTINCT w.o_orderkey) AS n_orders
-FROM ev JOIN w ON ev.k = w.k AND ev.ts >= w.w_start AND ev.ts <= w.w_end
-GROUP BY 1
-"""
-
-
-def q_nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape (volume shipping): revenue between two nations by
-    direction and ship year. Exercises the double-dimension join (the
-    nation table joins twice under different roles) with both sides
-    broadcast, an OR-of-conjunctions pair predicate evaluated after the
-    cheap equi-joins, and a multi-column aggregate. The fact table
-    shuffles once (the orders join); every dimension edge is map-side."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    nation = load_table(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name"
-    )
-    n1 = nation.select(
-        F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = nation.select(
-        F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation")
-    )
-    revenue = _dec("l_extendedprice") * (
-        F.lit(1.0).cast("decimal(18,9)") - _dec("l_discount")
-    )
-    pair = (
-        (F.col("supp_nation") == "NATION_3") & (F.col("cust_nation") == "NATION_7")
-    ) | (
-        (F.col("supp_nation") == "NATION_7") & (F.col("cust_nation") == "NATION_3")
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
-        .filter(pair)
-        .groupBy(
-            "supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")
-        )
-        .agg(F.round(F.sum(revenue), 2).cast("double").alias("revenue"))
-    )
-
-
-ORACLE_NATION_TRADE_FLOWS = """
-SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-       EXTRACT(year FROM l_shipdate) AS l_year,
-       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,9)) *
-                (CAST(1.0 AS DECIMAL(18,9)) - CAST(l_discount AS DECIMAL(18,9)))), 2)
-            AS DOUBLE) AS revenue
-FROM lineitem, orders, customer, supplier, nation n1, nation n2
-WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey
-  AND l_suppkey = s_suppkey
-  AND s_nationkey = n1.n_nationkey AND c_nationkey = n2.n_nationkey
-  AND ((n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_7')
-       OR (n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_3'))
-  AND l_shipdate >= TIMESTAMP '1995-01-01'
-  AND l_shipdate < TIMESTAMP '1997-01-01'
-GROUP BY 1, 2, 3
-"""
-
-
-def q_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape (top supplier): per-supplier revenue over a window,
-    then the supplier(s) achieving the maximum. The reference's "view +
-    scalar subquery" idiom becomes an aggregate → 1-row max → broadcast
-    join: the fact table shuffles once on ``l_suppkey``, the max is a
-    single-row broadcast, and the supplier dimension joins map-side.
-    Revenue compares as exact DECIMAL (the double cast happens after the
-    equality), so the max-equality join is deterministic."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
-    )
-    revenue = _dec("l_extendedprice") * (
-        F.lit(1.0).cast("decimal(18,9)") - _dec("l_discount")
-    )
-    rev = li.groupBy("l_suppkey").agg(
-        F.round(F.sum(revenue), 2).alias("rev_dec")
-    )
-    # global max as an empty-partition window over the PER-SUPPLIER
-    # aggregate: the scalar-subquery form recomputed the aggregate
-    # subtree and scanned lineitem twice. The single-partition window
-    # is bounded by supplier cardinality (a 2-column row per supplier),
-    # not fact rows — the right trade at any realistic scale.
-    mx = F.max("rev_dec").over(Window.partitionBy())
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        rev.withColumn("mx", mx)
-        .filter(F.col("rev_dec") == F.col("mx"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == supp.s_suppkey)
-        .select(
-            "s_suppkey",
-            "s_name",
-            F.col("rev_dec").cast("double").alias("total_rev"),
-        )
-    )
-
-
-ORACLE_TOP_SUPPLIER_REVENUE = """
-WITH rev AS (
-  SELECT l_suppkey,
-         ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,9)) *
-               (CAST(1.0 AS DECIMAL(18,9)) - CAST(l_discount AS DECIMAL(18,9)))), 2)
-         AS rev_dec
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-    AND l_shipdate < TIMESTAMP '1996-04-01'
-  GROUP BY l_suppkey
-)
-SELECT s_suppkey, s_name, CAST(rev_dec AS DOUBLE) AS total_rev
-FROM rev JOIN supplier ON s_suppkey = l_suppkey
-WHERE rev_dec = (SELECT MAX(rev_dec) FROM rev)
-"""
-
-
-def q_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape (large-volume orders): orders whose total quantity
-    exceeds a threshold, enriched with customer. The HAVING runs *before*
-    any wide row is materialized: the lineitem aggregate carries only
-    (orderkey, qty), survivors semi-select into orders, and customer
-    broadcasts — at 100 TB the big table shuffles one narrow aggregate,
-    never the joined row."""
-    li = load_table(spark, sf_dir, "lineitem")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.round(F.sum(_dec("l_quantity")), 2).alias("qty_dec"))
-        .filter(F.col("qty_dec") > 300)
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    return (
-        big.join(orders, big.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .select(
-            "c_custkey",
-            "c_name",
-            "o_orderkey",
-            "o_totalprice",
-            F.col("qty_dec").cast("double").alias("total_qty"),
-        )
-    )
-
-
-ORACLE_LARGE_ORDERS = """
-SELECT c_custkey, c_name, o_orderkey, o_totalprice,
-       CAST(qty_dec AS DOUBLE) AS total_qty
-FROM (
-  SELECT l_orderkey,
-         ROUND(SUM(CAST(l_quantity AS DECIMAL(18,9))), 2) AS qty_dec
-  FROM lineitem GROUP BY l_orderkey HAVING qty_dec > 300
-) JOIN orders ON o_orderkey = l_orderkey
-  JOIN customer ON c_custkey = o_custkey
-"""
-
-
-def q_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 shape (suppliers who kept orders waiting): count, per
-    supplier, the multi-supplier orders where that supplier was the ONLY
-    late one. The correlated EXISTS/NOT-EXISTS pair of the original
-    becomes one narrow per-order aggregate (distinct suppliers, distinct
-    late suppliers) joined back to the distinct late rows — two shuffles
-    on ``l_orderkey``, both on 2-3 column rows, instead of two
-    fact×fact correlated scans."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_shipdate"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate"
-    )
-    j = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
-        "l_orderkey",
-        "l_suppkey",
-        (
-            F.col("l_shipdate")
-            > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
-        ).alias("late"),
-    )
-    # per-order distinct-supplier counts as windowed collect_set sizes
-    # (bounded by suppliers-per-order, a handful): the aggregate+join
-    # form referenced the fact join twice, scanning lineitem AND orders
-    # twice each. One scan, one orderkey shuffle, then the distinct.
-    # (r10: A/B'd a single groupBy(collect_set×2)+element_at rewrite —
-    # warm 1.3-1.9 s vs 1.0-1.2 s for this form; the ObjectHashAggregate
-    # set state loses to the window's one per-partition sort here, so
-    # the window form stays.)
-    w = Window.partitionBy("l_orderkey")
-    counted = j.withColumn(
-        "n_supp", F.size(F.collect_set("l_suppkey").over(w))
-    ).withColumn(
-        "n_late",
-        F.size(
-            F.collect_set(
-                F.when(F.col("late"), F.col("l_suppkey"))
-            ).over(w)
-        ),
-    )
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        counted.filter(
-            F.col("late") & (F.col("n_supp") > 1) & (F.col("n_late") == 1)
-        )
-        .select("l_orderkey", "l_suppkey")
-        .distinct()
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-    )
-
-
-ORACLE_SOLE_LATE_SUPPLIER = """
-WITH j AS (
-  SELECT l_orderkey, l_suppkey,
-         (l_shipdate > o_orderdate + INTERVAL 60 DAY) AS late
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-), po AS (
-  SELECT l_orderkey,
-         COUNT(DISTINCT l_suppkey) AS n_supp,
-         COUNT(DISTINCT CASE WHEN late THEN l_suppkey END) AS n_late
-  FROM j GROUP BY l_orderkey
-)
-SELECT s_name, COUNT(*) AS numwait
-FROM (SELECT DISTINCT l_orderkey, l_suppkey FROM j WHERE late) lr
-JOIN po USING (l_orderkey)
-JOIN supplier ON s_suppkey = l_suppkey
-WHERE n_supp > 1 AND n_late = 1
-GROUP BY s_name
-"""
-
-
-def q_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape (small-quantity-order revenue): lineitems of one
-    brand whose quantity is below 20% of that part's average. The
-    correlated scalar subquery becomes a per-part (count, sum) aggregate
-    joined back; the fractional-average predicate cross-multiplies to
-    exact DECIMAL integer arithmetic (``5·qty·cnt < sum``, since
-    0.2 = 1/5) so no engine's division rounding can flip a boundary
-    row. The brand filter pushes to the part scan and shrinks the join's
-    build side to one brand before any wide row exists."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").filter(
-        F.col("p_brand") == "Brand#2"
-    )
-    # per-part (count, sum) as an unbounded window over the
-    # brand-filtered join: the aggregate-join form scanned lineitem
-    # TWICE (and aggregated over every part before the brand join
-    # pruned); the window sees one brand's lineitems once, partitioned
-    # on the part key. A part's window holds exactly its lineitems, so
-    # the stats are identical to the whole-table aggregate.
-    w = Window.partitionBy("l_partkey")
-    branded = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-    qualifying = (
-        branded.withColumn("cnt", F.count(F.lit(1)).over(w))
-        .withColumn("sq", F.sum(_dec("l_quantity")).over(w))
-        .filter(
-            _dec("l_quantity") * F.col("cnt") * F.lit(5) < F.col("sq")
-        )
-    )
-    return qualifying.agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        # round the exact sum FIRST, divide in double: Spark divides
-        # decimals exactly (HALF_UP) while DuckDB divides in double, so
-        # a sum/7 quotient landing on a half at scale 2 would split the
-        # engines; double division of the scale-2 sum is correctly
-        # rounded on both
-        (F.round(F.sum(_dec("l_extendedprice")), 2).cast("double")
-         / F.lit(7.0))
-        .alias("avg_yearly"),
-    )
-
-
-ORACLE_SMALL_QUANTITY_REVENUE = """
-WITH pa AS (
-  SELECT l_partkey AS pk, COUNT(*) AS cnt,
-         SUM(CAST(l_quantity AS DECIMAL(18,9))) AS sq
-  FROM lineitem GROUP BY 1
-)
-SELECT COUNT(*) AS n_lines,
-       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,9))), 2)
-            AS DOUBLE) / 7.0 AS avg_yearly
-FROM lineitem l
-JOIN part p ON p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#2'
-JOIN pa ON l.l_partkey = pa.pk
-WHERE CAST(l.l_quantity AS DECIMAL(18,9)) * cnt * 5 < sq
-"""
-
-
-def q_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape (global sales opportunity): customers with
-    above-average positive balance and no recent order, grouped by
-    nation. The scalar AVG subquery is re-expressed cross-multiplied in
-    exact DECIMAL (``bal * n_pos > sum_pos``) so neither engine's
-    double-summation order can flip a boundary row; the recency check is
-    a left-anti join against the date-filtered orders scan (predicate
-    pushed to the orders parquet)."""
-    cust = load_table(spark, sf_dir, "customer")
-    pos = cust.filter(F.col("c_acctbal") > 0).agg(
-        F.sum(_dec("c_acctbal")).alias("sum_pos"),
-        F.count(F.lit(1)).alias("n_pos"),
-    )
-    recent = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp"))
-        .select("o_custkey")
-    )
-    return (
-        cust.crossJoin(F.broadcast(pos))
-        .filter(_dec("c_acctbal") * F.col("n_pos") > F.col("sum_pos"))
-        .join(recent, cust.c_custkey == recent.o_custkey, "left_anti")
-        .groupBy("c_nationkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_cust"),
-            F.round(F.sum(_dec("c_acctbal")), 2)
-            .cast("double")
-            .alias("total_bal"),
-        )
-    )
-
-
-ORACLE_IDLE_CUSTOMERS = """
-SELECT c_nationkey, COUNT(*) AS n_cust,
-       CAST(ROUND(SUM(CAST(c_acctbal AS DECIMAL(18,9))), 2) AS DOUBLE)
-         AS total_bal
-FROM customer
-WHERE CAST(c_acctbal AS DECIMAL(18,9)) *
-        (SELECT COUNT(*) FROM customer WHERE c_acctbal > 0)
-      > (SELECT SUM(CAST(c_acctbal AS DECIMAL(18,9)))
-         FROM customer WHERE c_acctbal > 0)
-  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-                  AND o_orderdate >= TIMESTAMP '2000-01-01')
-GROUP BY c_nationkey
-"""
-
-
-def q_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skyline / Pareto frontier over the part dimension: parts no other
-    part dominates (cheaper-or-equal AND bigger-or-equal, strict in one).
-    The naive formulation is an O(n²) self-join (the oracle keeps it —
-    DuckDB's NOT EXISTS); the engine plan aggregates per size (min price),
-    takes a running min over sizes in descending order (window over ≤50
-    aggregated rows — single-partition by construction, never over the
-    base table), and broadcast-joins the staircase back: dominated iff a
-    strictly-bigger size reaches price ≤ mine, or my own size beats my
-    price strictly. O(n) + tiny-window instead of O(n²) — the shape that
-    survives a 100× part catalog."""
-    part = load_table(spark, sf_dir, "part")
-    # min over raw doubles is order-independent exact (no summation), so
-    # the staircase compares the very same values the oracle compares
-    per_size = part.groupBy("p_size").agg(
-        F.min("p_retailprice").alias("m_eq")
-    )
-    w = Window.orderBy(F.col("p_size").desc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    staircase = per_size.select(
-        "p_size", "m_eq", F.min("m_eq").over(w).alias("m_gt")
-    )
-    return (
-        part.join(F.broadcast(staircase), "p_size")
-        .filter(
-            ~(
-                (
-                    F.col("m_gt").isNotNull()
-                    & (F.col("m_gt") <= F.col("p_retailprice"))
-                )
-                | (F.col("m_eq") < F.col("p_retailprice"))
-            )
-        )
-        .select("p_partkey", "p_name", "p_size", "p_retailprice")
-    )
-
-
-ORACLE_PARETO_FRONTIER = """
-SELECT p_partkey, p_name, p_size, p_retailprice
-FROM part p
-WHERE NOT EXISTS (
-  SELECT 1 FROM part q
-  WHERE q.p_retailprice <= p.p_retailprice AND q.p_size >= p.p_size
-    AND (q.p_retailprice < p.p_retailprice OR q.p_size > p.p_size)
-)
-"""
-
-
-def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Slowly-changing-dimension (type 2) fold of a change stream: each
-    user's event_type run-length-encodes into validity intervals
-    [valid_from_us, valid_to_us), open interval = NULL. The reference
-    stores only last-state (HBase upsert semantics,
-    ``rubin/hbase_utils.py:677-691``); a training-data lake needs the
-    full history. Two window passes partitioned by user — shuffle once
-    on user_id, both windows reuse the same partitioning (one Exchange
-    in the plan)."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        nanos_to_micros("ts_ns").alias("ts_us"),
-        "event_type",
-    )
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    chg = ev.withColumn("prev", F.lag("event_type").over(w)).filter(
-        F.col("prev").isNull() | (F.col("prev") != F.col("event_type"))
-    )
-    return (
-        chg.withColumn("valid_to_us", F.lead("ts_us").over(w))
-        .select(
-            "user_id",
-            "event_type",
-            F.col("ts_us").alias("valid_from_us"),
-            "valid_to_us",
-        )
-    )
-
-
-ORACLE_SCD2_HISTORY = """
-WITH ev AS (
-  SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type FROM events
-), chg AS (
-  SELECT *, lag(event_type) OVER (PARTITION BY user_id
-             ORDER BY ts_us, event_id) AS prev
-  FROM ev
-)
-SELECT user_id, event_type, ts_us AS valid_from_us,
-       lead(ts_us) OVER (PARTITION BY user_id
-            ORDER BY ts_us, event_id) AS valid_to_us
-FROM chg
-WHERE prev IS NULL OR prev <> event_type
-"""
-
-
-def q_cdc_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Change-data-capture fold: signed deltas (purchase +value,
-    error −value, rest 0) net out per user; only users with a non-zero
-    net survive. One map-side-combinable aggregate over the log — the
-    upsert-free way to maintain a running account from an append-only
-    stream, exact in DECIMAL."""
-    ev = load_table(spark, sf_dir, "events")
-    delta = (
-        F.when(F.col("event_type") == "purchase", _dec("value"))
-        .when(F.col("event_type") == "error", -_dec("value"))
-        .otherwise(F.lit(0).cast("decimal(18,9)"))
-    )
-    return (
-        ev.groupBy("user_id")
-        .agg(
-            F.round(F.sum(delta), 2).alias("net_dec"),
-            F.count(F.when(F.col("event_type") == "purchase", 1)).alias(
-                "n_add"
-            ),
-            F.count(F.when(F.col("event_type") == "error", 1)).alias("n_sub"),
-        )
-        .filter(F.col("net_dec") != 0)
-        .select(
-            "user_id",
-            F.col("net_dec").cast("double").alias("net_value"),
-            "n_add",
-            "n_sub",
-        )
-    )
-
-
-ORACLE_CDC_FOLD = """
-SELECT user_id, CAST(net_dec AS DOUBLE) AS net_value, n_add, n_sub
-FROM (
-  SELECT user_id,
-         ROUND(SUM(CASE WHEN event_type = 'purchase'
-                        THEN CAST(CASE WHEN isfinite(value) THEN value END AS DECIMAL(18,9))
-                        WHEN event_type = 'error'
-                        THEN -CAST(CASE WHEN isfinite(value) THEN value END AS DECIMAL(18,9))
-                        ELSE CAST(0 AS DECIMAL(18,9)) END), 2) AS net_dec,
-         COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS n_add,
-         COUNT(CASE WHEN event_type = 'error' THEN 1 END) AS n_sub
-  FROM events GROUP BY user_id
-) WHERE net_dec <> 0
-"""
-
-
-def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TF-IDF-shaped term salience over the documents corpus: tokenize →
-    per-(doc, term) frequency → document frequency → top-3 terms per doc.
-
-    The plan is the 100 TB shape: the token explode never materializes
-    past its map stage (map-side combine folds it into the (doc, word)
-    aggregate), document frequency is an unbounded COUNT window over
-    that aggregate partitioned by word — NOT a groupBy + self-join,
-    which would scan and aggregate the token table twice (measured: the
-    join formulation planned 5 exchanges with a duplicated aggregate
-    subtree; this one plans 3 with a single scan) — and the ranking
-    window partitions by doc. Ranking uses the exact lexicographic key
-    (tf DESC, df ASC, word) rather than ``tf·ln(N/df)`` because JVM
-    ``StrictMath.log`` and C ``libm`` may differ in the last ulp — same
-    ordering intent, hash-exact across engines."""
-    docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("word"),
-    ).filter(F.length("word") >= 4)
-    tf = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
-    tf = tf.withColumn(
-        "df_docs", F.count(F.lit(1)).over(Window.partitionBy("word"))
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("tf").desc(), F.col("df_docs").asc(), F.col("word").asc()
-    )
-    return (
-        tf.withColumn("rank", F.row_number().over(w))
-        .filter((F.col("rank") <= 3) & (F.col("doc_id") < 200))
-        .select("doc_id", "word", "tf", "df_docs", "rank")
-    )
-
-
-ORACLE_TFIDF_TOPTERMS = """
-WITH words AS (
-  SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+')) AS word
-  FROM documents
-), w2 AS (
-  SELECT doc_id, word FROM words WHERE length(word) >= 4
-), tf AS (
-  SELECT doc_id, word, COUNT(*) AS tf FROM w2 GROUP BY 1, 2
-), dfreq AS (
-  SELECT word, COUNT(*) AS df_docs FROM tf GROUP BY 1
-)
-SELECT doc_id, word, tf, df_docs, rank FROM (
-  SELECT tf.doc_id, tf.word, tf.tf, dfreq.df_docs,
-         row_number() OVER (PARTITION BY tf.doc_id
-             ORDER BY tf.tf DESC, dfreq.df_docs ASC, tf.word ASC) AS rank
-  FROM tf JOIN dfreq USING (word)
-) WHERE rank <= 3 AND doc_id < 200
-"""
-
-
-def q_incremental_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental aggregate maintenance: yesterday's stored partial
-    aggregates merge with today's delta WITHOUT rescanning history —
-    count and decimal sum are mergeable partials (the property every
-    nightly-statistics table should be stored in; the reference
-    recomputes its stats tables from scratch each night,
-    ``bin/ztf/archive_statistics.py``). The query splits events on an
-    id midpoint, aggregates each half independently, merges, and the
-    oracle is the direct full aggregate — proving merge(partials) ≡
-    aggregate(all), the algebra that makes 100 TB stats O(one night)
-    per night."""
-    ev = load_table(spark, sf_dir, "events")
-    mid = 5000
-    half = lambda pred: (  # noqa: E731 — two independent partial aggs
-        ev.filter(pred)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(_dec("value")).alias("sv"),
-        )
-    )
-    partials = half(F.col("event_id") < mid).unionByName(
-        half(F.col("event_id") >= mid)
-    )
-    return (
-        partials.groupBy("event_type")
-        .agg(
-            F.sum("n").alias("n_events"),
-            F.round(F.sum("sv"), 2).cast("double").alias("sum_value"),
-        )
-    )
-
-
-ORACLE_INCREMENTAL_STATS = """
-SELECT event_type, COUNT(*) AS n_events,
-       CAST(ROUND(SUM(CAST(CASE WHEN isfinite(value) THEN value END AS DECIMAL(18,9))), 2) AS DOUBLE)
-         AS sum_value
-FROM events GROUP BY event_type
-"""
-
-
-def q_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edit-distance fuzzy matching: each probe string resolves to its
-    closest supplier name by Levenshtein distance (both engines
-    implement the identical DP, so the integer distances hash-match).
-    The probe side broadcasts (tiny × corpus nested-loop — the honest
-    plan for sub-linear-unfriendly edit distance); the argmin carries a
-    zero-padded ``dist|name`` composite through a plain MIN (one
-    map-side-combinable aggregate, no sort, and unlike min_by the
-    composite form exists identically in both engines). The
-    data-cleaning op every entity-resolution pipeline needs before
-    exact joins apply."""
-    # spread the single-split supplier scan (guide §2.5): the 4×|supplier|
-    # levenshtein DP evaluations below the broadcast NLJ otherwise run in
-    # ONE scan task — r10's bootstrap_ci regime; guarded no-op on a wide
-    # production lake
-    supp = ensure_scan_parallelism(
-        load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    )
-    probes = spark.createDataFrame(
-        [("Supplier#13",), ("Suplier#42",), ("SUPPLIER#7",), ("Supp#0001",)],
-        "probe string",
-    )
-    scored = supp.crossJoin(F.broadcast(probes)).select(
-        "probe",
-        F.format_string(
-            "%08d|%s", F.levenshtein("probe", "s_name"), F.col("s_name")
-        ).alias("k"),
-    )
-    best = scored.groupBy("probe").agg(F.min("k").alias("k"))
-    return best.select(
-        "probe",
-        F.substring("k", 1, 8).cast("int").alias("best_dist"),
-        F.expr("substr(k, 10)").alias("best_name"),
-    )
-
-
-ORACLE_FUZZY_NAME_MATCH = """
-WITH probes(probe) AS (
-  VALUES ('Supplier#13'), ('Suplier#42'), ('SUPPLIER#7'), ('Supp#0001')
-), best AS (
-  SELECT probe,
-         MIN(printf('%08d|%s', levenshtein(probe, s_name), s_name)) AS k
-  FROM supplier CROSS JOIN probes
-  GROUP BY probe
-)
-SELECT probe, CAST(substr(k, 1, 8) AS INT) AS best_dist,
-       substr(k, 10) AS best_name
-FROM best
-"""
-
-
-def q_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group exact-k deterministic 'reservoir': the k rows with the
-    smallest md5(event_id) per event_type. Hash-ordering makes the draw
-    (a) uniform-ish, (b) stable across engines and cluster sizes — the
-    property an audit-reproducible training-data sample needs — and (c)
-    expressible as one partitioned window, no global sort. md5 (not
-    xxhash64) because both engines implement identical RFC 1321 hex
-    digests, so the oracle is exact."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy(
-        F.md5(F.col("event_id").cast("string")), F.col("event_id")
-    )
-    return (
-        ev.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("event_type", "event_id", "user_id", "rk")
-    )
-
-
-ORACLE_RESERVOIR_SAMPLE = """
-SELECT event_type, event_id, user_id, rk FROM (
-  SELECT event_type, event_id, user_id,
-         row_number() OVER (PARTITION BY event_type
-             ORDER BY md5(CAST(event_id AS VARCHAR)), event_id) AS rk
-  FROM events
-) WHERE rk <= 3
-"""
-
-
-def q_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-depth (quantile-bucketed) histogram per event_type: NTILE
-    deciles over (value, event_id) — the tie-break column makes the
-    bucket assignment a total order, so both engines bucket identically.
-    One window partitioned by type + one aggregate; the scale caveat is
-    the per-partition sort inside the window, which is the textbook
-    trade for exact equi-depth (the sketch twin is ``approx_quantiles``)."""
-    # NULL values have no position in a value distribution — and their
-    # ORDER BY placement differs across engines (Spark ASC NULLS FIRST,
-    # DuckDB NULLS LAST), shifting every bucket (driftlab nullmeasure)
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull()
-    )
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    return (
-        ev.withColumn("decile", F.ntile(10).over(w))
-        .groupBy("event_type", "decile")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("value").alias("lo"),
-            F.max("value").alias("hi"),
-        )
-    )
-
-
-ORACLE_EQUIDEPTH_HISTOGRAM = """
-SELECT event_type, decile, COUNT(*) AS n, MIN(value) AS lo, MAX(value) AS hi
-FROM (
-  SELECT event_type, value,
-         ntile(10) OVER (PARTITION BY event_type
-             ORDER BY value, event_id) AS decile
-  FROM events WHERE value IS NOT NULL
-)
-GROUP BY event_type, decile
-"""
-
-
-def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window document chunking (200 chars, 50 overlap) — the
-    standard context-window prep for training/retrieval corpora. The
-    window starts come from ``sequence`` + ``explode`` (pure codegen;
-    output rows ∝ total corpus chars / stride, shuffle-free until the
-    optional downstream dedup), each chunk carries a portable md5
-    fingerprint so cross-engine identity is checkable without shipping
-    the text twice. At 100 TB chunking is a map-only stage — the plan
-    here is exactly that: scan → generate → project, no exchange."""
-    docs = load_table(spark, sf_dir, "documents")
-    stride, size = 150, 200
-    return (
-        docs.select(
-            "doc_id",
-            "text",
-            F.explode(
-                F.sequence(
-                    F.lit(1),
-                    F.greatest(F.length("text"), F.lit(1)),
-                    F.lit(stride),
-                )
-            ).alias("start"),
-        )
-        .withColumn("chunk", F.expr(f"substr(text, start, {size})"))
-        .select(
-            "doc_id",
-            ((F.col("start") - 1) / stride).cast("int").alias("chunk_idx"),
-            F.length("chunk").alias("chunk_chars"),
-            F.md5("chunk").alias("chunk_md5"),
-        )
-    )
-
-
-ORACLE_DOC_CHUNKS = """
-SELECT doc_id,
-       CAST((s - 1) // 150 AS INT) AS chunk_idx,
-       length(substr(text, s, 200)) AS chunk_chars,
-       md5(substr(text, s, 200)) AS chunk_md5
-FROM documents,
-     UNNEST(generate_series(1, greatest(length(text), 1), 150)) AS t(s)
-"""
-
-
-def q_doc_chunks_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same chunking computed by a Spark 4 Python UDTF in a LATERAL
-    join — the §2.12 table-function surface (one input row → N output
-    rows with imperative logic), sharing ``doc_chunks``'s oracle so the
-    twins cannot drift. Python's hashlib md5 over UTF-8 bytes equals
-    both engines' ``md5``; slicing is by code points, matching
-    ``substr`` character semantics. The declarative sequence+explode
-    form remains the recommended plan (codegen, no Python workers);
-    this pins the escape hatch's correctness for logic that genuinely
-    needs imperative row expansion."""
-    import hashlib
-
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="chunk_idx int, chunk_chars int, chunk_md5 string")
-    class ChunkUDTF:
-        def eval(self, text: str):
-            if text is None:
-                # mirror the declarative twin: substr/md5 of NULL text
-                # propagate NULL, one placeholder row (nullmeasure lake)
-                yield (0, None, None)
-                return
-            for start in range(0, max(len(text), 1), 150):
-                chunk = text[start : start + 200]
-                yield (
-                    start // 150,
-                    len(chunk),
-                    hashlib.md5(chunk.encode("utf-8")).hexdigest(),
-                )
-
-    spark.udtf.register("chunk_udtf", ChunkUDTF)
-    docs = load_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("__docs_for_udtf")
-    return spark.sql(
-        "SELECT d.doc_id, c.chunk_idx, c.chunk_chars, c.chunk_md5 "
-        "FROM __docs_for_udtf d, LATERAL chunk_udtf(d.text) c"
-    )
-
-
-def q_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus bigram language-model counts: tokenize once, build bigrams
-    IN-ARRAY with higher-order functions (``slice`` + indexed
-    ``transform`` — no posexplode self-join, so the only shuffle is the
-    final count aggregate, map-side combinable), explode, count, keep
-    n ≥ 5. The HOF formulation keeps token arrays inside one codegen
-    stage; the self-join alternative would shuffle the exploded token
-    table twice. Threshold filter instead of global top-k so the result
-    set is total-order-free (hash-exact without tie-breaking)."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower("text"), "[^a-z]+"),
-        lambda x: F.length(x) >= 2,
-    )
-    d = docs.select(F.col("doc_id"), toks.alias("t"))
-    bigrams = F.transform(
-        F.slice(
-            F.col("t"), 1, F.greatest(F.size("t") - 1, F.lit(0))
-        ),
-        lambda x, i: F.concat_ws(" ", x, F.element_at("t", i + 2)),
-    )
-    return (
-        d.select(F.explode(bigrams).alias("bigram"))
-        .groupBy("bigram")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 5)
-    )
-
-
-ORACLE_BIGRAM_COUNTS = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                     x -> length(x) >= 2) AS t
-  FROM documents
-), bg AS (
-  SELECT unnest(list_transform(range(1, greatest(len(t), 1)),
-                               i -> t[i] || ' ' || t[i+1])) AS bigram
-  FROM toks
-)
-SELECT bigram, COUNT(*) AS n FROM bg GROUP BY 1 HAVING n >= 5
-"""
-
-
-def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Morton (Z-order) clustering key over two join dimensions of the
-    fact table, bucketed to show the layout the archive writer would
-    range-partition on (``plans/zorder.py``). The interleave is pure
-    shift/mask arithmetic — whole-stage codegen, identical in the SQL
-    oracle (generated from the same masks, so the twins cannot drift).
-    At 100 TB this key feeds ``repartitionByRange`` so per-file min/max
-    stats prune on BOTH dimensions."""
-    from fink_broker_spark.plans.zorder import zorder_key_expr
-
-    li = load_table(spark, sf_dir, "lineitem")
-    z = zorder_key_expr("l_partkey", "l_suppkey")
-    return (
-        li.select(z.alias("zkey"))
-        .groupBy(F.shiftrightunsigned(F.col("zkey"), 22).alias("zbucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("zkey").alias("z_min"),
-            F.max("zkey").alias("z_max"),
-        )
-    )
-
-
-def _oracle_zorder_layout() -> str:
-    from fink_broker_spark.plans.zorder import zorder_sql
-
-    z = zorder_sql("l_partkey", "l_suppkey")
-    return f"""
-SELECT CAST({z} // 4194304 AS BIGINT) AS zbucket,
-       COUNT(*) AS n_rows,
-       MIN({z}) AS z_min,
-       MAX({z}) AS z_max
-FROM lineitem
-GROUP BY 1
-"""
-
-
-ORACLE_ZORDER_LAYOUT = _oracle_zorder_layout()
-
-
-def q_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The sketch twin of the exact ``percentiles`` query:
-    ``approx_percentile`` (KLL-style mergeable sketch, map-side
-    partials, fixed memory) — the posture that replaces the exact
-    full-sort path at 100 TB (see SCALING.md "Exact percentile is the
-    oracle posture"). Approximate by design → rows-only driver check;
-    the error bound vs the exact quantiles is asserted in
-    ``tests/test_pipeline_ops.py``.
-
-    ROWS-ONLY BY DESIGN, permanently (VERDICT r7 next-round #3
-    decision): the operator's POINT is the engine-specific mergeable
-    sketch — a deterministic portable twin would have to replace the
-    sketch with exact rank arithmetic, which is precisely what the
-    already-oracled ``percentiles`` / ``grid_quantiles`` twins pin.
-    Those cover the semantics; this row covers the 100 TB posture."""
-    ev = load_table(spark, sf_dir, "events")
-    q = ev.groupBy("event_type").agg(
-        F.percentile_approx(
-            "value", F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99)), 10000
-        ).alias("qs"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    return q.select(
-        "event_type",
-        F.col("qs").getItem(0).alias("p50"),
-        F.col("qs").getItem(1).alias("p90"),
-        F.col("qs").getItem(2).alias("p99"),
-        "n",
-    )
-
-
-def q_skew_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-resistant equi-join: events hash to 5 hot keys (20% of the
-    fact table each — the hot-object pathology of any alert archive);
-    ``replicated_skew_join`` salts the fact side and replicates the dim
-    so each hot key spreads over 8 reducers instead of melting one.
-    Result-identical to the plain join by construction (oracle is the
-    plain join)."""
-    from fink_broker_spark.operators.relational import replicated_skew_join
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        (F.col("user_id") % 5).alias("r_regionkey"),
-    )
-    reg = load_table(spark, sf_dir, "region").select(
-        "r_regionkey", "r_name"
-    )
-    joined = replicated_skew_join(
-        ev, reg, on=["r_regionkey"], salt_col="event_id", nsalts=8
-    )
-    return joined.groupBy("r_name").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("user_id").alias("n_users"),
-    )
-
-
-ORACLE_SKEW_JOIN_SALTED = """
-SELECT r.r_name,
-       count(*) AS n_events,
-       count(DISTINCT e.user_id) AS n_users
-FROM events e JOIN region r ON e.user_id % 5 = r.r_regionkey
-GROUP BY 1
-"""
-
-
-def q_tracklet_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped-map clustering (``ztf/tracklet_identification.py:123-334``
-    skeleton): group events by hour ("exposure"), 1-D gap-split clusters
-    on value, keep clusters of ≥2 — summarized per group. The declarative
-    oracle reproduces the gap-split with a running-sum window. Hour
-    granularity mirrors the reference's per-exposure groups (hundreds of
-    rows each) — grouped-map with millions of 2-row groups is the
-    anti-pattern ``applyInPandas`` punishes hardest."""
-    from fink_broker_spark.operators.tracklets import grouped_clusters
-
-    ev = (
-        load_table(spark, sf_dir, "events")
-        # a NULL value cannot cluster (and its pandas NaN would sort
-        # differently from the oracle's NULL — driftlab nullmeasure)
-        .filter(F.col("value").isNotNull())
-        .withColumn("ts_us", nanos_to_micros("ts_ns"))
-        .withColumn(
-            "hour",
-            ((F.col("ts_us") - F.col("ts_us") % 3600000000) / F.lit(3600000000)).cast("long"),
-        )
-        .select("hour", "event_id", "value")
-    )
-    clustered = grouped_clusters(
-        ev, group_col="hour", value_col="value", gap=5.0, min_size=2
-    )
-    return (
-        clustered.groupBy("hour")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count_if(F.col("cluster_id") != "").alias("n_clustered"),
-            F.size(
-                F.array_remove(F.collect_set("cluster_id"), "")
-            ).cast("bigint").alias("n_clusters"),
-        )
-    )
-
-
-ORACLE_TRACKLETS = """
-WITH g AS (
-  SELECT CAST(epoch_us(ts) // 3600000000 AS BIGINT) AS hour, event_id, value
-  FROM events WHERE value IS NOT NULL
-), lagged AS (
-  SELECT hour, value, event_id,
-         lag(value) OVER (PARTITION BY hour ORDER BY value, event_id) AS prev
-  FROM g
-), cid AS (
-  SELECT hour, value, event_id,
-         SUM(CASE WHEN prev IS NULL OR value - prev > 5.0 THEN 1 ELSE 0 END)
-           OVER (PARTITION BY hour ORDER BY value, event_id
-                 ROWS UNBOUNDED PRECEDING) AS cluster
-  FROM lagged
-), sized AS (
-  SELECT hour, cluster, count(*) AS csize FROM cid GROUP BY 1, 2
-)
-SELECT hour,
-       CAST(SUM(csize) AS BIGINT) AS n_rows,
-       CAST(SUM(CASE WHEN csize >= 2 THEN csize ELSE 0 END) AS BIGINT) AS n_clustered,
-       CAST(SUM(CASE WHEN csize >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_clusters
-FROM sized GROUP BY hour
-"""
-
-
-def q_tracklet_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's tracklet locus candidate cut
-    (``ztf/tracklet_identification.py:30-82``) over events-derived alert
-    analogs: dmag/distance columns are pure arithmetic on table columns,
-    the predicate is one Column expression (pushed to the scan), and the
-    whole pipeline is ANSI-transcribable for the oracle."""
-    from fink_broker_spark.operators.tracklets import tracklet_candidate_cut
-
-    # value pinned to DOUBLE: decimal % double modulo trees differ
-    # between engines (decimalprice driftlab layout, r6)
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "value", F.col("value").cast("double")
-    )
-    staged = ev.select(
-        "event_type",
-        (F.abs(F.col("value")) % 3.0 + F.lit(0.01)).alias("distnr"),
-        (F.lit(15.0) + (F.col("user_id") % 70) / 10.0).alias("magnr"),
-        (F.lit(15.0) + (F.col("event_id") % 80) / 10.0).alias("magpsf"),
-        F.when(F.col("event_id") % 11 == 0, F.lit("12345"))
-        .otherwise(F.lit("null"))
-        .alias("ssnamenr"),
-        (F.lit(1) + F.col("event_id") % 3).cast("int").alias("ndethist"),
-        F.when(F.col("value") >= 0, F.lit("t")).otherwise(F.lit("f")).alias(
-            "isdiffpos"
-        ),
-    )
-    kept = staged.filter(
-        tracklet_candidate_cut(
-            F.col("distnr"),
-            F.col("magnr"),
-            F.col("magpsf"),
-            ssnamenr=F.col("ssnamenr"),
-            ndethist=F.col("ndethist"),
-            isdiffpos=F.col("isdiffpos"),
-        )
-    )
-    return kept.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_candidates"),
-        F.min("distnr").alias("min_distnr"),
-        F.max("distnr").alias("max_distnr"),
-    )
-
-
-ORACLE_TRACKLET_CANDIDATES = """
--- CAST AS DOUBLE mirrors the operator's pinned staging
--- (decimalprice driftlab layout, r6)
-WITH ev AS (
-  SELECT event_type, event_id, user_id, CAST(value AS DOUBLE) AS value
-  FROM events
-), staged AS (
-  SELECT event_type,
-         abs(value) % 3.0 + 0.01 AS distnr,
-         15.0 + (user_id % 70) / 10.0 AS magnr,
-         15.0 + (event_id % 80) / 10.0 AS magpsf,
-         CASE WHEN event_id % 11 = 0 THEN '12345' ELSE 'null' END AS ssnamenr,
-         CAST(1 + event_id % 3 AS INTEGER) AS ndethist,
-         CASE WHEN value >= 0 THEN 't' ELSE 'f' END AS isdiffpos
-  FROM ev
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_candidates,
-       min(distnr) AS min_distnr,
-       max(distnr) AS max_distnr
-FROM staged
-WHERE ssnamenr = 'null' AND ndethist = 1 AND isdiffpos = 't'
-  -- COALESCE mirrors tracklet_candidate_cut's numpy-edge semantics:
-  -- an unevaluable locus (NULL magnr from a NULL-FK user_id) KEEPS the
-  -- row, it does not NULL-drop it (nullfk driftlab layout, r6)
-  AND NOT COALESCE((magnr - magpsf) < 1.0
-           AND (magnr - magpsf) < -4.0 * (log10(distnr) + 0.2)
-           AND distnr < 2.0, FALSE)
-GROUP BY event_type
-"""
-
-
-def q_sky_tracklets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Great-circle tracklet extraction
-    (``ztf/tracklet_identification.py:123-334``): deterministic sky
-    tracks are constructed from event rows (8 points per track, 10-arcsec
-    spacing, per-track slope), grouped into 4 "exposures", and the
-    grouped-map extractor must recover exactly the constructed
-    memberships — which the oracle recomputes declaratively (a tracklet
-    == a constructed track with ≥5 points). Bounded input (top-2400 by
-    event_id → TakeOrderedAndProject) mirrors the bounded-exposure
-    assumption of the reference; the O(n³) candidate stage is pruned by
-    ``max_pair_sep_deg`` to the physical tracklet length."""
-    from fink_broker_spark.operators.tracklets import great_circle_tracklets
-
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .select("event_id", "user_id")
-        .orderBy("event_id")
-        .limit(2400)
-    )
-    trk = (F.col("user_id") % 40).alias("trk")
-    w = Window.partitionBy("trk").orderBy("event_id")
-    pts = (
-        ev.select("event_id", trk)
-        .withColumn("idx", F.row_number().over(w) - 1)
-        .filter(F.col("idx") < 8)
-    )
-    dt = (F.col("idx") - 3.5) * (10.0 / 3600.0)
-    slope = ((F.col("trk") % 5) - 2) / 4.0
-    sky = pts.select(
-        "event_id",
-        (F.col("trk") % 4).cast("bigint").alias("exposure"),
-        (F.col("trk") * 3.0 + dt).alias("ra"),
-        (((F.col("trk") * 7) % 121) - 60 + dt * slope).alias("dec"),
-    )
-    labeled = great_circle_tracklets(
-        sky, "exposure", max_pair_sep_deg=0.1
-    ).filter(F.col("tracklet") != "")
-    return labeled.groupBy("exposure", "tracklet").agg(
-        F.count(F.lit(1)).alias("n_members"),
-        F.min("event_id").alias("lo_event"),
-        F.max("event_id").alias("hi_event"),
-    ).select("exposure", "n_members", "lo_event", "hi_event")
-
-
-ORACLE_SKY_TRACKLETS = """
-WITH bounded AS (
-  SELECT event_id, user_id FROM events ORDER BY event_id LIMIT 2400
-), ranked AS (
-  SELECT event_id, user_id % 40 AS trk,
-         row_number() OVER (PARTITION BY user_id % 40 ORDER BY event_id) AS rn
-  FROM bounded
-)
-SELECT CAST(trk % 4 AS BIGINT) AS exposure,
-       CAST(count(*) AS BIGINT) AS n_members,
-       CAST(min(event_id) AS BIGINT) AS lo_event,
-       CAST(max(event_id) AS BIGINT) AS hi_event
--- trk IS NOT NULL: a NULL-FK user_id yields NULL ra/dec points, which
--- can never sit on a great circle within tolerance — the extractor
--- finds no tracklet for them, so the declarative twin must not count
--- one (nullfk driftlab layout, r6)
-FROM ranked WHERE rn <= 8 AND trk IS NOT NULL
-GROUP BY trk
-HAVING count(*) >= 5
-"""
-
-
-# --------------------------------------------------------------------------
-# ext — multimodal binary columns; streaming dedup (rows-only)
-# --------------------------------------------------------------------------
-
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-payload plumbing (cutout struct family,
-    ``bin/ztf/distribute.py:89-95``): pack → audit columns. Length and
-    sha256 are JVM built-ins over the packed bytes (``mapInPandas`` is
-    reserved for the actual feature extraction, which can't be pruned
-    inside a Python batch fn — see ``ext/multimodal.extract_features``,
-    covered in pytest). The oracle checks the relational surface."""
-    from fink_broker_spark.ext.multimodal import pack_media
-
-    # examined r11, left UNSPREAD: a §2.5 round-robin spread of the
-    # events scan measured SLOWER warm (0.21 → 0.35 s interleaved A/B at
-    # sf0.1) — the exchange moves the binary payload itself, which costs
-    # more than parallelizing the cheap sha256; the driver's 3.17 s
-    # sample was a contention spike (0.27 s on a quiet host)
-    ev = load_table(spark, sf_dir, "events")
-    media = pack_media(
-        ev, "event_id", F.col("props").cast("binary"), kind="blob"
-    )
-    return media.select(
-        "media_id",
-        F.col("media.n_bytes").alias("n_bytes"),
-        F.sha2(F.col("media.data"), 256).alias("content_sha256"),
-    )
-
-
-ORACLE_MULTIMODAL = """
-SELECT event_id AS media_id,
-       CAST(octet_length(encode(props)) AS INTEGER) AS n_bytes,
-       sha256(props) AS content_sha256
-FROM events
-"""
-
-
-def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked streaming dedup (the §2.11 extension). Stateful
-    streaming op → rows-only driver check; batch-equivalence is asserted
-    in tests/test_streaming.py."""
-    from fink_broker_spark.core.time import ensure_event_ts
-    from fink_broker_spark.streaming.dedup import stream_dedup
-
-    configure_session(spark)
-    with _stream_stage(sf_dir, "events") as stage:
-        return replay_to_table(
-            spark,
-            stage,
-            lambda sdf: stream_dedup(
-                ensure_event_ts(sdf).select(
-                    "user_id", "event_type", "ts"
-                ),
-                keys=["user_id", "event_type"],
-                event_time_col="ts",
-                watermark_delay="1 hour",
-            ).drop("ts"),
-            output_mode="append",
-        )
-
-
-# --------------------------------------------------------------------------
-# SURVEY §2.3 — decode/encode round-trip; §2.5/§2.6 extensions
-# --------------------------------------------------------------------------
-
-def q_serialize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wire-format round-trip: struct-wrap → serialize → decode → flatten.
-
-    The reference's distribute protocol (``common/distribution_utils.py:
-    33-140``): all columns wrapped into one struct, serialized to a binary
-    ``value`` with the schema carried alongside as the message ``key``,
-    then decoded back and flattened with ``decoded.*``
-    (``bin/ztf/stream2raw.py:112-127``). Avro is the production codec
-    (``pyspark.sql.avro.functions``); this container lacks the spark-avro
-    datasource jar, so the JSON codec exercises the identical
-    schema-as-key protocol (see ``fink_broker_spark/sinks/kafka.py`` for
-    the gated Avro path). Round-trip is bit-exact for doubles (shortest
-    round-trip rendering).
-    """
-    from fink_broker_spark.sinks.kafka import distribution_cast_plan
-
-    ev = load_table(spark, sf_dir, "events")
-    # spread the single-split scan (guide §2.5): the per-row
-    # to_json/from_json codec ran in the scan stage's one task
-    # (profiled 1.25 s single-task save stage); guarded no-op on a
-    # wide lake.
-    staged = ensure_scan_parallelism(
-        ev.select(
-            "event_id",
-            "ts",
-            F.struct(F.col("user_id"), F.col("event_type")).alias("meta"),
-            F.array(F.col("value")).alias("history"),
-        )
-    )
-    planned = distribution_cast_plan(staged)
-    wrapped = planned.select(F.struct(*planned.columns).alias("payload"))
-    schema_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in wrapped.select("payload.*").schema.fields
-    )
-    wire = wrapped.select(
-        F.to_json("payload").alias("value"),
-        F.lit(schema_ddl).alias("key"),
-    )
-    decoded = wire.select(
-        F.from_json("value", schema_ddl).alias("decoded")
-    ).select("decoded.*")
-    # flatten for the oracle: the string-cast timestamp is compared as
-    # parsed-back epoch micros (string rendering differs across engines)
-    return decoded.select(
-        "event_id",
-        F.unix_micros(F.to_timestamp("ts")).alias("ts_us"),
-        F.col("meta.user_id").alias("user_id"),
-        F.col("meta.event_type").alias("event_type"),
-        F.element_at("history", 1).alias("value"),
-    )
-
-
-ORACLE_SERIALIZE_ROUNDTRIP = """
-SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value
-FROM events
-"""
-
-
-def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-time as-of join: each event picks the user's newest order
-    with ``o_orderdate <= ts`` (union + single key shuffle + running
-    ``last(ignorenulls)`` — no per-key cross product; the two-table
-    generalization of ``rubin/hbase_utils.py:677-691``)."""
-    from fink_broker_spark.operators.relational import asof_join
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts"
-    )
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy("o_custkey", "o_orderdate")
-        .agg(F.max("o_orderkey").alias("last_order_key"))
-        .select(
-            "o_custkey",
-            "o_orderdate",
-            F.col("o_orderdate").alias("last_order_date"),
-            "last_order_key",
-        )
-    )
-    return asof_join(
-        ev,
-        orders,
-        left_on="user_id",
-        right_on="o_custkey",
-        left_time="ts",
-        right_time="o_orderdate",
-        right_values=["last_order_date", "last_order_key"],
-    )
-
-
-ORACLE_ASOF_JOIN = """
-WITH o AS (
-  -- group at MICROSECOND granularity, matching the Spark side's
-  -- load_table-normalized o_orderdate: grouping on the raw (possibly
-  -- nanosecond) timestamp would keep sub-µs-distinct duplicates as
-  -- separate rows whose epoch_us ties make the ASOF pick arbitrary
-  SELECT o_custkey, epoch_us(o_orderdate) AS od_us,
-         MAX(o_orderkey) AS last_order_key
-  FROM orders GROUP BY 1, 2
-)
-SELECT e.event_id, e.user_id, CAST(e.ts AS TIMESTAMP) AS ts,
-       make_timestamp(o.od_us) AS last_order_date,
-       o.last_order_key
-FROM events e
-ASOF LEFT JOIN o ON e.user_id = o.o_custkey
-  AND o.od_us <= epoch_us(e.ts)
-"""
-
-
-def q_healpix_crossmatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HEALPix-bucketed cone crossmatch with exact haversine refine
-    (the production twin of ``cone_crossmatch``'s grid demo; reference
-    ``ztf/science.py:84-197`` + ``common/spark_utils.py:529-609``).
-
-    The oracle is a brute-force cross join with the identical haversine
-    op tree — an *algorithmic* check: the pixel-bucket candidate stage
-    (survey side gets one scan-side pixel, catalog cones explode to
-    their covering pixels, broadcast equi-join on pixel) must lose no
-    pair at radius below the pixel scale. Only pair ids are emitted, so
-    the hash never touches a trig double."""
-    from fink_broker_spark.functions.spatial import healpix_crossmatch
-
-    # the per-row HEALPix pixelization tree runs in the survey scan
-    # stage — spread the single-split scan across cores (guide §2.5;
-    # no-op at scale)
-    survey = ensure_scan_parallelism(
-        load_table(spark, sf_dir, "events").select(
-            "event_id",
-            (((F.col("event_id") * 193) % 3600) / 10.0).alias("ra"),
-            ((((F.col("user_id") * 37) % 1200) / 10.0) - 60.0).alias("dec"),
-        )
-    )
-    catalog = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey",
-        (((F.col("s_suppkey") * 131) % 3600) / 10.0).alias("ra"),
-        ((((F.col("s_suppkey") * 61) % 1200) / 10.0) - 60.0).alias("dec"),
-    )
-    matched = healpix_crossmatch(
-        survey, catalog, radius_deg=2.0, nside=16
-    )
-    return matched.select(
-        "event_id", F.col("r_s_suppkey").alias("s_suppkey")
-    )
-
-
-ORACLE_HEALPIX_CROSSMATCH = """
-WITH survey AS (
-  SELECT event_id,
-         ((event_id * 193) % 3600) / 10.0 AS ra,
-         (((user_id * 37) % 1200) / 10.0) - 60.0 AS dec
-  FROM events
-), cat AS (
-  SELECT s_suppkey,
-         ((s_suppkey * 131) % 3600) / 10.0 AS ra,
-         (((s_suppkey * 61) % 1200) / 10.0) - 60.0 AS dec
-  FROM supplier
-)
-SELECT survey.event_id, cat.s_suppkey
-FROM survey, cat
-WHERE degrees(2.0 * atan2(
-        sqrt(pow(sin((radians(cat.dec) - radians(survey.dec)) / 2), 2)
-             + cos(radians(survey.dec)) * cos(radians(cat.dec))
-               * pow(sin((radians(cat.ra) - radians(survey.ra)) / 2), 2)),
-        sqrt(greatest(0.0, 1.0 - (pow(sin((radians(cat.dec) - radians(survey.dec)) / 2), 2)
-             + cos(radians(survey.dec)) * cos(radians(cat.dec))
-               * pow(sin((radians(cat.ra) - radians(survey.ra)) / 2), 2))))))
-      <= 2.0
-"""
-
-
-def q_xmatch_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``cdsxmatch`` enrichment (``ztf/science.py:84-197``): each alert
-    labeled with its nearest catalog class within 2°, else Unknown —
-    healpix-bucketed candidates, exact refine, deterministic
-    (sep, id) nearest ranking, left join back. Oracle: brute-force
-    cross join + the identical haversine tree + row_number."""
-    from fink_broker_spark.enrich.xmatch import crossmatch_enrich
-
-    # spread the alert scan: pixelization + the haversine refine run in
-    # the scan-side stage of the broadcast join (guide §2.5)
-    alerts = ensure_scan_parallelism(
-        load_table(spark, sf_dir, "events").select(
-            "event_id",
-            (((F.col("event_id") * 193) % 3600) / 10.0).alias("ra"),
-            ((((F.col("user_id") * 37) % 1200) / 10.0) - 60.0).alias("dec"),
-        )
-    )
-    catalog = load_table(spark, sf_dir, "supplier").select(
-        F.col("s_suppkey").alias("cat_id"),
-        (((F.col("s_suppkey") * 131) % 3600) / 10.0).alias("ra"),
-        ((((F.col("s_suppkey") * 61) % 1200) / 10.0) - 60.0).alias("dec"),
-        F.element_at(
-            F.array(F.lit("Star"), F.lit("Galaxy"), F.lit("QSO"), F.lit("YSO")),
-            (F.col("s_suppkey") % 4 + 1).cast("int"),
-        ).alias("main_type"),
-    )
-    out = crossmatch_enrich(alerts, catalog, radius_deg=2.0)
-    return out.select("event_id", "cdsxmatch")
-
-
-ORACLE_XMATCH_ENRICH = """
-WITH alerts AS (
-  SELECT event_id,
-         ((event_id * 193) % 3600) / 10.0 AS ra,
-         (((user_id * 37) % 1200) / 10.0) - 60.0 AS dec
-  FROM events
-), cat AS (
-  SELECT s_suppkey AS cat_id,
-         ((s_suppkey * 131) % 3600) / 10.0 AS ra,
-         (((s_suppkey * 61) % 1200) / 10.0) - 60.0 AS dec,
-         (CASE s_suppkey % 4 WHEN 0 THEN 'Star' WHEN 1 THEN 'Galaxy'
-                             WHEN 2 THEN 'QSO' ELSE 'YSO' END) AS main_type
-  FROM supplier
-), pairs AS (
-  SELECT a.event_id, c.cat_id, c.main_type,
-         degrees(2.0 * atan2(
-           sqrt(pow(sin((radians(c.dec) - radians(a.dec)) / 2), 2)
-                + cos(radians(a.dec)) * cos(radians(c.dec))
-                  * pow(sin((radians(c.ra) - radians(a.ra)) / 2), 2)),
-           sqrt(greatest(0.0, 1.0 - (pow(sin((radians(c.dec) - radians(a.dec)) / 2), 2)
-                + cos(radians(a.dec)) * cos(radians(c.dec))
-                  * pow(sin((radians(c.ra) - radians(a.ra)) / 2), 2)))))) AS sep
-  FROM alerts a, cat c
-), ranked AS (
-  SELECT event_id, main_type,
-         row_number() OVER (PARTITION BY event_id ORDER BY sep, cat_id) AS rn
-  FROM pairs WHERE sep <= 2.0
-)
-SELECT a.event_id,
-       COALESCE(r.main_type, 'Unknown') AS cdsxmatch
-FROM alerts a LEFT JOIN ranked r ON a.event_id = r.event_id AND r.rn = 1
-"""
-
-
-def q_cone_crossmatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cone-search crossmatch via neighbor-cell bucketing + exact refine.
-
-    The reference's crossmatch joins each alert to catalog sources within
-    a max radius by healpix-bucketing the sky (``ztf/science.py:84-197``;
-    pixelization UDF ``common/spark_utils.py:529-609``). Re-expressed on
-    an integer degree grid for oracle exactness: events and a supplier
-    "catalog" get deterministic (x, y) grid coordinates; a match is
-    squared distance ≤ 2.
-
-    100 TB plan: the small catalog is expanded ×9 to its neighbor cells
-    and **broadcast**; candidates come from an equi-join on the cell key
-    (never a cross join), then the exact radius predicate refines — the
-    standard bucket-prune-refine spatial join.
-    """
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        (F.col("event_id") % 360).alias("ex"),
-        ((F.col("user_id") * 7) % 180).alias("ey"),
-    )
-    cat = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey",
-        ((F.col("s_suppkey") * 13) % 360).alias("sx"),
-        ((F.col("s_suppkey") * 29) % 180).alias("sy"),
-    )
-    cat9 = (
-        cat.select("*", F.explode(F.array(*[F.lit(i) for i in (-1, 0, 1)])).alias("dx"))
-        .select("*", F.explode(F.array(*[F.lit(i) for i in (-1, 0, 1)])).alias("dy"))
-        .select(
-            "s_suppkey", "sx", "sy",
-            (F.col("sx") + F.col("dx")).alias("cellx"),
-            (F.col("sy") + F.col("dy")).alias("celly"),
-        )
-    )
-    d2 = (F.col("ex") - F.col("sx")) * (F.col("ex") - F.col("sx")) + (
-        F.col("ey") - F.col("sy")
-    ) * (F.col("ey") - F.col("sy"))
-    return (
-        ev.join(
-            F.broadcast(cat9),
-            (F.col("ex") == F.col("cellx")) & (F.col("ey") == F.col("celly")),
-        )
-        .filter(d2 <= 2)
-        .groupBy("event_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_matches"),
-            F.min("s_suppkey").alias("best_supp"),
-            F.min(d2).alias("min_d2"),
-        )
-    )
-
-
-ORACLE_CONE_CROSSMATCH = """
-WITH ev AS (
-  SELECT event_id, event_id % 360 AS ex, (user_id * 7) % 180 AS ey
-  FROM events
-), cat AS (
-  SELECT s_suppkey, (s_suppkey * 13) % 360 AS sx, (s_suppkey * 29) % 180 AS sy
-  FROM supplier
-)
-SELECT event_id, count(*) AS n_matches, MIN(s_suppkey) AS best_supp,
-       MIN((ex - sx) * (ex - sx) + (ey - sy) * (ey - sy)) AS min_d2
-FROM ev JOIN cat
-  ON abs(ex - sx) <= 1 AND abs(ey - sy) <= 1
- AND (ex - sx) * (ex - sx) + (ey - sy) * (ey - sy) <= 2
-GROUP BY event_id
-"""
-
-
-def q_cube_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE grouping-sets with ``grouping_id`` (free in Spark per SURVEY
-    §2.6 "no cube/rollup in-repo"; the statistics job's natural
-    all-margins generalization)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.grouping_id().cast("int").alias("gid"),
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(_dec("l_quantity")), 2)
-            .cast("double")
-            .alias("sum_qty"),
-        )
-    )
-
-
-ORACLE_CUBE_STATS = """
-SELECT l_returnflag, l_linestatus,
-       CAST(GROUPING(l_returnflag, l_linestatus) AS INTEGER) AS gid,
-       count(*) AS n,
-       CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(18,9))), 2) AS DOUBLE) AS sum_qty
-FROM lineitem
-GROUP BY CUBE (l_returnflag, l_linestatus)
-"""
-
-
-def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS (the hand-picked margin list rollup/cube
-    can't express: (flag,status), (flag), and grand total — but NOT
-    (status)) with grouping_id disambiguating the NULL-keyed margin
-    rows, through the SQL surface."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               CAST(grouping_id(l_returnflag, l_linestatus) AS INTEGER) AS gid,
-               CAST(count(*) AS BIGINT) AS n
-        FROM {li}
-        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-                                (l_returnflag), ())
-        """,
-        li=li,
-    )
-
-
-ORACLE_GROUPING_SETS = """
-SELECT l_returnflag, l_linestatus,
-       CAST(GROUPING(l_returnflag, l_linestatus) AS INTEGER) AS gid,
-       CAST(count(*) AS BIGINT) AS n
-FROM lineitem
-GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-"""
-
-
-def q_explode_outer_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Null-preserving explode: users whose (possibly empty) purchase
-    array still yields a row — ``explode_outer`` vs plain ``explode``,
-    the upper-limit row-preservation idiom of the reference's index
-    tables (``bin/ztf/archive_index.py`` isNull-after-explode). Every
-    7th user's array is emptied by construction so the null-preserving
-    branch provably fires (every user in the lake has purchases —
-    without this the explode/explode_outer distinction would be
-    vacuous)."""
-    ev = load_table(spark, sf_dir, "events")
-    per_user = ev.groupBy("user_id").agg(
-        F.array_sort(
-            F.collect_list(
-                F.when(
-                    (F.col("event_type") == "purchase")
-                    & (F.col("user_id") % 7 != 0),
-                    F.col("event_id"),
-                )
-            )
-        ).alias("purchases")
-    )
-    exploded = per_user.select(
-        "user_id", F.explode_outer("purchases").alias("purchase_id")
-    )
-    return exploded.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count("purchase_id").alias("n_purchases"),
-    )
-
-
-ORACLE_EXPLODE_OUTER = """
-WITH per_user AS (
-  SELECT user_id,
-         list_sort(list(event_id) FILTER (WHERE event_type = 'purchase'
-                                            AND user_id % 7 <> 0))
-           AS purchases
-  FROM events GROUP BY user_id
-), exploded AS (
-  SELECT user_id, unnest(purchases) AS purchase_id FROM per_user
-  WHERE len(purchases) > 0
-  UNION ALL
-  -- DuckDB's filtered list() yields NULL (not []) when nothing matches
-  SELECT user_id, NULL FROM per_user
-  WHERE purchases IS NULL OR len(purchases) = 0
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(count(purchase_id) AS BIGINT) AS n_purchases
-FROM exploded GROUP BY user_id
-"""
-
-
-def q_pivot_recode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot (long → wide): per-user event-type counts as columns.
-    Spark's ``pivot`` with an explicit value list compiles to one
-    aggregation with conditional counts — the same single-shuffle plan
-    the CASE-based oracle spells out (an implicit-pivot would add a
-    distinct-values job; the explicit list keeps it one pass)."""
-    ev = load_table(spark, sf_dir, "events")
-    kinds = ["click", "view", "purchase", "signup", "error"]
-    return (
-        ev.groupBy("user_id")
-        .pivot("event_type", kinds)
-        .agg(F.count(F.lit(1)))
-        .select(
-            "user_id",
-            *[F.coalesce(F.col(k), F.lit(0)).cast("bigint").alias(f"n_{k}") for k in kinds],
-        )
-    )
-
-
-ORACLE_PIVOT_RECODE = """
-SELECT user_id,
-       CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
-       CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS n_view,
-       CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase,
-       CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
-       CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error
-FROM events GROUP BY user_id
-"""
-
-
-def q_unpivot_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unpivot (wide → long) via ``stack`` — the inverse reshape,
-    turning per-row metric columns into (metric, value) rows without a
-    shuffle (a generator projection over the scan)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    long = li.select(
-        "l_orderkey",
-        "l_linenumber",
-        # uniform DOUBLE legs: stack REQUIRES same-typed columns, and a
-        # DECIMAL-typed lake (decimalprice driftlab layout) would mix
-        # decimal prices with a double quantity — an analyzer error
-        F.expr(
-            "stack(3, 'quantity', CAST(l_quantity AS DOUBLE), "
-            "'extendedprice', CAST(l_extendedprice AS DOUBLE), "
-            "'discount', CAST(l_discount AS DOUBLE)) AS (metric, val)"
-        ),
-    )
-    return long.groupBy("metric").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum(F.col("val").cast("decimal(18,9)")), 2)
-        .cast("double")
-        .alias("total"),
-    )
-
-
-ORACLE_UNPIVOT_STACK = """
-WITH long AS (
-  SELECT l_orderkey, l_linenumber, 'quantity' AS metric,
-         CAST(l_quantity AS DOUBLE) AS val FROM lineitem
-  UNION ALL
-  SELECT l_orderkey, l_linenumber, 'extendedprice',
-         CAST(l_extendedprice AS DOUBLE) FROM lineitem
-  UNION ALL
-  SELECT l_orderkey, l_linenumber, 'discount',
-         CAST(l_discount AS DOUBLE) FROM lineitem
-)
-SELECT metric, CAST(count(*) AS BIGINT) AS n,
-       CAST(ROUND(SUM(CAST(val AS DECIMAL(18,9))), 2) AS DOUBLE) AS total
-FROM long GROUP BY metric
-"""
-
-
-def q_schema_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-evolution projection: requested columns that are absent in
-    this night's data come back as typed defaults
-    (``common/hbase_utils.py:66-137``, ``ztf/hbase_utils.py:443-479``)."""
-    from fink_broker_spark.operators.relational import select_with_defaults
-
-    cust = load_table(spark, sf_dir, "customer")
-    return select_with_defaults(
-        cust,
-        {
-            "c_custkey": ("bigint", None),
-            "c_name": ("string", None),
-            "c_phone": ("string", "unknown"),
-            "c_acctbal": ("double", None),
-        },
-    )
-
-
-ORACLE_SCHEMA_DEFAULTS = """
--- CAST mirrors the operator's typed projection: the request pins
--- c_acctbal to DOUBLE regardless of the lake's physical type
--- (decimalprice driftlab layout, r6)
-SELECT c_custkey, c_name, 'unknown' AS c_phone,
-       CAST(c_acctbal AS DOUBLE) AS c_acctbal
-FROM customer
-"""
-
-
-def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-indexed approximate cosine top-k (scale path beside the
-    brute-force baseline; recall vs exact asserted in tests/test_ext.py).
-    Rows-only driver check: cell probing is index-dependent."""
-    from fink_broker_spark.ext.ann import EmptyCorpusError, ivf_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    try:
-        out = ivf_topk(
-            emb, emb.filter(F.col("vec_id") < 10), k=5, nlist=16, nprobe=4
-        )
-    except EmptyCorpusError:
-        # "first night" lake (driftlab emptystream): no vectors, no
-        # index to fit — the answer is an empty top-k, not a crash
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, cosine double, rnk int"
-        )
-    return out.select(
-        "query_id", "vec_id", "cosine", F.col("rank").cast("int").alias("rnk")
-    )
-
-
-def q_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ building block: product-quantized ADC shortlist + exact
-    cosine re-rank (``ext/ann.py:pq_topk``). The memory-bound scale
-    path — codes are ~32× smaller than the float vectors, the scored
-    scan never touches the embeddings, and only |queries|·refine
-    vectors are read exactly. Rows-only driver check (codebook fit is
-    engine-specific); recall ≥ 0.6 and the refine=n ≡ brute-force
-    equality are asserted in tests/test_ext.py; the PQ SEMANTICS are
-    pinned exact-value by the ``pq_ann_portable`` twin."""
-    from fink_broker_spark.ext.ann import (
-        EmptyCorpusError,
-        pq_codebooks,
-        pq_topk,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    try:
-        books = pq_codebooks(emb, m=8, ncodes=16, sample_size=1024)
-    except EmptyCorpusError:
-        # empty lake: no codebooks to fit, no neighbors (emptystream)
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, cosine double, rnk int"
-        )
-    out = pq_topk(
-        emb, emb.filter(F.col("vec_id") < 10), books, k=5, refine=50
-    )
-    return out.select(
-        "query_id", "vec_id", "cosine", F.col("rank").cast("int").alias("rnk")
-    )
-
-
-def q_range_frame_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-based RANGE-frame sliding aggregate: each event sees its
-    user's trailing-1-hour event count and decimal-exact value sum —
-    the moving-average family tumbling windows can't express (every row
-    gets its own trailing horizon, not a shared bucket). RANGE frames
-    over epoch seconds; count is frame-size-exact under ties because
-    RANGE includes all peer rows."""
-    ev = load_table(spark, sf_dir, "events")
-    staged = ev.select(
-        "event_id",
-        "user_id",
-        F.floor(nanos_to_micros("ts_ns") / 1000000).cast("bigint").alias("ts_s"),
-        F.col("value").cast("decimal(18,9)").alias("val"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts_s")
-        .rangeBetween(-3600, Window.currentRow)
-    )
-    return staged.select(
-        "event_id",
-        "user_id",
-        F.count(F.lit(1)).over(w).cast("bigint").alias("n_trailing_1h"),
-        F.round(F.sum("val").over(w), 2).cast("double").alias("sum_trailing_1h"),
-    )
-
-
-ORACLE_RANGE_FRAME = """
-WITH staged AS (
-  SELECT event_id, user_id,
-         CAST(epoch_us(ts) // 1000000 AS BIGINT) AS ts_s,
-         CAST(CASE WHEN isfinite(value) THEN value END AS DECIMAL(18,9)) AS val
-  FROM events
-)
-SELECT event_id, user_id,
-       CAST(count(*) OVER w AS BIGINT) AS n_trailing_1h,
-       CAST(ROUND(SUM(val) OVER w, 2) AS DOUBLE) AS sum_trailing_1h
-FROM staged
-WINDOW w AS (PARTITION BY user_id ORDER BY ts_s
-             RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
-"""
-
-
-def q_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking/offset window family (rank, dense_rank, ntile, lag) —
-    beyond the reference's single unbounded-max window (§2.7), free in
-    Spark; top-3 orders per customer by price. Unique ``o_orderkey``
-    tiebreak makes every function deterministic."""
-    orders = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        orders.select(
-            "o_custkey",
-            "o_orderkey",
-            "o_totalprice",
-            F.rank().over(w).cast("int").alias("rnk"),
-            F.dense_rank().over(w).cast("int").alias("drnk"),
-            F.ntile(4).over(w).cast("int").alias("quartile"),
-            F.lag("o_totalprice", 1).over(w).alias("prev_price"),
-        )
-        .filter(F.col("rnk") <= 3)
-    )
-
-
-ORACLE_WINDOW_SUITE = """
-SELECT * FROM (
-  SELECT o_custkey, o_orderkey, o_totalprice,
-         CAST(rank() OVER w AS INTEGER) AS rnk,
-         CAST(dense_rank() OVER w AS INTEGER) AS drnk,
-         CAST(ntile(4) OVER w AS INTEGER) AS quartile,
-         lag(o_totalprice, 1) OVER w AS prev_price
-  FROM orders
-  WINDOW w AS (PARTITION BY o_custkey
-               ORDER BY o_totalprice DESC, o_orderkey ASC)
-) WHERE rnk <= 3
-"""
-
-
-def q_distribution_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution-position window family (percent_rank, cume_dist,
-    nth_value over an explicit running frame) — the remaining §2.7
-    ranking functions ``window_suite`` doesn't carry. Both fractions
-    are exact rationals of (rank, n) so the doubles agree bit-for-bit;
-    the unique event_id tie-break pins every position."""
-    # NULL values excluded: no rank position, and cross-engine ASC NULL
-    # placement differs (driftlab nullmeasure)
-    ev = load_table(spark, sf_dir, "events").filter(
-        (F.col("event_id") < 2000) & F.col("value").isNotNull()
-    )
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    wf = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return ev.select(
-        "event_type",
-        "event_id",
-        "value",
-        F.percent_rank().over(w).alias("pr"),
-        F.cume_dist().over(w).alias("cd"),
-        F.nth_value("value", 2).over(wf).alias("second_low"),
-    )
-
-
-ORACLE_DISTRIBUTION_RANKS = """
-SELECT event_type, event_id, value,
-       percent_rank() OVER w AS pr,
-       cume_dist() OVER w AS cd,
-       nth_value(value, 2) OVER (PARTITION BY event_type
-           ORDER BY value, event_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS second_low
-FROM events
-WHERE event_id < 2000 AND value IS NOT NULL
-WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id)
-"""
-
-
-def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Percentiles per group via the size-gated exact/approx swap
-    (``archive/statistics.py:grouped_percentiles``): below 1 GB of
-    Catalyst-estimated input the exact ``percentile`` runs (matches
-    ``quantile_cont`` bit-for-bit — the driver scale); above it, the
-    3-key group would funnel EVERY value of the column into 3 unbounded
-    aggregation states, so the gate swaps in ``percentile_approx``
-    (bounded, mergeable Greenwald–Khanna state — the 100 TB path).
-    The oracle stays exact: driver scale is under the gate."""
-    from fink_broker_spark.archive.statistics import grouped_percentiles
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return grouped_percentiles(
-        li,
-        ["l_returnflag"],
-        {
-            "p50_price": ("l_extendedprice", 0.5),
-            "p90_price": ("l_extendedprice", 0.9),
-            "p50_qty": ("l_quantity", 0.5),
-        },
-    )
-
-
-ORACLE_PERCENTILES = """
--- CAST AS DOUBLE mirrors the operator: on a DECIMAL-typed lake,
--- quantile_cont would otherwise interpolate in decimal and round the
--- midpoint to the column scale (decimalprice driftlab layout, r6)
-SELECT l_returnflag,
-       quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.5) AS p50_price,
-       quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.9) AS p90_price,
-       quantile_cont(CAST(l_quantity AS DOUBLE), 0.5) AS p50_qty
-FROM lineitem GROUP BY l_returnflag
-"""
-
-
-def q_filter_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribute-stage fan-out (``bin/ztf/distribute.py:47-50,167-200``):
-    named boolean filters, one substream per filter, all sharing one
-    upstream scan; here each substream reduces to (topic, n, sum) so the
-    fan-out result is one small union."""
-    from fink_broker_spark.distribute.fanout import FilterRegistry, fan_out
-
-    ev = load_table(spark, sf_dir, "events")
-    reg = (
-        FilterRegistry()
-        .register("high_value", lambda df: F.col("value") > 75.0)
-        .register("purchases", lambda df: F.col("event_type") == "purchase")
-        .register(
-            "errors_low",
-            lambda df: (F.col("event_type") == "error")
-            & (F.col("value") < 10.0),
-        )
-    )
-    parts = fan_out(
-        ev,
-        reg,
-        sink=lambda topic, fdf: fdf.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(_dec("value")), 2).cast("double").alias("sum_value"),
-        ).select(F.lit(topic).alias("topic"), "n", "sum_value"),
-    )
-    out = None
-    for name in sorted(parts):
-        out = parts[name] if out is None else out.unionByName(parts[name])
-    return out
-
-
-ORACLE_FILTER_FANOUT = """
-SELECT 'errors_low' AS topic, count(*) AS n,
-       CAST(ROUND(SUM(CAST(CASE WHEN isfinite(value) THEN value END AS DECIMAL(18,9))), 2) AS DOUBLE) AS sum_value
-FROM events WHERE event_type = 'error' AND value < 10.0
-UNION ALL
-SELECT 'high_value', count(*),
-       CAST(ROUND(SUM(CAST(CASE WHEN isfinite(value) THEN value END AS DECIMAL(18,9))), 2) AS DOUBLE)
-FROM events WHERE value > 75.0
-UNION ALL
-SELECT 'purchases', count(*),
-       CAST(ROUND(SUM(CAST(CASE WHEN isfinite(value) THEN value END AS DECIMAL(18,9))), 2) AS DOUBLE)
-FROM events WHERE event_type = 'purchase'
-"""
-
-
-def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured extraction: pull a typed field out of a JSON
-    string column and aggregate on it (web-corpus metadata columns are
-    exactly this shape; JVM-side ``get_json_object``, no UDF)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.select(
-            "event_type",
-            F.get_json_object("props", "$.k").cast("int").alias("k"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("k").cast("bigint")).alias("sum_k"),
-            F.max("k").alias("max_k"),
-        )
-    )
-
-
-ORACLE_JSON_EXTRACT = """
-SELECT event_type, count(*) AS n,
-       CAST(SUM(CAST(props ->> 'k' AS BIGINT)) AS BIGINT) AS sum_k,
-       MAX(CAST(props ->> 'k' AS INTEGER)) AS max_k
-FROM events GROUP BY event_type
-"""
-
-
-def q_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 ``VariantType`` semi-structured path (``parse_json`` →
-    binary variant → typed ``variant_get`` with nested/array paths).
-
-    At 100 TB this is the modern replacement for per-access
-    ``get_json_object`` string re-parsing: the document parses ONCE into
-    the binary variant encoding and every path extraction reads the
-    encoded form — the difference compounds with extraction count. The
-    document here is synthesized from typed columns (integers only, so
-    the JSON rendering is engine-independent) and carries a nested
-    object plus an array to exercise ``$.meta.k`` and ``$.ids[1]``
-    paths. The oracle computes straight from the source columns —
-    identical results prove extraction round-trips the values exactly."""
-    ev = load_table(spark, sf_dir, "events")
-    # spread the single-split scan (guide §2.5): parse_json + 3
-    # variant_gets per row are the heaviest per-row CPU in the suite's
-    # JSON family and ran in the scan stage's one task (profiled 3.2 s
-    # single-task stage); guarded no-op on a wide lake.
-    ev = ensure_scan_parallelism(
-        ev.select("props", "event_type", "user_id", "event_id")
-    )
-    doc = F.concat(
-        F.lit('{"meta": '),
-        F.col("props"),
-        F.lit(', "type": "'),
-        F.col("event_type"),
-        F.lit('", "ids": ['),
-        # a NULL user_id renders as JSON null — concat would otherwise
-        # null the whole document and silently drop the row into a NULL
-        # variant group (nullfk driftlab layout, r6)
-        F.coalesce(F.col("user_id").cast("string"), F.lit("null")),
-        F.lit(", "),
-        F.col("event_id").cast("string"),
-        F.lit("]}"),
-    )
-    v = F.parse_json(doc)
-    flat = ev.select(
-        F.variant_get(v, "$.type", "string").alias("vtype"),
-        F.variant_get(v, "$.meta.k", "int").alias("k"),
-        F.variant_get(v, "$.ids[1]", "bigint").alias("eid"),
-    )
-    return flat.groupBy("vtype").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("k").cast("bigint")).alias("sum_k"),
-        F.max("eid").alias("max_event_id"),
-    )
-
-
-ORACLE_VARIANT_JSON = """
-SELECT event_type AS vtype, count(*) AS n,
-       CAST(SUM(CAST(props ->> 'k' AS BIGINT)) AS BIGINT) AS sum_k,
-       MAX(event_id) AS max_event_id
-FROM events GROUP BY event_type
-"""
-
-
-def q_malformed_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Malformed-record tolerance (the decode-stage contract: a bad
-    alert must not kill the night). JSON is corrupted deterministically
-    for every 7th event (leading garbage — Spark's Jackson parser
-    forgives trailing bytes but not a broken prefix); ``from_json`` in
-    PERMISSIVE mode yields NULL structs that are counted and
-    quarantined declaratively — no try/except, no UDF, the scan keeps
-    streaming."""
-    ev = load_table(spark, sf_dir, "events")
-    staged = ev.select(
-        "event_id",
-        "event_type",
-        F.when(
-            F.col("event_id") % 7 == 0, F.concat(F.lit("x{"), F.col("props"))
-        )
-        .otherwise(F.col("props"))
-        .alias("raw"),
-    )
-    decoded = staged.select(
-        "event_id",
-        "event_type",
-        F.from_json(
-            "raw",
-            "k int, _corrupt_record string",
-            {"columnNameOfCorruptRecord": "_corrupt_record"},
-        ).alias("parsed"),
-    )
-    return decoded.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_if(
-            F.col("parsed._corrupt_record").isNotNull()
-        ).alias("n_malformed"),
-        F.sum(F.col("parsed.k").cast("bigint")).alias("sum_k_valid"),
-    )
-
-
-ORACLE_MALFORMED_RECORDS = """
-WITH staged AS (
-  SELECT event_id, event_type,
-         CASE WHEN event_id % 7 = 0 THEN 'x{' || props ELSE props END AS raw
-  FROM events
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(SUM(CASE WHEN json_valid(raw) THEN 0 ELSE 1 END) AS BIGINT) AS n_malformed,
-       CAST(SUM(CASE WHEN json_valid(raw)
-                     THEN CAST(raw ->> 'k' AS BIGINT) ELSE NULL END) AS BIGINT)
-         AS sum_k_valid
-FROM staged GROUP BY event_type
-"""
-
-
-def q_history_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-object history arrays — the reference's core data shape
-    (``prv_candidates: array<struct>``, §1.1): build each user's ordered
-    event history with ``collect_list(struct)`` + ``sort_array``, then
-    process it with array HOFs (``transform``/``filter``/``array_max``/
-    ``element_at``), exactly the idiom of ``rubin/hbase_utils.py:
-    1124-1142`` and the SSO aggregation (``compute_ephemerides.py:57-77``).
-    One shuffle on the object key; history stays packed in the row."""
-    ev = load_table(spark, sf_dir, "events")
-    hist = ev.groupBy("user_id").agg(
-        F.sort_array(
-            F.collect_list(F.struct("ts", "event_id", "value"))
-        ).alias("hist")
-    )
-    values = F.transform("hist", lambda x: x["value"])
-    return hist.select(
-        "user_id",
-        F.size("hist").cast("bigint").alias("n_events"),
-        F.array_max(values).alias("max_value"),
-        F.size(
-            F.filter("hist", lambda x: x["value"] > 90.0)
-        ).cast("bigint").alias("n_high"),
-        F.element_at("hist", -1)["value"].alias("last_value"),
-    )
-
-
-ORACLE_HISTORY_ARRAYS = """
-SELECT user_id,
-       len(hist) AS n_events,
-       list_max(list_transform(hist, x -> x.value)) AS max_value,
-       len(list_filter(hist, x -> x.value > 90.0)) AS n_high,
-       hist[-1].value AS last_value
-FROM (
-  SELECT user_id,
-         list(struct_pack(ts := ts, event_id := event_id, value := value)
-              ORDER BY epoch_us(ts), event_id) AS hist
-  FROM events GROUP BY user_id
-)
-"""
-
-
-def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup *groups*: connected components over the exact Jaccard
-    pair list. Small pair sets are labelled by union-find on the
-    driver; only larger ones run the distributed min-label loop (each
-    round = equi-join + groupBy min), see ``ext.dedup.dedup_groups``.
-    The keeper of each group is its min id — the component label.
-    Oracle: recursive-CTE transitive closure over the same pairs."""
-    from fink_broker_spark.ext.dedup import dedup_groups
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = jaccard_pairs(docs, threshold=0.8, n=3)
-    return dedup_groups(pairs)
-
-
-ORACLE_DEDUP_GROUPS = r"""
-WITH RECURSIVE tok AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
-  FROM documents WHERE length(trim(text)) > 0
-), sh AS (
-  SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS shingle
-  FROM tok, range(1, 100000) t(i) WHERE i <= len(toks) - 2
-), sizes AS (
-  SELECT doc_id, count(*) AS nsh FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-  FROM sh a JOIN sh b USING (shingle)
-  WHERE a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), p AS (
-  SELECT id_a, id_b
-  FROM inter JOIN sizes sa ON sa.doc_id = id_a
-             JOIN sizes sb ON sb.doc_id = id_b
-  WHERE CAST(inter AS DOUBLE) / CAST(sa.nsh + sb.nsh - inter AS DOUBLE) >= 0.8
-), edges AS (
-  SELECT id_a AS a, id_b AS b FROM p UNION SELECT id_b, id_a FROM p
-), nodes AS (SELECT DISTINCT a AS id FROM edges),
-r(a, b) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT r.a, e.b FROM r JOIN edges e ON r.b = e.a
-)
-SELECT a AS id, MIN(b) AS component FROM r GROUP BY a
-"""
-
-
-def q_ann_kernel_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vectorized matrix-kernel batch ANN (the measured scale path,
-    SCALING.md): BLAS cosine per corpus partition + exact partial top-k
-    reduction. Rows-only check: BLAS reductions differ from the
-    expression tree in the last ulp; set-equivalence with the exact
-    baseline is asserted in tests/test_ext.py, and the SAME kernel
-    physical path is pinned exact-value by ``ann_kernel_portable``
-    (int64 matmul — no rounding)."""
-    from fink_broker_spark.ext.ann import brute_force_topk_kernel
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    out = brute_force_topk_kernel(emb, emb.filter(F.col("vec_id") < 10), k=5)
-    return out.select(
-        "query_id", "vec_id", "cosine", F.col("rank").cast("int").alias("rnk")
-    )
-
-
-def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding int8 quantization (training-data compression op): per
-    vector absmax scale, symmetric round-to-nearest via the identical
-    ``floor(x/scale + 0.5)`` tree on both engines — everything JVM-side
-    array HOFs over the scan.
-
-    ``scale`` and the quantized array ``q`` are materialized as named
-    columns in separate projections: a Column captured inside a HOF
-    lambda is re-evaluated per element (and projection collapse does not
-    re-inline materialized columns), so inlining the absmax into the
-    transform would make quantization O(d^2) per row.
-
-    Domain: well-formed (finite) vectors only, mirrored in the oracle
-    — a NaN/Inf element hard-errors the ANSI ``floor(x/scale + 0.5)``
-    int cast on both engines (nanemb driftlab layout, r10)."""
-    from fink_broker_spark.ext.ann import well_formed_vectors
-
-    emb = well_formed_vectors(
-        load_table(spark, sf_dir, "embeddings"), "embedding"
-    )
-    v = F.col("embedding").cast("array<double>")
-    staged = (
-        emb.select("vec_id", v.alias("v"))
-        .select(
-            "vec_id",
-            "v",
-            (
-                F.array_max(F.transform("v", lambda x: F.abs(x))) / F.lit(127.0)
-            ).alias("scale"),
-        )
-        .select(
-            "vec_id",
-            "scale",
-            F.transform(
-                "v",
-                lambda x: F.floor(x / F.col("scale") + F.lit(0.5)).cast("int"),
-            ).alias("q"),
-        )
-    )
-    return staged.select(
-        "vec_id",
-        "scale",
-        F.size("q").cast("bigint").alias("n_dims"),
-        F.aggregate(
-            "q", F.lit(0).cast("bigint"), lambda acc, x: acc + x
-        ).alias("q_sum"),
-        F.array_max("q").alias("q_max"),
-        F.array_min("q").alias("q_min"),
-    )
-
-
-ORACLE_EMBEDDING_QUANTIZE = """
-WITH v AS (
-  -- well-formed domain, mirroring the engine's well_formed_vectors:
-  -- NaN/Inf elements hard-error the int8 quantization cast on both
-  -- engines (nanemb driftlab layout, r10)
-  SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS e
-  FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(list_filter(embedding,
-                        x -> x IS NULL OR NOT isfinite(x))) = 0
-), s AS (
-  SELECT vec_id, e,
-         list_max([abs(x) FOR x IN e]) / 127.0 AS scale
-  FROM v
-), q AS (
-  SELECT vec_id, scale,
-         [CAST(floor(x / scale + 0.5) AS INTEGER) FOR x IN e] AS qv
-  FROM s
-)
-SELECT vec_id, scale,
-       CAST(len(qv) AS BIGINT) AS n_dims,
-       list_reduce([CAST(x AS BIGINT) FOR x IN qv], (a, b) -> a + b) AS q_sum,
-       list_max(qv) AS q_max,
-       list_min(qv) AS q_min
-FROM q
-"""
-
-
-def q_union_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-evolving union: two nightly extracts with different column
-    sets merged with ``unionByName(allowMissingColumns=True)`` — the set
-    op the per-night missing-column reality (§1.3) forces; absent
-    columns surface as NULLs, exactly like the loaders' default fill."""
-    cust = load_table(spark, sf_dir, "customer")
-    v1 = cust.filter(F.col("c_custkey") < 300).select("c_custkey", "c_name")
-    v2 = cust.filter(
-        (F.col("c_custkey") >= 300) & (F.col("c_custkey") < 600)
-    ).select("c_custkey", "c_name", "c_acctbal")
-    return v1.unionByName(v2, allowMissingColumns=True)
-
-
-ORACLE_UNION_EVOLUTION = """
-SELECT c_custkey, c_name FROM customer WHERE c_custkey < 300
-UNION ALL BY NAME
-SELECT c_custkey, c_name, c_acctbal FROM customer
-WHERE c_custkey >= 300 AND c_custkey < 600
-"""
-
-
-def q_approx_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cardinality three ways per event_type (exact / HLL++ scalar /
-    DataSketches HLL), plus an ALL row whose estimate comes from
-    MERGING the per-type sketches — the fixed-size mergeable-partial
-    pattern that replaces exact countDistinct at 100 TB. Estimates are
-    engine-specific → rows-only driver check; error bounds and
-    merge associativity are pinned in tests/test_sketches.py."""
-    from fink_broker_spark.functions.sketches import (
-        cardinality_report,
-        hll_merged_estimate,
-        hll_partials,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    per_type = cardinality_report(ev, ["event_type"], "user_id")
-    partials = hll_partials(ev, ["event_type"], "user_id")
-    merged = hll_merged_estimate(partials).select(
-        F.lit("ALL").alias("event_type"),
-        F.lit(None).cast("bigint").alias("exact"),
-        F.lit(None).cast("bigint").alias("approx"),
-        F.col("estimate").alias("hll_estimate"),
-    )
-    return per_type.unionByName(merged)
-
-
-def q_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed PCA over the embeddings table (``ext/pca.py``):
-    fixed-size moment partials → driver eigendecomposition → vectorized
-    projection matmul. Eigenvectors are not ANSI-expressible → rows-only
-    driver check; numpy equivalence is pinned in tests/test_ext.py.
-    Output: scalar ``(vec_id, component_idx, coord)`` rows — the vector
-    is posexploded so the driver's rows-only canonicalizer (a pandas
-    sort over all columns) never meets an unhashable array cell."""
-    from fink_broker_spark.ext.ann import EmptyCorpusError
-    from fink_broker_spark.ext.pca import pca_project
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    try:
-        proj = pca_project(emb, k=4)
-    except EmptyCorpusError:
-        # empty lake: no moments to fit (emptystream)
-        return spark.createDataFrame(
-            [], "vec_id long, component_idx int, coord double"
-        )
-    return proj.select(
-        "vec_id", F.posexplode("pca").alias("component_idx", "coord")
-    ).select("vec_id", "component_idx", F.round("coord", 6).alias("coord"))
-
-
-def q_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL null-semantics contract: NULLs injected deterministically,
-    then counted through the aisles where engines disagree if they're
-    sloppy — count(*) vs count(col), null-safe equality join
-    (``<=>`` / ``IS NOT DISTINCT FROM``), coalesce fallback, and
-    sum-ignores-null — all per event_type."""
-    ev = load_table(spark, sf_dir, "events")
-    staged = ev.select(
-        "event_id",
-        "event_type",
-        F.when(F.col("event_id") % 5 == 0, None)
-        .otherwise(F.col("user_id") % 10)
-        .alias("bucket"),
-    )
-    # null-safe self-match: how many OTHER rows of the same type share
-    # the bucket under <=> (NULL pairs with NULL)
-    counts = staged.groupBy("event_type", "bucket").agg(
-        F.count(F.lit(1)).alias("n_bucket")
-    )
-    joined = staged.alias("s").join(
-        counts.alias("c"),
-        (F.col("s.event_type") == F.col("c.event_type"))
-        & F.col("s.bucket").eqNullSafe(F.col("c.bucket")),
-    )
-    return joined.groupBy("s.event_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count("s.bucket").alias("n_nonnull"),
-        F.sum(F.coalesce(F.col("s.bucket"), F.lit(-1)).cast("bigint")).alias(
-            "sum_coalesced"
-        ),
-        F.sum(F.col("s.bucket").cast("bigint")).alias("sum_ignorenull"),
-        F.sum(F.col("c.n_bucket").cast("bigint")).alias("sum_peers"),
-    )
-
-
-ORACLE_NULL_SEMANTICS = """
-WITH staged AS (
-  SELECT event_id, event_type,
-         CASE WHEN event_id % 5 = 0 THEN NULL ELSE user_id % 10 END AS bucket
-  FROM events
-), counts AS (
-  SELECT event_type, bucket, count(*) AS n_bucket
-  FROM staged GROUP BY 1, 2
-)
-SELECT s.event_type,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(count(s.bucket) AS BIGINT) AS n_nonnull,
-       CAST(SUM(COALESCE(s.bucket, -1)) AS BIGINT) AS sum_coalesced,
-       CAST(SUM(s.bucket) AS BIGINT) AS sum_ignorenull,
-       CAST(SUM(c.n_bucket) AS BIGINT) AS sum_peers
-FROM staged s JOIN counts c
-  ON s.event_type = c.event_type AND s.bucket IS NOT DISTINCT FROM c.bucket
-GROUP BY s.event_type
-"""
-
-
-def q_date_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Date/time family depth (trunc, datediff, date_add; the night
-    partition columns of §2.10 are the same family): monthly order
-    cohorts with age and due dates."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.groupBy(F.trunc("o_orderdate", "month").alias("order_month"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(
-                F.datediff(
-                    F.to_date(F.lit("2002-01-01")), F.col("o_orderdate")
-                ).cast("bigint")
-            ).alias("max_age_days"),
-            F.min(F.date_add(F.col("o_orderdate").cast("date"), 30)).alias(
-                "first_due30"
-            ),
-        )
-    )
-
-
-ORACLE_DATE_ARITHMETIC = """
-SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS order_month,
-       count(*) AS n,
-       MAX(CAST(datediff('day', o_orderdate, TIMESTAMP '2002-01-01') AS BIGINT)) AS max_age_days,
-       MIN(CAST(o_orderdate + INTERVAL 30 DAY AS DATE)) AS first_due30
-FROM orders GROUP BY 1
-"""
-
-
-def q_deterministic_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Injectable determinism (§7.3 hard part 5): content-derived
-    UUID-shaped ids replace ``uuid()`` so results oracle-diff; same row →
-    same id on any engine."""
-    from fink_broker_spark.core.determinism import deterministic_uuid
-
-    ev = load_table(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        deterministic_uuid("event_id", "user_id", "event_type").alias("row_uuid"),
-    )
-
-
-ORACLE_DETERMINISTIC_IDS = """
-SELECT event_id,
-       substr(h, 1, 8) || '-' || substr(h, 9, 4) || '-' || substr(h, 13, 4)
-         || '-' || substr(h, 17, 4) || '-' || substr(h, 21, 12) AS row_uuid
-FROM (
-  -- concat_ws, not ||: Spark's concat_ws SKIPS null parts (and their
-  -- separator) while || null-propagates — a NULL user_id must hash the
-  -- same way on both engines (nullfk driftlab layout, r6)
-  SELECT event_id,
-         md5(concat_ws('|', CAST(event_id AS VARCHAR),
-                       CAST(user_id AS VARCHAR), event_type)) AS h
-  FROM events
-)
-"""
-
-
-# --------------------------------------------------------------------------
-# round 4 — remaining TPC-H planner shapes (Q2/Q6/Q8/Q9/Q10/Q11/Q12/Q14/
-# Q16/Q19/Q20 twins on the available columns) + sketch/mixing/shuffle ops
-# --------------------------------------------------------------------------
-
-def q_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape (forecast revenue change): the pure scan-aggregate.
-
-    No join, no window — the whole query is a predicate conjunction and
-    one SUM, so the measure of success is the physical plan: all three
-    filters reach the parquet scan as ``PushedFilters``, ``ReadSchema``
-    carries exactly the four referenced columns, and the aggregate is a
-    two-level partial/final with no Exchange before the partial. At
-    100 TB this is the plan whose cost is the scan and nothing else."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.round(F.sum(_dec("l_extendedprice") * _dec("l_discount")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
-
-
-ORACLE_REVENUE_FORECAST = """
-SELECT COUNT(*) AS n_lines,
-       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,9)) *
-                      CAST(l_discount AS DECIMAL(18,9))), 2) AS DOUBLE)
-         AS revenue
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-  AND l_shipdate <  TIMESTAMP '1997-01-01'
-  AND l_discount BETWEEN 0.05 AND 0.07
-  AND l_quantity < 24
-"""
-
-
-def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape (minimum-cost supplier): for each qualifying part,
-    the European supplier(s) with the minimum account balance among
-    those that have actually shipped it.
-
-    The reference schema has no partsupp table, so the supplied-parts
-    relation is ``SELECT DISTINCT (l_partkey, l_suppkey)`` — the same
-    correlated-scalar-subquery shape (``MIN(..) per part``) as Q2,
-    decorrelated into a per-part aggregate joined back on equality (so
-    ties surface as multiple rows — a deterministic SET, not a pick).
-    supplier⋈nation⋈region is a broadcast snowflake; only the distinct
-    pair relation shuffles (∝ distinct pairs, not lineitems)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").filter(
-        (F.col("p_type") == "STANDARD") & (F.col("p_size") % 5 == 0)
-    )
-    sup = load_table(spark, sf_dir, "supplier")
-    nat = load_table(spark, sf_dir, "nation")
-    reg = load_table(spark, sf_dir, "region").filter(
-        F.col("r_name") == "EUROPE"
-    )
-    eur = (
-        sup.join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
-        .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
-        .select("s_suppkey", "s_name", "s_acctbal", "n_name")
-    )
-    ps = li.select(
-        F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("sk")
-    ).distinct()
-    cand = (
-        ps.join(F.broadcast(part), ps.pk == part.p_partkey)
-        .join(F.broadcast(eur), ps.sk == F.col("s_suppkey"))
-        .select("p_partkey", "s_name", "s_acctbal", "n_name")
-    )
-    # the correlated MIN decorrelates into an unbounded window over the
-    # candidate relation instead of an aggregate self-join — one pass
-    # over the distinct-pair relation, no recomputed subtree, ties kept
-    min_bal = F.min("s_acctbal").over(Window.partitionBy("p_partkey"))
-    return (
-        cand.withColumn("min_bal", min_bal)
-        .filter(F.col("s_acctbal") == F.col("min_bal"))
-        .select("p_partkey", "s_name", "s_acctbal", "n_name")
-    )
-
-
-ORACLE_MIN_COST_SUPPLIER = """
-WITH ps AS (SELECT DISTINCT l_partkey AS pk, l_suppkey AS sk FROM lineitem),
-eur AS (
-  SELECT s_suppkey, s_name, s_acctbal, n_name
-  FROM supplier
-  JOIN nation ON s_nationkey = n_nationkey
-  JOIN region ON n_regionkey = r_regionkey AND r_name = 'EUROPE'
-),
-cand AS (
-  SELECT p_partkey, s_name, s_acctbal, n_name
-  FROM ps
-  JOIN part ON pk = p_partkey AND p_type = 'STANDARD' AND p_size % 5 = 0
-  JOIN eur ON sk = s_suppkey
-),
-m AS (SELECT p_partkey AS mpk, MIN(s_acctbal) AS min_bal
-      FROM cand GROUP BY 1)
-SELECT p_partkey, s_name, s_acctbal, n_name
-FROM cand JOIN m ON p_partkey = mpk AND s_acctbal = min_bal
-"""
-
-
-def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape (national market share): NATION_5 suppliers' share
-    of PROMO-part revenue sold to AMERICA-region customers, by year.
-
-    The share is a conditional-sum ratio: both numerator and denominator
-    aggregate exactly in DECIMAL over the same joined relation and the
-    single double division happens on the final one-row-per-year table,
-    so the oracle reproduces it bit-for-bit. All five dimension tables
-    broadcast; lineitem shuffles once, on the group key."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    part = load_table(spark, sf_dir, "part").filter(
-        F.col("p_type") == "PROMO"
-    )
-    cust = load_table(spark, sf_dir, "customer")
-    sup = load_table(spark, sf_dir, "supplier")
-    nat = load_table(spark, sf_dir, "nation")
-    reg = load_table(spark, sf_dir, "region").filter(
-        F.col("r_name") == "AMERICA"
-    )
-    cnat = nat.select(
-        F.col("n_nationkey").alias("cn_key"),
-        F.col("n_regionkey").alias("cn_region"),
-    )
-    snat = nat.select(
-        F.col("n_nationkey").alias("sn_key"),
-        F.col("n_name").alias("supp_nation"),
-    )
-    vol = _dec("l_extendedprice") * (
-        F.lit(1.0).cast("decimal(18,9)") - _dec("l_discount")
-    )
-    joined = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(cnat), cust.c_nationkey == F.col("cn_key"))
-        .join(
-            F.broadcast(reg), F.col("cn_region") == reg.r_regionkey
-        )
-        .join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-        .join(F.broadcast(snat), sup.s_nationkey == F.col("sn_key"))
-        .select(
-            F.year("o_orderdate").alias("o_year"),
-            vol.alias("vol"),
-            F.col("supp_nation"),
-        )
-    )
-    zero = F.lit(0).cast("decimal(18,9)")
-    return (
-        joined.groupBy("o_year")
-        .agg(
-            F.sum(
-                F.when(F.col("supp_nation") == "NATION_5", F.col("vol"))
-                .otherwise(zero)
-            ).alias("nat_vol"),
-            F.sum("vol").alias("tot_vol"),
-        )
-        .select(
-            "o_year",
-            # round the scale-18 sums to scale 2 before the double
-            # cast (wide-decimal → double double-rounds in DuckDB —
-            # see q_promo_revenue)
-            (
-                F.round("nat_vol", 2).cast("double")
-                / F.round("tot_vol", 2).cast("double")
-            ).alias("mkt_share"),
-        )
-    )
-
-
-ORACLE_MARKET_SHARE = """
-WITH joined AS (
-  SELECT EXTRACT(year FROM o_orderdate) AS o_year,
-         CAST(l_extendedprice AS DECIMAL(18,9)) *
-           (CAST(1.0 AS DECIMAL(18,9)) - CAST(l_discount AS DECIMAL(18,9)))
-           AS vol,
-         sn.n_name AS supp_nation
-  FROM lineitem
-  JOIN part ON l_partkey = p_partkey AND p_type = 'PROMO'
-  JOIN orders ON l_orderkey = o_orderkey
-   AND o_orderdate >= TIMESTAMP '1996-01-01'
-   AND o_orderdate <  TIMESTAMP '1998-01-01'
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation cn ON c_nationkey = cn.n_nationkey
-  JOIN region ON cn.n_regionkey = r_regionkey AND r_name = 'AMERICA'
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation sn ON s_nationkey = sn.n_nationkey
-)
-SELECT o_year,
-       CAST(ROUND(SUM(CASE WHEN supp_nation = 'NATION_5' THEN vol
-                     ELSE CAST(0 AS DECIMAL(18,9)) END), 2) AS DOUBLE)
-         / CAST(ROUND(SUM(vol), 2) AS DOUBLE) AS mkt_share
-FROM joined GROUP BY o_year
-"""
-
-
-def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape (product-type profit): per supplier-nation,
-    per-year profit on LARGE-type parts.
-
-    No partsupp ⇒ unit cost proxies as ``p_retailprice / 10``.
-    Arithmetic is fully integerized (prices in cents, revenue in 1e-4
-    dollars — all exact int64), the per-group difference is an exact
-    integer, and the ONLY float op is the final exact-int → double
-    division. No terminal ROUND: rounding a computed double at a
-    half-cent boundary diverges between engines (Spark rounds the
-    BigDecimal of the double, DuckDB rounds with float ops — a sf0.1
-    group at x.835 produced .84 vs .83; surfaced by the sf0.1 parity
-    sweep, invisible at sf0.01)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").filter(
-        F.col("p_type") == "LARGE"
-    )
-    orders = load_table(spark, sf_dir, "orders")
-    sup = load_table(spark, sf_dir, "supplier")
-    nat = load_table(spark, sf_dir, "nation")
-    # floor(x + 0.5), NOT rint: rint is half-EVEN while DuckDB round is
-    # half-away, so a price/qty sitting exactly on a .5 splits engines;
-    # the identical floor(+0.5) IEEE tree on both sides is
-    # convention-free (driftlab 'boundary' layout regression)
-    price_c = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-    disc_c = F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long")
-    retail_c = F.floor(F.col("p_retailprice") * 100 + F.lit(0.5)).cast("long")
-    qty = F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long")
-    joined = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-        .join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
-        .select(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").alias("o_year"),
-            (price_c * (F.lit(100) - disc_c)).alias("rev_e4"),
-            (retail_c * qty).alias("cost_c"),
-        )
-    )
-    return (
-        joined.groupBy("nation", "o_year")
-        .agg(F.sum("rev_e4").alias("sr"), F.sum("cost_c").alias("sc"))
-        .select(
-            "nation",
-            "o_year",
-            (
-                (F.col("sr") - F.col("sc") * 10).cast("double")
-                / F.lit(10000.0)
-            ).alias("profit"),
-        )
-    )
-
-
-ORACLE_PRODUCT_PROFIT = """
-WITH joined AS (
-  SELECT n_name AS nation,
-         EXTRACT(year FROM o_orderdate) AS o_year,
-         CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) *
-           (100 - CAST(FLOOR(l_discount * 100 + 0.5) AS BIGINT)) AS rev_e4,
-         CAST(FLOOR(p_retailprice * 100 + 0.5) AS BIGINT) *
-           CAST(FLOOR(l_quantity + 0.5) AS BIGINT) AS cost_c
-  FROM lineitem
-  JOIN part ON l_partkey = p_partkey AND p_type = 'LARGE'
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation ON s_nationkey = n_nationkey
-)
-SELECT nation, o_year,
-       CAST(SUM(rev_e4) - SUM(cost_c) * 10 AS DOUBLE) / 10000.0 AS profit
-FROM joined GROUP BY nation, o_year
-"""
-
-
-def q_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape (returned-item reporting): top 20 customers by
-    revenue lost to returns in a six-month window.
-
-    Top-N over an aggregate: Catalyst plans the ORDER BY + LIMIT as
-    TakeOrderedAndProject — per-partition heaps of 20, a 20-row merge on
-    the driver — never a global sort. The boundary is deterministic:
-    ties in the double revenue break on the unique customer key."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_returnflag") == "R"
-    )
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-07-01").cast("timestamp"))
-    )
-    cust = load_table(spark, sf_dir, "customer")
-    nat = load_table(spark, sf_dir, "nation")
-    rev = _dec("l_extendedprice") * (
-        F.lit(1.0).cast("decimal(18,9)") - _dec("l_discount")
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.round(F.sum(rev), 2).cast("double").alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(20)
-    )
-
-
-ORACLE_RETURNED_ITEMS = """
-SELECT c_custkey, c_name, n_name,
-       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,9)) *
-            (CAST(1.0 AS DECIMAL(18,9)) - CAST(l_discount AS DECIMAL(18,9)))
-            ), 2) AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-  AND o_orderdate >= TIMESTAMP '1997-01-01'
-  AND o_orderdate <  TIMESTAMP '1997-07-01'
-GROUP BY c_custkey, c_name, n_name
-ORDER BY revenue DESC, c_custkey
-LIMIT 20
-"""
-
-
-def q_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 shape (important stock): parts carrying more than 2% of
-    their supplier-nation's total shipped value.
-
-    The scalar-subquery HAVING threshold decorrelates into a per-nation
-    total joined back; the fraction compares CROSS-MULTIPLIED in exact
-    DECIMAL (``50·value > total``) so no division rounding can flip a
-    boundary part. Two aggregates over one shuffle key family
-    (nation,part)→(nation): the second is a roll-up of the first, not a
-    second scan."""
-    li = load_table(spark, sf_dir, "lineitem")
-    sup = load_table(spark, sf_dir, "supplier")
-    nat = load_table(spark, sf_dir, "nation")
-    per_part = (
-        li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-        .join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
-        .groupBy("n_name", "l_partkey")
-        .agg(F.sum(_dec("l_extendedprice")).alias("value"))
-    )
-    # national total as an unbounded window over the aggregate output:
-    # a self-join (groupBy + join back) would RECOMPUTE the whole
-    # subtree and scan lineitem twice; the window re-shuffles only the
-    # small (nation, part) aggregate. DECIMAL sum = order-independent.
-    total = F.sum("value").over(Window.partitionBy("n_name"))
-    return (
-        per_part.withColumn("total", total)
-        .filter(F.col("value") * F.lit(50) > F.col("total"))
-        .select(
-            "n_name",
-            "l_partkey",
-            F.round("value", 2).cast("double").alias("value"),
-        )
-    )
-
-
-ORACLE_IMPORTANT_PARTS = """
-WITH per_part AS (
-  SELECT n_name, l_partkey,
-         SUM(CAST(l_extendedprice AS DECIMAL(18,9))) AS value
-  FROM lineitem
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation ON s_nationkey = n_nationkey
-  GROUP BY n_name, l_partkey
-),
-totals AS (SELECT n_name AS tn, SUM(value) AS total
-           FROM per_part GROUP BY 1)
-SELECT n_name, l_partkey,
-       CAST(ROUND(value, 2) AS DOUBLE) AS value
-FROM per_part JOIN totals ON n_name = tn
-WHERE value * 50 > total
-"""
-
-
-def q_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape (shipping-mode / order-priority): among lineitems
-    shipped more than 90 days after the order date, count critical
-    (1-URGENT / 2-HIGH) vs other orders per line status.
-
-    The CASE counts are conditional aggregates over one join; the
-    interval predicate is a codegen timestamp comparison, pushed below
-    the join so only late lines shuffle."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    late = li.join(orders, li.l_orderkey == orders.o_orderkey).filter(
-        F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")
-    )
-    crit = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return late.groupBy("l_linestatus").agg(
-        F.count(F.when(crit, 1)).alias("high_line_count"),
-        F.count(F.when(~crit, 1)).alias("low_line_count"),
-    )
-
-
-ORACLE_LATE_SHIPMENT_PRIORITY = """
-SELECT l_linestatus,
-       COUNT(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                  THEN 1 END) AS high_line_count,
-       COUNT(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                  THEN 1 END) AS low_line_count
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-WHERE l_shipdate > o_orderdate + INTERVAL 90 DAY
-GROUP BY l_linestatus
-"""
-
-
-def q_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape (promotion effect): PROMO parts' percentage of
-    one month's revenue — a conditional-sum ratio collapsed to a single
-    row. Both sums are exact DECIMAL over the same join; the percentage
-    is one double expression evaluated on the final row, so the oracle's
-    IEEE tree is identical."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-09-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-10-01").cast("timestamp"))
-    )
-    part = load_table(spark, sf_dir, "part")
-    vol = _dec("l_extendedprice") * (
-        F.lit(1.0).cast("decimal(18,9)") - _dec("l_discount")
-    )
-    zero = F.lit(0).cast("decimal(18,9)")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .agg(
-            F.sum(
-                F.when(F.col("p_type") == "PROMO", vol).otherwise(zero)
-            ).alias("promo"),
-            F.sum(vol).alias("total"),
-        )
-        .select(
-            # round the scale-18 sums to scale 2 BEFORE the double
-            # cast: a wide-decimal → double conversion is correctly
-            # rounded in Spark but double-rounds through (double)int128
-            # / 10^18 in DuckDB — at scale 2 the unscaled value fits a
-            # double exactly and both engines convert identically
-            # (driftlab 'boundary' layout regression)
-            (
-                F.lit(100.0)
-                * F.round("promo", 2).cast("double")
-                / F.round("total", 2).cast("double")
-            ).alias("promo_pct")
-        )
-    )
-
-
-ORACLE_PROMO_REVENUE = """
-SELECT 100.0 * CAST(ROUND(SUM(CASE WHEN p_type = 'PROMO'
-         THEN CAST(l_extendedprice AS DECIMAL(18,9)) *
-              (CAST(1.0 AS DECIMAL(18,9)) - CAST(l_discount AS DECIMAL(18,9)))
-         ELSE CAST(0 AS DECIMAL(18,9)) END), 2) AS DOUBLE)
-       / CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,9)) *
-              (CAST(1.0 AS DECIMAL(18,9)) - CAST(l_discount AS DECIMAL(18,9)))
-         ), 2) AS DOUBLE) AS promo_pct
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-WHERE l_shipdate >= TIMESTAMP '1997-09-01'
-  AND l_shipdate <  TIMESTAMP '1997-10-01'
-"""
-
-
-def q_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape (supplier relationship count): distinct suppliers
-    per (brand, type, size) for selected sizes, excluding one brand and
-    excluding suppliers with negative balance (the Q16 complaints NOT IN
-    becomes a broadcast anti-join on the supplier key).
-
-    The supplied-parts relation is again the distinct (part, supplier)
-    pair set; count-distinct lands on it AFTER the anti-join prunes, so
-    the expensive distinct aggregation only sees surviving pairs."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#1")
-        & (F.col("p_size").isin(5, 10, 15, 20, 25))
-    )
-    bad = load_table(spark, sf_dir, "supplier").filter(
-        F.col("s_acctbal") < 0
-    ).select("s_suppkey")
-    ps = li.select(
-        F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("sk")
-    ).distinct()
-    return (
-        ps.join(F.broadcast(bad), ps.sk == bad.s_suppkey, "left_anti")
-        .join(F.broadcast(part), F.col("pk") == part.p_partkey)
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("sk").alias("supplier_cnt"))
-    )
-
-
-ORACLE_SUPPLIER_PART_COUNTS = """
-WITH ps AS (SELECT DISTINCT l_partkey AS pk, l_suppkey AS sk FROM lineitem)
-SELECT p_brand, p_type, p_size,
-       COUNT(DISTINCT sk) AS supplier_cnt
-FROM ps
-JOIN part ON pk = p_partkey
-WHERE p_brand <> 'Brand#1'
-  AND p_size IN (5, 10, 15, 20, 25)
-  AND sk NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY p_brand, p_type, p_size
-"""
-
-
-def q_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape (discounted revenue, disjunctive predicate): an
-    OR of three brand/size/quantity conjunctions across the join.
-
-    The planner test: Catalyst must extract the common
-    ``l_quantity <= 30``/``p_size >= 1`` bounds and still push the
-    brand/size terms to the part scan while evaluating the residual
-    disjunction post-join — confirm with ``.explain`` that the part
-    scan carries PushedFilters and the join is broadcast."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-    arm1 = (
-        (F.col("p_brand") == "Brand#1")
-        & F.col("p_size").between(1, 5)
-        & F.col("l_quantity").between(1, 11)
-    )
-    arm2 = (
-        (F.col("p_brand") == "Brand#2")
-        & F.col("p_size").between(1, 10)
-        & F.col("l_quantity").between(10, 20)
-    )
-    arm3 = (
-        (F.col("p_brand") == "Brand#3")
-        & F.col("p_size").between(1, 15)
-        & F.col("l_quantity").between(20, 30)
-    )
-    rev = _dec("l_extendedprice") * (
-        F.lit(1.0).cast("decimal(18,9)") - _dec("l_discount")
-    )
-    return j.filter(arm1 | arm2 | arm3).agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.round(F.sum(rev), 2).cast("double").alias("revenue"),
-    )
-
-
-ORACLE_DISJUNCTIVE_REVENUE = """
-SELECT COUNT(*) AS n_lines,
-       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,9)) *
-            (CAST(1.0 AS DECIMAL(18,9)) - CAST(l_discount AS DECIMAL(18,9)))
-            ), 2) AS DOUBLE) AS revenue
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5
-       AND l_quantity BETWEEN 1 AND 11)
-   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10
-       AND l_quantity BETWEEN 10 AND 20)
-   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
-       AND l_quantity BETWEEN 20 AND 30)
-"""
-
-
-def q_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 shape (potential part promotion): suppliers who carried
-    more than 20% of a PROMO part's 1997 flow.
-
-    The nested-subquery chain (suppliers IN … partkey IN … qty >
-    threshold) becomes two aggregates over the same (supplier, part)
-    grouping — per-pair quantity and its per-part roll-up — compared
-    cross-multiplied in exact DECIMAL (``5·q > total``), then a distinct
-    supplier projection joined to the dimension tables. Only the
-    filtered 1997 PROMO lineitems ever shuffle."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    promo = load_table(spark, sf_dir, "part").filter(
-        F.col("p_type") == "PROMO"
-    ).select("p_partkey")
-    sup = load_table(spark, sf_dir, "supplier")
-    nat = load_table(spark, sf_dir, "nation")
-    pairs = (
-        li.join(F.broadcast(promo), li.l_partkey == promo.p_partkey)
-        .groupBy(
-            F.col("l_suppkey").alias("sk"), F.col("l_partkey").alias("pk")
-        )
-        .agg(F.sum(_dec("l_quantity")).alias("q"))
-    )
-    # per-part total as a window over the (supplier, part) aggregate —
-    # the aggregate-join form would recompute pairs and scan the 1997
-    # lineitems twice; the window shuffles only the aggregated pairs
-    tq = F.sum("q").over(Window.partitionBy("pk"))
-    qual = (
-        pairs.withColumn("tq", tq)
-        .filter(F.col("q") * F.lit(5) > F.col("tq"))
-        .select("sk")
-        .distinct()
-    )
-    return (
-        sup.join(qual, sup.s_suppkey == qual.sk)
-        .join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
-        .select("s_suppkey", "s_name", "n_name")
-    )
-
-
-ORACLE_PART_PROMOTION = """
-WITH pairs AS (
-  SELECT l_suppkey AS sk, l_partkey AS pk,
-         SUM(CAST(l_quantity AS DECIMAL(18,9))) AS q
-  FROM lineitem
-  JOIN part ON l_partkey = p_partkey AND p_type = 'PROMO'
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-    AND l_shipdate <  TIMESTAMP '1998-01-01'
-  GROUP BY 1, 2
-),
-totals AS (SELECT pk AS tpk, SUM(q) AS tq FROM pairs GROUP BY 1),
-qual AS (
-  SELECT DISTINCT sk FROM pairs JOIN totals ON pk = tpk
-  WHERE q * 5 > tq
-)
-SELECT s_suppkey, s_name, n_name
-FROM supplier
-JOIN qual ON s_suppkey = sk
-JOIN nation ON s_nationkey = n_nationkey
-"""
-
-
-def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heavy hitters via a deterministic count-min sketch
-    (``functions/sketches.py``): build a 3×512 counter grid over event
-    user ids in one group-aggregate (map-side partials keep shuffle
-    volume ≤ depth·width per partition, constant in the key count),
-    estimate every distinct user by the min of its three counters, and
-    report users whose estimate crosses the threshold next to their
-    exact count (est ≥ exact always — collisions only add).
-
-    The row hashes are ANSI-safe integer arithmetic, so the DuckDB
-    oracle builds the *same* sketch and the estimates match exactly —
-    the sketch is verified as a computation, not just a bound."""
-    from fink_broker_spark.functions.sketches import cms_build, cms_estimate
-
-    from fink_broker_spark.functions.sketches import cms_position
-
-    ev = load_table(spark, sf_dir, "events")
-    sketch = cms_build(ev, "user_id", depth=3, width=512)
-    exact = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("exact_count")
-    )
-    # single-use chain: the exact aggregate IS the probe relation, and
-    # exact_count rides through the position-explode so no second
-    # reference to the aggregate (Spark recomputes shared subtrees —
-    # a separate probes branch meant a third scan of events)
-    positions = F.array(
-        *[
-            F.struct(
-                F.lit(r).alias("r"),
-                cms_position("user_id", r, 512).alias("pos"),
-            )
-            for r in range(3)
-        ]
-    )
-    probe_pos = exact.select(
-        "user_id", "exact_count", F.explode(positions).alias("rp")
-    ).select(
-        "user_id",
-        "exact_count",
-        F.col("rp.r").alias("r"),
-        F.col("rp.pos").alias("pos"),
-    )
-    return (
-        probe_pos.join(F.broadcast(sketch), on=["r", "pos"], how="left")
-        .groupBy("user_id", "exact_count")
-        .agg(
-            F.min(F.coalesce("counter", F.lit(0))).alias("cms_count")
-        )
-        .filter(F.col("cms_count") >= 70)
-        .select("user_id", "cms_count", "exact_count")
-    )
-
-
-ORACLE_CMS_HEAVY_HITTERS = """
-WITH hashes(r, p, s) AS (
-  VALUES (0, 2654435761, 0), (1, 2246822519, 40503), (2, 3266489917, 88057)
-),
-pos AS (
-  SELECT user_id,
-         r, ((user_id % 1000003) * p + s) % 512 AS pos
-  FROM events CROSS JOIN hashes
-),
-sketch AS (SELECT r, pos, COUNT(*) AS counter FROM pos GROUP BY 1, 2),
-probes AS (SELECT DISTINCT user_id FROM events),
-ppos AS (
-  SELECT user_id, r, ((user_id % 1000003) * p + s) % 512 AS pos
-  FROM probes CROSS JOIN hashes
-),
-est AS (
-  SELECT user_id, MIN(counter) AS cms_count
-  FROM ppos JOIN sketch USING (r, pos)
-  GROUP BY user_id
-),
-exact AS (SELECT user_id, COUNT(*) AS exact_count FROM events GROUP BY 1)
-SELECT user_id, cms_count, exact_count
-FROM est JOIN exact USING (user_id)
-WHERE cms_count >= 70
-"""
-
-
-def q_corpus_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-weighted corpus mixing (``ext/pipeline.py``): per-source
-    sampling shares ``√count / Σ√count`` (alpha = 0.5) and the per-epoch
-    document quota they imply. One aggregate over the corpus; all float
-    arithmetic happens on the ≤ #sources mixture table, with the
-    denominator folded left-to-right over the source-sorted weight list
-    so the IEEE tree matches the oracle's ``list_reduce`` exactly."""
-    from fink_broker_spark.ext.pipeline import temperature_shares
-
-    docs = load_table(spark, sf_dir, "documents")
-    return temperature_shares(docs, "source", alpha=0.5)
-
-
-ORACLE_CORPUS_TEMPERATURE = """
-WITH counts AS (
-  SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY 1
-),
-w AS (
-  SELECT source, n_docs, sqrt(CAST(n_docs AS DOUBLE)) AS weight
-  FROM counts
-),
-d AS (
-  SELECT list_reduce(list(weight ORDER BY source), (x, y) -> x + y)
-           AS denom,
-         SUM(n_docs) AS total
-  FROM w
-)
-SELECT source, n_docs, weight,
-       weight / denom AS share,
-       CAST(FLOOR((weight / denom) * CAST(total AS DOUBLE)) AS BIGINT)
-         AS quota
-FROM w CROSS JOIN d
-"""
-
-
-def q_epoch_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic epoch shuffle (``ext/pipeline.py``): reproducible
-    training order as (shard, position) — a Knuth multiplicative mix of
-    (doc id, epoch) assigns the shard and the within-shard sort key, and
-    ``row_number`` runs per shard so no global ORDER BY serializes the
-    corpus through one task. Epoch 1, 8 shards."""
-    from fink_broker_spark.ext.pipeline import epoch_shuffle
-
-    docs = load_table(spark, sf_dir, "documents")
-    return epoch_shuffle(docs, "doc_id", epoch=1, n_shards=8)
-
-
-ORACLE_EPOCH_SHUFFLE_ORDER = """
-WITH h AS (
-  SELECT doc_id,
-         ((doc_id % 1000003) * 2654435761 + 1 * 97003) % 2147483647
-           AS order_key
-  FROM documents
-),
-s AS (SELECT doc_id, order_key, order_key % 8 AS shard FROM h)
-SELECT doc_id, shard,
-       CAST(ROW_NUMBER() OVER (PARTITION BY shard
-                               ORDER BY order_key, doc_id) AS INT)
-         AS position
-FROM s
-"""
-
-
-def q_bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter runtime pre-filter ahead of a semi join
-    (``functions/sketches.py:bloom_build``): the dim side (BUILDING
-    customers) builds a 128 Kbit filter as a distributed ``bit_or``
-    word aggregate — one bounded shuffle, never any driver state — and
-    the fact side (orders) tests its key against the broadcast bitset
-    with pure codegen bit ops BEFORE the exact semi join. No false
-    negatives, so chasing with the exact join gives a result identical
-    to the plain semi join — which is exactly what the oracle checks.
-
-    100 TB story: this is Spark's own runtime-filter shape
-    (``BloomFilterAggregate``, not SQL-registered) as an explicit
-    operator — the fact-side shuffle carries only might-match rows
-    (~selectivity + 0.6% fp at 10 bits/key), instead of the whole
-    table. One Catalyst honesty note: the default optimizer pushes
-    LeftSemi joins below the probe filter
-    (``PushLeftSemiLeftAntiThroughJoin``), which is harmless when the
-    dim side broadcasts (as here, and the rule-driven order is then
-    fine) but defeats the prefilter when the exact join must shuffle —
-    the deployment posture for that regime is excluding that one rule,
-    pinned with a plan-shape test
-    (``tests/test_sketches.py::test_bloom_prefilter_runs_before_
-    shuffle_when_pushdown_excluded``: probe inside the cross join,
-    before the fact Exchange, semi join above)."""
-    from fink_broker_spark.functions.sketches import (
-        bloom_build,
-        bloom_might_contain,
-    )
-
-    cust = (
-        load_table(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    orders = load_table(spark, sf_dir, "orders")
-    bf = bloom_build(cust, "c_custkey", num_bits=1 << 17, k=5)
-    pre = bloom_might_contain(
-        orders.withColumn("c_custkey", F.col("o_custkey")),
-        bf,
-        "c_custkey",
-        num_bits=1 << 17,
-        k=5,
-    ).drop("c_custkey")
-    exact = pre.join(F.broadcast(cust), pre.o_custkey == cust.c_custkey, "left_semi")
-    return exact.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.countDistinct("o_custkey").alias("n_customers"),
-    )
-
-
-ORACLE_BLOOM_PREFILTER_JOIN = """
-SELECT o_orderpriority, count(*) AS n_orders,
-       count(DISTINCT o_custkey) AS n_customers
-FROM orders
-WHERE o_custkey IN (SELECT c_custkey FROM customer
-                    WHERE c_mktsegment = 'BUILDING')
-GROUP BY o_orderpriority
-"""
-
-
-def q_bloom_prefilter_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The sharded-bitset regime of the Bloom runtime prefilter
-    (``functions/sketches.py:bloom_build(nshards=8)``): ``num_bits`` is
-    split across 8 shard bitsets, keys route by a salted xxhash64, and
-    the probe is an equi-join on shard id — plan-asserted to contain NO
-    cross/nested-loop join (``tests/test_sketches.py::
-    test_bloom_sharded_probe_is_equi_join_not_cross``). Result is
-    exact (fp rows chased by the exact semi join), so the oracle is
-    the plain semi join.
-
-    100 TB story: this is the posture when the single bitset outgrows
-    broadcast comfort — 1e9 keys at 10 bits/key is a 1.25 GB row; 128
-    shards of ~10 MB each stay hash-join-able, and the shard key is
-    xxhash64-uniform so the join cannot skew."""
-    from fink_broker_spark.functions.sketches import (
-        bloom_build,
-        bloom_might_contain,
-    )
-
-    supp = (
-        load_table(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "MACHINERY")
-        .select("c_custkey")
-    )
-    orders = load_table(spark, sf_dir, "orders")
-    bf = bloom_build(supp, "c_custkey", num_bits=1 << 17, k=5, nshards=8)
-    pre = bloom_might_contain(
-        orders.withColumn("c_custkey", F.col("o_custkey")),
-        bf,
-        "c_custkey",
-        num_bits=1 << 17,
-        k=5,
-        nshards=8,
-    ).drop("c_custkey")
-    exact = pre.join(
-        F.broadcast(supp), pre.o_custkey == supp.c_custkey, "left_semi"
-    )
-    return exact.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("total_price"),
-    )
-
-
-ORACLE_BLOOM_PREFILTER_SHARDED = """
-SELECT o_orderstatus, count(*) AS n_orders,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-           AS total_price
-FROM orders
-WHERE o_custkey IN (SELECT c_custkey FROM customer
-                    WHERE c_mktsegment = 'MACHINERY')
-GROUP BY o_orderstatus
-"""
-
-
-def q_unigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style unigram language-model quality scoring: fit the
-    corpus unigram distribution (one token shuffle with map-side
-    partial counts), score each document by its mean token
-    log-probability, and return the 50 most atypical documents — the
-    ones a perplexity filter would drop first.
-
-    Shape at 100 TB: the model fit and the scoring share one LOGICAL
-    tokenize + explode relation (physically recomputed per branch while
-    uncached — materialize the token table once when the corpus is the
-    cost); the vocabulary aggregate is bounded by distinct-token count,
-    and the final top-50 is a TakeOrdered, never a global sort. FP discipline: each token's
-    log-prob rounds to ``decimal(18,9)`` BEFORE the per-doc sum, so the
-    aggregation is exact and order-independent on both engines."""
-    docs = load_table(spark, sf_dir, "documents")
-    from fink_broker_spark.functions.text import tokens_expr
-
-    tok = docs.select(
-        "doc_id", F.explode(tokens_expr("text")).alias("token")
-    )
-    counts = tok.groupBy("token").agg(
-        F.count(F.lit(1)).alias("tok_count")
-    )
-    # corpus total as a 1-row broadcast, same DAG — no driver action
-    total = counts.groupBy().agg(F.sum("tok_count").alias("n_total"))
-    scored = (
-        tok.join(counts, "token")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "doc_id",
-            F.round(
-                F.log(
-                    F.col("tok_count").cast("double")
-                    / F.col("n_total").cast("double")
-                ),
-                9,
-            )
-            .cast("decimal(18,9)")
-            .alias("logp"),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.sum("logp").cast("decimal(28,9)").alias("sum_logp"),
-            F.count(F.lit(1)).alias("n_tokens"),
-        )
-        .select(
-            "doc_id",
-            "n_tokens",
-            # DOUBLE division of exact inputs, not decimal/bigint:
-            # DuckDB divides decimals in double while Spark divides
-            # exactly with HALF_UP, so a quotient on a .5 at the target
-            # scale would split the engines; double division of the
-            # same exact operands is correctly rounded on both.
-            # The scale-9 sum is first quantized to scale 5: a 1-ulp
-            # JVM-vs-libm ln() divergence can move one scale-9 summand
-            # by 1e-9, and the coarse quantization absorbs it (same
-            # defense as ext/retrieval.py)
-            (
-                F.round("sum_logp", 5).cast("decimal(28,5)").cast("double")
-                / F.col("n_tokens")
-            ).alias("mean_logp"),
-        )
-    )
-    return scored.orderBy("mean_logp", "doc_id").limit(50)
-
-
-ORACLE_UNIGRAM_LM_SCORES = r"""
-WITH tok AS (
-  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-  FROM documents
-  WHERE length(trim(lower(text))) > 0
-),
-counts AS (
-  SELECT token, count(*) AS tok_count FROM tok GROUP BY token
-),
-total AS (SELECT count(*) AS n FROM tok),
-scored AS (
-  SELECT t.doc_id,
-         CAST(SUM(CAST(round(ln(CAST(c.tok_count AS DOUBLE) / total.n), 9)
-                       AS DECIMAL(18,9))) AS DECIMAL(28,9)) AS sum_logp,
-         count(*) AS n_tokens
-  FROM tok t JOIN counts c USING (token), total
-  GROUP BY t.doc_id
-)
-SELECT doc_id, n_tokens,
-       CAST(CAST(round(sum_logp, 5) AS DECIMAL(28,5)) AS DOUBLE)
-           / n_tokens AS mean_logp
-FROM scored
-ORDER BY mean_logp, doc_id
-LIMIT 50
-"""
-
-
-def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style line-level exact dedup: cut every document into
-    consecutive 10-token lines, hash each line, keep only the globally
-    FIRST occurrence (min ``(doc_id, line_idx)`` per hash), and report
-    per-document kept/dropped line counts — the passage-granularity
-    dedup that document-level fingerprints miss.
-
-    Scale: one explode (lines ∝ tokens), one shuffle on the line hash
-    for the first-occurrence window, one aggregate back to documents.
-    The window per hash is bounded by that line's duplicate count;
-    skewed boilerplate lines are exactly the rows AQE's skew handling
-    splits."""
-    docs = load_table(spark, sf_dir, "documents")
-    from fink_broker_spark.functions.text import tokens_expr
-
-    staged = docs.select("doc_id", tokens_expr("text").alias("toks"))
-    lines = staged.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(
-                    F.lit(0),
-                    F.floor((F.size("toks") - 1) / 10).cast("int"),
-                ),
-                lambda i: F.concat_ws(
-                    " ", F.slice("toks", i * 10 + 1, 10)
-                ),
-            )
-        ).alias("line_idx", "line"),
-    ).filter(F.length("line") > 0)
-    w = Window.partitionBy("line").orderBy("doc_id", "line_idx")
-    marked = lines.select(
-        "doc_id",
-        "line_idx",
-        (F.row_number().over(w) == 1).alias("keep"),
-    )
-    return marked.groupBy("doc_id").agg(
-        F.sum(F.when(F.col("keep"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("kept_lines"),
-        F.sum(F.when(F.col("keep"), 0).otherwise(1))
-        .cast("bigint")
-        .alias("dropped_lines"),
-    )
-
-
-ORACLE_LINE_DEDUP = r"""
-WITH staged AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
-  FROM documents WHERE length(trim(lower(text))) > 0
-),
-lines AS (
-  SELECT doc_id, i AS line_idx,
-         array_to_string(toks[i*10+1 : i*10+10], ' ') AS line
-  FROM staged,
-       LATERAL (SELECT unnest(generate_series(0,
-                  CAST(floor((len(toks)-1)/10) AS INT))) AS i)
-  WHERE length(array_to_string(toks[i*10+1 : i*10+10], ' ')) > 0
-),
-marked AS (
-  SELECT doc_id, line_idx,
-         ROW_NUMBER() OVER (PARTITION BY line
-                            ORDER BY doc_id, line_idx) = 1 AS keep
-  FROM lines
-)
-SELECT doc_id,
-       CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS kept_lines,
-       CAST(SUM(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT) AS dropped_lines
-FROM marked
-GROUP BY doc_id
-"""
-
-
-def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical-document selection: group exact duplicates by content
-    fingerprint and keep the highest-quality copy (quality score from
-    ``functions/text.py``; doc_id breaks ties deterministically) — the
-    policy step after dedup detection: WHICH copy survives.
-
-    One hash shuffle on the fingerprint; ``max_by`` over a struct
-    (score, -doc_id) picks the argmax inside the aggregate — no window,
-    no second scan. The score is the same deterministic per-row double
-    both engines compute from mirrored op trees (the
-    ``text_quality`` parity discipline), so comparisons and ``max``
-    agree bit-for-bit."""
-    # NULL text has no fingerprint and no quality — excluded on both
-    # sides (a NULL q inside the max_by struct would compare by
-    # engine-specific NULL rules — driftlab nullmeasure)
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull()
-    )
-    from fink_broker_spark.functions.text import (
-        fingerprint_expr,
-        quality_score_expr,
-    )
-
-    staged = docs.select(
-        "doc_id",
-        fingerprint_expr("text").alias("fp"),
-        quality_score_expr("text").alias("q"),
-    ).dropDuplicates(["fp", "doc_id", "q"])
-    # dropDuplicates on the SAME tuple the oracle's DISTINCT keeps
-    # (doc_id, fp, q — ADVICE r7 #3): a re-ingested duplicate ROW
-    # (duprows driftlab, at-least-once delivery) is the same document,
-    # and a drifted re-ingest that changes q for the same (doc, fp)
-    # keeps both rows on both engines instead of an arbitrary survivor
-    return staged.groupBy("fp").agg(
-        F.count(F.lit(1)).alias("copies"),
-        F.max_by(
-            "doc_id", F.struct(F.col("q"), (-F.col("doc_id")).alias("nid"))
-        ).alias("keep_id"),
-        F.max("q").alias("best_quality"),
-    )
-
-
-ORACLE_DEDUP_KEEP_BEST = r"""
-WITH t AS (
-  SELECT doc_id, text,
-         md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp,
-         CASE WHEN length(trim(lower(text))) = 0 THEN 0
-              ELSE len(string_split_regex(trim(lower(text)), '\s+')) END AS n_tokens,
-         CASE WHEN length(text) = 0 THEN 0.0
-              ELSE CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS DOUBLE)
-                   / CAST(length(text) AS DOUBLE) END AS punct_ratio,
-         len(regexp_extract_all(lower(text),
-             '\b(the|a|an|and|or|of|to|in|is|it|on|for)\b')) AS stop_hits
-  FROM documents WHERE text IS NOT NULL
-),
-staged AS (
-  -- DISTINCT: re-ingested duplicate rows are one document (duprows)
-  SELECT DISTINCT doc_id, fp,
-         0.4 * least(1.0, CAST(n_tokens AS DOUBLE) / 100.0)
-         + 0.3 * (1.0 - punct_ratio)
-         + 0.3 * least(1.0, (CASE WHEN n_tokens = 0 THEN 0.0
-                     ELSE CAST(stop_hits AS DOUBLE) / CAST(n_tokens AS DOUBLE) END)
-                     * 5.0) AS q
-  FROM t
-),
-ranked AS (
-  SELECT fp, doc_id, q,
-         ROW_NUMBER() OVER (PARTITION BY fp ORDER BY q DESC, doc_id) AS rn
-  FROM staged
-)
--- aggregate over ranked DIRECTLY (ranked ≡ staged row-for-row): the
--- old JOIN back to staged on (fp, doc_id) fanned out quadratically
--- when a drifted re-ingest kept the same (doc_id, fp) with two
--- distinct q values (whitespace-only body change: identical collapsed
--- fingerprint, different raw punct_ratio) — r8 code-review finding
-SELECT fp, count(*) AS copies,
-       max(CASE WHEN rn = 1 THEN doc_id END) AS keep_id,
-       max(q) AS best_quality
-FROM ranked
-GROUP BY fp
-"""
-
-
-def q_grouped_agg_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPED_AGG pandas UDAF as a first-class aggregate expression —
-    the fourth UDF quadrant (SURVEY.md §2.12) next to scalar pandas
-    UDFs, grouped-map ``applyInPandas``, and Python UDTFs.
-
-    The custom aggregates (quantity-weighted mean price, group time
-    span) sit in the SAME ``agg(...)`` as built-ins, and the weighted
-    mean also ships a declarative SUM-algebra twin column so the
-    equivalence is auditable inside one oracled result. Determinism:
-    both UDAFs do exact integer arithmetic internally and defer one
-    IEEE division to the end (``functions/udaf.py``), so the hash
-    matches the ANSI oracle bit-for-bit under any row order.
-
-    Scale note (documented in the module): GROUPED_AGG has no map-side
-    partial — the full column slice shuffles. Keep it for custom math
-    on moderate-cardinality groups; the declarative twin is the shape
-    to prefer when SUM-algebra can express the semantics.
-    """
-    from fink_broker_spark.functions.udaf import (
-        span_days,
-        weighted_mean_price,
-    )
-
-    # NULL price/quantity rows excluded on both sides (nullmeasure):
-    # the UDAF's numpy path would turn NULLs into NaNs inside int
-    # casts, and the SQL twin's pairwise NULL-skip differs from n
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_extendedprice").isNotNull()
-        & F.col("l_quantity").isNotNull()
-    )
-    # floor(x + 0.5), not rint: convention-free on .5 ties (see
-    # q_product_profit note); the UDAF uses the same tree internally
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-    qty = F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long")
-    keys = ["l_returnflag", "l_linestatus"]
-    # API constraint worth pinning: GROUPED_AGG pandas UDFs cannot share
-    # an agg(...) with non-pandas aggregates (INVALID_PANDAS_UDF_PLACEMENT)
-    # — so the UDAF plan and the declarative twin aggregate separately
-    # and broadcast-join on the 6-row group key.
-    custom = li.groupBy(*keys).agg(
-        weighted_mean_price("l_extendedprice", "l_quantity").alias(
-            "wavg_price"
-        ),
-        span_days("l_shipdate").alias("ship_span_days"),
-    )
-    decl = li.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("n"),
-        (
-            F.sum(cents * qty).cast("double")
-            / (F.sum(qty) * 100).cast("double")
-        ).alias("wavg_price_decl"),
-    )
-    return custom.join(F.broadcast(decl), on=keys).select(
-        *keys, "n", "wavg_price", "ship_span_days", "wavg_price_decl"
-    )
-
-
-ORACLE_GROUPED_AGG_UDAF = """
-WITH t AS (
-  SELECT l_returnflag, l_linestatus,
-         CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents,
-         CAST(FLOOR(l_quantity + 0.5) AS BIGINT) AS qty,
-         CAST(epoch(l_shipdate) AS BIGINT) AS ep
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-)
-SELECT l_returnflag, l_linestatus,
-       count(*) AS n,
-       CAST(SUM(cents * qty) AS DOUBLE)
-         / CAST(SUM(qty) * 100 AS DOUBLE) AS wavg_price,
-       (MAX(ep) - MIN(ep)) // 86400 AS ship_span_days,
-       CAST(SUM(cents * qty) AS DOUBLE)
-         / CAST(SUM(qty) * 100 AS DOUBLE) AS wavg_price_decl
-FROM t
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup semantic deduplication (``ext/semdedup.py``): k-means
-    cells assigned by a scan-side centroid expression, greedy
-    cosine-leader keep/drop inside each cell via one ``applyInPandas``
-    shuffle. Result: per-cluster dedup accounting plus the global
-    keep total (stable output shape for the rows-only driver check;
-    exact per-id equivalence against an independent brute-force of the
-    keep rule is asserted in ``tests/test_ext.py``).
-
-    Rows-only by design: the k-means model fit (sampled Lloyd) is not
-    ANSI-expressible, so no DuckDB oracle exists for the cluster
-    labels. This mirrors ``ivf_ann_topk``'s whitelisting; the
-    cell-bucketed dedup SEMANTICS are pinned exact-value by the
-    ``semantic_dedup_portable`` twin (md5-first cells, integer-cosine
-    pairwise drop rule).
-    """
-    from fink_broker_spark.ext.ann import EmptyCorpusError
-    from fink_broker_spark.ext.semdedup import semantic_dedup
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    try:
-        flags = semantic_dedup(emb, threshold=0.95, nlist=8, seed=42)
-    except EmptyCorpusError:
-        # empty lake: nothing to cluster (emptystream)
-        return spark.createDataFrame(
-            [], "cluster int, n_items long, n_kept long"
-        )
-    return flags.groupBy("cluster").agg(
-        F.count(F.lit(1)).alias("n_items"),
-        F.sum(F.col("keep").cast("long")).alias("n_kept"),
-    )
-
-
-def q_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket co-occurrence mining (association-rule support
-    counting): part pairs that ship together in the same order, with a
-    minimum-support cut and a deterministic top-50.
-
-    Plan (single-scan, two shuffles — NOT the classic self-join, which
-    scans and shuffles the fact twice): collect each basket with ONE
-    ``collect_set`` shuffle on ``l_orderkey`` (dedup is free — sets),
-    expand in-array pairs map-side with nested ``transform``/``slice``
-    HOFs (codegen, never a join), then one partial-aggregating shuffle
-    on the pair. Pair fan-out is Σ|basket|²/2 (mean basket ≈ 4); the
-    support filter prunes before the final TakeOrderedAndProject.
-    100 TB posture: a pathological giant basket (hot order) inflates
-    quadratically — cap with ``slice(parts, 1, B)`` after the sort,
-    the same skew posture as ``max_df`` in jaccard_neardup
-    (SCALING.md). The DuckDB oracle *is* the classic self-join, so the
-    HOF expansion is verified against the textbook formulation.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    # keyed spread (guide §2.5): the partial collect_set and the
-    # in-array pair fan-out below otherwise run in the scan stage's
-    # 1-3 tasks; HashPartitioning(l_orderkey) satisfies the basket
-    # aggregate's clustering so the whole chain runs at core width
-    # off ONE exchange of the 2-column rows (no-op on a wide scan)
-    baskets = ensure_keyed_parallelism(
-        li.select("l_orderkey", "l_partkey"), "l_orderkey"
-    ).groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("parts")
-    )
-    parts = F.col("parts")
-    pair_structs = F.flatten(
-        F.transform(
-            parts,
-            lambda x, i: F.transform(
-                F.slice(parts, i + F.lit(2), F.size(parts)),
-                lambda y: F.struct(
-                    x.alias("part_a"), y.alias("part_b")
-                ),
-            ),
-        )
-    )
-    return (
-        baskets.select(F.explode(pair_structs).alias("p"))
-        # extract scalars BEFORE the groupBy: grouping directly on
-        # struct-field expressions puts the field access inside the
-        # aggregate's grouping projection and costs ~2x (measured at
-        # 10x: 10.9 s -> 4.9 s, on par with the classic self-join but
-        # with half the scans)
-        .select(
-            F.col("p.part_a").alias("part_a"),
-            F.col("p.part_b").alias("part_b"),
-        )
-        .groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).alias("support"))
-        .filter(F.col("support") >= 2)
-        .orderBy(F.desc("support"), "part_a", "part_b")
-        .limit(50)
-    )
-
-
-ORACLE_BASKET_PAIRS = """
-WITH b AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-SELECT a.l_partkey AS part_a, c.l_partkey AS part_b,
-       count(*) AS support
-FROM b a JOIN b c
-  ON a.l_orderkey = c.l_orderkey AND a.l_partkey < c.l_partkey
-GROUP BY 1, 2
-HAVING count(*) >= 2
-ORDER BY support DESC, part_a, part_b
-LIMIT 50
-"""
-
-
-def q_resample_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-key time-series resampling to a daily grid with forward
-    fill — the light-curve regularization every astronomy feature
-    extractor wants (the reference consumes irregular per-object
-    epochs, e.g. ``fink_broker/science.py`` magnitude histories) and
-    the gap-filling step of any training-data timeline.
-
-    Three declarative stages, no UDF: (1) collapse to one value per
-    (user, day) — last observation wins, ties broken by event_id via
-    one row_number window; (2) build each user's calendar with
-    ``sequence(min_day, max_day)`` + explode — the grid is generated
-    where the data lives, never on the driver; (3) forward-fill with
-    ``last(value, ignorenulls=True)`` over an unbounded-preceding
-    window. Shuffles: one per window partition key (user) and the
-    grid join — all on the same key, so AQE coalesces. Gap rows keep
-    ``is_gap = true`` for downstream masking.
-    """
-    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 20)
-    w = Window.partitionBy("user_id", "day").orderBy(
-        F.desc("ts"), F.desc("event_id")
-    )
-    daily = (
-        ev.select("user_id", F.to_date("ts").alias("day"), "ts", "event_id",
-                  "value")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "day", F.col("value").alias("day_value"))
-    )
-    grid = (
-        daily.groupBy("user_id")
-        .agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
-        .select(
-            "user_id",
-            F.explode(F.sequence("d0", "d1")).alias("day"),
-        )
-    )
-    fillw = (
-        Window.partitionBy("user_id")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        grid.join(daily, on=["user_id", "day"], how="left")
-        .select(
-            "user_id",
-            "day",
-            F.last("day_value", ignorenulls=True).over(fillw).alias("value"),
-            F.col("day_value").isNull().alias("is_gap"),
-        )
-    )
-
-
-ORACLE_RESAMPLE_FILL = """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS day, value AS day_value
-  FROM (
-    SELECT user_id, ts, event_id, value,
-           row_number() OVER (PARTITION BY user_id, CAST(ts AS DATE)
-                              ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
-    FROM events WHERE user_id < 20
-  ) WHERE rn = 1
-),
-grid AS (
-  SELECT user_id, CAST(UNNEST(generate_series(CAST(d0 AS TIMESTAMP),
-                                              CAST(d1 AS TIMESTAMP),
-                                              INTERVAL 1 DAY)) AS DATE) AS day
-  FROM (SELECT user_id, MIN(day) AS d0, MAX(day) AS d1
-        FROM daily GROUP BY user_id)
-)
-SELECT g.user_id, g.day,
-       last_value(d.day_value IGNORE NULLS) OVER (
-         PARTITION BY g.user_id ORDER BY g.day
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value,
-       d.day_value IS NULL AS is_gap
-FROM grid g LEFT JOIN daily d
-  ON g.user_id = d.user_id AND g.day = d.day
-"""
-
-
-def q_regression_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group linear trend + correlation from exact-integer moment
-    sums — the aggregate-regression family (slope/intercept/corr) in
-    the decimal-exact oracle discipline.
-
-    ``x`` is the whole-day epoch index (exact long), ``y`` the event
-    value integerized to milli-units (3 decimals → exact int64). The
-    five moment sums are exact integers, products cross through
-    DECIMAL(38,0)/HUGEINT (no float accumulation order anywhere); the
-    final
-    slope/intercept/corr are fixed IEEE expression trees over
-    exact-valued doubles, so Spark and DuckDB agree bit-for-bit.
-    Native ``F.regr_slope``/``regr_intercept``/``corr`` are asserted
-    ≈-equal in ``tests/test_operators.py`` (they accumulate in float —
-    correct, but not hash-stable across engines; this decomposition is
-    how to make regression aggregates oracle-checkable).
-
-    Scale: one partial-aggregating shuffle on the group key; the
-    moment sums are 5 numbers per group — the same mergeable-partials
-    shape as ``incremental_stats``.
-
-    Domain: finite values only (NULL rows kept, as before): Spark's
-    floor(double) silently maps NaN→0 / ±Inf→±Long.MAX where DuckDB's
-    BIGINT cast hard-errors (nanemb driftlab layout, r10)."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNull() | _finite("value")
-    )
-    x = F.floor(F.unix_micros(F.col("ts")) / F.lit(86_400_000_000)).cast(
-        "long"
-    )
-    # milli-unit integerization: value carries 3 decimals, so ym is an
-    # exact int64 and every moment sum is exact integer arithmetic;
-    # products go through DECIMAL(38,0) (Spark) / HUGEINT (DuckDB) so
-    # nothing overflows or rounds before the final double conversion
-    ym = F.floor(F.col("value") * 1000 + F.lit(0.5)).cast("long")
-    g = (
-        ev.select(F.col("event_type"), x.alias("x"), ym.alias("ym"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("x").alias("sx"),
-            F.sum("ym").alias("sym"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-            F.sum(F.col("ym") * F.col("ym")).alias("syym"),
-            F.sum(F.col("x") * F.col("ym")).alias("sxym"),
-        )
-    )
-
-    def big(c):
-        return F.col(c).cast("decimal(38,0)")
-
-    num_m = (big("n") * big("sxym") - big("sx") * big("sym")).cast("double")
-    den_x = (big("n") * big("sxx") - big("sx") * big("sx")).cast("double")
-    den_ym = (big("n") * big("syym") - big("sym") * big("sym")).cast(
-        "double"
-    )
-    slope = num_m / (den_x * F.lit(1000.0))
-    # zero x-variance (all events on one day: onerow/constant lakes)
-    # has no trend line: NULL, never x/0.0 (ANSI throws, DuckDB ±inf)
-    return g.select(
-        "event_type",
-        "n",
-        F.when(den_x > 0, slope).alias("slope"),
-        F.when(
-            den_x > 0,
-            (
-                F.col("sym").cast("double") / F.lit(1000.0)
-                - slope * F.col("sx").cast("double")
-            )
-            / F.col("n").cast("double"),
-        ).alias("intercept"),
-        F.when((den_x > 0) & (den_ym > 0), num_m / F.sqrt(den_x * den_ym)).alias(
-            "corr"
-        ),
-    )
-
-
-ORACLE_REGRESSION_TREND = """
-WITH t AS (
-  -- finite-value domain, mirroring the engine (nanemb layout, r10)
-  SELECT event_type,
-         CAST(FLOOR(epoch_us(ts) / 86400000000) AS BIGINT) AS x,
-         CAST(FLOOR(value * 1000 + 0.5) AS BIGINT) AS ym
-  FROM events
-  WHERE value IS NULL OR isfinite(value)
-),
-g AS (
-  SELECT event_type, count(*) AS n, SUM(x) AS sx, SUM(ym) AS sym,
-         SUM(x * x) AS sxx, SUM(ym * ym) AS syym, SUM(x * ym) AS sxym
-  FROM t GROUP BY event_type
-)
-SELECT event_type, n,
-       CASE WHEN n * sxx - sx * sx > 0 THEN
-         CAST(n * sxym - sx * sym AS DOUBLE)
-           / (CAST(n * sxx - sx * sx AS DOUBLE) * 1000.0) END AS slope,
-       CASE WHEN n * sxx - sx * sx > 0 THEN
-         (CAST(sym AS DOUBLE) / 1000.0
-          - (CAST(n * sxym - sx * sym AS DOUBLE)
-             / (CAST(n * sxx - sx * sx AS DOUBLE) * 1000.0))
-            * CAST(sx AS DOUBLE))
-           / CAST(n AS DOUBLE) END AS intercept,
-       CASE WHEN n * sxx - sx * sx > 0 AND n * syym - sym * sym > 0 THEN
-         CAST(n * sxym - sx * sym AS DOUBLE)
-           / SQRT(CAST(n * sxx - sx * sx AS DOUBLE)
-                  * CAST(n * syym - sym * sym AS DOUBLE)) END AS corr
-FROM g
-"""
-
-
-_BM25_TERMS = ["hash", "join", "scan", "vector"]
-
-
-def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Okapi BM25 top-20 lexical retrieval over the documents table
-    (``ext/retrieval.py:bm25_topk``) — the sparse-retrieval workhorse a
-    RAG corpus builder runs at scale. One tokenize+explode pass feeds
-    doc lengths and term frequencies; corpus stats are a 1-row
-    broadcast; the query-term filter prunes the tf shuffle BEFORE it
-    moves; final top-k is TakeOrderedAndProject. Per-term scores round
-    to decimal(18,9) pre-sum (exact, order-independent)."""
-    from fink_broker_spark.ext.retrieval import bm25_topk
-
-    docs = load_table(spark, sf_dir, "documents")
-    return bm25_topk(docs, _BM25_TERMS, k=20)
-
-
-def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR-style importance resampling weights (Xie et al. 2023,
-    ``ext/retrieval.py:dsir_importance``): score every non-English
-    document by how English-corpus-like its unigram distribution is
-    (add-α smoothed log-ratio of target vs raw token probabilities),
-    return the 50 most target-like — the documents importance
-    resampling would pull into the training mix first. Single
-    tokenize pass; target and raw counts ride one shuffle via
-    ``count_if``; totals broadcast; decimal-exact log-ratio sums."""
-    from fink_broker_spark.ext.retrieval import dsir_importance
-
-    docs = load_table(spark, sf_dir, "documents")
-    return dsir_importance(docs, F.col("lang") == "en", k=50)
-
-
-def q_phase_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Phase-folded light-curve binning (``operators/timeseries.py:
-    phase_fold``): fold the event stream on a 1-day trial period into 8
-    phase bins per event type — the variable-star folding shape behind
-    the reference's downstream classifier features. Bin assignment is
-    exact integer-microsecond modular arithmetic (bit-identical across
-    engines); per-bin means are decimal-exact."""
-    from fink_broker_spark.operators.timeseries import phase_fold
-
-    ev = load_table(spark, sf_dir, "events")
-    folded = phase_fold(ev, "ts", period_s=86_400, nbins=8)
-    return (
-        folded.groupBy("event_type", "phase_bin")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            # scale-9 summand round: rounding a double AT the scale
-            # where the data can sit on halves (scale 6 for generator-
-            # quantized values) splits engines — Spark rounds the exact
-            # binary expansion, DuckDB rounds with float ops. Three
-            # guard digits put the decision point far from the data's
-            # half-boundaries (driftlab 'boundary' layout regression)
-            F.sum(F.round("value", 9).cast("decimal(18,9)"))
-            .cast("decimal(28,9)")
-            .alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "phase_bin",
-            "n",
-            # DOUBLE division of exact operands, not DECIMAL/BIGINT:
-            # DuckDB divides decimals in double while Spark divides
-            # exactly with HALF_UP (see mean_logp note) — the r04 red.
-            # Scale-2 round first: wide-decimal → double double-rounds
-            # in DuckDB once the unscaled value outgrows 2^53
-            (F.round("sum_value", 2).cast("double") / F.col("n"))
-            .alias("mean_value"),
-        )
-    )
-
-
-ORACLE_PHASE_FOLD = """
-WITH f AS (
-  -- double-% = POSITIVE mod, mirroring Spark's pmod: a bare % keeps
-  -- the dividend's sign, which flips the fold for pre-1970 epochs
-  -- (epoch68 driftlab layout) — a phase must live in [0, period)
-  SELECT event_type,
-         CAST((((epoch_us(ts) % 86400000000 + 86400000000)
-                 % 86400000000) * 8) // 86400000000 AS INT)
-             AS phase_bin,
-         value
-  FROM events
-)
-SELECT event_type, phase_bin, count(*) AS n,
-       CAST(ROUND(CAST(SUM(CAST(CASE WHEN isfinite(value)
-          THEN round(value, 9) END AS DECIMAL(18,9)))
-                 AS DECIMAL(28,9)), 2) AS DOUBLE) / count(*)
-           AS mean_value
-FROM f
-GROUP BY event_type, phase_bin
-"""
-
-
-def q_interpolate_ephemeris(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of LINEAR INTERPOLATION (``operators/timeseries.py:
-    interpolate_at``) — the ephemeris-evaluation shape of SSO
-    enrichment: each 'click' observation gets the 'view' series value
-    interpolated at its exact timestamp, per user. Union+window plan:
-    ONE shuffle on the key, no join, O(1) window state per row (the
-    running bracketing sample), clamped (not extrapolated) outside the
-    reference range. Per-row double interpolation is order-free; the
-    hash compares the RAW double (driftlab boundary-layout evidence:
-    a terminal decimal(18,6) cast splits engines when a clamped row
-    returns an endpoint sitting on a scale-6 half — Spark rounds the
-    exact binary expansion HALF_UP, DuckDB rounds with float ops)."""
-    from fink_broker_spark.operators.timeseries import interpolate_at
-
-    ev = load_table(spark, sf_dir, "events")
-    obs = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    ref = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "ts", "value"
-    )
-    out = interpolate_at(obs, ref, "user_id", "ts", "value")
-    return out.select(
-        "event_id",
-        "user_id",
-        # raw double: the interp op tree is IDENTICAL on both sides
-        # (exact integer-µs operands → correctly-rounded IEEE ops), so
-        # the doubles are bit-equal; BOTH terminal round(double, 6)
-        # AND a decimal(18,6) cast are engine-splitting on
-        # half-boundary data (driftlab boundary layout: clamped rows
-        # surface endpoint values on scale-6 halves)
-        F.col("interp_value"),
-    )
-
-
-ORACLE_INTERPOLATE_EPHEMERIS = """
-WITH obs AS (
-  SELECT user_id AS k, epoch_us(ts) AS t, 1 AS is_obs,
-         CAST(NULL AS DOUBLE) AS rv, event_id
-  FROM events WHERE event_type = 'click'
-),
-ref AS (
-  SELECT user_id AS k, epoch_us(ts) AS t, 0 AS is_obs,
-         CAST(value AS DOUBLE) AS rv, CAST(NULL AS BIGINT) AS event_id
-  FROM events WHERE event_type = 'view'
-),
-u AS (SELECT * FROM obs UNION ALL SELECT * FROM ref),
-ann AS (
-  SELECT *,
-    last_value(rv IGNORE NULLS) OVER w_back AS prev_val,
-    last_value(CASE WHEN is_obs = 0 AND rv IS NOT NULL THEN t END
-               IGNORE NULLS) OVER w_back AS prev_ts,
-    first_value(rv IGNORE NULLS) OVER w_fwd AS next_val,
-    first_value(CASE WHEN is_obs = 0 AND rv IS NOT NULL THEN t END
-                IGNORE NULLS) OVER w_fwd AS next_ts
-  FROM u
-  WINDOW
-    w_back AS (PARTITION BY k ORDER BY t, is_obs, rv
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-    w_fwd AS (PARTITION BY k ORDER BY t, is_obs, rv
-              ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-)
-SELECT event_id, k AS user_id,
-       CASE
-         WHEN prev_ts IS NULL THEN next_val
-         WHEN next_ts IS NULL OR next_ts = prev_ts THEN prev_val
-         ELSE prev_val + (next_val - prev_val)
-              * (CAST(t - prev_ts AS DOUBLE)
-                 / CAST(next_ts - prev_ts AS DOUBLE))
-       END AS interp_value
-FROM ann WHERE is_obs = 1
-"""
-
-
-def q_quality_logistic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Logistic quality-classifier scoring (the fasttext-classifier
-    shape of C4/CCNet pipelines, with a fixed literal weight vector —
-    model serving, not model fitting): engineered per-row features
-    (capped length, punctuation ratio, boosted stopword ratio) →
-    sigmoid → per-(source, decile) histogram. Pure Column math in one
-    codegen stage, integer-exact histogram counts; the per-row doubles
-    never cross an aggregation unrounded."""
-    docs = load_table(spark, sf_dir, "documents")
-    n_tok = token_count_expr("text").cast("double")
-    z = (
-        F.lit(-1.0)
-        + F.lit(2.5) * F.least(F.lit(1.0), n_tok / F.lit(100.0))
-        - F.lit(4.0) * punct_ratio_expr("text")
-        + F.lit(3.0)
-        * F.least(F.lit(1.0), stopword_ratio_expr("text") * F.lit(5.0))
-    )
-    score = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-    # decile from the ROUNDED score as exact DECIMAL math: binning the
-    # raw exp()-derived double would split engines when score*10 sits
-    # within an ulp of an integer boundary (Java Math.exp vs C libm
-    # exp differ in the last ulp) — the same boundary hazard phase_fold
-    # avoids with integral DIV
-    score_dec = F.round(score, 6).cast("decimal(9,6)")
-    scored = docs.select(
-        "source",
-        F.least(F.lit(9), F.floor(score_dec * 10).cast("int")).alias(
-            "decile"
-        ),
-        score_dec.cast("double").alias("score_r"),
-    )
-    return scored.groupBy("source", "decile").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.min("score_r").alias("min_score"),
-        F.max("score_r").alias("max_score"),
-    )
-
-
-ORACLE_QUALITY_LOGISTIC = r"""
-WITH t AS (
-  SELECT source,
-         CASE WHEN length(trim(lower(text))) = 0 THEN 0
-              ELSE len(string_split_regex(trim(lower(text)), '\s+'))
-         END AS n_tokens,
-         CASE WHEN length(text) = 0 THEN 0.0
-              ELSE CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))
-                        AS DOUBLE) / CAST(length(text) AS DOUBLE)
-         END AS punct_ratio,
-         len(regexp_extract_all(lower(text),
-             '\b(the|a|an|and|or|of|to|in|is|it|on|for)\b')) AS stop_hits
-  FROM documents
-),
-z AS (
-  SELECT source,
-         -1.0 + 2.5 * least(1.0, CAST(n_tokens AS DOUBLE) / 100.0)
-         - 4.0 * punct_ratio
-         + 3.0 * least(1.0, (CASE WHEN n_tokens = 0 THEN 0.0
-               ELSE CAST(stop_hits AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-             END) * 5.0) AS zval
-  FROM t
-),
-s AS (
-  SELECT source,
-         CAST(round(1.0 / (1.0 + exp(-zval)), 6) AS DECIMAL(9,6))
-             AS score_dec
-  FROM z
-)
-SELECT source,
-       least(9, CAST(floor(score_dec * 10) AS INT)) AS decile,
-       count(*) AS n_docs,
-       min(CAST(score_dec AS DOUBLE)) AS min_score,
-       max(CAST(score_dec AS DOUBLE)) AS max_score
-FROM s
-GROUP BY source, least(9, CAST(floor(score_dec * 10) AS INT))
-"""
-
-
-_PERIODOGRAM_PERIODS = [3_600, 21_600, 86_400, 604_800]
-
-
-def q_periodogram_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classical periodogram power at four literal trial periods per
-    event type (``operators/timeseries.py:periodogram``) — the
-    period-search primitive of variable-star pipelines. Grid explode
-    (constant fan-out) + ONE (key, period) shuffle of decimal-rounded
-    sin/cos terms; the phase angle is integer-pmod-reduced BEFORE the
-    trig call so large-epoch libm drift cannot split the engines."""
-    from fink_broker_spark.operators.timeseries import periodogram
-
-    ev = load_table(spark, sf_dir, "events")
-    out = periodogram(
-        ev, "event_type", "ts", "value", _PERIODOGRAM_PERIODS
-    )
-    return out.select(
-        F.col("k").alias("event_type"), "period_s", "n", "power"
-    )
-
-
-def _periodogram_oracle() -> str:
-    two_pi = 6.283185307179586
-    # double-% = POSITIVE mod (pmod twin): a bare % goes negative on
-    # pre-1970 epochs — mathematically the trig agrees by periodicity,
-    # but the libm ARGUMENTS would differ and parity would then hang
-    # on the scale-7 round absorbing the ulp gap (epoch68 driftlab)
-    arms = ",\n         ".join(
-        f"{{'period_s': {p}, 'angle': (CAST((epoch_us(ts) % {p * 1_000_000}"
-        f" + {p * 1_000_000}) % {p * 1_000_000} "
-        f"AS DOUBLE) / {float(p * 1_000_000)}) * {two_pi}}}"
-        for p in _PERIODOGRAM_PERIODS
-    )
-    return f"""
-WITH expanded AS (
-  SELECT event_type, value, unnest([
-         {arms}
-       ]) AS pf
-  FROM events
-),
-terms AS (
-  SELECT event_type, pf.period_s AS period_s,
-         -- isfinite guard mirrors Spark's double→decimal cast, which
-         -- NULLs NaN/Inf where this cast hard-errors (nanemb, r10)
-         CAST(CASE WHEN isfinite(value)
-              THEN round(value * cos(pf.angle), 7) END
-              AS DECIMAL(18,7)) AS c,
-         CAST(CASE WHEN isfinite(value)
-              THEN round(value * sin(pf.angle), 7) END
-              AS DECIMAL(18,7)) AS s
-  FROM expanded
-),
-sums AS (
-  SELECT event_type, period_s, count(*) AS n,
-         CAST(SUM(c) AS DECIMAL(28,7)) AS sc,
-         CAST(SUM(s) AS DECIMAL(28,7)) AS ss
-  FROM terms GROUP BY event_type, period_s
-)
-SELECT event_type, period_s, n,
-       CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE)
-       + CAST(ss AS DOUBLE) * CAST(ss AS DOUBLE) AS power
-FROM sums
-"""
-
-
-def q_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicated-span coverage per document (``ext/dedup.py:
-    dup_span_coverage``): fraction of each doc's sliding 10-token
-    windows appearing verbatim in at least one other document — the
-    detection half of exact-substring dedup (Lee et al. 2022) as a
-    corpus-wide window-frequency aggregate (suffix-array-free). Window
-    digests are md5 (cross-engine bit-identical); explode ∝ tokens,
-    then one digest shuffle + one per-doc re-aggregate. Returns the 50
-    most-covered docs (TakeOrdered)."""
-    from fink_broker_spark.ext.dedup import dup_span_coverage
-
-    docs = load_table(spark, sf_dir, "documents")
-    cov = dup_span_coverage(docs, n=10)
-    return cov.orderBy(
-        F.col("coverage").desc(), F.col("doc_id")
-    ).limit(50)
-
-
-ORACLE_DUP_SPAN_COVERAGE = r"""
-WITH tok AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
-  FROM documents WHERE length(trim(lower(text))) > 0
-),
-w AS (
-  SELECT doc_id,
-         md5(array_to_string(toks[i:i+9], ' ')) AS w
-  FROM tok, UNNEST(range(1, greatest(len(toks) - 10 + 2, 1))) AS t(i)
-),
-freq AS (SELECT w, count(DISTINCT doc_id) AS ndocs FROM w GROUP BY w),
-cov AS (
-  SELECT doc_id, count(*) AS n_windows,
-         count(*) FILTER (WHERE ndocs >= 2) AS n_dup_windows
-  FROM w JOIN freq USING (w)
-  GROUP BY doc_id
-)
-SELECT doc_id, n_windows, n_dup_windows,
-       CAST(n_dup_windows AS DOUBLE)
-           / CAST(n_windows AS DOUBLE) AS coverage
-FROM cov
-ORDER BY coverage DESC, doc_id
-LIMIT 50
-"""
-
-
-def q_domain_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain quota sampling: cap every source at its 10 best
-    documents by a deterministic (quality desc, doc_id) rule — the
-    data-governance cap a corpus mixer applies so no single domain
-    floods the training mix. One row_number window per source
-    partition; the quota filter prunes before anything else moves.
-    At 100 TB the window state is one counter per (bounded) source."""
-    docs = load_table(spark, sf_dir, "documents")
-    scored = docs.select(
-        "doc_id",
-        "source",
-        token_count_expr("text").alias("n_tokens"),
-    )
-    w = Window.partitionBy("source").orderBy(
-        F.col("n_tokens").desc(), F.col("doc_id")
-    )
-    return (
-        scored.withColumn("rank_in_source", F.row_number().over(w))
-        .filter(F.col("rank_in_source") <= 10)
-        .select("source", "rank_in_source", "doc_id", "n_tokens")
-    )
-
-
-ORACLE_DOMAIN_QUOTA_SAMPLE = r"""
-WITH scored AS (
-  SELECT doc_id, source,
-         CASE WHEN length(trim(lower(text))) = 0 THEN 0
-              ELSE len(string_split_regex(trim(lower(text)), '\s+'))
-         END AS n_tokens
-  FROM documents
-),
-ranked AS (
-  SELECT source, doc_id, CAST(n_tokens AS INT) AS n_tokens,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY n_tokens DESC, doc_id)
-             AS rank_in_source
-  FROM scored
-)
-SELECT source, rank_in_source, doc_id, n_tokens
-FROM ranked WHERE rank_in_source <= 10
-"""
-
-
-def q_fading_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-object trailing-window trend: the fading-transient detector —
-    fit a slope over each user's LAST 20 observations and surface the
-    50 steepest declines (the alerts a follow-up scheduler would chase
-    first; same science shape as a magnitude-decline cut on recent
-    detections).
-
-    Plan: one row_number window on (user, ts desc) keeps the trailing
-    20 rows (state = one counter per key), then ONE per-user moment-sum
-    aggregate in the ``regression_trend`` decimal-exact discipline
-    (x = in-window time index, exact small int; y integerized to
-    milli-units; products cross DECIMAL(38,0)) and a TakeOrdered
-    bottom-50. No per-key collect, no UDF; at 100 TB this is a window
-    + aggregate over the same key partitioning — one shuffle total."""
-    ev = load_table(spark, sf_dir, "events")
-    # symmetric µs ordering key (see q_event_transitions note)
-    w = Window.partitionBy("user_id").orderBy(
-        F.unix_micros("ts").desc(), F.col("event_id").desc()
-    )
-    recent = (
-        ev.select("user_id", "event_id", "ts", "value")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 20)
-        .select(
-            "user_id",
-            (F.lit(21) - F.col("rn")).cast("long").alias("x"),
-            F.floor(F.col("value") * 1000 + F.lit(0.5)).cast("long").alias("ym"),
-        )
-    )
-    g = recent.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("ym").alias("sym"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("x") * F.col("ym")).alias("sxym"),
-    )
-
-    def big(c):
-        return F.col(c).cast("decimal(38,0)")
-
-    num = (big("n") * big("sxym") - big("sx") * big("sym")).cast("double")
-    den = (big("n") * big("sxx") - big("sx") * big("sx")).cast("double")
-    slope = num / (den * F.lit(1000.0))
-    return (
-        g.filter(F.col("n") >= 5)
-        .select("user_id", "n", slope.alias("slope"))
-        .orderBy("slope", "user_id")
-        .limit(50)
-    )
-
-
-ORACLE_FADING_TREND = """
-WITH recent AS (
-  SELECT user_id,
-         CAST(21 - row_number() OVER (PARTITION BY user_id
-                                      ORDER BY epoch_us(ts) DESC,
-                                               event_id DESC)
-              AS BIGINT) AS x,
-         CAST(FLOOR(value * 1000 + 0.5) AS BIGINT) AS ym
-  FROM events
-  QUALIFY x >= 1
-),
-g AS (
-  SELECT user_id, count(*) AS n, sum(x) AS sx, sum(ym) AS sym,
-         sum(x * x) AS sxx, sum(x * ym) AS sxym
-  FROM recent GROUP BY user_id
-)
-SELECT user_id, n,
-       CAST(CAST(n AS DECIMAL(38,0)) * CAST(sxym AS DECIMAL(38,0))
-            - CAST(sx AS DECIMAL(38,0)) * CAST(sym AS DECIMAL(38,0))
-            AS DOUBLE)
-       / (CAST(CAST(n AS DECIMAL(38,0)) * CAST(sxx AS DECIMAL(38,0))
-               - CAST(sx AS DECIMAL(38,0)) * CAST(sx AS DECIMAL(38,0))
-               AS DOUBLE) * 1000.0) AS slope
-FROM g WHERE n >= 5
-ORDER BY slope, user_id
-LIMIT 50
-"""
-
-
-def q_data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deequ-style data-quality constraint metrics in ONE aggregate
-    pass (the pre-training validation gate a pipeline runs before
-    admitting a day's data): per tracked column — completeness (null
-    count), exact distinctness, and for numerics the min/max envelope
-    and a decimal-exact mean. All metrics ride a single scan + single
-    (map-side-partial) aggregate; ``count_distinct`` over several
-    columns expands map-side, never re-scans. Output is long-form
-    (column, metric, value) so new checks append rows, not columns."""
-    ev = load_table(spark, sf_dir, "events")
-    agg = ev.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count("event_id").alias("nn_event_id"),
-        F.count("user_id").alias("nn_user_id"),
-        F.count("value").alias("nn_value"),
-        F.count("event_type").alias("nn_event_type"),
-        F.count_distinct("event_id").alias("d_event_id"),
-        F.count_distinct("user_id").alias("d_user_id"),
-        F.count_distinct("event_type").alias("d_event_type"),
-        F.min("value").alias("min_value"),
-        F.max("value").alias("max_value"),
-        # scale-9 summand round (3 guard digits — see q_phase_fold)
-        F.sum(F.round("value", 9).cast("decimal(18,9)"))
-        .cast("decimal(28,9)")
-        .alias("sum_value"),
-    )
-    # round the scale-9 sum to scale 2 first (wide-decimal → double
-    # double-rounds in DuckDB once the unscaled value outgrows 2^53 —
-    # see q_promo_revenue), then double division of exact operands
-    mean_value = (
-        F.round("sum_value", 2).cast("double") / F.col("nn_value")
-    )
-    stacked = agg.select(
-        F.expr(
-            """stack(4,
-              'event_id',  n_rows - nn_event_id,  d_event_id,
-              'user_id',   n_rows - nn_user_id,   d_user_id,
-              'event_type',n_rows - nn_event_type,d_event_type,
-              'value',     n_rows - nn_value,     CAST(NULL AS BIGINT)
-            ) AS (column_name, n_nulls, n_distinct)"""
-        ),
-        "n_rows",
-        F.col("min_value").alias("mn"),
-        F.col("max_value").alias("mx"),
-        mean_value.alias("mean_v"),
-    )
-    return stacked.select(
-        "column_name",
-        "n_rows",
-        "n_nulls",
-        "n_distinct",
-        F.when(F.col("column_name") == "value", F.col("mn")).alias(
-            "min_value"
-        ),
-        F.when(F.col("column_name") == "value", F.col("mx")).alias(
-            "max_value"
-        ),
-        F.when(F.col("column_name") == "value", F.col("mean_v")).alias(
-            "mean_value"
-        ),
-    )
-
-
-ORACLE_DATA_QUALITY_REPORT = """
-WITH agg AS (
-  SELECT count(*) AS n_rows,
-         count(event_id) AS nn_event_id,
-         count(user_id) AS nn_user_id,
-         count(value) AS nn_value,
-         count(event_type) AS nn_event_type,
-         count(DISTINCT event_id) AS d_event_id,
-         count(DISTINCT user_id) AS d_user_id,
-         count(DISTINCT event_type) AS d_event_type,
-         min(value) AS min_value,
-         max(value) AS max_value,
-         CAST(SUM(CAST(CASE WHEN isfinite(value)
-          THEN round(value, 9) END AS DECIMAL(18,9)))
-              AS DECIMAL(28,9)) AS sum_value
-  FROM events
-),
-stacked AS (
-  SELECT * FROM (
-    SELECT 'event_id' AS column_name, n_rows,
-           n_rows - nn_event_id AS n_nulls, d_event_id AS n_distinct,
-           min_value, max_value, sum_value, nn_value FROM agg
-    UNION ALL
-    SELECT 'user_id', n_rows, n_rows - nn_user_id, d_user_id,
-           min_value, max_value, sum_value, nn_value FROM agg
-    UNION ALL
-    SELECT 'event_type', n_rows, n_rows - nn_event_type, d_event_type,
-           min_value, max_value, sum_value, nn_value FROM agg
-    UNION ALL
-    SELECT 'value', n_rows, n_rows - nn_value, CAST(NULL AS BIGINT),
-           min_value, max_value, sum_value, nn_value FROM agg
-  )
-)
-SELECT column_name, n_rows, n_nulls, n_distinct,
-       CASE WHEN column_name = 'value' THEN min_value END AS min_value,
-       CASE WHEN column_name = 'value' THEN max_value END AS max_value,
-       CASE WHEN column_name = 'value'
-            THEN CAST(ROUND(sum_value, 2) AS DOUBLE) / nn_value END
-           AS mean_value
-FROM stacked
-"""
-
-
-def q_fanout_single_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-pass multi-topic distribution accounting
-    (``distribute/fanout.py:fan_out_single_pass``): every registered
-    topic predicate evaluated in ONE scan, rows exploded into their
-    matching topics (fan-out ∝ matches, no shuffle/join before the
-    per-topic aggregate) — versus the reference's one-query-per-topic
-    distribute stage that re-scans the archive per topic. Oracle is
-    the UNION of the per-filter counts, which is exactly what N
-    separate scans would have produced."""
-    from fink_broker_spark.distribute.fanout import (
-        FilterRegistry,
-        fan_out_single_pass,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    reg = (
-        FilterRegistry()
-        .register("purchases", lambda df: F.col("event_type") == "purchase")
-        .register("high_value", lambda df: F.col("value") >= 900.0)
-        .register(
-            "weekend",
-            lambda df: F.dayofweek("ts").isin(1, 7),
-        )
-    )
-    routed = fan_out_single_pass(ev, reg, topic_col="topic")
-    return routed.groupBy("topic").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct("user_id").alias("n_users"),
-    )
-
-
-ORACLE_FANOUT_SINGLE_PASS = """
--- DuckDB dayofweek is 0-based Sunday=0 (Spark is 1-based Sunday=1);
--- HAVING mirrors groupBy's no-rows-no-group semantics for any filter
--- that matches nothing at a given scale
-SELECT 'purchases' AS topic, count(*) AS n_rows,
-       count(DISTINCT user_id) AS n_users
-FROM events WHERE event_type = 'purchase' HAVING count(*) > 0
-UNION ALL
-SELECT 'high_value', count(*), count(DISTINCT user_id)
-FROM events WHERE value >= 900.0 HAVING count(*) > 0
-UNION ALL
-SELECT 'weekend', count(*), count(DISTINCT user_id)
-FROM events WHERE dayofweek(ts) IN (0, 6) HAVING count(*) > 0
-"""
-
-
-def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic weighted sampling without replacement
-    (``ext/pipeline.py:weighted_sample_key_expr``): 50 documents drawn
-    with inclusion odds ∝ an integer quality weight (token-count
-    bands), via the Efraimidis–Spirakis sampler re-expressed as
-    max-of-w-uniforms so the priority key is EXACT integer md5
-    arithmetic — no transcendental whose last ulp could split the
-    engines, hence a full value-hash oracle for a *weighted random
-    sample*. Plan: per-row O(w) codegen key + one TakeOrdered."""
-    from fink_broker_spark.ext.pipeline import weighted_sample_key_expr
-
-    docs = load_table(spark, sf_dir, "documents")
-    # floor, not a bare int cast: Spark's double→int cast truncates but
-    # DuckDB's rounds; /64 itself is exact (power of two) so floor
-    # agrees. The cap is applied HERE so the emitted w is the weight
-    # the sampler actually honors (an uncapped display weight would
-    # claim odds the capped key does not deliver).
-    staged = docs.select(
-        "doc_id",
-        "source",
-        F.least(
-            (F.floor(token_count_expr("text") / 64) + 1).cast("int"),
-            F.lit(8),
-        ).alias("w"),
-    )
-    keyed = staged.withColumn(
-        "priority", weighted_sample_key_expr("doc_id", "w", max_weight=8)
-    )
-    return (
-        keyed.orderBy(F.col("priority").desc(), F.col("doc_id"))
-        .limit(50)
-        .select("doc_id", "source", "w", "priority")
-    )
-
-
-ORACLE_WEIGHTED_SAMPLE = r"""
-WITH staged AS (
-  SELECT doc_id, source,
-         least(CAST(floor((CASE WHEN length(trim(lower(text))) = 0 THEN 0
-               ELSE len(string_split_regex(trim(lower(text)), '\s+')) END)
-              / 64) + 1 AS INT), 8) AS w
-  FROM documents
-),
-keyed AS (
-  SELECT doc_id, source, w,
-         list_max(list_transform(
-           range(1, least(greatest(w, 1), 8) + 1),
-           j -> CAST('0x' || substr(
-                  md5(CAST(doc_id AS VARCHAR) || '#' ||
-                      CAST(j AS VARCHAR) || '#ws'), 1, 8) AS BIGINT)
-         )) AS priority
-  FROM staged
-)
-SELECT doc_id, source, w, priority FROM keyed
-ORDER BY priority DESC, doc_id
-LIMIT 50
-"""
-
-
-_FUNNEL_WINDOW_US = 7 * 86_400_000_000  # 7 days
-
-
-def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """User-journey funnel (view → click → purchase within 7 days):
-    per user, the first view starts the clock, the first later click
-    and the first later purchase inside the window advance the stage;
-    output is users per deepest-stage-reached.
-
-    Plan: ONE groupBy(user) collecting the sorted (t, type) event
-    array, then a per-row ``aggregate`` HOF walks the sequence in
-    codegen — no self-joins, no N-stage join chain (the naive funnel
-    is stage-count joins over the fact table). All timestamps are
-    exact integer microseconds, so the oracle (min-over-qualifying
-    formulation) matches bit-for-bit. At 100 TB: shuffle ∝ events,
-    per-user state = that user's event list (sessions-bounded); for
-    heavy hitters pre-aggregate per (user, day) first."""
-    ev = load_table(spark, sf_dir, "events")
-    # an unidentified (NULL-FK) user has no journey: groupBy would
-    # otherwise merge ALL anonymous events into one pseudo-user funnel
-    # while the oracle's equality joins drop them (nullfk driftlab
-    # layout, r6) — excluded explicitly on both sides
-    staged = ev.filter(F.col("user_id").isNotNull()).select(
-        "user_id",
-        F.struct(
-            F.unix_micros(F.col("ts")).alias("t"),
-            F.col("event_type").alias("et"),
-        ).alias("e"),
-    )
-    walked = (
-        staged.groupBy("user_id")
-        .agg(F.array_sort(F.collect_list("e")).alias("seq"))
-        .select(
-            "user_id",
-            F.aggregate(
-                "seq",
-                F.struct(
-                    F.lit(None).cast("long").alias("t1"),
-                    F.lit(None).cast("long").alias("t2"),
-                    F.lit(None).cast("long").alias("t3"),
-                ),
-                lambda acc, e: F.struct(
-                    F.when(
-                        acc["t1"].isNull() & (e["et"] == "view"), e["t"]
-                    )
-                    .otherwise(acc["t1"])
-                    .alias("t1"),
-                    F.when(
-                        acc["t1"].isNotNull()
-                        & acc["t2"].isNull()
-                        & (e["et"] == "click")
-                        & (e["t"] > acc["t1"])
-                        & (e["t"] <= acc["t1"] + F.lit(_FUNNEL_WINDOW_US)),
-                        e["t"],
-                    )
-                    .otherwise(acc["t2"])
-                    .alias("t2"),
-                    F.when(
-                        acc["t2"].isNotNull()
-                        & acc["t3"].isNull()
-                        & (e["et"] == "purchase")
-                        & (e["t"] > acc["t2"])
-                        & (e["t"] <= acc["t1"] + F.lit(_FUNNEL_WINDOW_US)),
-                        e["t"],
-                    )
-                    .otherwise(acc["t3"])
-                    .alias("t3"),
-                ),
-            ).alias("s"),
-        )
-    )
-    stage = (
-        F.when(F.col("s.t3").isNotNull(), 3)
-        .when(F.col("s.t2").isNotNull(), 2)
-        .when(F.col("s.t1").isNotNull(), 1)
-        .otherwise(0)
-    )
-    return walked.select(stage.alias("stage")).groupBy("stage").agg(
-        F.count(F.lit(1)).alias("n_users")
-    )
-
-
-ORACLE_FUNNEL_CONVERSION = f"""
-WITH e AS (
-  -- NULL users excluded on both sides (see q_funnel_conversion)
-  SELECT user_id, epoch_us(ts) AS t, event_type FROM events
-  WHERE user_id IS NOT NULL
-),
-s1 AS (
-  SELECT user_id, min(t) AS t1 FROM e
-  WHERE event_type = 'view' GROUP BY user_id
-),
-s2 AS (
-  SELECT e.user_id, min(t) AS t2
-  FROM e JOIN s1 USING (user_id)
-  WHERE event_type = 'click' AND t > t1
-    AND t <= t1 + {_FUNNEL_WINDOW_US}
-  GROUP BY e.user_id
-),
-s3 AS (
-  SELECT e.user_id, min(t) AS t3
-  FROM e JOIN s1 USING (user_id) JOIN s2 USING (user_id)
-  WHERE event_type = 'purchase' AND t > t2
-    AND t <= t1 + {_FUNNEL_WINDOW_US}
-  GROUP BY e.user_id
-),
-per_user AS (
-  SELECT u.user_id,
-         CASE WHEN s3.t3 IS NOT NULL THEN 3
-              WHEN s2.t2 IS NOT NULL THEN 2
-              WHEN s1.t1 IS NOT NULL THEN 1
-              ELSE 0 END AS stage
-  FROM (SELECT DISTINCT user_id FROM e) u
-  LEFT JOIN s1 USING (user_id)
-  LEFT JOIN s2 USING (user_id)
-  LEFT JOIN s3 USING (user_id)
-)
-SELECT stage, count(*) AS n_users FROM per_user GROUP BY stage
-"""
-
-
-def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention matrix: users grouped by first-activity week,
-    counted as retained in each later week they act again — the
-    standard growth-analytics rollup.
-
-    Plan: the cohort week comes from an unbounded ``min`` WINDOW over
-    the user partition (no self-join back to a min-aggregate — one
-    shuffle on user serves both the cohort assignment and, reused by
-    the sort-free aggregation that follows, the distinct count), then
-    one groupBy((cohort_week, week_offset), countDistinct(user)).
-    Week arithmetic is exact integer µs division by a constant."""
-    ev = load_table(spark, sf_dir, "events")
-    wk_us = 7 * 86_400_000_000
-    staged = (
-        ev.select("user_id", F.unix_micros(F.col("ts")).alias("t"))
-        .withColumn(
-            "cohort_week",
-            F.expr(
-                f"CAST(min(t) OVER (PARTITION BY user_id)"
-                f" DIV {wk_us} AS INT)"
-            ),
-        )
-        .withColumn(
-            "week_offset",
-            F.expr(f"CAST(t DIV {wk_us} AS INT) - cohort_week"),
-        )
-    )
-    return staged.groupBy("cohort_week", "week_offset").agg(
-        F.countDistinct("user_id").alias("n_users")
-    )
-
-
-ORACLE_COHORT_RETENTION = f"""
-WITH staged AS (
-  SELECT user_id, epoch_us(ts) AS t,
-         CAST(min(epoch_us(ts)) OVER (PARTITION BY user_id)
-              // {7 * 86_400_000_000} AS INT) AS cohort_week
-  FROM events
-)
-SELECT cohort_week,
-       CAST(t // {7 * 86_400_000_000} AS INT) - cohort_week
-           AS week_offset,
-       count(DISTINCT user_id) AS n_users
-FROM staged
-GROUP BY cohort_week, CAST(t // {7 * 86_400_000_000} AS INT) - cohort_week
-"""
-
-
-def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM change-point scan per event type: running sum of
-    mean-deviations over the time-ordered series; the maximum
-    |S_i| (and the first time it is reached) locates the strongest
-    level shift — the drift detector a data-quality monitor runs per
-    partition before admitting a day.
-
-    Plan: per-type mean via ONE aggregate broadcast back (5 rows — not
-    an unbounded window, whose state is the whole partition); running
-    sum via a ROWS window on the (type, time) ordering; two bounded
-    re-aggregates pick the max and its first position by EXACT decimal
-    equality (no arg_max, whose tie order is engine-specific). All
-    deviations are decimal-exact, so Spark and DuckDB agree
-    bit-for-bit."""
-    ev = load_table(spark, sf_dir, "events")
-    staged = ev.select(
-        "event_type",
-        F.unix_micros(F.col("ts")).alias("t"),
-        "event_id",
-        # scale-9 summand round (3 guard digits — see q_phase_fold)
-        F.round("value", 9).cast("decimal(18,9)").alias("x"),
-    )
-    means = staged.groupBy("event_type").agg(
-        F.sum("x").cast("decimal(24,9)").alias("sx"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    # DIVISION-FREE deviations: S_i = P_i - i*mean, so n*S_i =
-    # n*P_i - i*sx — every term exact decimal/integer (the naive
-    # mean = sx/n is a decimal/bigint division, which DuckDB performs
-    # in DOUBLE while Spark divides exactly with HALF_UP — a
-    # half-boundary quotient would split the engines). The single
-    # division happens ONCE at the end, in double, over exact inputs.
-    wsum = (
-        Window.partitionBy("event_type")
-        .orderBy("t", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wrow = Window.partitionBy("event_type").orderBy("t", "event_id")
-    run = (
-        staged.join(F.broadcast(means), "event_type")
-        .withColumn("p_run", F.sum("x").over(wsum).cast("decimal(24,9)"))
-        .withColumn("i", F.row_number().over(wrow).cast("decimal(9,0)"))
-        .withColumn(
-            "abs_t",
-            F.abs(
-                F.col("p_run") * F.col("n").cast("decimal(9,0)")
-                - F.col("i") * F.col("sx")
-            ).cast("decimal(35,9)"),
-        )
-        .select("event_type", "t", "n", "abs_t")
-    )
-    mx = run.groupBy("event_type").agg(
-        F.max("abs_t").alias("max_t"), F.max("n").alias("n")
-    )
-    at = (
-        run.join(
-            F.broadcast(mx.select("event_type", "max_t")), "event_type"
-        )
-        .filter(F.col("abs_t") == F.col("max_t"))
-        .groupBy("event_type")
-        .agg(F.min("t").alias("t_at_max"))
-    )
-    return mx.join(at, "event_type").select(
-        "event_type",
-        "n",
-        # scale-2 round before the double cast: max_t is DECIMAL(35,9)
-        # whose unscaled value outgrows 2^53 (see q_promo_revenue)
-        (F.round("max_t", 2).cast("double") / F.col("n")).alias(
-            "max_cusum"
-        ),
-        "t_at_max",
-    )
-
-
-ORACLE_CUSUM_CHANGEPOINT = """
-WITH staged AS (
-  SELECT event_type, epoch_us(ts) AS t, event_id,
-         CAST(CASE WHEN isfinite(value)
-          THEN round(value, 9) END AS DECIMAL(18,9)) AS x
-  FROM events
-),
-means AS (
-  SELECT event_type, CAST(sum(x) AS DECIMAL(24,9)) AS sx,
-         count(*) AS n
-  FROM staged GROUP BY event_type
-),
-run AS (
-  SELECT s.event_type, t, n,
-         CAST(abs(
-           CAST(SUM(x) OVER (PARTITION BY s.event_type
-                             ORDER BY t, event_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND CURRENT ROW) AS DECIMAL(24,9))
-             * CAST(n AS DECIMAL(9,0))
-           - CAST(row_number() OVER (PARTITION BY s.event_type
-                                     ORDER BY t, event_id)
-                  AS DECIMAL(9,0)) * sx
-         ) AS DECIMAL(35,9)) AS abs_t
-  FROM staged s JOIN means USING (event_type)
-),
-mx AS (
-  SELECT event_type, max(abs_t) AS max_t, max(n) AS n
-  FROM run GROUP BY event_type
-)
-SELECT r.event_type, mx.n,
-       CAST(ROUND(mx.max_t, 2) AS DOUBLE) / mx.n AS max_cusum,
-       min(r.t) AS t_at_max
-FROM run r JOIN mx USING (event_type)
-WHERE r.abs_t = mx.max_t
-GROUP BY r.event_type, mx.n, mx.max_t
-"""
-
-
-def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition counts over each user's
-    time-ordered event stream (``lag`` window): how often does type A
-    follow type B — the session-path-mining primitive behind
-    recommendation and anomaly models. One shuffle on the user
-    partition; transition probability is emitted as an exact
-    numerator/denominator pair plus a decimal ratio (no float
-    accumulation anywhere)."""
-    ev = load_table(spark, sf_dir, "events")
-    # symmetric ordering key: unix_micros here, epoch_us in the oracle —
-    # ordering by raw ts would lag-pair differently than a DuckDB oracle
-    # reading TIMESTAMP(NANOS) with sub-µs distinctions (the r04 red)
-    w = Window.partitionBy("user_id").orderBy(
-        F.unix_micros("ts"), "event_id"
-    )
-    trans = (
-        ev.select("user_id", "ts", "event_id", "event_type")
-        .withColumn("prev_type", F.lag("event_type").over(w))
-        .filter(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    totals = trans.groupBy("prev_type").agg(F.sum("n").alias("n_from"))
-    return trans.join(F.broadcast(totals), "prev_type").select(
-        "prev_type",
-        "event_type",
-        "n",
-        "n_from",
-        # double division of exact integers (see mean_logp note)
-        (F.col("n").cast("double") / F.col("n_from")).alias("p"),
-    )
-
-
-ORACLE_EVENT_TRANSITIONS = """
-WITH seq AS (
-  SELECT user_id, event_type,
-         lag(event_type) OVER (PARTITION BY user_id
-                               ORDER BY epoch_us(ts), event_id) AS prev_type
-  FROM events
-),
-trans AS (
-  SELECT prev_type, event_type, count(*) AS n
-  FROM seq WHERE prev_type IS NOT NULL
-  GROUP BY prev_type, event_type
-),
-totals AS (SELECT prev_type, sum(n) AS n_from FROM trans GROUP BY prev_type)
-SELECT prev_type, event_type, n, n_from,
-       CAST(n AS DOUBLE) / n_from AS p
-FROM trans JOIN totals USING (prev_type)
-"""
-
-
-def q_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Autocorrelation of the value series at lags 1-3 per event type
-    (the time-domain twin of ``periodogram_power``): exact-integer
-    moment sums over (x_i, x_{i+lag}) pairs from ``lag`` windows —
-    milli-unit integerization makes every sum exact, and the final
-    Pearson formula is a fixed IEEE tree over exact-valued doubles
-    (same discipline as ``regression_trend``). One shuffle on the type
-    partition; the lag arms ride the same window ordering.
-
-    Domain: finite values only (NULL rows kept — they lag through as
-    NULL pairs exactly as before): Spark's floor(double) silently maps
-    NaN→0 / ±Inf→±Long.MAX where DuckDB's BIGINT cast hard-errors
-    (nanemb driftlab layout, r10); a no-op on clean lakes."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNull() | _finite("value")
-    )
-    # symmetric µs ordering key (see q_event_transitions note)
-    w = Window.partitionBy("event_type").orderBy(
-        F.unix_micros("ts"), "event_id"
-    )
-    ym = F.floor(F.col("value") * 1000 + F.lit(0.5)).cast("long")
-    staged = ev.select(
-        "event_type", "ts", "event_id", ym.alias("y")
-    )
-    arms = []
-    for lag in (1, 2, 3):
-        arms.append(
-            staged.withColumn("y_lag", F.lag("y", lag).over(w))
-            .filter(F.col("y_lag").isNotNull())
-            .select(
-                "event_type",
-                F.lit(lag).alias("lag"),
-                "y",
-                "y_lag",
-            )
-        )
-    pairs = arms[0].unionByName(arms[1]).unionByName(arms[2])
-    g = pairs.groupBy("event_type", "lag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("y").alias("sy"),
-        F.sum("y_lag").alias("sl"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-        F.sum(F.col("y_lag") * F.col("y_lag")).alias("sll"),
-        F.sum(F.col("y") * F.col("y_lag")).alias("syl"),
-    )
-
-    def big(c):
-        return F.col(c).cast("decimal(38,0)")
-
-    num = (big("n") * big("syl") - big("sy") * big("sl")).cast("double")
-    den_y = (big("n") * big("syy") - big("sy") * big("sy")).cast("double")
-    den_l = (big("n") * big("sll") - big("sl") * big("sl")).cast("double")
-    return g.select(
-        "event_type",
-        "lag",
-        "n",
-        # a constant (or single-pair) series has zero variance in one
-        # arm: acf is undefined → NULL, never a division (ANSI throws
-        # where DuckDB would emit inf/nan — driftlab sparse layout).
-        # Terminal scale-9 round: on high-magnitude lakes (bigmoney
-        # driftlab) the decimal(38,0) moments outgrow 2⁶³ where
-        # DuckDB's int128→double conversion is not correctly rounded
-        # (the r5 wide-integer corollary) — a 1-ulp input split that
-        # the round absorbs (|acf| ≤ 1, unit 1e-9 ≫ ulp 1e-17; the
-        # measured-safe computed-double zone)
-        F.round(
-            F.when(
-                (den_y > 0) & (den_l > 0), num / F.sqrt(den_y * den_l)
-            ),
-            9,
-        ).alias("acf"),
-    )
-
-
-ORACLE_AUTOCORRELATION = """
-WITH staged AS (
-  -- finite-value domain, mirroring the engine (nanemb layout, r10):
-  -- Spark floor(double) silently corrupts NaN/Inf where this BIGINT
-  -- cast hard-errors; NULL rows keep their original lag semantics
-  SELECT event_type, ts, event_id,
-         CAST(FLOOR(value * 1000 + 0.5) AS BIGINT) AS y
-  FROM events
-  WHERE value IS NULL OR isfinite(value)
-),
-pairs AS (
-  SELECT event_type, 1 AS lag, y,
-         lag(y, 1) OVER (PARTITION BY event_type
-                         ORDER BY epoch_us(ts), event_id) AS y_lag
-  FROM staged
-  UNION ALL
-  SELECT event_type, 2, y,
-         lag(y, 2) OVER (PARTITION BY event_type
-                         ORDER BY epoch_us(ts), event_id)
-  FROM staged
-  UNION ALL
-  SELECT event_type, 3, y,
-         lag(y, 3) OVER (PARTITION BY event_type
-                         ORDER BY epoch_us(ts), event_id)
-  FROM staged
-),
-g AS (
-  SELECT event_type, lag, count(*) AS n, sum(y) AS sy, sum(y_lag) AS sl,
-         sum(y * y) AS syy, sum(y_lag * y_lag) AS sll,
-         sum(y * y_lag) AS syl
-  FROM pairs WHERE y_lag IS NOT NULL
-  GROUP BY event_type, lag
-)
-SELECT event_type, lag, n,
-       CASE WHEN CAST(CAST(n AS DECIMAL(38,0)) * CAST(syy AS DECIMAL(38,0))
-                   - CAST(sy AS DECIMAL(38,0)) * CAST(sy AS DECIMAL(38,0))
-                   AS DOUBLE) > 0
-             AND CAST(CAST(n AS DECIMAL(38,0)) * CAST(sll AS DECIMAL(38,0))
-                   - CAST(sl AS DECIMAL(38,0)) * CAST(sl AS DECIMAL(38,0))
-                   AS DOUBLE) > 0
-       THEN
-       -- terminal scale-9 round absorbs the 1-ulp int128→double
-       -- conversion split on high-magnitude lakes (bigmoney driftlab)
-       ROUND(
-       CAST(CAST(n AS DECIMAL(38,0)) * CAST(syl AS DECIMAL(38,0))
-            - CAST(sy AS DECIMAL(38,0)) * CAST(sl AS DECIMAL(38,0))
-            AS DOUBLE)
-       / SQRT(CAST(CAST(n AS DECIMAL(38,0)) * CAST(syy AS DECIMAL(38,0))
-                   - CAST(sy AS DECIMAL(38,0)) * CAST(sy AS DECIMAL(38,0))
-                   AS DOUBLE)
-              * CAST(CAST(n AS DECIMAL(38,0)) * CAST(sll AS DECIMAL(38,0))
-                     - CAST(sl AS DECIMAL(38,0)) * CAST(sl AS DECIMAL(38,0))
-                     AS DOUBLE)), 9)
-       END AS acf
-FROM g
-"""
-
-
-def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle counting on the co-purchase graph (parts sharing an
-    order, support ≥ 2): the standard compact-forward algorithm —
-    orient every edge low→high, join edge(a,b) with edge(b,c), then
-    semi-join the wedge closure (a,c) against the edge set. Orienting
-    first means each triangle is produced exactly ONCE (a<b<c) and the
-    wedge fan-out is bounded by out-degree, the classic distributed
-    triangle trick. Support cut bounds the edge set; all counts exact.
-
-    Output: triangles per anchor node (lowest id) plus the global
-    total as anchor NULL. Physical strategy is ``ext/graph.py``'s
-    ``auto`` regime: NO join hints — AQE re-plans from the true
-    runtime shuffle sizes and broadcasts the support-cut edge set
-    while it is small (a static Catalyst-stats gate would see the
-    pessimistic join-product estimate and never broadcast);
-    ``triangle_count_merge`` pins the forced sort-merge path — the
-    no-memory-ceiling regime once the graph densifies."""
-    from fink_broker_spark.ext.graph import copurchase_edges, triangle_counts
-
-    li = load_table(spark, sf_dir, "lineitem")
-    # the closure consumes the edge relation three times (e1, e2, and
-    # the a-c semi-join side) — uncut, each consumer re-derives the
-    # basket self-join (r9 census mid-tier; materialize-once pattern)
-    edges = _materialize(copurchase_edges(li, min_support=2))
-    return triangle_counts(edges, regime="auto")
-
-
-def q_triangle_count_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sort-merge regime of ``q_triangle_count`` (``ext/graph.py:
-    triangle_closure``): identical rows, but both closure joins run as
-    shuffled sort-merge — no broadcast of the edge set, no single-task
-    memory ceiling. This is the regime the auto gate picks once the
-    support-cut edge relation outgrows ~64 MB; registering it
-    separately keeps the scale path oracled green, plan-asserted
-    (``tests/test_ext.py``)."""
-    from fink_broker_spark.ext.graph import copurchase_edges, triangle_counts
-
-    li = load_table(spark, sf_dir, "lineitem")
-    # same three-consumer materialize as the auto regime above
-    edges = _materialize(copurchase_edges(li, min_support=2))
-    return triangle_counts(edges, regime="merge")
-
-
-ORACLE_TRIANGLE_COUNT = """
-WITH pairs AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-  GROUP BY a.l_partkey, b.l_partkey
-  HAVING count(*) >= 2
-),
-closed AS (
-  SELECT e1.u AS a, e1.v AS b, e2.v AS c
-  FROM pairs e1 JOIN pairs e2 ON e1.v = e2.u
-  WHERE EXISTS (SELECT 1 FROM pairs p WHERE p.u = e1.u AND p.v = e2.v)
-)
-SELECT a, count(*) AS n_triangles FROM closed GROUP BY a
-UNION ALL
--- engine-native rollup semantics: Spark's rollup over an EMPTY closed
--- set emits zero rows (the Expand has no input), so the grand-total
--- row exists only when triangles exist (driftlab sparse layout)
-SELECT CAST(NULL AS BIGINT), count(*) FROM closed HAVING count(*) > 0
-"""
-
-
-def q_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sweep-line maximum concurrency: how many orders are
-    simultaneously OPEN (placed but not yet fully shipped) per
-    priority, at the busiest instant — the interval-overlap aggregate
-    behind capacity planning (and observation-scheduling pressure in
-    the astronomy setting).
-
-    The classic sweep: each [orderdate, last shipdate] interval
-    explodes into a (+1, start) and a (−1, end) boundary event; a
-    running sum over the time ordering is the live concurrency; its
-    max is the answer. Starts sort before ends at the same instant
-    (delta DESC), making the closed-interval semantics explicit and
-    deterministic. Everything integer-exact.
-
-    Scale shape (SCALING.md's own prescription, wired round 5): a
-    single window per priority would funnel ~2|orders| boundary events
-    into 5 sequential partitions. Instead the sweep is CHUNKED — the
-    running sum runs inside (priority, 30-day-chunk) partitions
-    (bounded state ∝ chunk density), per-chunk delta totals are
-    prefix-summed over the tiny (priority × #chunks) relation to get
-    each chunk's carry-in, and the global max is
-    ``max(carry_in + local_max)``. Exactly equivalent: chunk id is a
-    monotone function of t, so chunk-local order concatenated in chunk
-    order IS the global sweep order."""
-    # Aggregate BEFORE the join (guide §2.3 "aggregate before you
-    # shuffle"): the old shape joined the raw 4·|orders| lineitem rows
-    # to orders and THEN grouped — every fact row crossed the join and
-    # the group-by ran on the joined relation.  Each side now collapses
-    # to its per-order extreme first, keyed-spread off its single-split
-    # scan (guide §2.5), and the two aggregates meet co-partitioned on
-    # the order key (hash(key) satisfies both the group-by clustering
-    # and the join distribution — ONE exchange per side, none for the
-    # join).  Exactly equivalent with NO key-uniqueness assumption:
-    # grouping the joined relation by (o_orderkey, o_orderpriority)
-    # yields min(o_orderdate) over that key's orders rows and
-    # max(l_shipdate) over that key's lineitem rows — precisely the
-    # per-side aggregates joined back on the key.
-    ords = (
-        ensure_keyed_parallelism(
-            load_table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_orderpriority", "o_orderdate"
-            ),
-            "o_orderkey",
-        )
-        .groupBy("o_orderkey", "o_orderpriority")
-        .agg(
-            # o_orderdate/l_shipdate are normalized to TIMESTAMP by
-            # load_table whatever the physical layout (NANOS-as-long
-            # included) — never cast a possibly-bigint column here
-            F.min(F.unix_micros(F.col("o_orderdate"))).alias("t0")
-        )
-    )
-    ship = (
-        ensure_keyed_parallelism(
-            load_table(spark, sf_dir, "lineitem").select(
-                F.col("l_orderkey").alias("o_orderkey"), "l_shipdate"
-            ),
-            "o_orderkey",
-        )
-        .groupBy("o_orderkey")
-        .agg(F.max(F.unix_micros(F.col("l_shipdate"))).alias("t1"))
-    )
-    spans = ords.join(ship, "o_orderkey").filter(F.col("t1") >= F.col("t0"))
-    # both boundary events from ONE pass over spans (a self-union would
-    # re-derive the whole join/aggregate subtree per branch)
-    events = spans.select(
-        "o_orderpriority",
-        F.explode(
-            F.array(
-                F.struct(F.col("t0").alias("t"), F.lit(1).alias("delta")),
-                F.struct(F.col("t1").alias("t"), F.lit(-1).alias("delta")),
-            )
-        ).alias("__ev"),
-    ).select("o_orderpriority", F.col("__ev.t").alias("t"), F.col("__ev.delta").alias("delta"))
-    chunk_us = 30 * 86_400_000_000  # 30-day sweep chunks
-    events = events.withColumn(
-        "chunk", F.expr(f"CAST(t DIV {chunk_us} AS BIGINT)")
-    )
-    w_local = (
-        Window.partitionBy("o_orderpriority", "chunk")
-        .orderBy(F.col("t"), F.col("delta").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = events.withColumn("run", F.sum("delta").over(w_local))
-    per_chunk = local.groupBy("o_orderpriority", "chunk").agg(
-        F.max("run").alias("local_max"),
-        F.sum("delta").alias("chunk_delta"),
-        F.count(F.lit(1)).alias("n_ev"),
-    )
-    w_carry = (
-        Window.partitionBy("o_orderpriority")
-        .orderBy("chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carried = per_chunk.withColumn(
-        "carry", F.coalesce(F.sum("chunk_delta").over(w_carry), F.lit(0))
-    )
-    return carried.groupBy("o_orderpriority").agg(
-        F.max(F.col("carry") + F.col("local_max")).alias("max_concurrent"),
-        (F.sum("n_ev") / 2).cast("bigint").alias("n_orders"),
-    )
-
-
-ORACLE_MAX_CONCURRENCY = """
-WITH spans AS (
-  SELECT o_orderkey, o_orderpriority,
-         min(epoch_us(o_orderdate)) AS t0,
-         max(epoch_us(l_shipdate)) AS t1
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  GROUP BY o_orderkey, o_orderpriority
-  HAVING max(epoch_us(l_shipdate)) >= min(epoch_us(o_orderdate))
-),
-events AS (
-  SELECT o_orderpriority, t0 AS t, 1 AS delta FROM spans
-  UNION ALL
-  SELECT o_orderpriority, t1, -1 FROM spans
-),
-live AS (
-  SELECT o_orderpriority,
-         SUM(delta) OVER (PARTITION BY o_orderpriority
-                          ORDER BY t, delta DESC
-                          ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND CURRENT ROW) AS live
-  FROM events
-)
-SELECT o_orderpriority, max(live) AS max_concurrent,
-       CAST(count(*) / 2 AS BIGINT) AS n_orders
-FROM live GROUP BY o_orderpriority
-"""
-
-
-def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling 7-day active users (the WAU curve): COUNT DISTINCT over
-    a sliding window, which no engine's window functions support
-    directly — the distributed shape is the contribution explode:
-    dedup to (user, day) first (the big win: the fact table collapses
-    to at most users × days rows), then each active day contributes to
-    the 7 window-ends it falls in (constant fan-out) and one
-    groupBy(window_end) count-distinct finishes. Exact integral day
-    math; no window state anywhere."""
-    ev = load_table(spark, sf_dir, "events")
-    day_us = 86_400_000_000
-    daily = (
-        ev.select(
-            "user_id",
-            F.expr(f"unix_micros(ts) DIV {day_us}").alias("day"),
-        )
-        .distinct()
-    )
-    contrib = daily.select(
-        "user_id",
-        F.explode(
-            F.sequence(F.col("day"), F.col("day") + F.lit(6))
-        ).alias("window_end"),
-    )
-    return contrib.groupBy("window_end").agg(
-        F.count_distinct("user_id").alias("wau")
-    )
-
-
-ORACLE_ROLLING_ACTIVE_USERS = """
-WITH daily AS (
-  SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day
-  FROM events
-),
-contrib AS (
-  SELECT user_id, day + i AS window_end
-  FROM daily, UNNEST(range(0, 7)) AS t(i)
-)
-SELECT window_end, count(DISTINCT user_id) AS wau
-FROM contrib GROUP BY window_end
-"""
-
-
-def q_ab_test_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A/B experiment readout: deterministic hash-bucketed arm
-    assignment (md5-hex → integer parity — the cross-engine hash the
-    parity discipline prescribes; xxhash64 has no DuckDB twin), per-user
-    conversion (any ``purchase`` event), then the two-proportion z.
-
-    Scale shape: ONE per-user aggregate (the only shuffle) + a single
-    4-counter global aggregate (map-side combinable); the z itself is
-    driver-scale scalar math. The z is emitted as a RAW double from an
-    IDENTICAL IEEE op tree over the four exact integer counters — every
-    op (÷ × + − sqrt) is correctly rounded, so the doubles are bit-equal
-    across engines; no transcendentals anywhere."""
-    ev = load_table(spark, sf_dir, "events")
-    # conversion = any HIGH-VALUE purchase: with ~66 events/user almost
-    # every user has *some* purchase, which degenerates p→1 and se→0
-    per_user = (
-        ev.groupBy("user_id")
-        .agg(
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase")
-                    & (F.col("value") >= 990.0),
-                    1,
-                ).otherwise(0)
-            ).alias("converted")
-        )
-        .select(
-            (
-                F.conv(
-                    F.substring(F.md5(F.col("user_id").cast("string")), 1, 8),
-                    16,
-                    10,
-                ).cast("long")
-                % 2
-            ).alias("arm"),
-            "converted",
-        )
-    )
-    agg = per_user.agg(
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n_a"),
-        F.sum(
-            F.when((F.col("arm") == 0) & (F.col("converted") == 1), 1).otherwise(0)
-        ).alias("x_a"),
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n_b"),
-        F.sum(
-            F.when((F.col("arm") == 1) & (F.col("converted") == 1), 1).otherwise(0)
-        ).alias("x_b"),
-    )
-    p_a = F.col("x_a").cast("double") / F.col("n_a").cast("double")
-    p_b = F.col("x_b").cast("double") / F.col("n_b").cast("double")
-    p = (F.col("x_a") + F.col("x_b")).cast("double") / (
-        F.col("n_a") + F.col("n_b")
-    ).cast("double")
-    se = F.sqrt(
-        p
-        * (F.lit(1.0) - p)
-        * (
-            F.lit(1.0) / F.col("n_a").cast("double")
-            + F.lit(1.0) / F.col("n_b").cast("double")
-        )
-    )
-    # an EMPTY arm (tiny/onerow lakes) has no proportion at all: every
-    # division sits under a count guard — ANSI Spark throws on x/0.0
-    # where DuckDB yields ±inf
-    okc = (F.col("n_a") > 0) & (F.col("n_b") > 0)
-    return agg.select(
-        "n_a",
-        "x_a",
-        "n_b",
-        "x_b",
-        F.when(F.col("n_a") > 0, p_a).alias("p_a"),
-        F.when(F.col("n_b") > 0, p_b).alias("p_b"),
-        # lazy CASE guards the degenerate p∈{0,1} corpus (se = 0) on
-        # both engines — tiny lakes can have zero conversions
-        F.when(
-            okc,
-            F.when(se > F.lit(0.0), (p_a - p_b) / se).otherwise(F.lit(0.0)),
-        ).alias("z_score"),
-    )
-
-
-ORACLE_AB_TEST_ZSCORE = """
-WITH per_user AS (
-  SELECT user_id,
-         MAX(CASE WHEN event_type = 'purchase' AND value >= 990.0
-                  THEN 1 ELSE 0 END) AS converted
-  FROM events GROUP BY 1
-), armed AS (
-  SELECT CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8) AS BIGINT)
-           % 2 AS arm,
-         converted
-  FROM per_user
-), agg AS (
-  SELECT
-    SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS n_a,
-    SUM(CASE WHEN arm = 0 AND converted = 1 THEN 1 ELSE 0 END) AS x_a,
-    SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS n_b,
-    SUM(CASE WHEN arm = 1 AND converted = 1 THEN 1 ELSE 0 END) AS x_b
-  FROM armed
-), derived AS (
-  -- count guards mirror the Spark plan: an empty arm yields NULL p/se
-  SELECT n_a, x_a, n_b, x_b,
-         CASE WHEN n_a > 0
-              THEN CAST(x_a AS DOUBLE) / CAST(n_a AS DOUBLE) END AS p_a,
-         CASE WHEN n_b > 0
-              THEN CAST(x_b AS DOUBLE) / CAST(n_b AS DOUBLE) END AS p_b,
-         CASE WHEN n_a > 0 AND n_b > 0 THEN
-           sqrt((CAST(x_a + x_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-                * (1.0 - CAST(x_a + x_b AS DOUBLE)
-                         / CAST(n_a + n_b AS DOUBLE))
-                * (1.0 / CAST(n_a AS DOUBLE)
-                   + 1.0 / CAST(n_b AS DOUBLE))) END AS se
-  FROM agg
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(x_a AS BIGINT) AS x_a,
-       CAST(n_b AS BIGINT) AS n_b, CAST(x_b AS BIGINT) AS x_b,
-       p_a, p_b,
-       CASE WHEN n_a > 0 AND n_b > 0 THEN
-         CASE WHEN se > 0.0 THEN (p_a - p_b) / se ELSE 0.0 END
-       END AS z_score
-FROM derived
-"""
-
-
-def q_streak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaps-and-islands: longest strictly-increasing run of daily
-    revenue per order priority. Day key is exact integral µs-epoch
-    division (symmetric with the oracle's ``epoch_us // 86400000000`` —
-    never a raw-timestamp ordering); revenue compares as EXACT decimal
-    sums, so the > flag can never split engines. The island id is the
-    classic running count of run-breaks; everything downstream is
-    integer arithmetic.
-
-    Scale shape: one (priority, day) aggregate collapses the fact table
-    to ≤ |priorities| × |days| rows, after which the windows run over a
-    tiny keyed sequence — window state is O(1) and the partition count
-    is the priority cardinality ONLY for the collapsed table, not the
-    fact table (contrast max_concurrency's chunked sweep, which must
-    window the uncollapsed event stream)."""
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.expr("unix_micros(o_orderdate) DIV 86400000000").alias("day"),
-    ).agg(F.sum(_dec("o_totalprice")).alias("rev"))
-    w = Window.partitionBy("priority").orderBy("day")
-    flagged = daily.select(
-        "priority",
-        "day",
-        F.when(F.col("rev") > F.lag("rev").over(w), 1).otherwise(0).alias("inc"),
-    )
-    sid = F.sum(F.lit(1) - F.col("inc")).over(
-        w.rowsBetween(Window.unboundedPreceding, 0)
-    )
-    per_run = (
-        flagged.select("priority", "inc", sid.alias("sid"))
-        .groupBy("priority", "sid")
-        .agg(F.sum("inc").alias("n_inc"))
-    )
-    return per_run.groupBy("priority").agg(
-        (F.max("n_inc") + F.lit(1)).alias("longest_run"),
-        (F.sum("n_inc") + F.count(F.lit(1))).alias("n_days"),
-    )
-
-
-ORACLE_STREAK_DETECTION = """
-WITH daily AS (
-  SELECT o_orderpriority AS priority,
-         epoch_us(o_orderdate) // 86400000000 AS day,
-         SUM(CAST(o_totalprice AS DECIMAL(18,9))) AS rev
-  FROM orders GROUP BY 1, 2
-), flagged AS (
-  SELECT priority, day,
-         CASE WHEN rev > lag(rev) OVER (PARTITION BY priority ORDER BY day)
-              THEN 1 ELSE 0 END AS inc
-  FROM daily
-), runs AS (
-  SELECT priority, inc,
-         SUM(1 - inc) OVER (PARTITION BY priority ORDER BY day
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND CURRENT ROW) AS sid
-  FROM flagged
-), per_run AS (
-  SELECT priority, sid, SUM(inc) AS n_inc FROM runs GROUP BY 1, 2
-)
-SELECT priority,
-       CAST(MAX(n_inc) + 1 AS BIGINT) AS longest_run,
-       CAST(SUM(n_inc) + COUNT(*) AS BIGINT) AS n_days
-FROM per_run GROUP BY 1
-"""
-
-
-def q_collocation_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Collocation mining: top-20 bigrams by pointwise lift
-    p(xy) / (p(x)·p(y)) — the PMI ranking WITHOUT the log (lift is
-    monotone in PMI, so ranking is identical and no transcendental ever
-    touches the hash; emitting ln() would be the bm25 r04 red all over
-    again). The lift is a fixed tree of double products over the five
-    exact sub-2⁵³ count operands — every factor casts to double FIRST,
-    so no intermediate ever overflows BIGINT (the former
-    n_xy·N² integer product aborts both engines around N≈3e7 corpus
-    tokens) and both engines evaluate the identical IEEE sequence.
-
-    Scale shape: tokenize once per branch with in-array HOFs (the only
-    shuffles are the two count aggregates), unigram side broadcast into
-    the bigram side twice (vocab ≪ corpus), 1-row totals broadcast,
-    TakeOrdered top-k — no global sort materialization."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower("text"), "[^a-z]+"),
-        lambda x: F.length(x) >= 2,
-    )
-    d = docs.select(toks.alias("t"))
-    uni = d.select(F.explode("t").alias("w"))
-    uc = uni.groupBy("w").agg(F.count(F.lit(1)).alias("n_w"))
-    tot = uni.agg(F.count(F.lit(1)).alias("n_tokens"))
-    bigrams = d.select(
-        F.explode(
-            F.transform(
-                F.slice(F.col("t"), 1, F.greatest(F.size("t") - 1, F.lit(0))),
-                lambda x, i: F.struct(
-                    x.alias("x"), F.element_at("t", i + 2).alias("y")
-                ),
-            )
-        ).alias("b")
-    ).select("b.x", "b.y")
-    btot = bigrams.agg(F.count(F.lit(1)).alias("n_bigrams"))
-    bc = (
-        bigrams.groupBy("x", "y")
-        .agg(F.count(F.lit(1)).alias("n_xy"))
-        .filter(F.col("n_xy") >= 5)
-    )
-    joined = (
-        bc.join(F.broadcast(uc.withColumnRenamed("w", "x")
-                .withColumnRenamed("n_w", "n_x")), "x")
-        .join(F.broadcast(uc.withColumnRenamed("w", "y")
-                .withColumnRenamed("n_w", "n_y")), "y")
-        .crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(btot))
-    )
-    lift = (
-        F.col("n_xy").cast("double")
-        * F.col("n_tokens").cast("double")
-        * F.col("n_tokens").cast("double")
-    ) / (
-        F.col("n_bigrams").cast("double")
-        * F.col("n_x").cast("double")
-        * F.col("n_y").cast("double")
-    )
-    return (
-        joined.select(
-            F.concat_ws(" ", "x", "y").alias("bigram"),
-            "n_xy",
-            lift.alias("lift"),
-        )
-        .orderBy(F.desc("lift"), "bigram")
-        .limit(20)
-    )
-
-
-ORACLE_COLLOCATION_LIFT = """
-WITH toksarr AS (
-  SELECT list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                     x -> length(x) >= 2) AS t
-  FROM documents
-), uni AS (
-  SELECT unnest(t) AS w FROM toksarr
-), uc AS (
-  SELECT w, COUNT(*) AS n_w FROM uni GROUP BY 1
-), tot AS (
-  SELECT COUNT(*) AS n_tokens FROM uni
-), bgf AS (
-  SELECT unnest(list_transform(range(1, greatest(len(t), 1)),
-                               i -> struct_pack(x := t[i], y := t[i+1]))) AS b
-  FROM toksarr
-), bpair AS (
-  SELECT b.x AS x, b.y AS y FROM bgf
-), btot AS (
-  SELECT COUNT(*) AS n_bigrams FROM bpair
-), bc AS (
-  SELECT x, y, COUNT(*) AS n_xy FROM bpair GROUP BY 1, 2
-  HAVING COUNT(*) >= 5
-)
-SELECT bc.x || ' ' || bc.y AS bigram, bc.n_xy,
-       (CAST(bc.n_xy AS DOUBLE) * CAST(tot.n_tokens AS DOUBLE)
-        * CAST(tot.n_tokens AS DOUBLE))
-         / (CAST(btot.n_bigrams AS DOUBLE) * CAST(ux.n_w AS DOUBLE)
-            * CAST(uy.n_w AS DOUBLE)) AS lift
-FROM bc
-JOIN uc ux ON ux.w = bc.x
-JOIN uc uy ON uy.w = bc.y
-CROSS JOIN tot CROSS JOIN btot
-ORDER BY lift DESC, bigram LIMIT 20
-"""
-
-
-def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-iteration PageRank over the co-purchase graph in EXACT
-    fixed-point integer arithmetic (``ext/graph.py:pagerank_fixedpoint``
-    — ranks are BIGINT 1e-9 units; every step is integral DIV, so the
-    iterative float-sum nondeterminism that normally makes PageRank
-    unhashable never exists). Top-20 by rank with node-id tiebreak.
-
-    The oracle unrolls the same three iterations as nested CTEs —
-    genuinely iterative algorithms CAN be oracle-checked when each
-    step is exact integer algebra."""
-    from fink_broker_spark.ext.graph import copurchase_edges, pagerank_fixedpoint
-
-    li = load_table(spark, sf_dir, "lineitem")
-    # degree/node/rank state and all 3 iterations re-reference the
-    # edge relation — uncut, the plan re-derived the basket self-join
-    # 56× (r10 scan census); inside pagerank_fixedpoint, symmetrize/
-    # deg/ed become cheap projections of the materialized blocks
-    edges = _materialize(copurchase_edges(li, min_support=2))
-    pr = pagerank_fixedpoint(edges, iters=3)
-    return pr.orderBy(F.desc("rank_units"), "node").limit(20)
-
-
-ORACLE_PAGERANK = """
-WITH pairs AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-  GROUP BY a.l_partkey, b.l_partkey
-  HAVING count(*) >= 2
-),
-edges AS (
-  SELECT u AS src, v AS dst FROM pairs
-  UNION ALL SELECT v AS src, u AS dst FROM pairs
-),
-deg AS (SELECT src, COUNT(*) AS d FROM edges GROUP BY 1),
-nodes AS (SELECT DISTINCT src AS node FROM edges),
-nn AS (SELECT COUNT(*) AS n FROM nodes),
-r0 AS (
-  SELECT node, 1000000000 // n AS ru FROM nodes CROSS JOIN nn
-),
-c1 AS (
-  SELECT e.dst AS node, SUM(r.ru // d.d) AS s
-  FROM edges e JOIN r0 r ON r.node = e.src JOIN deg d ON d.src = e.src
-  GROUP BY 1
-),
-r1 AS (
-  SELECT nodes.node,
-         150000000 // n + (85 * COALESCE(c1.s, 0)) // 100 AS ru
-  FROM nodes CROSS JOIN nn LEFT JOIN c1 ON c1.node = nodes.node
-),
-c2 AS (
-  SELECT e.dst AS node, SUM(r.ru // d.d) AS s
-  FROM edges e JOIN r1 r ON r.node = e.src JOIN deg d ON d.src = e.src
-  GROUP BY 1
-),
-r2 AS (
-  SELECT nodes.node,
-         150000000 // n + (85 * COALESCE(c2.s, 0)) // 100 AS ru
-  FROM nodes CROSS JOIN nn LEFT JOIN c2 ON c2.node = nodes.node
-),
-c3 AS (
-  SELECT e.dst AS node, SUM(r.ru // d.d) AS s
-  FROM edges e JOIN r2 r ON r.node = e.src JOIN deg d ON d.src = e.src
-  GROUP BY 1
-),
-r3 AS (
-  SELECT nodes.node,
-         150000000 // n + (85 * COALESCE(c3.s, 0)) // 100 AS ru
-  FROM nodes CROSS JOIN nn LEFT JOIN c3 ON c3.node = nodes.node
-)
-SELECT node, CAST(ru AS BIGINT) AS rank_units
-FROM r3 ORDER BY rank_units DESC, node LIMIT 20
-"""
-
-
-def q_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-hop and ≤2-hop reachable-set sizes per node on the
-    co-purchase graph (``ext/graph.py:khop_reach``): frontier expansion
-    as ONE hop-boundary self-join + distinct — never an all-pairs
-    product. Top-20 by 2-hop reach, node tiebreak; integer-exact."""
-    from fink_broker_spark.ext.graph import copurchase_edges, khop_reach
-
-    li = load_table(spark, sf_dir, "lineitem")
-    # khop consumes the symmetrized edges three times (1-hop relation +
-    # both wedge-join sides), each side referencing edges twice via
-    # symmetrize — uncut, the basket self-join re-derives 6× (16 static
-    # lineitem scans, r9/r10 census) — materialize once
-    edges = _materialize(copurchase_edges(li, min_support=2))
-    return khop_reach(edges).orderBy(F.desc("n_2hop"), "node").limit(20)
-
-
-ORACLE_KHOP_REACH = """
-WITH pairs AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-  GROUP BY a.l_partkey, b.l_partkey
-  HAVING count(*) >= 2
-),
-edges AS (
-  SELECT u AS src, v AS dst FROM pairs
-  UNION ALL SELECT v AS src, u AS dst FROM pairs
-),
-one AS (SELECT src AS node, dst AS nb FROM edges),
-two AS (
-  SELECT a.src AS node, b.dst AS nb
-  FROM edges a JOIN edges b ON a.dst = b.src
-  WHERE b.dst <> a.src
-),
-reach AS (
-  SELECT DISTINCT node, nb FROM (
-    SELECT * FROM one UNION ALL SELECT * FROM two
-  )
-),
-n2 AS (SELECT node, COUNT(*) AS n_2hop FROM reach GROUP BY 1),
-n1 AS (
-  SELECT node, COUNT(*) AS n_1hop
-  FROM (SELECT DISTINCT node, nb FROM one) GROUP BY 1
-)
-SELECT n1.node, n1.n_1hop, n2.n_2hop
-FROM n1 JOIN n2 ON n1.node = n2.node
-ORDER BY n_2hop DESC, n1.node LIMIT 20
-"""
-
-
-def q_bitmap_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audience-overlap via distributed bitmap indexes: user-segment
-    membership packed into word-bucketed BIGINT bitmaps (word =
-    id DIV 32, bit = id MOD 32 — bits 0–31 only, so the sign bit never
-    participates and two's-complement ``bit_count`` semantics can't
-    diverge), ONE ``bit_or`` aggregate per word, then popcount algebra
-    for |A|, |B|, |A∩B| and the exact Jaccard. The bitmap is the
-    100 TB shape: the shuffle carries |users|/32 words, not |users|
-    rows, and intersection is bitwise AND instead of a join (same
-    word-bucketed design as the sharded Bloom build in
-    ``functions/sketches.py``, but exact)."""
-    ev = load_table(spark, sf_dir, "events")
-    seg = (
-        ev.filter(F.col("event_type").isin("purchase", "click"))
-        .select("event_type", "user_id")
-        .distinct()
-    )
-    words = seg.select(
-        "event_type",
-        F.expr("user_id DIV 32").alias("word"),
-        F.expr(
-            "shiftleft(CAST(1 AS BIGINT), CAST(user_id % 32 AS INT))"
-        ).alias("bit"),
-    )
-    bm = words.groupBy("word").agg(
-        F.bit_or(
-            F.when(F.col("event_type") == "purchase", F.col("bit"))
-        ).alias("ba"),
-        F.bit_or(F.when(F.col("event_type") == "click", F.col("bit"))).alias(
-            "bb"
-        ),
-    )
-    agg = bm.agg(
-        F.sum(F.bit_count(F.coalesce("ba", F.lit(0)))).alias("n_a"),
-        F.sum(F.bit_count(F.coalesce("bb", F.lit(0)))).alias("n_b"),
-        F.sum(
-            F.bit_count(
-                F.coalesce("ba", F.lit(0)).bitwiseAND(
-                    F.coalesce("bb", F.lit(0))
-                )
-            )
-        ).alias("n_both"),
-    )
-    denom = (F.col("n_a") + F.col("n_b") - F.col("n_both")).cast("double")
-    return agg.select(
-        "n_a",
-        "n_b",
-        "n_both",
-        F.when(
-            denom > F.lit(0.0), F.col("n_both").cast("double") / denom
-        )
-        .otherwise(F.lit(0.0))
-        .alias("jaccard"),
-    )
-
-
-ORACLE_BITMAP_SEGMENTS = """
-WITH seg AS (
-  SELECT DISTINCT event_type, user_id FROM events
-  WHERE event_type IN ('purchase', 'click')
-), words AS (
-  SELECT event_type, user_id // 32 AS word,
-         (CAST(1 AS BIGINT) << CAST(user_id % 32 AS INTEGER)) AS bit
-  FROM seg
-), bm AS (
-  SELECT word,
-         bit_or(CASE WHEN event_type = 'purchase' THEN bit END) AS ba,
-         bit_or(CASE WHEN event_type = 'click' THEN bit END) AS bb
-  FROM words GROUP BY 1
-), agg AS (
-  SELECT SUM(bit_count(COALESCE(ba, 0))) AS n_a,
-         SUM(bit_count(COALESCE(bb, 0))) AS n_b,
-         SUM(bit_count(COALESCE(ba, 0) & COALESCE(bb, 0))) AS n_both
-  FROM bm
-)
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-       CAST(n_both AS BIGINT) AS n_both,
-       CASE WHEN CAST(n_a + n_b - n_both AS DOUBLE) > 0.0
-            THEN CAST(n_both AS DOUBLE) / CAST(n_a + n_b - n_both AS DOUBLE)
-            ELSE 0.0 END AS jaccard
-FROM agg
-"""
-
-
-def q_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EWMA smoothing with α = 1/2 over the trailing 8 observations per
-    user. α = 1/2 is chosen deliberately: every weight 2⁻ᵏ is a power
-    of two, so each ``value·2⁻ᵏ`` product is EXACT (pure exponent
-    shift, no mantissa rounding) and the normalizer 255/128 is exactly
-    representable — the whole expression is a fixed left-to-right IEEE
-    tree that both engines evaluate bit-identically. Rows with fewer
-    than 8 trailing observations are excluded so the normalizer is a
-    constant (varying denominators would need per-row weight sums).
-    Ordering is the symmetric (µs-epoch, event_id) key — never raw ts.
-
-    Scale: ONE window over the user partition (8 bounded lags of O(1)
-    state); the user-id modulus is output thinning, pushed to the scan."""
-    # value pinned to DOUBLE up front: on a DECIMAL-typed lake the
-    # engines evaluate decimal×double terms with different promotion
-    # trees (1-ulp splits — decimalprice driftlab layout, r6); the
-    # cast is a no-op on the committed double lake
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "value", F.col("value").cast("double")
-    )
-    w = Window.partitionBy("user_id").orderBy(
-        F.expr("unix_micros(ts)"), "event_id"
-    )
-    lags = [F.col("value")] + [
-        F.lag("value", k).over(w) for k in range(1, 8)
-    ]
-    weights = [1.0, 0.5, 0.25, 0.125, 0.0625, 0.03125, 0.015625, 0.0078125]
-    num = lags[0]
-    for term, wt in zip(lags[1:], weights[1:]):
-        num = num + term * F.lit(wt)
-    return (
-        ev.filter(F.col("user_id") % 20 == 0)
-        .select(
-            "user_id",
-            "event_id",
-            "value",
-            (num / F.lit(1.9921875)).alias("ewma"),
-            F.row_number().over(w).alias("rn"),
-        )
-        .filter(F.col("rn") >= 8)
-        .drop("rn")
-    )
-
-
-ORACLE_EWMA_SMOOTH = """
--- CAST AS DOUBLE mirrors the operator's pinned staging
--- (decimalprice driftlab layout, r6)
-WITH ev AS (
-  SELECT user_id, event_id, ts, CAST(value AS DOUBLE) AS value
-  FROM events
-), seq AS (
-  SELECT user_id, event_id, value,
-         lag(value, 1) OVER w AS v1, lag(value, 2) OVER w AS v2,
-         lag(value, 3) OVER w AS v3, lag(value, 4) OVER w AS v4,
-         lag(value, 5) OVER w AS v5, lag(value, 6) OVER w AS v6,
-         lag(value, 7) OVER w AS v7,
-         row_number() OVER w AS rn
-  FROM ev
-  WHERE user_id % 20 = 0
-  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-)
-SELECT user_id, event_id, value,
-       (value + v1 * 0.5 + v2 * 0.25 + v3 * 0.125 + v4 * 0.0625
-        + v5 * 0.03125 + v6 * 0.015625 + v7 * 0.0078125)
-       / 1.9921875 AS ewma
-FROM seq WHERE rn >= 8
-"""
-
-
-def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-iteration min-label propagation (synchronous BFS-min,
-    3 rounds) over the co-purchase graph — the fixed-depth twin of
-    ``ext/dedup.py``'s full pointer-jumping connected components:
-    label(v) ← min(label(v), min over neighbors). Every step is
-    integer MIN algebra, so 3 unrolled rounds oracle exactly (the
-    full-depth variant needs the checkpointed loop and is attested by
-    ``dedup_groups``). Output: community sizes at depth 3.
-
-    Scale: per round ONE src-keyed join + ONE dst-keyed min — the same
-    shuffle pair as ``pagerank``; label state stays distributed."""
-    from fink_broker_spark.ext.graph import (
-        copurchase_edges,
-        min_label_propagation,
-        symmetrize,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem")
-    # every LP round joins the edge relation, so it is materialized
-    # once — otherwise each round re-derives the basket self-join
-    sym = _materialize(
-        symmetrize(copurchase_edges(li, min_support=2))
-    )
-    labels = min_label_propagation(sym, rounds=3)
-    return (
-        labels.groupBy("lbl")
-        .agg(F.count(F.lit(1)).alias("community_size"))
-        .orderBy(F.desc("community_size"), "lbl")
-        .limit(20)
-    )
-
-
-ORACLE_LABEL_PROPAGATION = """
-WITH pairs AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-  GROUP BY a.l_partkey, b.l_partkey
-  HAVING count(*) >= 2
-),
-edges AS (
-  SELECT u AS src, v AS dst FROM pairs
-  UNION ALL SELECT v AS src, u AS dst FROM pairs
-),
-l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM edges),
-m1 AS (
-  SELECT e.dst AS node, MIN(l.lbl) AS nl
-  FROM edges e JOIN l0 l ON l.node = e.src GROUP BY 1
-),
-l1 AS (
-  SELECT l0.node, LEAST(l0.lbl, COALESCE(m1.nl, l0.lbl)) AS lbl
-  FROM l0 LEFT JOIN m1 ON m1.node = l0.node
-),
-m2 AS (
-  SELECT e.dst AS node, MIN(l.lbl) AS nl
-  FROM edges e JOIN l1 l ON l.node = e.src GROUP BY 1
-),
-l2 AS (
-  SELECT l1.node, LEAST(l1.lbl, COALESCE(m2.nl, l1.lbl)) AS lbl
-  FROM l1 LEFT JOIN m2 ON m2.node = l1.node
-),
-m3 AS (
-  SELECT e.dst AS node, MIN(l.lbl) AS nl
-  FROM edges e JOIN l2 l ON l.node = e.src GROUP BY 1
-),
-l3 AS (
-  SELECT l2.node, LEAST(l2.lbl, COALESCE(m3.nl, l2.lbl)) AS lbl
-  FROM l2 LEFT JOIN m3 ON m3.node = l2.node
-)
-SELECT lbl, COUNT(*) AS community_size
-FROM l3 GROUP BY 1
-ORDER BY community_size DESC, lbl LIMIT 20
-"""
-
-
-def q_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sparse term-count cosine similarity between documents via an
-    inverted-index join — the bag-of-words twin of the dense-embedding
-    near-dup family: pairs meet ONLY through shared terms (posting-list
-    equi-join), never an all-pairs product; high-DF terms are cut
-    RELATIVE to corpus size (df ≤ 5% of docs — an absolute cut would
-    silently empty the candidate set as the corpus grows) to bound
-    posting-list fan-out, the standard inverted-index guard. Dot products and norms are EXACT integer sums; the
-    cosine is the fixed tree dot/(sqrt(na)·sqrt(nb)) over those exact
-    operands — no transcendental. Top-20 pairs, (id_a, id_b) tiebreak."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower("text"), "[^a-z]+"),
-        lambda x: F.length(x) >= 3,
-    )
-    tc = (
-        docs.select(F.col("doc_id"), F.explode(toks).alias("w"))
-        .groupBy("doc_id", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    nd = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    rare = (
-        tc.groupBy("w")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(nd))
-        .filter(F.col("df") * 20 <= F.col("n_docs"))
-    )
-    tcr = tc.join(F.broadcast(rare.select("w")), "w")
-    norms = tc.groupBy("doc_id").agg(
-        F.sum(F.col("c") * F.col("c")).alias("n2")
-    )
-    dots = (
-        tcr.alias("a")
-        .join(tcr.alias("b"), "w")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            (F.col("a.c") * F.col("b.c")).alias("p"),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.sum("p").alias("dot"))
-    )
-    cos = (
-        dots.join(
-            F.broadcast(norms.select(F.col("doc_id").alias("id_a"),
-                                     F.col("n2").alias("na"))), "id_a"
-        )
-        .join(
-            F.broadcast(norms.select(F.col("doc_id").alias("id_b"),
-                                     F.col("n2").alias("nb"))), "id_b"
-        )
-        .select(
-            "id_a",
-            "id_b",
-            "dot",
-            (
-                F.col("dot").cast("double")
-                / (
-                    F.sqrt(F.col("na").cast("double"))
-                    * F.sqrt(F.col("nb").cast("double"))
-                )
-            ).alias("cosine"),
-        )
-    )
-    return cos.orderBy(F.desc("cosine"), "id_a", "id_b").limit(20)
-
-
-ORACLE_SPARSE_COSINE_PAIRS = """
-WITH tc AS (
-  SELECT doc_id, w, COUNT(*) AS c FROM (
-    SELECT doc_id,
-           unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                              x -> length(x) >= 3)) AS w
-    FROM documents
-  ) GROUP BY 1, 2
-), nd AS (
-  SELECT COUNT(*) AS n_docs FROM documents
-), rare AS (
-  SELECT w FROM (SELECT w, COUNT(*) AS df FROM tc GROUP BY 1)
-  CROSS JOIN nd WHERE df * 20 <= n_docs
-), tcr AS (
-  SELECT tc.doc_id, tc.w, tc.c FROM tc JOIN rare USING (w)
-), norms AS (
-  SELECT doc_id, SUM(c * c) AS n2 FROM tc GROUP BY 1
-), dots AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, SUM(a.c * b.c) AS dot
-  FROM tcr a JOIN tcr b ON a.w = b.w AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b, CAST(dot AS BIGINT) AS dot,
-       CAST(dot AS DOUBLE)
-         / (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE)))
-         AS cosine
-FROM dots
-JOIN norms na ON na.doc_id = id_a
-JOIN norms nb ON nb.doc_id = id_b
-ORDER BY cosine DESC, id_a, id_b LIMIT 20
-"""
-
-
-def q_mad_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Median absolute deviation per event type — the robust-dispersion
-    twin of ``anomaly_scores``' mean/stddev. Two grouped median passes
-    through ``archive/statistics.py:grouped_percentiles``: the gate is
-    evaluated ONCE on the scan input and the SAME mode is passed to
-    both passes (the second pass's input is a join, whose Catalyst
-    estimate is join-product-derived and must not be gated on — the
-    ``ext/graph.py`` lesson). Exact mode at driver scale ≡ DuckDB
-    ``quantile_cont`` bit-for-bit (proved by ``percentiles``); above
-    the gate both passes swap to mergeable ``percentile_approx``.
-    |v − med| is one correctly-rounded subtraction of doubles — an
-    identical tree on both engines."""
-    from fink_broker_spark.archive.statistics import (
-        _plan_size_bytes,
-        EXACT_PERCENTILE_MAX_BYTES,
-        grouped_percentiles,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
-    size = _plan_size_bytes(ev)
-    mode = "exact" if 0 <= size <= EXACT_PERCENTILE_MAX_BYTES else "approx"
-    med = grouped_percentiles(
-        ev, ["event_type"], {"med": ("value", 0.5)}, mode=mode
-    )
-    dev = ev.join(F.broadcast(med), "event_type").select(
-        "event_type", "med", F.abs(F.col("value") - F.col("med")).alias("ad")
-    )
-    mad = grouped_percentiles(
-        dev, ["event_type"], {"mad": ("ad", 0.5)}, mode=mode
-    )
-    return (
-        med.join(mad, "event_type")
-        .select("event_type", "med", "mad")
-    )
-
-
-ORACLE_MAD_SCORES = """
--- CAST AS DOUBLE mirrors grouped_percentiles' double-pinned input
--- (decimalprice driftlab layout, r6)
-WITH ev AS (
-  SELECT event_type, CAST(value AS DOUBLE) AS value FROM events
-), med AS (
-  SELECT event_type, quantile_cont(value, 0.5) AS med
-  FROM ev GROUP BY 1
-), dev AS (
-  SELECT e.event_type, m.med, abs(e.value - m.med) AS ad
-  FROM ev e JOIN med m USING (event_type)
-)
-SELECT event_type, ANY_VALUE(med) AS med,
-       quantile_cont(ad, 0.5) AS mad
-FROM dev GROUP BY event_type
-"""
-
-
-def q_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Referential-integrity audit across the whole star schema: for
-    each FK relation, total rows and orphan rows (FK values with no
-    parent). ONE left join + conditional count per relation — the
-    anti-join reformulated as a flag sum so row total and orphan count
-    come from a single pass (two separate aggregates would scan the
-    fact twice). Dimensions are unhinted: AQE broadcasts the small
-    ones and shuffle-joins the big ones at 100 TB. Integer-exact."""
-
-    def rel(name: str, fact: DataFrame, fk: str, dim: DataFrame, pk: str):
-        d = dim.select(F.col(pk).alias("k")).distinct().withColumn(
-            "hit", F.lit(1)
-        )
-        return (
-            fact.select(F.col(fk).alias("k"))
-            .join(d, "k", "left")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(
-                    F.when(F.col("hit").isNull(), 1).otherwise(0)
-                ).alias("n_orphans"),
-            )
-            .select(F.lit(name).alias("relation"), "n_rows", "n_orphans")
-        )
-
-    cu = load_table(spark, sf_dir, "customer")
-    na = load_table(spark, sf_dir, "nation")
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    pa = load_table(spark, sf_dir, "part")
-    su = load_table(spark, sf_dir, "supplier")
-    ev = load_table(spark, sf_dir, "events")
-    parts = [
-        rel("orders.custkey", o, "o_custkey", cu, "c_custkey"),
-        rel("lineitem.partkey", li, "l_partkey", pa, "p_partkey"),
-        rel("lineitem.suppkey", li, "l_suppkey", su, "s_suppkey"),
-        rel("lineitem.orderkey", li, "l_orderkey", o, "o_orderkey"),
-        rel("customer.nationkey", cu, "c_nationkey", na, "n_nationkey"),
-        rel("events.user_id", ev, "user_id", cu, "c_custkey"),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
-
-
-ORACLE_FK_ORPHANS = """
-SELECT 'orders.custkey' AS relation, COUNT(*) AS n_rows,
-       SUM(CASE WHEN d.k IS NULL THEN 1 ELSE 0 END) AS n_orphans
-FROM orders f LEFT JOIN (SELECT DISTINCT c_custkey AS k FROM customer) d
-  ON f.o_custkey = d.k
-UNION ALL
-SELECT 'lineitem.partkey', COUNT(*),
-       SUM(CASE WHEN d.k IS NULL THEN 1 ELSE 0 END)
-FROM lineitem f LEFT JOIN (SELECT DISTINCT p_partkey AS k FROM part) d
-  ON f.l_partkey = d.k
-UNION ALL
-SELECT 'lineitem.suppkey', COUNT(*),
-       SUM(CASE WHEN d.k IS NULL THEN 1 ELSE 0 END)
-FROM lineitem f LEFT JOIN (SELECT DISTINCT s_suppkey AS k FROM supplier) d
-  ON f.l_suppkey = d.k
-UNION ALL
-SELECT 'lineitem.orderkey', COUNT(*),
-       SUM(CASE WHEN d.k IS NULL THEN 1 ELSE 0 END)
-FROM lineitem f LEFT JOIN (SELECT DISTINCT o_orderkey AS k FROM orders) d
-  ON f.l_orderkey = d.k
-UNION ALL
-SELECT 'customer.nationkey', COUNT(*),
-       SUM(CASE WHEN d.k IS NULL THEN 1 ELSE 0 END)
-FROM customer f LEFT JOIN (SELECT DISTINCT n_nationkey AS k FROM nation) d
-  ON f.c_nationkey = d.k
-UNION ALL
-SELECT 'events.user_id', COUNT(*),
-       SUM(CASE WHEN d.k IS NULL THEN 1 ELSE 0 END)
-FROM events f LEFT JOIN (SELECT DISTINCT c_custkey AS k FROM customer) d
-  ON f.user_id = d.k
-"""
-
-
-def q_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Year-over-year monthly revenue growth — period-over-period time
-    intelligence. Month keys are exact integers from the normalized
-    timestamp (year/month are sub-µs-jitter-immune, unlike raw-ts
-    ordering); monthly revenue is an exact decimal sum ROUNDED TO
-    SCALE 2 BEFORE the double cast (the wide-decimal rule: a scale-9
-    monthly sum's unscaled value can outgrow 2^53, where DuckDB
-    double-rounds); the YoY match is an equi-join on (year−1, month) —
-    never a 12-row lag, which silently pairs wrong months across gaps.
-    Growth is one (r−p)/p tree over the exactly-rounded doubles."""
-    o = load_table(spark, sf_dir, "orders")
-    monthly = (
-        o.groupBy(
-            F.year("o_orderdate").alias("yr"),
-            F.month("o_orderdate").alias("mo"),
-        )
-        .agg(
-            F.round(F.sum(_dec("o_totalprice")), 2)
-            .cast("double")
-            .alias("rev")
-        )
-    )
-    prev = monthly.select(
-        (F.col("yr") + 1).alias("yr"),
-        F.col("mo"),
-        F.col("rev").alias("prev_rev"),
-    )
-    return (
-        monthly.join(prev, ["yr", "mo"])
-        .select(
-            "yr",
-            "mo",
-            "rev",
-            "prev_rev",
-            (
-                (F.col("rev") - F.col("prev_rev")) / F.col("prev_rev")
-            ).alias("growth"),
-        )
-    )
-
-
-ORACLE_YOY_GROWTH = """
-WITH monthly AS (
-  SELECT year(o_orderdate) AS yr, month(o_orderdate) AS mo,
-         CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,9))), 2)
-              AS DOUBLE) AS rev
-  FROM orders GROUP BY 1, 2
-)
-SELECT m.yr, m.mo, m.rev, p.rev AS prev_rev,
-       (m.rev - p.rev) / p.rev AS growth
-FROM monthly m JOIN monthly p ON m.yr = p.yr + 1 AND m.mo = p.mo
-"""
-
-
-def q_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square test of independence: event_type × md5-parity arm
-    contingency table. The cell grid is the CROSS of the two margins
-    (observed-only cells would silently drop zero cells and bias χ²);
-    expected counts and per-cell terms are doubles from exact integer
-    margins through one fixed tree, each term decimal(18,9)-rounded
-    before the EXACT sum (the order-free float-sum discipline), and
-    the 10-term scale-9 sum casts narrowly to double. Everything is
-    two tiny aggregates + a margins cross join — driver-scale math on
-    top of ONE fact-table pass."""
-    ev = load_table(spark, sf_dir, "events")
-    base = ev.select(
-        "event_type",
-        (
-            F.conv(
-                F.substring(F.md5(F.col("user_id").cast("string")), 1, 8),
-                16,
-                10,
-            ).cast("long")
-            % 2
-        ).alias("arm"),
-    )
-    obs = base.groupBy("event_type", "arm").agg(
-        F.count(F.lit(1)).alias("o")
-    )
-    rowm = base.groupBy("event_type").agg(F.count(F.lit(1)).alias("rt"))
-    colm = base.groupBy("arm").agg(F.count(F.lit(1)).alias("ct"))
-    tot = base.agg(F.count(F.lit(1)).alias("n"))
-    cells = (
-        rowm.crossJoin(colm)
-        .crossJoin(F.broadcast(tot))
-        .join(obs, ["event_type", "arm"], "left")
-        .select(
-            "event_type",
-            "arm",
-            F.coalesce("o", F.lit(0)).alias("o"),
-            "rt",
-            "ct",
-            "n",
-        )
-    )
-    e = (F.col("rt") * F.col("ct")).cast("double") / F.col("n").cast(
-        "double"
-    )
-    term = (
-        (F.col("o").cast("double") - e) * (F.col("o").cast("double") - e)
-    ) / e
-    return (
-        cells.select(
-            "event_type",
-            "arm",
-            "n",
-            term.cast("decimal(18,9)").alias("t"),
-        )
-        .groupBy("n")
-        .agg(
-            F.sum("t").cast("double").alias("chi2"),
-            (
-                (F.countDistinct("event_type") - 1)
-                * (F.countDistinct("arm") - 1)
-            )
-            .cast("int")
-            .alias("dof"),
-        )
-        .select(F.col("n").alias("n_events"), "dof", "chi2")
-    )
-
-
-ORACLE_CHISQ_INDEPENDENCE = """
-WITH base AS (
-  SELECT event_type,
-         CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8) AS BIGINT)
-           % 2 AS arm
-  FROM events
-), obs AS (
-  SELECT event_type, arm, COUNT(*) AS o FROM base GROUP BY 1, 2
-), rowm AS (
-  SELECT event_type, COUNT(*) AS rt FROM base GROUP BY 1
-), colm AS (
-  SELECT arm, COUNT(*) AS ct FROM base GROUP BY 1
-), tot AS (
-  SELECT COUNT(*) AS n FROM base
-), cells AS (
-  SELECT rowm.event_type, colm.arm, COALESCE(obs.o, 0) AS o,
-         rowm.rt, colm.ct, tot.n
-  FROM rowm CROSS JOIN colm CROSS JOIN tot
-  LEFT JOIN obs ON obs.event_type = rowm.event_type
-              AND obs.arm = colm.arm
-), terms AS (
-  SELECT event_type, arm, n,
-         CAST(((CAST(o AS DOUBLE)
-                - CAST(rt * ct AS DOUBLE) / CAST(n AS DOUBLE))
-               * (CAST(o AS DOUBLE)
-                  - CAST(rt * ct AS DOUBLE) / CAST(n AS DOUBLE)))
-              / (CAST(rt * ct AS DOUBLE) / CAST(n AS DOUBLE))
-              AS DECIMAL(18,9)) AS t
-  FROM cells
-)
-SELECT CAST(n AS BIGINT) AS n_events,
-       CAST((COUNT(DISTINCT event_type) - 1)
-            * (COUNT(DISTINCT arm) - 1) AS INT) AS dof,
-       CAST(SUM(t) AS DOUBLE) AS chi2
-FROM terms GROUP BY n
-"""
-
-
-def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise Pearson correlation matrix over the lineitem measures
-    (quantity, extendedprice, discount), two-pass centered form.
-    Pass 1: exact integer count + cents sums (sub-2⁵³, safe
-    everywhere). Pass 2: per-row deviations in per-measure NORMALIZED
-    units (fixed literal divisors — correlation is scale-invariant, so
-    normalizing keeps every term O(1)-O(10³) and every decimal sum's
-    unscaled value far below 2⁵³), each cross/self product rounded to
-    decimal(18,7) BEFORE the exact sum, then r = fixed double tree.
-    The one-pass n·Σxy − Σx·Σy form was REJECTED: its price-variance
-    operand reaches 82 bits and DuckDB's int128→double conversion is
-    not correctly rounded above ~2⁶⁴ (measured) — wide exact integers
-    must never terminal-cast. Native ``F.corr`` accumulates in float
-    and is not hash-stable; this decomposition is. At 100 TB: two
-    scans, 7 mergeable aggregation numbers, 3-row output."""
-    li = load_table(spark, sf_dir, "lineitem")
-
-    def cents(c):
-        return F.floor(F.col(c) * 100 + F.lit(0.5)).cast("long")
-
-    # both aggregation passes evaluate per-row floor/decimal trees in
-    # the scan stage — spread the single-row-group scan across cores
-    # (guide §2.5; no-op at scale); identical Exchange subtrees, so the
-    # physical plan reuses one shuffle for both passes
-    t = ensure_scan_parallelism(
-        li.select(
-            cents("l_quantity").alias("q"),
-            cents("l_extendedprice").alias("p"),
-            cents("l_discount").alias("d"),
-        )
-    )
-    m = t.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("q").alias("sq"),
-        F.sum("p").alias("sp"),
-        F.sum("d").alias("sd"),
-    )
-    # per-measure normalizers keep deviations O(1)-O(10): quantity in
-    # tens, price in $10k units, discount in tenths of a cent-unit
-    NORM = {"q": 1000.0, "p": 1000000.0, "d": 10.0}
-
-    def dev(c):
-        return F.col(c).cast("double") / F.lit(NORM[c]) - (
-            F.col("s" + c).cast("double") / F.col("n").cast("double")
-        ) / F.lit(NORM[c])
-
-    def term(a, b, name):
-        return F.sum(
-            (dev(a) * dev(b)).cast("decimal(18,7)")
-        ).alias(name)
-
-    g = t.crossJoin(F.broadcast(m)).agg(
-        F.max("n").alias("n"),
-        term("q", "p", "cqp"),
-        term("q", "d", "cqd"),
-        term("p", "d", "cpd"),
-        term("q", "q", "vq"),
-        term("p", "p", "vp"),
-        term("d", "d", "vd"),
-    )
-
-    def corr(cab, va, vb):
-        # zero-variance operand (constant measure / single row) → NULL,
-        # never an x/0.0 (ANSI throws; DuckDB yields ±inf — onerow and
-        # constant driftlab layouts).  Terminal scale-9 round: on
-        # high-magnitude lakes the decimal(28,7) term sums outgrow the
-        # unscaled-2⁵³ safe zone where DuckDB's wide-decimal→double
-        # cast double-rounds (bigmoney driftlab) — |r| ≤ 1, so the
-        # round absorbs the 1-ulp input split
-        return F.round(
-            F.when(
-                (F.col(va) > 0) & (F.col(vb) > 0),
-                F.col(cab).cast("double")
-                / F.sqrt(
-                    F.col(va).cast("double") * F.col(vb).cast("double")
-                ),
-            ),
-            9,
-        )
-
-    # one aggregate row unpivoted with stack — a 3-way union of the
-    # same aggregate would replicate the whole two-pass subplan
-    scored = g.select(
-        "n",
-        corr("cqp", "vq", "vp").alias("c1"),
-        corr("cqd", "vq", "vd").alias("c2"),
-        corr("cpd", "vp", "vd").alias("c3"),
-    )
-    return scored.selectExpr(
-        "stack(3, 'quantity_price', c1, 'quantity_discount', c2, "
-        "'price_discount', c3) AS (pair, corr)",
-        "n",
-    ).select("pair", "n", "corr")
-
-
-ORACLE_CORR_MATRIX = """
-WITH t AS (
-  SELECT CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT) AS q,
-         CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS p,
-         CAST(FLOOR(l_discount * 100 + 0.5) AS BIGINT) AS d
-  FROM lineitem
-), m AS (
-  SELECT count(*) AS n, SUM(q) AS sq, SUM(p) AS sp, SUM(d) AS sd
-  FROM t
-), g AS (
-  SELECT MAX(n) AS n,
-         SUM(CAST((CAST(q AS DOUBLE) / 1000.0
-                   - (CAST(sq AS DOUBLE) / CAST(n AS DOUBLE)) / 1000.0)
-                  * (CAST(p AS DOUBLE) / 1000000.0
-                     - (CAST(sp AS DOUBLE) / CAST(n AS DOUBLE))
-                       / 1000000.0)
-                  AS DECIMAL(18,7))) AS cqp,
-         SUM(CAST((CAST(q AS DOUBLE) / 1000.0
-                   - (CAST(sq AS DOUBLE) / CAST(n AS DOUBLE)) / 1000.0)
-                  * (CAST(d AS DOUBLE) / 10.0
-                     - (CAST(sd AS DOUBLE) / CAST(n AS DOUBLE)) / 10.0)
-                  AS DECIMAL(18,7))) AS cqd,
-         SUM(CAST((CAST(p AS DOUBLE) / 1000000.0
-                   - (CAST(sp AS DOUBLE) / CAST(n AS DOUBLE))
-                     / 1000000.0)
-                  * (CAST(d AS DOUBLE) / 10.0
-                     - (CAST(sd AS DOUBLE) / CAST(n AS DOUBLE)) / 10.0)
-                  AS DECIMAL(18,7))) AS cpd,
-         SUM(CAST((CAST(q AS DOUBLE) / 1000.0
-                   - (CAST(sq AS DOUBLE) / CAST(n AS DOUBLE)) / 1000.0)
-                  * (CAST(q AS DOUBLE) / 1000.0
-                     - (CAST(sq AS DOUBLE) / CAST(n AS DOUBLE)) / 1000.0)
-                  AS DECIMAL(18,7))) AS vq,
-         SUM(CAST((CAST(p AS DOUBLE) / 1000000.0
-                   - (CAST(sp AS DOUBLE) / CAST(n AS DOUBLE))
-                     / 1000000.0)
-                  * (CAST(p AS DOUBLE) / 1000000.0
-                     - (CAST(sp AS DOUBLE) / CAST(n AS DOUBLE))
-                       / 1000000.0)
-                  AS DECIMAL(18,7))) AS vp,
-         SUM(CAST((CAST(d AS DOUBLE) / 10.0
-                   - (CAST(sd AS DOUBLE) / CAST(n AS DOUBLE)) / 10.0)
-                  * (CAST(d AS DOUBLE) / 10.0
-                     - (CAST(sd AS DOUBLE) / CAST(n AS DOUBLE)) / 10.0)
-                  AS DECIMAL(18,7))) AS vd
-  FROM t CROSS JOIN m
-)
-SELECT 'quantity_price' AS pair, n,
-       ROUND(CASE WHEN vq > 0 AND vp > 0 THEN CAST(cqp AS DOUBLE)
-         / sqrt(CAST(vq AS DOUBLE) * CAST(vp AS DOUBLE)) END, 9) AS corr
-FROM g
-UNION ALL
-SELECT 'quantity_discount', n,
-       ROUND(CASE WHEN vq > 0 AND vd > 0 THEN CAST(cqd AS DOUBLE)
-         / sqrt(CAST(vq AS DOUBLE) * CAST(vd AS DOUBLE)) END, 9)
-FROM g
-UNION ALL
-SELECT 'price_discount', n,
-       ROUND(CASE WHEN vp > 0 AND vd > 0 THEN CAST(cpd AS DOUBLE)
-         / sqrt(CAST(vp AS DOUBLE) * CAST(vd AS DOUBLE)) END, 9)
-FROM g
-"""
-
-
-def q_gini_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini coefficient of customer-revenue inequality per nation —
-    the rank-weighted formulation G = (2·Σi·xᵢ − (n+1)·Σxᵢ)/(n·Σxᵢ)
-    with xᵢ ascending. Revenue integerizes to exact cents per order
-    BEFORE the customer sum (long arithmetic end-to-end), the rank is
-    a row_number over the symmetric (rev_cents, custkey) key — fully
-    deterministic, no timestamp ordering — and the Gini is one double
-    division of scale-0-cast exact operands. Plan: one orders
-    aggregate (|customers| rows), one small join to customer for the
-    nation key, one |customers|-row window per nation, one final
-    25-row aggregate. At 100 TB the only fact-table shuffle is the
-    per-customer sum; everything after runs on dimension-sized data."""
-    o = load_table(spark, sf_dir, "orders")
-    cu = load_table(spark, sf_dir, "customer")
-    na = load_table(spark, sf_dir, "nation")
-    rev = (
-        o.select(
-            "o_custkey",
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("o_custkey")
-        .agg(F.sum("cents").alias("rev_cents"))
-    )
-    ranked = (
-        rev.join(
-            cu.select("c_custkey", "c_nationkey").join(
-                F.broadcast(na.select("n_nationkey", "n_name")),
-                F.col("c_nationkey") == F.col("n_nationkey"),
-            ),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .select("n_name", "o_custkey", "rev_cents")
-        .withColumn(
-            "i",
-            F.row_number().over(
-                Window.partitionBy("n_name").orderBy(
-                    "rev_cents", "o_custkey"
-                )
-            ),
-        )
-    )
-    g = ranked.groupBy("n_name").agg(
-        F.count(F.lit(1)).alias("n_customers"),
-        F.sum("rev_cents").alias("ssum"),
-        F.sum(F.col("i") * F.col("rev_cents")).alias("siw"),
-    )
-
-    def big(c):
-        return F.col(c).cast("decimal(38,0)")
-
-    num = (
-        F.lit(2) * big("siw") - (big("n_customers") + 1) * big("ssum")
-    ).cast("double")
-    den = (big("n_customers") * big("ssum")).cast("double")
-    return g.select(
-        F.col("n_name").alias("nation"),
-        "n_customers",
-        (num / den).alias("gini"),
-    )
-
-
-ORACLE_GINI_BY_NATION = """
-WITH rev AS (
-  SELECT o_custkey,
-         SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS rev_cents
-  FROM orders GROUP BY o_custkey
-), ranked AS (
-  SELECT n.n_name, r.o_custkey, r.rev_cents,
-         ROW_NUMBER() OVER (
-           PARTITION BY n.n_name ORDER BY r.rev_cents, r.o_custkey
-         ) AS i
-  FROM rev r
-  JOIN customer c ON r.o_custkey = c.c_custkey
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
-), g AS (
-  SELECT n_name, count(*) AS n_customers, SUM(rev_cents) AS ssum,
-         SUM(i * rev_cents) AS siw
-  FROM ranked GROUP BY n_name
-)
-SELECT n_name AS nation, n_customers,
-       CAST(2 * siw - (n_customers + 1) * ssum AS DOUBLE)
-         / CAST(n_customers * ssum AS DOUBLE) AS gini
-FROM g
-"""
-
-
-def q_interval_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval coalescing (gaps-and-islands over real intervals): each
-    order spans [order day, last ship day]; per customer, overlapping
-    or touching spans merge into islands. The classic two-window
-    decomposition — a running MAX of interval ends over the
-    (start, orderkey)-ordered history marks island breaks, a running
-    SUM of breaks numbers the islands — then one aggregate per
-    (customer, island) and one per customer. All keys are exact epoch
-    days (sub-µs-jitter-immune); no timestamp ever reaches an ORDER
-    BY. Plan at 100 TB: one lineitem aggregate (per-order end), one
-    orders join, per-customer windows over |orders| rows — state is
-    one MAX + one SUM, bounded."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-
-    ends = (
-        li.select("l_orderkey", _day("l_shipdate").alias("sday"))
-        .groupBy("l_orderkey")
-        .agg(F.max("sday").alias("end_day"))
-    )
-    # dropDuplicates: a re-ingested duplicate orders row (duprows
-    # driftlab) is one order — and the exact-dup pair also exposed a
-    # frame hazard: the island sum below must be a ROWS frame (the
-    # default ordered-window frame is RANGE, which merges tie PEERS)
-    iv = (
-        o.dropDuplicates(["o_orderkey"])
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            _day("o_orderdate").alias("start_day"),
-        )
-        .join(ends, F.col("o_orderkey") == F.col("l_orderkey"))
-    )
-    w = Window.partitionBy("o_custkey").orderBy("start_day", "o_orderkey")
-    prev_max_end = F.max("end_day").over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    marked = iv.select(
-        "o_custkey",
-        "o_orderkey",
-        "start_day",
-        "end_day",
-        F.when(
-            prev_max_end.isNull()
-            | (F.col("start_day") > prev_max_end + 1),
-            1,
-        )
-        .otherwise(0)
-        .alias("brk"),
-    ).withColumn(
-        "island",
-        F.sum("brk").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    isl = marked.groupBy("o_custkey", "island").agg(
-        F.min("start_day").alias("s"),
-        F.max("end_day").alias("e"),
-        F.count(F.lit(1)).alias("n_orders"),
-    )
-    return (
-        isl.groupBy("o_custkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_islands"),
-            F.sum("n_orders").alias("n_orders"),
-            F.sum(F.col("e") - F.col("s") + 1).alias("covered_days"),
-        )
-        .select(
-            F.col("o_custkey").alias("custkey"),
-            "n_islands",
-            "n_orders",
-            "covered_days",
-        )
-    )
-
-
-ORACLE_INTERVAL_ISLANDS = """
-WITH ends AS (
-  SELECT l_orderkey,
-         MAX(CAST(FLOOR(epoch_us(l_shipdate) / 86400000000) AS BIGINT))
-           AS end_day
-  FROM lineitem GROUP BY l_orderkey
-), iv AS (
-  -- DISTINCT: a re-ingested duplicate orders row is one order
-  SELECT DISTINCT o.o_custkey, o.o_orderkey,
-         CAST(FLOOR(epoch_us(o.o_orderdate) / 86400000000) AS BIGINT)
-           AS start_day,
-         e.end_day
-  FROM orders o JOIN ends e ON o.o_orderkey = e.l_orderkey
-), marked AS (
-  SELECT o_custkey, o_orderkey, start_day, end_day,
-         CASE WHEN MAX(end_day) OVER (
-                  PARTITION BY o_custkey ORDER BY start_day, o_orderkey
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                ) IS NULL
-              OR start_day > MAX(end_day) OVER (
-                  PARTITION BY o_custkey ORDER BY start_day, o_orderkey
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                ) + 1
-              THEN 1 ELSE 0 END AS brk
-  FROM iv
-), islands AS (
-  SELECT o_custkey, start_day, end_day,
-         SUM(brk) OVER (
-           PARTITION BY o_custkey ORDER BY start_day, o_orderkey
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-         ) AS island
-  FROM marked
-), isl AS (
-  SELECT o_custkey, island, MIN(start_day) AS s, MAX(end_day) AS e,
-         count(*) AS n_orders
-  FROM islands GROUP BY o_custkey, island
-)
-SELECT o_custkey AS custkey, count(*) AS n_islands,
-       SUM(n_orders) AS n_orders, SUM(e - s + 1) AS covered_days
-FROM isl GROUP BY o_custkey
-"""
-
-
-def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM customer segmentation: recency (days from last order to the
-    corpus max order day), frequency (order count), monetary (exact
-    cents) → quintile scores with full deterministic tiebreaks (the
-    metric THEN custkey — ntile is ANSI-identical across engines only
-    when the ordering is total). A native global ``ntile`` would
-    single-partition-sort |customers| rows, so each score runs through
-    ``operators/ranking.bucketed_ntile`` — the deterministic two-phase
-    bucket-offset ranking (monotone bucket expr → |buckets|-row offset
-    table → bucket-partitioned row_number + ANSI tile formula) that
-    hash-matches the oracle's native NTILE while keeping per-task
-    state bounded by one bucket's population. Descending metrics rank
-    via the negated key. Plan: one orders aggregate, a 1-row corpus
-    max broadcast, three bucket-joins over dimension-sized data — the
-    fact table shuffles once. Integer-exact."""
-    o = load_table(spark, sf_dir, "orders")
-
-    per = (
-        o.select(
-            "o_custkey",
-            _day("o_orderdate").alias("oday"),
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("o_custkey")
-        .agg(
-            F.max("oday").alias("last_day"),
-            F.count(F.lit(1)).alias("freq"),
-            F.sum("cents").alias("monetary_cents"),
-        )
-    )
-    mx = per.agg(F.max("last_day").alias("corpus_max"))
-    base = per.crossJoin(F.broadcast(mx)).select(
-        "o_custkey",
-        (F.col("corpus_max") - F.col("last_day")).alias("recency_days"),
-        "freq",
-        "monetary_cents",
-    )
-    # each bucketed_ntile references its input twice (bucket counts +
-    # the offset join), so the three nested scores re-derived the
-    # orders aggregate up to 2^3 × its two base references (the
-    # 16-scan row of the r9 census).  base is |customers|-sized —
-    # materialize once; the downstream re-references are then windows
-    # over the checkpointed rows, not fact re-scans (guide §1.2).
-    base = _materialize(base)
-    from fink_broker_spark.operators.ranking import bucketed_ntile
-
-    ck = F.col("o_custkey")
-    scored = bucketed_ntile(
-        base, F.col("recency_days"), ck, 5, "r_score"
-    )
-    scored = bucketed_ntile(scored, -F.col("freq"), ck, 5, "f_score")
-    scored = bucketed_ntile(
-        scored,
-        -F.col("monetary_cents"),
-        ck,
-        5,
-        "m_score",
-        bucket_width=100_000,
-    )
-    return scored.select(
-        F.col("o_custkey").alias("custkey"),
-        "recency_days",
-        "freq",
-        "monetary_cents",
-        "r_score",
-        "f_score",
-        "m_score",
-        F.concat_ws(
-            "-",
-            F.col("r_score").cast("string"),
-            F.col("f_score").cast("string"),
-            F.col("m_score").cast("string"),
-        ).alias("segment"),
-    )
-
-
-ORACLE_RFM_SEGMENTS = """
-WITH per AS (
-  SELECT o_custkey,
-         MAX(CAST(FLOOR(epoch_us(o_orderdate) / 86400000000) AS BIGINT))
-           AS last_day,
-         count(*) AS freq,
-         SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-           AS monetary_cents
-  FROM orders GROUP BY o_custkey
-), base AS (
-  SELECT o_custkey,
-         (SELECT MAX(last_day) FROM per) - last_day AS recency_days,
-         freq, monetary_cents
-  FROM per
-), scored AS (
-  SELECT o_custkey AS custkey, recency_days, freq, monetary_cents,
-         -- NULLS FIRST pins the tiebreak to Spark's ascending default
-         -- (DuckDB defaults to NULLS LAST): a NULL o_custkey group
-         -- from NULL-FK data must rank identically on both engines
-         NTILE(5) OVER (ORDER BY recency_days, o_custkey NULLS FIRST)
-           AS r_score,
-         NTILE(5) OVER (ORDER BY freq DESC, o_custkey NULLS FIRST)
-           AS f_score,
-         NTILE(5) OVER (ORDER BY monetary_cents DESC,
-                        o_custkey NULLS FIRST) AS m_score
-  FROM base
-)
-SELECT custkey, recency_days, freq, monetary_cents, r_score, f_score,
-       m_score,
-       CAST(r_score AS VARCHAR) || '-' || CAST(f_score AS VARCHAR)
-         || '-' || CAST(m_score AS VARCHAR) AS segment
-FROM scored
-"""
-
-
-#: Benford's-law expected first-digit frequencies log10(1 + 1/d) as
-#: shortest-repr double literals — embedded verbatim in BOTH the Spark
-#: plan and the oracle SQL so the two engines compare against the
-#: bit-identical constant (a per-engine log10() call could differ by
-#: 1 ulp).
-_BENFORD = {
-    1: "0.3010299956639812",
-    2: "0.17609125905568124",
-    3: "0.12493873660829992",
-    4: "0.09691001300805642",
-    5: "0.07918124604762482",
-    6: "0.06694678963061322",
-    7: "0.05799194697768673",
-    8: "0.05115252244738129",
-    9: "0.04575749056067514",
-}
-
-
-def q_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford's-law first-digit audit of order totals — the
-    fraud/data-quality screen. The first significant digit comes from
-    the STRING of the floored integer part (never ``log10`` of a
-    double — transcendental binning is banned by the parity
-    discipline); expected frequencies are pinned double literals
-    (identical bits both engines); observed share and deviation are
-    single double divisions of exact integer counts. The digit grid is
-    a 9-row literal table LEFT-joined to observed counts so digits
-    with zero observations still report. One fact pass, 9-row output."""
-    o = load_table(spark, sf_dir, "orders")
-    obs = (
-        # Benford's law is defined on MAGNITUDES: abs() before the
-        # digit string, or a credit-note lake (negvalue driftlab) puts
-        # '-' in the first-char slot and the int cast throws under ANSI
-        o.select(
-            F.substring(
-                F.floor(F.abs(F.col("o_totalprice")))
-                .cast("long")
-                .cast("string"),
-                1,
-                1,
-            )
-            .cast("int")
-            .alias("digit")
-        )
-        .groupBy("digit")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    grid = spark.range(1).select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("digit"),
-                        F.expr(f"CAST({lit} AS DOUBLE)").alias(
-                            "expected"
-                        ),
-                    )
-                    for d, lit in _BENFORD.items()
-                ]
-            )
-        ).alias("g")
-    ).select("g.digit", "g.expected")
-    tot = obs.agg(F.sum("n").alias("total"))
-    return (
-        grid.join(obs, "digit", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "digit",
-            F.coalesce("n", F.lit(0)).alias("n"),
-            (
-                F.coalesce("n", F.lit(0)).cast("double")
-                / F.col("total").cast("double")
-            ).alias("share"),
-            "expected",
-            (
-                F.coalesce("n", F.lit(0)).cast("double")
-                / F.col("total").cast("double")
-                - F.col("expected")
-            ).alias("deviation"),
-        )
-    )
-
-
-ORACLE_BENFORD_DIGITS = """
-WITH obs AS (
-  -- abs: Benford on magnitudes (credit-note lakes carry negatives)
-  SELECT CAST(substr(CAST(CAST(FLOOR(abs(o_totalprice)) AS BIGINT) AS VARCHAR),
-              1, 1) AS INT) AS digit,
-         count(*) AS n
-  FROM orders GROUP BY 1
-), grid AS (
-  {grid}
-), tot AS (
-  SELECT SUM(n) AS total FROM obs
-)
-SELECT g.digit, COALESCE(o.n, 0) AS n,
-       CAST(COALESCE(o.n, 0) AS DOUBLE) / CAST(t.total AS DOUBLE)
-         AS share,
-       g.expected,
-       CAST(COALESCE(o.n, 0) AS DOUBLE) / CAST(t.total AS DOUBLE)
-         - g.expected AS deviation
-FROM grid g LEFT JOIN obs o ON g.digit = o.digit CROSS JOIN tot t
-""".format(
-    grid="\n  UNION ALL\n  ".join(
-        f"SELECT {d} AS digit, CAST({lit} AS DOUBLE) AS expected"
-        for d, lit in _BENFORD.items()
-    )
-)
-
-
-def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lower weighted median of extended price weighted by quantity,
-    per return flag — the classic cumulative-weight construction: rows
-    order by (cents, orderkey, linenumber) inside each group, a
-    running SUM accumulates integer weights, and the median is the
-    MIN value whose doubled cumulative weight reaches the group total.
-    Everything is exact integer arithmetic.  The fact table first
-    collapses to the (flag, cents) value grid, and the cumulative walk
-    is CHUNKED (r11): the group key is low-cardinality (3 flags), so a
-    flag-partitioned window would funnel the whole grid through 3
-    tasks — the running sum instead runs inside (flag, cents-range)
-    chunks with prefix-summed carry-ins, the max_concurrency sweep
-    shape."""
-    # NULL price/quantity rows carry no weight and would ride the cents
-    # ordering with engine-different NULL placement (nullmeasure)
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_extendedprice").isNotNull()
-        & F.col("l_quantity").isNotNull()
-    )
-    # CHUNKED cumulative weights (the r11 mannwhitney rule): the
-    # 3-flag-partitioned window funneled the whole cents grid through 3
-    # tasks.  The chunk id (a pure function of cents — sign-safe floor
-    # division) rides the grid GROUP KEY, so ONE keyed-spread exchange
-    # on (flag, chunk) serves the fact aggregate AND the chunk-local
-    # running sum; per-chunk totals (a 3×|range|/2¹⁶-row relation) are
-    # prefix-summed into each chunk's carry-in and cumw = carry + lcum
-    # exactly (ties in cents merge in the grid, so the threshold row is
-    # unchanged — equivalence pinned vs the flag-window form in
-    # tests/test_opt_r11.py; interleaved A/B 1.76 → 1.09 s min at
-    # sf0.1).  The keyed spread replaces r10's round-robin spread (one
-    # exchange instead of spread + agg exchanges); guarded no-op on a
-    # wide lake, where the agg and window exchanges reappear wide.
-    chunk_w = 1 << 16
-    t = li.select(
-        "l_returnflag",
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("w"),
-    ).withColumn(
-        "__chunk",
-        F.expr(f"(cents - pmod(cents, {chunk_w})) DIV {chunk_w}"),
-    )
-    g = ensure_keyed_parallelism(t, "l_returnflag", "__chunk").groupBy(
-        "l_returnflag", "__chunk", "cents"
-    ).agg(F.sum("w").alias("w"))
-    w_local = Window.partitionBy("l_returnflag", "__chunk").orderBy("cents")
-    loc = g.select(
-        "l_returnflag",
-        "__chunk",
-        "cents",
-        F.sum("w").over(w_local).alias("lcum"),
-    )
-    per_chunk = g.groupBy("l_returnflag", "__chunk").agg(
-        F.sum("w").alias("cw")
-    )
-    w_carry = (
-        Window.partitionBy("l_returnflag")
-        .orderBy("__chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_tot = (
-        Window.partitionBy("l_returnflag")
-        .orderBy(F.lit(1))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    ch = per_chunk.select(
-        "l_returnflag",
-        "__chunk",
-        F.coalesce(F.sum("cw").over(w_carry), F.lit(0)).alias("carry"),
-        F.sum("cw").over(w_tot).alias("total_w"),
-    )
-    cum = loc.join(F.broadcast(ch), ["l_returnflag", "__chunk"]).select(
-        "l_returnflag",
-        "cents",
-        (F.col("carry") + F.col("lcum")).alias("cumw"),
-        "total_w",
-    )
-    return (
-        cum.filter(2 * F.col("cumw") >= F.col("total_w"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.min("cents").alias("wmedian_cents"),
-            F.max("total_w").alias("total_weight"),
-        )
-    )
-
-
-ORACLE_WEIGHTED_MEDIAN = """
-WITH t AS (
-  SELECT l_returnflag,
-         CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents,
-         CAST(FLOOR(l_quantity + 0.5) AS BIGINT) AS w
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-), g AS (
-  SELECT l_returnflag, cents, SUM(w) AS w
-  FROM t GROUP BY l_returnflag, cents
-), cum AS (
-  SELECT l_returnflag, cents,
-         SUM(w) OVER (
-           PARTITION BY l_returnflag ORDER BY cents
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-         ) AS cumw,
-         SUM(w) OVER (PARTITION BY l_returnflag) AS total_w
-  FROM g
-)
-SELECT l_returnflag, MIN(cents) AS wmedian_cents,
-       MAX(total_w) AS total_weight
-FROM cum WHERE 2 * cumw >= total_w
-GROUP BY l_returnflag
-"""
-
-
-def q_rank_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Most-improved customers: revenue rank in the latest order year
-    vs the year before, per customer present in both. Ranks are exact
-    global ROW_NUMBERs (revenue DESC, custkey tiebreak) computed per
-    year by ``operators/ranking.bucketed_rank`` — the bucket-offset
-    plan, NOT a 2-partition window (a per-year window would funnel
-    every customer through two sequential partitions at 100 TB). The
-    reference years derive from the data (max order year), so the
-    query is layout-regeneration-proof. Integer-exact end-to-end."""
-    # NULL totalprice orders excluded: an all-NULL (cust, yr) group's
-    # NULL rev_cents would rank with engine-different NULL placement
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_totalprice").isNotNull()
-    )
-    rev = (
-        o.select(
-            "o_custkey",
-            F.year("o_orderdate").alias("yr"),
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("o_custkey", "yr")
-        .agg(F.sum("cents").alias("rev_cents"))
-    )
-    ymax = rev.agg(F.max("yr").alias("ymax"))
-    both = rev.crossJoin(F.broadcast(ymax)).filter(
-        (F.col("yr") == F.col("ymax")) | (F.col("yr") == F.col("ymax") - 1)
-    )
-    from fink_broker_spark.operators.ranking import bucketed_rank
-
-    def ranked(year_side):
-        sub = both.filter(F.col("yr") == year_side).select(
-            "o_custkey", "rev_cents"
-        )
-        return bucketed_rank(
-            sub,
-            -F.col("rev_cents"),
-            F.col("o_custkey"),
-            "rnk",
-            bucket_width=100_000,
-        )
-    cur = ranked(F.col("ymax")).select(
-        F.col("o_custkey").alias("custkey"),
-        F.col("rev_cents").alias("rev_cur"),
-        F.col("rnk").alias("rank_cur"),
-    )
-    prev = ranked(F.col("ymax") - 1).select(
-        F.col("o_custkey").alias("custkey"),
-        F.col("rev_cents").alias("rev_prev"),
-        F.col("rnk").alias("rank_prev"),
-    )
-    return cur.join(prev, "custkey").select(
-        "custkey",
-        "rev_prev",
-        "rev_cur",
-        "rank_prev",
-        "rank_cur",
-        (F.col("rank_prev") - F.col("rank_cur")).alias("rank_gain"),
-    )
-
-
-ORACLE_RANK_DELTA = """
-WITH rev AS (
-  SELECT o_custkey, year(o_orderdate) AS yr,
-         SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS rev_cents
-  FROM orders WHERE o_totalprice IS NOT NULL GROUP BY 1, 2
-), ym AS (
-  SELECT MAX(yr) AS ymax FROM rev
-), cur AS (
-  SELECT o_custkey AS custkey, rev_cents AS rev_cur,
-         ROW_NUMBER() OVER (ORDER BY rev_cents DESC, o_custkey)
-           AS rank_cur
-  FROM rev, ym WHERE yr = ymax
-), prev AS (
-  SELECT o_custkey AS custkey, rev_cents AS rev_prev,
-         ROW_NUMBER() OVER (ORDER BY rev_cents DESC, o_custkey)
-           AS rank_prev
-  FROM rev, ym WHERE yr = ymax - 1
-)
-SELECT c.custkey, p.rev_prev, c.rev_cur, p.rank_prev, c.rank_cur,
-       p.rank_prev - c.rank_cur AS rank_gain
-FROM cur c JOIN prev p ON c.custkey = p.custkey
-"""
-
-
-def q_ks_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kolmogorov–Smirnov test of day-of-week uniformity over event
-    times. The weekday is pure integer arithmetic (epoch-day mod 7 —
-    never an engine ``dayofweek``, whose basis differs between Spark
-    and DuckDB), the empirical CDF is a 7-row cumulative window over
-    exact counts, and the statistic is a MAX of absolute differences —
-    order-free, so no float-sum discipline is even needed. One fact
-    aggregate, 1-row output."""
-    ev = load_table(spark, sf_dir, "events")
-    dow = (
-        F.floor(F.unix_micros(F.col("ts")) / F.lit(86_400_000_000)) % 7
-    ).cast("int")
-    observed = ev.select(dow.alias("dow")).groupBy("dow").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    # full 0..6 grid: an EMPTY weekday is still a CDF evaluation point
-    # (skipping it understates the max deviation)
-    counts = (
-        spark.range(7)
-        .select(F.col("id").cast("int").alias("dow"))
-        .join(observed, "dow", "left")
-        .select("dow", F.coalesce("n", F.lit(0)).alias("n"))
-    )
-    w = Window.orderBy("dow")
-    cum = counts.select(
-        "dow",
-        F.sum("n").over(w).alias("cumn"),
-        F.sum("n")
-        .over(
-            Window.orderBy(F.lit(1)).rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
-        .alias("total"),
-    )
-    # an empty lake has no empirical CDF: ks_stat is NULL, never a
-    # division (ANSI throws where DuckDB gives NaN — emptystream)
-    diff = F.when(
-        F.col("total") > 0,
-        F.abs(
-            F.col("cumn").cast("double") / F.col("total").cast("double")
-            - (F.col("dow") + 1).cast("double") / F.lit(7.0)
-        ),
-    )
-    return cum.groupBy("total").agg(F.max(diff).alias("ks_stat")).select(
-        F.col("total").alias("n_events"), "ks_stat"
-    )
-
-
-ORACLE_KS_UNIFORMITY = """
-WITH observed AS (
-  SELECT CAST(CAST(FLOOR(epoch_us(ts) / 86400000000) AS BIGINT) % 7
-              AS INT) AS dow,
-         count(*) AS n
-  FROM events GROUP BY 1
-), counts AS (
-  SELECT CAST(r.range AS INT) AS dow, COALESCE(o.n, 0) AS n
-  FROM range(0, 7) r LEFT JOIN observed o ON r.range = o.dow
-), cum AS (
-  SELECT dow,
-         SUM(n) OVER (ORDER BY dow
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS cumn,
-         SUM(n) OVER () AS total
-  FROM counts
-)
-SELECT total AS n_events,
-       MAX(CASE WHEN total > 0 THEN
-           ABS(CAST(cumn AS DOUBLE) / CAST(total AS DOUBLE)
-               - CAST(dow + 1 AS DOUBLE) / 7.0) END) AS ks_stat
-FROM cum GROUP BY total
-"""
-
-
-def q_herfindahl_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Herfindahl–Hirschman market-concentration index: supplier
-    revenue concentration within each nation, H = Σ(sᵢ/Σsⱼ)². Each
-    share divides exact sub-2⁵³ integers in DOUBLE (bit-identical both
-    engines), the squared term rounds to decimal(18,9) BEFORE the sum
-    (order-free float-sum discipline), and the ≤1-magnitude decimal
-    sum casts narrowly to double. The Σsᵢ²/(Σsᵢ)² formulation was
-    deliberately REJECTED: its operands outgrow 2⁵³ and DuckDB's
-    int128→double conversion is not correctly rounded (measured 1-ulp
-    split at sf0.01) — wide exact integers must never terminal-cast.
-    Plan: one lineitem aggregate per supplier — the only fact shuffle
-    — then dimension-sized joins and a 25-row aggregate."""
-    li = load_table(spark, sf_dir, "lineitem")
-    su = load_table(spark, sf_dir, "supplier")
-    na = load_table(spark, sf_dir, "nation")
-    per = (
-        li.select(
-            "l_suppkey",
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("l_suppkey")
-        .agg(F.sum("cents").alias("s"))
-        .join(
-            su.select("s_suppkey", "s_nationkey").join(
-                F.broadcast(na.select("n_nationkey", "n_name")),
-                F.col("s_nationkey") == F.col("n_nationkey"),
-            ),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-    )
-    tot = per.groupBy("n_name").agg(
-        F.count(F.lit(1)).alias("n_suppliers"),
-        F.sum("s").alias("ssum"),
-    )
-    share = F.col("s").cast("double") / F.col("ssum").cast("double")
-    return (
-        per.join(F.broadcast(tot), "n_name")
-        .select(
-            "n_name",
-            "n_suppliers",
-            (share * share).cast("decimal(18,9)").alias("term"),
-        )
-        .groupBy("n_name", "n_suppliers")
-        .agg(F.sum("term").cast("double").alias("hhi"))
-        .select(F.col("n_name").alias("nation"), "n_suppliers", "hhi")
-    )
-
-
-ORACLE_HERFINDAHL_INDEX = """
-WITH per AS (
-  SELECT l_suppkey,
-         SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS s
-  FROM lineitem GROUP BY l_suppkey
-), tagged AS (
-  SELECT n.n_name, p.s
-  FROM per p
-  JOIN supplier su ON p.l_suppkey = su.s_suppkey
-  JOIN nation n ON su.s_nationkey = n.n_nationkey
-), tot AS (
-  SELECT n_name, count(*) AS n_suppliers, SUM(s) AS ssum
-  FROM tagged GROUP BY n_name
-), terms AS (
-  SELECT g.n_name, t.n_suppliers,
-         CAST((CAST(g.s AS DOUBLE) / CAST(t.ssum AS DOUBLE))
-              * (CAST(g.s AS DOUBLE) / CAST(t.ssum AS DOUBLE))
-              AS DECIMAL(18,9)) AS term
-  FROM tagged g JOIN tot t ON g.n_name = t.n_name
-)
-SELECT n_name AS nation, n_suppliers,
-       CAST(SUM(term) AS DOUBLE) AS hhi
-FROM terms GROUP BY n_name, n_suppliers
-"""
-
-
-def q_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann–Whitney U rank-sum test: does the price distribution of
-    returned items ('R') differ from accepted ones ('A')? Ranking runs
-    on the (cents → n₁, n₂) VALUE GRID, not the rows: the tied-group
-    average rank is (cum_before + (t+1)/2), kept integral by doubling
-    (2·rank = 2·cum_before + t + 1), so the doubled rank sum R₁,
-    U₁ = R₁ − n₁(n₁+1), and the tie-correction Σ(t³−t) are ALL exact
-    DECIMAL(38,0)/HUGEINT integers. Only the final z-score is a fixed
-    double tree over scale-0 casts. Plan: one fact aggregate to the
-    value grid, one grid-ordered cumulative window (|distinct cents|
-    rows), a 1-row output — no per-row ranking ever happens."""
-    li = load_table(spark, sf_dir, "lineitem")
-    chunk_w = 1 << 16  # $655.36 price chunks: domain-bounded count
-    t = (
-        # NULL prices have no rank (nullmeasure: NULL grid row would
-        # sort with engine-different placement)
-        li.filter(
-            F.col("l_returnflag").isin("R", "A")
-            & F.col("l_extendedprice").isNotNull()
-        )
-        .select(
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-            F.when(F.col("l_returnflag") == "R", 1)
-            .otherwise(0)
-            .alias("is1"),
-        )
-        # chunk id is a pure function of cents (sign-safe floor
-        # division — DIV truncates toward zero), so grouping by
-        # (__chunk, cents) IS grouping by cents; carrying the chunk in
-        # the group key lets ONE hash(__chunk) exchange satisfy the
-        # aggregate AND the chunk-local window below (no second
-        # grid-sized exchange)
-        .withColumn(
-            "__chunk",
-            F.expr(f"(cents - pmod(cents, {chunk_w})) DIV {chunk_w}"),
-        )
-    )
-    t = ensure_keyed_parallelism(t, "__chunk").groupBy(
-        "__chunk", "cents"
-    ).agg(
-        F.sum("is1").alias("n1"),
-        F.sum(1 - F.col("is1")).alias("n2"),
-    )
-    # CHUNKED cumulative (the max_concurrency sweep rule): a bare
-    # Window.orderBy over the value grid funnels EVERY grid row through
-    # one partition — a single-task sort whose input grows with
-    # |distinct cents| (the r11 before-plan showed Exchange
-    # SinglePartition carrying the whole ~370k-row grid).  The running
-    # sum runs inside chunk partitions, the per-chunk totals (a
-    # ~|range|/2¹⁶-row relation) are prefix-summed to give each chunk's
-    # carry-in, and the rank-sum decomposes as
-    #   Σ n1·(2·cumb+tt+1) = Σ n1·(2·lcumb+tt+1) + 2·Σ_chunk carry·s1
-    # because cumb = carry(chunk) + lcumb.  Chunk id is a monotone
-    # function of cents, so chunk-local order concatenated in chunk
-    # order IS the global cents order — exact integer equivalence
-    # (pinned against the single-window form in tests/test_opt_r11.py).
-    g = t.select(
-        "__chunk",
-        "cents",
-        "n1",
-        "n2",
-        (F.col("n1") + F.col("n2")).alias("tt"),
-    )
-    w_local = Window.partitionBy("__chunk").orderBy("cents")
-    loc = g.select(
-        "__chunk",
-        "n1",
-        "n2",
-        "tt",
-        (F.sum("tt").over(w_local) - F.col("tt")).alias("lcumb"),
-    )
-    per_chunk = loc.groupBy("__chunk").agg(
-        F.sum("n1").alias("s1"),
-        F.sum("n2").alias("s2"),
-        F.sum(
-            (
-                F.col("n1") * (2 * F.col("lcumb") + F.col("tt") + 1)
-            ).cast("decimal(38,0)")
-        ).alias("lr1"),
-        F.sum(
-            (
-                F.col("tt") * F.col("tt") * F.col("tt") - F.col("tt")
-            ).cast("decimal(38,0)")
-        ).alias("ltie3"),
-    )
-    w_carry = Window.orderBy("__chunk").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    carried = per_chunk.withColumn(
-        "carry",
-        F.coalesce(
-            F.sum(F.col("s1") + F.col("s2")).over(w_carry), F.lit(0)
-        ),
-    )
-    agg = carried.agg(
-        F.sum("s1").alias("n1t"),
-        F.sum("s2").alias("n2t"),
-        (
-            F.sum("lr1")
-            + F.lit(2).cast("decimal(38,0)")
-            * F.sum(
-                F.col("carry").cast("decimal(38,0)")
-                * F.col("s1").cast("decimal(38,0)")
-            )
-        ).cast("decimal(38,0)").alias("r1_2"),
-        F.sum("ltie3").alias("tie3"),
-    )
-
-    def big(c):
-        return F.col(c).cast("decimal(38,0)")
-
-    # materialize the wide-decimal operands so the three-limb
-    # conversions below can reference them by name: u1_2 and n1·n2 are
-    # quadratic in N and tie3 is CUBIC, so all three outgrow the
-    # correctly-rounded int128→double zone long before 100 TB (tie3 >
-    # 2⁶³ at N ≈ 2.6e6 rows already) — a direct cast would let the two
-    # engines' doubles disagree at the last ulp exactly where the
-    # radicand guard decides NULL vs a finite z (r8 code-review
-    # finding; same class as welch's moments)
-    agg = agg.select(
-        "n1t",
-        "n2t",
-        "tie3",
-        (big("r1_2") - big("n1t") * (big("n1t") + 1)).alias("u1_2"),
-        (big("n1t") * big("n2t")).alias("nprod"),
-    )
-    u1_2 = F.col("u1_2")
-    nn = big("n1t") + big("n2t")
-    a = _limb3_double("nprod")
-    b = (nn + 1).cast("double")
-    c = _limb3_double("tie3")
-    d = nn.cast("double")
-    # guard on the RADICAND, not sqrt(...): the tie-correction radicand
-    # n1·n2·((N+1) − tie3/(N(N−1)))/12 is mathematically ≥ 0 but the
-    # float division can round it to a tiny negative for near-all-tie
-    # samples with N³ > 2⁵³, where DuckDB sqrt() hard-errors while
-    # Spark yields NaN → an asymmetric oracle crash (ADVICE r7 #2)
-    rad = a * (b - c / (d * (d - F.lit(1.0)))) / F.lit(12.0)
-    z = (_limb3_double("u1_2") / F.lit(2.0) - a / F.lit(2.0)) / F.sqrt(
-        rad
-    )
-    # degenerate samples (an empty arm, or a single ranked row where
-    # the tie-correction divides by N−1 = 0) have no z: NULL on both
-    # engines, never x/0.0 (ANSI throws — onerow driftlab layout)
-    okc = (
-        (F.col("n1t") >= 1)
-        & (F.col("n2t") >= 1)
-        & (F.col("n1t") + F.col("n2t") >= 2)
-    )
-    return agg.select(
-        F.col("n1t").alias("n_returned"),
-        F.col("n2t").alias("n_accepted"),
-        u1_2.cast("long").alias("u1_doubled"),
-        # nested when keeps the okc short-circuit: rad divides by
-        # N(N−1) = 0 on a degenerate grid, and ANSI Spark would throw
-        # if the radicand were evaluated under okc = false (onerow)
-        F.when(okc, F.when(rad > 0, z)).alias("z_score"),
-    )
-
-
-ORACLE_MANNWHITNEY_U = """
-WITH t AS (
-  SELECT CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents,
-         SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS n1,
-         SUM(CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END) AS n2
-  FROM lineitem
-  WHERE l_returnflag IN ('R', 'A') AND l_extendedprice IS NOT NULL
-  GROUP BY 1
-), grid AS (
-  SELECT cents, n1, n2, n1 + n2 AS tt,
-         SUM(n1 + n2) OVER (ORDER BY cents
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           - (n1 + n2) AS cumb
-  FROM t
-), agg AS (
-  SELECT SUM(n1) AS n1t, SUM(n2) AS n2t,
-         SUM(n1 * (2 * cumb + tt + 1)) AS r1_2,
-         SUM(tt * tt * tt - tt) AS tie3
-  FROM grid
-), wide AS (
-  SELECT n1t, n2t, tie3,
-         r1_2 - n1t * (n1t + 1) AS u1_2,
-         n1t * n2t AS nprod
-  FROM agg
-), conv AS (
-  -- three-limb HUGEINT→double conversions mirror the engine's
-  -- _limb3_double: nprod/u1_2 are quadratic in N and tie3 CUBIC, so
-  -- direct casts stop agreeing with Spark at the last ulp exactly
-  -- where the radicand guard decides NULL vs finite z
-  SELECT n1t, n2t, u1_2,
-         CAST(nprod // 1000000000000000000 AS DOUBLE) * 1e18
-           + CAST((nprod % 1000000000000000000) // 1000000000 AS DOUBLE) * 1e9
-           + CAST(nprod % 1000000000 AS DOUBLE) AS a,
-         CAST(tie3 // 1000000000000000000 AS DOUBLE) * 1e18
-           + CAST((tie3 % 1000000000000000000) // 1000000000 AS DOUBLE) * 1e9
-           + CAST(tie3 % 1000000000 AS DOUBLE) AS c,
-         CAST(u1_2 // 1000000000000000000 AS DOUBLE) * 1e18
-           + CAST((u1_2 % 1000000000000000000) // 1000000000 AS DOUBLE) * 1e9
-           + CAST(u1_2 % 1000000000 AS DOUBLE) AS u1d
-  FROM wide
-), rad AS (
-  -- radicand materialized once so the positivity guard tests IT, not
-  -- sqrt(...): near-all-tie samples can round the mathematically-
-  -- nonnegative radicand to a tiny negative, where sqrt() hard-errors
-  -- in DuckDB but NaNs in Spark (ADVICE r7 #2)
-  SELECT n1t, n2t, u1_2, a, u1d,
-         CASE WHEN n1t >= 1 AND n2t >= 1 AND n1t + n2t >= 2 THEN
-           a * (CAST(n1t + n2t + 1 AS DOUBLE)
-                - c / (CAST(n1t + n2t AS DOUBLE)
-                       * (CAST(n1t + n2t AS DOUBLE) - 1.0)))
-           / 12.0
-         END AS radicand
-  FROM conv
-)
-SELECT n1t AS n_returned, n2t AS n_accepted,
-       CAST(u1_2 AS BIGINT) AS u1_doubled,
-       CASE WHEN radicand > 0 THEN
-           (u1d / 2.0 - a / 2.0) / sqrt(radicand)
-       END AS z_score
-FROM rad
-"""
-
-
-def q_out_of_order_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-stream ordering audit: across each user's event history
-    in event_id order, how often does the timestamp go backwards?
-    The lag runs per user (bounded window state) over the symmetric
-    integer pair (event_id, epoch µs) — the lag-ordering discipline
-    that keeps sub-µs layouts from reordering pairs between engines.
-    Output: global pair count, inversion count, inversion rate. One
-    fact shuffle on user_id; the final aggregate is 3 numbers."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    t = ev.select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts")).alias("us"),
-    ).select(
-        F.lag("us").over(w).alias("prev_us"),
-        F.col("us"),
-    )
-    pairs = t.filter(F.col("prev_us").isNotNull())
-    return pairs.agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.sum(
-            F.when(F.col("us") < F.col("prev_us"), 1).otherwise(0)
-        ).alias("n_inversions"),
-    ).select(
-        "n_pairs",
-        "n_inversions",
-        (
-            F.col("n_inversions").cast("double")
-            / F.col("n_pairs").cast("double")
-        ).alias("inversion_rate"),
-    )
-
-
-ORACLE_OUT_OF_ORDER_RATE = """
-WITH t AS (
-  SELECT user_id, event_id, epoch_us(ts) AS us,
-         LAG(epoch_us(ts)) OVER (
-           PARTITION BY user_id ORDER BY event_id
-         ) AS prev_us
-  FROM events
-), pairs AS (
-  SELECT * FROM t WHERE prev_us IS NOT NULL
-)
-SELECT count(*) AS n_pairs,
-       SUM(CASE WHEN us < prev_us THEN 1 ELSE 0 END) AS n_inversions,
-       CAST(SUM(CASE WHEN us < prev_us THEN 1 ELSE 0 END) AS DOUBLE)
-         / CAST(count(*) AS DOUBLE) AS inversion_rate
-FROM pairs
-"""
-
-
-def q_attribution_first_touch(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """First-touch attribution: every purchase's value credits the
-    event_type of the user's FIRST-ever event. The first touch is a
-    per-user ``first_value`` over the symmetric (epoch µs, event_id)
-    ordering; purchase values decimal(18,9)-round BEFORE the channel
-    sum (order-free float-sum discipline) and the total emits
-    ROUND(·,2)→double (wide-decimal rule). Plan: one user-partitioned
-    window (bounded state), one channel aggregate — two shuffles
-    total, both on data the fact scan already produced."""
-    ev = load_table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.unix_micros(F.col("ts")), "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    tagged = ev.select(
-        "user_id",
-        "event_type",
-        "value",
-        F.first("event_type").over(w).alias("first_touch"),
-    )
-    return (
-        tagged.filter(F.col("event_type") == "purchase")
-        .groupBy("first_touch")
-        .agg(
-            F.count(F.lit(1)).alias("n_purchases"),
-            F.round(F.sum(_dec("value")), 2)
-            .cast("double")
-            .alias("attributed_value"),
-        )
-    )
-
-
-ORACLE_ATTRIBUTION_FIRST_TOUCH = """
-WITH tagged AS (
-  SELECT user_id, event_type, value,
-         FIRST_VALUE(event_type) OVER (
-           PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-         ) AS first_touch
-  FROM events
-)
-SELECT first_touch, count(*) AS n_purchases,
-       CAST(ROUND(SUM(CAST(CASE WHEN isfinite(value) THEN value END AS DECIMAL(18,9))), 2)
-            AS DOUBLE) AS attributed_value
-FROM tagged WHERE event_type = 'purchase'
-GROUP BY first_touch
-"""
-
-
-def q_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree distribution of the co-purchase graph — the structural
-    companion to pagerank/triangle_count over the SAME support-cut
-    edge set (``ext/graph.py:copurchase_edges``). Two integer
-    aggregates: per-node degree, then nodes-per-degree. Output is the
-    degree histogram (|distinct degrees| rows) — the first thing a
-    100 TB graph job inspects before choosing broadcast vs shuffle
-    regimes for closure/propagation. Integer-exact end-to-end."""
-    from fink_broker_spark.ext.graph import copurchase_edges, symmetrize
-
-    li = load_table(spark, sf_dir, "lineitem")
-    # symmetrize references the edge relation twice (u->v ∪ v->u) —
-    # materialize the basket self-join once
-    sym = symmetrize(_materialize(copurchase_edges(li, min_support=2)))
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
-    return (
-        deg.groupBy("degree")
-        .agg(F.count(F.lit(1)).alias("n_nodes"))
-        .select("degree", "n_nodes")
-    )
-
-
-ORACLE_DEGREE_STATS = """
-WITH pairs AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-  GROUP BY a.l_partkey, b.l_partkey
-  HAVING count(*) >= 2
-), sym AS (
-  SELECT u AS src FROM pairs UNION ALL SELECT v FROM pairs
-), deg AS (
-  SELECT src, count(*) AS degree FROM sym GROUP BY src
-)
-SELECT degree, count(*) AS n_nodes FROM deg GROUP BY degree
-"""
-
-
-def q_seasonality_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar-month seasonality index of order revenue across all
-    years: index_m = 12·rev_m / Σrev. Revenue integerizes to exact
-    cents; the index is one double division of exact sub-2⁵³ operands
-    (12·rev_m ≤ ~2⁴⁸ at sf1). The month key is integer-exact from the
-    normalized timestamp. One fact aggregate to 12 rows; the total is
-    a 1-row broadcast."""
-    o = load_table(spark, sf_dir, "orders")
-    monthly = (
-        o.select(
-            F.month("o_orderdate").alias("mo"),
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("mo")
-        .agg(F.sum("cents").alias("rev_cents"))
-    )
-    tot = monthly.agg(F.sum("rev_cents").alias("total_cents"))
-    return monthly.crossJoin(F.broadcast(tot)).select(
-        "mo",
-        "rev_cents",
-        (
-            (F.lit(12) * F.col("rev_cents")).cast("double")
-            / F.col("total_cents").cast("double")
-        ).alias("seasonal_index"),
-    )
-
-
-ORACLE_SEASONALITY_INDEX = """
-WITH monthly AS (
-  SELECT month(o_orderdate) AS mo,
-         SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-           AS rev_cents
-  FROM orders GROUP BY 1
-), tot AS (
-  SELECT SUM(rev_cents) AS total_cents FROM monthly
-)
-SELECT mo, rev_cents,
-       CAST(12 * rev_cents AS DOUBLE) / CAST(total_cents AS DOUBLE)
-         AS seasonal_index
-FROM monthly CROSS JOIN tot
-"""
-
-
-def q_source_quality_matrix(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Corpus composition matrix over documents: per (source, lang)
-    cell — doc count, exact mean length (double division of integer
-    sums), and the cell's share within its source (a source-partitioned
-    total attached by broadcast join, never a window over the corpus).
-    The training-data-mixture view a 100 TB curation run starts from.
-    One fact aggregate; everything downstream is |sources×langs|-sized."""
-    d = load_table(spark, sf_dir, "documents")
-    cell = d.groupBy("source", "lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("sum_chars"),
-    )
-    per_source = cell.groupBy("source").agg(
-        F.sum("n_docs").alias("source_docs")
-    )
-    return cell.join(F.broadcast(per_source), "source").select(
-        "source",
-        "lang",
-        "n_docs",
-        (
-            F.col("sum_chars").cast("double")
-            / F.col("n_docs").cast("double")
-        ).alias("mean_chars"),
-        (
-            F.col("n_docs").cast("double")
-            / F.col("source_docs").cast("double")
-        ).alias("share_of_source"),
-    )
-
-
-ORACLE_SOURCE_QUALITY_MATRIX = """
-WITH cell AS (
-  SELECT source, lang, count(*) AS n_docs, SUM(n_chars) AS sum_chars
-  FROM documents GROUP BY source, lang
-), per_source AS (
-  SELECT source, SUM(n_docs) AS source_docs FROM cell GROUP BY source
-)
-SELECT c.source, c.lang, c.n_docs,
-       CAST(c.sum_chars AS DOUBLE) / CAST(c.n_docs AS DOUBLE)
-         AS mean_chars,
-       CAST(c.n_docs AS DOUBLE) / CAST(p.source_docs AS DOUBLE)
-         AS share_of_source
-FROM cell c JOIN per_source p ON c.source = p.source
-"""
-
-
-def q_log2_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Power-of-two magnitude histogram of order totals — the
-    log-scale distribution sketch without any floating log: the bucket
-    is the BIT LENGTH of the exact integer cents (length of the base-2
-    string — Spark ``conv(x,10,2)``, DuckDB ``bin(x)``; identical
-    pure-integer semantics), so engines can never disagree. Emits each
-    bucket's row count and exact cents range covered. One fact
-    aggregate, ~15-row output."""
-    o = load_table(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
-        "long"
-    )
-    t = o.select(
-        F.length(F.conv(cents.cast("string"), 10, 2)).alias("bits"),
-        cents.alias("cents"),
-    )
-    return t.groupBy("bits").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.min("cents").alias("min_cents"),
-        F.max("cents").alias("max_cents"),
-    )
-
-
-ORACLE_LOG2_HISTOGRAM = """
-WITH t AS (
-  SELECT length(bin(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)))
-           AS bits,
-         CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-  FROM orders
-)
-SELECT bits, count(*) AS n_orders, MIN(cents) AS min_cents,
-       MAX(cents) AS max_cents
-FROM t GROUP BY bits
-"""
-
-
-def q_grid_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact p50/p90/p99 of order→last-ship latency per priority,
-    computed on the (priority, latency-day) VALUE GRID — the
-    distributed exact-quantile pattern: one fact aggregate collapses
-    rows to the grid, a grid-sized cumulative window ranks values, and
-    each quantile is a conditional MIN under a pure-integer threshold
-    predicate (2·cum ≥ n, 10·cum ≥ 9n, 100·cum ≥ 99n — no ceil, no
-    float). Unlike native exact ``percentile`` (unbounded per-group
-    state — the documented percentiles scale-killer), per-task state
-    here is one count per distinct latency value. Integer-exact."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-
-    ship = (
-        li.select("l_orderkey", _day("l_shipdate").alias("sday"))
-        .groupBy("l_orderkey")
-        .agg(F.max("sday").alias("last_ship"))
-    )
-    lat = (
-        o.select(
-            "o_orderkey", "o_orderpriority", _day("o_orderdate").alias("od")
-        )
-        .join(ship, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(
-            "o_orderpriority",
-            (F.col("last_ship") - F.col("od")).alias("days"),
-        )
-    )
-    grid = lat.groupBy("o_orderpriority", "days").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    w = Window.partitionBy("o_orderpriority").orderBy("days")
-    cum = grid.select(
-        "o_orderpriority",
-        "days",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt")
-        .over(Window.partitionBy("o_orderpriority"))
-        .alias("n"),
-    )
-    return cum.groupBy("o_orderpriority").agg(
-        F.max("n").alias("n_orders"),
-        F.min(
-            F.when(2 * F.col("cum") >= F.col("n"), F.col("days"))
-        ).alias("p50_days"),
-        F.min(
-            F.when(10 * F.col("cum") >= 9 * F.col("n"), F.col("days"))
-        ).alias("p90_days"),
-        F.min(
-            F.when(100 * F.col("cum") >= 99 * F.col("n"), F.col("days"))
-        ).alias("p99_days"),
-    )
-
-
-ORACLE_GRID_QUANTILES = """
-WITH ship AS (
-  SELECT l_orderkey,
-         MAX(CAST(FLOOR(epoch_us(l_shipdate) / 86400000000) AS BIGINT))
-           AS last_ship
-  FROM lineitem GROUP BY l_orderkey
-), lat AS (
-  SELECT o.o_orderpriority,
-         s.last_ship
-           - CAST(FLOOR(epoch_us(o.o_orderdate) / 86400000000) AS BIGINT)
-           AS days
-  FROM orders o JOIN ship s ON o.o_orderkey = s.l_orderkey
-), grid AS (
-  SELECT o_orderpriority, days, count(*) AS cnt
-  FROM lat GROUP BY o_orderpriority, days
-), cum AS (
-  SELECT o_orderpriority, days,
-         SUM(cnt) OVER (PARTITION BY o_orderpriority ORDER BY days
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         SUM(cnt) OVER (PARTITION BY o_orderpriority) AS n
-  FROM grid
-)
-SELECT o_orderpriority, MAX(n) AS n_orders,
-       MIN(CASE WHEN 2 * cum >= n THEN days END) AS p50_days,
-       MIN(CASE WHEN 10 * cum >= 9 * n THEN days END) AS p90_days,
-       MIN(CASE WHEN 100 * cum >= 99 * n THEN days END) AS p99_days
-FROM cum GROUP BY o_orderpriority
-"""
-
-
-def q_repeat_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Repeat-purchase cadence: days between consecutive orders per
-    customer (lag over the symmetric (day, orderkey) order), then the
-    corpus-wide gap count, exact double mean, and exact grid median
-    (same conditional-MIN construction as grid_quantiles — no global
-    sort, no unbounded percentile state). 1-row output."""
-    o = load_table(spark, sf_dir, "orders")
-
-    w = Window.partitionBy("o_custkey").orderBy("oday", "o_orderkey")
-    gaps = (
-        o.select(
-            "o_custkey", "o_orderkey", _day("o_orderdate").alias("oday")
-        )
-        .select(
-            "o_custkey",
-            (F.col("oday") - F.lag("oday").over(w)).alias("gap"),
-        )
-        .filter(F.col("gap").isNotNull())
-    )
-    grid = gaps.groupBy("gap").agg(F.count(F.lit(1)).alias("cnt"))
-    wg = Window.orderBy("gap")
-    cum = grid.select(
-        "gap",
-        F.sum("cnt").over(wg).alias("cum"),
-        F.sum("cnt")
-        .over(
-            Window.orderBy(F.lit(1)).rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
-        .alias("n"),
-        (F.col("gap") * F.col("cnt")).alias("wsum"),
-    )
-    return cum.agg(
-        F.max("n").alias("n_gaps"),
-        (
-            F.sum("wsum").cast("double") / F.max("n").cast("double")
-        ).alias("mean_gap_days"),
-        F.min(
-            F.when(2 * F.col("cum") >= F.col("n"), F.col("gap"))
-        ).alias("median_gap_days"),
-    )
-
-
-ORACLE_REPEAT_INTERVAL = """
-WITH ordered AS (
-  SELECT o_custkey, o_orderkey,
-         CAST(FLOOR(epoch_us(o_orderdate) / 86400000000) AS BIGINT)
-           AS oday
-  FROM orders
-), gaps AS (
-  SELECT oday - LAG(oday) OVER (
-           PARTITION BY o_custkey ORDER BY oday, o_orderkey
-         ) AS gap
-  FROM ordered
-), g2 AS (
-  SELECT gap FROM gaps WHERE gap IS NOT NULL
-), grid AS (
-  SELECT gap, count(*) AS cnt FROM g2 GROUP BY gap
-), cum AS (
-  SELECT gap,
-         SUM(cnt) OVER (ORDER BY gap
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         SUM(cnt) OVER () AS n,
-         gap * cnt AS wsum
-  FROM grid
-)
-SELECT MAX(n) AS n_gaps,
-       CAST(SUM(wsum) AS DOUBLE) / CAST(MAX(n) AS DOUBLE)
-         AS mean_gap_days,
-       MIN(CASE WHEN 2 * cum >= n THEN gap END) AS median_gap_days
-FROM cum
-"""
-
-
-def q_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Type-token ratio (lexical diversity) per source: per-document
-    TTR = |distinct tokens| / |tokens| — both pure per-row integer
-    reductions over the shared tokenizer (``functions/text.py``), no
-    token shuffle at all — then the source-level mean with the float
-    discipline (each TTR is a double division of exact ints, rounded
-    to decimal(18,9) before the exact sum). Map-only until a
-    |sources|-row aggregate."""
-    d = load_table(spark, sf_dir, "documents")
-    from fink_broker_spark.functions.text import tokens_expr
-
-    toks = tokens_expr("text")
-    t = d.filter(
-        F.length(F.trim(F.lower(F.col("text")))) > 0
-    ).select(
-        "source",
-        (
-            F.size(F.array_distinct(toks)).cast("double")
-            / F.size(toks).cast("double")
-        )
-        .cast("decimal(18,9)")
-        .alias("ttr"),
-    )
-    return t.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (
-            F.sum("ttr").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("mean_ttr"),
-    )
-
-
-ORACLE_LEXICAL_DIVERSITY = r"""
-WITH t AS (
-  SELECT source,
-         CAST(CAST(length(list_distinct(
-                  string_split_regex(trim(lower(text)), '\s+'))) AS DOUBLE)
-              / CAST(length(
-                  string_split_regex(trim(lower(text)), '\s+')) AS DOUBLE)
-              AS DECIMAL(18,9)) AS ttr
-  FROM documents
-  WHERE length(trim(lower(text))) > 0
-)
-SELECT source, count(*) AS n_docs,
-       CAST(SUM(ttr) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_ttr
-FROM t GROUP BY source
-"""
-
-
-def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label embedding centroids: posexplode the vectors,
-    integerize each float component to exact nano-units with the
-    identical-IEEE ``floor(x·1e9 + 0.5)`` tree (float sums are
-    order-dependent; a double→decimal CAST is also unsafe here —
-    Spark rounds the SHORTEST-REPR digits while DuckDB rounds the
-    exact binary expansion, and non-decimal-clean floats split the
-    engines: measured one 1e-9 quantum divergence in 140k components
-    at sf0.1), sum exact longs, and emit one fixed double tree per
-    component. The SemDeDup/k-means support operator in
-    oracle-checkable form. One shuffle keyed (label, pos); output
-    |labels|×dim rows.
-
-    Domain: well-formed (finite) vectors only, mirrored in the oracle
-    — a NaN/Inf element hard-errors the ANSI nano-unit integerization
-    on both engines (nanemb driftlab layout, r10)."""
-    from fink_broker_spark.ext.ann import well_formed_vectors
-
-    emb = well_formed_vectors(
-        load_table(spark, sf_dir, "embeddings"), "embedding"
-    )
-    t = emb.select(
-        "label", F.posexplode("embedding").alias("pos", "val")
-    ).select(
-        "label",
-        F.col("pos").cast("int").alias("pos"),
-        F.floor(
-            F.col("val").cast("double") * F.lit(1_000_000_000.0)
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("v_nano"),
-    )
-    return t.groupBy("label", "pos").agg(
-        F.count(F.lit(1)).alias("n_vectors"),
-        (
-            F.sum("v_nano").cast("double")
-            / F.count(F.lit(1)).cast("double")
-            / F.lit(1_000_000_000.0)
-        ).alias("centroid_val"),
-    )
-
-
-ORACLE_LABEL_CENTROIDS = """
-WITH wf AS (
-  -- well-formed domain, mirroring the engine's well_formed_vectors:
-  -- NaN/Inf elements hard-error the nano-unit integerization cast on
-  -- both engines (nanemb driftlab layout, r10)
-  SELECT label, embedding
-  FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(list_filter(embedding,
-                        x -> x IS NULL OR NOT isfinite(x))) = 0
-),
-t AS (
-  SELECT label, CAST(i AS INTEGER) AS pos,
-         CAST(FLOOR(CAST(embedding[i + 1] AS DOUBLE) * 1000000000.0
-                    + 0.5) AS BIGINT) AS v_nano
-  FROM wf, range(0, 4096) r(i)
-  WHERE i < len(embedding)
-)
-SELECT label, pos, count(*) AS n_vectors,
-       CAST(SUM(v_nano) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-         / 1000000000.0 AS centroid_val
-FROM t GROUP BY label, pos
-"""
-
-
-def q_nearest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest-neighbor as-of join
-    (``operators/relational.py:nearest_asof_join``): each order picks
-    the SAME customer's event closest in time — either side, |Δt| tie
-    → earlier — via the single-shuffle union construction (one
-    key-partitioned sort feeding a backward ``last(ignorenulls)`` AND
-    a forward ``first(ignorenulls)``; never a per-key cross product).
-    Events pre-collapse to one row per (user, µs) (max event_id) so
-    the match is engine-deterministic. Times are exact epoch µs;
-    Δt is an exact integer."""
-    from fink_broker_spark.operators.relational import nearest_asof_join
-
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            F.unix_micros(F.col("ts")).alias("eus"),
-            "event_id",
-        )
-        .groupBy("user_id", "eus")
-        .agg(F.max("event_id").alias("eid"))
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_custkey",
-        F.unix_micros(F.col("o_orderdate")).alias("ous"),
-    )
-    out = nearest_asof_join(
-        o,
-        ev,
-        left_on="o_custkey",
-        right_on="user_id",
-        left_time="ous",
-        right_time="eus",
-        right_values=["eid"],
-    )
-    return out.select(
-        "o_orderkey",
-        "o_custkey",
-        F.col("eid").alias("nearest_event_id"),
-        F.col("__match_dt").alias("dt_us"),
-    ).filter(F.col("nearest_event_id").isNotNull())
-
-
-ORACLE_NEAREST_EVENT = """
-WITH ev AS (
-  SELECT user_id, epoch_us(ts) AS eus, MAX(event_id) AS eid
-  FROM events GROUP BY 1, 2
-), o AS (
-  SELECT o_orderkey, o_custkey, epoch_us(o_orderdate) AS ous
-  FROM orders
-), u AS (
-  SELECT o_custkey AS k, ous AS t, 1 AS side, o_orderkey,
-         CAST(NULL AS BIGINT) AS eus, CAST(NULL AS BIGINT) AS eid
-  FROM o
-  UNION ALL
-  SELECT user_id, eus, 0, NULL, eus, eid FROM ev
-), w AS (
-  SELECT *,
-         LAST_VALUE(CASE WHEN side = 0 THEN eus END IGNORE NULLS)
-           OVER (PARTITION BY k ORDER BY t, side
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS prev_t,
-         LAST_VALUE(CASE WHEN side = 0 THEN eid END IGNORE NULLS)
-           OVER (PARTITION BY k ORDER BY t, side
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS prev_id,
-         FIRST_VALUE(CASE WHEN side = 0 THEN eus END IGNORE NULLS)
-           OVER (PARTITION BY k ORDER BY t, side
-                 ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-           AS next_t,
-         FIRST_VALUE(CASE WHEN side = 0 THEN eid END IGNORE NULLS)
-           OVER (PARTITION BY k ORDER BY t, side
-                 ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-           AS next_id
-  FROM u
-), picked AS (
-  SELECT o_orderkey, k AS o_custkey,
-         CASE WHEN next_t IS NULL
-                OR (prev_t IS NOT NULL
-                    AND ABS(prev_t - t) <= ABS(next_t - t))
-              THEN prev_id ELSE next_id END AS nearest_event_id,
-         CASE WHEN next_t IS NULL
-                OR (prev_t IS NOT NULL
-                    AND ABS(prev_t - t) <= ABS(next_t - t))
-              THEN prev_t - t ELSE next_t - t END AS dt_us
-  FROM w WHERE side = 1
-)
--- o_custkey IS NOT NULL: the operator gives NULL join keys SQL
--- equality semantics (no match) as of r6 — the window construction
--- above would otherwise "match" NULL-key orders to NULL-key events
--- inside the shared NULL partition
-SELECT * FROM picked
-WHERE nearest_event_id IS NOT NULL AND o_custkey IS NOT NULL
-"""
-
-
-def q_window_dedup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window dedup accounting, the oracled batch twin of the
-    streaming ``dropDuplicatesWithinWatermark`` (whose
-    keep-first-ARRIVED output is inherently rows-only): one survivor
-    per (user, event_type, hour bucket) — fully data-deterministic, so
-    it hash-checks. ONE aggregate on the dedup key counts each group's
-    raw rows; at 100 TB this is the log-compaction accounting pass
-    before archival. Emits survivor/raw/dropped counts per type to
-    keep the output dimension-sized (survivor IDs themselves would be
-    a min_by over the symmetric (µs, event_id) pair — not emitted
-    here)."""
-    ev = load_table(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts"))
-    kept = (
-        ev.select(
-            "user_id",
-            "event_type",
-            F.floor(us / F.lit(3_600_000_000)).cast("long").alias("hr"),
-        )
-        .groupBy("user_id", "event_type", "hr")
-        .agg(F.count(F.lit(1)).alias("n_dups"))
-    )
-    return kept.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.sum("n_dups").alias("n_raw"),
-        F.sum(F.col("n_dups") - 1).alias("n_dropped"),
-    )
-
-
-ORACLE_WINDOW_DEDUP_BATCH = """
-WITH kept AS (
-  SELECT user_id, event_type,
-         CAST(FLOOR(epoch_us(ts) / 3600000000) AS BIGINT) AS hr,
-         count(*) AS n_dups
-  FROM events
-  GROUP BY 1, 2, 3
-)
-SELECT event_type, count(*) AS n_kept, SUM(n_dups) AS n_raw,
-       SUM(n_dups - 1) AS n_dropped
-FROM kept GROUP BY event_type
-"""
-
-
-def q_modal_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user mode (most frequent event_type, ties → lexicographically
-    first) and its share of the user's events — the grouped-mode
-    operator. Two aggregates + one user-partitioned rank window over
-    the (user, type) count table (dimension-sized, bounded state);
-    the share divides exact integers in double."""
-    ev = load_table(spark, sf_dir, "events")
-    cnt = ev.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("n").desc(), "event_type"
-    )
-    tot = Window.partitionBy("user_id")
-    return (
-        cnt.select(
-            "user_id",
-            "event_type",
-            "n",
-            F.row_number().over(w).alias("rn"),
-            F.sum("n").over(tot).alias("n_total"),
-        )
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("event_type").alias("modal_type"),
-            F.col("n").alias("n_modal"),
-            "n_total",
-            (
-                F.col("n").cast("double")
-                / F.col("n_total").cast("double")
-            ).alias("modal_share"),
-        )
-    )
-
-
-ORACLE_MODAL_EVENT_TYPE = """
-WITH cnt AS (
-  SELECT user_id, event_type, count(*) AS n
-  FROM events GROUP BY 1, 2
-), ranked AS (
-  SELECT user_id, event_type, n,
-         ROW_NUMBER() OVER (PARTITION BY user_id
-                            ORDER BY n DESC, event_type) AS rn,
-         SUM(n) OVER (PARTITION BY user_id) AS n_total
-  FROM cnt
-)
-SELECT user_id, event_type AS modal_type, n AS n_modal, n_total,
-       CAST(n AS DOUBLE) / CAST(n_total AS DOUBLE) AS modal_share
-FROM ranked WHERE rn = 1
-"""
-
-
-def q_region_share_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical contribution rollup: revenue per nation with its
-    share of the region and of the world — percent-of-parent at two
-    levels via broadcast-joined parent aggregates (never a window over
-    the fact table). Revenue is exact cents; each share is one double
-    division of exact sub-2⁵³ operands. One fact aggregate keyed by
-    nation; everything above runs on the 25/5/1-row dimension tables."""
-    o = load_table(spark, sf_dir, "orders")
-    cu = load_table(spark, sf_dir, "customer")
-    na = load_table(spark, sf_dir, "nation")
-    re = load_table(spark, sf_dir, "region")
-    nk = (
-        cu.select("c_custkey", "c_nationkey")
-        .join(
-            F.broadcast(
-                na.select("n_nationkey", "n_name", "n_regionkey")
-            ),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(re.select("r_regionkey", "r_name")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .select("c_custkey", "n_name", "r_name")
-    )
-    rev = (
-        o.select(
-            "o_custkey",
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        .join(nk, F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("r_name", "n_name")
-        .agg(F.sum("cents").alias("rev_cents"))
-    )
-    per_region = rev.groupBy("r_name").agg(
-        F.sum("rev_cents").alias("region_cents")
-    )
-    world = rev.agg(F.sum("rev_cents").alias("world_cents"))
-    return (
-        rev.join(F.broadcast(per_region), "r_name")
-        .crossJoin(F.broadcast(world))
-        .select(
-            F.col("r_name").alias("region"),
-            F.col("n_name").alias("nation"),
-            "rev_cents",
-            (
-                F.col("rev_cents").cast("double")
-                / F.col("region_cents").cast("double")
-            ).alias("share_of_region"),
-            (
-                F.col("rev_cents").cast("double")
-                / F.col("world_cents").cast("double")
-            ).alias("share_of_world"),
-        )
-    )
-
-
-ORACLE_REGION_SHARE_ROLLUP = """
-WITH nk AS (
-  SELECT c.c_custkey, n.n_name, r.r_name
-  FROM customer c
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
-  JOIN region r ON n.n_regionkey = r.r_regionkey
-), rev AS (
-  SELECT nk.r_name, nk.n_name,
-         SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT))
-           AS rev_cents
-  FROM orders o JOIN nk ON o.o_custkey = nk.c_custkey
-  GROUP BY 1, 2
-), per_region AS (
-  SELECT r_name, SUM(rev_cents) AS region_cents FROM rev GROUP BY 1
-), world AS (
-  SELECT SUM(rev_cents) AS world_cents FROM rev
-)
-SELECT rev.r_name AS region, rev.n_name AS nation, rev.rev_cents,
-       CAST(rev.rev_cents AS DOUBLE) / CAST(p.region_cents AS DOUBLE)
-         AS share_of_region,
-       CAST(rev.rev_cents AS DOUBLE) / CAST(w.world_cents AS DOUBLE)
-         AS share_of_world
-FROM rev JOIN per_region p ON rev.r_name = p.r_name CROSS JOIN world w
-"""
-
-
-def q_clamped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Clamped-at-zero running balance — the inventory recurrence
-    b_t = max(0, b_{t-1} + Δ_t) that LOOKS like it needs an imperative
-    loop (each step depends on the clamped previous step) but has the
-    exact closed form b_t = p_t − min(0, min_{s≤t} p_s) over the raw
-    prefix sums p — so it compiles to TWO stacked windows (running SUM,
-    then running MIN of it) with bounded state, no applyInPandas, no
-    recursion. Stock moves: returns ('R') add quantity, shipments
-    subtract, ordered by the symmetric (ship µs, orderkey, linenumber)
-    key per part. Emits per-part final clamped balance, the worst raw
-    drawdown, and move count. Integer-exact; windows partition on
-    p_partkey (high-cardinality key — scale-safe)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    moves = li.select(
-        "l_partkey",
-        F.unix_micros(F.col("l_shipdate")).alias("us"),
-        "l_orderkey",
-        "l_linenumber",
-        F.when(
-            F.col("l_returnflag") == "R",
-            F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long"),
-        )
-        .otherwise(
-            -F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long")
-        )
-        .alias("delta"),
-    )
-    w = Window.partitionBy("l_partkey").orderBy(
-        "us", "l_orderkey", "l_linenumber"
-    )
-    pref = moves.select(
-        "l_partkey",
-        "delta",
-        F.sum("delta")
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("p"),
-    )
-    # final prefix (= the plain delta sum), worst prefix, and move
-    # count all come from ONE per-part aggregate over the windowed
-    # frame — the window already shuffled on l_partkey, so no second
-    # fact scan or join
-    stats = pref.groupBy("l_partkey").agg(
-        F.count(F.lit(1)).alias("n_moves"),
-        F.min("p").alias("min_prefix"),
-        F.sum("delta").alias("final_prefix"),
-    )
-    return stats.select(
-        F.col("l_partkey").alias("partkey"),
-        "n_moves",
-        "min_prefix",
-        (
-            F.col("final_prefix")
-            - F.least(F.lit(0), F.col("min_prefix"))
-        ).alias("final_balance"),
-    )
-
-
-ORACLE_CLAMPED_BALANCE = """
-WITH moves AS (
-  SELECT l_partkey, epoch_us(l_shipdate) AS us, l_orderkey,
-         l_linenumber,
-         CASE WHEN l_returnflag = 'R'
-              THEN CAST(FLOOR(l_quantity + 0.5) AS BIGINT)
-              ELSE -CAST(FLOOR(l_quantity + 0.5) AS BIGINT) END AS delta
-  FROM lineitem
-), pref AS (
-  SELECT l_partkey,
-         SUM(delta) OVER (PARTITION BY l_partkey
-             ORDER BY us, l_orderkey, l_linenumber
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS p
-  FROM moves
-), stats AS (
-  SELECT l_partkey, count(*) AS n_moves, MIN(p) AS min_prefix
-  FROM pref GROUP BY l_partkey
-), last_p AS (
-  SELECT l_partkey, SUM(delta) AS final_prefix
-  FROM moves GROUP BY l_partkey
-)
-SELECT s.l_partkey AS partkey, s.n_moves, s.min_prefix,
-       l.final_prefix - LEAST(0, s.min_prefix) AS final_balance
--- null-safe join: the Spark side computes both aggregates in ONE
--- groupBy, which keeps a NULL-partkey group; a plain equality join
--- here would drop it (nullfk driftlab layout, r6)
-FROM stats s JOIN last_p l ON s.l_partkey IS NOT DISTINCT FROM l.l_partkey
-"""
-
-
-def q_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winsorized mean per return flag: clamp price cents into the
-    exact [p01, p99] grid quantiles (the grid_quantiles construction —
-    conditional MIN under integer thresholds, bounded state), then the
-    clamped mean over exact integers. Reports the clip counts too.
-    Two passes over the value grid, one broadcast of the 3-row bounds
-    table back onto the grid — the fact table shuffles once."""
-    # NULL prices excluded: no grid position (nullmeasure)
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_extendedprice").isNotNull()
-    )
-    # CHUNKED cumulative (r11, the mannwhitney/weighted_median rule):
-    # the flag-partitioned window funneled the whole cents grid through
-    # 3 tasks.  The chunk id (pure function of cents) rides the grid
-    # group key, so ONE keyed-spread exchange on (flag, chunk) serves
-    # the grid aggregate, the chunk-local running count AND the clamp
-    # pass (grid's two consumers reuse the same exchange); per-chunk
-    # totals are prefix-summed into carry-ins, cum = carry + lcum
-    # exactly.  Equivalence pinned in tests/test_opt_r11.py;
-    # interleaved A/B 2.07 → 1.58 s min at sf0.1.  Guarded no-op on a
-    # wide lake.
-    chunk_w = 1 << 16
-    t = li.select(
-        "l_returnflag",
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    ).withColumn(
-        "__chunk",
-        F.expr(f"(cents - pmod(cents, {chunk_w})) DIV {chunk_w}"),
-    )
-    grid = ensure_keyed_parallelism(t, "l_returnflag", "__chunk").groupBy(
-        "l_returnflag", "__chunk", "cents"
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    w_local = Window.partitionBy("l_returnflag", "__chunk").orderBy("cents")
-    loc = grid.select(
-        "l_returnflag",
-        "__chunk",
-        "cents",
-        F.sum("cnt").over(w_local).alias("lcum"),
-    )
-    per_chunk = grid.groupBy("l_returnflag", "__chunk").agg(
-        F.sum("cnt").alias("cc")
-    )
-    w_carry = (
-        Window.partitionBy("l_returnflag")
-        .orderBy("__chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_tot = (
-        Window.partitionBy("l_returnflag")
-        .orderBy(F.lit(1))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    ch = per_chunk.select(
-        "l_returnflag",
-        "__chunk",
-        F.coalesce(F.sum("cc").over(w_carry), F.lit(0)).alias("carry"),
-        F.sum("cc").over(w_tot).alias("n"),
-    )
-    cum = loc.join(F.broadcast(ch), ["l_returnflag", "__chunk"]).select(
-        "l_returnflag",
-        "cents",
-        (F.col("carry") + F.col("lcum")).alias("cum"),
-        "n",
-    )
-    bounds = cum.groupBy("l_returnflag").agg(
-        F.min(
-            F.when(100 * F.col("cum") >= F.col("n"), F.col("cents"))
-        ).alias("p01"),
-        F.min(
-            F.when(100 * F.col("cum") >= 99 * F.col("n"), F.col("cents"))
-        ).alias("p99"),
-    )
-    clamped = grid.select("l_returnflag", "cents", "cnt").join(
-        F.broadcast(bounds), "l_returnflag"
-    ).select(
-        "l_returnflag",
-        "cnt",
-        F.greatest(
-            F.col("p01"), F.least(F.col("p99"), F.col("cents"))
-        ).alias("c"),
-        (F.col("cents") < F.col("p01")).cast("long").alias("lo"),
-        (F.col("cents") > F.col("p99")).cast("long").alias("hi"),
-    )
-    return clamped.groupBy("l_returnflag").agg(
-        F.sum("cnt").alias("n_rows"),
-        F.sum(F.col("lo") * F.col("cnt")).alias("n_clipped_low"),
-        F.sum(F.col("hi") * F.col("cnt")).alias("n_clipped_high"),
-        (
-            F.sum(F.col("c") * F.col("cnt")).cast("double")
-            / F.sum("cnt").cast("double")
-            / F.lit(100.0)
-        ).alias("winsorized_mean"),
-    )
-
-
-ORACLE_WINSORIZED_STATS = """
-WITH t AS (
-  SELECT l_returnflag,
-         CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
-  FROM lineitem WHERE l_extendedprice IS NOT NULL
-), grid AS (
-  SELECT l_returnflag, cents, count(*) AS cnt
-  FROM t GROUP BY 1, 2
-), cum AS (
-  SELECT l_returnflag, cents, cnt,
-         SUM(cnt) OVER (PARTITION BY l_returnflag ORDER BY cents
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         SUM(cnt) OVER (PARTITION BY l_returnflag) AS n
-  FROM grid
-), bounds AS (
-  SELECT l_returnflag,
-         MIN(CASE WHEN 100 * cum >= n THEN cents END) AS p01,
-         MIN(CASE WHEN 100 * cum >= 99 * n THEN cents END) AS p99
-  FROM cum GROUP BY l_returnflag
-), clamped AS (
-  SELECT g.l_returnflag, g.cnt,
-         GREATEST(b.p01, LEAST(b.p99, g.cents)) AS c,
-         CASE WHEN g.cents < b.p01 THEN 1 ELSE 0 END AS lo,
-         CASE WHEN g.cents > b.p99 THEN 1 ELSE 0 END AS hi
-  FROM grid g JOIN bounds b ON g.l_returnflag = b.l_returnflag
-)
-SELECT l_returnflag, SUM(cnt) AS n_rows,
-       SUM(lo * cnt) AS n_clipped_low,
-       SUM(hi * cnt) AS n_clipped_high,
-       CAST(SUM(c * cnt) AS DOUBLE) / CAST(SUM(cnt) AS DOUBLE) / 100.0
-         AS winsorized_mean
-FROM clamped GROUP BY l_returnflag
-"""
-
-
-def q_basket_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Basket novelty: per order, the fraction of items the customer
-    has never bought before — first-occurrence flags computed as ONE
-    (customer, part) aggregate (the item's first order by the
-    symmetric (order day, orderkey) pair) joined back to the items, so
-    no per-order cumulative set is ever materialized. Emits the
-    per-order novelty distribution aggregated by order sequence number
-    (1st, 2nd, … order of each customer) — the 'do customers explore
-    or repeat' curve. Integer-exact until terminal double divisions."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-
-    items = li.select("l_orderkey", "l_partkey").join(
-        o.select(
-            "o_orderkey", "o_custkey", _day("o_orderdate").alias("od")
-        ),
-        F.col("l_orderkey") == F.col("o_orderkey"),
-    )
-    # items feeds first_buy AND the flag join, but its subtree tops out
-    # at the fact join — no Exchange, so both consumers re-ran the join
-    # (global finding 3).  A repartition on the shared (customer, part)
-    # key gives both consumers ONE reusable Exchange that also
-    # satisfies the groupBy clustering and the join distribution — no
-    # second shuffle, strictly fewer fact passes; scale-neutral (a
-    # keyed shuffle of the projected fact columns).
-    items = items.repartition("o_custkey", "l_partkey")
-    first_buy = items.groupBy("o_custkey", "l_partkey").agg(
-        F.min(F.struct("od", "l_orderkey")).alias("first")
-    )
-    flagged = items.join(
-        first_buy, ["o_custkey", "l_partkey"]
-    ).select(
-        "o_custkey",
-        "l_orderkey",
-        "od",
-        F.when(
-            (F.col("first.od") == F.col("od"))
-            & (F.col("first.l_orderkey") == F.col("l_orderkey")),
-            1,
-        )
-        .otherwise(0)
-        .alias("is_new"),
-    )
-    per_order = flagged.groupBy("o_custkey", "l_orderkey", "od").agg(
-        F.count(F.lit(1)).alias("n_items"),
-        F.sum("is_new").alias("n_new"),
-    )
-    seq = per_order.select(
-        "*",
-        F.row_number()
-        .over(
-            Window.partitionBy("o_custkey").orderBy("od", "l_orderkey")
-        )
-        .alias("order_seq"),
-    )
-    return seq.groupBy("order_seq").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum("n_items").alias("n_items"),
-        F.sum("n_new").alias("n_new"),
-        (
-            F.sum("n_new").cast("double")
-            / F.sum("n_items").cast("double")
-        ).alias("novelty_rate"),
-    )
-
-
-ORACLE_BASKET_NOVELTY = """
-WITH items AS (
-  SELECT o.o_custkey, l.l_orderkey, l.l_partkey,
-         CAST(FLOOR(epoch_us(o.o_orderdate) / 86400000000) AS BIGINT)
-           AS od
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-), first_buy AS (
-  SELECT o_custkey, l_partkey,
-         MIN(ROW(od, l_orderkey)) AS first_key
-  FROM items GROUP BY 1, 2
-), flagged AS (
-  SELECT i.o_custkey, i.l_orderkey, i.od,
-         CASE WHEN ROW(i.od, i.l_orderkey) = f.first_key
-              THEN 1 ELSE 0 END AS is_new
-  FROM items i
-  JOIN first_buy f
-    ON i.o_custkey = f.o_custkey AND i.l_partkey = f.l_partkey
-), per_order AS (
-  SELECT o_custkey, l_orderkey, od, count(*) AS n_items,
-         SUM(is_new) AS n_new
-  FROM flagged GROUP BY 1, 2, 3
-), seq AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
-                               ORDER BY od, l_orderkey) AS order_seq
-  FROM per_order
-)
-SELECT order_seq, count(*) AS n_orders, SUM(n_items) AS n_items,
-       SUM(n_new) AS n_new,
-       CAST(SUM(n_new) AS DOUBLE) / CAST(SUM(n_items) AS DOUBLE)
-         AS novelty_rate
-FROM seq GROUP BY order_seq
-"""
-
-
-def q_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-correlation of two event-type daily series (purchase vs
-    error) at lags 0-3 — the bivariate companion of autocorrelation.
-    The fact table collapses ONCE to the (day, n_purchase, n_error)
-    grid; each lag pairs the grid with its lag-shifted self via a
-    day-window lag (grid-sized, bounded); the correlation uses the
-    exact integer moment sums + fixed double tree (operands peak well
-    below 2⁶³ — daily counts are small). Missing days count as zero
-    via a dense day spine from the observed range."""
-    ev = load_table(spark, sf_dir, "events")
-    day = F.floor(
-        F.unix_micros(F.col("ts")) / F.lit(86_400_000_000)
-    ).cast("long")
-    daily = (
-        ev.filter(F.col("event_type").isin("purchase", "error"))
-        .select(
-            day.alias("d"),
-            (F.col("event_type") == "purchase")
-            .cast("long")
-            .alias("isp"),
-        )
-        .groupBy("d")
-        .agg(
-            F.sum("isp").alias("np"),
-            F.sum(1 - F.col("isp")).alias("ne"),
-        )
-    )
-    span = daily.agg(
-        F.min("d").alias("dmin"), F.max("d").alias("dmax")
-    )
-    spine = span.select(
-        F.explode(F.sequence(F.col("dmin"), F.col("dmax"))).alias("d")
-    )
-    dense = spine.join(daily, "d", "left").select(
-        "d",
-        F.coalesce("np", F.lit(0)).alias("np"),
-        F.coalesce("ne", F.lit(0)).alias("ne"),
-    )
-    # all four lag columns come from ONE pass over the single day
-    # window, then unpivot with stack — a per-lag unionAll would
-    # re-plan the fact collapse and spine four times (the corr_matrix
-    # lesson); grouping by lag also matches the oracle's GROUP BY
-    # semantics exactly (a lag with zero paired rows emits NO row)
-    w = Window.orderBy("d")
-    lagged = dense.select(
-        "np",
-        F.col("ne").alias("ne0"),
-        F.lag("ne", 1).over(w).alias("ne1"),
-        F.lag("ne", 2).over(w).alias("ne2"),
-        F.lag("ne", 3).over(w).alias("ne3"),
-    )
-    paired = lagged.selectExpr(
-        "np",
-        "stack(4, 0, ne0, 1, ne1, 2, ne2, 3, ne3) AS (lag, nel)",
-    ).filter(F.col("nel").isNotNull())
-    g = paired.groupBy("lag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("np").alias("sx"),
-        F.sum("nel").alias("sy"),
-        F.sum(F.col("np") * F.col("np")).alias("sxx"),
-        F.sum(F.col("nel") * F.col("nel")).alias("syy"),
-        F.sum(F.col("np") * F.col("nel")).alias("sxy"),
-    )
-
-    def big(c):
-        return F.col(c).cast("decimal(38,0)")
-
-    num = (big("n") * big("sxy") - big("sx") * big("sy")).cast("double")
-    dx = (big("n") * big("sxx") - big("sx") * big("sx")).cast("double")
-    dy = (big("n") * big("syy") - big("sy") * big("sy")).cast("double")
-    # a zero-variance series (constant lake / degenerate spine) has no
-    # correlation: NULL, never x/0.0 (ANSI throws — constant driftlab)
-    return g.select(
-        F.col("lag").cast("int").alias("lag"),
-        F.col("n").alias("n_days"),
-        F.when((dx > 0) & (dy > 0), num / F.sqrt(dx * dy)).alias("xcorr"),
-    )
-
-
-ORACLE_CROSS_CORRELATION = """
-WITH daily AS (
-  SELECT CAST(FLOOR(epoch_us(ts) / 86400000000) AS BIGINT) AS d,
-         SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS np,
-         SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS ne
-  FROM events WHERE event_type IN ('purchase', 'error')
-  GROUP BY 1
-), span AS (
-  SELECT MIN(d) AS dmin, MAX(d) AS dmax FROM daily
-), spine AS (
-  SELECT unnest(generate_series(dmin, dmax)) AS d FROM span
-), dense AS (
-  SELECT s.d, COALESCE(x.np, 0) AS np, COALESCE(x.ne, 0) AS ne
-  FROM spine s LEFT JOIN daily x ON s.d = x.d
-), lagged AS (
-  SELECT l.lag, d.np,
-         LAG(d.ne, l.lag) OVER (PARTITION BY l.lag ORDER BY d.d) AS nel
-  FROM dense d CROSS JOIN (SELECT unnest([0,1,2,3]) AS lag) l
-), g AS (
-  SELECT lag, count(*) AS n, SUM(np) AS sx, SUM(nel) AS sy,
-         SUM(np * np) AS sxx, SUM(nel * nel) AS syy,
-         SUM(np * nel) AS sxy
-  FROM lagged WHERE nel IS NOT NULL GROUP BY lag
-)
-SELECT CAST(lag AS INT) AS lag, n AS n_days,
-       CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0 THEN
-         CAST(n * sxy - sx * sy AS DOUBLE)
-           / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-                  * CAST(n * syy - sy * sy AS DOUBLE)) END AS xcorr
-FROM g
-"""
-
-
-def q_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Burstiness (Fano factor, variance/mean of daily counts) per
-    event type — Poisson-ness diagnostic: F≈1 is Poisson arrivals,
-    F≫1 is bursty. Exact integer moment sums over the (type, day)
-    grid (operands ≤~2⁵⁰ — inside the safe single-conversion zone),
-    sample variance with the n−1 divisor in one fixed double tree."""
-    ev = load_table(spark, sf_dir, "events")
-    day = F.floor(
-        F.unix_micros(F.col("ts")) / F.lit(86_400_000_000)
-    ).cast("long")
-    daily = (
-        ev.select("event_type", day.alias("d"))
-        .groupBy("event_type", "d")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    g = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_days"),
-        F.sum("n").alias("s1"),
-        F.sum(F.col("n") * F.col("n")).alias("s2"),
-    )
-    nd = F.col("n_days").cast("double")
-    mean = F.col("s1").cast("double") / nd
-    var = (
-        F.col("s2").cast("double") - nd * mean * mean
-    ) / (nd - F.lit(1.0))
-    return g.select(
-        "event_type",
-        "n_days",
-        mean.alias("mean_daily"),
-        # a single observed day has no sample variance (n − 1 = 0):
-        # NULL, never x/0.0 (ANSI throws — onerow driftlab layout)
-        F.when(F.col("n_days") > 1, var / mean).alias("fano_factor"),
-    )
-
-
-ORACLE_BURSTINESS = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(FLOOR(epoch_us(ts) / 86400000000) AS BIGINT) AS d,
-         count(*) AS n
-  FROM events GROUP BY 1, 2
-), g AS (
-  SELECT event_type, count(*) AS n_days, SUM(n) AS s1,
-         SUM(n * n) AS s2
-  FROM daily GROUP BY event_type
-)
-SELECT event_type, n_days,
-       CAST(s1 AS DOUBLE) / CAST(n_days AS DOUBLE) AS mean_daily,
-       CASE WHEN n_days > 1 THEN
-         ((CAST(s2 AS DOUBLE)
-           - CAST(n_days AS DOUBLE)
-             * (CAST(s1 AS DOUBLE) / CAST(n_days AS DOUBLE))
-             * (CAST(s1 AS DOUBLE) / CAST(n_days AS DOUBLE)))
-          / (CAST(n_days AS DOUBLE) - 1.0))
-         / (CAST(s1 AS DOUBLE) / CAST(n_days AS DOUBLE)) END AS fano_factor
-FROM g
-"""
-
-
-def q_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 parts by price dispersion (coefficient of variation of
-    sale price) among parts sold ≥10 times — exact integer cents
-    moments per part (n·Σx² peaks ~2⁵⁷ at sf1, inside the measured
-    safe single-conversion zone), sample CV in one fixed double tree,
-    TakeOrdered top-k with partkey tiebreak."""
-    li = load_table(spark, sf_dir, "lineitem")
-    t = li.select(
-        "l_partkey",
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("c"),
-    )
-    g = (
-        t.groupBy("l_partkey")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("c").alias("s1"),
-            F.sum(
-                F.col("c").cast("decimal(38,0)")
-                * F.col("c").cast("decimal(38,0)")
-            ).alias("s2"),
-        )
-        .filter(F.col("n") >= 10)
-    )
-
-    def big(c):
-        return F.col(c).cast("decimal(38,0)")
-
-    num = (big("n") * big("s2") - big("s1") * big("s1")).cast("double")
-    den = (big("n") * (big("n") - 1)).cast("double")
-    mean = F.col("s1").cast("double") / F.col("n").cast("double")
-    cv = F.sqrt(num / den) / mean
-    return (
-        g.select(
-            F.col("l_partkey").alias("partkey"),
-            "n",
-            cv.alias("cv"),
-        )
-        .orderBy(F.desc("cv"), "partkey")
-        .limit(20)
-    )
-
-
-ORACLE_PRICE_DISPERSION = """
-WITH t AS (
-  SELECT l_partkey,
-         CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS c
-  FROM lineitem
-), g AS (
-  -- HUGEINT product mirrors the Spark side's decimal(38,0) square:
-  -- a raw INT64 c*c overflows on high-magnitude lakes (bigmoney)
-  SELECT l_partkey, count(*) AS n, SUM(c) AS s1,
-         SUM(CAST(c AS HUGEINT) * c) AS s2
-  FROM t GROUP BY l_partkey HAVING count(*) >= 10
-)
-SELECT l_partkey AS partkey, n,
-       sqrt(CAST(CAST(n AS HUGEINT) * s2
-                 - CAST(s1 AS HUGEINT) * s1 AS DOUBLE)
-            / CAST(n * (n - 1) AS DOUBLE))
-         / (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)) AS cv
-FROM g ORDER BY cv DESC, partkey LIMIT 20
-"""
-
-
-def q_basket_size_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order basket-size distribution: line count per order → orders
-    per basket size, with each size's share. Two integer aggregates +
-    a 1-row total broadcast — the order-composition profile every
-    co-occurrence operator's Σ|basket|² cost model starts from."""
-    li = load_table(spark, sf_dir, "lineitem")
-    per = li.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("basket")
-    )
-    dist = per.groupBy("basket").agg(
-        F.count(F.lit(1)).alias("n_orders")
-    )
-    tot = dist.agg(F.sum("n_orders").alias("total"))
-    return dist.crossJoin(F.broadcast(tot)).select(
-        "basket",
-        "n_orders",
-        (
-            F.col("n_orders").cast("double")
-            / F.col("total").cast("double")
-        ).alias("share"),
-    )
-
-
-ORACLE_BASKET_SIZE_DIST = """
-WITH per AS (
-  SELECT l_orderkey, count(*) AS basket FROM lineitem GROUP BY 1
-), dist AS (
-  SELECT basket, count(*) AS n_orders FROM per GROUP BY basket
-), tot AS (
-  SELECT SUM(n_orders) AS total FROM dist
-)
-SELECT basket, n_orders,
-       CAST(n_orders AS DOUBLE) / CAST(total AS DOUBLE) AS share
-FROM dist CROSS JOIN tot
-"""
-
-
-def q_decayed_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-decayed revenue per nation with a one-year half-life —
-    recency-weighted scoring WITHOUT a transcendental: the weight
-    2^-(age_years) makes every scaled term cents·2^(span−age) an exact
-    BIGINT (span ≤ ~8 years keeps the scaled sum < 2⁵³), so the
-    aggregate is exact integer arithmetic and the final score is one
-    exact division by a power of two. The reference year is
-    data-derived (max order year — regeneration-proof). One fact
-    aggregate; the customer→nation attach is an unhinted equi-join
-    (AQE broadcasts it at driver scale, shuffle-joins it at 100 TB —
-    customer is SF-linear and must never be force-broadcast)."""
-    o = load_table(spark, sf_dir, "orders")
-    cu = load_table(spark, sf_dir, "customer")
-    na = load_table(spark, sf_dir, "nation")
-    base = o.select(
-        "o_custkey",
-        F.year("o_orderdate").alias("yr"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    span = base.agg(
-        F.max("yr").alias("ymax"), F.min("yr").alias("ymin")
-    )
-    nk = cu.select("c_custkey", "c_nationkey").join(
-        F.broadcast(na.select("n_nationkey", "n_name")),
-        F.col("c_nationkey") == F.col("n_nationkey"),
-    )
-    scaled = (
-        base.crossJoin(F.broadcast(span))
-        .join(nk, F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            "n_name",
-            "ymax",
-            "ymin",
-            F.expr(
-                "cents * shiftleft(CAST(1 AS BIGINT), "
-                "CAST(yr - ymin AS INT))"
-            ).alias("term"),
-        )
-    )
-    # the scaled SUM grows with row count (every term carries up to
-    # 2^span) — accumulate in DECIMAL(38,0)/HUGEINT so no scale factor
-    # can wrap an int64 partial
-    g = scaled.groupBy("n_name", "ymax", "ymin").agg(
-        F.sum(F.col("term").cast("decimal(38,0)")).alias("scaled_sum"),
-        F.count(F.lit(1)).alias("n_orders"),
-    )
-    return g.select(
-        F.col("n_name").alias("nation"),
-        "n_orders",
-        F.expr(
-            "CAST(scaled_sum AS DOUBLE) "
-            "/ CAST(shiftleft(CAST(1 AS BIGINT), "
-            "CAST(ymax - ymin AS INT)) AS DOUBLE) / 100.0"
-        ).alias("decayed_revenue"),
-    )
-
-
-ORACLE_DECAYED_REVENUE = """
-WITH base AS (
-  SELECT o_custkey, year(o_orderdate) AS yr,
-         CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-  FROM orders
-), span AS (
-  SELECT MAX(yr) AS ymax, MIN(yr) AS ymin FROM base
-), nk AS (
-  SELECT c.c_custkey, n.n_name
-  FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
-), g AS (
-  SELECT nk.n_name, s.ymax, s.ymin,
-         SUM(b.cents * (CAST(1 AS BIGINT) << (b.yr - s.ymin)))
-           AS scaled_sum,
-         count(*) AS n_orders
-  FROM base b CROSS JOIN span s
-  JOIN nk ON b.o_custkey = nk.c_custkey
-  GROUP BY 1, 2, 3
-)
-SELECT n_name AS nation, n_orders,
-       CAST(scaled_sum AS DOUBLE)
-         / CAST(CAST(1 AS BIGINT) << (ymax - ymin) AS DOUBLE)
-         / 100.0 AS decayed_revenue
-FROM g
-"""
-
-
-def q_cosupplier_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Co-supplier graph: top-20 supplier pairs by number of common
-    parts — the inverted-index pair join (per-part supplier lists,
-    u < v orientation), never an all-pairs product; fan-out is
-    Σ|suppliers-per-part|², bounded by the densest part. Same edge
-    algebra as copurchase_edges on a different relation. Integer-exact
-    with (pair) tiebreak TakeOrdered."""
-    li = load_table(spark, sf_dir, "lineitem")
-    # keyed spread (guide §2.5): HashPartitioning(l_partkey) satisfies
-    # BOTH the distinct's clustering and the pk self-join's, so the
-    # whole dedup → pair fan-out → partial agg chain runs at core
-    # width off ONE exchange — the planner's own exchanges were
-    # AQE-byte-coalesced to ~1 task while the pair fan-out is per-row
-    # work (A/B 2.27 → 1.21 s at sf0.1; no-op on a wide scan)
-    ps = ensure_keyed_parallelism(
-        li.select("l_partkey", "l_suppkey"), "l_partkey"
-    ).distinct()
-    a = ps.select(
-        F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("u")
-    )
-    b = ps.select(
-        F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("v")
-    )
-    pairs = (
-        a.join(b, "pk")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("common_parts"))
-    )
-    return pairs.orderBy(
-        F.desc("common_parts"), "u", "v"
-    ).limit(20)
-
-
-ORACLE_COSUPPLIER_PAIRS = """
-WITH ps AS (
-  SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
-)
-SELECT a.l_suppkey AS u, b.l_suppkey AS v,
-       count(*) AS common_parts
-FROM ps a JOIN ps b ON a.l_partkey = b.l_partkey
-WHERE a.l_suppkey < b.l_suppkey
-GROUP BY 1, 2
-ORDER BY common_parts DESC, u, v LIMIT 20
-"""
-
-
-def q_top_decile_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue concentration: what share of total revenue do the
-    top-10% customers hold? Customers rank by exact cents revenue via
-    ``operators/ranking.bucketed_rank`` (bucket-offset plan — no
-    single-partition sort), the decile cut is the pure-integer ANSI
-    ntile condition (rank ≤ ceil via 10·rank ≤ n + ...; here simply
-    rank ≤ n DIV 10 — the exact top-10% count), and the share is one
-    double division of exact cents sums. 1-row output."""
-    o = load_table(spark, sf_dir, "orders")
-    rev = (
-        o.select(
-            "o_custkey",
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("o_custkey")
-        .agg(F.sum("cents").alias("rev_cents"))
-    )
-    from fink_broker_spark.operators.ranking import bucketed_rank
-
-    ranked = bucketed_rank(
-        rev,
-        -F.col("rev_cents"),
-        F.col("o_custkey"),
-        "rnk",
-        bucket_width=100_000,
-    )
-    n_row = ranked.agg(F.count(F.lit(1)).alias("n"))
-    return (
-        ranked.crossJoin(F.broadcast(n_row))
-        .agg(
-            F.max("n").alias("n_customers"),
-            F.sum("rev_cents").alias("total_cents"),
-            F.sum(
-                F.when(
-                    F.col("rnk") <= F.floor(F.col("n") / 10),
-                    F.col("rev_cents"),
-                ).otherwise(0)
-            ).alias("top_cents"),
-        )
-        .select(
-            "n_customers",
-            (
-                F.col("top_cents").cast("double")
-                / F.col("total_cents").cast("double")
-            ).alias("top_decile_share"),
-        )
-    )
-
-
-ORACLE_TOP_DECILE_SHARE = """
-WITH rev AS (
-  SELECT o_custkey,
-         SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-           AS rev_cents
-  FROM orders GROUP BY o_custkey
-), ranked AS (
-  SELECT o_custkey, rev_cents,
-         ROW_NUMBER() OVER (ORDER BY rev_cents DESC, o_custkey) AS rnk,
-         COUNT(*) OVER () AS n
-  FROM rev
-)
-SELECT MAX(n) AS n_customers,
-       CAST(SUM(CASE WHEN rnk <= n // 10 THEN rev_cents ELSE 0 END)
-            AS DOUBLE)
-         / CAST(SUM(rev_cents) AS DOUBLE) AS top_decile_share
-FROM ranked
-"""
-
-
-def q_source_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise lexical similarity between document sources: cosine
-    over each source's token-count vector via the inverted-index join
-    (posting lists keyed by token — the sparse_cosine_pairs algebra on
-    the source axis, |sources|² pairs max). Dots and norms are exact
-    integers through DECIMAL(38,0)/HUGEINT; the posting-list fan-out
-    is |sources| per token (sources are a bounded dimension — the
-    df-cut lever for unbounded axes lives in sparse_cosine_pairs).
-    Fixed sqrt tree, (pair) tiebreak top-20."""
-    docs = load_table(spark, sf_dir, "documents")
-    pruned = (
-        docs.select("source", F.explode(tokens_expr("text")).alias("w"))
-        .groupBy("source", "w")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    norms = pruned.groupBy("source").agg(
-        F.sum(
-            F.col("n").cast("decimal(38,0)")
-            * F.col("n").cast("decimal(38,0)")
-        ).alias("norm2")
-    )
-    a = pruned.select(
-        "w", F.col("source").alias("sa"), F.col("n").alias("na")
-    )
-    b = pruned.select(
-        "w", F.col("source").alias("sb"), F.col("n").alias("nb")
-    )
-    dots = (
-        a.join(b, "w")
-        .filter(F.col("sa") < F.col("sb"))
-        .groupBy("sa", "sb")
-        .agg(
-            F.sum(
-                F.col("na").cast("decimal(38,0)")
-                * F.col("nb").cast("decimal(38,0)")
-            ).alias("dot")
-        )
-    )
-    joined = (
-        dots.join(
-            norms.select(
-                F.col("source").alias("sa"), F.col("norm2").alias("n2a")
-            ),
-            "sa",
-        )
-        .join(
-            norms.select(
-                F.col("source").alias("sb"), F.col("norm2").alias("n2b")
-            ),
-            "sb",
-        )
-    )
-    cos = F.col("dot").cast("double") / F.sqrt(
-        F.col("n2a").cast("double") * F.col("n2b").cast("double")
-    )
-    return (
-        joined.select("sa", "sb", cos.alias("cosine"))
-        .orderBy(F.desc("cosine"), "sa", "sb")
-        .limit(20)
-    )
-
-
-ORACLE_SOURCE_SIMILARITY = r"""
-WITH tok AS (
-  SELECT source,
-         unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
-  FROM documents
-  WHERE length(trim(lower(text))) > 0
-), pruned AS (
-  SELECT source, w, count(*) AS n FROM tok GROUP BY 1, 2
-), norms AS (
-  SELECT source, SUM(n * n) AS norm2 FROM pruned GROUP BY source
-), dots AS (
-  SELECT a.source AS sa, b.source AS sb, SUM(a.n * b.n) AS dot
-  FROM pruned a JOIN pruned b ON a.w = b.w AND a.source < b.source
-  GROUP BY 1, 2
-)
-SELECT d.sa, d.sb,
-       CAST(d.dot AS DOUBLE)
-         / sqrt(CAST(na.norm2 AS DOUBLE) * CAST(nb.norm2 AS DOUBLE))
-         AS cosine
-FROM dots d
-JOIN norms na ON d.sa = na.source
-JOIN norms nb ON d.sb = nb.source
-ORDER BY cosine DESC, sa, sb LIMIT 20
-"""
-
-
-def q_event_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-type co-occurrence lift within (user, hour) windows:
-    P(a,b together) / (P(a)·P(b)) over window occurrences. Pairs come
-    from the per-window distinct type set (≤|event types| per window —
-    bounded fan-out, never a fact self-join); all probabilities are
-    exact integer window counts; the lift is a fixed all-double tree
-    over sub-2⁵³ operands (the overflow-free collocation_lift
-    pattern)."""
-    ev = load_table(spark, sf_dir, "events")
-    wt = (
-        ev.select(
-            "user_id",
-            F.floor(
-                F.unix_micros(F.col("ts")) / F.lit(3_600_000_000)
-            )
-            .cast("long")
-            .alias("hr"),
-            "event_type",
-        )
-        .distinct()
-    )
-    nwin = wt.select("user_id", "hr").distinct().agg(
-        F.count(F.lit(1)).alias("n_windows")
-    )
-    marg = wt.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_t"))
-    a = wt.select(
-        "user_id", "hr", F.col("event_type").alias("ta")
-    )
-    b = wt.select(
-        "user_id", "hr", F.col("event_type").alias("tb")
-    )
-    pairs = (
-        a.join(b, ["user_id", "hr"])
-        .filter(F.col("ta") < F.col("tb"))
-        .groupBy("ta", "tb")
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-    )
-    joined = (
-        pairs.join(
-            F.broadcast(
-                marg.select(
-                    F.col("event_type").alias("ta"),
-                    F.col("n_t").alias("n_a"),
-                )
-            ),
-            "ta",
-        )
-        .join(
-            F.broadcast(
-                marg.select(
-                    F.col("event_type").alias("tb"),
-                    F.col("n_t").alias("n_b"),
-                )
-            ),
-            "tb",
-        )
-        .crossJoin(F.broadcast(nwin))
-    )
-    lift = (
-        F.col("n_ab").cast("double") * F.col("n_windows").cast("double")
-    ) / (F.col("n_a").cast("double") * F.col("n_b").cast("double"))
-    return joined.select(
-        "ta", "tb", "n_ab", lift.alias("lift")
-    )
-
-
-ORACLE_EVENT_COOCCURRENCE = """
-WITH wt AS (
-  SELECT DISTINCT user_id,
-         CAST(FLOOR(epoch_us(ts) / 3600000000) AS BIGINT) AS hr,
-         event_type
-  FROM events
-), nwin AS (
-  SELECT count(*) AS n_windows
-  FROM (SELECT DISTINCT user_id, hr FROM wt)
-), marg AS (
-  SELECT event_type, count(*) AS n_t FROM wt GROUP BY 1
-), pairs AS (
-  SELECT a.event_type AS ta, b.event_type AS tb, count(*) AS n_ab
-  FROM wt a
-  JOIN wt b ON a.user_id = b.user_id AND a.hr = b.hr
-           AND a.event_type < b.event_type
-  GROUP BY 1, 2
-)
-SELECT p.ta, p.tb, p.n_ab,
-       (CAST(p.n_ab AS DOUBLE) * CAST(w.n_windows AS DOUBLE))
-         / (CAST(ma.n_t AS DOUBLE) * CAST(mb.n_t AS DOUBLE)) AS lift
-FROM pairs p
-JOIN marg ma ON p.ta = ma.event_type
-JOIN marg mb ON p.tb = mb.event_type
-CROSS JOIN nwin w
-"""
-
-
-def q_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly growth accounting: new / retained / churned users per
-    week — the standard activity-ledger decomposition (weekly grain:
-    the synthetic event stream spans ~a month, so months would give a
-    single row). The (user, week) activity grid is ONE fact collapse;
-    'new' compares against the user's first active week (a per-user
-    aggregate joined back), 'retained' checks presence in the previous
-    week via a self-join on (user, week−1), and 'churned' counts last
-    week's actives missing the next (anti-join reformulated as a
-    left-join flag). Integer-exact epoch-week codes."""
-    ev = load_table(spark, sf_dir, "events")
-    wcode = F.floor(_day("ts") / 7).cast("long")
-    um = ev.select("user_id", wcode.alias("m")).distinct()
-    first = um.groupBy("user_id").agg(F.min("m").alias("m0"))
-    prev = um.select(
-        "user_id", (F.col("m") + 1).alias("m"), F.lit(1).alias("was")
-    )
-    cur = (
-        um.join(first, "user_id")
-        .join(prev, ["user_id", "m"], "left")
-        .select(
-            "m",
-            F.when(F.col("m") == F.col("m0"), 1).otherwise(0).alias(
-                "is_new"
-            ),
-            F.coalesce("was", F.lit(0)).alias("is_retained"),
-        )
-    )
-    nxt = um.select(
-        "user_id", (F.col("m") - 1).alias("m"), F.lit(1).alias("still")
-    )
-    churn = (
-        um.join(nxt, ["user_id", "m"], "left")
-        .select(
-            (F.col("m") + 1).alias("m"),
-            F.when(F.col("still").isNull(), 1).otherwise(0).alias(
-                "churned"
-            ),
-        )
-        .groupBy("m")
-        .agg(F.sum("churned").alias("n_churned"))
-    )
-    g = cur.groupBy("m").agg(
-        F.count(F.lit(1)).alias("n_active"),
-        F.sum("is_new").alias("n_new"),
-        F.sum("is_retained").alias("n_retained"),
-    )
-    return (
-        g.join(churn, "m", "left")
-        .select(
-            "m",
-            "n_active",
-            "n_new",
-            "n_retained",
-            F.coalesce("n_churned", F.lit(0)).alias("n_churned_next"),
-        )
-    )
-
-
-ORACLE_GROWTH_ACCOUNTING = """
-WITH um AS (
-  SELECT DISTINCT user_id,
-         CAST(FLOOR(CAST(FLOOR(epoch_us(ts) / 86400000000) AS BIGINT)
-                    / 7) AS BIGINT) AS m
-  FROM events
-), first AS (
-  SELECT user_id, MIN(m) AS m0 FROM um GROUP BY user_id
-), cur AS (
-  SELECT u.m,
-         CASE WHEN u.m = f.m0 THEN 1 ELSE 0 END AS is_new,
-         CASE WHEN p.user_id IS NOT NULL THEN 1 ELSE 0 END AS is_retained
-  FROM um u
-  JOIN first f ON u.user_id = f.user_id
-  LEFT JOIN um p ON p.user_id = u.user_id AND p.m = u.m - 1
-), churn AS (
-  SELECT u.m + 1 AS m,
-         SUM(CASE WHEN n.user_id IS NULL THEN 1 ELSE 0 END) AS n_churned
-  FROM um u
-  LEFT JOIN um n ON n.user_id = u.user_id AND n.m = u.m + 1
-  GROUP BY u.m + 1
-), g AS (
-  SELECT m, count(*) AS n_active, SUM(is_new) AS n_new,
-         SUM(is_retained) AS n_retained
-  FROM cur GROUP BY m
-)
-SELECT g.m, g.n_active, g.n_new, g.n_retained,
-       COALESCE(c.n_churned, 0) AS n_churned_next
-FROM g LEFT JOIN churn c ON g.m = c.m
-"""
-
-
-def q_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local-maximum peak detection on per-type daily count series:
-    a day is a peak when its count strictly exceeds both neighbors on
-    the dense day spine (missing days are zero — without the spine a
-    gap's neighbor would silently be a different date). Two bounded
-    lags per type partition; emits per-type peak counts and the
-    highest peak. Integer-exact."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = (
-        ev.select("event_type", _day("ts").alias("d"))
-        .groupBy("event_type", "d")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    span = daily.agg(
-        F.min("d").alias("dmin"), F.max("d").alias("dmax")
-    )
-    types = daily.select("event_type").distinct()
-    spine = types.crossJoin(F.broadcast(span)).select(
-        "event_type",
-        F.explode(F.sequence(F.col("dmin"), F.col("dmax"))).alias("d"),
-    )
-    dense = spine.join(daily, ["event_type", "d"], "left").select(
-        "event_type", "d", F.coalesce("n", F.lit(0)).alias("n")
-    )
-    w = Window.partitionBy("event_type").orderBy("d")
-    flagged = dense.select(
-        "event_type",
-        "n",
-        F.when(
-            (F.col("n") > F.coalesce(F.lag("n", 1).over(w), F.lit(0)))
-            & (
-                F.col("n")
-                > F.coalesce(F.lead("n", 1).over(w), F.lit(0))
-            ),
-            1,
-        )
-        .otherwise(0)
-        .alias("is_peak"),
-    )
-    return flagged.groupBy("event_type").agg(
-        F.sum("is_peak").alias("n_peaks"),
-        F.max(
-            F.when(F.col("is_peak") == 1, F.col("n"))
-        ).alias("highest_peak"),
-    )
-
-
-ORACLE_PEAK_DETECTION = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(FLOOR(epoch_us(ts) / 86400000000) AS BIGINT) AS d,
-         count(*) AS n
-  FROM events GROUP BY 1, 2
-), span AS (
-  SELECT MIN(d) AS dmin, MAX(d) AS dmax FROM daily
-), spine AS (
-  SELECT t.event_type, unnest(generate_series(s.dmin, s.dmax)) AS d
-  FROM (SELECT DISTINCT event_type FROM daily) t CROSS JOIN span s
-), dense AS (
-  SELECT s.event_type, s.d, COALESCE(x.n, 0) AS n
-  FROM spine s
-  LEFT JOIN daily x ON s.event_type = x.event_type AND s.d = x.d
-), flagged AS (
-  SELECT event_type, n,
-         CASE WHEN n > COALESCE(LAG(n, 1) OVER (
-                          PARTITION BY event_type ORDER BY d), 0)
-               AND n > COALESCE(LEAD(n, 1) OVER (
-                          PARTITION BY event_type ORDER BY d), 0)
-              THEN 1 ELSE 0 END AS is_peak
-  FROM dense
-)
-SELECT event_type, SUM(is_peak) AS n_peaks,
-       MAX(CASE WHEN is_peak = 1 THEN n END) AS highest_peak
-FROM flagged GROUP BY event_type
-"""
-
-
-def q_weekly_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly KPI sheet over orders: order count, exact revenue,
-    average order value, and distinct customers per epoch week — the
-    reporting aggregate every scheduler materializes nightly. ONE
-    fact pass with map-side partials (count/sum/distinct share the
-    same grouping); AOV is a double division of exact cents. The
-    distinct-customer count is exact (per-week state bounded by
-    |customers|); the approx swap for wider horizons is
-    approx_cardinality's documented territory."""
-    o = load_table(spark, sf_dir, "orders")
-    wk = F.floor(_day("o_orderdate") / 7).cast("long")
-    return (
-        o.select(
-            wk.alias("week"),
-            "o_custkey",
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("week")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.countDistinct("o_custkey").alias("n_customers"),
-            F.sum("cents").alias("revenue_cents"),
-        )
-        .select(
-            "week",
-            "n_orders",
-            "n_customers",
-            "revenue_cents",
-            (
-                F.col("revenue_cents").cast("double")
-                / F.col("n_orders").cast("double")
-                / F.lit(100.0)
-            ).alias("avg_order_value"),
-        )
-    )
-
-
-ORACLE_WEEKLY_KPIS = """
-WITH t AS (
-  SELECT CAST(FLOOR(CAST(FLOOR(epoch_us(o_orderdate) / 86400000000)
-                         AS BIGINT) / 7) AS BIGINT) AS week,
-         o_custkey,
-         CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-  FROM orders
-)
-SELECT week, count(*) AS n_orders,
-       count(DISTINCT o_custkey) AS n_customers,
-       SUM(cents) AS revenue_cents,
-       CAST(SUM(cents) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 100.0
-         AS avg_order_value
-FROM t GROUP BY week
-"""
-
-
-def q_cross_source_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-source contamination matrix: how many EXACT duplicate
-    texts (md5 fingerprints) each pair of sources shares — the
-    dedup-family diagnostic that tells a corpus curator which sources
-    copy from each other. Per-fingerprint distinct source sets come
-    from one aggregate; pairs fan out per fingerprint (≤|sources|²,
-    bounded), never a document self-join. Integer-exact."""
-    d = load_table(spark, sf_dir, "documents")
-    fp = d.select(
-        F.md5(F.col("text")).alias("fp"), "source"
-    ).distinct()
-    a = fp.select("fp", F.col("source").alias("sa"))
-    b = fp.select("fp", F.col("source").alias("sb"))
-    return (
-        a.join(b, "fp")
-        .filter(F.col("sa") < F.col("sb"))
-        .groupBy("sa", "sb")
-        .agg(F.count(F.lit(1)).alias("n_shared_texts"))
-    )
-
-
-ORACLE_CROSS_SOURCE_DUPS = """
-WITH fp AS (
-  SELECT DISTINCT md5(text) AS fp, source FROM documents
-)
-SELECT a.source AS sa, b.source AS sb, count(*) AS n_shared_texts
-FROM fp a JOIN fp b ON a.fp = b.fp AND a.source < b.source
-GROUP BY 1, 2
-"""
-
-
-def q_hourly_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hour-of-day load profile per event type + each type's peak
-    hour: the hour is pure integer arithmetic ((epoch µs DIV 3600e6)
-    mod 24 — never an engine hour() whose timezone semantics could
-    differ), the profile is one (type, hour) aggregate, and the peak
-    hour is a rank-1 filter over the 24-row-per-type profile with a
-    deterministic (count DESC, hour ASC) tiebreak."""
-    ev = load_table(spark, sf_dir, "events")
-    hr = (
-        F.floor(F.unix_micros(F.col("ts")) / F.lit(3_600_000_000)) % 24
-    ).cast("int")
-    prof = (
-        ev.select("event_type", hr.alias("hour"))
-        .groupBy("event_type", "hour")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    w = Window.partitionBy("event_type").orderBy(
-        F.col("n").desc(), "hour"
-    )
-    return prof.select(
-        "event_type",
-        "hour",
-        "n",
-        (F.row_number().over(w) == 1).cast("int").alias("is_peak_hour"),
-    )
-
-
-ORACLE_HOURLY_PROFILE = """
-WITH prof AS (
-  SELECT event_type,
-         CAST(CAST(FLOOR(epoch_us(ts) / 3600000000) AS BIGINT) % 24
-              AS INT) AS hour,
-         count(*) AS n
-  FROM events GROUP BY 1, 2
-)
-SELECT event_type, hour, n,
-       CAST(CASE WHEN ROW_NUMBER() OVER (
-                PARTITION BY event_type ORDER BY n DESC, hour
-              ) = 1 THEN 1 ELSE 0 END AS INT) AS is_peak_hour
-FROM prof
-"""
-
-
-def q_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ABC inventory classification: parts ranked by revenue, class A
-    while the cumulative share ≤ 80%, B ≤ 95%, C beyond. The running
-    revenue total over the DESC rank order comes from
-    ``operators/ranking.bucketed_prefix_sum`` — the distributed exact
-    prefix sum (bucket value sums → offset table → bucket-partitioned
-    running sum), so no single-partition window ever sees |parts|
-    rows. Class cuts are pure-integer comparisons (100·cum ≤ 80·total)
-    of exact cents. Emits per-class part counts and revenue shares."""
-    li = load_table(spark, sf_dir, "lineitem")
-    rev = (
-        li.select(
-            "l_partkey",
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("l_partkey")
-        .agg(F.sum("cents").alias("rev_cents"))
-    )
-    from fink_broker_spark.operators.ranking import bucketed_prefix_sum
-
-    with_cum = bucketed_prefix_sum(
-        rev,
-        -F.col("rev_cents"),
-        F.col("l_partkey"),
-        F.col("rev_cents"),
-        "cum_cents",
-        bucket_width=100_000,
-    )
-    tot = with_cum.agg(F.sum("rev_cents").alias("total_cents"))
-    classed = with_cum.crossJoin(F.broadcast(tot)).select(
-        "rev_cents",
-        "total_cents",
-        F.when(
-            100 * F.col("cum_cents") <= 80 * F.col("total_cents"), "A"
-        )
-        .when(
-            100 * F.col("cum_cents") <= 95 * F.col("total_cents"), "B"
-        )
-        .otherwise("C")
-        .alias("abc_class"),
-    )
-    return classed.groupBy("abc_class").agg(
-        F.count(F.lit(1)).alias("n_parts"),
-        F.sum("rev_cents").alias("class_cents"),
-        (
-            F.sum("rev_cents").cast("double")
-            / F.max("total_cents").cast("double")
-        ).alias("revenue_share"),
-    )
-
-
-ORACLE_ABC_CLASSIFICATION = """
-WITH rev AS (
-  SELECT l_partkey,
-         SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT))
-           AS rev_cents
-  FROM lineitem GROUP BY l_partkey
-), cum AS (
-  SELECT l_partkey, rev_cents,
-         SUM(rev_cents) OVER (
-           ORDER BY rev_cents DESC, l_partkey
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-         ) AS cum_cents,
-         SUM(rev_cents) OVER () AS total_cents
-  FROM rev
-), classed AS (
-  SELECT rev_cents, total_cents,
-         CASE WHEN 100 * cum_cents <= 80 * total_cents THEN 'A'
-              WHEN 100 * cum_cents <= 95 * total_cents THEN 'B'
-              ELSE 'C' END AS abc_class
-  FROM cum
-)
-SELECT abc_class, count(*) AS n_parts, SUM(rev_cents) AS class_cents,
-       CAST(SUM(rev_cents) AS DOUBLE) / CAST(MAX(total_cents) AS DOUBLE)
-         AS revenue_share
-FROM classed GROUP BY abc_class
-"""
-
-
-def q_daily_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily order backlog: how many orders are OPEN (placed, not yet
-    fully shipped) on each calendar day — the interval-stabbing count
-    as a time series (max_concurrency's sweep generalized from the
-    peak to the whole curve). Orders become +1 events on the order
-    day and −1 on the last ship day; the day spine densifies gaps and
-    a running sum over the ~|days|-row delta series (tiny — days, not
-    orders) yields the curve. Emits month-level summaries (mean/peak
-    backlog) to keep the output bounded. Integer-exact."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    ship = (
-        li.select("l_orderkey", _day("l_shipdate").alias("sday"))
-        .groupBy("l_orderkey")
-        .agg(F.max("sday").alias("end_day"))
-    )
-    iv = o.select(
-        "o_orderkey", _day("o_orderdate").alias("start_day")
-    ).join(ship, F.col("o_orderkey") == F.col("l_orderkey"))
-    deltas = (
-        iv.select(F.col("start_day").alias("d"), F.lit(1).alias("x"))
-        .unionAll(
-            iv.select(
-                (F.col("end_day") + 1).alias("d"), F.lit(-1).alias("x")
-            )
-        )
-        .groupBy("d")
-        .agg(F.sum("x").alias("delta"))
-    )
-    span = deltas.agg(
-        F.min("d").alias("dmin"), F.max("d").alias("dmax")
-    )
-    spine = span.select(
-        F.explode(F.sequence(F.col("dmin"), F.col("dmax"))).alias("d")
-    )
-    dense = spine.join(deltas, "d", "left").select(
-        "d", F.coalesce("delta", F.lit(0)).alias("delta")
-    )
-    w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
-    curve = dense.select(
-        "d", F.sum("delta").over(w).alias("backlog")
-    )
-    mo = curve.select(
-        F.floor(F.col("d") / 30).cast("long").alias("period"),
-        "backlog",
-    )
-    return mo.groupBy("period").agg(
-        F.count(F.lit(1)).alias("n_days"),
-        F.max("backlog").alias("peak_backlog"),
-        F.sum("backlog").alias("backlog_day_sum"),
-    )
-
-
-ORACLE_DAILY_BACKLOG = """
-WITH ship AS (
-  SELECT l_orderkey,
-         MAX(CAST(FLOOR(epoch_us(l_shipdate) / 86400000000) AS BIGINT))
-           AS end_day
-  FROM lineitem GROUP BY l_orderkey
-), iv AS (
-  SELECT CAST(FLOOR(epoch_us(o.o_orderdate) / 86400000000) AS BIGINT)
-           AS start_day,
-         s.end_day
-  FROM orders o JOIN ship s ON o.o_orderkey = s.l_orderkey
-), deltas AS (
-  SELECT d, SUM(x) AS delta FROM (
-    SELECT start_day AS d, 1 AS x FROM iv
-    UNION ALL
-    SELECT end_day + 1, -1 FROM iv
-  ) GROUP BY d
-), span AS (
-  SELECT MIN(d) AS dmin, MAX(d) AS dmax FROM deltas
-), spine AS (
-  SELECT unnest(generate_series(dmin, dmax)) AS d FROM span
-), dense AS (
-  SELECT s.d, COALESCE(x.delta, 0) AS delta
-  FROM spine s LEFT JOIN deltas x ON s.d = x.d
-), curve AS (
-  SELECT d,
-         SUM(delta) OVER (ORDER BY d
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS backlog
-  FROM dense
-)
-SELECT CAST(FLOOR(CAST(d AS DOUBLE) / 30) AS BIGINT) AS period,
-       count(*) AS n_days, MAX(backlog) AS peak_backlog,
-       SUM(backlog) AS backlog_day_sum
-FROM curve GROUP BY 1
-"""
-
-
-def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximum drawdown of cumulative daily revenue deltas vs the
-    running peak — the peak-to-trough statistic over the daily
-    net-revenue series (returned items negative, like
-    clamped_balance's move algebra but globally): running sum, running
-    max of it, worst (peak − level). All exact integers on the
-    ~|days|-row daily series; 1-row output."""
-    li = load_table(spark, sf_dir, "lineitem")
-    daily = (
-        li.select(
-            _day("l_shipdate").alias("d"),
-            F.when(
-                F.col("l_returnflag") == "R",
-                -F.floor(
-                    F.col("l_extendedprice") * 100 + F.lit(0.5)
-                ).cast("long"),
-            )
-            .otherwise(
-                F.floor(
-                    F.col("l_extendedprice") * 100 + F.lit(0.5)
-                ).cast("long")
-            )
-            .alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("net"))
-    )
-    w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
-    lvl = daily.select(
-        "d", F.sum("net").over(w).alias("level")
-    ).select(
-        "d", "level", F.max("level").over(w).alias("runpeak")
-    )
-    return lvl.agg(
-        F.count(F.lit(1)).alias("n_days"),
-        F.max(F.col("runpeak") - F.col("level")).alias(
-            "max_drawdown_cents"
-        ),
-    )
-
-
-ORACLE_MAX_DRAWDOWN = """
-WITH daily AS (
-  SELECT CAST(FLOOR(epoch_us(l_shipdate) / 86400000000) AS BIGINT)
-           AS d,
-         SUM(CASE WHEN l_returnflag = 'R'
-                  THEN -CAST(FLOOR(l_extendedprice * 100 + 0.5)
-                             AS BIGINT)
-                  ELSE CAST(FLOOR(l_extendedprice * 100 + 0.5)
-                            AS BIGINT) END) AS net
-  FROM lineitem GROUP BY 1
-), lvl AS (
-  SELECT d,
-         SUM(net) OVER (ORDER BY d
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS level
-  FROM daily
-), pk AS (
-  SELECT d, level,
-         MAX(level) OVER (ORDER BY d
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS runpeak
-  FROM lvl
-)
-SELECT count(*) AS n_days, MAX(runpeak - level) AS max_drawdown_cents
-FROM pk
-"""
-
-
-def q_exact_substring_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REMOVE half of exact-substring dedup (Lee et al. 2022):
-    every token position covered by a 10-token window that also occurs
-    verbatim in another document is dropped, and the cleaned text's
-    md5 digest is emitted — ``dup_span_coverage`` is the detect half,
-    this applies the edit. The covered-position explode is ∝ n × dup
-    windows (not n × tokens); the cleaned body is rebuilt by an
-    index-lambda ``filter`` in codegen, so document text never leaves
-    the executors. Top 50 most-edited docs, (n_removed DESC, doc_id)
-    deterministic."""
-    from fink_broker_spark.ext.dedup import exact_substring_remove
-
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        exact_substring_remove(docs, n=10)
-        .orderBy(F.col("n_removed").desc(), "doc_id")
-        .limit(50)
-    )
-
-
-ORACLE_EXACT_SUBSTRING_REMOVE = r"""
-WITH uniq AS (
-  -- canonical row per document (duprows re-ingest parity): min(text)
-  -- mirrors the engine's deterministic survivor pick, so a re-ingest
-  -- that DRIFTS the body (same doc_id, different text) cannot split
-  -- the engines the way an arbitrary-row dropDuplicates would
-  SELECT doc_id, min(text) AS text
-  FROM documents WHERE length(trim(lower(text))) > 0
-  GROUP BY doc_id
-), tok AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
-  FROM uniq
-),
-w AS (
-  SELECT doc_id, i,
-         md5(array_to_string(toks[i:i+9], ' ')) AS w
-  FROM tok, UNNEST(range(1, greatest(len(toks) - 10 + 2, 1))) AS t(i)
-),
-dup AS (SELECT w FROM w GROUP BY w HAVING count(DISTINCT doc_id) >= 2),
-cov AS (
-  SELECT DISTINCT doc_id, i + d AS pos
-  FROM w JOIN dup USING (w), UNNEST(range(0, 10)) AS r(d)
-),
-nrem AS (SELECT doc_id, count(*) AS n_removed FROM cov GROUP BY doc_id),
-toku AS (
-  SELECT doc_id, toks[i] AS tok, i AS pos
-  FROM tok, UNNEST(range(1, len(toks) + 1)) AS t(i)
-),
-kept AS (
-  SELECT t.doc_id, t.tok, t.pos
-  FROM toku t
-  WHERE NOT EXISTS (
-    SELECT 1 FROM cov c WHERE c.doc_id = t.doc_id AND c.pos = t.pos
-  )
-),
-agg AS (
-  SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS clean
-  FROM kept GROUP BY doc_id
-)
-SELECT t.doc_id,
-       CAST(len(t.toks) AS BIGINT) AS n_tokens,
-       n.n_removed,
-       md5(COALESCE(a.clean, '')) AS clean_hash
-FROM tok t
-JOIN nrem n USING (doc_id)
-LEFT JOIN agg a USING (doc_id)
-ORDER BY n.n_removed DESC, t.doc_id
-LIMIT 50
-"""
-
-
-def q_seat_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Largest-remainder (Hamilton) apportionment: split 1000 budget
-    seats across nations proportionally to exact order-revenue cents —
-    the integer allocation-under-constraint operator (quota floors +
-    remainder-ranked top-up) that proportional budgeting, shard
-    assignment, and sampling-quota layouts all reduce to. Everything
-    is BIGINT arithmetic (seats × total_cents < 2⁶³ holds through
-    ~$90T of revenue; past that the multiplier moves into
-    DECIMAL(38,0)); the top-up rank runs over the 25-row nation
-    relation, so the partition-free window is bounded. Deterministic
-    (remainder DESC, n_name) tiebreak; Σ seats ≡ 1000 by
-    construction."""
-    o = load_table(spark, sf_dir, "orders")
-    cu = load_table(spark, sf_dir, "customer")
-    na = load_table(spark, sf_dir, "nation")
-    rev = (
-        o.select(
-            "o_custkey",
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        .join(cu.select("c_custkey", "c_nationkey"),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(na.select("n_nationkey", "n_name")),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(F.sum("cents").alias("rev_cents"))
-    )
-    tot = rev.agg(F.sum("rev_cents").alias("total_cents"))
-    quota = rev.crossJoin(F.broadcast(tot)).select(
-        "n_name",
-        "rev_cents",
-        F.expr("(1000 * rev_cents) div total_cents").alias("base_seats"),
-        F.expr("(1000 * rev_cents) % total_cents").alias("rem"),
-    )
-    used = quota.agg(F.sum("base_seats").alias("used_seats"))
-    w = Window.orderBy(F.col("rem").desc(), "n_name")
-    return (
-        quota.crossJoin(F.broadcast(used))
-        .select(
-            "n_name",
-            "rev_cents",
-            "base_seats",
-            (
-                F.col("base_seats")
-                + F.when(
-                    F.row_number().over(w) <= F.lit(1000) - F.col("used_seats"),
-                    F.lit(1),
-                ).otherwise(F.lit(0))
-            ).alias("seats"),
-        )
-    )
-
-
-ORACLE_SEAT_APPORTIONMENT = """
-WITH rev AS (
-  SELECT n_name,
-         SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS rev_cents
-  FROM orders
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation ON c_nationkey = n_nationkey
-  GROUP BY n_name
-),
-tot AS (SELECT SUM(rev_cents) AS total_cents FROM rev),
-quota AS (
-  SELECT n_name, rev_cents,
-         (1000 * rev_cents) // total_cents AS base_seats,
-         (1000 * rev_cents) % total_cents AS rem
-  FROM rev, tot
-),
-used AS (SELECT SUM(base_seats) AS used_seats FROM quota)
-SELECT n_name, rev_cents, base_seats,
-       base_seats + CASE WHEN ROW_NUMBER() OVER (
-                ORDER BY rem DESC, n_name
-              ) <= 1000 - used_seats THEN 1 ELSE 0 END AS seats
-FROM quota, used
-ORDER BY n_name
-"""
-
-
-def q_event_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 user-journey trigrams: the most common 3-step
-    event-type sequences per user stream — the path-analysis
-    generalization of the Markov bigram matrix (event_transitions).
-    One per-user window (two lags over the symmetric (epoch-µs,
-    event_id) order — the raw-ts ordering trap is avoided on BOTH
-    sides), one (t1,t2,t3) count aggregate, TakeOrdered with full-path
-    tiebreak. Exact integers end-to-end."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        F.unix_micros(F.col("ts")), "event_id"
-    )
-    seq = ev.select(
-        F.lag("event_type", 2).over(w).alias("t1"),
-        F.lag("event_type", 1).over(w).alias("t2"),
-        F.col("event_type").alias("t3"),
-    ).filter(F.col("t1").isNotNull())
-    return (
-        seq.groupBy("t1", "t2", "t3")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), "t1", "t2", "t3")
-        .limit(20)
-    )
-
-
-ORACLE_EVENT_PATH_TRIGRAMS = """
-WITH seq AS (
-  SELECT LAG(event_type, 2) OVER w AS t1,
-         LAG(event_type, 1) OVER w AS t2,
-         event_type AS t3
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-)
-SELECT t1, t2, t3, count(*) AS n
-FROM seq WHERE t1 IS NOT NULL
-GROUP BY t1, t2, t3
-ORDER BY n DESC, t1, t2, t3
-LIMIT 20
-"""
-
-
-def q_vocab_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source Shannon entropy of the token distribution — the
-    vocabulary-diversity measure a corpus curator tracks next to
-    type-token ratio (lexical_diversity): H = −Σ p·ln p over per-source
-    token frequencies. One tokenize+explode pass, a vocab-bounded
-    (source, token) aggregate, a |sources|-row totals equi-join, and
-    the repo's transcendental-sum discipline: each p·ln p term rounds
-    to decimal(18,9) BEFORE the exact sum (p is a double division of
-    exact integers — identical IEEE on both engines; ln may differ by
-    1 ulp), and the exact sum quantizes terminally to scale 5 so a
-    straddled 0.5e-9 boundary cannot move the output."""
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "source", F.explode(tokens_expr("text")).alias("token")
-    )
-    counts = tok.groupBy("source", "token").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    totals = counts.groupBy("source").agg(
-        F.sum("c").alias("n_tokens"),
-        F.count(F.lit(1)).alias("vocab"),
-    )
-    p = F.col("c").cast("double") / F.col("n_tokens")
-    term = F.round(p * F.log(p), 9).cast("decimal(18,9)")
-    return (
-        counts.join(totals, "source")
-        .groupBy("source")
-        .agg(
-            F.max("n_tokens").alias("n_tokens"),
-            F.max("vocab").alias("vocab"),
-            (-F.sum(term)).cast("decimal(28,9)").alias("ent_exact"),
-        )
-        .select(
-            "source",
-            "n_tokens",
-            "vocab",
-            F.round("ent_exact", 5)
-            .cast("decimal(28,5)")
-            .cast("double")
-            .alias("entropy"),
-        )
-    )
-
-
-ORACLE_VOCAB_ENTROPY = r"""
-WITH tok AS (
-  SELECT source,
-         unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-  FROM documents WHERE length(trim(lower(text))) > 0
-),
-counts AS (
-  SELECT source, token, count(*) AS c FROM tok GROUP BY source, token
-),
-totals AS (
-  SELECT source, SUM(c) AS n_tokens, count(*) AS vocab
-  FROM counts GROUP BY source
-),
-ent AS (
-  SELECT c.source,
-         CAST(-SUM(CAST(round(
-               (CAST(c.c AS DOUBLE) / t.n_tokens)
-                 * ln(CAST(c.c AS DOUBLE) / t.n_tokens), 9)
-             AS DECIMAL(18,9))) AS DECIMAL(28,9)) AS ent_exact
-  FROM counts c JOIN totals t USING (source)
-  GROUP BY c.source
-)
-SELECT t.source, t.n_tokens, t.vocab,
-       CAST(CAST(round(e.ent_exact, 5) AS DECIMAL(28,5)) AS DOUBLE)
-         AS entropy
-FROM totals t JOIN ent e USING (source)
-ORDER BY t.source
-"""
-
-
-def q_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil T inequality index of customer revenue per nation —
-    T = (1/n)·Σ (xᵢ/μ)·ln(xᵢ/μ), the decomposable entropy-family
-    inequality measure (Gini's additive cousin; gini_by_nation is the
-    rank-based twin). One per-customer collapse, one nation-stats
-    aggregate joined back on the nation key, and the transcendental-sum
-    discipline end-to-end: μ and xᵢ/μ are double divisions of exact
-    integers (identical IEEE trees on both engines), each term rounds
-    to decimal(18,9) before the exact sum, and the terminal value is a
-    scale-5 quantize cast to double divided by the exact n."""
-    o = load_table(spark, sf_dir, "orders")
-    cu = load_table(spark, sf_dir, "customer")
-    na = load_table(spark, sf_dir, "nation")
-    x = (
-        o.select(
-            "o_custkey",
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("o_custkey")
-        .agg(F.sum("cents").alias("x"))
-        # Theil is defined on POSITIVE incomes: a credit-note lake
-        # (negvalue driftlab) can push a customer's net revenue ≤ 0,
-        # where ln(x/µ) hard-errors in DuckDB and NULLs in Spark —
-        # exclude on both sides (the standard inequality-index
-        # convention)
-        .filter(F.col("x") > 0)
-        .join(cu.select("c_custkey", "c_nationkey"),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(na.select("n_nationkey", "n_name")),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("n_name", "x")
-    )
-    stats = x.groupBy("n_name").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("x").alias("s")
-    )
-    mu = F.col("s").cast("double") / F.col("n")
-    r = F.col("x").cast("double") / mu
-    term = F.round(r * F.log(r), 9).cast("decimal(18,9)")
-    return (
-        x.join(stats, "n_name")
-        .groupBy("n_name")
-        .agg(
-            F.max("n").alias("n_customers"),
-            F.sum(term).cast("decimal(28,9)").alias("t_exact"),
-        )
-        .select(
-            "n_name",
-            "n_customers",
-            (
-                F.round("t_exact", 5).cast("decimal(28,5)").cast("double")
-                / F.col("n_customers")
-            ).alias("theil"),
-        )
-    )
-
-
-ORACLE_THEIL_INDEX = """
-WITH x AS (
-  -- HAVING x > 0: Theil is defined on positive incomes (credit-note
-  -- lakes can net a customer below zero; ln would hard-error here)
-  SELECT n_name,
-         SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS x
-  FROM orders
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation ON c_nationkey = n_nationkey
-  GROUP BY n_name, o_custkey
-  HAVING SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) > 0
-),
-stats AS (
-  SELECT n_name, count(*) AS n, SUM(x) AS s FROM x GROUP BY n_name
-),
-terms AS (
-  SELECT x.n_name,
-         CAST(round(
-             (CAST(x.x AS DOUBLE) / (CAST(st.s AS DOUBLE) / st.n))
-               * ln(CAST(x.x AS DOUBLE) / (CAST(st.s AS DOUBLE) / st.n)),
-             9) AS DECIMAL(18,9)) AS term,
-         st.n AS n
-  FROM x JOIN stats st USING (n_name)
-)
-SELECT n_name, MAX(n) AS n_customers,
-       CAST(CAST(round(CAST(SUM(term) AS DECIMAL(28,9)), 5)
-                 AS DECIMAL(28,5)) AS DOUBLE) / MAX(n) AS theil
-FROM terms GROUP BY n_name
-"""
-
-
-def q_kl_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KL divergence of each source's token distribution from the
-    whole-corpus distribution — the domain-shift measure behind
-    DSIR-style data selection (dsir_importance scores documents; this
-    scores the SOURCES): KL(p_s ‖ p_corpus) = Σ_t p_s(t)·ln(p_s(t)/p_c(t)).
-    Every source token also lives in the corpus, so p_c > 0 by
-    construction. One tokenize pass feeds both the (source, token) and
-    corpus-token aggregates (vocab-bounded); probabilities are double
-    divisions of exact counts; terms round to decimal(18,9) before the
-    exact sum; terminal scale-5 quantize."""
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "source", F.explode(tokens_expr("text")).alias("token")
-    )
-    sc = tok.groupBy("source", "token").agg(F.count(F.lit(1)).alias("c"))
-    stot = sc.groupBy("source").agg(F.sum("c").alias("ns"))
-    cc = sc.groupBy("token").agg(F.sum("c").alias("cc"))
-    ctot = cc.agg(F.sum("cc").alias("nc"))
-    ps = F.col("c").cast("double") / F.col("ns")
-    pc = F.col("cc").cast("double") / F.col("nc")
-    term = F.round(ps * F.log(ps / pc), 9).cast("decimal(18,9)")
-    return (
-        sc.join(stot, "source")
-        .join(cc, "token")
-        .crossJoin(F.broadcast(ctot))
-        .groupBy("source")
-        .agg(
-            F.max("ns").alias("n_tokens"),
-            F.sum(term).cast("decimal(28,9)").alias("kl_exact"),
-        )
-        .select(
-            "source",
-            "n_tokens",
-            F.round("kl_exact", 5)
-            .cast("decimal(28,5)")
-            .cast("double")
-            .alias("kl"),
-        )
-    )
-
-
-ORACLE_KL_DIVERGENCE_SOURCES = r"""
-WITH tok AS (
-  SELECT source,
-         unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-  FROM documents WHERE length(trim(lower(text))) > 0
-),
-sc AS (
-  SELECT source, token, count(*) AS c FROM tok GROUP BY source, token
-),
-stot AS (SELECT source, SUM(c) AS ns FROM sc GROUP BY source),
-cc AS (SELECT token, SUM(c) AS cc FROM sc GROUP BY token),
-ctot AS (SELECT SUM(cc) AS nc FROM cc),
-terms AS (
-  SELECT sc.source,
-         CAST(round(
-             (CAST(sc.c AS DOUBLE) / stot.ns)
-               * ln((CAST(sc.c AS DOUBLE) / stot.ns)
-                    / (CAST(cc.cc AS DOUBLE) / ctot.nc)),
-             9) AS DECIMAL(18,9)) AS term,
-         stot.ns AS ns
-  FROM sc
-  JOIN stot USING (source)
-  JOIN cc USING (token), ctot
-)
-SELECT source, MAX(ns) AS n_tokens,
-       CAST(CAST(round(CAST(SUM(term) AS DECIMAL(28,9)), 5)
-                 AS DECIMAL(28,5)) AS DOUBLE) AS kl
-FROM terms GROUP BY source
-"""
-
-
-def q_order_freq_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer order-frequency distribution per market segment:
-    exact p50/p90/p99 of orders-per-customer on the (segment,
-    n_orders) VALUE GRID — the bounded-state exact-quantile pattern
-    (grid_quantiles' twin on the customer dimension; n_orders is a
-    small integer, so the grid is tiny however many customers there
-    are) — plus the exact mean and the one-time-customer rate. Two
-    shuffles: the per-customer collapse and the grid aggregate; every
-    emitted number is an integer or a double division of exact
-    integers."""
-    o = load_table(spark, sf_dir, "orders")
-    cu = load_table(spark, sf_dir, "customer")
-    freq = (
-        o.groupBy("o_custkey")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .join(cu.select("c_custkey", "c_mktsegment"),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .select("c_mktsegment", "n_orders")
-    )
-    grid = freq.groupBy("c_mktsegment", "n_orders").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    w = Window.partitionBy("c_mktsegment").orderBy("n_orders")
-    wp = Window.partitionBy("c_mktsegment")
-    cum = grid.select(
-        "c_mktsegment",
-        "n_orders",
-        "cnt",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(wp).alias("n"),
-        F.sum(F.col("n_orders") * F.col("cnt")).over(wp).alias(
-            "sum_orders"
-        ),
-    )
-    return cum.groupBy("c_mktsegment").agg(
-        F.max("n").alias("n_customers"),
-        F.min(
-            F.when(2 * F.col("cum") >= F.col("n"), F.col("n_orders"))
-        ).alias("p50_orders"),
-        F.min(
-            F.when(10 * F.col("cum") >= 9 * F.col("n"), F.col("n_orders"))
-        ).alias("p90_orders"),
-        F.min(
-            F.when(100 * F.col("cum") >= 99 * F.col("n"), F.col("n_orders"))
-        ).alias("p99_orders"),
-        (
-            F.max("sum_orders").cast("double")
-            / F.max("n").cast("double")
-        ).alias("mean_orders"),
-        (
-            F.max(
-                F.when(F.col("n_orders") == 1, F.col("cnt")).otherwise(
-                    F.lit(0)
-                )
-            ).cast("double")
-            / F.max("n").cast("double")
-        ).alias("one_time_rate"),
-    )
-
-
-ORACLE_ORDER_FREQ_QUANTILES = """
-WITH freq AS (
-  SELECT c_mktsegment, count(*) AS n_orders
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  GROUP BY c_mktsegment, o_custkey
-),
-grid AS (
-  SELECT c_mktsegment, n_orders, count(*) AS cnt
-  FROM freq GROUP BY c_mktsegment, n_orders
-),
-cum AS (
-  SELECT c_mktsegment, n_orders, cnt,
-         SUM(cnt) OVER (PARTITION BY c_mktsegment ORDER BY n_orders
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         SUM(cnt) OVER (PARTITION BY c_mktsegment) AS n,
-         SUM(n_orders * cnt) OVER (PARTITION BY c_mktsegment)
-           AS sum_orders
-  FROM grid
-)
-SELECT c_mktsegment,
-       MAX(n) AS n_customers,
-       MIN(CASE WHEN 2 * cum >= n THEN n_orders END) AS p50_orders,
-       MIN(CASE WHEN 10 * cum >= 9 * n THEN n_orders END) AS p90_orders,
-       MIN(CASE WHEN 100 * cum >= 99 * n THEN n_orders END)
-         AS p99_orders,
-       CAST(MAX(sum_orders) AS DOUBLE) / CAST(MAX(n) AS DOUBLE)
-         AS mean_orders,
-       CAST(MAX(CASE WHEN n_orders = 1 THEN cnt ELSE 0 END) AS DOUBLE)
-         / CAST(MAX(n) AS DOUBLE) AS one_time_rate
-FROM cum GROUP BY c_mktsegment
-"""
-
-
-def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newman modularity of the depth-3 label-propagation communities
-    on the co-purchase graph — the partition-quality score that closes
-    the community loop (label_propagation finds communities, this
-    grades them): Q = Σ_c (e_c/m − (d_c/2m)²) = A/m − B/(4m²) with
-    A = intra-community edges and B = Σ d_c², both EXACT integers, so
-    the per-community float sum (order-dependent, engine-splitting)
-    never exists — Q is one fixed double tree over three exact
-    operands. Bounds: B < 2⁶³ holds while Σd_c² stays under ~9e18
-    (far past the support-cut edge sets here; the DECIMAL(38,0)
-    escalation is the documented next step). Same shuffle algebra as
-    label_propagation plus one degree aggregate; 1-row output."""
-    from fink_broker_spark.ext.graph import (
-        copurchase_edges,
-        min_label_propagation,
-        symmetrize,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem")
-    # the basket self-join + support aggregate feeds FIVE consumers
-    # (LP rounds via sym, m, intra, deg, dsq) — materialize once (r9
-    # scan census; measured ~6.0→4.2 s at sf0.1)
-    pairs = _materialize(copurchase_edges(li, min_support=2))
-    sym = symmetrize(pairs)
-    labels = min_label_propagation(sym, rounds=3)
-    m = pairs.agg(F.count(F.lit(1)).alias("m_edges"))
-    lu = labels.select(F.col("node").alias("u"), F.col("lbl").alias("lu"))
-    lv = labels.select(F.col("node").alias("v"), F.col("lbl").alias("lv"))
-    intra = (
-        pairs.join(lu, "u")
-        .join(lv, "v")
-        .agg(
-            F.count_if(F.col("lu") == F.col("lv")).alias("intra_edges")
-        )
-    )
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    dsq = (
-        labels.join(deg, F.col("node") == F.col("src"))
-        .groupBy("lbl")
-        .agg(F.sum("deg").alias("d_c"))
-        .agg(F.sum(F.col("d_c") * F.col("d_c")).alias("sum_deg_sq"))
-    )
-    return (
-        m.crossJoin(intra)
-        .crossJoin(dsq)
-        .select(
-            "m_edges",
-            "intra_edges",
-            "sum_deg_sq",
-            # EMPTY GRAPH (driftlab sparse layout): m_edges = 0 must
-            # yield NULL, not a division — Spark runs ANSI-on and
-            # throws where DuckDB's double division would give NaN
-            F.when(
-                F.col("m_edges") > 0,
-                F.col("intra_edges").cast("double") / F.col("m_edges")
-                - F.col("sum_deg_sq").cast("double")
-                / (
-                    F.lit(4.0)
-                    * F.col("m_edges")
-                    * F.col("m_edges")
-                ),
-            ).alias("modularity"),
-        )
-    )
-
-
-ORACLE_GRAPH_MODULARITY = """
-WITH pairs AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-  GROUP BY a.l_partkey, b.l_partkey
-  HAVING count(*) >= 2
-),
-edges AS (
-  SELECT u AS src, v AS dst FROM pairs
-  UNION ALL SELECT v AS src, u AS dst FROM pairs
-),
-l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM edges),
-m1 AS (
-  SELECT e.dst AS node, MIN(l.lbl) AS nl
-  FROM edges e JOIN l0 l ON l.node = e.src GROUP BY 1
-),
-l1 AS (
-  SELECT l0.node, LEAST(l0.lbl, COALESCE(m1.nl, l0.lbl)) AS lbl
-  FROM l0 LEFT JOIN m1 ON m1.node = l0.node
-),
-m2 AS (
-  SELECT e.dst AS node, MIN(l.lbl) AS nl
-  FROM edges e JOIN l1 l ON l.node = e.src GROUP BY 1
-),
-l2 AS (
-  SELECT l1.node, LEAST(l1.lbl, COALESCE(m2.nl, l1.lbl)) AS lbl
-  FROM l1 LEFT JOIN m2 ON m2.node = l1.node
-),
-m3 AS (
-  SELECT e.dst AS node, MIN(l.lbl) AS nl
-  FROM edges e JOIN l2 l ON l.node = e.src GROUP BY 1
-),
-l3 AS (
-  SELECT l2.node, LEAST(l2.lbl, COALESCE(m3.nl, l2.lbl)) AS lbl
-  FROM l2 LEFT JOIN m3 ON m3.node = l2.node
-),
-m_cnt AS (SELECT count(*) AS m_edges FROM pairs),
-intra AS (
-  SELECT count(*) FILTER (WHERE a.lbl = b.lbl) AS intra_edges
-  FROM pairs p JOIN l3 a ON a.node = p.u JOIN l3 b ON b.node = p.v
-),
-deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-dsq AS (
-  SELECT SUM(d_c * d_c) AS sum_deg_sq
-  FROM (
-    SELECT l.lbl, SUM(d.deg) AS d_c
-    FROM l3 l JOIN deg d ON d.src = l.node GROUP BY l.lbl
-  )
-)
-SELECT m_edges, intra_edges, sum_deg_sq,
-       CASE WHEN m_edges > 0 THEN
-         CAST(intra_edges AS DOUBLE) / m_edges
-           - CAST(sum_deg_sq AS DOUBLE) / (4.0 * m_edges * m_edges)
-       END AS modularity
-FROM m_cnt, intra, dsq
-"""
-
-
-def q_status_consistency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-table status-consistency audit: does each order's header
-    status agree with its line statuses? Per order one aggregate
-    (n_lines / n_F / n_O), then a 3-row header-status rollup counting
-    pure-F, pure-O, mixed, and rule-violating orders (an 'F' order
-    with a non-F line, an 'O' order with a non-O line, a 'P' order
-    that is not mixed) — the referential CONTENT audit that
-    complements fk_orphans' key audit. One fact aggregate + one
-    header equi-join; exact integers only."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    per_order = li.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.count_if(F.col("l_linestatus") == "F").alias("n_f"),
-        F.count_if(F.col("l_linestatus") == "O").alias("n_o"),
-    )
-    j = o.select("o_orderkey", "o_orderstatus").join(
-        per_order, F.col("o_orderkey") == F.col("l_orderkey")
-    )
-    pure_f = F.col("n_f") == F.col("n_lines")
-    pure_o = F.col("n_o") == F.col("n_lines")
-    viol = (
-        ((F.col("o_orderstatus") == "F") & ~pure_f)
-        | ((F.col("o_orderstatus") == "O") & ~pure_o)
-        | ((F.col("o_orderstatus") == "P") & (pure_f | pure_o))
-    )
-    return j.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.count_if(pure_f).alias("n_pure_f"),
-        F.count_if(pure_o).alias("n_pure_o"),
-        F.count_if(~pure_f & ~pure_o).alias("n_mixed"),
-        F.count_if(viol).alias("n_violating"),
-    )
-
-
-ORACLE_STATUS_CONSISTENCY_AUDIT = """
-WITH per_order AS (
-  SELECT l_orderkey, count(*) AS n_lines,
-         count(*) FILTER (WHERE l_linestatus = 'F') AS n_f,
-         count(*) FILTER (WHERE l_linestatus = 'O') AS n_o
-  FROM lineitem GROUP BY l_orderkey
-)
-SELECT o_orderstatus,
-       count(*) AS n_orders,
-       count(*) FILTER (WHERE n_f = n_lines) AS n_pure_f,
-       count(*) FILTER (WHERE n_o = n_lines) AS n_pure_o,
-       count(*) FILTER (WHERE n_f <> n_lines AND n_o <> n_lines)
-         AS n_mixed,
-       count(*) FILTER (WHERE
-           (o_orderstatus = 'F' AND n_f <> n_lines)
-        OR (o_orderstatus = 'O' AND n_o <> n_lines)
-        OR (o_orderstatus = 'P' AND (n_f = n_lines OR n_o = n_lines)))
-         AS n_violating
-FROM orders JOIN per_order ON o_orderkey = l_orderkey
-GROUP BY o_orderstatus
-"""
-
-
-def q_trending_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Week-over-week trending event types: each (type, epoch-week)
-    count is matched to the SAME type's previous week by a (type,
-    week−1) equi-join — never a lag window over the whole fact table —
-    and the top 20 risers rank by the exact integer delta with a full
-    (type, week) tiebreak. The growth ratio is one double division of
-    exact counts. Two shuffles: the (type, week) collapse and the
-    tiny grid self-join."""
-    ev = load_table(spark, sf_dir, "events")
-    wk = (
-        ev.select(
-            "event_type",
-            F.floor(
-                F.unix_micros(F.col("ts")) / F.lit(604_800_000_000)
-            )
-            .cast("long")
-            .alias("week"),
-        )
-        .groupBy("event_type", "week")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    prev = wk.select(
-        "event_type",
-        (F.col("week") + 1).alias("week"),
-        F.col("c").alias("prev_c"),
-    )
-    return (
-        wk.join(prev, ["event_type", "week"])
-        .select(
-            "event_type",
-            "week",
-            "c",
-            "prev_c",
-            (F.col("c") - F.col("prev_c")).alias("delta"),
-            (
-                F.col("c").cast("double") / F.col("prev_c").cast("double")
-            ).alias("ratio"),
-        )
-        .orderBy(F.col("delta").desc(), "event_type", "week")
-        .limit(20)
-    )
-
-
-ORACLE_TRENDING_EVENTS = """
-WITH wk AS (
-  SELECT event_type,
-         CAST(FLOOR(epoch_us(ts) / 604800000000) AS BIGINT) AS week,
-         count(*) AS c
-  FROM events GROUP BY 1, 2
-)
-SELECT a.event_type, a.week, a.c, b.c AS prev_c,
-       a.c - b.c AS delta,
-       CAST(a.c AS DOUBLE) / CAST(b.c AS DOUBLE) AS ratio
-FROM wk a JOIN wk b
-  ON a.event_type = b.event_type AND a.week = b.week + 1
-ORDER BY delta DESC, a.event_type, a.week
-LIMIT 20
-"""
-
-
-def q_centroid_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise cosine similarity between per-label embedding
-    centroids — the inter-class geometry check run after clustering
-    or labeling (how separated are the classes?). Exactness: float
-    components integerize to nano-units with the identical-IEEE
-    floor(x·1e9+0.5) tree (label_centroids' rule), centroid means
-    integerize to MICRO-units with a pmod-based floor division
-    (Spark `div` truncates toward zero while DuckDB `//` floors —
-    the sign-split trap; (s − pmod(s, d)) div d floors on BOTH
-    engines), so dot products and norms are exact BIGINTs bounded by
-    dim × (5e5)² ≈ 2⁴⁴ — safely inside every double cast. The cosine
-    is one fixed sqrt tree over those exact operands. One (label,
-    pos) shuffle + a pos-keyed join over |labels|·dim rows.
-
-    Domain: well-formed (finite) vectors only, mirrored in the oracle
-    — a NaN/Inf element hard-errors the ANSI nano-unit integerization
-    on both engines (nanemb driftlab layout, r10)."""
-    from fink_broker_spark.ext.ann import well_formed_vectors
-
-    emb = well_formed_vectors(
-        load_table(spark, sf_dir, "embeddings"), "embedding"
-    )
-    t = emb.select(
-        "label", F.posexplode("embedding").alias("pos", "val")
-    ).select(
-        "label",
-        "pos",
-        F.floor(
-            F.col("val").cast("double") * F.lit(1_000_000_000.0)
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("v_nano"),
-    )
-    cent = (
-        t.groupBy("label", "pos")
-        .agg(F.sum("v_nano").alias("s"), F.count(F.lit(1)).alias("c"))
-        .select(
-            "label",
-            "pos",
-            F.expr(
-                "(s - pmod(s, c * 1000)) div (c * 1000)"
-            ).alias("m"),
-        )
-    )
-    norms = cent.groupBy("label").agg(
-        F.sum(F.col("m") * F.col("m")).alias("norm_sq")
-    )
-    a = cent.select(
-        F.col("label").alias("label_a"), "pos", F.col("m").alias("ma")
-    )
-    b = cent.select(
-        F.col("label").alias("label_b"), "pos", F.col("m").alias("mb")
-    )
-    dots = (
-        a.join(b, "pos")
-        .filter(F.col("label_a") < F.col("label_b"))
-        .groupBy("label_a", "label_b")
-        .agg(F.sum(F.col("ma") * F.col("mb")).alias("dot"))
-    )
-    na = norms.select(
-        F.col("label").alias("label_a"), F.col("norm_sq").alias("na")
-    )
-    nb = norms.select(
-        F.col("label").alias("label_b"), F.col("norm_sq").alias("nb")
-    )
-    return (
-        dots.join(F.broadcast(na), "label_a")
-        .join(F.broadcast(nb), "label_b")
-        .select(
-            "label_a",
-            "label_b",
-            "dot",
-            "na",
-            "nb",
-            (
-                F.col("dot").cast("double")
-                / (
-                    F.sqrt(F.col("na").cast("double"))
-                    * F.sqrt(F.col("nb").cast("double"))
-                )
-            ).alias("cosine"),
-        )
-    )
-
-
-ORACLE_CENTROID_DISTANCES = """
-WITH wf AS (
-  -- well-formed domain, mirroring the engine's well_formed_vectors:
-  -- NaN/Inf elements hard-error the nano-unit integerization cast on
-  -- both engines (nanemb driftlab layout, r10)
-  SELECT label, embedding
-  FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(list_filter(embedding,
-                        x -> x IS NULL OR NOT isfinite(x))) = 0
-),
-t AS (
-  SELECT label, CAST(i AS INTEGER) AS pos,
-         CAST(FLOOR(CAST(embedding[i + 1] AS DOUBLE) * 1000000000.0
-                    + 0.5) AS BIGINT) AS v_nano
-  FROM wf, range(0, 4096) r(i)
-  WHERE i < len(embedding)
-),
-cent AS (
-  SELECT label, pos,
-         (SUM(v_nano) - ((SUM(v_nano) % (count(*) * 1000))
-                         + (count(*) * 1000)) % (count(*) * 1000))
-           // (count(*) * 1000) AS m
-  FROM t GROUP BY label, pos
-),
-norms AS (
-  SELECT label, SUM(m * m) AS norm_sq FROM cent GROUP BY label
-),
-dots AS (
-  SELECT a.label AS label_a, b.label AS label_b, SUM(a.m * b.m) AS dot
-  FROM cent a JOIN cent b ON a.pos = b.pos AND a.label < b.label
-  GROUP BY a.label, b.label
-)
-SELECT d.label_a, d.label_b, d.dot,
-       na.norm_sq AS na, nb.norm_sq AS nb,
-       CAST(d.dot AS DOUBLE)
-         / (sqrt(CAST(na.norm_sq AS DOUBLE))
-            * sqrt(CAST(nb.norm_sq AS DOUBLE))) AS cosine
-FROM dots d
-JOIN norms na ON na.label = d.label_a
-JOIN norms nb ON nb.label = d.label_b
-"""
-
-
-def q_revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Year-over-year revenue bridge (waterfall decomposition): the
-    change between the two most recent data-derived years split into
-    new / churned / expanded / contracted / flat customer classes,
-    each contributing an exact signed cents delta — the growth
-    accounting identity at REVENUE grain (growth_accounting counts
-    users; this reconciles money: Σ class deltas ≡ total Δ). One
-    (customer, year) collapse, a full-outer self-match on the
-    customer key for the two years, exact integer deltas."""
-    o = load_table(spark, sf_dir, "orders")
-    per_cy = (
-        o.select(
-            "o_custkey",
-            F.year("o_orderdate").alias("yr"),
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("o_custkey", "yr")
-        .agg(F.sum("cents").alias("rev"))
-    )
-    ymax = per_cy.agg(F.max("yr").alias("y1"))
-    both = per_cy.crossJoin(F.broadcast(ymax)).filter(
-        (F.col("yr") == F.col("y1")) | (F.col("yr") == F.col("y1") - 1)
-    )
-    cur = both.filter(F.col("yr") == F.col("y1")).select(
-        "o_custkey", F.col("rev").alias("rev1")
-    )
-    prv = both.filter(F.col("yr") == F.col("y1") - 1).select(
-        F.col("o_custkey").alias("pk"), F.col("rev").alias("rev0")
-    )
-    m = cur.join(prv, F.col("o_custkey") == F.col("pk"), "full_outer")
-    r1 = F.coalesce("rev1", F.lit(0))
-    r0 = F.coalesce("rev0", F.lit(0))
-    cls = (
-        F.when(F.col("rev0").isNull(), F.lit("new"))
-        .when(F.col("rev1").isNull(), F.lit("churned"))
-        .when(r1 > r0, F.lit("expanded"))
-        .when(r1 < r0, F.lit("contracted"))
-        .otherwise(F.lit("flat"))
-    )
-    return m.groupBy(cls.alias("bridge_class")).agg(
-        F.count(F.lit(1)).alias("n_customers"),
-        F.sum(r1 - r0).alias("delta_cents"),
-        F.sum(r0).alias("base_cents"),
-        F.sum(r1).alias("cur_cents"),
-    )
-
-
-ORACLE_REVENUE_BRIDGE = """
-WITH per_cy AS (
-  SELECT o_custkey, year(o_orderdate) AS yr,
-         SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS rev
-  FROM orders GROUP BY 1, 2
-),
-ymax AS (SELECT MAX(yr) AS y1 FROM per_cy),
-cur AS (
-  SELECT o_custkey, rev AS rev1 FROM per_cy, ymax WHERE yr = y1
-),
-prv AS (
-  SELECT o_custkey, rev AS rev0 FROM per_cy, ymax WHERE yr = y1 - 1
-),
-m AS (
-  SELECT COALESCE(rev1, 0) AS r1, COALESCE(rev0, 0) AS r0,
-         CASE WHEN rev0 IS NULL THEN 'new'
-              WHEN rev1 IS NULL THEN 'churned'
-              WHEN COALESCE(rev1, 0) > COALESCE(rev0, 0) THEN 'expanded'
-              WHEN COALESCE(rev1, 0) < COALESCE(rev0, 0)
-                THEN 'contracted'
-              ELSE 'flat' END AS bridge_class
-  FROM cur FULL OUTER JOIN prv USING (o_custkey)
-)
-SELECT bridge_class, count(*) AS n_customers,
-       SUM(r1 - r0) AS delta_cents,
-       SUM(r0) AS base_cents,
-       SUM(r1) AS cur_cents
-FROM m GROUP BY bridge_class
-"""
-
-
-def q_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-to-convert distribution: per user, the gap between the
-    FIRST view and the first purchase AT OR AFTER it, reduced to whole
-    days and fed through the bounded value-grid exact-quantile pattern
-    (p50/p90 + exact mean) — funnel_conversion counts who converts,
-    this measures how long conversion takes. Two conditional-min
-    aggregates in ONE per-user pass (no self-join); the day reduction
-    is an integral div of a nonneg µs gap (floor ≡ trunc — the
-    negative-operand div/floor split cannot arise). 1-row output."""
-    ev = load_table(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts"))
-    per_user = ev.groupBy("user_id").agg(
-        F.min(
-            F.when(F.col("event_type") == "view", us)
-        ).alias("first_view"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", us)
-        ).alias("first_purchase"),
-    )
-    lat = (
-        per_user.filter(
-            F.col("first_view").isNotNull()
-            & F.col("first_purchase").isNotNull()
-            & (F.col("first_purchase") >= F.col("first_view"))
-        )
-        .select(
-            F.expr(
-                "(first_purchase - first_view) div 86400000000"
-            ).alias("days")
-        )
-    )
-    grid = lat.groupBy("days").agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.orderBy("days")
-    cum = grid.select(
-        "days",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(Window.partitionBy()).alias("n"),
-        F.sum(F.col("days") * F.col("cnt"))
-        .over(Window.partitionBy())
-        .alias("sum_days"),
-    )
-    return cum.agg(
-        F.max("n").alias("n_converted"),
-        F.min(
-            F.when(2 * F.col("cum") >= F.col("n"), F.col("days"))
-        ).alias("p50_days"),
-        F.min(
-            F.when(10 * F.col("cum") >= 9 * F.col("n"), F.col("days"))
-        ).alias("p90_days"),
-        (
-            F.max("sum_days").cast("double") / F.max("n").cast("double")
-        ).alias("mean_days"),
-    )
-
-
-ORACLE_CONVERSION_LATENCY = """
-WITH per_user AS (
-  SELECT user_id,
-         MIN(CASE WHEN event_type = 'view' THEN epoch_us(ts) END)
-           AS first_view,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END)
-           AS first_purchase
-  FROM events GROUP BY user_id
-),
-lat AS (
-  SELECT (first_purchase - first_view) // 86400000000 AS days
-  FROM per_user
-  WHERE first_view IS NOT NULL AND first_purchase IS NOT NULL
-    AND first_purchase >= first_view
-),
-grid AS (SELECT days, count(*) AS cnt FROM lat GROUP BY days),
-cum AS (
-  SELECT days,
-         SUM(cnt) OVER (ORDER BY days
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         SUM(cnt) OVER () AS n,
-         SUM(days * cnt) OVER () AS sum_days
-  FROM grid
-)
-SELECT MAX(n) AS n_converted,
-       MIN(CASE WHEN 2 * cum >= n THEN days END) AS p50_days,
-       MIN(CASE WHEN 10 * cum >= 9 * n THEN days END) AS p90_days,
-       CAST(MAX(sum_days) AS DOUBLE) / CAST(MAX(n) AS DOUBLE)
-         AS mean_days
-FROM cum
-"""
-
-
-def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort lifetime-value curve: customers grouped by first-order
-    QUARTER, cumulative revenue per quarter offset — the
-    revenue-grain twin of cohort_retention (who stays vs what they
-    are worth). Quarter keys are exact integers (4·year + (month−1)
-    div 3 — calendar-derived, sub-µs-jitter-immune); the cohort
-    assignment is a window MIN (no self-join back to an aggregate);
-    the cumulative sum runs per cohort over the bounded offset axis.
-    LTV-per-customer is one double division of exact cents by the
-    cohort size."""
-    o = load_table(spark, sf_dir, "orders")
-    base = o.select(
-        "o_custkey",
-        F.expr(
-            "4 * year(o_orderdate) + (month(o_orderdate) - 1) div 3"
-        ).alias("qk"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    wc = Window.partitionBy("o_custkey")
-    withc = base.select(
-        "o_custkey",
-        "cents",
-        "qk",
-        F.min("qk").over(wc).alias("cohort_q"),
-    )
-    cell = (
-        withc.select(
-            "o_custkey",
-            "cents",
-            "cohort_q",
-            (F.col("qk") - F.col("cohort_q")).alias("offset"),
-        )
-        .groupBy("cohort_q", "offset")
-        .agg(
-            F.sum("cents").alias("rev_cents"),
-            F.count_distinct("o_custkey").alias("n_active"),
-        )
-    )
-    sizes = cell.filter(F.col("offset") == 0).select(
-        "cohort_q", F.col("n_active").alias("cohort_size")
-    )
-    wo = Window.partitionBy("cohort_q").orderBy("offset")
-    return (
-        cell.join(sizes, "cohort_q")
-        .select(
-            "cohort_q",
-            "offset",
-            "n_active",
-            "cohort_size",
-            F.sum("rev_cents").over(wo).alias("cum_cents"),
-        )
-        .select(
-            "cohort_q",
-            "offset",
-            "n_active",
-            "cohort_size",
-            "cum_cents",
-            (
-                F.col("cum_cents").cast("double")
-                / F.col("cohort_size").cast("double")
-            ).alias("ltv_cents"),
-        )
-    )
-
-
-ORACLE_COHORT_LTV = """
-WITH base AS (
-  SELECT o_custkey,
-         4 * year(o_orderdate)
-           + (month(o_orderdate) - 1) // 3 AS qk,
-         CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-  FROM orders
-),
-withc AS (
-  SELECT o_custkey, cents, qk,
-         MIN(qk) OVER (PARTITION BY o_custkey) AS cohort_q
-  FROM base
-),
-cell AS (
-  SELECT cohort_q, qk - cohort_q AS "offset",
-         SUM(cents) AS rev_cents,
-         count(DISTINCT o_custkey) AS n_active
-  FROM withc GROUP BY 1, 2
-),
-sizes AS (
-  SELECT cohort_q, n_active AS cohort_size FROM cell WHERE "offset" = 0
-),
-cum AS (
-  SELECT c.cohort_q, c."offset", c.n_active, s.cohort_size,
-         SUM(c.rev_cents) OVER (PARTITION BY c.cohort_q
-             ORDER BY c."offset"
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS cum_cents
-  FROM cell c JOIN sizes s USING (cohort_q)
-)
-SELECT cohort_q, "offset", n_active, cohort_size, cum_cents,
-       CAST(cum_cents AS DOUBLE) / CAST(cohort_size AS DOUBLE)
-         AS ltv_cents
-FROM cum
-"""
-
-
-def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree assortativity of the co-purchase graph — do hubs attach
-    to hubs? Pearson correlation of endpoint degrees over the
-    symmetrized edge list, computed from FIVE exact integer moments
-    (M, Σdu, Σdu·dv, Σdu²; Σdv = Σdu and Σdv² = Σdu² by symmetry):
-    r = (M·Sxy − Sx²)/(M·Sxx − Sx²), one double division of two
-    exactly-computed BIGINTs. Wide-int watermark: M·Sxy peaks ~2⁵⁴ at
-    sf0.1-scale graphs — inside the exact-BIGINT zone; the centered
-    two-pass (corr_matrix's escalation) is the documented next step if
-    edge counts grow ~2⁹ more. One degree aggregate + one edge join;
-    1-row output."""
-    from fink_broker_spark.ext.graph import copurchase_edges, symmetrize
-
-    li = load_table(spark, sf_dir, "lineitem")
-    # degree aggregate + the two endpoint joins re-derive the edge
-    # relation (12 static lineitem scans, r9 census) — materialize once
-    sym = _materialize(
-        symmetrize(copurchase_edges(li, min_support=2))
-    )
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    du = deg.select(F.col("src").alias("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("src").alias("v"), F.col("deg").alias("dv"))
-    pairs = (
-        sym.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .join(du, "u")
-        .join(dv, "v")
-    )
-    mom = pairs.agg(
-        F.count(F.lit(1)).alias("m_directed"),
-        F.sum("du").alias("sx"),
-        F.sum(F.col("du") * F.col("dv")).alias("sxy"),
-        F.sum(F.col("du") * F.col("du")).alias("sxx"),
-    )
-    return mom.select(
-        "m_directed",
-        "sx",
-        "sxy",
-        "sxx",
-        (
-            (
-                F.col("m_directed") * F.col("sxy")
-                - F.col("sx") * F.col("sx")
-            ).cast("double")
-            / (
-                F.col("m_directed") * F.col("sxx")
-                - F.col("sx") * F.col("sx")
-            ).cast("double")
-        ).alias("assortativity"),
-    )
-
-
-ORACLE_DEGREE_ASSORTATIVITY = """
-WITH p0 AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-  GROUP BY a.l_partkey, b.l_partkey
-  HAVING count(*) >= 2
-),
-edges AS (
-  SELECT u AS src, v AS dst FROM p0
-  UNION ALL SELECT v AS src, u AS dst FROM p0
-),
-deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-pairs AS (
-  SELECT a.deg AS du, b.deg AS dv
-  FROM edges e JOIN deg a ON a.src = e.src JOIN deg b ON b.src = e.dst
-),
-mom AS (
-  SELECT count(*) AS m_directed, SUM(du) AS sx,
-         SUM(du * dv) AS sxy, SUM(du * du) AS sxx
-  FROM pairs
-)
-SELECT m_directed, sx, sxy, sxx,
-       CAST(m_directed * sxy - sx * sx AS DOUBLE)
-         / CAST(m_directed * sxx - sx * sx AS DOUBLE)
-         AS assortativity
-FROM mom
-"""
-
-
-def q_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-5 distinctive tokens per source by lift (class-based
-    keyword extraction, the c-TF-IDF idea without the transcendental):
-    lift = (tf_in_source/source_total) / (tf_corpus/corpus_total),
-    monotone in PMI so the log never needs to exist near the hash
-    (collocation_lift's rule at class granularity). One tokenize pass
-    feeds both vocab-bounded aggregates; a per-(source, token)
-    term-frequency cut (c ≥ 5) kills rare-token noise; the per-source top-5 is a row_number with
-    (lift exact-operand double DESC, token) tiebreak — but the RANK
-    key is the exact integer cross product c·nc vs cc·ns, so ties
-    resolve identically on both engines."""
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "source", F.explode(tokens_expr("text")).alias("token")
-    )
-    sc = tok.groupBy("source", "token").agg(F.count(F.lit(1)).alias("c"))
-    stot = sc.groupBy("source").agg(F.sum("c").alias("ns"))
-    cc = sc.groupBy("token").agg(F.sum("c").alias("cc"))
-    ctot = cc.agg(F.sum("cc").alias("nc"))
-    scored = (
-        sc.filter(F.col("c") >= 5)
-        .join(stot, "source")
-        .join(cc, "token")
-        .crossJoin(F.broadcast(ctot))
-        .select(
-            "source",
-            "token",
-            "c",
-            # exact integer rank key: lift = (c/ns)/(cc/nc) has the
-            # same order as c*nc vs cc*ns (all positive); c*nc peaks
-            # ~1e6*1e7 = 1e13 << 2^63
-            (F.col("c") * F.col("nc")).alias("num"),
-            (F.col("cc") * F.col("ns")).alias("den"),
-        )
-    )
-    w = Window.partitionBy("source").orderBy(
-        # exact rational comparison via the cross product is a join;
-        # the double division of exact sub-2^53 ints is correctly
-        # rounded and order-preserving at this magnitude spread
-        (F.col("num").cast("double") / F.col("den").cast("double")).desc(),
-        "token",
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select(
-            "source",
-            "token",
-            "c",
-            (
-                F.col("num").cast("double") / F.col("den").cast("double")
-            ).alias("lift"),
-            "rk",
-        )
-    )
-
-
-ORACLE_DISTINCTIVE_TERMS = r"""
-WITH tok AS (
-  SELECT source,
-         unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-  FROM documents WHERE length(trim(lower(text))) > 0
-),
-sc AS (
-  SELECT source, token, count(*) AS c FROM tok GROUP BY source, token
-),
-stot AS (SELECT source, SUM(c) AS ns FROM sc GROUP BY source),
-cc AS (SELECT token, SUM(c) AS cc FROM sc GROUP BY token),
-ctot AS (SELECT SUM(cc) AS nc FROM cc),
-scored AS (
-  SELECT sc.source, sc.token, sc.c,
-         sc.c * ctot.nc AS num, cc.cc * stot.ns AS den
-  FROM sc
-  JOIN stot USING (source)
-  JOIN cc USING (token), ctot
-  WHERE sc.c >= 5
-),
-ranked AS (
-  SELECT source, token, c,
-         CAST(num AS DOUBLE) / CAST(den AS DOUBLE) AS lift,
-         ROW_NUMBER() OVER (PARTITION BY source
-             ORDER BY CAST(num AS DOUBLE) / CAST(den AS DOUBLE) DESC,
-                      token) AS rk
-  FROM scored
-)
-SELECT source, token, c, lift, rk FROM ranked WHERE rk <= 5
-"""
-
-
-def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded k-core peeling (k = 3, three synchronous rounds) on the
-    co-purchase graph: each round drops every node whose CURRENT
-    degree is below k, then recomputes degrees on the induced
-    subgraph — the standard dense-subgraph extractor (the peel is
-    monotone, so a fixed unroll oracles exactly; full peeling is the
-    checkpointed-loop variant of the same step). Emits the surviving
-    core's summary: node count, edge count, min/max degree. Per round
-    ONE degree aggregate + TWO semi-join filters on the edge list —
-    the LP shuffle algebra with a shrinking frontier."""
-    from fink_broker_spark.ext.graph import copurchase_edges, symmetrize
-
-    li = load_table(spark, sf_dir, "lineitem")
-    # each peel round references the previous edge set THREE times
-    # (degree aggregate + two semi-joins) — uncut lineage re-derives
-    # round i−1 3^i times (108 static lineitem scans, r9 census);
-    # the per-round materialization is the shrinking induced subgraph
-    sym = _materialize(
-        symmetrize(copurchase_edges(li, min_support=2))
-    )
-    edges = sym
-    for _ in range(3):
-        keep = (
-            edges.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= 3)
-            .select("src")
-        )
-        edges = _materialize(
-            edges.join(keep, "src").join(
-                keep.select(F.col("src").alias("dst")), "dst"
-            )
-        )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    return deg.agg(
-        F.count(F.lit(1)).alias("core_nodes"),
-        # sum(deg) is even (symmetrized); integral div, never a
-        # double division (Spark double→int casts truncate where
-        # DuckDB's round)
-        F.expr("sum(deg) div 2").alias("core_edges"),
-        F.min("deg").alias("min_degree"),
-        F.max("deg").alias("max_degree"),
-    )
-
-
-ORACLE_KCORE_PEEL = """
-WITH p0 AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-  GROUP BY a.l_partkey, b.l_partkey
-  HAVING count(*) >= 2
-),
-e0 AS (
-  SELECT u AS src, v AS dst FROM p0
-  UNION ALL SELECT v AS src, u AS dst FROM p0
-),
-k1 AS (SELECT src FROM e0 GROUP BY src HAVING count(*) >= 3),
-e1 AS (
-  SELECT e.src, e.dst FROM e0 e
-  JOIN k1 a ON a.src = e.src JOIN k1 b ON b.src = e.dst
-),
-k2 AS (SELECT src FROM e1 GROUP BY src HAVING count(*) >= 3),
-e2 AS (
-  SELECT e.src, e.dst FROM e1 e
-  JOIN k2 a ON a.src = e.src JOIN k2 b ON b.src = e.dst
-),
-k3 AS (SELECT src FROM e2 GROUP BY src HAVING count(*) >= 3),
-e3 AS (
-  SELECT e.src, e.dst FROM e2 e
-  JOIN k3 a ON a.src = e.src JOIN k3 b ON b.src = e.dst
-),
-deg AS (SELECT src, count(*) AS deg FROM e3 GROUP BY src)
-SELECT count(*) AS core_nodes,
-       SUM(deg) // 2 AS core_edges,
-       MIN(deg) AS min_degree,
-       MAX(deg) AS max_degree
-FROM deg
-"""
-
-
-def q_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Laspeyres price index between the two most recent data-derived
-    years: Σ(p₁·q₀)/Σ(p₀·q₀) over the parts traded in BOTH years —
-    base-year quantity weights, so the index isolates price movement
-    from volume mix (the yoy_growth companion that separates the
-    'why'). Per (part, year): exact cents and quantity sums; each
-    p₁·q₀ term is the scale-4 fixed-point INTEGRAL floor division
-    (c₁·q₀·10⁴) div q₁ — exact BIGINT algebra, because rounding the
-    division-derived double at scale 4 split the engines on the
-    boundary driftlab layout (caught pre-commit); the index is a
-    terminal double ratio of exact sums. One fact collapse + a
-    part-keyed year self-join."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    py = (
-        li.join(
-            o.select("o_orderkey", F.year("o_orderdate").alias("yr")),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .select(
-            "l_partkey",
-            "yr",
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-            # floor(x + 0.5), never cast("long"): Spark's double→long
-            # cast truncates while DuckDB's rounds — adversarial .5
-            # quantities split them (boundary driftlab, caught here)
-            F.floor(F.col("l_quantity") + F.lit(0.5))
-            .cast("long")
-            .alias("qty"),
-        )
-        .groupBy("l_partkey", "yr")
-        .agg(F.sum("cents").alias("cents"), F.sum("qty").alias("qty"))
-    )
-    ymax = py.agg(F.max("yr").alias("y1"))
-    cur = py.crossJoin(F.broadcast(ymax)).filter(
-        F.col("yr") == F.col("y1")
-    ).select("l_partkey", F.col("cents").alias("c1"),
-             F.col("qty").alias("q1"), "y1")
-    base = py.crossJoin(F.broadcast(ymax)).filter(
-        F.col("yr") == F.col("y1") - 1
-    ).select(F.col("l_partkey").alias("pk"),
-             F.col("cents").alias("c0"), F.col("qty").alias("q0"))
-    j = cur.join(base, F.col("l_partkey") == F.col("pk"))
-    # the weighted relative collapses exactly: c0·rel ≡ c1·q0/q1.
-    # NEVER round that division-derived double (the boundary driftlab
-    # layout manufactures scale-4 halves and split the engines —
-    # caught before commit): scale to fixed-point FIRST and take the
-    # integral floor division, which is exact BIGINT algebra on both
-    # engines (all operands positive, so div ≡ // ≡ floor).
-    # c1·q0·10⁴ < 2⁵⁹ per part-year; the term sum stays < 2⁶³ through
-    # ~sf1000.
-    term = F.expr("(c1 * q0 * 10000) div q1")
-    return j.groupBy("y1").agg(
-        F.count(F.lit(1)).alias("n_parts"),
-        F.sum("c0").alias("base_cents"),
-        (
-            F.sum(term).cast("double")
-            / F.lit(10000.0)
-            / F.sum("c0").cast("double")
-        ).alias("laspeyres_index"),
-    )
-
-
-ORACLE_PRICE_INDEX = """
-WITH py AS (
-  SELECT l_partkey, year(o_orderdate) AS yr,
-         SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT))
-           AS cents,
-         SUM(CAST(FLOOR(l_quantity + 0.5) AS BIGINT)) AS qty
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  GROUP BY 1, 2
-),
-ymax AS (SELECT MAX(yr) AS y1 FROM py),
-cur AS (
-  SELECT l_partkey, cents AS c1, qty AS q1, y1
-  FROM py, ymax WHERE yr = y1
-),
-base AS (
-  SELECT l_partkey, cents AS c0, qty AS q0
-  FROM py, ymax WHERE yr = y1 - 1
-),
-j AS (
-  SELECT y1, c0,
-         (c1 * q0 * 10000) // q1 AS term
-  FROM cur JOIN base USING (l_partkey)
-)
-SELECT y1, count(*) AS n_parts, SUM(c0) AS base_cents,
-       CAST(SUM(term) AS DOUBLE) / 10000.0
-         / CAST(SUM(c0) AS DOUBLE) AS laspeyres_index
-FROM j GROUP BY y1
-"""
-
-
-def q_quartile_skewness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bowley (quartile) skewness of order-value distributions per
-    priority: (Q₁ + Q₃ − 2·Q₂)/(Q₃ − Q₁) — the robust shape statistic
-    that pairs with the grid-quantile family (outlier-immune where
-    moment skewness is not). Order values reduce to whole dollars so
-    the value grid stays bounded; quartiles are conditional MINs under
-    pure-integer thresholds; the skewness is one fixed double tree
-    over three exact integers."""
-    # NULL totalprice excluded: no grid position (nullmeasure)
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_totalprice").isNotNull()
-    )
-    vals = o.select(
-        "o_orderpriority",
-        F.expr(
-            "CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) div 100"
-        ).alias("dollars"),
-    )
-    grid = vals.groupBy("o_orderpriority", "dollars").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    w = Window.partitionBy("o_orderpriority").orderBy("dollars")
-    wp = Window.partitionBy("o_orderpriority")
-    cum = grid.select(
-        "o_orderpriority",
-        "dollars",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(wp).alias("n"),
-    )
-    q = cum.groupBy("o_orderpriority").agg(
-        F.max("n").alias("n_orders"),
-        F.min(
-            F.when(4 * F.col("cum") >= F.col("n"), F.col("dollars"))
-        ).alias("q1"),
-        F.min(
-            F.when(2 * F.col("cum") >= F.col("n"), F.col("dollars"))
-        ).alias("q2"),
-        F.min(
-            F.when(4 * F.col("cum") >= 3 * F.col("n"), F.col("dollars"))
-        ).alias("q3"),
-    )
-    return q.select(
-        "o_orderpriority",
-        "n_orders",
-        "q1",
-        "q2",
-        "q3",
-        # degenerate IQR guard: q3 == q1 would divide by zero (an
-        # ERROR under Spark's ANSI mode, NaN in DuckDB — an engine
-        # split either way); emit NULL on both sides instead
-        F.when(
-            F.col("q3") != F.col("q1"),
-            (F.col("q1") + F.col("q3") - 2 * F.col("q2")).cast("double")
-            / (F.col("q3") - F.col("q1")).cast("double"),
-        ).alias("bowley_skew"),
-    )
-
-
-ORACLE_QUARTILE_SKEWNESS = """
-WITH vals AS (
-  SELECT o_orderpriority,
-         CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) // 100
-           AS dollars
-  FROM orders WHERE o_totalprice IS NOT NULL
-),
-grid AS (
-  SELECT o_orderpriority, dollars, count(*) AS cnt
-  FROM vals GROUP BY 1, 2
-),
-cum AS (
-  SELECT o_orderpriority, dollars,
-         SUM(cnt) OVER (PARTITION BY o_orderpriority ORDER BY dollars
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         SUM(cnt) OVER (PARTITION BY o_orderpriority) AS n
-  FROM grid
-),
-q AS (
-  SELECT o_orderpriority, MAX(n) AS n_orders,
-         MIN(CASE WHEN 4 * cum >= n THEN dollars END) AS q1,
-         MIN(CASE WHEN 2 * cum >= n THEN dollars END) AS q2,
-         MIN(CASE WHEN 4 * cum >= 3 * n THEN dollars END) AS q3
-  FROM cum GROUP BY o_orderpriority
-)
-SELECT o_orderpriority, n_orders, q1, q2, q3,
-       CASE WHEN q3 <> q1
-            THEN CAST(q1 + q3 - 2 * q2 AS DOUBLE)
-                   / CAST(q3 - q1 AS DOUBLE) END AS bowley_skew
-FROM q
-"""
-
-
-def q_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-resolution pyramid of the daily net-revenue series:
-    levels 1/2/4/8 days, each bucket an EXACT integer sum with its
-    member-day count and a double mean — the Haar-style coarsening a
-    light-curve (or any time-series) store keeps per zoom level, as
-    one unioned aggregate over the tiny day spine (the multires_index
-    idea on the TIME axis instead of the sky). Bucket keys are
-    integral div of the epoch-day (all positive: div ≡ floor on both
-    engines)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    daily = (
-        li.select(
-            _day("l_shipdate").alias("d"),
-            F.when(
-                F.col("l_returnflag") == "R",
-                -F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-                .cast("long"),
-            )
-            .otherwise(
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-                .cast("long")
-            )
-            .alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("net"))
-    )
-    levels = None
-    for lvl in (1, 2, 4, 8):
-        cur = daily.groupBy(
-            F.lit(lvl).alias("level"),
-            F.expr(f"d div {lvl}").alias("bucket"),
-        ).agg(
-            F.sum("net").alias("net_cents"),
-            F.count(F.lit(1)).alias("n_days"),
-        )
-        levels = cur if levels is None else levels.unionAll(cur)
-    return levels.select(
-        "level",
-        "bucket",
-        "net_cents",
-        "n_days",
-        (
-            F.col("net_cents").cast("double")
-            / F.col("n_days").cast("double")
-        ).alias("mean_daily_cents"),
-    )
-
-
-ORACLE_MULTIRES_ROLLUP = """
-WITH daily AS (
-  SELECT CAST(FLOOR(epoch_us(l_shipdate) / 86400000000) AS BIGINT) AS d,
-         SUM(CASE WHEN l_returnflag = 'R'
-                  THEN -CAST(FLOOR(l_extendedprice * 100 + 0.5)
-                             AS BIGINT)
-                  ELSE CAST(FLOOR(l_extendedprice * 100 + 0.5)
-                            AS BIGINT) END) AS net
-  FROM lineitem GROUP BY 1
-),
-lv AS (SELECT lvl FROM (VALUES (1), (2), (4), (8)) t(lvl)),
-roll AS (
-  SELECT lv.lvl AS level, d // lv.lvl AS bucket,
-         SUM(net) AS net_cents, count(*) AS n_days
-  FROM daily, lv GROUP BY 1, 2
-)
-SELECT level, bucket, net_cents, n_days,
-       CAST(net_cents AS DOUBLE) / CAST(n_days AS DOUBLE)
-         AS mean_daily_cents
-FROM roll
-"""
-
-
-def q_grid_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3×3 stencil smoothing over the 10° sky grid — the
-    convolution/neighbor-average operator class (density smoothing,
-    matched-filter prep) expressed relationally: each occupied cell
-    explodes into its ≤9 neighbor TARGETS (RA wraps mod 36; dec rows
-    span 0..18 — the +90 pole edge is its own row — and clamp at both
-    ends), one groupBy per target sums the neighborhood,
-    and the smoothed value is a double division of exact counts by the
-    real (clamp-aware) neighbor count. Empty cells inside a
-    neighborhood contribute zero by construction, so the stencil is
-    sparse: shuffle volume is 9 × occupied cells, never 648 × 9.
-
-    Domain: finite values only (NULL rows kept — their pix stays a
-    NULL cell, as before): a NaN/Inf coordinate silently corrupts
-    Spark's floor(double) where DuckDB's BIGINT cast hard-errors
-    (nanemb driftlab layout, r10)."""
-    from fink_broker_spark.functions.spatial import grid_pixel_expr
-
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNull() | _finite("value")
-    )
-    ra = F.col("value") - F.floor(F.col("value") / 360.0) * 360.0
-    dec = (F.col("user_id") % 181 - 90).cast("double")
-    cells = (
-        ev.select(grid_pixel_expr(ra, dec, cell_deg=10.0).alias("pix"))
-        .groupBy("pix")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.expr("pix div 36").alias("r"),
-            F.expr("pix % 36").alias("c"),
-            "n",
-        )
-    )
-    offs = spark.range(9).select(
-        (F.col("id") / 3).cast("long").alias("dr_raw"),
-        (F.col("id") % 3).alias("dc_raw"),
-    ).select(
-        (F.col("dr_raw") - 1).alias("dr"), (F.col("dc_raw") - 1).alias("dc")
-    )
-    contrib = (
-        cells.crossJoin(F.broadcast(offs))
-        .select(
-            (F.col("r") + F.col("dr")).alias("tr"),
-            F.pmod(F.col("c") + F.col("dc"), F.lit(36)).alias("tc"),
-            "n",
-        )
-        # dec rows span 0..18: (dec+90)/10 reaches 18 at the +90 pole
-        # (grid_pixel_expr does not fold the top edge down), so the
-        # clamp must keep row 18 or occupied polar cells silently
-        # vanish from the smoothed report (review-caught)
-        .filter((F.col("tr") >= 0) & (F.col("tr") <= 18))
-    )
-    sums = contrib.groupBy("tr", "tc").agg(
-        F.sum("n").alias("nbr_sum"),
-        F.count(F.lit(1)).alias("nbr_cells"),
-    )
-    return (
-        cells.join(
-            sums,
-            (F.col("r") == F.col("tr")) & (F.col("c") == F.col("tc")),
-        )
-        .select(
-            (F.col("r") * 36 + F.col("c")).alias("pix"),
-            "n",
-            "nbr_sum",
-            "nbr_cells",
-            (
-                F.col("nbr_sum").cast("double")
-                / F.col("nbr_cells").cast("double")
-            ).alias("smoothed"),
-        )
-    )
-
-
-ORACLE_GRID_SMOOTH = """
-WITH cells AS (
-  SELECT CAST(floor(((CAST(user_id % 181 AS DOUBLE) - 90) + 90.0)
-              / 10.0) * 36
-         + floor((value - floor(value / 360.0) * 360.0) / 10.0)
-           AS BIGINT) AS pix,
-         count(*) AS n
-  FROM events
-  -- finite-value domain, mirroring the engine (nanemb layout, r10)
-  WHERE value IS NULL OR isfinite(value)
-  GROUP BY 1
-),
-rc AS (SELECT pix // 36 AS r, pix % 36 AS c, n FROM cells),
-offs AS (
-  SELECT dr, dc
-  FROM (VALUES (-1), (0), (1)) a(dr), (VALUES (-1), (0), (1)) b(dc)
-),
-contrib AS (
-  SELECT r + dr AS tr, ((c + dc) % 36 + 36) % 36 AS tc, n
-  FROM rc, offs
-  WHERE r + dr BETWEEN 0 AND 18
-),
-sums AS (
-  SELECT tr, tc, SUM(n) AS nbr_sum, count(*) AS nbr_cells
-  FROM contrib GROUP BY tr, tc
-)
-SELECT rc.r * 36 + rc.c AS pix, rc.n, s.nbr_sum, s.nbr_cells,
-       CAST(s.nbr_sum AS DOUBLE) / CAST(s.nbr_cells AS DOUBLE)
-         AS smoothed
-FROM rc JOIN sums s ON s.tr = rc.r AND s.tc = rc.c
-"""
-
-
-def q_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session bounce rate by start hour: single-event sessions over
-    all sessions, profiled by the session's start hour-of-day — the
-    engagement metric on top of the 30-min lag-gap sessionizer (same
-    break rule as session_window_lag, so the session algebra is
-    already driver-attested). Session ids are running sums of break
-    flags; the start hour is pure integer µs arithmetic (never engine
-    hour()); rates are double divisions of exact counts."""
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts_us", nanos_to_micros("ts_ns")
-    )
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    gapped = ev.withColumn("prev_us", F.lag("ts_us").over(w))
-    brk = F.when(
-        F.col("prev_us").isNull()
-        | (F.col("ts_us") - F.col("prev_us") > SESSION_GAP_US),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    sess = (
-        gapped.withColumn("sid", F.sum(brk).over(w))
-        .groupBy("user_id", "sid")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts_us").alias("start_us"),
-        )
-    )
-    hourly = sess.select(
-        (
-            F.floor(F.col("start_us") / F.lit(3_600_000_000)) % 24
-        )
-        .cast("int")
-        .alias("hour"),
-        F.when(F.col("n_events") == 1, F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("bounce"),
-    )
-    return hourly.groupBy("hour").agg(
-        F.count(F.lit(1)).alias("n_sessions"),
-        F.sum("bounce").cast("long").alias("n_bounce"),
-        (
-            F.sum("bounce").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("bounce_rate"),
-    )
-
-
-ORACLE_BOUNCE_RATE = f"""
-WITH g AS (
-  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-         lag(epoch_us(ts)) OVER w AS prev_us
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-),
-marked AS (
-  SELECT user_id, ts_us,
-         SUM(CASE WHEN prev_us IS NULL
-                   OR ts_us - prev_us > {SESSION_GAP_US} THEN 1 ELSE 0 END)
-           OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS sid
-  FROM g
-),
-sess AS (
-  SELECT user_id, sid, count(*) AS n_events, MIN(ts_us) AS start_us
-  FROM marked GROUP BY user_id, sid
-),
-hourly AS (
-  SELECT CAST(CAST(FLOOR(start_us / 3600000000) AS BIGINT) % 24
-              AS INT) AS hour,
-         CASE WHEN n_events = 1 THEN 1 ELSE 0 END AS bounce
-  FROM sess
-)
-SELECT hour, count(*) AS n_sessions,
-       CAST(SUM(bounce) AS BIGINT) AS n_bounce,
-       CAST(SUM(bounce) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-         AS bounce_rate
-FROM hourly GROUP BY hour
-"""
-
-
-def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Population Stability Index between the two md5-parity arms,
-    per event type — the standard drift monitor a serving pipeline
-    runs between a reference and a live value distribution:
-    PSI = Σ_bins (p_a − p_b)·ln(p_a/p_b). Bins are floor(value/50)
-    (pure IEEE floor of the raw double — identical both engines);
-    probabilities are Laplace-smoothed ((n+1)/(N+B), all exact
-    integers) so empty bins never hit ln(0); each term follows the
-    transcendental-sum discipline (decimal(18,9) round before the
-    exact sum, terminal scale-5 quantize). One fact pass + a
-    bin-grid-sized reshape.
-
-    Domain: finite values only (NULL rows kept — a NULL bin stays a
-    grid bin, as before): Spark's floor(double) silently maps NaN→0 /
-    ±Inf→±Long.MAX where DuckDB's BIGINT cast hard-errors (nanemb
-    driftlab layout, r10)."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNull() | _finite("value")
-    )
-    arm = (
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    ).alias("arm")
-    binned = ev.select(
-        "event_type",
-        arm,
-        F.floor(F.col("value") / F.lit(50.0)).cast("long").alias("bin"),
-    )
-    counts = binned.groupBy("event_type", "arm", "bin").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    grid = counts.select("event_type", "bin").distinct()
-    nbins = grid.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("b")
-    )
-    totals = counts.groupBy("event_type", "arm").agg(
-        F.sum("n").alias("tot")
-    )
-    a_cnt = counts.filter(F.col("arm") == 0).select(
-        "event_type", "bin", F.col("n").alias("na")
-    )
-    b_cnt = counts.filter(F.col("arm") == 1).select(
-        "event_type", "bin", F.col("n").alias("nb")
-    )
-    a_tot = totals.filter(F.col("arm") == 0).select(
-        "event_type", F.col("tot").alias("ta")
-    )
-    b_tot = totals.filter(F.col("arm") == 1).select(
-        "event_type", F.col("tot").alias("tb")
-    )
-    full = (
-        grid.join(a_cnt, ["event_type", "bin"], "left")
-        .join(b_cnt, ["event_type", "bin"], "left")
-        .join(a_tot, "event_type")
-        .join(b_tot, "event_type")
-        .join(nbins, "event_type")
-        .select(
-            "event_type",
-            (F.coalesce("na", F.lit(0)) + 1).alias("sa"),
-            (F.coalesce("nb", F.lit(0)) + 1).alias("sb"),
-            (F.col("ta") + F.col("b")).alias("da"),
-            (F.col("tb") + F.col("b")).alias("db"),
-        )
-    )
-    pa = F.col("sa").cast("double") / F.col("da")
-    pb = F.col("sb").cast("double") / F.col("db")
-    term = F.round((pa - pb) * F.log(pa / pb), 9).cast("decimal(18,9)")
-    return (
-        full.groupBy("event_type")
-        .agg(F.sum(term).cast("decimal(28,9)").alias("psi_exact"))
-        .select(
-            "event_type",
-            F.round("psi_exact", 5)
-            .cast("decimal(28,5)")
-            .cast("double")
-            .alias("psi"),
-        )
-    )
-
-
-ORACLE_PSI_DRIFT = """
-WITH binned AS (
-  -- finite-value domain, mirroring the engine (nanemb layout, r10)
-  SELECT event_type,
-         CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8)
-              AS BIGINT) % 2 AS arm,
-         CAST(FLOOR(value / 50.0) AS BIGINT) AS bin
-  FROM events
-  WHERE value IS NULL OR isfinite(value)
-),
-counts AS (
-  SELECT event_type, arm, bin, count(*) AS n
-  FROM binned GROUP BY 1, 2, 3
-),
-grid AS (SELECT DISTINCT event_type, bin FROM counts),
-nbins AS (SELECT event_type, count(*) AS b FROM grid GROUP BY 1),
-totals AS (
-  SELECT event_type, arm, SUM(n) AS tot FROM counts GROUP BY 1, 2
-),
-filled AS (
-  SELECT g.event_type,
-         COALESCE(a.n, 0) + 1 AS sa,
-         COALESCE(bb.n, 0) + 1 AS sb,
-         ta.tot + nb.b AS da,
-         tb.tot + nb.b AS db
-  FROM grid g
-  LEFT JOIN counts a
-    ON a.event_type = g.event_type AND a.bin = g.bin AND a.arm = 0
-  LEFT JOIN counts bb
-    ON bb.event_type = g.event_type AND bb.bin = g.bin AND bb.arm = 1
-  JOIN totals ta ON ta.event_type = g.event_type AND ta.arm = 0
-  JOIN totals tb ON tb.event_type = g.event_type AND tb.arm = 1
-  JOIN nbins nb ON nb.event_type = g.event_type
-),
-terms AS (
-  SELECT event_type,
-         CAST(round(
-             (CAST(sa AS DOUBLE) / da - CAST(sb AS DOUBLE) / db)
-               * ln((CAST(sa AS DOUBLE) / da)
-                    / (CAST(sb AS DOUBLE) / db)), 9)
-           AS DECIMAL(18,9)) AS term
-  FROM filled
-)
-SELECT event_type,
-       CAST(CAST(round(CAST(SUM(term) AS DECIMAL(28,9)), 5)
-                 AS DECIMAL(28,5)) AS DOUBLE) AS psi
-FROM terms GROUP BY event_type
-"""
-
-
-def q_qgram_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q-gram prefiltered fuzzy string join: candidate part-name pairs
-    meet ONLY through a shared character trigram (inverted-index
-    equi-join — never the |names|² product), then an exact Levenshtein
-    refine keeps distance ≤ 3 — the standard filter-verify shape for
-    string similarity at scale (fuzzy_name_match is the composite-
-    argmin twin; this one demonstrates the blocking join). The trigram
-    posting lists are df-cut at 50% of names to kill stop-grams.
-    Integer distances, (name_a, name_b) deterministic output."""
-    p = load_table(spark, sf_dir, "part")
-    names = p.select(F.lower("p_name").alias("nm")).distinct()
-    ncount = names.agg(F.count(F.lit(1)).alias("n_names"))
-    idx = F.when(
-        F.length("nm") >= 3,
-        F.sequence(F.lit(1), F.length("nm") - F.lit(2)),
-    ).otherwise(F.array().cast("array<int>"))
-    grams = names.select(
-        "nm",
-        F.explode(
-            F.transform(idx, lambda i: F.substr("nm", i, F.lit(3)))
-        ).alias("g"),
-    ).distinct()
-    df_cut = (
-        grams.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(ncount))
-        .filter(2 * F.col("df") <= F.col("n_names"))
-        .select("g")
-    )
-    pruned = grams.join(df_cut, "g")
-    cand = (
-        pruned.alias("a")
-        .join(pruned.alias("b"), "g")
-        .filter(F.col("a.nm") < F.col("b.nm"))
-        .select(
-            F.col("a.nm").alias("name_a"), F.col("b.nm").alias("name_b")
-        )
-        .distinct()
-    )
-    return (
-        cand.select(
-            "name_a",
-            "name_b",
-            F.levenshtein("name_a", "name_b").alias("dist"),
-        )
-        .filter(F.col("dist") <= 3)
-        .orderBy("name_a", "name_b")
-        .limit(200)
-    )
-
-
-ORACLE_QGRAM_MATCH = """
-WITH names AS (SELECT DISTINCT lower(p_name) AS nm FROM part),
-ncount AS (SELECT count(*) AS n_names FROM names),
-grams AS (
-  SELECT DISTINCT nm, substr(nm, i, 3) AS g
-  FROM names, UNNEST(range(1, greatest(length(nm) - 1, 1))) AS t(i)
-  WHERE length(nm) >= 3
-),
-df_cut AS (
-  SELECT g FROM grams, ncount
-  GROUP BY g, n_names HAVING 2 * count(*) <= n_names
-),
-pruned AS (SELECT nm, g FROM grams JOIN df_cut USING (g)),
-cand AS (
-  SELECT DISTINCT a.nm AS name_a, b.nm AS name_b
-  FROM pruned a JOIN pruned b USING (g)
-  WHERE a.nm < b.nm
-)
-SELECT name_a, name_b, levenshtein(name_a, name_b) AS dist
-FROM cand
-WHERE levenshtein(name_a, name_b) <= 3
-ORDER BY name_a, name_b
-LIMIT 200
-"""
-
-
-def q_weekday_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonally-adjusted daily outliers: each day's net revenue
-    minus ITS WEEKDAY's mean (weekday = epoch-day mod 7 — pure
-    integer, never engine dayofweek), top 10 by absolute residual —
-    the seasonal-baseline anomaly detector (anomaly_scores is the
-    global-z twin; this removes the weekly cycle first). Exact integer
-    day sums, weekday means as double divisions of exact sums, one
-    fixed residual tree, deterministic (|residual| DESC, day)
-    TakeOrdered."""
-    li = load_table(spark, sf_dir, "lineitem")
-    daily = (
-        li.select(
-            _day("l_shipdate").alias("d"),
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("rev"))
-        .select("d", (F.col("d") % 7).alias("wd"), "rev")
-    )
-    wk = daily.groupBy("wd").agg(
-        F.sum("rev").alias("sw"), F.count(F.lit(1)).alias("cw")
-    )
-    resid = daily.join(F.broadcast(wk), "wd").select(
-        "d",
-        "wd",
-        "rev",
-        (
-            F.col("rev").cast("double")
-            - F.col("sw").cast("double") / F.col("cw").cast("double")
-        ).alias("residual"),
-    )
-    return resid.orderBy(
-        F.abs(F.col("residual")).desc(), "d"
-    ).limit(10)
-
-
-ORACLE_WEEKDAY_OUTLIERS = """
-WITH daily AS (
-  SELECT d, d % 7 AS wd, rev FROM (
-    SELECT CAST(FLOOR(epoch_us(l_shipdate) / 86400000000) AS BIGINT)
-             AS d,
-           SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT))
-             AS rev
-    FROM lineitem GROUP BY 1
-  )
-),
-wk AS (
-  SELECT wd, SUM(rev) AS sw, count(*) AS cw FROM daily GROUP BY wd
-)
-SELECT d, wd, rev,
-       CAST(rev AS DOUBLE)
-         - CAST(sw AS DOUBLE) / CAST(cw AS DOUBLE) AS residual
-FROM daily JOIN wk USING (wd)
-ORDER BY abs(CAST(rev AS DOUBLE)
-             - CAST(sw AS DOUBLE) / CAST(cw AS DOUBLE)) DESC, d
-LIMIT 10
-"""
-
-
-def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-key skew diagnostics over the fact table's three key
-    columns — the pre-flight report that decides salting/AQE-skew
-    strategy (the operational companion to skew_join_salted): per key,
-    distinct count, hottest key + its count, and the skew ratio
-    max/avg = max_cnt·n_distinct/n_rows. One aggregate per key column
-    (each map-side combinable); hottest key by (count DESC, key)
-    deterministic argmin."""
-    li = load_table(spark, sf_dir, "lineitem")
-    out = None
-    for keycol in ("l_orderkey", "l_partkey", "l_suppkey"):
-        per = (
-            li.select(F.col(keycol).alias("k"))
-            .groupBy("k")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        mx = per.agg(F.max("cnt").alias("mx"))
-        agg = per.crossJoin(F.broadcast(mx)).agg(
-            F.lit(keycol).alias("key_col"),
-            F.sum("cnt").alias("n_rows"),
-            F.count(F.lit(1)).alias("n_distinct"),
-            F.max("cnt").alias("max_cnt"),
-            F.min(
-                F.when(F.col("cnt") == F.col("mx"), F.col("k"))
-            ).alias("hottest_key"),
-        )
-        out = agg if out is None else out.unionAll(agg)
-    return out.select(
-        "key_col",
-        "n_rows",
-        "n_distinct",
-        "max_cnt",
-        "hottest_key",
-        (
-            F.col("max_cnt").cast("double")
-            * F.col("n_distinct").cast("double")
-            / F.col("n_rows").cast("double")
-        ).alias("skew_ratio"),
-    )
-
-
-ORACLE_SKEW_REPORT = """
-WITH ok AS (
-  SELECT l_orderkey AS k, count(*) AS cnt FROM lineitem GROUP BY 1
-),
-pk AS (
-  SELECT l_partkey AS k, count(*) AS cnt FROM lineitem GROUP BY 1
-),
-sk AS (
-  SELECT l_suppkey AS k, count(*) AS cnt FROM lineitem GROUP BY 1
-),
-rep AS (
-  SELECT 'l_orderkey' AS key_col, SUM(cnt) AS n_rows,
-         count(*) AS n_distinct, MAX(cnt) AS max_cnt,
-         MIN(CASE WHEN cnt = (SELECT MAX(cnt) FROM ok) THEN k END)
-           AS hottest_key
-  FROM ok
-  UNION ALL
-  SELECT 'l_partkey', SUM(cnt), count(*), MAX(cnt),
-         MIN(CASE WHEN cnt = (SELECT MAX(cnt) FROM pk) THEN k END)
-  FROM pk
-  UNION ALL
-  SELECT 'l_suppkey', SUM(cnt), count(*), MAX(cnt),
-         MIN(CASE WHEN cnt = (SELECT MAX(cnt) FROM sk) THEN k END)
-  FROM sk
-)
-SELECT key_col, n_rows, n_distinct, max_cnt, hottest_key,
-       CAST(max_cnt AS DOUBLE) * CAST(n_distinct AS DOUBLE)
-         / CAST(n_rows AS DOUBLE) AS skew_ratio
-FROM rep
-"""
-
-
-def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Association rules a→b from basket co-occurrence: confidence
-    = n_ab/n_a and lift = n_ab·N/(n_a·n_b) over exact basket counts —
-    the apriori triple completed (basket_pairs mines support, this
-    ranks the directed rules). Pair counts come from the same HOF
-    in-basket expansion (one fact shuffle, never a self-join); item
-    supports are a second distinct-collapse aggregate; both rule
-    directions emit from one pair row. Lift is a double of exact
-    sub-2⁵³ cross products; top-25 by (conf DESC, a, b) with the
-    exact integer tiebreak."""
-    li = load_table(spark, sf_dir, "lineitem")
-    # keyed spread — same rationale as basket_pairs (guide §2.5); the
-    # basket relation feeds three consumers (count, pairs, item
-    # supports) whose shared exchange Spark reuses
-    baskets = ensure_keyed_parallelism(
-        li.select("l_orderkey", "l_partkey"), "l_orderkey"
-    ).groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("parts")
-    )
-    # the shared subtree tops out at the AGGREGATE, not an Exchange, so
-    # Spark re-ran the collect_set basket build once per consumer
-    # (count + pair expansion + item supports — profiled ~30 s CPU of
-    # duplicate aggregation across the three stages, r10; global
-    # finding 3).  Materialize the |orders|-sized basket relation once.
-    # lineage-truncation tradeoff: see _materialize
-    baskets = _materialize(baskets)
-    nb = baskets.agg(F.count(F.lit(1)).alias("n_baskets"))
-    parts = F.col("parts")
-    pair_structs = F.flatten(
-        F.transform(
-            parts,
-            lambda x, i: F.transform(
-                F.slice(parts, i + F.lit(2), F.size(parts)),
-                lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-            ),
-        )
-    )
-    pairs = (
-        baskets.select(F.explode(pair_structs).alias("p"))
-        .select(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= 3)
-    )
-    item = (
-        baskets.select(F.explode("parts").alias("pk"))
-        .groupBy("pk")
-        .agg(F.count(F.lit(1)).alias("n_i"))
-    )
-    # both rule directions from one pair row
-    directed = pairs.select(
-        F.col("pa").alias("a"), F.col("pb").alias("b"), "n_ab"
-    ).unionAll(
-        pairs.select(
-            F.col("pb").alias("a"), F.col("pa").alias("b"), "n_ab"
-        )
-    )
-    na = item.select(F.col("pk").alias("a"), F.col("n_i").alias("n_a"))
-    nbi = item.select(F.col("pk").alias("b"), F.col("n_i").alias("n_b"))
-    # item supports are SF-linear — never force-broadcast; AQE picks
-    # broadcast at driver scale and shuffle-join at 100 TB
-    return (
-        directed.join(na, "a")
-        .join(nbi, "b")
-        .crossJoin(F.broadcast(nb))
-        .select(
-            "a",
-            "b",
-            "n_ab",
-            "n_a",
-            "n_b",
-            (
-                F.col("n_ab").cast("double") / F.col("n_a").cast("double")
-            ).alias("confidence"),
-            (
-                (F.col("n_ab") * F.col("n_baskets")).cast("double")
-                / (F.col("n_a") * F.col("n_b")).cast("double")
-            ).alias("lift"),
-        )
-        .orderBy(F.col("confidence").desc(), "a", "b")
-        .limit(25)
-    )
-
-
-ORACLE_ASSOC_RULES = """
-WITH nb AS (
-  SELECT count(DISTINCT l_orderkey) AS n_baskets FROM lineitem
-),
-pairs AS (
-  SELECT a.l_partkey AS pa, b.l_partkey AS pb, count(*) AS n_ab
-  FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) a
-  JOIN (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) b
-    USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING count(*) >= 3
-),
-item AS (
-  SELECT l_partkey AS pk, count(*) AS n_i
-  FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-  GROUP BY 1
-),
-directed AS (
-  SELECT pa AS a, pb AS b, n_ab FROM pairs
-  UNION ALL SELECT pb, pa, n_ab FROM pairs
-)
-SELECT d.a, d.b, d.n_ab, na.n_i AS n_a, nbi.n_i AS n_b,
-       CAST(d.n_ab AS DOUBLE) / CAST(na.n_i AS DOUBLE) AS confidence,
-       CAST(d.n_ab * nb.n_baskets AS DOUBLE)
-         / CAST(na.n_i * nbi.n_i AS DOUBLE) AS lift
-FROM directed d
-JOIN item na ON na.pk = d.a
-JOIN item nbi ON nbi.pk = d.b, nb
-ORDER BY confidence DESC, d.a, d.b
-LIMIT 25
-"""
-
-
-def q_price_volume_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Price/volume/mix decomposition of the revenue change between
-    the two most recent years, per nation: revenue Δ = c₁ − c₀
-    (exact cents), volume effect = c₀·(q₁−q₀)/q₀ (what Δ would be if
-    only quantity moved), price effect = q₁·(c₁/q₁ − c₀/q₀)
-    = (c₁·q₀ − c₀·q₁)/q₀ — the two effects sum exactly to Δ as
-    rationals, and both emit as scale-4 fixed-point INTEGRAL floor
-    divisions (the price_index rule: never round a division-derived
-    double). The 10⁴-scaled numerators cross 2⁶³ at sf0.1, so they
-    ride DECIMAL(38,0)/HUGEINT; the div result is back under 2⁵⁰.
-    Identity (volume_fp + price_fp ≡ Δ·10⁴ within the two floor
-    remainders) asserted in tests. One (nation, year) collapse + a
-    nation-keyed self-match."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    cu = load_table(spark, sf_dir, "customer")
-    na = load_table(spark, sf_dir, "nation")
-    base = (
-        li.join(
-            o.select(
-                "o_orderkey", "o_custkey",
-                F.year("o_orderdate").alias("yr"),
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(cu.select("c_custkey", "c_nationkey"),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(na.select("n_nationkey", "n_name")),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .select(
-            "n_name",
-            "yr",
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-            F.floor(F.col("l_quantity") + F.lit(0.5))
-            .cast("long")
-            .alias("qty"),
-        )
-        .groupBy("n_name", "yr")
-        .agg(F.sum("cents").alias("c"), F.sum("qty").alias("q"))
-    )
-    # |nations|×|years| rows feeding THREE consumers (ymax, cur, prv):
-    # uncut, each re-ran the 3-way fact join + aggregate (16-scan row
-    # of the r9 census; guide §1.2 re-derivation).  One materialize,
-    # one fact pass.
-    base = _materialize(base)
-    ymax = base.agg(F.max("yr").alias("y1"))
-    cur = base.crossJoin(F.broadcast(ymax)).filter(
-        F.col("yr") == F.col("y1")
-    ).select("n_name", F.col("c").alias("c1"), F.col("q").alias("q1"))
-    prv = base.crossJoin(F.broadcast(ymax)).filter(
-        F.col("yr") == F.col("y1") - 1
-    ).select(
-        F.col("n_name").alias("nn"),
-        F.col("c").alias("c0"),
-        F.col("q").alias("q0"),
-    )
-    j = cur.join(prv, F.col("n_name") == F.col("nn"))
-    return j.select(
-        "n_name",
-        (F.col("c1") - F.col("c0")).alias("delta_cents"),
-        F.expr(
-            "(CAST(c0 AS DECIMAL(38,0)) * (q1 - q0) * 10000) div q0"
-        ).alias("volume_effect_fp4"),
-        F.expr(
-            "((CAST(c1 AS DECIMAL(38,0)) * q0"
-            "  - CAST(c0 AS DECIMAL(38,0)) * q1) * 10000) div q0"
-        ).alias("price_effect_fp4"),
-    )
-
-
-ORACLE_PRICE_VOLUME_MIX = """
-WITH base AS (
-  SELECT n_name, year(o_orderdate) AS yr,
-         SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS c,
-         SUM(CAST(FLOOR(l_quantity + 0.5) AS BIGINT)) AS q
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation ON c_nationkey = n_nationkey
-  GROUP BY 1, 2
-),
-ymax AS (SELECT MAX(yr) AS y1 FROM base),
-cur AS (
-  SELECT n_name, c AS c1, q AS q1 FROM base, ymax WHERE yr = y1
-),
-prv AS (
-  SELECT n_name, c AS c0, q AS q0 FROM base, ymax WHERE yr = y1 - 1
-)
-SELECT n_name,
-       c1 - c0 AS delta_cents,
-       CAST((CAST(c0 AS HUGEINT) * (q1 - q0) * 10000) // q0
-            AS BIGINT) AS volume_effect_fp4,
-       CAST(((CAST(c1 AS HUGEINT) * q0 - CAST(c0 AS HUGEINT) * q1)
-             * 10000) // q0 AS BIGINT) AS price_effect_fp4
-FROM cur JOIN prv USING (n_name)
-"""
-
-
-def q_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-step-ahead forecast backtest on the daily revenue series:
-    the naive predictor (yesterday's value) vs the seasonal-naive
-    predictor (same weekday last week, lag 7) — the model-evaluation
-    harness pattern (walk-forward, no leakage: every prediction uses
-    only prior days). Absolute errors are EXACT cents; squared errors
-    square the DOLLAR-floored error (cents² sums would cross 2⁶³ at
-    sf0.1 — past the safe int128→double zone — while dollar² sums
-    stay under 2⁵³ through ~sf100); MAE is a double division of exact
-    sums and RMSE one fixed sqrt tree. One day-grid collapse, two
-    bounded lag windows, a 2-row report."""
-    li = load_table(spark, sf_dir, "lineitem")
-    daily = (
-        li.select(
-            _day("l_shipdate").alias("d"),
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("rev"))
-    )
-    w = Window.orderBy("d")
-    lagged = daily.select(
-        "d",
-        "rev",
-        F.lag("rev", 1).over(w).alias("naive"),
-        F.lag("rev", 7).over(w).alias("seasonal"),
-    )
-    out = None
-    for label, col in (("naive_lag1", "naive"), ("seasonal_lag7", "seasonal")):
-        err = lagged.filter(F.col(col).isNotNull()).select(
-            F.abs(F.col("rev") - F.col(col)).alias("ae"),
-            F.expr(
-                f"abs(rev - {col}) div 100"
-            ).alias("ae_dollars"),
-        )
-        agg = err.agg(
-            F.lit(label).alias("predictor"),
-            F.count(F.lit(1)).alias("n_days"),
-            F.sum("ae").alias("sum_abs_err"),
-            # decimal(38,0) square: a raw long ae² overflows on
-            # high-magnitude lakes (bigmoney driftlab)
-            F.sum(
-                F.col("ae_dollars").cast("decimal(19,0)")
-                * F.col("ae_dollars").cast("decimal(19,0)")
-            ).alias("sum_sq_err_usd"),
-        )
-        out = agg if out is None else out.unionAll(agg)
-    # three-limb split conversion: a decimal that can outgrow 2⁶³ must
-    # not cast to double directly (DuckDB's int128→double is not
-    # correctly rounded up there — r5 corollary), and the 2-limb
-    # form's // 1e9 quotient itself would overflow BIGINT past 9.2e27
-    # (r8 code-review finding) — `_limb3_double` is symmetric-exact to
-    # ~9.2e36
-    sq_d = _limb3_double("sum_sq_err_usd")
-    return out.select(
-        "predictor",
-        "n_days",
-        "sum_abs_err",
-        (
-            F.col("sum_abs_err").cast("double")
-            / F.col("n_days").cast("double")
-        ).alias("mae_cents"),
-        F.sqrt(sq_d / F.col("n_days").cast("double")).alias(
-            "rmse_dollars"
-        ),
-    )
-
-
-ORACLE_FORECAST_BACKTEST = """
-WITH daily AS (
-  SELECT CAST(FLOOR(epoch_us(l_shipdate) / 86400000000) AS BIGINT)
-           AS d,
-         SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS rev
-  FROM lineitem GROUP BY 1
-),
-lagged AS (
-  SELECT d, rev,
-         lag(rev, 1) OVER (ORDER BY d) AS naive,
-         lag(rev, 7) OVER (ORDER BY d) AS seasonal
-  FROM daily
-),
-rep AS (
-  -- HUGEINT squares (bigmoney lakes overflow INT64 ae²)
-  SELECT 'naive_lag1' AS predictor, count(*) AS n_days,
-         SUM(abs(rev - naive)) AS sum_abs_err,
-         SUM(CAST(abs(rev - naive) // 100 AS HUGEINT)
-             * (abs(rev - naive) // 100)) AS sum_sq_err_usd
-  FROM lagged WHERE naive IS NOT NULL
-  UNION ALL
-  SELECT 'seasonal_lag7', count(*),
-         SUM(abs(rev - seasonal)),
-         SUM(CAST(abs(rev - seasonal) // 100 AS HUGEINT)
-             * (abs(rev - seasonal) // 100))
-  FROM lagged WHERE seasonal IS NOT NULL
-)
-SELECT predictor, n_days, sum_abs_err,
-       CAST(sum_abs_err AS DOUBLE) / CAST(n_days AS DOUBLE)
-         AS mae_cents,
-       -- three-limb split conversion mirrors the engine's
-       -- _limb3_double: the sum can outgrow the correctly-rounded
-       -- int128→double zone, and a single // 1e9 quotient would
-       -- itself overflow the engine's BIGINT DIV past 9.2e27
-       sqrt((CAST(sum_sq_err_usd // 1000000000000000000 AS DOUBLE) * 1e18
-             + CAST((sum_sq_err_usd % 1000000000000000000)
-                    // 1000000000 AS DOUBLE) * 1e9
-             + CAST(sum_sq_err_usd % 1000000000 AS DOUBLE))
-            / CAST(n_days AS DOUBLE))
-         AS rmse_dollars
-FROM rep
-"""
-
-
-def _limb3_double(col: str) -> Column:
-    """decimal(38,0) → double through THREE exactly-converted limbs
-    (v = hi·10¹⁸ + mid·10⁹ + lo): every limb stays below 2⁶³, the zone
-    where BOTH Spark's IntegralDivide (a BIGINT — it would ANSI-throw
-    above) and DuckDB's int128→double (not correctly rounded above —
-    the r5 corollary) behave, and the 5-op recombination tree is
-    identical IEEE on both engines.  Symmetric-exact while
-    v < 2⁶³·10¹⁸ ≈ 9.2e36 — the documented envelope (the r8
-    code-review found the 2-limb form's quotient itself overflowing
-    BIGINT at v ≥ 9.2e27, an asymmetric throw-vs-misconvert split).
-    Requires v ≥ 0 (DIV truncates, // floors — equal only there).
-
-    Oracle twin (mirror verbatim)::
-
-        CAST(v // 1000000000000000000 AS DOUBLE) * 1e18
-        + CAST((v % 1000000000000000000) // 1000000000 AS DOUBLE) * 1e9
-        + CAST(v % 1000000000 AS DOUBLE)
-    """
-    return (
-        F.expr(f"CAST({col} DIV 1000000000000000000 AS DOUBLE)")
-        * F.lit(1.0e18)
-        + F.expr(
-            f"CAST(({col} % 1000000000000000000) DIV 1000000000 AS DOUBLE)"
-        )
-        * F.lit(1.0e9)
-        + F.expr(f"CAST({col} % 1000000000 AS DOUBLE)")
-    )
-
-
-def _limb3_bigints(col: str, prefix: str) -> list[Column]:
-    """decimal(38,0) → three exact BIGINT limbs for EMISSION
-    (v = hi·10¹⁸ + mid·10⁹ + lo).  The r8 driver found that its
-    canonicalizer fetches DuckDB ``DECIMAL(p>18, 0)`` (HUGEINT-backed
-    in DuckDB's Python client) differently from Spark's ``Decimal`` —
-    the same fetch-typing family ``probe_type_hugeint`` pinned in r6,
-    one level up (VERDICT r8: ``rolling_volatility``,
-    ``table_checksum``, the only two wide-decimal emitters in the
-    registry, both value-identical cross-engine yet hash-red).  Wide
-    decimals therefore stay INTERNAL (overflow headroom is still
-    wanted there) and leave the query as three BIGINTs, exact while
-    0 ≤ v < 2⁶³·10¹⁸ ≈ 9.2e36 (same envelope as
-    ``_limb3_double``; requires v ≥ 0 — DIV truncates, ``//``
-    floors).  ``admin/typeaudit`` now forbids any emitted decimal
-    wider than 18 digits so this class cannot re-enter.
-
-    Oracle twin (mirror verbatim, v a HUGEINT/DECIMAL(38,0))::
-
-        CAST(v // 1000000000000000000 AS BIGINT)                 AS p_hi,
-        CAST((v % 1000000000000000000) // 1000000000 AS BIGINT)  AS p_mid,
-        CAST(v % 1000000000 AS BIGINT)                           AS p_lo
-    """
-    return [
-        F.expr(f"CAST({col} DIV 1000000000000000000 AS BIGINT)").alias(
-            f"{prefix}_hi"
-        ),
-        F.expr(
-            f"CAST(({col} % 1000000000000000000) DIV 1000000000 AS BIGINT)"
-        ).alias(f"{prefix}_mid"),
-        F.expr(f"CAST({col} % 1000000000 AS BIGINT)").alias(f"{prefix}_lo"),
-    ]
-
-
-def _split_expr() -> Column:
-    """Deterministic 80/10/10 split of documents by md5(doc_id) bucket
-    — the ONE definition both the split manifest (q_dataset_split) and
-    the leakage audit (q_split_leakage) consume, so the thresholds can
-    never drift between the pinning query and its auditor (the
-    min_label_propagation lesson applied to split governance)."""
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
-    return (
-        F.when(bucket < 80, F.lit("train"))
-        .when(bucket < 90, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-
-
-#: the DuckDB twin of _split_expr — interpolated into both oracles
-_SPLIT_SQL = """CASE WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)),
-                                       1, 8) AS BIGINT) % 100 < 80
-              THEN 'train'
-              WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)),
-                                       1, 8) AS BIGINT) % 100 < 90
-              THEN 'val' ELSE 'test' END"""
-
-
-def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 80/10/10 train/val/test assignment audit: every
-    document lands in exactly one split via the cross-engine md5
-    bucket (hash of doc_id mod 100 — reproducible across runs,
-    engines, and partitionings; never rand()), reported per
-    (source, split) with exact counts and the within-source share —
-    the split manifest a training pipeline pins before anything else
-    reads the corpus. One scan, one tiny-grid aggregate."""
-    docs = load_table(spark, sf_dir, "documents")
-    per = docs.select("source", _split_expr().alias("split")).groupBy(
-        "source", "split"
-    ).agg(F.count(F.lit(1)).alias("n_docs"))
-    tot = per.groupBy("source").agg(F.sum("n_docs").alias("n_src"))
-    return per.join(tot, "source").select(
-        "source",
-        "split",
-        "n_docs",
-        (
-            F.col("n_docs").cast("double") / F.col("n_src").cast("double")
-        ).alias("share"),
-    )
-
-
-ORACLE_DATASET_SPLIT = f"""
-WITH assigned AS (
-  SELECT source,
-         {_SPLIT_SQL} AS split
-  FROM documents
-),
-per AS (
-  SELECT source, split, count(*) AS n_docs
-  FROM assigned GROUP BY 1, 2
-),
-tot AS (SELECT source, SUM(n_docs) AS n_src FROM per GROUP BY source)
-SELECT source, split, n_docs,
-       CAST(n_docs AS DOUBLE) / CAST(n_src AS DOUBLE) AS share
-FROM per JOIN tot USING (source)
-"""
-
-
-def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-split contamination audit: identical-text documents
-    whose copies land in DIFFERENT splits of the md5 80/10/10
-    assignment — the leakage decontaminate checks against a benchmark,
-    applied between a corpus's own train/eval partitions (duplicate
-    families straddling the split boundary leak eval answers into
-    training). One fingerprint collapse to per-split distinct-copy
-    counts, then a 1-row matrix: families, cross-split families, and
-    leaked eval docs (val/test copies of any family that also has a
-    train copy). Exact integers."""
-    docs = load_table(spark, sf_dir, "documents")
-    fam = (
-        docs.select(
-            F.md5(F.col("text")).alias("fp"), _split_expr().alias("split")
-        )
-        .groupBy("fp")
-        .agg(
-            F.count(F.lit(1)).alias("n_copies"),
-            F.count_distinct("split").alias("n_splits"),
-            F.count_if(F.col("split") == "train").alias("n_train"),
-            F.count_if(F.col("split") != "train").alias("n_eval"),
-        )
-        .filter(F.col("n_copies") >= 2)
-    )
-    return fam.agg(
-        F.count(F.lit(1)).alias("dup_families"),
-        F.count_if(F.col("n_splits") >= 2).alias("cross_split_families"),
-        # coalesce: SUM over an empty family set is NULL on both
-        # engines; a leakage report should read 0
-        F.coalesce(
-            F.sum(
-                F.when(F.col("n_train") >= 1, F.col("n_eval")).otherwise(
-                    F.lit(0)
-                )
-            ),
-            F.lit(0).cast("long"),
-        ).alias("leaked_eval_docs"),
-    )
-
-
-ORACLE_SPLIT_LEAKAGE = f"""
-WITH assigned AS (
-  SELECT md5(text) AS fp,
-         {_SPLIT_SQL} AS split
-  FROM documents
-),
-fam AS (
-  SELECT fp, count(*) AS n_copies,
-         count(DISTINCT split) AS n_splits,
-         count(*) FILTER (WHERE split = 'train') AS n_train,
-         count(*) FILTER (WHERE split <> 'train') AS n_eval
-  FROM assigned GROUP BY fp
-  HAVING count(*) >= 2
-)
-SELECT count(*) AS dup_families,
-       count(*) FILTER (WHERE n_splits >= 2) AS cross_split_families,
-       COALESCE(SUM(CASE WHEN n_train >= 1 THEN n_eval ELSE 0 END),
-                0) AS leaked_eval_docs
-FROM fam
-"""
-
-
-def q_length_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source token-length truncation policy: exact p50/p95/p99
-    of document token counts on the bounded (source, n_tokens) value
-    grid, plus the exact share of tokens that a p95 cap would drop —
-    the number a curation pipeline needs before fixing max_seq_len.
-    Grid quantiles (conditional MIN under integer thresholds), then
-    one re-aggregation against the chosen cap; every output is an
-    integer or a double division of exact sums."""
-    # NULL text has no token length; its NULL n_tok would also ride the
-    # cumulative ORDER BY with engine-different placement (nullmeasure)
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull()
-    )
-    lens = docs.select(
-        "source", token_count_expr("text").cast("long").alias("n_tok")
-    )
-    grid = lens.groupBy("source", "n_tok").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    w = Window.partitionBy("source").orderBy("n_tok")
-    wp = Window.partitionBy("source")
-    cum = grid.select(
-        "source",
-        "n_tok",
-        "cnt",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(wp).alias("n"),
-    )
-    q = cum.groupBy("source").agg(
-        F.max("n").alias("n_docs"),
-        F.min(
-            F.when(2 * F.col("cum") >= F.col("n"), F.col("n_tok"))
-        ).alias("p50_tokens"),
-        F.min(
-            F.when(20 * F.col("cum") >= 19 * F.col("n"), F.col("n_tok"))
-        ).alias("p95_tokens"),
-        F.min(
-            F.when(100 * F.col("cum") >= 99 * F.col("n"), F.col("n_tok"))
-        ).alias("p99_tokens"),
-    )
-    capped = (
-        grid.join(q.select("source", "p95_tokens"), "source")
-        .groupBy("source")
-        .agg(
-            F.sum(F.col("n_tok") * F.col("cnt")).alias("total_tokens"),
-            F.sum(
-                F.when(
-                    F.col("n_tok") > F.col("p95_tokens"),
-                    (F.col("n_tok") - F.col("p95_tokens")) * F.col("cnt"),
-                ).otherwise(F.lit(0))
-            ).alias("dropped_tokens"),
-        )
-    )
-    return q.join(capped, "source").select(
-        "source",
-        "n_docs",
-        "p50_tokens",
-        "p95_tokens",
-        "p99_tokens",
-        "total_tokens",
-        "dropped_tokens",
-        (
-            F.col("dropped_tokens").cast("double")
-            / F.col("total_tokens").cast("double")
-        ).alias("dropped_share"),
-    )
-
-
-ORACLE_LENGTH_CAPS = r"""
-WITH lens AS (
-  SELECT source,
-         CAST(CASE WHEN length(trim(lower(text))) = 0 THEN 0
-              ELSE len(string_split_regex(trim(lower(text)), '\s+'))
-              END AS BIGINT) AS n_tok
-  FROM documents WHERE text IS NOT NULL
-),
-grid AS (
-  SELECT source, n_tok, count(*) AS cnt FROM lens GROUP BY 1, 2
-),
-cum AS (
-  SELECT source, n_tok, cnt,
-         SUM(cnt) OVER (PARTITION BY source ORDER BY n_tok
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         SUM(cnt) OVER (PARTITION BY source) AS n
-  FROM grid
-),
-q AS (
-  SELECT source, MAX(n) AS n_docs,
-         MIN(CASE WHEN 2 * cum >= n THEN n_tok END) AS p50_tokens,
-         MIN(CASE WHEN 20 * cum >= 19 * n THEN n_tok END)
-           AS p95_tokens,
-         MIN(CASE WHEN 100 * cum >= 99 * n THEN n_tok END)
-           AS p99_tokens
-  FROM cum GROUP BY source
-),
-capped AS (
-  SELECT g.source,
-         SUM(g.n_tok * g.cnt) AS total_tokens,
-         SUM(CASE WHEN g.n_tok > q.p95_tokens
-                  THEN (g.n_tok - q.p95_tokens) * g.cnt
-                  ELSE 0 END) AS dropped_tokens
-  FROM grid g JOIN q USING (source)
-  GROUP BY g.source
-)
-SELECT source, n_docs, p50_tokens, p95_tokens, p99_tokens,
-       total_tokens, dropped_tokens,
-       CAST(dropped_tokens AS DOUBLE) / CAST(total_tokens AS DOUBLE)
-         AS dropped_share
-FROM q JOIN capped USING (source)
-"""
-
-
-def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing 28-day rolling MEDIAN of daily net revenue — the
-    robust smoother percentile windows can't express natively (no
-    mergeable rolling-median aggregate exists): the day spine
-    self-joins to its trailing window (spine × 28 rows — the spine is
-    ~|days|, so the blow-up is bounded by the CALENDAR, not the fact
-    table), and each window's median is the grid-exact conditional
-    MIN. Emits month-level summaries (mean/max of the rolling median)
-    to keep the output bounded. Exact integers + one double mean."""
-    # NULL prices excluded: an all-NULL day's NULL rev would ride the
-    # median ordering with engine-different placement (nullmeasure)
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_extendedprice").isNotNull()
-    )
-    daily = (
-        li.select(
-            _day("l_shipdate").alias("d"),
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("rev"))
-    )
-    a = daily.select(F.col("d").alias("td"))
-    win = a.join(
-        daily,
-        (F.col("d") <= F.col("td")) & (F.col("d") > F.col("td") - 28),
-    )
-    ranked = win.select(
-        "td",
-        "rev",
-        F.count(F.lit(1))
-        .over(Window.partitionBy("td"))
-        .alias("n"),
-        F.row_number()
-        .over(Window.partitionBy("td").orderBy("rev", "d"))
-        .alias("rk"),
-    )
-    med = ranked.groupBy("td").agg(
-        F.min(
-            F.when(2 * F.col("rk") >= F.col("n"), F.col("rev"))
-        ).alias("med28")
-    )
-    return (
-        med.select(
-            F.expr("td div 30").alias("month_bucket"), "med28"
-        )
-        .groupBy("month_bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_days"),
-            F.max("med28").alias("max_med28"),
-            (
-                F.sum("med28").cast("double")
-                / F.count(F.lit(1)).cast("double")
-            ).alias("mean_med28"),
-        )
-    )
-
-
-ORACLE_ROLLING_MEDIAN = """
-WITH daily AS (
-  SELECT CAST(FLOOR(epoch_us(l_shipdate) / 86400000000) AS BIGINT)
-           AS d,
-         SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS rev
-  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1
-),
-win AS (
-  SELECT a.d AS td, b.rev, b.d
-  FROM daily a JOIN daily b
-    ON b.d <= a.d AND b.d > a.d - 28
-),
-ranked AS (
-  SELECT td, rev,
-         count(*) OVER (PARTITION BY td) AS n,
-         ROW_NUMBER() OVER (PARTITION BY td ORDER BY rev, d) AS rk
-  FROM win
-),
-med AS (
-  SELECT td, MIN(CASE WHEN 2 * rk >= n THEN rev END) AS med28
-  FROM ranked GROUP BY td
-)
-SELECT td // 30 AS month_bucket, count(*) AS n_days,
-       MAX(med28) AS max_med28,
-       CAST(SUM(med28) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-         AS mean_med28
-FROM med GROUP BY 1
-"""
-
-
-def q_ohlc_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M4-style visual downsampling (Jugel et al., VLDB 2014) of the
-    daily revenue series to weekly OHLC: per epoch-week the OPEN
-    (first day's value), HIGH, LOW, and CLOSE (last day's value) —
-    the four extrema that make a downsampled line render pixel-
-    identically to the full series. First/last resolve through
-    min_by/max_by on the exact day key (engine-deterministic: one
-    value per day by construction); all values exact cents. One
-    day-grid collapse + one week aggregate.  NULL prices excluded: an
-    all-NULL day's NULL rev would flow into MIN/MAX with engine-equal
-    skip semantics but min_by/max_by NULL payloads differ
-    (nullmeasure)."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_extendedprice").isNotNull()
-    )
-    daily = (
-        li.select(
-            _day("l_shipdate").alias("d"),
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("rev"))
-    )
-    return (
-        daily.select(F.expr("d div 7").alias("week"), "d", "rev")
-        .groupBy("week")
-        .agg(
-            F.count(F.lit(1)).alias("n_days"),
-            F.expr("min_by(rev, d)").alias("open_cents"),
-            F.max("rev").alias("high_cents"),
-            F.min("rev").alias("low_cents"),
-            F.expr("max_by(rev, d)").alias("close_cents"),
-        )
-    )
-
-
-ORACLE_OHLC_WEEKLY = """
-WITH daily AS (
-  SELECT CAST(FLOOR(epoch_us(l_shipdate) / 86400000000) AS BIGINT)
-           AS d,
-         SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS rev
-  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1
-)
-SELECT d // 7 AS week, count(*) AS n_days,
-       MIN_BY(rev, d) AS open_cents,
-       MAX(rev) AS high_cents,
-       MIN(rev) AS low_cents,
-       MAX_BY(rev, d) AS close_cents
-FROM daily GROUP BY 1
-"""
-
-
-def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-nation top-2 customers by account balance via a CORRELATED
-    LATERAL subquery — the SQL-surface twin of topk_per_group's
-    window-function plan (Spark 4 plans the lateral LIMIT as a
-    per-group TakeOrdered under a correlated join; same answer, the
-    declarative form analysts actually write). Deterministic
-    (c_acctbal cents DESC, c_name) order; balances emitted as exact
-    cents."""
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView(
-        "__lat_nation"
-    )
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "__lat_customer"
-    )
-    return spark.sql(
-        """
-        SELECT n_name, t.c_name, t.bal_cents
-        FROM __lat_nation, LATERAL (
-          SELECT c_name,
-                 CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT)
-                   AS bal_cents
-          FROM __lat_customer
-          WHERE c_nationkey = n_nationkey
-          ORDER BY bal_cents DESC, c_name LIMIT 2
-        ) t
-        """
-    )
-
-
-ORACLE_LATERAL_TOPK = """
-SELECT n_name, t.c_name, t.bal_cents
-FROM nation, LATERAL (
-  SELECT c_name,
-         CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_cents
-  FROM customer
-  WHERE c_nationkey = n_nationkey
-  ORDER BY bal_cents DESC, c_name LIMIT 2
-) t
-"""
-
-
-def q_invoice_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-table arithmetic reconciliation: does each order header's
-    o_totalprice equal the sum of its line extended prices? Both sides
-    reduce to exact cents, the comparison is pure integer, and the
-    report buckets orders by signed relative deviation (exact
-    10000·|diff| vs total comparisons — basis points without a float):
-    exact match / within 1% / beyond — plus the worst absolute
-    mismatch. The third audit family (fk_orphans = keys,
-    status_consistency = categories, this = money)."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    lsum = (
-        li.select(
-            "l_orderkey",
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("l_orderkey")
-        .agg(F.sum("cents").alias("line_cents"))
-    )
-    j = o.select(
-        "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("hdr_cents"),
-    ).join(lsum, F.col("o_orderkey") == F.col("l_orderkey"))
-    diff = F.abs(F.col("hdr_cents") - F.col("line_cents"))
-    bucket = (
-        F.when(diff == 0, F.lit("exact"))
-        .when(10000 * diff <= 100 * F.col("hdr_cents"), F.lit("within_1pct"))
-        .otherwise(F.lit("beyond_1pct"))
-    )
-    return j.groupBy(bucket.alias("recon_bucket")).agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.max(diff).alias("worst_abs_diff_cents"),
-        F.sum(diff).alias("total_abs_diff_cents"),
-    )
-
-
-ORACLE_INVOICE_RECONCILIATION = """
-WITH lsum AS (
-  SELECT l_orderkey,
-         SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT))
-           AS line_cents
-  FROM lineitem GROUP BY l_orderkey
-),
-j AS (
-  SELECT CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS hdr_cents,
-         line_cents,
-         abs(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)
-             - line_cents) AS diff
-  FROM orders JOIN lsum ON o_orderkey = l_orderkey
-)
-SELECT CASE WHEN diff = 0 THEN 'exact'
-            WHEN 10000 * diff <= 100 * hdr_cents THEN 'within_1pct'
-            ELSE 'beyond_1pct' END AS recon_bucket,
-       count(*) AS n_orders,
-       MAX(diff) AS worst_abs_diff_cents,
-       SUM(diff) AS total_abs_diff_cents
-FROM j GROUP BY 1
-"""
-
-
-def _ppjoin_neardup_plan(
-    spark: SparkSession, sf_dir: str, max_df: int | None
-) -> DataFrame:
-    """Shared PPJoin plan; ``max_df`` prunes corpus-common shingles out
-    of candidate GENERATION (None = provably-complete prefix join)."""
-    from fink_broker_spark.functions.text import shingles_from_tokens_expr
-
-    docs = load_table(spark, sf_dir, "documents")
-    # set elements are 3-gram SHINGLES, not words: the synthetic corpus
-    # has a ~31-word vocabulary, so word sets are tiny and every prefix
-    # token is corpus-common — 6.5M candidates at sf0.1 (measured).
-    # Shingles give the discriminative universe prefix filtering needs
-    # (and the same element space as jaccard_neardup/minhash-LSH).
-    # canonical row per document: a re-ingested duplicate row (duprows
-    # driftlab) is one document — df must count DOCUMENTS per shingle,
-    # and the verify joins must not fan out over repeated array rows.
-    # The survivor pick is min(text) after the empty-body filter (not
-    # dropDuplicates' arbitrary row), so a re-ingest that DRIFTS the
-    # body (same doc_id, different text — ADVICE r7 #3) selects the
-    # same shingle set on both engines.  Same shuffle as the old
-    # dropDuplicates(["doc_id"]) — one doc_id-keyed aggregate.
-    # keyed spread (guide §2.5): HashPartitioning(doc_id) satisfies the
-    # canonical-row aggregate's clustering, so min(text) + tokenize +
-    # shingle-sort all run wide off this one exchange — the aggregate's
-    # own AQE-sized exchange coalesced to ONE task at bench scale and
-    # serialized the whole 3.9 s shingle build (profiled); no-op when
-    # the scan has ≥ cores splits
-    from fink_broker_spark.plans.partitioning import ensure_keyed_parallelism
-
-    arrs = (
-        ensure_keyed_parallelism(
-            docs.filter(
-                F.length(F.trim(F.lower(F.col("text")))) > 0
-            ).select("doc_id", "text"),
-            "doc_id",
-        )
-        .groupBy("doc_id")
-        .agg(F.min("text").alias("text"))
-    ).select(
-        "doc_id", tokens_expr("text").alias("toks")
-    ).select(
-        "doc_id",
-        F.array_sort(
-            F.array_distinct(shingles_from_tokens_expr("toks", 3))
-        ).alias("arr"),
-    ).filter(F.size("arr") > 0)
-    # materialize the shingle-array relation ONCE: the subtree feeds
-    # four consumers (tok→dfreq, tok→ranked, and the two verify sides
-    # aa/ab), so uncut lineage tokenizes+shingles the corpus 4× — the
-    # dominant CPU at 100 TB where the corpus dwarfs any cache (the
-    # r9 benchdiff probe measured 6.6→5.9 s at sf0.1 even fully
-    # page-cached; same ext/dedup.py materialize-reuse pattern)
-    arrs = _materialize(arrs)
-    # |set| is size(arr) for free after array_distinct — carrying it as
-    # a column removes the per-doc count aggregate (a whole shuffle)
-    # and the two sizes joins the first draft paid (r6 profile: the
-    # base plan, not candidate volume, dominated this query's cost)
-    tok = arrs.select(
-        "doc_id", F.size("arr").alias("sz"), F.explode("arr").alias("token")
-    )
-    dfreq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    ranked = tok.join(dfreq, "token").select(
-        "doc_id",
-        "token",
-        "df",
-        "sz",
-        F.row_number()
-        .over(Window.partitionBy("doc_id").orderBy("df", "token"))
-        .alias("rk"),
-    )
-    prefix = ranked.filter(
-        F.col("rk") <= F.col("sz") - F.expr("(4 * sz + 4) div 5") + 1
-    )
-    if max_df is not None:
-        # production pruning: a shingle shared by > max_df docs cannot
-        # discriminate near-duplicates; dropping it bounds the posting
-        # join at Σ min(df, max_df)² instead of Σ df².  Deterministic
-        # (global df, integer compare) — the pruned variant is still
-        # exactly oracle-checkable; completeness is what's traded.
-        prefix = prefix.filter(F.col("df") <= max_df)
-    prefix = prefix.select("doc_id", "token", "sz")
-    cand = (
-        prefix.select(
-            F.col("doc_id").alias("da"), "token", F.col("sz").alias("la")
-        )
-        .join(
-            prefix.select(
-                F.col("doc_id").alias("db"), "token",
-                F.col("sz").alias("lb"),
-            ),
-            "token",
-        )
-        .filter(
-            (F.col("da") < F.col("db"))
-            # length filter: |a|, |b| within the 0.8 Jaccard ratio band
-            & (4 * F.col("la") <= 5 * F.col("lb"))
-            & (4 * F.col("lb") <= 5 * F.col("la"))
-        )
-        .select("da", "db")
-        .distinct()
-    )
-    # verify via codegen array_intersect over the per-doc sorted
-    # shingle arrays: the join-count formulation shuffles
-    # |cand| x |set| rows; carrying the two arrays to each candidate
-    # pair keeps the intersection map-side. The DuckDB oracle keeps
-    # the join-count formulation — same RESULT, the oracle is a spec,
-    # not a plan.
-    aa = arrs.select(F.col("doc_id").alias("da"), F.col("arr").alias("arr_a"))
-    ab = arrs.select(F.col("doc_id").alias("db"), F.col("arr").alias("arr_b"))
-    shared = (
-        cand.join(aa, "da")
-        .join(ab, "db")
-        .select(
-            "da",
-            "db",
-            F.size(F.array_intersect("arr_a", "arr_b")).cast("long").alias(
-                "n_shared"
-            ),
-            # set sizes ride along from the arrays — no sizes relation,
-            # no extra joins
-            F.size("arr_a").cast("long").alias("sza"),
-            F.size("arr_b").cast("long").alias("szb"),
-        )
-    )
-    return (
-        shared.filter(
-            5 * F.col("n_shared")
-            >= 4 * (F.col("sza") + F.col("szb") - F.col("n_shared"))
-        )
-        .select(
-            "da",
-            "db",
-            "n_shared",
-            "sza",
-            "szb",
-            (
-                F.col("n_shared").cast("double")
-                / (
-                    F.col("sza") + F.col("szb") - F.col("n_shared")
-                ).cast("double")
-            ).alias("jaccard"),
-        )
-        .orderBy("da", "db")
-        .limit(200)
-    )
-
-
-def q_ppjoin_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set-similarity self-join with PPJoin-style prefix + length
-    filtering (Xiao et al., WWW 2008): 3-gram-shingle-set Jaccard
-    ≥ 0.8 document pairs, where candidates meet ONLY through a shared
-    shingle inside each set's PREFIX — the first |s| − ⌈0.8·|s|⌉ + 1 tokens in
-    the canonical rarest-first order — AND pass the length filter
-    (4·|a| ≤ 5·|b| ∧ 4·|b| ≤ 5·|a|), both provably complete for the
-    threshold (jaccard_neardup's shingle-bucket and minhash-LSH are
-    the other candidate regimes of this family; three strategies, one
-    verify semantics). A first draft at t = 0.5 kept half of every
-    set in the prefix and blew the candidate join up 50× at sf0.1 —
-    the prefix length IS the scale lever, which is why production
-    near-dup thresholds sit at 0.8+. The prefix bound, rarest-first
-    order (global df ascending, token tiebreak), verification
-    predicate (5·shared ≥ 4·(|a| + |b| − shared) — Jaccard ≥ 0.8 as a
-    pure integer inequality), and shared-token counts are all exact
-    integer algebra; only the reported jaccard is a terminal double
-    of exact counts.  This provably-complete form is the CORRECTNESS
-    twin; the bench default is :func:`q_ppjoin_neardup_pruned` (the
-    production regime — see BENCH_SKIP)."""
-    return _ppjoin_neardup_plan(spark, sf_dir, max_df=None)
-
-
-def q_ppjoin_neardup_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production PPJoin regime: identical prefix+length+verify plan,
-    with corpus-common shingles (global df > 50) pruned from candidate
-    generation.  The posting join's candidate count is Σ prefix-df²;
-    capping df bounds the quadratic term at the only place it can
-    explode — a shingle shared by hundreds of documents generates
-    hundreds² of candidate pairs while carrying no near-dup signal at
-    Jaccard ≥ 0.8.  Verification is still the exact integer predicate
-    over full shingle sets, so every emitted pair is a true positive;
-    completeness is what's traded (a pair must share at least one RARE
-    prefix shingle to be found).  Deterministic ⇒ still exactly
-    oracle-checked."""
-    return _ppjoin_neardup_plan(spark, sf_dir, max_df=50)
-
-
-def _ppjoin_oracle(max_df: int | None) -> str:
-    prune = f" AND df <= {max_df}" if max_df is not None else ""
-    return rf"""
-WITH uniq AS (
-  -- canonical row per document: min(text) after the empty-body filter
-  -- mirrors the engine's deterministic survivor pick (duprows/drift)
-  SELECT doc_id, min(text) AS text
-  FROM documents WHERE length(trim(lower(text))) > 0
-  GROUP BY doc_id
-),
-words AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
-  FROM uniq
-),
-tok AS (
-  SELECT DISTINCT doc_id,
-         array_to_string(toks[i:i+2], ' ') AS token
-  FROM words, range(1, 100000) t(i) WHERE i <= len(toks) - 2
-),
-dfreq AS (SELECT token, count(*) AS df FROM tok GROUP BY token),
-sizes AS (SELECT doc_id, count(*) AS sz FROM tok GROUP BY doc_id),
-ranked AS (
-  SELECT t.doc_id, t.token, d.df, s.sz,
-         ROW_NUMBER() OVER (PARTITION BY t.doc_id
-             ORDER BY d.df, t.token) AS rk
-  FROM tok t JOIN dfreq d USING (token) JOIN sizes s USING (doc_id)
-),
-prefix AS (
-  SELECT doc_id, token, sz FROM ranked
-  WHERE rk <= sz - ((4 * sz + 4) // 5) + 1{prune}
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-  FROM prefix a JOIN prefix b USING (token)
-  WHERE a.doc_id < b.doc_id
-    AND 4 * a.sz <= 5 * b.sz AND 4 * b.sz <= 5 * a.sz
-),
-shared AS (
-  SELECT c.da, c.db, count(*) AS n_shared
-  FROM cand c
-  JOIN tok ta ON ta.doc_id = c.da
-  JOIN tok tb ON tb.doc_id = c.db AND tb.token = ta.token
-  GROUP BY c.da, c.db
-)
-SELECT s.da, s.db, s.n_shared, a.sz AS sza, b.sz AS szb,
-       CAST(s.n_shared AS DOUBLE)
-         / CAST(a.sz + b.sz - s.n_shared AS DOUBLE) AS jaccard
-FROM shared s
-JOIN sizes a ON a.doc_id = s.da
-JOIN sizes b ON b.doc_id = s.db
-WHERE 5 * s.n_shared >= 4 * (a.sz + b.sz - s.n_shared)
-ORDER BY s.da, s.db
-LIMIT 200
-"""
-
-
-ORACLE_PPJOIN_NEARDUP = _ppjoin_oracle(None)
-ORACLE_PPJOIN_NEARDUP_PRUNED = _ppjoin_oracle(50)
-
-
-# --------------------------------------------------------------------------
-# round 6 — lakehouse/dimension lifecycle + corpus diversity + skyline
-# --------------------------------------------------------------------------
-
-def q_source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-diversity audit: pairwise Jaccard overlap of the 3-gram
-    shingle VOCABULARIES of every document-source pair — the standard
-    check that two crawl slices are not near-copies of each other
-    before mixing them into one training corpus.
-
-    Plan: tokenize+shingle once, collapse to the DISTINCT
-    (source, shingle) relation (vocabulary-bounded — this is the only
-    fact-sized shuffle), per-source vocabulary counts, then a
-    shingle-keyed self-join whose output is bounded by |sources|²
-    rows.  Counts are exact BIGINTs; only the reported jaccard is a
-    terminal double of exact integers (identical division both
-    engines)."""
-    from fink_broker_spark.functions.text import shingles_from_tokens_expr
-
-    docs = load_table(spark, sf_dir, "documents")
-    # tokens materialize into a named column first: a HOF lambda
-    # re-evaluates captured subexpressions per element, so an inlined
-    # tokenize would re-split once per shingle
-    # spread the single-split scan so tokenize+shingle run wide (guide
-    # §2.5), and materialize the vocabulary ONCE — it feeds three
-    # consumers (sizes + both self-join sides), which otherwise
-    # re-tokenize the corpus when static exchange reuse does not fire
-    # lineage-truncation tradeoff: see _materialize
-    vocab = _materialize(
-        ensure_scan_parallelism(docs.select("source", "text"))
-        .select("source", tokens_expr("text").alias("toks"))
-        .select(
-            "source",
-            F.explode(
-                F.array_distinct(shingles_from_tokens_expr("toks", 3))
-            ).alias("shingle"),
-        )
-        .distinct()
-    )
-    sizes = vocab.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    shared = (
-        vocab.select(F.col("source").alias("source_a"), "shingle")
-        .join(
-            vocab.select(F.col("source").alias("source_b"), "shingle"),
-            "shingle",
-        )
-        .filter(F.col("source_a") < F.col("source_b"))
-        .groupBy("source_a", "source_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    sa = sizes.select(F.col("source").alias("source_a"), F.col("n").alias("n_a"))
-    sb = sizes.select(F.col("source").alias("source_b"), F.col("n").alias("n_b"))
-    return (
-        shared.join(F.broadcast(sa), "source_a")
-        .join(F.broadcast(sb), "source_b")
-        .select(
-            "source_a",
-            "source_b",
-            "n_shared",
-            "n_a",
-            "n_b",
-            (
-                F.col("n_shared").cast("double")
-                / (
-                    F.col("n_a") + F.col("n_b") - F.col("n_shared")
-                ).cast("double")
-            ).alias("jaccard"),
-        )
-    )
-
-
-ORACLE_SOURCE_NGRAM_OVERLAP = r"""
-WITH words AS (
-  SELECT source, string_split_regex(trim(lower(text)), '\s+') AS toks
-  FROM documents WHERE length(trim(lower(text))) > 0
-),
-vocab AS (
-  SELECT DISTINCT source, array_to_string(toks[i:i+2], ' ') AS shingle
-  FROM words, range(1, 100000) t(i) WHERE i <= len(toks) - 2
-),
-sizes AS (SELECT source, count(*) AS n FROM vocab GROUP BY source),
-shared AS (
-  SELECT a.source AS source_a, b.source AS source_b, count(*) AS n_shared
-  FROM vocab a JOIN vocab b USING (shingle)
-  WHERE a.source < b.source
-  GROUP BY 1, 2
-)
-SELECT source_a, source_b, CAST(n_shared AS BIGINT) AS n_shared,
-       sa.n AS n_a, sb.n AS n_b,
-       CAST(n_shared AS DOUBLE) / CAST(sa.n + sb.n - n_shared AS DOUBLE)
-         AS jaccard
-FROM shared
-JOIN sizes sa ON sa.source = source_a
-JOIN sizes sb ON sb.source = source_b
-"""
-
-
-def q_gdpr_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deletion-impact audit (right-to-erasure dry run): a deterministic
-    request set (``c_custkey % 97 = 0``) and the row counts a cascading
-    delete would touch at each hop — customers, their orders, those
-    orders' lineitems, their events.  The PII-pipeline primitive: know
-    the blast radius BEFORE mutating 100 TB.
-
-    Plan: each hop is one semi-join down the FK chain, counted with a
-    single aggregate; only the genuinely dimension-sized request-key
-    set (~1 % of CUSTOMER) broadcasts — the orders hop's key set is
-    FACT-derived (~1 % of ORDERS, unbounded at 100 TB), so the
-    lineitem semi-join is a plain shuffle join and AQE is free to
-    pick broadcast at runtime when the hop happens to be small
-    (ADVICE r6: a forced broadcast there OOMs the driver at scale).
-    Counts are exact BIGINTs."""
-    cu = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_custkey") % 97 == 0
-    ).select(F.col("c_custkey").alias("k"))
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    ev = load_table(spark, sf_dir, "events")
-    del_orders = o.join(
-        F.broadcast(cu), o["o_custkey"] == cu["k"], "left_semi"
-    )
-    okeys = del_orders.select(F.col("o_orderkey").alias("ok"))
-    del_lines = li.join(
-        okeys, li["l_orderkey"] == okeys["ok"], "left_semi"
-    )
-    del_events = ev.join(
-        F.broadcast(cu), ev["user_id"] == cu["k"], "left_semi"
-    )
-
-    def cnt(df, entity):
-        return df.agg(F.count(F.lit(1)).alias("n_rows")).select(
-            F.lit(entity).alias("entity"), "n_rows"
-        )
-
-    out = cnt(cu, "customer")
-    for df, name in (
-        (del_orders, "orders"),
-        (del_lines, "lineitem"),
-        (del_events, "events"),
-    ):
-        out = out.unionAll(cnt(df, name))
-    return out
-
-
-ORACLE_GDPR_CASCADE = """
-WITH req AS (SELECT c_custkey AS k FROM customer WHERE c_custkey % 97 = 0)
-SELECT 'customer' AS entity, CAST(count(*) AS BIGINT) AS n_rows FROM req
-UNION ALL
-SELECT 'orders', CAST(count(*) AS BIGINT) FROM orders
-WHERE o_custkey IN (SELECT k FROM req)
-UNION ALL
-SELECT 'lineitem', CAST(count(*) AS BIGINT) FROM lineitem
-WHERE l_orderkey IN (
-  SELECT o_orderkey FROM orders WHERE o_custkey IN (SELECT k FROM req))
-UNION ALL
-SELECT 'events', CAST(count(*) AS BIGINT) FROM events
-WHERE user_id IN (SELECT k FROM req)
-"""
-
-
-def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE INTO semantics (the lakehouse upsert) as a declarative
-    plan: a change batch derived from events applies onto the customer
-    snapshot — users with an ``error`` event are DELETEs, other active
-    users UPSERT their purchase-value delta, untouched customers pass
-    through.  Emits the post-merge audit: per action, row count and
-    total balance cents.
-
-    Plan: the source batch is one events aggregate; target and source
-    meet in a single full-outer join on the key (exactly how Delta/
-    Iceberg execute MERGE: one join, per-row action resolution);
-    the audit is a 4-row aggregate.  All cents ride the identical
-    ``floor(x·100 + 0.5)`` integer tree on both engines.  NULL-user
-    events are excluded — a MERGE key must be a key."""
-    cu = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("k"),
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("bal_cents"),
-    )
-    src = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("user_id").isNotNull())
-        .groupBy(F.col("user_id").alias("k"))
-        .agg(
-            F.sum(
-                # non-finite purchase values fold to NULL (SUM skips):
-                # Spark floor(double) silently maps NaN→0 / Inf→
-                # Long.MAX where DuckDB's BIGINT cast hard-errors
-                # (nanemb driftlab layout, r10); the row still counts
-                # for has_error, so only the junk cents are excluded
-                F.when(
-                    F.col("event_type") == "purchase",
-                    F.when(
-                        _finite("value"),
-                        F.floor(F.col("value") * 100 + F.lit(0.5)).cast(
-                            "long"
-                        ),
-                    ),
-                ).otherwise(F.lit(0))
-            ).alias("delta_cents"),
-            F.max(
-                F.when(F.col("event_type") == "error", 1).otherwise(0)
-            ).alias("has_error"),
-        )
-    )
-    merged = cu.withColumnRenamed("k", "tk").join(
-        src.withColumnRenamed("k", "sk"),
-        F.col("tk") == F.col("sk"),
-        "full_outer",
-    )
-    action = (
-        F.when(
-            F.col("tk").isNotNull()
-            & F.col("sk").isNotNull()
-            & (F.col("has_error") == 1),
-            F.lit("deleted"),
-        )
-        .when(
-            F.col("tk").isNotNull() & F.col("sk").isNotNull(),
-            F.lit("updated"),
-        )
-        .when(F.col("sk").isNotNull(), F.lit("inserted"))
-        .otherwise(F.lit("unchanged"))
-    )
-    balance = (
-        F.when(action == "deleted", F.lit(0))
-        .when(action == "updated", F.col("bal_cents") + F.col("delta_cents"))
-        .when(action == "inserted", F.col("delta_cents"))
-        .otherwise(F.col("bal_cents"))
-    )
-    return (
-        merged.select(action.alias("action"), balance.alias("bal"))
-        .groupBy("action")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("bal").alias("sum_balance_cents"),
-        )
-    )
-
-
-ORACLE_MERGE_UPSERT = """
-WITH tgt AS (
-  SELECT c_custkey AS k,
-         CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_cents
-  FROM customer
-), src AS (
-  SELECT user_id AS k,
-         -- non-finite purchase values fold to NULL (SUM skips),
-         -- mirroring the engine (nanemb driftlab layout, r10)
-         CAST(SUM(CASE WHEN event_type = 'purchase'
-                  THEN CASE WHEN isfinite(value)
-                       THEN CAST(FLOOR(value * 100 + 0.5) AS BIGINT) END
-                  ELSE 0 END) AS BIGINT) AS delta_cents,
-         MAX(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS has_error
-  FROM events WHERE user_id IS NOT NULL GROUP BY user_id
-), merged AS (
-  SELECT tgt.k AS tk, src.k AS sk, bal_cents, delta_cents, has_error
-  FROM tgt FULL OUTER JOIN src ON tgt.k = src.k
-), resolved AS (
-  SELECT CASE
-           WHEN tk IS NOT NULL AND sk IS NOT NULL AND has_error = 1
-             THEN 'deleted'
-           WHEN tk IS NOT NULL AND sk IS NOT NULL THEN 'updated'
-           WHEN sk IS NOT NULL THEN 'inserted'
-           ELSE 'unchanged' END AS action,
-         CASE
-           WHEN tk IS NOT NULL AND sk IS NOT NULL AND has_error = 1
-             THEN 0
-           WHEN tk IS NOT NULL AND sk IS NOT NULL
-             THEN bal_cents + delta_cents
-           WHEN sk IS NOT NULL THEN delta_cents
-           ELSE bal_cents END AS bal
-  FROM merged
-)
-SELECT action, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(SUM(bal) AS BIGINT) AS sum_balance_cents
-FROM resolved GROUP BY action
-"""
-
-
-def q_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Kendall trend test per order priority: the S statistic
-    (Σ sign(x_j − x_i) over all i<j pairs of the 30-day revenue
-    series) — the standard non-parametric monotone-trend detector a
-    monitoring pipeline runs before alerting on drift.
-
-    Plan: ONE fact-table aggregate to the 30-day bucket spine
-    (calendar-bounded — ~80 rows per priority regardless of data
-    volume), then the pair self-join runs entirely on that spine:
-    |buckets|²/2 rows per priority, never the fact table.  Every
-    emitted value is an exact integer (cents sums, pair counts, the
-    ±1 sign sum), so the engines agree bit-for-bit."""
-    od = load_table(spark, sf_dir, "orders")
-    daily = od.groupBy(
-        F.col("o_orderpriority").alias("p"),
-        # integer floor-division bucketing — identical `div` ≡ `//`
-        # trees on both engines (epochs are positive)
-        F.expr("unix_micros(o_orderdate) div 2592000000000").alias(
-            "bucket"
-        ),
-    ).agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-        ).alias("cents")
-    )
-    a = daily.select("p", F.col("bucket").alias("i"), F.col("cents").alias("xi"))
-    b = daily.select("p", F.col("bucket").alias("j"), F.col("cents").alias("xj"))
-    sgn = (
-        F.when(F.col("xj") > F.col("xi"), 1)
-        .when(F.col("xj") < F.col("xi"), -1)
-        .otherwise(0)
-    )
-    pairs = (
-        a.join(b, "p")
-        .filter(F.col("i") < F.col("j"))
-        .groupBy("p")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.sum(sgn).cast("long").alias("s_stat"),
-        )
-    )
-    nb = daily.groupBy("p").agg(F.count(F.lit(1)).alias("n_buckets"))
-    # LEFT join from the bucket counts: a single-bucket group has NO
-    # pairs (the pair join is empty) but its statistic is defined —
-    # S = 0 over 0 pairs — not "absent" (a hypothesis property test
-    # caught the inner join silently dropping it)
-    return nb.join(pairs, "p", "left").select(
-        F.col("p").alias("priority"),
-        "n_buckets",
-        F.coalesce("n_pairs", F.lit(0)).cast("long").alias("n_pairs"),
-        F.coalesce("s_stat", F.lit(0)).cast("long").alias("s_stat"),
-    )
-
-
-ORACLE_MANN_KENDALL_TREND = """
-WITH daily AS (
-  SELECT o_orderpriority AS p,
-         epoch_us(o_orderdate) // 2592000000000 AS bucket,
-         CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-              AS BIGINT) AS cents
-  FROM orders GROUP BY 1, 2
-), pairs AS (
-  SELECT a.p,
-         CASE WHEN b.cents > a.cents THEN 1
-              WHEN b.cents < a.cents THEN -1 ELSE 0 END AS sgn
-  FROM daily a JOIN daily b ON a.p = b.p AND a.bucket < b.bucket
-), pagg AS (
-  SELECT p, CAST(count(*) AS BIGINT) AS n_pairs,
-         CAST(SUM(sgn) AS BIGINT) AS s_stat
-  FROM pairs GROUP BY p
-), nb AS (
-  SELECT p, CAST(count(*) AS BIGINT) AS n_buckets FROM daily GROUP BY p
-)
--- LEFT join: a single-bucket group has no pairs but S = 0 is defined
-SELECT nb.p AS priority, nb.n_buckets,
-       CAST(coalesce(pagg.n_pairs, 0) AS BIGINT) AS n_pairs,
-       CAST(coalesce(pagg.s_stat, 0) AS BIGINT) AS s_stat
-FROM nb LEFT JOIN pagg ON nb.p = pagg.p
-"""
-
-
-def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald-Wolfowitz runs test per order priority: over the daily
-    revenue series, count up-days, down-days, and the number of RUNS
-    of consecutive same-direction moves — too few runs = the series
-    is trending/sticky, too many = oscillating; the randomness check
-    behind change-detection dashboards.
-
-    Plan: one fact aggregate to the day spine (calendar-bounded),
-    then two ROWS-window passes over that spine — lag for the
-    day-over-day sign, a second lag over the zero-filtered sign
-    sequence for run boundaries.  Partitions are the 5 priorities ×
-    ~2.4k spine days: bounded state no matter the fact volume.  All
-    outputs are exact integers."""
-    od = load_table(spark, sf_dir, "orders")
-    daily = od.groupBy(
-        F.col("o_orderpriority").alias("p"),
-        _day("o_orderdate").alias("d"),
-    ).agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-        ).alias("cents")
-    )
-    w = Window.partitionBy("p").orderBy("d")
-    moves = (
-        daily.withColumn("prev", F.lag("cents").over(w))
-        .filter(F.col("prev").isNotNull() & (F.col("cents") != F.col("prev")))
-        .select(
-            "p",
-            "d",
-            F.when(F.col("cents") > F.col("prev"), 1)
-            .otherwise(-1)
-            .alias("s"),
-        )
-    )
-    runs = moves.withColumn("ps", F.lag("s").over(w))
-    boundary = F.when(
-        F.col("ps").isNull() | (F.col("s") != F.col("ps")), 1
-    ).otherwise(0)
-    return runs.groupBy("p").agg(
-        F.sum(F.when(F.col("s") == 1, 1).otherwise(0))
-        .cast("long")
-        .alias("n_up"),
-        F.sum(F.when(F.col("s") == -1, 1).otherwise(0))
-        .cast("long")
-        .alias("n_down"),
-        F.sum(boundary).cast("long").alias("n_runs"),
-    ).select(F.col("p").alias("priority"), "n_up", "n_down", "n_runs")
-
-
-ORACLE_RUNS_TEST = """
-WITH daily AS (
-  SELECT o_orderpriority AS p,
-         CAST(FLOOR(epoch_us(o_orderdate) / 86400000000) AS BIGINT) AS d,
-         CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-              AS BIGINT) AS cents
-  FROM orders GROUP BY 1, 2
-), lagged AS (
-  SELECT p, d, cents,
-         lag(cents) OVER (PARTITION BY p ORDER BY d) AS prev
-  FROM daily
-), moves AS (
-  SELECT p, d,
-         CASE WHEN cents > prev THEN 1 ELSE -1 END AS s
-  FROM lagged WHERE prev IS NOT NULL AND cents <> prev
-), runs AS (
-  SELECT p, s, lag(s) OVER (PARTITION BY p ORDER BY d) AS ps
-  FROM moves
-)
-SELECT p AS priority,
-       CAST(SUM(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_up,
-       CAST(SUM(CASE WHEN s = -1 THEN 1 ELSE 0 END) AS BIGINT) AS n_down,
-       CAST(SUM(CASE WHEN ps IS NULL OR s <> ps THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_runs
-FROM runs GROUP BY p
-"""
-
-
-def q_survival_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kaplan-Meier risk table over customer order lifespans: per
-    30-day lifespan bucket, how many customers are still AT RISK, how
-    many churned in that bucket (observed: last order ≥ 90 days before
-    the corpus end), and how many are right-censored (still active) —
-    the survival-analysis input a retention model trains on.
-
-    Plan: one orders aggregate to per-customer (first, last) epochs, a
-    1-row corpus-max-date broadcast for the censoring cut, a bucket
-    aggregate, then the descending at-risk cumulative sum runs on the
-    ~90-row bucket spine only.  NULL custkeys (the nullfk layout) are
-    excluded on both sides — an anonymous order has no lifespan.  All
-    time math is integer µs floor-division; every output is an exact
-    integer."""
-    od = load_table(spark, sf_dir, "orders")
-    per = (
-        od.filter(F.col("o_custkey").isNotNull())
-        .groupBy(F.col("o_custkey").alias("k"))
-        .agg(
-            F.min(F.unix_micros("o_orderdate")).alias("first_us"),
-            F.max(F.unix_micros("o_orderdate")).alias("last_us"),
-        )
-    )
-    mx = od.agg(F.max(F.unix_micros("o_orderdate")).alias("max_us"))
-    staged = per.crossJoin(F.broadcast(mx)).select(
-        F.expr("((last_us - first_us) div 86400000000) div 30").alias(
-            "bucket"
-        ),
-        F.when(
-            F.expr("(max_us - last_us) div 86400000000") < 90, 1
-        )
-        .otherwise(0)
-        .alias("cens"),
-    )
-    tab = staged.groupBy("bucket").agg(
-        F.sum(1 - F.col("cens")).cast("long").alias("n_events"),
-        F.sum("cens").cast("long").alias("n_censored"),
-    )
-    w = (
-        Window.orderBy(F.col("bucket").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return tab.select(
-        "bucket",
-        F.sum(F.col("n_events") + F.col("n_censored"))
-        .over(w)
-        .cast("long")
-        .alias("n_at_risk"),
-        "n_events",
-        "n_censored",
-    )
-
-
-ORACLE_SURVIVAL_COUNTS = """
-WITH per AS (
-  SELECT o_custkey AS k,
-         min(epoch_us(o_orderdate)) AS first_us,
-         max(epoch_us(o_orderdate)) AS last_us
-  FROM orders WHERE o_custkey IS NOT NULL GROUP BY 1
-), mx AS (
-  SELECT max(epoch_us(o_orderdate)) AS max_us FROM orders
-), staged AS (
-  SELECT ((last_us - first_us) // 86400000000) // 30 AS bucket,
-         CASE WHEN (max_us - last_us) // 86400000000 < 90
-              THEN 1 ELSE 0 END AS cens
-  FROM per, mx
-), tab AS (
-  SELECT bucket,
-         CAST(SUM(1 - cens) AS BIGINT) AS n_events,
-         CAST(SUM(cens) AS BIGINT) AS n_censored
-  FROM staged GROUP BY bucket
-)
-SELECT bucket,
-       CAST(SUM(n_events + n_censored)
-            OVER (ORDER BY bucket DESC
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS n_at_risk,
-       n_events, n_censored
-FROM tab
-"""
-
-
-def q_sigma_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-nation 2σ outlier census over customer balances — the
-    grouped anomaly gate a data-quality monitor applies per partition
-    — computed WITHOUT any floating-point: |x − mean| > 2σ is
-    rewritten as the exact integer inequality
-    (x·n − S)² > 4·(n·Q − S²) over cents (S = Σx, Q = Σx²), so the
-    comparison can never straddle a rounding boundary between engines.
-
-    Plan: one groupBy for the (S, Q, n) moments (25 rows, broadcast
-    back), one re-scan for the per-row test — two fact passes, zero
-    shuffles beyond the 25-row aggregate.  The squares AND the second
-    moment Q ride DECIMAL(38,0) on the Spark side and HUGEINT on the
-    oracle side (internal only — outputs are plain BIGINTs): ~10²²
-    peak magnitude, 16 orders of headroom.  Q must NOT be narrowed to
-    BIGINT: per-group Σx² crosses 2⁶³ at ~3·10⁷ rows/group (~SF 5000),
-    well inside the 100 TB regime."""
-    cu = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_acctbal").isNotNull()
-    )
-    staged = cu.select(
-        F.col("c_nationkey").alias("nation"),
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("x"),
-    )
-    stats = staged.groupBy("nation").agg(
-        F.sum("x").cast("long").alias("s"),
-        F.sum(
-            F.col("x").cast("decimal(19,0)") * F.col("x").cast("decimal(19,0)")
-        )
-        .cast("decimal(38,0)")
-        .alias("q"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    joined = staged.join(F.broadcast(stats), "nation")
-    diff = (F.col("x") * F.col("n") - F.col("s")).cast("decimal(19,0)")
-    lhs = diff * diff
-    rhs = (
-        F.col("n").cast("decimal(19,0)") * F.col("q")
-        - F.col("s").cast("decimal(19,0)") * F.col("s").cast("decimal(19,0)")
-    ) * F.lit(4)
-    return joined.groupBy("nation").agg(
-        F.max("n").alias("n_customers"),
-        F.sum(F.when(lhs > rhs, 1).otherwise(0))
-        .cast("long")
-        .alias("n_outliers"),
-    )
-
-
-ORACLE_SIGMA_OUTLIERS = """
-WITH staged AS (
-  SELECT c_nationkey AS nation,
-         CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) AS x
-  FROM customer WHERE c_acctbal IS NOT NULL
-), stats AS (
-  -- q stays HUGEINT: per-group SUM(x*x) crosses 2^63 at ~3e7
-  -- rows/group, well inside the target scale
-  SELECT nation, CAST(SUM(x) AS BIGINT) AS s,
-         CAST(SUM(CAST(x AS HUGEINT) * x) AS HUGEINT) AS q,
-         count(*) AS n
-  FROM staged GROUP BY nation
-)
-SELECT st.nation, CAST(st.n AS BIGINT) AS n_customers,
-       CAST(SUM(CASE WHEN
-           CAST(x * st.n - s AS HUGEINT) * CAST(x * st.n - s AS HUGEINT)
-           > 4 * (CAST(st.n AS HUGEINT) * q - CAST(s AS HUGEINT) * s)
-         THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-FROM staged JOIN stats st USING (nation)
-GROUP BY st.nation, st.n
-"""
-
-
-def q_recursive_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Depth-bounded transitive reachability from a deterministic seed
-    set over the co-purchase graph — the declarative WITH RECURSIVE
-    surface (the oracle IS a recursive CTE) expressed in Spark as
-    unrolled frontier expansion.  Emits, per BFS depth (0–4), how many
-    nodes are FIRST reached at that depth plus the id span — the
-    blast-radius curve of a recall/contamination propagating through a
-    relationship graph.
-
-    Plan: the frontier is re-distincted every hop, so each level's
-    join input is bounded by |V|, never by path count (the naive
-    UNION ALL recursion enumerates walks — degree^4 of them; the
-    oracle uses recursive UNION, whose per-iteration dedup is the same
-    bound).  4 fixed hops = 4 shuffles over the edge relation; the
-    min-depth collapse is one aggregate.  Cites
-    `ext/graph.py:khop_reach` for the bounded-frontier design."""
-    from fink_broker_spark.ext.graph import copurchase_edges, symmetrize
-
-    li = load_table(spark, sf_dir, "lineitem")
-    # the edge relation feeds every hop plus the seed filter, and each
-    # frontier is referenced twice (next hop + the levels union) — the
-    # uncut plan re-derived the basket self-join 60× (r9 scan census);
-    # frontiers are node-sized, the materialization is bounded
-    edges = _materialize(
-        symmetrize(copurchase_edges(li, min_support=2))
-    )
-    seeds = (
-        edges.filter(F.col("src") % 50 == 0)
-        .select(F.col("src").alias("node"))
-        .distinct()
-    )
-    levels = [seeds.select("node", F.lit(0).alias("depth"))]
-    frontier = seeds
-    for d in range(1, 5):
-        frontier = _materialize(
-            frontier.join(edges, frontier["node"] == edges["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-        )
-        levels.append(frontier.select("node", F.lit(d).alias("depth")))
-    walk = levels[0]
-    for lv in levels[1:]:
-        walk = walk.unionAll(lv)
-    first = walk.groupBy("node").agg(F.min("depth").alias("depth"))
-    return first.groupBy("depth").agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.min("node").alias("min_node"),
-        F.max("node").alias("max_node"),
-    )
-
-
-ORACLE_RECURSIVE_REACH = """
-WITH RECURSIVE pairs AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-  GROUP BY a.l_partkey, b.l_partkey
-  HAVING count(*) >= 2
-), edges AS (
-  SELECT u AS src, v AS dst FROM pairs
-  UNION ALL SELECT v AS src, u AS dst FROM pairs
-), walk AS (
-  SELECT DISTINCT src AS node, 0 AS depth FROM edges WHERE src % 50 = 0
-  UNION
-  SELECT e.dst AS node, w.depth + 1 AS depth
-  FROM walk w JOIN edges e ON w.node = e.src
-  WHERE w.depth < 4
-), first AS (
-  SELECT node, min(depth) AS depth FROM walk GROUP BY node
-)
-SELECT depth, CAST(count(*) AS BIGINT) AS n_nodes,
-       min(node) AS min_node, max(node) AS max_node
-FROM first GROUP BY depth
-"""
-
-
-def q_value_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column-level data profiling of the orders table — row count,
-    non-null count, exact distinct count, and min/max rendered as
-    strings — one row per profiled column; the schema-drift /
-    data-quality report a lake catalog publishes per snapshot.
-
-    Plan: ONE pass over the fact table computes every metric in a
-    single aggregate (Spark plans the multi-column exact distincts
-    via one Expand — a deliberate ×5 row expansion, the honest price
-    of exactness; the approximate twin would be HLL sketches), then a
-    5-row ``stack`` unpivots the 1-row result.  Profiled values are
-    strings and integers only (keys/dates go through integer casts
-    first) — doubles never enter a string render, so the engines
-    cannot format-split."""
-    # the 5-way count-distinct plans an Expand (6× row multiply) whose
-    # partial aggregation runs in the scan stage — spread the
-    # single-split scan (guide §2.5; no-op at scale)
-    od = ensure_scan_parallelism(
-        load_table(spark, sf_dir, "orders").select(
-            "o_orderstatus",
-            "o_orderpriority",
-            "o_custkey",
-            "o_orderkey",
-            _day("o_orderdate").alias("o_orderday"),
-        )
-    )
-    cols = [
-        "o_orderstatus",
-        "o_orderpriority",
-        "o_custkey",
-        "o_orderkey",
-        "o_orderday",
-    ]
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in cols:
-        aggs += [
-            F.count(c).alias(f"nn_{c}"),
-            F.countDistinct(c).alias(f"nd_{c}"),
-            F.min(c).cast("string").alias(f"mn_{c}"),
-            F.max(c).cast("string").alias(f"mx_{c}"),
-        ]
-    one = od.agg(*aggs)
-    stack_args = ", ".join(
-        f"'{c}', nn_{c}, nd_{c}, mn_{c}, mx_{c}" for c in cols
-    )
-    return one.select(
-        "n_rows",
-        F.expr(
-            f"stack({len(cols)}, {stack_args}) AS "
-            "(column_name, n_nonnull, n_distinct, min_val, max_val)"
-        ),
-    ).select(
-        "column_name", "n_rows", "n_nonnull", "n_distinct",
-        "min_val", "max_val",
-    )
-
-
-ORACLE_VALUE_PROFILE = """
-WITH staged AS (
-  SELECT o_orderstatus, o_orderpriority, o_custkey, o_orderkey,
-         CAST(FLOOR(epoch_us(o_orderdate) / 86400000000) AS BIGINT)
-           AS o_orderday
-  FROM orders
-), agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_rows,
-    CAST(count(o_orderstatus) AS BIGINT) AS nn_1,
-    CAST(count(DISTINCT o_orderstatus) AS BIGINT) AS nd_1,
-    CAST(min(o_orderstatus) AS VARCHAR) AS mn_1,
-    CAST(max(o_orderstatus) AS VARCHAR) AS mx_1,
-    CAST(count(o_orderpriority) AS BIGINT) AS nn_2,
-    CAST(count(DISTINCT o_orderpriority) AS BIGINT) AS nd_2,
-    CAST(min(o_orderpriority) AS VARCHAR) AS mn_2,
-    CAST(max(o_orderpriority) AS VARCHAR) AS mx_2,
-    CAST(count(o_custkey) AS BIGINT) AS nn_3,
-    CAST(count(DISTINCT o_custkey) AS BIGINT) AS nd_3,
-    CAST(min(o_custkey) AS VARCHAR) AS mn_3,
-    CAST(max(o_custkey) AS VARCHAR) AS mx_3,
-    CAST(count(o_orderkey) AS BIGINT) AS nn_4,
-    CAST(count(DISTINCT o_orderkey) AS BIGINT) AS nd_4,
-    CAST(min(o_orderkey) AS VARCHAR) AS mn_4,
-    CAST(max(o_orderkey) AS VARCHAR) AS mx_4,
-    CAST(count(o_orderday) AS BIGINT) AS nn_5,
-    CAST(count(DISTINCT o_orderday) AS BIGINT) AS nd_5,
-    CAST(min(o_orderday) AS VARCHAR) AS mn_5,
-    CAST(max(o_orderday) AS VARCHAR) AS mx_5
-  FROM staged
-)
-SELECT 'o_orderstatus' AS column_name, n_rows, nn_1 AS n_nonnull,
-       nd_1 AS n_distinct, mn_1 AS min_val, mx_1 AS max_val FROM agg
-UNION ALL
-SELECT 'o_orderpriority', n_rows, nn_2, nd_2, mn_2, mx_2 FROM agg
-UNION ALL
-SELECT 'o_custkey', n_rows, nn_3, nd_3, mn_3, mx_3 FROM agg
-UNION ALL
-SELECT 'o_orderkey', n_rows, nn_4, nd_4, mn_4, mx_4 FROM agg
-UNION ALL
-SELECT 'o_orderday', n_rows, nn_5, nd_5, mn_5, mx_5 FROM agg
-"""
-
-
-def q_rolling_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-7-day revenue volatility per day, FP-free: the rolling
-    variance is reported as its exact integer numerator
-    n·ΣQ − S² (Q = Σcents², S = Σcents over the window) — the
-    risk/stability band a monitoring dashboard draws, computed so the
-    engines cannot rounding-split.
-
-    Plan: one fact aggregate to the day spine, then a single
-    ROWS-frame window over that calendar-bounded spine (~2.4k rows —
-    the SinglePartition sort is over the aggregate, never the fact
-    table).  The squares ride DECIMAL(38,0) / HUGEINT internally; the
-    numerator LEAVES the query as three exact BIGINT limbs
-    (``_limb3_bigints``) because the driver's canonicalizer
-    hash-splits on emitted decimals wider than 18 digits even when
-    every value is cross-engine identical (the r8 red on this very
-    query; typeaudit now forbids the class).  n and S plain BIGINTs."""
-    od = load_table(spark, sf_dir, "orders")
-    daily = od.groupBy(_day("o_orderdate").alias("d")).agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-        ).alias("cents")
-    )
-    w = Window.orderBy("d").rowsBetween(-6, Window.currentRow)
-    roll = daily.select(
-        "d",
-        F.count(F.lit(1)).over(w).alias("n_days"),
-        F.sum("cents").over(w).cast("long").alias("s_cents"),
-        F.sum(
-            F.col("cents").cast("decimal(19,0)")
-            * F.col("cents").cast("decimal(19,0)")
-        )
-        .over(w)
-        .cast("decimal(38,0)")
-        .alias("qq"),
-    )
-    num = roll.select(
-        "d",
-        "n_days",
-        "s_cents",
-        (
-            F.col("n_days").cast("decimal(19,0)") * F.col("qq")
-            - F.col("s_cents").cast("decimal(19,0)")
-            * F.col("s_cents").cast("decimal(19,0)")
-        )
-        .cast("decimal(38,0)")
-        .alias("var_num"),
-    )
-    return num.select(
-        "d", "n_days", "s_cents", *_limb3_bigints("var_num", "var")
-    )
-
-
-ORACLE_ROLLING_VOLATILITY = """
-WITH daily AS (
-  SELECT CAST(FLOOR(epoch_us(o_orderdate) / 86400000000) AS BIGINT) AS d,
-         CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-              AS BIGINT) AS cents
-  FROM orders GROUP BY 1
-), roll AS (
-  SELECT d,
-         CAST(count(*) OVER w AS BIGINT) AS n_days,
-         CAST(SUM(cents) OVER w AS BIGINT) AS s_cents,
-         CAST(SUM(CAST(cents AS HUGEINT) * cents) OVER w
-              AS HUGEINT) AS qq
-  FROM daily
-  WINDOW w AS (ORDER BY d ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-), num AS (
-  SELECT d, n_days, s_cents,
-         CAST(n_days AS HUGEINT) * qq
-           - CAST(s_cents AS HUGEINT) * s_cents AS var_num
-  FROM roll
-)
--- three exact BIGINT limbs, mirroring the engine's _limb3_bigints
--- (wide-decimal emission is the r8 driver red class)
-SELECT d, n_days, s_cents,
-       CAST(var_num // 1000000000000000000 AS BIGINT) AS var_hi,
-       CAST((var_num % 1000000000000000000) // 1000000000
-            AS BIGINT) AS var_mid,
-       CAST(var_num % 1000000000 AS BIGINT) AS var_lo
-FROM num
-"""
-
-
-def q_window_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running DISTINCT-user count per event type by day — the
-    cumulative-audience curve every growth dashboard draws.  The
-    oracle uses the NATIVE windowed distinct aggregate
-    (``COUNT(DISTINCT …) OVER``, which DuckDB supports and Spark
-    rejects); the Spark side is the scalable first-seen rewrite: a
-    user contributes on the day of their FIRST event of that type, and
-    the running distinct count is the cumulative sum of first-seen
-    counts over the day spine.
-
-    Plan: one (type, user) min-day aggregate (the only fact-sized
-    shuffle — and the rewrite's point: the window never carries a
-    distinct-set state, which at 100 TB would hold every user id in
-    every frame), a (type, day) count, and a cumulative sum over the
-    calendar-bounded spine.  NULL users are excluded on both sides
-    (COUNT DISTINCT ignores NULL; the rewrite must too)."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("user_id").isNotNull()
-    )
-    staged = ev.select(
-        "event_type",
-        _day("ts").alias("d"),
-        "user_id",
-    )
-    days = staged.select("event_type", "d").distinct()
-    first_seen = staged.groupBy("event_type", "user_id").agg(
-        F.min("d").alias("d")
-    )
-    news = first_seen.groupBy("event_type", "d").agg(
-        F.count(F.lit(1)).alias("n_new")
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("d")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        days.join(news, ["event_type", "d"], "left")
-        .select(
-            "event_type",
-            "d",
-            F.coalesce("n_new", F.lit(0)).alias("n_new"),
-        )
-        .select(
-            "event_type",
-            "d",
-            F.sum("n_new").over(w).cast("long").alias("n_cum_users"),
-        )
-    )
-
-
-ORACLE_WINDOW_DISTINCT_COUNT = """
-WITH staged AS (
-  SELECT DISTINCT event_type,
-         CAST(FLOOR(epoch_us(ts) / 86400000000) AS BIGINT) AS d,
-         user_id
-  FROM events WHERE user_id IS NOT NULL
-)
-SELECT DISTINCT event_type, d,
-       CAST(COUNT(DISTINCT user_id)
-            OVER (PARTITION BY event_type ORDER BY d
-                  RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS n_cum_users
-FROM staged
-"""
-
-
-def q_embedding_quant_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Int8-quantization audit of the embedding corpus: per dimension,
-    how many components clip outside the int8 envelope at scale 100
-    and the exact quantized mass — the go/no-go report before
-    compressing a vector index 4× (float32 → int8).
-
-    Plan: one posexplode scan → one bounded aggregate (rows =
-    dimensionality, not corpus size).  Float-origin values NEVER meet
-    a decimal cast: the float32 widens exactly to double on both
-    engines, then ``floor(x·100 + 0.5)`` integerizes it in one
-    identical IEEE tree (the float-promotion rule the r5 parity
-    measurements pinned), so every output is an exact integer.
-
-    Domain: well-formed (finite) vectors only, mirrored in the oracle
-    — a NaN/Inf element hard-errors the ANSI integerization cast on
-    both engines (nanemb driftlab layout, r10)."""
-    from fink_broker_spark.ext.ann import well_formed_vectors
-
-    emb = well_formed_vectors(
-        load_table(spark, sf_dir, "embeddings"), "embedding"
-    )
-    comp = emb.select(
-        F.posexplode("embedding").alias("dim", "val")
-    ).select(
-        F.col("dim").cast("int").alias("dim"),
-        F.floor(F.col("val").cast("double") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("qv"),
-    )
-    clipped = (F.col("qv") > 127) | (F.col("qv") < -128)
-    return comp.groupBy("dim").agg(
-        F.count(F.lit(1)).alias("n_vals"),
-        F.sum(F.when(clipped, 1).otherwise(0)).cast("long").alias(
-            "n_clipped"
-        ),
-        F.sum(
-            F.when(F.col("qv") > 127, F.lit(127))
-            .when(F.col("qv") < -128, F.lit(-128))
-            .otherwise(F.col("qv"))
-        )
-        .cast("long")
-        .alias("sum_q"),
-    )
-
-
-ORACLE_EMBEDDING_QUANT_AUDIT = """
-WITH comp AS (
-  -- generate_subscripts (1-based) stands in for WITH ORDINALITY,
-  -- which the pinned duckdb 1.0.0 does not implement
-  SELECT CAST(generate_subscripts(embedding, 1) - 1 AS INTEGER) AS dim,
-         CAST(FLOOR(CAST(unnest(embedding) AS DOUBLE) * 100 + 0.5)
-              AS BIGINT) AS qv
-  FROM embeddings
-  -- well-formed domain, mirroring the engine's well_formed_vectors:
-  -- NaN/Inf elements hard-error the integerization cast on both
-  -- engines (nanemb driftlab layout, r10)
-  WHERE embedding IS NOT NULL
-    AND len(list_filter(embedding,
-                        x -> x IS NULL OR NOT isfinite(x))) = 0
-)
-SELECT dim, CAST(count(*) AS BIGINT) AS n_vals,
-       CAST(SUM(CASE WHEN qv > 127 OR qv < -128 THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_clipped,
-       CAST(SUM(CASE WHEN qv > 127 THEN 127
-                     WHEN qv < -128 THEN -128
-                     ELSE qv END) AS BIGINT) AS sum_q
-FROM comp GROUP BY dim
-"""
-
-
-def q_uniqueness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Primary-key uniqueness audit across three tables: per declared
-    key, row count, distinct key count, duplicate surplus, and the
-    worst key's multiplicity — the constraint check a lake without
-    enforced PKs runs before every publish (the key-integrity sibling
-    of ``fk_orphans``' referential audit).
-
-    Plan: one groupBy per table on its key (the multiplicity relation)
-    followed by a 1-row re-aggregate — map-side partials do the heavy
-    lifting, the shuffle carries one row per DISTINCT key.  A NULL key
-    forms its own group on both engines (SQL GROUP BY semantics), so
-    the nullfk layout counts identically.  All outputs exact
-    integers."""
-    parts = []
-    for name, table, key in [
-        ("orders", "orders", "o_orderkey"),
-        ("customer", "customer", "c_custkey"),
-        ("events", "events", "event_id"),
-    ]:
-        df = load_table(spark, sf_dir, table)
-        per = df.groupBy(F.col(key).alias("k")).agg(
-            F.count(F.lit(1)).alias("c")
-        )
-        parts.append(
-            per.agg(
-                F.sum("c").cast("long").alias("n_rows"),
-                F.count(F.lit(1)).alias("n_keys"),
-                F.max("c").alias("max_multiplicity"),
-            ).select(
-                F.lit(name).alias("entity"),
-                "n_rows",
-                "n_keys",
-                (F.col("n_rows") - F.col("n_keys")).alias("n_dup_rows"),
-                "max_multiplicity",
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
-
-
-ORACLE_UNIQUENESS_AUDIT = """
-WITH o AS (
-  SELECT count(*) AS c FROM orders GROUP BY o_orderkey
-), c AS (
-  SELECT count(*) AS c FROM customer GROUP BY c_custkey
-), e AS (
-  SELECT count(*) AS c FROM events GROUP BY event_id
-)
-SELECT 'orders' AS entity, CAST(SUM(c) AS BIGINT) AS n_rows,
-       CAST(count(*) AS BIGINT) AS n_keys,
-       CAST(SUM(c) - count(*) AS BIGINT) AS n_dup_rows,
-       CAST(MAX(c) AS BIGINT) AS max_multiplicity
-FROM o
-UNION ALL
-SELECT 'customer', CAST(SUM(c) AS BIGINT), CAST(count(*) AS BIGINT),
-       CAST(SUM(c) - count(*) AS BIGINT), CAST(MAX(c) AS BIGINT)
-FROM c
-UNION ALL
-SELECT 'events', CAST(SUM(c) AS BIGINT), CAST(count(*) AS BIGINT),
-       CAST(SUM(c) - count(*) AS BIGINT), CAST(MAX(c) AS BIGINT)
-FROM e
-"""
-
-
-def q_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whole-table content fingerprint for replication / migration
-    audits: every row hashes to a 32-bit integer through the
-    cross-engine md5-hex → integer tree, and the table's checksum is
-    the (count, sum, min, max) of those row hashes — two lakes agree
-    on all four ⇒ near-certainly identical content, cheap to compare
-    across clusters.
-
-    Plan: ONE scan per table, all map-side (the final aggregate is
-    1 row) — the checksum shuffles nothing but partial aggregates.
-    Doubles are integerized (cents / epoch-µs) before entering the
-    hash string; NULLs render as an explicit sentinel via coalesce so
-    a NULL column cannot alias a shifted field (concat_ws would skip
-    it silently).  The hash sum rides DECIMAL(38,0) INTERNALLY
-    (2³²-bounded summands overflow BIGINT around 10⁹ rows) but is
-    EMITTED as three exact BIGINT limbs (``_limb3_bigints``): the
-    driver canonicalizer hash-splits on emitted decimals wider than
-    18 digits even when values are cross-engine identical (the r8
-    red on this very query)."""
-    parts = []
-    specs = {
-        "orders": (
-            "orders",
-            "concat_ws('|', coalesce(cast(o_orderkey as string), '~'), "
-            "coalesce(cast(o_custkey as string), '~'), "
-            "coalesce(o_orderstatus, '~'), "
-            "coalesce(cast(cast(floor(o_totalprice * 100 + 0.5) as bigint)"
-            " as string), '~'), "
-            "coalesce(cast(unix_micros(o_orderdate) as string), '~'), "
-            "coalesce(o_orderpriority, '~'))",
-        ),
-        "events": (
-            "events",
-            "concat_ws('|', coalesce(cast(event_id as string), '~'), "
-            "coalesce(cast(user_id as string), '~'), "
-            "coalesce(event_type, '~'), "
-            # non-finite values fold to an explicit sentinel so the
-            # checksum still COVERS the row: Spark floor(double)
-            # silently maps NaN→0 (aliasing a real 0-cent row) where
-            # DuckDB's BIGINT cast hard-errors (nanemb layout, r10)
-            "coalesce(case when isnan(value)"
-            " or abs(value) = cast('inf' as double) then 'nf'"
-            " else cast(cast(floor(value * 100 + 0.5) as bigint)"
-            " as string) end, '~'), "
-            "coalesce(cast(unix_micros(ts) as string), '~'))",
-        ),
-    }
-    for name, (table, rowexpr) in specs.items():
-        df = load_table(spark, sf_dir, table)
-        h = F.expr(
-            f"cast(conv(substr(md5({rowexpr}), 1, 8), 16, 10) as bigint)"
-        )
-        agg = df.select(h.alias("h")).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            # the SUMMANDS must already be decimal: a LongType sum
-            # of 2³²-bounded hashes overflows (ANSI: throws) near
-            # 4·10⁹ rows — casting only the result would not help
-            F.sum(F.col("h").cast("decimal(38,0)"))
-            .cast("decimal(38,0)")
-            .alias("hash_sum"),
-            F.min("h").alias("hash_min"),
-            F.max("h").alias("hash_max"),
-        )
-        parts.append(
-            agg.select(
-                F.lit(name).alias("entity"),
-                "n_rows",
-                *_limb3_bigints("hash_sum", "hash"),
-                "hash_min",
-                "hash_max",
-            )
-        )
-    return parts[0].unionAll(parts[1])
-
-
-ORACLE_TABLE_CHECKSUM = """
-WITH oh AS (
-  SELECT CAST('0x' || substr(md5(
-           concat_ws('|', coalesce(CAST(o_orderkey AS VARCHAR), '~'),
-                     coalesce(CAST(o_custkey AS VARCHAR), '~'),
-                     coalesce(o_orderstatus, '~'),
-                     coalesce(CAST(CAST(FLOOR(o_totalprice * 100 + 0.5)
-                                        AS BIGINT) AS VARCHAR), '~'),
-                     coalesce(CAST(epoch_us(o_orderdate) AS VARCHAR), '~'),
-                     coalesce(o_orderpriority, '~'))
-         ), 1, 8) AS BIGINT) AS h
-  FROM orders
-), eh AS (
-  SELECT CAST('0x' || substr(md5(
-           concat_ws('|', coalesce(CAST(event_id AS VARCHAR), '~'),
-                     coalesce(CAST(user_id AS VARCHAR), '~'),
-                     coalesce(event_type, '~'),
-                     -- non-finite → sentinel, mirroring the engine
-                     -- (nanemb driftlab layout, r10)
-                     coalesce(CASE WHEN NOT isfinite(value) THEN 'nf'
-                              ELSE CAST(CAST(FLOOR(value * 100 + 0.5)
-                                        AS BIGINT) AS VARCHAR) END, '~'),
-                     coalesce(CAST(epoch_us(ts) AS VARCHAR), '~'))
-         ), 1, 8) AS BIGINT) AS h
-  FROM events
-)
--- hash_sum stays HUGEINT internally and leaves as three exact BIGINT
--- limbs (engine's _limb3_bigints — wide-decimal emission is the r8
--- driver red class)
-SELECT 'orders' AS entity, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(SUM(h) // 1000000000000000000 AS BIGINT) AS hash_hi,
-       CAST((SUM(h) % 1000000000000000000) // 1000000000
-            AS BIGINT) AS hash_mid,
-       CAST(SUM(h) % 1000000000 AS BIGINT) AS hash_lo,
-       CAST(MIN(h) AS BIGINT) AS hash_min,
-       CAST(MAX(h) AS BIGINT) AS hash_max
-FROM oh
-UNION ALL
-SELECT 'events', CAST(count(*) AS BIGINT),
-       CAST(SUM(h) // 1000000000000000000 AS BIGINT),
-       CAST((SUM(h) % 1000000000000000000) // 1000000000 AS BIGINT),
-       CAST(SUM(h) % 1000000000 AS BIGINT),
-       CAST(MIN(h) AS BIGINT), CAST(MAX(h) AS BIGINT)
-FROM eh
-"""
-
-
-def q_set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MULTISET set operations (§2.9's bag-semantics half):
-    ``INTERSECT ALL`` / ``EXCEPT ALL`` over the customer-key bags of
-    finished vs open orders — multiplicities survive, so 'a customer
-    with 3 F-orders and 1 O-order' contributes 1 row to the
-    intersection and 2 rows to the difference (the distinct-set twin
-    ``set_ops`` cannot express that).  The audit collapses each result
-    bag to exact counts.
-
-    Plan: Spark's native exceptAll/intersectAll physical rewrites
-    (left-anti-style aggregates on the key — one shuffle each, no
-    row-by-row state).  Each bag collapses through a SCALAR aggregate
-    (never groupBy(label)): a scalar agg emits its one row even when
-    the bag is EMPTY — exactly like the oracle's GROUP-BY-less
-    aggregates — where a groupBy would emit nothing and the row
-    shapes would diverge on a dataset with an empty bag."""
-    od = load_table(spark, sf_dir, "orders")
-    f_bag = od.filter(F.col("o_orderstatus") == "F").select("o_custkey")
-    o_bag = od.filter(F.col("o_orderstatus") == "O").select("o_custkey")
-
-    def _collapse(bag: DataFrame, label: str) -> DataFrame:
-        return bag.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("o_custkey").alias("n_keys"),
-            F.min("o_custkey").alias("min_key"),
-            F.max("o_custkey").alias("max_key"),
-        ).select(F.lit(label).alias("label"), "*")
-
-    return _collapse(f_bag.intersectAll(o_bag), "intersect_all").unionAll(
-        _collapse(f_bag.exceptAll(o_bag), "except_all")
-    )
-
-
-ORACLE_SET_OPS_ALL = """
-WITH inter AS (
-  SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-  INTERSECT ALL
-  SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-), exc AS (
-  SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-  EXCEPT ALL
-  SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-)
-SELECT 'intersect_all' AS label, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_keys,
-       MIN(o_custkey) AS min_key, MAX(o_custkey) AS max_key
-FROM inter
-UNION ALL
-SELECT 'except_all', CAST(count(*) AS BIGINT),
-       CAST(count(DISTINCT o_custkey) AS BIGINT),
-       MIN(o_custkey), MAX(o_custkey)
-FROM exc
-"""
-
-
-def q_filter_clause_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional-aggregation surface: the oracle uses the ANSI
-    ``FILTER (WHERE …)`` aggregate modifier (which Spark SQL does not
-    parse); the Spark side is the equivalent CASE-WHEN aggregate tree
-    — the canonical translation every Spark migration of a
-    Postgres/DuckDB workload performs.  Per nation: customer count,
-    positive/negative-balance counts, and the positive balance mass in
-    exact cents.
-
-    Plan: ONE aggregate pass (all four measures fold into the same
-    map-side partials); 25 output rows."""
-    cu = load_table(spark, sf_dir, "customer")
-    cents = F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("long")
-    staged = cu.select(
-        F.col("c_nationkey").alias("nation"), cents.alias("x")
-    )
-    return staged.groupBy("nation").agg(
-        F.count(F.lit(1)).alias("n_customers"),
-        F.sum(F.when(F.col("x") > 0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_positive"),
-        F.sum(F.when(F.col("x") < 0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_negative"),
-        F.sum(F.when(F.col("x") > 0, F.col("x")).otherwise(F.lit(0)))
-        .cast("long")
-        .alias("positive_cents"),
-    )
-
-
-ORACLE_FILTER_CLAUSE_AGG = """
-WITH staged AS (
-  SELECT c_nationkey AS nation,
-         CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) AS x
-  FROM customer
-)
-SELECT nation, CAST(count(*) AS BIGINT) AS n_customers,
-       CAST(count(*) FILTER (WHERE x > 0) AS BIGINT) AS n_positive,
-       CAST(count(*) FILTER (WHERE x < 0) AS BIGINT) AS n_negative,
-       CAST(coalesce(SUM(x) FILTER (WHERE x > 0), 0) AS BIGINT)
-         AS positive_cents
-FROM staged GROUP BY nation
-"""
-
-
-def q_qualify_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """QUALIFY-clause surface: the oracle filters on a window function
-    directly in the ``QUALIFY`` clause (DuckDB/Snowflake/BigQuery
-    syntax that Spark SQL lacks); the Spark side is the standard
-    rank-then-filter rewrite.  Picks each nation's single
-    highest-balance customer, ties broken by key.
-
-    Plan: one window over the nation partitioning (a single shuffle on
-    the group key), filter rn = 1 — identical physical work to the
-    QUALIFY form, which is syntax sugar over exactly this plan."""
-    cu = load_table(spark, sf_dir, "customer")
-    staged = cu.select(
-        F.col("c_nationkey").alias("nation"),
-        F.col("c_custkey").alias("custkey"),
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("bal_cents"),
-    )
-    w = Window.partitionBy("nation").orderBy(
-        F.col("bal_cents").desc(), F.col("custkey")
-    )
-    return (
-        staged.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("nation", "custkey", "bal_cents")
-    )
-
-
-ORACLE_QUALIFY_LATEST = """
-SELECT c_nationkey AS nation, c_custkey AS custkey,
-       CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_cents
-FROM customer
-QUALIFY row_number() OVER (
-  PARTITION BY c_nationkey
-  ORDER BY CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) DESC, c_custkey
-) = 1
-"""
-
-
-def q_string_agg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORDER-sensitive string aggregation surface: the oracle uses
-    ``string_agg(x, ',' ORDER BY …)`` — an ordered aggregate Spark
-    does not offer (``collect_list`` order is partition-dependent).
-    The deterministic rewrite: rank inside the group, keep the top 5,
-    ``array_sort`` the collected (rank, key) structs, project the key
-    out, ``array_join``.  Emits each nation's top-5 customer keys by
-    balance as one CSV string — the \"leaderboard column\" every
-    report sink wants.
-
-    Plan: one window shuffle (rank), one groupBy whose state is ≤5
-    structs per group — the rank-filter BEFORE the collect is what
-    makes the aggregate state bounded at 100 TB (never collect_list
-    an unbounded group)."""
-    cu = load_table(spark, sf_dir, "customer")
-    staged = cu.select(
-        F.col("c_nationkey").alias("nation"),
-        F.col("c_custkey").alias("custkey"),
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("bal_cents"),
-    )
-    w = Window.partitionBy("nation").orderBy(
-        F.col("bal_cents").desc(), F.col("custkey")
-    )
-    top = staged.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= 5
-    )
-    return top.groupBy("nation").agg(
-        F.count(F.lit(1)).alias("n_listed"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("rk", "custkey"))
-                ),
-                lambda s: s["custkey"].cast("string"),
-            ),
-            ",",
-        ).alias("top5_csv"),
-    )
-
-
-ORACLE_STRING_AGG_ORDERED = """
-WITH ranked AS (
-  SELECT c_nationkey AS nation, c_custkey AS custkey,
-         row_number() OVER (
-           PARTITION BY c_nationkey
-           ORDER BY CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) DESC,
-                    c_custkey
-         ) AS rk
-  FROM customer
-)
-SELECT nation, CAST(count(*) AS BIGINT) AS n_listed,
-       string_agg(CAST(custkey AS VARCHAR), ',' ORDER BY rk) AS top5_csv
-FROM ranked WHERE rk <= 5
-GROUP BY nation
-"""
-
-
-def q_calendar_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar-coverage audit per order priority: how many days
-    inside each group's own [first, last] span carry NO orders — the
-    freshness/completeness gate a daily-ingest monitor raises before a
-    partition is declared late (the reference's nightly cadence,
-    ``bin/fink_start_stream``-family, makes a missing night an
-    incident).
-
-    Plan: one fact aggregate to the distinct (priority, day) spine,
-    then a 5-row per-group (count, min, max) collapse — expected days
-    = span+1 is pure integer arithmetic, so missing-day counts are
-    exact on both engines."""
-    od = load_table(spark, sf_dir, "orders")
-    days = od.select(
-        F.col("o_orderpriority").alias("priority"),
-        _day("o_orderdate").alias("d"),
-    ).distinct()
-    return days.groupBy("priority").agg(
-        F.count(F.lit(1)).alias("n_days_present"),
-        (F.max("d") - F.min("d") + 1).alias("n_days_expected"),
-        (F.max("d") - F.min("d") + 1 - F.count(F.lit(1))).alias(
-            "n_days_missing"
-        ),
-    )
-
-
-ORACLE_CALENDAR_GAPS = """
-WITH days AS (
-  SELECT DISTINCT o_orderpriority AS priority,
-         CAST(FLOOR(epoch_us(o_orderdate) / 86400000000) AS BIGINT) AS d
-  FROM orders
-)
-SELECT priority, CAST(count(*) AS BIGINT) AS n_days_present,
-       CAST(max(d) - min(d) + 1 AS BIGINT) AS n_days_expected,
-       CAST(max(d) - min(d) + 1 - count(*) AS BIGINT) AS n_days_missing
-FROM days GROUP BY priority
-"""
-
-
-def q_relational_division(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Relational DIVISION — the classic 'for all' operator SQL lacks
-    a keyword for: customers who placed an order in EVERY calendar
-    year the lake covers.  Division is the set-containment query
-    behind 'suppliers stocking the full catalog' / 'users active in
-    every cohort window'; neither Spark nor ANSI SQL names it, so both
-    sides express it as count-distinct equality against the divisor
-    cardinality.
-
-    Plan: one (custkey, year) distinct collapse, a per-customer
-    distinct count, and a 1-row divisor-cardinality broadcast into the
-    HAVING — the fact table is scanned once; no per-year join chain
-    (the naive division is |years| stacked semi-joins).  Years need
-    calendar boundaries (epoch-day floor-division cannot express
-    them), so both engines extract them from the SAME normalized
-    timestamp: Spark ``year()`` ≡ DuckDB ``year()``, both
-    Gregorian-UTC on a µs-normalized column."""
-    od = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_custkey").isNotNull()
-    )
-    cy = od.select(
-        F.col("o_custkey").alias("custkey"),
-        F.year("o_orderdate").alias("y"),
-    ).distinct()
-    divisor = cy.select("y").distinct().agg(
-        F.count(F.lit(1)).alias("n_years")
-    )
-    per = cy.groupBy("custkey").agg(F.count(F.lit(1)).alias("n_cust_years"))
-    full = (
-        per.crossJoin(F.broadcast(divisor))
-        .filter(F.col("n_cust_years") == F.col("n_years"))
-    )
-    # n_years comes from the 1-row divisor, NOT from max() over the
-    # surviving rows: on a lake where NO customer spans every year,
-    # full is empty and max would emit NULL while the oracle's scalar
-    # subquery still emits the divisor (ADVICE r6 — latent hash split)
-    return (
-        full.agg(
-            F.count(F.lit(1)).alias("n_full_coverage"),
-            F.min("custkey").alias("min_custkey"),
-            F.max("custkey").alias("max_custkey"),
-        )
-        .crossJoin(F.broadcast(divisor))
-    )
-
-
-ORACLE_RELATIONAL_DIVISION = """
-WITH cy AS (
-  SELECT DISTINCT o_custkey AS custkey, year(o_orderdate) AS y
-  FROM orders WHERE o_custkey IS NOT NULL
-), divisor AS (
-  SELECT count(DISTINCT y) AS n_years FROM cy
-), full_cov AS (
-  SELECT custkey, count(*) AS n_cust_years
-  FROM cy GROUP BY custkey
-  HAVING count(*) = (SELECT n_years FROM divisor)
-)
-SELECT CAST(count(*) AS BIGINT) AS n_full_coverage,
-       MIN(custkey) AS min_custkey,
-       MAX(custkey) AS max_custkey,
-       CAST((SELECT n_years FROM divisor) AS BIGINT) AS n_years
-FROM full_cov
-"""
-
-
-def q_xor_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-independent XOR fingerprint per nation: every customer
-    row hashes to a 32-bit integer (the cross-engine md5 tree) and the
-    group fingerprint is the ``bit_xor`` fold — XOR's self-inverse
-    property makes the fingerprint INCREMENTALLY MAINTAINABLE (apply
-    the same XOR to add or retract a row), the property a streaming
-    integrity monitor needs that ``table_checksum``'s sum lacks for
-    retractions at full width.
-
-    Plan: one scan, one groupBy carrying a single long per group —
-    map-side partial XOR does almost all the work."""
-    cu = load_table(spark, sf_dir, "customer")
-    h = F.expr(
-        "cast(conv(substr(md5(concat_ws('|',"
-        " coalesce(cast(c_custkey as string), '~'),"
-        " coalesce(c_name, '~'),"
-        " coalesce(cast(cast(floor(c_acctbal * 100 + 0.5) as bigint)"
-        "   as string), '~'),"
-        " coalesce(c_mktsegment, '~'))), 1, 8), 16, 10) as bigint)"
-    )
-    return (
-        cu.select(F.col("c_nationkey").alias("nation"), h.alias("h"))
-        .groupBy("nation")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.bit_xor("h").alias("xor_fingerprint"),
-        )
-    )
-
-
-ORACLE_XOR_FINGERPRINT = """
-SELECT c_nationkey AS nation, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(bit_xor(CAST('0x' || substr(md5(
-         concat_ws('|', coalesce(CAST(c_custkey AS VARCHAR), '~'),
-                   coalesce(c_name, '~'),
-                   coalesce(CAST(CAST(FLOOR(c_acctbal * 100 + 0.5)
-                                      AS BIGINT) AS VARCHAR), '~'),
-                   coalesce(c_mktsegment, '~'))
-       ), 1, 8) AS BIGINT)) AS BIGINT) AS xor_fingerprint
-FROM customer GROUP BY c_nationkey
-"""
-
-
-def q_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user union-length of overlapping time intervals — the SLA /
-    uptime / active-time primitive (and billing's "don't double-count
-    overlapping sessions").  Each event opens a deterministic interval
-    ``[ts, ts + (event_id % 120 + 1) minutes)``; the answer per user is
-    total covered µs, interval count, and the number of merged islands.
-
-    The classic sweep, declaratively: order intervals by (start, id);
-    the running MAX of ``end`` over all PRIOR rows is the coverage
-    frontier, so each row contributes ``max(0, end − max(start,
-    frontier))`` — overlap never double-counts, containment contributes
-    0, and a row starting past the frontier opens a new island.  ONE
-    window + ONE groupBy, all integer µs (``unix_micros`` ≡ DuckDB
-    ``epoch_us``), no floats.
-
-    Scale: the window partitions by user_id (high cardinality — state
-    per partition is one running max, nothing unbounded); contrast
-    ``max_concurrency``, which must chunk because its sweep key is
-    5-valued."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("user_id").isNotNull()
-    )
-    iv = ev.select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts")).alias("s"),
-        (
-            F.unix_micros(F.col("ts"))
-            + (F.col("event_id") % 120 + 1) * F.lit(60_000_000).cast("long")
-        ).alias("e"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("s", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    marked = iv.withColumn("prev_end", F.max("e").over(w))
-    return marked.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_intervals"),
-        F.sum(
-            F.greatest(
-                F.col("e")
-                - F.greatest(F.col("s"), F.coalesce("prev_end", F.col("s"))),
-                F.lit(0).cast("long"),
-            )
-        ).alias("covered_us"),
-        # STRICT inequality: half-open [a,b) + [b,c) are contiguous —
-        # one merged island (touching is not a gap); review r7 finding
-        F.count_if(
-            F.col("prev_end").isNull() | (F.col("prev_end") < F.col("s"))
-        ).alias("n_islands"),
-    )
-
-
-ORACLE_INTERVAL_COVERAGE = """
-WITH iv AS (
-  SELECT user_id, event_id, epoch_us(ts) AS s,
-         epoch_us(ts) + (event_id % 120 + 1) * 60000000 AS e
-  FROM events WHERE user_id IS NOT NULL
-), marked AS (
-  SELECT user_id, s, e,
-         MAX(e) OVER (PARTITION BY user_id ORDER BY s, event_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           AS prev_end
-  FROM iv
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_intervals,
-       CAST(SUM(GREATEST(e - GREATEST(s, COALESCE(prev_end, s)), 0))
-            AS BIGINT) AS covered_us,
-       CAST(SUM(CASE WHEN prev_end IS NULL OR prev_end < s
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_islands
-FROM marked GROUP BY user_id
-"""
-
-
-def q_freshness_slo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-freshness SLO audit: per event type, the last-arrival
-    watermark, its lag behind the lake-wide high-water mark, and
-    whether it is inside a 7-day staleness SLO — the first dashboard a
-    lake operator builds over every ingest feed (reference analog: the
-    nightly DB-sanity path around ``bin/ztf/archive_statistics.py``).
-
-    Plan: ONE groupBy for per-type watermarks, a 1-row global max
-    broadcast back — the as-of point is derived from the DATA (not
-    ``now()``, which could never oracle).  All integer µs."""
-    ev = load_table(spark, sf_dir, "events")
-    per = ev.groupBy("event_type").agg(
-        F.max(F.unix_micros(F.col("ts"))).alias("last_ts_us"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-    glob = per.agg(F.max("last_ts_us").alias("as_of_us"))
-    return per.crossJoin(F.broadcast(glob)).select(
-        "event_type",
-        "n_events",
-        "last_ts_us",
-        (F.col("as_of_us") - F.col("last_ts_us")).alias("lag_us"),
-        (
-            F.col("as_of_us") - F.col("last_ts_us")
-            <= F.lit(7 * 86_400_000_000).cast("long")
-        ).alias("within_slo"),
-    )
-
-
-ORACLE_FRESHNESS_SLO = """
-WITH per AS (
-  SELECT event_type, MAX(epoch_us(ts)) AS last_ts_us,
-         CAST(count(*) AS BIGINT) AS n_events
-  FROM events GROUP BY event_type
-), g AS (SELECT MAX(last_ts_us) AS as_of_us FROM per)
-SELECT event_type, n_events, last_ts_us,
-       CAST(g.as_of_us - last_ts_us AS BIGINT) AS lag_us,
-       (g.as_of_us - last_ts_us) <= 604800000000 AS within_slo
-FROM per, g
-"""
-
-
-def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Common-neighbor link prediction over the co-purchase graph
-    (``ext/graph.py:link_prediction``): the top 25 unlinked part pairs
-    ranked by shared neighbors, tie-broken by the exact-integer
-    resource-allocation index ``Σ 10^9 div deg(w)`` (Zhou et al. 2009).
-    The recommender / graph-completion primitive the triangle and
-    k-core queries stop short of.
-
-    Scale: wedge volume is Σ min(deg, 200)² via the hub-prune on the
-    MIDDLE node (same cap discipline as PPJoin's prefix cut); the
-    existing-edge exclusion is a left_anti equi-join; final top-k is
-    TakeOrderedAndProject."""
-    from fink_broker_spark.ext.graph import copurchase_edges, link_prediction
-
-    li = load_table(spark, sf_dir, "lineitem")
-    # sym/deg/adj inside link_prediction fan the edge relation out
-    # (18 static lineitem scans, r9 census) — materialize once
-    edges = _materialize(copurchase_edges(li, min_support=2))
-    return link_prediction(edges, k=25, max_degree=200)
-
-
-ORACLE_LINK_PREDICTION = """
-WITH pairs AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-  GROUP BY a.l_partkey, b.l_partkey
-  HAVING count(*) >= 2
-), sym AS (
-  SELECT u AS src, v AS dst FROM pairs
-  UNION ALL SELECT v, u FROM pairs
-), deg AS (
-  SELECT src AS w, CAST(count(*) AS BIGINT) AS deg FROM sym GROUP BY src
-), adj AS (
-  SELECT s.src AS w, s.dst AS x, d.deg
-  FROM sym s JOIN deg d ON s.src = d.w
-  WHERE d.deg <= 200
-), wedges AS (
-  SELECT l.x AS a, r.x AS b, l.deg AS wdeg
-  FROM adj l JOIN adj r ON l.w = r.w
-  WHERE l.x < r.x
-), scored AS (
-  SELECT a, b, CAST(count(*) AS BIGINT) AS common_neighbors,
-         CAST(SUM(1000000000 // wdeg) AS BIGINT) AS ra_scaled9
-  FROM wedges GROUP BY a, b
-)
-SELECT a, b, common_neighbors, ra_scaled9
-FROM scored s
-WHERE NOT EXISTS (SELECT 1 FROM pairs p WHERE p.u = s.a AND p.v = s.b)
-ORDER BY common_neighbors DESC, ra_scaled9 DESC, a, b
-LIMIT 25
-"""
-
-
-def q_neighbor_feature_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GNN-style neighborhood feature aggregation
-    (``ext/graph.py:neighbor_feature_agg``): per part node of the
-    co-purchase graph, the sum/count/fixed-point-mean of neighbor
-    retail prices (cents) over 1-hop neighbors and 2-hop walks — the
-    unnormalized A·x / A²·x message-passing aggregates a GraphSAGE-
-    family sampler materializes as training features (Hamilton et al.
-    2017).  Means are ``(sum·10^4) div n`` — integral division,
-    bit-identical both engines; features enter as the exact
-    ``floor(price·100 + 0.5)`` cent tree.
-
-    Scale: 2-hop walks self-join through degree-capped middles
-    (Σ min(deg, 200)²); feature lookups are key equi-joins (AQE
-    broadcasts the part dimension when it fits)."""
-    from fink_broker_spark.ext.graph import (
-        copurchase_edges,
-        neighbor_feature_agg,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem")
-    # the 1-hop and 2-hop aggregates both walk the edge relation (16
-    # static lineitem scans, r9 census) — materialize once
-    edges = _materialize(copurchase_edges(li, min_support=2))
-    feats = load_table(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("node"),
-        F.floor(F.col("p_retailprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("feat"),
-    )
-    return neighbor_feature_agg(edges, feats, max_degree=200)
-
-
-ORACLE_NEIGHBOR_FEATURE_AGG = """
-WITH pairs AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-  GROUP BY a.l_partkey, b.l_partkey
-  HAVING count(*) >= 2
-), sym AS (
-  SELECT u AS src, v AS dst FROM pairs
-  UNION ALL SELECT v, u FROM pairs
-), fx AS (
-  SELECT p_partkey AS x,
-         CAST(FLOOR(p_retailprice * 100 + 0.5) AS BIGINT) AS feat
-  FROM part
-), h1 AS (
-  SELECT s.src AS node,
-         CAST(SUM(f.feat) AS BIGINT) AS h1_sum,
-         CAST(count(*) AS BIGINT) AS h1_n
-  FROM sym s JOIN fx f ON s.dst = f.x
-  GROUP BY s.src
-), deg AS (
-  SELECT src AS w, count(*) AS deg FROM sym GROUP BY src
-), walks AS (
-  SELECT a.src AS node, b.dst AS x
-  FROM sym a
-  JOIN deg d ON a.dst = d.w AND d.deg <= 200
-  JOIN sym b ON a.dst = b.src
-  WHERE b.dst <> a.src
-), h2 AS (
-  SELECT w.node,
-         CAST(SUM(f.feat) AS BIGINT) AS h2_sum,
-         CAST(count(*) AS BIGINT) AS h2_n
-  FROM walks w JOIN fx f ON w.x = f.x
-  GROUP BY w.node
-)
-SELECT h1.node, h1.h1_sum, h1.h1_n,
-       CAST((h1.h1_sum * 10000) // h1.h1_n AS BIGINT) AS h1_mean_scaled,
-       CAST(COALESCE(h2.h2_sum, 0) AS BIGINT) AS h2_sum,
-       CAST(COALESCE(h2.h2_n, 0) AS BIGINT) AS h2_n,
-       CAST(CASE WHEN h2.h2_n IS NOT NULL AND h2.h2_n > 0
-                 THEN (h2.h2_sum * 10000) // h2.h2_n
-                 ELSE 0 END AS BIGINT) AS h2_mean_scaled
-FROM h1 LEFT JOIN h2 ON h1.node = h2.node
-"""
-
-
-def q_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic cross-source negative sampling for contrastive
-    pairs (``ext/pipeline.py:negative_sampling``): every document
-    draws up to 3 pseudo-random negatives from OTHER sources via
-    md5-bucketed routing — no ``rand()``, so the training pairs are
-    reproducible on any engine and any rerun.  The all-pairs sampler
-    this replaces is a cross join; the bucketed plan is one equi-join
-    with |docs|²/n_buckets candidate volume and a bounded per-anchor
-    row_number."""
-    from fink_broker_spark.ext.pipeline import negative_sampling
-
-    docs = load_table(spark, sf_dir, "documents")
-    return negative_sampling(docs, k=3, n_buckets=16)
-
-
-ORACLE_NEGATIVE_SAMPLING = """
-WITH cand AS (
-  SELECT doc_id AS cand_id, source AS cand_grp,
-         CAST('0x' || substr(md5(concat_ws('|', 'cand',
-           CAST(doc_id AS VARCHAR))), 1, 8) AS BIGINT) % 16 AS bkt
-  FROM documents
-), anchors AS (
-  SELECT doc_id AS anchor_id, source AS anchor_grp,
-         CAST('0x' || substr(md5(concat_ws('|', 'probe',
-           CAST(doc_id AS VARCHAR))), 1, 8) AS BIGINT) % 16 AS bkt
-  FROM documents
-), ranked AS (
-  SELECT a.anchor_id, c.cand_id,
-         ROW_NUMBER() OVER (
-           PARTITION BY a.anchor_id
-           ORDER BY md5(concat_ws('|', 'pair',
-                        CAST(a.anchor_id AS VARCHAR),
-                        CAST(c.cand_id AS VARCHAR))), c.cand_id
-         ) AS rnk
-  FROM anchors a JOIN cand c ON a.bkt = c.bkt
-  WHERE c.cand_grp <> a.anchor_grp
-)
-SELECT anchor_id, cand_id AS neg_id, CAST(rnk AS BIGINT) AS rnk
-FROM ranked WHERE rnk <= 3
-"""
-
-
-def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static enrichment — THE canonical Structured-Streaming
-    deployment shape (a fact stream joined to a broadcast dimension,
-    then aggregated): replay the events table as a file stream, join
-    each micro-batch to the static customer dimension on user_id, and
-    maintain running per-market-segment counts + exact value cents.
-    The oracle is the equivalent batch join+aggregate — the
-    stream ≡ batch invariant, now across a join (the reference's
-    raw2science enrichment joins static CDS catalogs into the alert
-    stream the same way).
-
-    Plan: the static side broadcasts into every micro-batch (no
-    state beyond the aggregation); streaming state is one row per
-    segment.  ``value`` pins to DOUBLE before the cent tree so a
-    DECIMAL-typed physical lake cannot change the arithmetic
-    (driftlab decimalprice rule)."""
-    configure_session(spark)
-    dim = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"),
-        F.col("c_mktsegment").alias("segment"),
-    )
-    cents = F.floor(
-        F.col("value").cast("double") * 100 + F.lit(0.5)
-    ).cast("long")
-    with _stream_stage(sf_dir, "events") as stage:
-        return replay_to_table(
-            spark,
-            stage,
-            # finite-value domain (NULL kept — NULL cents SUM-skip as
-            # before): Spark floor(double) silently corrupts NaN/Inf
-            # where the oracle's BIGINT cast hard-errors (nanemb
-            # layout, r10)
-            lambda sdf: sdf.filter(
-                F.col("value").isNull() | _finite("value")
-            )
-            .join(F.broadcast(dim), "user_id")
-            .select("segment", cents.alias("cents"))
-            .groupBy("segment")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum("cents").alias("value_cents"),
-            ),
-            output_mode="complete",
-        )
-
-
-ORACLE_STREAM_STATIC_ENRICH = """
-SELECT c_mktsegment AS segment,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(FLOOR(CAST(value AS DOUBLE) * 100 + 0.5) AS BIGINT))
-            AS BIGINT) AS value_cents
-FROM events JOIN customer ON user_id = c_custkey
--- finite-value domain, mirroring the engine (nanemb layout, r10)
-WHERE value IS NULL OR isfinite(value)
-GROUP BY c_mktsegment
-"""
-
-
-def q_cogroup_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CoGrouped-map pandas UDF surface (the §2.12 API Spark calls
-    ``groupBy().cogroup().applyInPandas``): per user, align every order
-    to the LATEST event at-or-before the order date and aggregate the
-    matched exact cents — the feature-backfill shape (e.g. "the user's
-    last activity before each purchase") where BOTH sides of a key
-    arrive as in-memory pandas frames and the alignment is a
-    vectorized ``searchsorted``, not a join.
-
-    Determinism: timestamps enter pandas as ``unix_micros`` int64
-    (never datetime dtypes — Arrow unit drift can't bite); events are
-    pre-collapsed declaratively to one row per (user, µs) keeping the
-    max cent value, so the as-of pick is unique whatever the partition
-    order; NULL keys are excluded (a cogroup key must be a key).
-
-    The oracle is a literal DuckDB ``ASOF LEFT JOIN`` on the same
-    integers — the engine-native operator this UDF re-expresses.
-
-    Scale: the cogroup key is a 256-way md5-stable USER BUCKET, not the
-    raw user id — per-user groups mean one Python/Arrow round-trip per
-    user (measured 16 s at sf0.1 on 15k users; bucketed: 1.5 s), while
-    inside a bucket ``pd.merge_asof(by=user)`` aligns every user
-    vectorized.  Each side shuffles ONCE on the bucket; bucket state is
-    Σ per-user activity over ~|users|/256 users, and a 100 TB
-    deployment scales the bucket count with the lake exactly like
-    ``negative_sampling``'s n_buckets knob."""
-    import pandas as pd
-
-    from fink_broker_spark.ext.pipeline import md5_bucket_expr
-
-    # md5-stable routing (NOT pmod on the raw id: strided surrogate
-    # keys — e.g. all multiples of 256 — would funnel every user into
-    # one bucket and recreate the unbounded per-group frame the
-    # bucketing exists to bound).  Spark-side only; the oracle output
-    # is per-user and never sees the bucket.
-    def _bkt(col):
-        return md5_bucket_expr(col, buckets=256, salt="cga")
-
-    od = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_custkey").isNotNull())
-        .select(
-            F.col("o_custkey").alias("user_id"),
-            F.unix_micros(F.col("o_orderdate")).alias("t_us"),
-            _bkt("o_custkey").alias("bkt"),
-        )
-    )
-    ev = (
-        load_table(spark, sf_dir, "events")
-        # finite-value domain (NULL kept — NULL cents max through as
-        # before): Spark floor(double) silently corrupts NaN/Inf where
-        # the oracle's BIGINT cast hard-errors (nanemb layout, r10)
-        .filter(
-            F.col("user_id").isNotNull()
-            & (F.col("value").isNull() | _finite("value"))
-        )
-        .select(
-            "user_id",
-            F.unix_micros(F.col("ts")).alias("t_us"),
-            F.floor(F.col("value").cast("double") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("user_id", "t_us")
-        .agg(F.max("cents").alias("cents"))
-        .withColumn("bkt", _bkt("user_id"))
-    )
-
-    def align(odf: pd.DataFrame, edf: pd.DataFrame) -> pd.DataFrame:
-        if odf.empty:  # bucket has events but no orders: no output rows
-            return pd.DataFrame(
-                {
-                    "user_id": pd.Series(dtype="int64"),
-                    "n_orders": pd.Series(dtype="int64"),
-                    "n_matched": pd.Series(dtype="int64"),
-                    "sum_matched_cents": pd.Series(dtype="int64"),
-                }
-            )
-        left = odf.sort_values(["t_us", "user_id"]).reset_index(drop=True)
-        if edf.empty:
-            left["cents"] = pd.Series(dtype="float64")
-        else:
-            right = edf.sort_values(["t_us", "user_id"]).reset_index(
-                drop=True
-            )
-            left = pd.merge_asof(
-                left,
-                right[["user_id", "t_us", "cents"]],
-                on="t_us",
-                by="user_id",
-                direction="backward",
-            )
-        g = left.groupby("user_id", sort=False)
-        out = pd.DataFrame(
-            {
-                "n_orders": g.size(),
-                "n_matched": g["cents"].count(),
-                "sum_matched_cents": g["cents"].sum().fillna(0),
-            }
-        ).reset_index()
-        out["n_orders"] = out["n_orders"].astype("int64")
-        out["n_matched"] = out["n_matched"].astype("int64")
-        out["sum_matched_cents"] = out["sum_matched_cents"].astype("int64")
-        return out[
-            ["user_id", "n_orders", "n_matched", "sum_matched_cents"]
-        ]
-
-    # pin the cogrouped Python stage at core width (guide §4 / global
-    # finding 2, r10): AQE's byte-based coalescing squeezed the
-    # 256-bucket Arrow stage to 4 tasks (profiled 6.9 s CPU / 4 tasks)
-    # while its cost is per-row pandas work, not bytes; a user
-    # repartition on the bucket key is never coalesced and its
-    # HashPartitioning satisfies the cogroup clustering — no second
-    # exchange.  Guarded no-op when the inputs are already wide.
-    od = ensure_keyed_parallelism(od, "bkt")
-    ev = ensure_keyed_parallelism(ev, "bkt")
-    return (
-        od.groupBy("bkt")
-        .cogroup(ev.groupBy("bkt"))
-        .applyInPandas(
-            align,
-            "user_id long, n_orders long, n_matched long, "
-            "sum_matched_cents long",
-        )
-    )
-
-
-ORACLE_COGROUP_ASOF = """
-WITH od AS (
-  SELECT o_custkey AS user_id, epoch_us(o_orderdate) AS t_us
-  FROM orders WHERE o_custkey IS NOT NULL
-), ev AS (
-  -- finite-value domain, mirroring the engine (nanemb layout, r10)
-  SELECT user_id, epoch_us(ts) AS t_us,
-         MAX(CAST(FLOOR(CAST(value AS DOUBLE) * 100 + 0.5) AS BIGINT))
-           AS cents
-  FROM events
-  WHERE user_id IS NOT NULL AND (value IS NULL OR isfinite(value))
-  GROUP BY user_id, epoch_us(ts)
-), aligned AS (
-  SELECT od.user_id, ev.cents
-  FROM od ASOF LEFT JOIN ev
-    ON od.user_id = ev.user_id AND ev.t_us <= od.t_us
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(count(cents) AS BIGINT) AS n_matched,
-       CAST(COALESCE(SUM(cents), 0) AS BIGINT) AS sum_matched_cents
-FROM aligned GROUP BY user_id
-"""
-
-
-def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rank-based quantile normalization of a feature column (the ML
-    preprocessing transform: map each value to its empirical quantile,
-    uniform on [0, 1]) — per source, every document's ``n_chars``
-    becomes ``(rank−1)·10⁹ div (n−1)``, an exact fixed-point integer
-    on both engines (single-member groups map to 0).
-
-    Plan: ONE window shuffle on the group key carrying rank and group
-    size together.  Rank transforms inherently require a per-group
-    ordering; at 100 TB the per-source sort is the honest cost (and
-    sources partition it) — a deployment that can tolerate ±1/accuracy
-    error swaps in ``percentile_approx`` bucketing instead (the same
-    trade as ``archive/statistics.py``'s size gate)."""
-    docs = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy("n_chars", "doc_id")
-    return (
-        docs.select(
-            "doc_id",
-            "source",
-            F.row_number().over(w).alias("rnk"),
-            F.count(F.lit(1)).over(Window.partitionBy("source")).alias("n"),
-        )
-        .select(
-            "doc_id",
-            "source",
-            "rnk",
-            F.when(
-                F.col("n") > 1,
-                F.expr(
-                    "((rnk - 1) * CAST(1000000000 AS BIGINT)) div (n - 1)"
-                ),
-            )
-            .otherwise(F.lit(0).cast("long"))
-            .alias("q_scaled9"),
-        )
-    )
-
-
-ORACLE_QUANTILE_NORMALIZE = """
-WITH r AS (
-  SELECT doc_id, source,
-         ROW_NUMBER() OVER (PARTITION BY source
-                            ORDER BY n_chars NULLS FIRST, doc_id) AS rnk,
-         COUNT(*) OVER (PARTITION BY source) AS n
-  FROM documents
-)
-SELECT doc_id, source, rnk,
-       CAST(CASE WHEN n > 1 THEN ((rnk - 1) * 1000000000) // (n - 1)
-                 ELSE 0 END AS BIGINT) AS q_scaled9
-FROM r
-"""
-
-
-# --------------------------------------------------------------------------
-# round-7 statistics / window / spatial additions
-# --------------------------------------------------------------------------
-
-
-def q_window_exclude_current(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leave-one-out peer baseline: each order compared against the
-    average of the SAME customer's OTHER orders — the window
-    ``EXCLUDE CURRENT ROW`` idiom (DuckDB/pg syntax; Spark lacks the
-    clause) re-expressed portably as ``(sum − current) / (count − 1)``.
-
-    Plan: ONE window shuffle on the customer key carrying sum and count
-    together; the exclusion is pure per-row arithmetic, so the plan is
-    identical to a plain windowed average — no self-join, no second
-    shuffle (the naive EXCLUDE rewrite is an O(n²)-per-key self-join).
-    NULL-priced rows are excluded on both engines (nullmeasure parity).
-    """
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_totalprice").isNotNull()
-    )
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    w = Window.partitionBy("o_custkey")
-    base = o.select(
-        "o_orderkey", "o_custkey", cents.alias("cents")
-    ).select(
-        "o_orderkey",
-        "o_custkey",
-        "cents",
-        F.sum("cents").over(w).alias("__s"),
-        F.count(F.lit(1)).over(w).alias("__n"),
-    )
-    loo = F.when(
-        F.col("__n") > 1,
-        (F.col("__s") - F.col("cents")).cast("double")
-        / (F.col("__n") - F.lit(1)).cast("double"),
-    )
-    return base.select(
-        "o_orderkey",
-        "o_custkey",
-        "cents",
-        loo.alias("loo_avg"),
-        (F.col("cents").cast("double") - loo).alias("delta_vs_peers"),
-    )
-
-
-ORACLE_WINDOW_EXCLUDE_CURRENT = """
-WITH base AS (
-  SELECT o_orderkey, o_custkey,
-         CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-         CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-              OVER (PARTITION BY o_custkey) AS BIGINT) AS s,
-         COUNT(*) OVER (PARTITION BY o_custkey) AS n
-  FROM orders WHERE o_totalprice IS NOT NULL
-)
-SELECT o_orderkey, o_custkey, cents,
-       CASE WHEN n > 1
-            THEN CAST(s - cents AS DOUBLE) / CAST(n - 1 AS DOUBLE) END
-         AS loo_avg,
-       CAST(cents AS DOUBLE)
-         - (CASE WHEN n > 1
-                 THEN CAST(s - cents AS DOUBLE) / CAST(n - 1 AS DOUBLE) END)
-         AS delta_vs_peers
-FROM base
-"""
-
-
-def q_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Welch's unequal-variance t-test between two md5-parity arms of
-    the order-value distribution, per order priority — the
-    continuous-metric companion to ``ab_test_zscore``'s two-proportion z.
-
-    Exact-integer moments (n, Σx, Σx² in decimal(38,0) cents — the
-    100 TB-safe accumulator; a BIGINT Σx² overflows past ~4×10⁹ rows),
-    then t and the Welch–Satterthwaite df from one IDENTICAL IEEE op
-    tree over the six exact operands — ÷ × + − √ only, no
-    transcendentals, so the doubles are bit-equal across engines.
-    """
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_totalprice").isNotNull()
-    )
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    arm = (
-        F.conv(
-            F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
-    c2 = (
-        F.col("cents").cast("decimal(19,0)")
-        * F.col("cents").cast("decimal(19,0)")
-    )
-    base = o.select(
-        "o_orderpriority", cents.alias("cents"), arm.alias("arm")
-    )
-    agg = base.groupBy("o_orderpriority").agg(
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("arm") == 0, F.col("cents"))).alias("s_a"),
-        F.sum(F.when(F.col("arm") == 0, c2)).alias("q_a"),
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n_b"),
-        F.sum(F.when(F.col("arm") == 1, F.col("cents"))).alias("s_b"),
-        F.sum(F.when(F.col("arm") == 1, c2)).alias("q_b"),
-    )
-    nad, nbd = F.col("n_a").cast("double"), F.col("n_b").cast("double")
-    # three-limb split conversion for the Σcents² moments: q_a/q_b are
-    # decimal(38,0) (HUGEINT in the oracle) and already exceed 2⁶³ at
-    # vanilla sf0.1 (~4e19), the zone where DuckDB's int128→double is
-    # not correctly rounded (r5 corollary; ADVICE r7 #1).  Three limbs
-    # (not two) so the quotient itself can never overflow Spark's
-    # BIGINT IntegralDivide — symmetric-exact to ~9.2e36
-    # (`_limb3_double`; r8 code-review finding).
-    qad = _limb3_double("q_a")
-    qbd = _limb3_double("q_b")
-    # every division sits under a count guard: an arm with n < 2 has no
-    # variance, and ANSI Spark throws on x/0.0 where DuckDB yields ±inf
-    # (the onerow driftlab class) — aa/ab are NULL there, and NULL
-    # propagation keeps every downstream operand division-free
-    aa = F.when(
-        F.col("n_a") >= 2,
-        (
-            qad
-            - F.col("s_a").cast("double")
-            * (F.col("s_a").cast("double") / nad)
-        )
-        / (nad - F.lit(1.0))
-        / nad,
-    )
-    ab = F.when(
-        F.col("n_b") >= 2,
-        (
-            qbd
-            - F.col("s_b").cast("double")
-            * (F.col("s_b").cast("double") / nbd)
-        )
-        / (nbd - F.lit(1.0))
-        / nbd,
-    )
-    se2 = aa + ab
-    okc = (F.col("n_a") >= 2) & (F.col("n_b") >= 2)
-    den_df = aa * aa / (nad - F.lit(1.0)) + ab * ab / (nbd - F.lit(1.0))
-    return agg.select(
-        "o_orderpriority",
-        "n_a",
-        "n_b",
-        F.when(
-            okc & (se2 > 0),
-            (
-                F.col("s_a").cast("double") / nad
-                - F.col("s_b").cast("double") / nbd
-            )
-            / F.sqrt(se2),
-        ).alias("t_welch"),
-        F.when(okc & (se2 > 0) & (den_df > 0), se2 * se2 / den_df).alias(
-            "df_welch"
-        ),
-    )
-
-
-ORACLE_WELCH_TTEST = """
-WITH base AS (
-  SELECT o_orderpriority,
-         CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-         CAST('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 8)
-              AS BIGINT) % 2 AS arm
-  FROM orders WHERE o_totalprice IS NOT NULL
-),
-agg AS (
-  SELECT o_orderpriority,
-         CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-         SUM(CASE WHEN arm = 0 THEN cents END) AS s_a,
-         SUM(CASE WHEN arm = 0 THEN CAST(cents AS HUGEINT) * cents END)
-           AS q_a,
-         CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-         SUM(CASE WHEN arm = 1 THEN cents END) AS s_b,
-         SUM(CASE WHEN arm = 1 THEN CAST(cents AS HUGEINT) * cents END)
-           AS q_b
-  FROM base GROUP BY o_orderpriority
-),
-m AS (
-  -- three-limb split conversion mirrors the engine (_limb3_double):
-  -- the HUGEINT Σcents² outgrows the correctly-rounded int128→double
-  -- zone past 2^63, and a single // 1e9 quotient would itself
-  -- overflow the engine's BIGINT DIV past 9.2e27
-  SELECT o_orderpriority, n_a, n_b,
-         CAST(n_a AS DOUBLE) AS nad, CAST(n_b AS DOUBLE) AS nbd,
-         CAST(q_a // 1000000000000000000 AS DOUBLE) * 1e18
-           + CAST((q_a % 1000000000000000000) // 1000000000 AS DOUBLE) * 1e9
-           + CAST(q_a % 1000000000 AS DOUBLE) AS qad,
-         CAST(q_b // 1000000000000000000 AS DOUBLE) * 1e18
-           + CAST((q_b % 1000000000000000000) // 1000000000 AS DOUBLE) * 1e9
-           + CAST(q_b % 1000000000 AS DOUBLE) AS qbd,
-         CAST(s_a AS DOUBLE) AS sad, CAST(s_b AS DOUBLE) AS sbd
-  FROM agg
-),
-v AS (
-  -- count guards mirror the Spark plan: an n < 2 arm yields NULL aa/ab
-  -- (never inf from x/0.0), so the t/df CASEs below see NULL se2
-  SELECT o_orderpriority, n_a, n_b, nad, nbd, sad, sbd,
-         CASE WHEN n_a >= 2
-              THEN (qad - sad * (sad / nad)) / (nad - 1.0) / nad END AS aa,
-         CASE WHEN n_b >= 2
-              THEN (qbd - sbd * (sbd / nbd)) / (nbd - 1.0) / nbd END AS ab
-  FROM m
-)
-SELECT o_orderpriority, n_a, n_b,
-       CASE WHEN n_a >= 2 AND n_b >= 2 AND aa + ab > 0
-            THEN (sad / nad - sbd / nbd) / sqrt(aa + ab) END AS t_welch,
-       CASE WHEN n_a >= 2 AND n_b >= 2 AND aa + ab > 0
-             AND aa * aa / (nad - 1.0) + ab * ab / (nbd - 1.0) > 0
-            THEN (aa + ab) * (aa + ab)
-                 / (aa * aa / (nad - 1.0) + ab * ab / (nbd - 1.0)) END
-         AS df_welch
-FROM v
-"""
-
-
-def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spearman rank correlation (quantity vs revenue cents per return
-    flag) — Pearson over FRACTIONAL ranks with exact tie handling:
-    the average rank of a tie group is ``RANK() + (ties − 1)/2``, so
-    2×rank is the exact integer ``2·RANK() + ties − 1`` and every
-    moment accumulates exactly (decimal(20,0) operands whose products
-    promote to decimal(38,0) under Spark's multiply widening; HUGEINT
-    in the oracle) with zero float error.  The final ρ is one ÷ × + −
-    √ tree over the six exact sums, rounded at scale 9 on both sides:
-    past 2⁶³ (sxx/syy ~1e21 at sf1) the two engines' int128→double
-    conversions stop agreeing at the last ulp (ADVICE r7 #4, same
-    class as the corr_matrix fix), and |ρ| ≤ 1 makes a 1e-9 quantum
-    semantically free.
-
-    Plan: one window shuffle per axis on (flag) carrying RANK and the
-    tie count together, then a single map-side-combinable aggregate.
-    """
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_quantity").isNotNull()
-        & F.col("l_extendedprice").isNotNull()
-    )
-    ycents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
-        "long"
-    )
-    base = li.select(
-        "l_returnflag",
-        F.col("l_quantity").alias("x"),
-        ycents.alias("y"),
-    )
-    wx = Window.partitionBy("l_returnflag").orderBy("x")
-    wxt = Window.partitionBy("l_returnflag", "x")
-    wy = Window.partitionBy("l_returnflag").orderBy("y")
-    wyt = Window.partitionBy("l_returnflag", "y")
-    ranked = base.select(
-        "l_returnflag",
-        (
-            F.lit(2) * F.rank().over(wx) + F.count(F.lit(1)).over(wxt) - 1
-        ).alias("rx"),
-        (
-            F.lit(2) * F.rank().over(wy) + F.count(F.lit(1)).over(wyt) - 1
-        ).alias("ry"),
-    )
-    d = lambda c: F.col(c).cast("decimal(20,0)")  # noqa: E731
-    agg = ranked.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(d("rx")).alias("sx"),
-        F.sum(d("ry")).alias("sy"),
-        F.sum(d("rx") * d("rx")).alias("sxx"),
-        F.sum(d("ry") * d("ry")).alias("syy"),
-        F.sum(d("rx") * d("ry")).alias("sxy"),
-    )
-    nd = F.col("n").cast("double")
-    sxd, syd = F.col("sx").cast("double"), F.col("sy").cast("double")
-    num = nd * F.col("sxy").cast("double") - sxd * syd
-    denx = nd * F.col("sxx").cast("double") - sxd * sxd
-    deny = nd * F.col("syy").cast("double") - syd * syd
-    return agg.select(
-        "l_returnflag",
-        "n",
-        # residual risk (ADVICE r8, accepted): Spark F.round(double, 9)
-        # (BigDecimal HALF_UP over shortest repr) vs DuckDB
-        # ROUND(DOUBLE, 9) (float multiply/rint) can disagree if ρ
-        # lands within an ulp of a .5e-9 boundary — same accepted
-        # class as corr_matrix; if a sweep ever splits here, quantize
-        # via floor(x*1e9+0.5)/1e9 mirrored verbatim on both sides
-        F.when(
-            (denx > 0) & (deny > 0), F.round(num / F.sqrt(denx * deny), 9)
-        ).alias("spearman_rho"),
-    )
-
-
-ORACLE_SPEARMAN_CORR = """
-WITH base AS (
-  SELECT l_returnflag, l_quantity AS x,
-         CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS y
-  FROM lineitem
-  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-),
-ranked AS (
-  SELECT l_returnflag,
-         2 * RANK() OVER (PARTITION BY l_returnflag ORDER BY x)
-           + COUNT(*) OVER (PARTITION BY l_returnflag, x) - 1 AS rx,
-         2 * RANK() OVER (PARTITION BY l_returnflag ORDER BY y)
-           + COUNT(*) OVER (PARTITION BY l_returnflag, y) - 1 AS ry
-  FROM base
-),
-agg AS (
-  SELECT l_returnflag, COUNT(*) AS n,
-         SUM(CAST(rx AS HUGEINT)) AS sx,
-         SUM(CAST(ry AS HUGEINT)) AS sy,
-         SUM(CAST(rx AS HUGEINT) * rx) AS sxx,
-         SUM(CAST(ry AS HUGEINT) * ry) AS syy,
-         SUM(CAST(rx AS HUGEINT) * ry) AS sxy
-  FROM ranked GROUP BY l_returnflag
-)
-SELECT l_returnflag, n,
-       CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                   - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0
-             AND CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-                   - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) > 0
-            THEN ROUND((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-                    - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                 / sqrt((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                           - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                        * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-                             - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 9)
-       END AS spearman_rho
-FROM agg
-"""
-
-
-def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mutual information (nats) between event type and weekday —
-    the feature-dependence screen (column-level MI; collocation_lift
-    is the token-level PMI cousin).  I(X;Y) = Σ p·ln(c·n / (cx·cy))
-    over the joint contingency table.
-
-    Plan: ONE groupBy builds the joint table (tiny: |types|×7 cells);
-    marginals come from broadcast equi-joins of two cell-level
-    re-aggregates, and n from a 1-row broadcast — the contingency
-    table never re-scans events.  Transcendental-sum discipline: each
-    term rounds to decimal(18,9) before the exact sum; terminal
-    quantize at scale 5 (vocab_entropy's tree).
-    """
-    ev = load_table(spark, sf_dir, "events")
-    day_us = 86_400_000_000
-    base = ev.select(
-        "event_type",
-        ((F.expr(f"unix_micros(ts) DIV {day_us}") + 4) % 7).alias("dow"),
-    )
-    joint = base.groupBy("event_type", "dow").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    mx = joint.groupBy("event_type").agg(F.sum("c").alias("cx"))
-    my = joint.groupBy("dow").agg(F.sum("c").alias("cy"))
-    tot = joint.agg(F.sum("c").alias("n"))
-    cells = (
-        joint.join(F.broadcast(mx), "event_type")
-        .join(F.broadcast(my), "dow")
-        .crossJoin(F.broadcast(tot))
-    )
-    ratio = (F.col("c").cast("double") * F.col("n").cast("double")) / (
-        F.col("cx").cast("double") * F.col("cy").cast("double")
-    )
-    term = F.round(
-        (F.col("c").cast("double") / F.col("n").cast("double"))
-        * F.log(ratio),
-        9,
-    ).cast("decimal(18,9)")
-    return cells.agg(
-        F.max("n").cast("long").alias("n_events"),
-        F.count(F.lit(1)).alias("n_cells"),
-        F.round(F.sum(term).cast("decimal(28,9)"), 5)
-        .cast("decimal(28,5)")
-        .cast("double")
-        .alias("mi_nats"),
-    )
-
-
-ORACLE_MUTUAL_INFORMATION = """
-WITH base AS (
-  SELECT event_type,
-         (epoch_us(ts) // 86400000000 + 4) % 7 AS dow
-  FROM events
-),
-joint AS (
-  SELECT event_type, dow, COUNT(*) AS c FROM base GROUP BY event_type, dow
-),
-mx AS (SELECT event_type, CAST(SUM(c) AS BIGINT) AS cx
-       FROM joint GROUP BY event_type),
-my AS (SELECT dow, CAST(SUM(c) AS BIGINT) AS cy FROM joint GROUP BY dow),
-tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM joint),
-cells AS (
-  SELECT j.c, m1.cx, m2.cy, t.n
-  FROM joint j
-  JOIN mx m1 USING (event_type)
-  JOIN my m2 USING (dow)
-  CROSS JOIN tot t
-)
-SELECT CAST(MAX(n) AS BIGINT) AS n_events,
-       COUNT(*) AS n_cells,
-       CAST(CAST(round(SUM(CAST(round(
-             (CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-               * ln((CAST(c AS DOUBLE) * CAST(n AS DOUBLE))
-                    / (CAST(cx AS DOUBLE) * CAST(cy AS DOUBLE))),
-             9) AS DECIMAL(18,9))), 5) AS DECIMAL(28,5)) AS DOUBLE)
-         AS mi_nats
-FROM cells
-"""
-
-
-#: Poisson(1) inverse-CDF thresholds scaled to 2³² — floor(CDF(k)·2³²)
-#: for k = 0..4; a 32-bit md5 uniform below threshold[k] draws weight k,
-#: above all five draws 5.  Literals are embedded identically in the
-#: Spark plan and the DuckDB oracle, so the bootstrap is deterministic
-#: and engine-portable.
-_POISSON1_T = (1580030168, 3160060337, 3950075421, 4213413783, 4279248373)
-
-
-def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Poisson-bootstrap confidence interval for mean order value per
-    priority — THE scalable bootstrap (each row draws an independent
-    Poisson(1) replication weight per replicate; no resample pass over
-    the data, one shuffle total).  Deterministic: the weight comes from
-    a 32-bit md5 uniform through the Poisson(1) inverse CDF, so both
-    engines draw identical replicates.  B = 32; the CI is the 2nd and
-    31st order statistic of the replicate means (~93.75% coverage).
-    """
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_totalprice").isNotNull()
-    )
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    # one md5 yields FOUR independent 32-bit uniforms (8 hex chars
-    # each): explode by DIGEST GROUP first (rows × 8, one md5 each),
-    # then slice the four disjoint hex windows per digest — the md5 is
-    # computed 1.2M times instead of once per (row, replicate) 4.8M
-    # (hashing dominates this plan; measured ~2× at sf0.1)
-    # the md5/conv hashing below dominates this plan and would otherwise
-    # run inside the scan stage — one task on a single-row-group file
-    # (guide §2.5; measured 6.2 → 1.3 s, ensure_scan_parallelism doc)
-    proj = ensure_scan_parallelism(
-        o.select(
-            "o_orderpriority",
-            cents.alias("cents"),
-            F.col("o_orderkey").cast("string").alias("okey"),
-        )
-    )
-    grouped = proj.select(
-        "o_orderpriority",
-        "cents",
-        "okey",
-        F.explode(F.sequence(F.lit(0), F.lit(7))).alias("bg"),
-    ).select(
-        "o_orderpriority",
-        "cents",
-        "bg",
-        F.md5(
-            F.concat_ws("#", F.col("bg").cast("string"), F.col("okey"))
-        ).alias("__hex"),
-    )
-    base = grouped.select(
-        "o_orderpriority",
-        "cents",
-        "bg",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(3)),
-                lambda j: F.conv(
-                    F.col("__hex").substr(
-                        F.lit(1) + F.lit(8) * j, F.lit(8)
-                    ),
-                    16,
-                    10,
-                ).cast("long"),
-            )
-        ).alias("__j", "__u"),
-    ).select(
-        "o_orderpriority",
-        "cents",
-        (F.col("bg") * 4 + F.col("__j")).alias("b"),
-        F.col("__u").alias("__u"),
-    )
-    u = F.col("__u")
-    t = _POISSON1_T
-    w = (
-        F.when(u < t[0], 0)
-        .when(u < t[1], 1)
-        .when(u < t[2], 2)
-        .when(u < t[3], 3)
-        .when(u < t[4], 4)
-        .otherwise(5)
-    )
-    rep = (
-        base.select("o_orderpriority", "b", "cents", w.alias("w"))
-        .groupBy("o_orderpriority", "b")
-        .agg(
-            F.sum("w").alias("sw"),
-            F.sum(
-                (F.col("w").cast("long") * F.col("cents")).cast(
-                    "decimal(38,0)"
-                )
-            ).alias("swx"),
-        )
-        .filter(F.col("sw") > 0)
-        .select(
-            "o_orderpriority",
-            "b",
-            (F.col("swx").cast("double") / F.col("sw").cast("double")).alias(
-                "mean_b"
-            ),
-        )
-    )
-    wr = Window.partitionBy("o_orderpriority").orderBy("mean_b", "b")
-    wc = Window.partitionBy("o_orderpriority")
-    ranked = rep.select(
-        "o_orderpriority",
-        "mean_b",
-        F.row_number().over(wr).alias("rn"),
-        F.count(F.lit(1)).over(wc).alias("cnt"),
-    )
-    lo_rn = F.least(F.lit(2), F.col("cnt"))
-    hi_rn = F.greatest(F.col("cnt") - 1, F.lit(1))
-    return ranked.groupBy("o_orderpriority").agg(
-        F.max("cnt").alias("n_reps"),
-        F.max(F.when(F.col("rn") == lo_rn, F.col("mean_b"))).alias("ci_lo"),
-        F.max(F.when(F.col("rn") == hi_rn, F.col("mean_b"))).alias("ci_hi"),
-    )
-
-
-ORACLE_BOOTSTRAP_CI = f"""
-WITH base AS (
-  SELECT o_orderpriority,
-         CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-         CAST(o_orderkey AS VARCHAR) AS okey, i.b AS b
-  FROM orders, (SELECT unnest(range(0, 32)) AS b) i
-  WHERE o_totalprice IS NOT NULL
-),
-weighted AS (
-  SELECT o_orderpriority, b, cents,
-         CASE
-           WHEN u < {_POISSON1_T[0]} THEN 0
-           WHEN u < {_POISSON1_T[1]} THEN 1
-           WHEN u < {_POISSON1_T[2]} THEN 2
-           WHEN u < {_POISSON1_T[3]} THEN 3
-           WHEN u < {_POISSON1_T[4]} THEN 4
-           ELSE 5
-         END AS w
-  FROM (
-    -- one md5 per group of 4 replicates; disjoint 8-hex windows
-    SELECT *,
-           CAST('0x' || substr(
-               md5(CAST(b // 4 AS VARCHAR) || '#' || okey),
-               1 + 8 * CAST(b % 4 AS INT), 8) AS BIGINT) AS u
-    FROM base
-  )
-),
-rep AS (
-  SELECT o_orderpriority, b,
-         CAST(SUM(CAST(w AS HUGEINT) * cents) AS DOUBLE)
-           / CAST(SUM(w) AS DOUBLE) AS mean_b
-  FROM weighted
-  GROUP BY o_orderpriority, b
-  HAVING SUM(w) > 0
-),
-ranked AS (
-  SELECT o_orderpriority, mean_b,
-         ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-                            ORDER BY mean_b, b) AS rn,
-         COUNT(*) OVER (PARTITION BY o_orderpriority) AS cnt
-  FROM rep
-)
-SELECT o_orderpriority,
-       CAST(MAX(cnt) AS BIGINT) AS n_reps,
-       MAX(CASE WHEN rn = least(2, cnt) THEN mean_b END) AS ci_lo,
-       MAX(CASE WHEN rn = greatest(cnt - 1, 1) THEN mean_b END) AS ci_hi
-FROM ranked GROUP BY o_orderpriority
-"""
-
-
-def q_sky_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-nearest-neighbor crossmatch: for a bounded deterministic query
-    set (32 md5-selected catalog sources on the cone_crossmatch integer
-    grid) find the k=3 nearest events by exact squared grid distance —
-    the "nearest counterpart" query next to cone_crossmatch's
-    fixed-radius match.
-
-    Plan: the query side is hard-bounded (TakeOrderedAndProject, never
-    a global sort) and BROADCAST against the event scan — for a bounded
-    query set, one linear scan is the honest exact-kNN plan (the
-    ANN family covers the large-query-side regime); per-query top-k is
-    a k-deep window over |queries|×|events| candidates.
-    """
-    sup = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey",
-        ((F.col("s_suppkey") * 13) % 360).alias("qx"),
-        ((F.col("s_suppkey") * 29) % 180).alias("qy"),
-    )
-    q32 = sup.orderBy(
-        F.md5(F.col("s_suppkey").cast("string")), F.col("s_suppkey")
-    ).limit(32)
-    ev = ensure_scan_parallelism(
-        load_table(spark, sf_dir, "events")
-        # an event with no user key has no grid position (nullfk lakes):
-        # a NULL distance must not compete in the ordering on either
-        # engine (Spark ranks NULLS FIRST, DuckDB LAST)
-        .filter(F.col("user_id").isNotNull())
-        .select(
-            "event_id",
-            (F.col("event_id") % 360).alias("ex"),
-            ((F.col("user_id") * 7) % 180).alias("ey"),
-        )
-        # the |events|×32 distance fan-out runs in the scan stage —
-        # spread it across cores (guide §2.5; measured 4.5 → 0.8 s)
-    )
-    d2 = (F.col("ex") - F.col("qx")) * (F.col("ex") - F.col("qx")) + (
-        F.col("ey") - F.col("qy")
-    ) * (F.col("ey") - F.col("qy"))
-    w = Window.partitionBy("s_suppkey").orderBy("d2", "event_id")
-    return (
-        ev.crossJoin(F.broadcast(q32))
-        .select("s_suppkey", "event_id", d2.cast("long").alias("d2"))
-        .select(
-            "s_suppkey",
-            "event_id",
-            "d2",
-            F.row_number().over(w).alias("knn_rank"),
-        )
-        .filter(F.col("knn_rank") <= 3)
-    )
-
-
-ORACLE_SKY_KNN = """
-WITH q32 AS (
-  SELECT s_suppkey,
-         (s_suppkey * 13) % 360 AS qx, (s_suppkey * 29) % 180 AS qy
-  FROM supplier
-  ORDER BY md5(CAST(s_suppkey AS VARCHAR)), s_suppkey LIMIT 32
-),
-ev AS (
-  SELECT event_id, event_id % 360 AS ex, (user_id * 7) % 180 AS ey
-  FROM events WHERE user_id IS NOT NULL
-),
-cand AS (
-  SELECT q.s_suppkey, e.event_id,
-         CAST((e.ex - q.qx) * (e.ex - q.qx)
-              + (e.ey - q.qy) * (e.ey - q.qy) AS BIGINT) AS d2
-  FROM ev e CROSS JOIN q32 q
-)
-SELECT s_suppkey, event_id, d2, knn_rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY s_suppkey
-                               ORDER BY d2, event_id) AS knn_rank
-  FROM cand
-) WHERE knn_rank <= 3
-"""
-
-
-def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window streaming aggregation: replay the events table as
-    a file stream and count events per (2-hour window, 1-hour slide,
-    event type) — the overlapping-window cousin of
-    ``stream_replay_counts``'s global group-count.  Each event lands in
-    exactly two epoch-aligned windows; the oracle re-derives them with
-    ``date_trunc`` arithmetic, pinning Spark's window-alignment
-    semantics (not just row counts) under the correctness gate.
-    """
-    configure_session(spark)
-    from fink_broker_spark.core.time import nanos_to_timestamp
-
-    def _agg(sdf):
-        # the file stream reads the lake's physical layout raw: a
-        # TIMESTAMP(NANOS) writer arrives as bigint ns under the
-        # engine's nanosAsLong conf, a micros writer as timestamp_ntz —
-        # normalize to a µs timestamp exactly like load_table's batch
-        # path before windowing
-        dt = dict(sdf.dtypes).get("ts")
-        if dt == "bigint":
-            sdf = sdf.withColumn("ts", nanos_to_timestamp("ts"))
-        elif dt == "timestamp_ntz":
-            sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
-        return sdf.groupBy(
-            F.window("ts", "2 hours", "1 hour"), "event_type"
-        ).agg(F.count(F.lit(1)).alias("n_events"))
-
-    with _stream_stage(sf_dir, "events") as stage:
-        drained = replay_to_table(
-            spark, stage, _agg, output_mode="complete"
-        )
-    return drained.select(
-        F.col("window.start").alias("window_start"),
-        "event_type",
-        "n_events",
-    )
-
-
-ORACLE_STREAM_SLIDING_COUNTS = """
--- make_timestamp(epoch_us(ts)) pins the value to a NAIVE UTC wall
--- time whatever the lake's physical convention: epoch_us is
--- instant-absolute on TIMESTAMPTZ and UTC-assuming on naive, so a
--- tz-aware writer (tzutc driftlab layout) neither shifts the window
--- nor leaks a TIMESTAMPTZ output type, independent of the oracle
--- session's TimeZone setting
-WITH w AS (
-  SELECT unnest([date_trunc('hour', make_timestamp(epoch_us(ts))),
-                 date_trunc('hour', make_timestamp(epoch_us(ts)))
-                   - INTERVAL 1 HOUR]) AS window_start,
-         event_type
-  FROM events
-)
-SELECT window_start, event_type, COUNT(*) AS n_events
-FROM w GROUP BY window_start, event_type
-"""
-
-
-def q_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted single-source shortest paths over the co-purchase graph
-    (3 Bellman-Ford rounds from the minimum node) — deterministic
-    integer edge weights ``(u + v) % 97 + 1``, exact min-plus algebra,
-    so the unrolled relaxation is oracle-checkable like pagerank's
-    fixed-point iterations (the weighted companion to khop_reach).
-    """
-    from fink_broker_spark.ext.graph import bounded_sssp, copurchase_edges
-
-    li = load_table(spark, sf_dir, "lineitem")
-    e = copurchase_edges(li, min_support=2).select(
-        "u", "v", ((F.col("u") + F.col("v")) % 97 + 1).alias("w")
-    )
-    # the weighted edge list feeds the node set, the source pick, and
-    # all 3 relaxation rounds — uncut, the plan re-derived the basket
-    # self-join 92× (r10 scan census; the kcore/recursive_reach r9
-    # pattern applied one family member later)
-    wedges = _materialize(
-        e.select(
-            F.col("u").alias("src"), F.col("v").alias("dst"), "w"
-        ).unionByName(
-            e.select(F.col("v").alias("src"), F.col("u").alias("dst"), "w")
-        )
-    )
-    return bounded_sssp(wedges, iters=3)
-
-
-ORACLE_SSSP_BOUNDED = """
-WITH pairs AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-  GROUP BY a.l_partkey, b.l_partkey
-  HAVING count(*) >= 2
-),
-wedges AS (
-  SELECT u AS src, v AS dst, (u + v) % 97 + 1 AS w FROM pairs
-  UNION ALL SELECT v, u, (u + v) % 97 + 1 FROM pairs
-),
-nodes AS (
-  SELECT DISTINCT src AS node FROM wedges
-  UNION SELECT DISTINCT dst FROM wedges
-),
-d0 AS (
-  SELECT node, CAST(0 AS BIGINT) AS dist FROM nodes
-  WHERE node = (SELECT MIN(node) FROM nodes)
-),
-d1 AS (
-  SELECT node, MIN(dist) AS dist FROM (
-    SELECT node, dist FROM d0
-    UNION ALL
-    SELECT e.dst AS node, d0.dist + e.w AS dist
-    FROM d0 JOIN wedges e ON e.src = d0.node
-  ) GROUP BY node
-),
-d2 AS (
-  SELECT node, MIN(dist) AS dist FROM (
-    SELECT node, dist FROM d1
-    UNION ALL
-    SELECT e.dst AS node, d1.dist + e.w AS dist
-    FROM d1 JOIN wedges e ON e.src = d1.node
-  ) GROUP BY node
-),
-d3 AS (
-  SELECT node, MIN(dist) AS dist FROM (
-    SELECT node, dist FROM d2
-    UNION ALL
-    SELECT e.dst AS node, d2.dist + e.w AS dist
-    FROM d2 JOIN wedges e ON e.src = d2.node
-  ) GROUP BY node
-)
-SELECT node, CAST(dist AS BIGINT) AS dist FROM d3
-"""
-
-
-#: HyperLogLog α₆₄·m² = (0.7213 / (1 + 1.079/64)) · 64² — ONE shared
-#: Python-precomputed double literal embedded into BOTH engines'
-#: expressions (the oracle CASTs it to DOUBLE explicitly: a bare DuckDB
-#: numeric literal is DECIMAL-typed and its arithmetic overflows /
-#: promotes differently), so the estimator constant cannot drift.
-_HLL_ALPHA64_M2 = 2905.460551022604
-
-
-def q_hll_cardinality_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperLogLog distinct-count with an engine-portable register set —
-    the exact-value-oracled twin of the rows-only ``approx_cardinality``
-    sketch (whose engine-native HLL buffers cannot be replayed in SQL).
-
-    md5-derived 32-bit hash → 6-bit bucket + 26-bit suffix; register =
-    max leading-rank per bucket (rank via ``27 − length(bin(w))``, both
-    engines' ``bin`` strips leading zeros identically); the harmonic
-    mean Σ2^(−M) is a sum of exact dyadic doubles (bit-exact in ANY
-    summation order — no float-reduction hazard), so the raw Flajolet
-    estimate αm²/Σ is one correctly-rounded division on both engines.
-    Map-side combinable max per bucket: ONE shuffle of ≤ 64 longs.
-    """
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("user_id").isNotNull()
-    )
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
-    ).cast("long")
-    base = ev.select(
-        F.shiftright(h, 26).alias("bucket"),
-        h.bitwiseAND(F.lit((1 << 26) - 1)).alias("wbits"),
-    ).select(
-        "bucket",
-        F.when(F.col("wbits") == 0, F.lit(27)).otherwise(
-            F.lit(27) - F.length(F.bin(F.col("wbits")))
-        ).alias("rank"),
-    )
-    regs = base.groupBy("bucket").agg(F.max("rank").alias("m"))
-    truth = ev.agg(F.count_distinct("user_id").alias("n_true"))
-    est = regs.agg(
-        F.count(F.lit(1)).alias("nb"),
-        F.sum(F.expr("1.0 / CAST(shiftleft(1L, m) AS DOUBLE)")).alias("s"),
-    ).select(
-        "nb",
-        F.when(
-            F.col("nb") > 0,
-            F.lit(_HLL_ALPHA64_M2)
-            / (F.col("s") + (F.lit(64) - F.col("nb")).cast("double")),
-        ).alias("hll_estimate"),
-    )
-    return est.crossJoin(F.broadcast(truth)).select(
-        F.col("nb").alias("n_buckets_hit"), "n_true", "hll_estimate"
-    )
-
-
-ORACLE_HLL_CARDINALITY_PORTABLE = f"""
-WITH ev AS (
-  SELECT user_id,
-         CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8)
-              AS BIGINT) AS h
-  FROM events WHERE user_id IS NOT NULL
-),
-base AS (
-  SELECT h >> 26 AS bucket,
-         CASE WHEN (h & {(1 << 26) - 1}) = 0 THEN 27
-              ELSE 27 - length(bin(h & {(1 << 26) - 1})) END AS rank
-  FROM ev
-),
-regs AS (SELECT bucket, MAX(rank) AS m FROM base GROUP BY bucket),
-est AS (
-  SELECT COUNT(*) AS nb,
-         SUM(1.0 / CAST((CAST(1 AS BIGINT) << m) AS DOUBLE)) AS s
-  FROM regs
-),
-truth AS (SELECT COUNT(DISTINCT user_id) AS n_true
-          FROM events WHERE user_id IS NOT NULL)
-SELECT CAST(est.nb AS BIGINT) AS n_buckets_hit, truth.n_true,
-       CASE WHEN est.nb > 0
-            THEN CAST({_HLL_ALPHA64_M2!r} AS DOUBLE)
-                 / (est.s + CAST(64 - est.nb AS DOUBLE)) END
-         AS hll_estimate
-FROM est CROSS JOIN truth
-"""
-
-
-#: Two-sided-geometric (discrete Laplace, decay ½, truncated ±8)
-#: inverse-CDF thresholds scaled to 2³² — the geometric mechanism's
-#: noise table, embedded identically in both engines.
-_DLAP_T = (
-    (-8, 5607006), (-7, 16821020), (-6, 39249048), (-5, 84105103),
-    (-4, 173817214), (-3, 353241435), (-2, 712089878), (-1, 1429786763),
-    (0, 2865180532), (1, 3582877417), (2, 3941725860), (3, 4121150081),
-    (4, 4210862192), (5, 4255718247), (6, 4278146275), (7, 4289360289),
-)
-
-
-def q_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Differentially-private-STYLE noisy release of per-type event
-    counts via the geometric mechanism (two-sided geometric noise, the
-    discrete Laplace — Ghosh et al. 2009), with the noise draw
-    DETERMINISTIC from an md5 uniform so the release is replayable and
-    oracle-checkable.  NOT private in the cryptographic sense (a seeded
-    draw is disclosure-equivalent to the truth — a real deployment
-    swaps in a CSPRNG); what this pins is the mechanism's integer
-    pipeline: counts, inverse-CDF noise, post-processing clamp at 0.
-
-    Plan: one map-side-combinable count per type + O(1) per-group noise
-    arithmetic — the 100 TB shape of every DP aggregate release.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    counts = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_true"))
-    u = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("dp#"), F.col("event_type"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("long")
-    noise = F.lit(8)
-    for k, t in reversed(_DLAP_T):
-        noise = F.when(u < t, F.lit(k)).otherwise(noise)
-    return counts.select(
-        "event_type",
-        "n_true",
-        noise.cast("long").alias("noise"),
-        F.greatest(F.col("n_true") + noise, F.lit(0).cast("long")).alias(
-            "n_noisy"
-        ),
-    )
-
-
-def _oracle_dp_noisy_counts() -> str:
-    cases = "\n           ".join(
-        f"WHEN u < {t} THEN {k}" for k, t in _DLAP_T
-    )
-    return f"""
-WITH counts AS (
-  SELECT event_type, COUNT(*) AS n_true FROM events GROUP BY event_type
-),
-drawn AS (
-  SELECT event_type, n_true,
-         CASE
-           {cases}
-           ELSE 8
-         END AS noise
-  FROM (
-    SELECT *,
-           CAST('0x' || substr(md5('dp#' || event_type), 1, 8)
-                AS BIGINT) AS u
-    FROM counts
-  )
-)
-SELECT event_type, n_true, CAST(noise AS BIGINT) AS noise,
-       CAST(greatest(n_true + noise, 0) AS BIGINT) AS n_noisy
-FROM drawn
-"""
-
-
-ORACLE_DP_NOISY_COUNTS = _oracle_dp_noisy_counts()
-
-
-def q_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample Kolmogorov–Smirnov distance between document-length
-    distributions: the lexicographically-first source vs the rest of
-    the corpus — the drift test a curator runs before mixing a new
-    source in (ks_uniformity is the one-sample twin).
-
-    Exactness: D = max |cA·nB − cB·nA| / (nA·nB) is carried as the
-    EXACT integer numerator (cum counts × totals) and divided once at
-    the end — no per-step float CDFs.  Plan: collapse to the distinct
-    value grid (ONE shuffle), one windowed cum-sum over the grid
-    (|distinct| rows, not |docs|), one global max.
-    """
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("n_chars").isNotNull()
-    )
-    src0 = docs.agg(F.min("source").alias("src_a"))
-    t = (
-        docs.crossJoin(F.broadcast(src0))
-        .select(
-            "n_chars",
-            (F.col("source") == F.col("src_a")).cast("long").alias("ina"),
-            "src_a",
-        )
-        .groupBy("src_a", "n_chars")
-        .agg(
-            F.sum("ina").alias("ca"),
-            F.sum(1 - F.col("ina")).alias("cb"),
-        )
-    )
-    w = Window.orderBy("n_chars").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = t.select(
-        "src_a",
-        F.sum("ca").over(w).alias("cuma"),
-        F.sum("cb").over(w).alias("cumb"),
-    )
-    # totals ride the same grid (max of a nondecreasing cum IS the
-    # total), so the numerator never needs a second scan of the docs
-    wtot = Window.partitionBy(F.lit(1))
-    scored = cum.select(
-        "src_a",
-        "cuma",
-        "cumb",
-        F.max("cuma").over(wtot).alias("n_a"),
-        F.max("cumb").over(wtot).alias("n_b"),
-    ).select(
-        "src_a",
-        "n_a",
-        "n_b",
-        F.abs(
-            F.col("cuma") * F.col("n_b") - F.col("cumb") * F.col("n_a")
-        ).alias("dnum"),
-    )
-    return scored.groupBy("src_a", "n_a", "n_b").agg(
-        F.max("dnum").alias("d_num")
-    ).select(
-        "src_a",
-        "n_a",
-        "n_b",
-        "d_num",
-        F.when(
-            (F.col("n_a") > 0) & (F.col("n_b") > 0),
-            F.col("d_num").cast("double")
-            / (F.col("n_a") * F.col("n_b")).cast("double"),
-        ).alias("ks_d"),
-    )
-
-
-ORACLE_KS_TWO_SAMPLE = """
-WITH d AS (
-  SELECT n_chars, source FROM documents WHERE n_chars IS NOT NULL
-),
-s0 AS (SELECT MIN(source) AS src_a FROM d),
-t AS (
-  SELECT s0.src_a, n_chars,
-         SUM(CASE WHEN source = s0.src_a THEN 1 ELSE 0 END) AS ca,
-         SUM(CASE WHEN source = s0.src_a THEN 0 ELSE 1 END) AS cb
-  FROM d CROSS JOIN s0
-  GROUP BY s0.src_a, n_chars
-),
-cum AS (
-  SELECT src_a,
-         SUM(ca) OVER (ORDER BY n_chars
-                       ROWS UNBOUNDED PRECEDING) AS cuma,
-         SUM(cb) OVER (ORDER BY n_chars
-                       ROWS UNBOUNDED PRECEDING) AS cumb
-  FROM t
-),
-scored AS (
-  SELECT src_a, cuma, cumb,
-         MAX(cuma) OVER () AS n_a, MAX(cumb) OVER () AS n_b
-  FROM cum
-)
-SELECT src_a, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-       CAST(MAX(abs(cuma * n_b - cumb * n_a)) AS BIGINT) AS d_num,
-       CASE WHEN n_a > 0 AND n_b > 0 THEN
-         CAST(MAX(abs(cuma * n_b - cumb * n_a)) AS DOUBLE)
-           / CAST(n_a * n_b AS DOUBLE) END AS ks_d
-FROM scored GROUP BY src_a, n_a, n_b
-"""
-
-
-def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kruskal–Wallis H across the order-priority groups on order value
-    — the k-sample rank test completing the mannwhitney_u (2-sample) /
-    welch_ttest (parametric) family.  No tie correction (documented;
-    identical on both engines).
-
-    Exact fractional ranks WITHOUT a per-row global sort: collapse to
-    the distinct value grid, cum-sum the grid (|distinct| rows), then
-    2×avg-rank(v) = 2·cum_prev + n_v + 1 is exact integer algebra and
-    each group's rank sum is Σ n_gv · avgrank2(v) — one grid join, one
-    group aggregate, H from one fixed double tree over decimal(38,0)
-    sums (R² reaches ~2⁷⁰ at sf1: wide-decimal, converted to double
-    only after the division-safe guards).
-    """
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_totalprice").isNotNull()
-    )
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    t = o.select("o_orderpriority", cents.alias("c"))
-    grid = t.groupBy("c").agg(F.count(F.lit(1)).alias("nv"))
-    wg = Window.orderBy("c").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    ranked_grid = grid.select(
-        "c",
-        (
-            2 * (F.sum("nv").over(wg) - F.col("nv")) + F.col("nv") + 1
-        ).alias("ar2"),
-    )
-    per_gv = t.groupBy("o_orderpriority", "c").agg(
-        F.count(F.lit(1)).alias("ngv")
-    )
-    rsum = (
-        per_gv.join(ranked_grid, "c")
-        .groupBy("o_orderpriority")
-        .agg(
-            F.sum("ngv").alias("n_g"),
-            F.sum(
-                (F.col("ngv") * F.col("ar2")).cast("decimal(38,0)")
-            ).alias("r2_g"),
-        )
-    )
-    tot = rsum.agg(
-        F.sum("n_g").alias("n"), F.count(F.lit(1)).alias("k")
-    )
-    # Σ R2_g² / n_g: the terms are NOT exact doubles, so a hash-stable
-    # sum must fix the reduction ORDER — a group-key-ordered cumulative
-    # window (the embedding_neardup cumsum idiom), never a groupBy SUM
-    # whose partial-merge order is engine-dependent
-    terms = rsum.crossJoin(F.broadcast(tot)).select(
-        "o_orderpriority",
-        "n",
-        "k",
-        (
-            F.col("r2_g").cast("double")
-            * F.col("r2_g").cast("double")
-            / F.col("n_g").cast("double")
-        ).alias("term"),
-    )
-    wseq = Window.orderBy("o_orderpriority").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    seq = terms.select(
-        "n",
-        "k",
-        F.sum("term").over(wseq).alias("s"),
-        F.row_number()
-        .over(Window.orderBy("o_orderpriority"))
-        .alias("rn"),
-    ).filter(F.col("rn") == F.col("k"))
-    nd = F.col("n").cast("double")
-    return seq.select(
-        F.col("n"),
-        F.col("k"),
-        F.when(
-            F.col("n") >= 2,
-            F.lit(3.0) / (nd * (nd + F.lit(1.0))) * F.col("s")
-            - F.lit(3.0) * (nd + F.lit(1.0)),
-        ).alias("h_stat"),
-    )
-
-
-ORACLE_KRUSKAL_WALLIS = """
-WITH t AS (
-  SELECT o_orderpriority,
-         CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS c
-  FROM orders WHERE o_totalprice IS NOT NULL
-),
-grid AS (SELECT c, COUNT(*) AS nv FROM t GROUP BY c),
-ranked_grid AS (
-  SELECT c,
-         2 * (SUM(nv) OVER (ORDER BY c ROWS UNBOUNDED PRECEDING) - nv)
-           + nv + 1 AS ar2
-  FROM grid
-),
-per_gv AS (
-  SELECT o_orderpriority, c, COUNT(*) AS ngv
-  FROM t GROUP BY o_orderpriority, c
-),
-rsum AS (
-  SELECT o_orderpriority, SUM(ngv) AS n_g,
-         SUM(CAST(ngv AS HUGEINT) * ar2) AS r2_g
-  FROM per_gv JOIN ranked_grid USING (c)
-  GROUP BY o_orderpriority
-),
-tot AS (SELECT CAST(SUM(n_g) AS BIGINT) AS n, COUNT(*) AS k FROM rsum),
-terms AS (
-  SELECT o_orderpriority, tot.n, tot.k,
-         CAST(r2_g AS DOUBLE) * CAST(r2_g AS DOUBLE)
-           / CAST(n_g AS DOUBLE) AS term
-  FROM rsum CROSS JOIN tot
-),
--- group-key-ordered cumulative sum pins the float reduction order
--- (terms are inexact doubles; a plain SUM's merge order is
--- engine-dependent)
-seq AS (
-  SELECT n, k,
-         SUM(term) OVER (ORDER BY o_orderpriority
-                         ROWS UNBOUNDED PRECEDING) AS s,
-         ROW_NUMBER() OVER (ORDER BY o_orderpriority) AS rn
-  FROM terms
-)
-SELECT n, k,
-       CASE WHEN n >= 2 THEN
-         3.0 / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0)) * s
-         - 3.0 * (CAST(n AS DOUBLE) + 1.0) END AS h_stat
-FROM seq WHERE rn = k
-"""
-
-
-def q_ivf_ann_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN with the fully exact-integer portable pipeline — the
-    oracle-checked twin of the rows-only ``ivf_ann_topk`` (k-means fit
-    is engine-specific; md5-first deterministic centroids are not).
-    Pins the IVF SEMANTICS — integerized components, cell argmin,
-    nprobe probe choice, candidate equi-join, exact re-rank — under
-    the exact-value gate with zero floats anywhere."""
-    from fink_broker_spark.ext.ann import ivf_portable_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_portable_topk(
-        emb, n_cells=8, nprobe=2, k=5, scale=10000, n_queries=10
-    )
-
-
-ORACLE_IVF_ANN_PORTABLE = """
-WITH iv AS (
-  -- well-formed domain, mirroring the engine's well_formed_vectors:
-  -- a NULL-element vector turns every d2 NULL, and Spark ASC ranks
-  -- NULLS FIRST vs DuckDB NULLS LAST — the argmin cell/code choice
-  -- silently flips (nullemb driftlab layout, r9); NaN/Inf elements
-  -- poison the integerization cast on both engines and np.argmin
-  -- disagrees with SQL windows on NaN placement (nanemb layout, r10)
-  SELECT vec_id,
-         [CAST(FLOOR(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT)
-          FOR x IN embedding] AS e
-  FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(list_filter(embedding,
-                        x -> x IS NULL OR NOT isfinite(x))) = 0
-),
-seeds AS (
-  SELECT e AS ce,
-         ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                            vec_id) AS cid
-  FROM iv
-  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8
-),
-assigned AS (
-  SELECT vec_id, e, cid FROM (
-    SELECT iv.vec_id, iv.e, s.cid,
-           ROW_NUMBER() OVER (
-             PARTITION BY iv.vec_id
-             ORDER BY list_reduce(
-               [(iv.e[i] - s.ce[i]) * (iv.e[i] - s.ce[i])
-                FOR i IN range(1, len(iv.e) + 1)], (x, y) -> x + y),
-               s.cid) AS rk
-    FROM iv CROSS JOIN seeds s
-  ) WHERE rk = 1
-),
-probes AS (
-  SELECT query_id, qe, cid FROM (
-    SELECT iv.vec_id AS query_id, iv.e AS qe, s.cid,
-           ROW_NUMBER() OVER (
-             PARTITION BY iv.vec_id
-             ORDER BY list_reduce(
-               [(iv.e[i] - s.ce[i]) * (iv.e[i] - s.ce[i])
-                FOR i IN range(1, len(iv.e) + 1)], (x, y) -> x + y),
-               s.cid) AS rk
-    FROM iv CROSS JOIN seeds s
-    WHERE iv.vec_id < 10
-  ) WHERE rk <= 2
-),
-cand AS (
-  SELECT p.query_id, a.vec_id,
-         list_reduce(
-           [(p.qe[i] - a.e[i]) * (p.qe[i] - a.e[i])
-            FOR i IN range(1, len(p.qe) + 1)], (x, y) -> x + y) AS d2
-  FROM probes p JOIN assigned a USING (cid)
-  WHERE a.vec_id <> p.query_id
-)
-SELECT query_id, vec_id, CAST(d2 AS BIGINT) AS d2,
-       CAST(rnk AS INTEGER) AS rnk
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY d2, vec_id) AS rnk
-  FROM cand
-) WHERE rnk <= 5
-"""
-
-
-def q_scatter_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed scatter-matrix build + two FIXED-POINT power-iteration
-    steps — the exact-oracle PRIMITIVE underneath PCA (the pagerank
-    integer-algebra trick applied to M·v).  NOT a principal-component
-    claim: on this corpus the spectrum is near-isotropic (λ₂/λ₁ ≈ 0.98
-    measured) and two steps from the ones vector do not approximate PC1
-    (cos ≈ 0.2 at sf0.01); the rows-only ``embedding_pca`` remains the
-    real eigensolver — THIS query pins the building blocks that ARE
-    ANSI-expressible: the integerized scatter matrix M = n·G − S·Sᵀ
-    (exact DECIMAL(38,0) from integer Gram/sum aggregates — n× the
-    covariance) and exact M·v products with integral-DIV rescaling
-    (truncation toward zero matches between Spark DIV and DuckDB //,
-    verified incl. negatives).  Zero floats end to end.
-
-    Plan: one n×d² self-join aggregate builds G (d = 64 → 4096 cells,
-    map-side combinable), then two d²-row matrix-vector joins; nothing
-    driver-side, no iteration-order float hazard anywhere.
-
-    Domain: well-formed (finite) vectors only, mirrored in the
-    oracle's wf CTE — NULL elements fell out of the SUMs symmetrically
-    on both engines, but a NaN/Inf element hard-errors the ANSI
-    integerization cast on both (nanemb driftlab layout, r10), and
-    nrow must count the SAME filtered rows the Gram matrix sums."""
-    from fink_broker_spark.ext.ann import well_formed_vectors
-
-    emb = well_formed_vectors(
-        load_table(spark, sf_dir, "embeddings"), "embedding"
-    )
-    ej = emb.select(
-        "vec_id",
-        F.posexplode(
-            F.transform(
-                F.col("embedding"),
-                lambda x: F.floor(x.cast("double") * 10000 + F.lit(0.5))
-                .cast("long"),
-            )
-        ).alias("j", "ej"),
-    )
-    # the exploded component relation feeds the Gram self-join (both
-    # sides) AND the column-sum vector (30 static embeddings scans
-    # through the iteration chain, r9 census) — materialize once
-    ej = _materialize(ej)
-    ek = ej.select(
-        "vec_id", F.col("j").alias("k"), F.col("ej").alias("ekv")
-    )
-    g = (
-        ej.join(ek, "vec_id")
-        .groupBy("j", "k")
-        .agg(F.sum(F.col("ej") * F.col("ekv")).alias("g"))
-    )
-    s = ej.groupBy("j").agg(F.sum("ej").alias("s"))
-    nrow = emb.agg(F.count(F.lit(1)).alias("n"))
-
-    def big(c):
-        return c.cast("decimal(38,0)")
-
-    m = (
-        g.join(s, "j")
-        .join(
-            s.select(F.col("j").alias("k"), F.col("s").alias("sk")), "k"
-        )
-        .crossJoin(F.broadcast(nrow))
-        .select(
-            "j",
-            "k",
-            (big(F.col("n")) * big(F.col("g")) - big(F.col("s")) * big(F.col("sk"))).alias(
-                "m"
-            ),
-        )
-    )
-    # iteration 1: v0 = ones → u1_j = Σ_k M_jk, rescaled to ≤ ~10³
-    u1 = m.groupBy("j").agg(F.sum("m").alias("u1"))
-    r1 = u1.agg(F.max(F.abs(F.col("u1"))).alias("__mx")).select(
-        F.expr("__mx DIV 1000").alias("r1m")
-    )
-    v1 = u1.crossJoin(F.broadcast(r1)).select(
-        F.col("j").alias("k"),
-        F.expr("u1 DIV (r1m + 1)").alias("v1"),
-    )
-    # iteration 2: u2_j = Σ_k M_jk · v1_k, emitted in ≤10⁶ units
-    u2 = (
-        m.join(v1, "k")
-        .groupBy("j")
-        .agg(F.sum(F.col("m") * big(F.col("v1"))).alias("u2"))
-    )
-    r2 = u2.agg(F.max(F.abs(F.col("u2"))).alias("__mx")).select(
-        F.expr("__mx DIV 1000000").alias("r2m")
-    )
-    return (
-        u2.crossJoin(F.broadcast(r2))
-        .select(
-            F.col("j").cast("int").alias("dim"),
-            F.expr("CAST(u2 DIV (r2m + 1) AS BIGINT)").alias(
-                "loading_scaled"
-            ),
-        )
-    )
-
-
-ORACLE_SCATTER_POWER_ITERATION = """
-WITH wf AS (
-  -- well-formed domain, mirroring the engine's well_formed_vectors:
-  -- NULL elements fell out of the SUMs symmetrically, but NaN/Inf
-  -- hard-errors the integerization CAST on both engines (nanemb
-  -- driftlab layout, r10); nrow counts THIS filtered relation
-  SELECT vec_id, embedding
-  FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(list_filter(embedding,
-                        x -> x IS NULL OR NOT isfinite(x))) = 0
-),
-ej AS (
-  SELECT vec_id, i - 1 AS j,
-         CAST(FLOOR(CAST(embedding[i] AS DOUBLE) * 10000 + 0.5)
-              AS BIGINT) AS ej
-  FROM wf, range(1, 100000) t(i)
-  WHERE i <= len(embedding)
-),
-g AS (
-  SELECT a.j AS j, b.j AS k, SUM(a.ej * b.ej) AS g
-  FROM ej a JOIN ej b USING (vec_id)
-  GROUP BY a.j, b.j
-),
-s AS (SELECT j, SUM(ej) AS s FROM ej GROUP BY j),
-nrow AS (SELECT COUNT(*) AS n FROM wf),
-m AS (
-  SELECT g.j, g.k,
-         CAST(n AS HUGEINT) * g - CAST(sj.s AS HUGEINT) * sk.s AS m
-  FROM g
-  JOIN s sj ON sj.j = g.j
-  JOIN s sk ON sk.j = g.k
-  CROSS JOIN nrow
-),
-u1 AS (SELECT j, SUM(m) AS u1 FROM m GROUP BY j),
-r1 AS (SELECT MAX(abs(u1)) // 1000 AS r1m FROM u1),
-v1 AS (
-  SELECT j AS k, u1 // (r1m + 1) AS v1 FROM u1 CROSS JOIN r1
-),
-u2 AS (
-  SELECT m.j, SUM(m.m * CAST(v1.v1 AS HUGEINT)) AS u2
-  FROM m JOIN v1 USING (k) GROUP BY m.j
-),
-r2 AS (SELECT MAX(abs(u2)) // 1000000 AS r2m FROM u2)
-SELECT CAST(j AS INTEGER) AS dim,
-       CAST(u2 // (r2m + 1) AS BIGINT) AS loading_scaled
-FROM u2 CROSS JOIN r2
-"""
-
-
-def q_pq_ann_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ-ADC ANN with the fully exact-integer portable pipeline — the
-    oracle-checked twin of the rows-only ``pq_ann_topk`` (k-means
-    codebook fit is engine-specific; md5-first codewords are not).
-    Pins the PQ SEMANTICS — per-subspace argmin encoding, additive ADC
-    lookup, refine-shortlist, exact re-rank — under the exact-value
-    gate with zero floats anywhere (``ext/ann.py:pq_portable_topk``).
-    Completes the ivf_ann_portable recipe for the PQ family
-    (VERDICT r7 next-round #3)."""
-    from fink_broker_spark.ext.ann import pq_portable_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return pq_portable_topk(
-        emb, m=8, subdim=8, ncodes=16, k=5, refine=50, scale=10000,
-        n_queries=10,
-    )
-
-
-ORACLE_PQ_ANN_PORTABLE = """
-WITH iv AS (
-  -- well-formed domain, mirroring the engine's well_formed_vectors:
-  -- a NULL-element vector turns every d2 NULL, and Spark ASC ranks
-  -- NULLS FIRST vs DuckDB NULLS LAST — the argmin cell/code choice
-  -- silently flips (nullemb driftlab layout, r9); NaN/Inf elements
-  -- poison the integerization cast on both engines and np.argmin
-  -- disagrees with SQL windows on NaN placement (nanemb layout, r10)
-  SELECT vec_id,
-         [CAST(FLOOR(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT)
-          FOR x IN embedding] AS e
-  FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(list_filter(embedding,
-                        x -> x IS NULL OR NOT isfinite(x))) = 0
-),
-seeds AS (
-  SELECT e AS ce,
-         ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                            vec_id) AS code
-  FROM iv
-  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16
-),
-subs AS (SELECT s FROM range(0, 8) t(s)),
-enc AS (
-  SELECT vec_id, s, code FROM (
-    SELECT iv.vec_id, t.s, sd.code,
-           ROW_NUMBER() OVER (
-             PARTITION BY iv.vec_id, t.s
-             ORDER BY list_reduce(
-               [(iv.e[t.s * 8 + i] - sd.ce[t.s * 8 + i])
-                * (iv.e[t.s * 8 + i] - sd.ce[t.s * 8 + i])
-                FOR i IN range(1, 9)], (x, y) -> x + y),
-               sd.code) AS rk
-    FROM iv CROSS JOIN seeds sd CROSS JOIN subs t
-  ) WHERE rk = 1
-),
-adc AS (
-  SELECT q.vec_id AS query_id, t.s, sd.code,
-         list_reduce(
-           [(q.e[t.s * 8 + i] - sd.ce[t.s * 8 + i])
-            * (q.e[t.s * 8 + i] - sd.ce[t.s * 8 + i])
-            FOR i IN range(1, 9)], (x, y) -> x + y) AS tt
-  FROM iv q CROSS JOIN seeds sd CROSS JOIN subs t
-  WHERE q.vec_id < 10
-),
-approx AS (
-  SELECT a.query_id, e.vec_id, SUM(a.tt) AS adc_d2
-  FROM enc e JOIN adc a ON e.s = a.s AND e.code = a.code
-  WHERE e.vec_id <> a.query_id
-  GROUP BY 1, 2
-),
-short AS (
-  SELECT query_id, vec_id, adc_d2,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY adc_d2, vec_id) AS rs
-  FROM approx
-),
-rer AS (
-  SELECT s.query_id, s.vec_id, s.adc_d2,
-         list_reduce(
-           [(qv.e[i] - cv.e[i]) * (qv.e[i] - cv.e[i])
-            FOR i IN range(1, len(qv.e) + 1)], (x, y) -> x + y) AS d2
-  FROM short s
-  JOIN iv qv ON qv.vec_id = s.query_id
-  JOIN iv cv ON cv.vec_id = s.vec_id
-  WHERE s.rs <= 50
-)
-SELECT query_id, vec_id, CAST(adc_d2 AS BIGINT) AS adc_d2,
-       CAST(d2 AS BIGINT) AS d2, CAST(rnk AS INTEGER) AS rnk
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY d2, vec_id) AS rnk
-  FROM rer
-) WHERE rnk <= 5
-"""
-
-
-def q_ann_kernel_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact integer squared-L2 top-k through the vectorized numpy
-    matrix-kernel physical path (mapInPandas + per-partition partial
-    top-k) — the oracle-checked twin of the rows-only
-    ``ann_kernel_topk``: int64 matmul has no rounding, so the SAME
-    kernel plumbing the float cosine path uses becomes hash-exact
-    (``ext/ann.py:kernel_portable_topk``; VERDICT r7 next-round #3)."""
-    from fink_broker_spark.ext.ann import kernel_portable_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return kernel_portable_topk(
-        emb, emb.filter(F.col("vec_id") < 10), k=5, scale=10000
-    )
-
-
-ORACLE_ANN_KERNEL_PORTABLE = """
-WITH iv AS (
-  -- IS NOT NULL + no-NULL-element mirror the engine's symmetric
-  -- embedding drop (ADVICE r8 + r9 review: the numpy kernel would
-  -- crash on NULL arrays AND on NULL elements while DuckDB would
-  -- propagate NULL d2 — keep the two sides' domains identical)
-  SELECT vec_id,
-         [CAST(FLOOR(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT)
-          FOR x IN embedding] AS e
-  FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(list_filter(embedding,
-                        x -> x IS NULL OR NOT isfinite(x))) = 0
-),
-cand AS (
-  SELECT q.vec_id AS query_id, c.vec_id,
-         list_reduce(
-           [(q.e[i] - c.e[i]) * (q.e[i] - c.e[i])
-            FOR i IN range(1, len(q.e) + 1)], (x, y) -> x + y) AS d2
-  FROM iv q JOIN iv c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < 10
-)
-SELECT query_id, vec_id, CAST(d2 AS BIGINT) AS d2,
-       CAST(rnk AS INTEGER) AS rnk
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY d2, vec_id) AS rnk
-  FROM cand
-) WHERE rnk <= 5
-"""
-
-
-def q_semantic_dedup_portable(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """SemDeDup cell-bucketed near-dup with the fully exact-integer
-    portable pipeline — the oracle-checked twin of the rows-only
-    ``semantic_dedup`` (k-means fit + greedy float-cosine leader scan
-    are engine-specific).  md5-first cells, (md5, id) scan order, and
-    the pairwise earlier-member drop rule ``25·dot² ≥ 4·|a|²·|b|²``
-    (cos ≥ 0.4) in decimal(38,0)/HUGEINT; kept_id_sum checksums the
-    kept SET, not just counts
-    (``ext/semdedup.py:semantic_dedup_portable``;
-    VERDICT r7 next-round #3)."""
-    from fink_broker_spark.ext.semdedup import semantic_dedup_portable
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return semantic_dedup_portable(
-        emb, n_cells=8, tau_num=4, tau_den=25, scale=10000
-    )
-
-
-ORACLE_SEMANTIC_DEDUP_PORTABLE = """
-WITH iv AS (
-  -- well-formed domain, mirroring the engine's well_formed_vectors:
-  -- a NULL-element vector turns every d2 NULL, and Spark ASC ranks
-  -- NULLS FIRST vs DuckDB NULLS LAST — the argmin cell/code choice
-  -- silently flips (nullemb driftlab layout, r9); NaN/Inf elements
-  -- poison the integerization cast on both engines and np.argmin
-  -- disagrees with SQL windows on NaN placement (nanemb layout, r10)
-  SELECT vec_id,
-         [CAST(FLOOR(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT)
-          FOR x IN embedding] AS e
-  FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(list_filter(embedding,
-                        x -> x IS NULL OR NOT isfinite(x))) = 0
-),
-seeds AS (
-  SELECT e AS ce,
-         ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                            vec_id) AS cid
-  FROM iv
-  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8
-),
-assigned AS (
-  SELECT vec_id, e, cid FROM (
-    SELECT iv.vec_id, iv.e, s.cid,
-           ROW_NUMBER() OVER (
-             PARTITION BY iv.vec_id
-             ORDER BY list_reduce(
-               [(iv.e[i] - s.ce[i]) * (iv.e[i] - s.ce[i])
-                FOR i IN range(1, len(iv.e) + 1)], (x, y) -> x + y),
-               s.cid) AS rk
-    FROM iv CROSS JOIN seeds s
-  ) WHERE rk = 1
-),
-ranked AS (
-  SELECT vec_id, e, cid,
-         list_reduce([x * x FOR x IN e], (x, y) -> x + y) AS n2,
-         ROW_NUMBER() OVER (PARTITION BY cid
-                            ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                                     vec_id) AS r
-  FROM assigned
-),
-pairs AS (
-  SELECT a.cid, b.vec_id AS idb,
-         list_reduce(
-           [a.e[i] * b.e[i] FOR i IN range(1, len(a.e) + 1)],
-           (x, y) -> x + y) AS dot,
-         a.n2 AS n2a, b.n2 AS n2b
-  FROM ranked a JOIN ranked b ON a.cid = b.cid AND a.r < b.r
-),
-dropped AS (
-  SELECT DISTINCT cid, idb
-  FROM pairs
-  WHERE dot > 0
-    AND CAST(dot AS HUGEINT) * dot * 25
-        >= CAST(n2a AS HUGEINT) * n2b * 4
-)
-SELECT r.cid, count(*) AS n_members,
-       count(d.idb) AS n_dropped,
-       count(*) - count(d.idb) AS n_kept,
-       CAST(SUM(CASE WHEN d.idb IS NULL THEN r.vec_id ELSE 0 END)
-            AS BIGINT) AS kept_id_sum
-FROM ranked r
-LEFT JOIN dropped d ON r.cid = d.cid AND r.vec_id = d.idb
-GROUP BY r.cid
-"""
-
-
-def q_reingest_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Re-ingest drift audit over the document lake — the governance
-    companion to ``uniqueness_audit`` for CONTENT keys: how many
-    doc_ids carry multiple rows, how many of those are verbatim
-    duplicates (at-least-once delivery) vs DRIFTED bodies or
-    re-detected langs (upsert/re-crawl — the dupdrift driftlab state),
-    and the worst version depth.  This is the report that decides
-    whether the canonical min(text) survivor pick (the dedup staging
-    discipline) is a no-op or is actively resolving conflicts.
-
-    Plan: ONE (doc_id, text, lang) group (shuffle ∝ distinct tuples,
-    map-side combined), one per-doc re-aggregate, a 1-row output — no
-    self-joins, no windows.  All outputs exact integers; NULL texts
-    are version tuples (GROUP BY semantics) but not drift values
-    (count DISTINCT skips NULLs identically on both engines)."""
-    docs = load_table(spark, sf_dir, "documents")
-    d1 = docs.groupBy("doc_id", "text", "lang").agg(
-        F.count(F.lit(1)).alias("m")
-    )
-    per = d1.groupBy("doc_id").agg(
-        F.sum("m").cast("long").alias("c_rows"),
-        F.count(F.lit(1)).alias("n_versions"),
-        F.count_distinct("text").alias("n_texts"),
-        F.count_distinct("lang").alias("n_langs"),
-    )
-    return per.agg(
-        F.coalesce(F.sum("c_rows"), F.lit(0)).cast("long").alias("n_rows"),
-        F.count(F.lit(1)).alias("n_docs"),
-        F.coalesce(
-            F.sum(F.when(F.col("c_rows") > 1, 1).otherwise(0)), F.lit(0)
-        )
-        .cast("long")
-        .alias("n_multirow_docs"),
-        F.coalesce(F.sum(F.col("c_rows") - F.col("n_versions")), F.lit(0))
-        .cast("long")
-        .alias("n_verbatim_dup_rows"),
-        F.coalesce(
-            F.sum(F.when(F.col("n_texts") > 1, 1).otherwise(0)), F.lit(0)
-        )
-        .cast("long")
-        .alias("n_text_drifted_docs"),
-        F.coalesce(
-            F.sum(F.when(F.col("n_langs") > 1, 1).otherwise(0)), F.lit(0)
-        )
-        .cast("long")
-        .alias("n_lang_drifted_docs"),
-        F.max("n_versions").alias("max_versions"),
-    )
-
-
-ORACLE_REINGEST_DRIFT_AUDIT = """
-WITH d1 AS (
-  SELECT doc_id, text, lang, count(*) AS m
-  FROM documents GROUP BY 1, 2, 3
-),
-per AS (
-  SELECT doc_id, SUM(m) AS c_rows, count(*) AS n_versions,
-         count(DISTINCT text) AS n_texts,
-         count(DISTINCT lang) AS n_langs
-  FROM d1 GROUP BY doc_id
-)
-SELECT CAST(COALESCE(SUM(c_rows), 0) AS BIGINT) AS n_rows,
-       count(*) AS n_docs,
-       CAST(COALESCE(SUM(CASE WHEN c_rows > 1 THEN 1 ELSE 0 END), 0)
-            AS BIGINT) AS n_multirow_docs,
-       CAST(COALESCE(SUM(c_rows - n_versions), 0) AS BIGINT)
-         AS n_verbatim_dup_rows,
-       CAST(COALESCE(SUM(CASE WHEN n_texts > 1 THEN 1 ELSE 0 END), 0)
-            AS BIGINT) AS n_text_drifted_docs,
-       CAST(COALESCE(SUM(CASE WHEN n_langs > 1 THEN 1 ELSE 0 END), 0)
-            AS BIGINT) AS n_lang_drifted_docs,
-       CAST(MAX(n_versions) AS BIGINT) AS max_versions
-FROM per
-"""
-
-
-def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTER consolidation — the composition production
-    dedup pipelines actually run: MinHash-LSH verified pairs
-    (``minhash_lsh_portable``'s exact md5-affine pipeline) → bounded
-    4-round min-label propagation → cluster-size histogram.  Pair
-    finding alone over-counts removals when families overlap (A~B,
-    B~C); entity resolution needs the connected component.
-
-    BOUNDED-ROUND semantics, identical on both sides by construction:
-    4 min-label rounds cover components of min-label eccentricity ≤ 4
-    — verified LSH families are near-cliques (every member pair passed
-    Jaccard ≥ 0.5), where min-label converges in 1–2 rounds; the
-    oracle unrolls the SAME 4 rounds, so even a hypothetical
-    non-converged chain hashes identically.  Docs in no pair are
-    singletons and out of scope (this is the dedup-graph accounting).
-
-    Plan: the rounds are :func:`ext.graph.min_label_propagation`'s
-    closed-neighbourhood MIN — per round ONE edge→label equi-join + min
-    aggregate (shuffle ∝ edges, bounded by the LSH verify output); the
-    pointer-jumping CC (``ext/dedup.py``) stays the log-depth 100 TB
-    regime; this bounded twin is what fits the exact gate.
-
-    Returns (cluster_size, n_clusters), exact integers.
-    """
-    from fink_broker_spark.ext.dedup import minhash_lsh_pairs_portable
-    from fink_broker_spark.ext.graph import (
-        min_label_propagation,
-        symmetrize,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs_portable(
-        docs, num_hashes=16, nbands=4, n=3, threshold=0.5
-    ).select("id_a", "id_b")
-    # the edge set feeds every round: materialize it once so the rounds
-    # read the verified pairs instead of re-running the LSH pipeline
-    sym = _materialize(
-        symmetrize(
-            pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        )
-    )
-    labels = min_label_propagation(sym, rounds=4)
-    sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("csize"))
-    return sizes.groupBy(F.col("csize").alias("cluster_size")).agg(
-        F.count(F.lit(1)).alias("n_clusters")
-    )
-
-
-def _oracle_neardup_clusters(rounds: int = 4) -> str:
-    """DuckDB twin of :func:`q_neardup_clusters`: the LSH-pair oracle
-    as a derived table, then the SAME ``rounds`` unrolled min-label
-    CTEs — generated from one parameter so the two sides cannot drift."""
-    steps = []
-    for r in range(1, rounds + 1):
-        prev = f"l{r - 1}"
-        steps.append(
-            f"l{r} AS MATERIALIZED (\n"
-            f"  SELECT l.id, least(l.lbl, coalesce(m.nmin, l.lbl)) AS lbl\n"
-            f"  FROM {prev} l LEFT JOIN (\n"
-            f"    SELECT e.src, MIN(x.lbl) AS nmin\n"
-            f"    FROM edges e JOIN {prev} x ON x.id = e.dst\n"
-            f"    GROUP BY e.src\n"
-            f"  ) m ON m.src = l.id\n"
-            f")"
-        )
-    # MATERIALIZED is load-bearing: every l_r references l_{r-1} twice
-    # and edges re-derives pairs (the full LSH pipeline) — DuckDB 1.0
-    # inlines single-definition CTEs, so without the hint the tree
-    # re-evaluates exponentially (measured 83 s → 1.5 s at sf0.01)
-    return f"""
-WITH pairs AS MATERIALIZED (
-  SELECT id_a, id_b FROM ( {_oracle_minhash_lsh_portable()} ) __p
-),
-edges AS MATERIALIZED (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION ALL
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-l0 AS MATERIALIZED (SELECT DISTINCT src AS id, src AS lbl FROM edges),
-{', '.join(steps)},
-sizes AS (SELECT lbl, count(*) AS csize FROM l{rounds} GROUP BY lbl)
-SELECT CAST(csize AS BIGINT) AS cluster_size,
-       count(*) AS n_clusters
-FROM sizes GROUP BY csize
-"""
-
-
-ORACLE_NEARDUP_CLUSTERS = _oracle_neardup_clusters()
-
-
-# --------------------------------------------------------------------------
-# round 9 — sequence modeling prep, mixture reweighting, decontamination,
-# density clustering
-# --------------------------------------------------------------------------
-
-
-def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heaps-law vocabulary-growth audit: walking the corpus in
-    ingest order (doc_id), how many NEW 3-gram shingles does each
-    successive tenth of the corpus contribute?  The
-    diminishing-returns curve data teams read before paying for the
-    next crawl — a flattening tail means more of the same, a steep
-    tail means the source still adds novelty.
-
-    Scale shape: the decile is computed from the doc_id VALUE range
-    (``10·(id − lo) DIV (hi − lo + 1)`` against a 1-row min/max
-    broadcast) — NOT an ntile/rank window, which would single-
-    partition-sort billions of doc ids at 100 TB.  First occurrence
-    is one shingle-keyed min aggregate (the only fact-sized shuffle);
-    everything after runs on ≤ 10 rows.  Canonical per-doc rows via
-    the dupdrift survivor rule (min(text) after the empty filter);
-    integer division has non-negative operands on both engines so
-    Spark's truncating DIV and DuckDB's flooring ``//`` agree."""
-    from fink_broker_spark.functions.text import (
-        shingles_from_tokens_expr,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    uniq = (
-        docs.filter(F.length(F.trim(F.lower(F.col("text")))) > 0)
-        .groupBy("doc_id")
-        .agg(F.min("text").alias("text"))
-    )
-    # three consumers (grams, id bounds, per-decile doc counts) — the
-    # uncheckpointed plan scans documents 4× (r9 code-review finding;
-    # explain-counted); materialize the canonical relation once
-    uniq = _materialize(uniq)
-    # 100k-token gram bound, SYMMETRIC on both engines (ADVICE r9 #2):
-    # DuckDB 1.0's range() only takes constant bounds, so the oracle's
-    # shingle positions stop at 100000 — rather than leave that as a
-    # silent long-doc hash split, docs longer than 100k tokens are
-    # excluded from the GRAM relation on both sides (they still count
-    # in per_docs).  A no-op on the synthetic corpus (max ~200 tokens)
-    # and on any corpus chunked upstream of shingling.
-    grams = uniq.select(
-        "doc_id", tokens_expr("text").alias("toks")
-    ).filter(F.size("toks") <= 100000).select(
-        "doc_id",
-        F.explode(shingles_from_tokens_expr("toks", 3)).alias("g"),
-    )
-    first = grams.groupBy("g").agg(F.min("doc_id").alias("doc_id"))
-    bounds = uniq.agg(
-        F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-    )
-    dec = F.expr("cast((10 * (doc_id - lo)) div (hi - lo + 1) as int)")
-    per_docs = (
-        uniq.crossJoin(F.broadcast(bounds))
-        .select(dec.alias("decile"))
-        .groupBy("decile")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-    per_new = (
-        first.crossJoin(F.broadcast(bounds))
-        .select(dec.alias("decile"))
-        .groupBy("decile")
-        .agg(F.count(F.lit(1)).alias("n_new_shingles"))
-    )
-    wc = Window.orderBy("decile").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    joined = per_docs.join(per_new, "decile", "left").select(
-        "decile",
-        "n_docs",
-        F.coalesce("n_new_shingles", F.lit(0))
-        .cast("long")
-        .alias("n_new_shingles"),
-    )
-    return joined.select(
-        "decile",
-        "n_docs",
-        "n_new_shingles",
-        F.sum("n_new_shingles").over(wc).cast("long").alias("cum_vocab"),
-        (
-            F.col("n_new_shingles").cast("double")
-            / F.col("n_docs").cast("double")
-        ).alias("new_per_doc"),
-    )
-
-
-ORACLE_VOCAB_GROWTH = r"""
-WITH uniq AS (
-  SELECT doc_id, min(text) AS text
-  FROM documents WHERE length(trim(lower(text))) > 0
-  GROUP BY doc_id
-),
-words AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
-  FROM uniq
-),
-grams AS (
-  -- len(toks) <= 100000 mirrors the engine's symmetric gram bound
-  -- (range() takes constant bounds only in duckdb 1.0; ADVICE r9 #2)
-  SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS g
-  FROM words, range(1, 100000) t(i)
-  WHERE i <= len(toks) - 2 AND len(toks) <= 100000
-),
-first AS (SELECT g, min(doc_id) AS doc_id FROM grams GROUP BY g),
-bounds AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi FROM uniq),
-per_docs AS (
-  SELECT CAST((10 * (doc_id - lo)) // (hi - lo + 1) AS INTEGER)
-           AS decile,
-         count(*) AS n_docs
-  FROM uniq, bounds GROUP BY 1
-),
-per_new AS (
-  SELECT CAST((10 * (doc_id - lo)) // (hi - lo + 1) AS INTEGER)
-           AS decile,
-         count(*) AS n_new_shingles
-  FROM first, bounds GROUP BY 1
-),
-joined AS (
-  SELECT d.decile, CAST(d.n_docs AS BIGINT) AS n_docs,
-         CAST(COALESCE(n.n_new_shingles, 0) AS BIGINT) AS n_new_shingles
-  FROM per_docs d LEFT JOIN per_new n ON n.decile = d.decile
-)
-SELECT decile, n_docs, n_new_shingles,
-       CAST(SUM(n_new_shingles) OVER (ORDER BY decile
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS cum_vocab,
-       CAST(n_new_shingles AS DOUBLE) / CAST(n_docs AS DOUBLE)
-         AS new_per_doc
-FROM joined
-"""
-
-
-def q_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-scaled domain-mixture weights over the document
-    sources — the DoReMi/data-mixing primitive: sampling weight
-    w_s ∝ tokens_s^(1/T) with T = 2, so large domains are
-    down-weighted sub-linearly instead of dominating the mixture.
-
-    T = 2 makes the scaling a SQRT — IEEE correctly-rounded on both
-    engines — instead of the exp/ln tree a softmax would need (libm
-    transcendentals are not cross-engine exact).  The normalizer is a
-    float sum over sources, so its merge order is pinned with the
-    source-ordered cumulative window (the established exact-sum-order
-    pattern): both engines add the same sqrt values left-to-right in
-    source order and take the last running value as the total.
-
-    Plan: one map-side token-count aggregate to |sources| rows
-    (~5), then two windows over that spine.  At 100 TB the tokenize
-    pass is the whole cost; everything after is constant-sized.
-    NULL sources and NULL texts are excluded symmetrically (Spark
-    size(split(NULL)) and DuckDB len(string_split_regex(NULL)) do not
-    agree on a convention — exclusion is the only portable rule)."""
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("source").isNotNull() & F.col("text").isNotNull()
-    )
-    counts = (
-        docs.select(
-            "source",
-            F.size(tokens_expr("text")).cast("long").alias("n_tok"),
-        )
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tok").alias("n_tokens"),
-        )
-    )
-    wcum = Window.orderBy("source").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    wall = Window.orderBy("source").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = counts.select(
-        "source",
-        "n_docs",
-        "n_tokens",
-        F.sqrt(F.col("n_tokens").cast("double")).alias("s"),
-        F.sum(F.sqrt(F.col("n_tokens").cast("double")))
-        .over(wcum)
-        .alias("cs"),
-    )
-    total = F.last("cs").over(wall)
-    return cum.select(
-        "source",
-        "n_docs",
-        "n_tokens",
-        # lazy guard on the DENOMINATOR itself: an all-empty corpus
-        # drives total to exactly 0.0, where ANSI Spark throws on the
-        # division and DuckDB answers inf
-        F.when(total > 0, F.col("s") / total).alias("weight"),
-    )
-
-
-ORACLE_MIXTURE_WEIGHTS = r"""
-WITH counts AS (
-  SELECT source, count(*) AS n_docs,
-         SUM(CASE WHEN length(trim(lower(text))) = 0 THEN 0
-             ELSE len(string_split_regex(trim(lower(text)), '\s+'))
-             END) AS n_tok
-  FROM documents
-  WHERE source IS NOT NULL AND text IS NOT NULL
-  GROUP BY source
-),
-cum AS (
-  SELECT source, n_docs, CAST(n_tok AS BIGINT) AS n_tokens,
-         sqrt(CAST(n_tok AS DOUBLE)) AS s,
-         -- source-ordered running sum: pins the float merge order to
-         -- the identical left-to-right tree the engine uses
-         SUM(sqrt(CAST(n_tok AS DOUBLE)))
-           OVER (ORDER BY source ROWS BETWEEN UNBOUNDED PRECEDING
-                 AND CURRENT ROW) AS cs
-  FROM counts
-)
-SELECT source, CAST(n_docs AS BIGINT) AS n_docs, n_tokens,
-       CASE WHEN last_value(cs) OVER (ORDER BY source
-              ROWS BETWEEN UNBOUNDED PRECEDING
-              AND UNBOUNDED FOLLOWING) > 0
-            THEN s / last_value(cs) OVER (ORDER BY source
-              ROWS BETWEEN UNBOUNDED PRECEDING
-              AND UNBOUNDED FOLLOWING)
-       END AS weight
-FROM cum
-"""
-
-
-def q_eval_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark-decontamination scan (the GPT-3/PaLM n-gram
-    containment check): treating the lexicographically-first source as
-    the held-out eval slice, every training document is scored by the
-    fraction of its distinct 8-gram shingles that also occur anywhere
-    in the eval slice; top 25 most-contaminated docs.
-
-    Plan: tokenize+shingle ONCE over canonical per-doc rows (min(text)
-    / min(source) after the empty filter — the dupdrift survivor
-    rule), split train/eval by a 1-row broadcast of min(source), then
-    one gram-keyed UNHINTED join of train grams against the DISTINCT
-    eval gram vocabulary — AQE broadcasts the vocabulary when its
-    measured size is small (a true benchmark eval set) and
-    shuffle-joins when it is corpus-fraction-sized (this synthetic
-    slice); a forced broadcast would hit the 8 GB ceiling at 100 TB.
-    Docs with fewer than 8 tokens have no
-    8-grams and are excluded symmetrically by construction.
-    Contamination is an exact-integer division (n_grams ≥ 1); the
-    top-k order is (ratio DESC, doc_id) — a strict total order."""
-    from fink_broker_spark.functions.text import (
-        shingles_from_tokens_expr,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    uniq = (
-        docs.filter(F.col("source").isNotNull())
-        .filter(F.length(F.trim(F.lower(F.col("text")))) > 0)
-        .groupBy("doc_id")
-        .agg(F.min("text").alias("text"), F.min("source").alias("source"))
-    )
-    # len(toks) <= 100000 mirrors the oracle's constant range() bound
-    # as an explicit symmetric gram-domain rule (ADVICE r9 #2) — a
-    # no-op on the synthetic corpus and on pre-chunked lakes
-    grams = uniq.select(
-        "doc_id", "source", tokens_expr("text").alias("toks")
-    ).filter(F.size("toks") <= 100000).select(
-        "doc_id",
-        "source",
-        F.explode(shingles_from_tokens_expr("toks", 8)).alias("g"),
-    )
-    # three consumers (train split, eval split, min-source scalar) —
-    # materialize the shingle relation once instead of tokenizing the
-    # corpus three times (the ppjoin arrs lesson; measured 3.0→2.0 s
-    # at sf0.1).  The eval source is the lexicographic min over the
-    # SHINGLED corpus (docs with < 8 tokens have no grams and cannot
-    # anchor the eval slice) — the oracle mirrors the same domain.
-    grams = _materialize(grams)
-    ev_src = grams.agg(F.min("source").alias("es"))
-    tg = (
-        grams.crossJoin(F.broadcast(ev_src))
-        .filter(F.col("source") != F.col("es"))
-        .select("doc_id", "g")
-    )
-    evg = (
-        grams.crossJoin(F.broadcast(ev_src))
-        .filter(F.col("source") == F.col("es"))
-        .select("g")
-        .distinct()
-    )
-    sizes = tg.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-    # UNHINTED gram join: the eval vocabulary is a whole source's
-    # distinct 8-grams — corpus-fraction-sized, NOT a broadcastable
-    # scalar (r9 code-review finding: a broadcast hint here hits
-    # Spark's 8 GB broadcast ceiling at the 100 TB design point).
-    # AQE broadcasts it when it measures small and shuffle-joins
-    # otherwise — the size decision belongs to the runtime.
-    hits = (
-        tg.join(evg, "g")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
-    return (
-        sizes.join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_grams",
-            F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
-            (
-                F.coalesce("n_hit", F.lit(0)).cast("double")
-                / F.col("n_grams").cast("double")
-            ).alias("contamination"),
-        )
-        .orderBy(F.desc("contamination"), "doc_id")
-        .limit(25)
-    )
-
-
-ORACLE_EVAL_CONTAMINATION = r"""
-WITH uniq AS (
-  SELECT doc_id, min(text) AS text, min(source) AS source
-  FROM documents
-  WHERE source IS NOT NULL AND length(trim(lower(text))) > 0
-  GROUP BY doc_id
-),
-words AS (
-  SELECT doc_id, source,
-         string_split_regex(trim(lower(text)), '\s+') AS toks
-  FROM uniq
-),
-grams AS MATERIALIZED (
-  -- len(toks) <= 100000 mirrors the engine's symmetric gram bound
-  -- (range() takes constant bounds only in duckdb 1.0; ADVICE r9 #2)
-  SELECT DISTINCT doc_id, source,
-         array_to_string(toks[i:i+7], ' ') AS g
-  FROM words, range(1, 100000) t(i)
-  WHERE i <= len(toks) - 7 AND len(toks) <= 100000
-),
-es AS (SELECT min(source) AS es FROM grams),
-tg AS (
-  SELECT doc_id, g FROM grams, es WHERE source <> es.es
-),
-evg AS (
-  SELECT DISTINCT g FROM grams, es WHERE source = es.es
-),
-sizes AS (SELECT doc_id, count(*) AS n_grams FROM tg GROUP BY doc_id),
-hits AS (
-  SELECT tg.doc_id, count(*) AS n_hit
-  FROM tg JOIN evg USING (g) GROUP BY tg.doc_id
-)
-SELECT s.doc_id, CAST(s.n_grams AS BIGINT) AS n_grams,
-       CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_hit,
-       CAST(COALESCE(h.n_hit, 0) AS DOUBLE)
-         / CAST(s.n_grams AS DOUBLE) AS contamination
-FROM sizes s LEFT JOIN hits h ON h.doc_id = s.doc_id
-ORDER BY contamination DESC, s.doc_id
-LIMIT 25
-"""
-
-#: grid-DBSCAN knobs: eps in int-scaled embedding units (0.025 at the
-#: 1e4 fixed-point scale), minPts over multiplicity-weighted neighbors
-_DBSCAN_EPS = 250
-_DBSCAN_MINPTS = 10
-
-
-def q_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grid-accelerated DBSCAN density classification over the first
-    two embedding dimensions — the density-based outlier/cluster
-    primitive (core / border / noise census) that curation pipelines
-    use to spot degenerate embedding clumps and isolated junk.
-
-    Exact-integer throughout: coordinates are the fixed-point
-    ``FLOOR(x·10⁴ + 0.5)`` ints (the FLOAT-origin integerization
-    rule), the neighbor predicate is integer squared-L2 ≤ eps², and
-    cell ids use explicit floor-division ``(x − pmod(x, eps)) DIV
-    eps`` because Spark's DIV truncates toward zero while DuckDB's
-    ``//`` floors — they disagree on negative coordinates (negvalue
-    layout) unless the remainder is normalized first.
-
-    Plan — the skew-proof shape: collapse to DISTINCT quantized
-    coordinates with multiplicity BEFORE the neighbor join (a
-    degenerate corpus where every vector is identical — the constant
-    layout — becomes ONE point with m = N instead of an N² self-join),
-    then explode each point over its 3×3 cell neighborhood and
-    equi-join on cell id (cell size = eps guarantees every true
-    neighbor pair lands in an adjacent cell).  The pairs relation
-    feeds both the density aggregate and the border probe, so it
-    localCheckpoints once.  density(p) = Σ m(q) over q within eps
-    (self included); core ⟺ density ≥ minPts; border ⟺ non-core
-    with a core neighbor q ≠ p; the rest is noise."""
-    emb = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull() & (F.size("embedding") >= 2)
-    )
-    eps, minpts = _DBSCAN_EPS, _DBSCAN_MINPTS
-    pts = (
-        emb.select(
-            F.expr(
-                "cast(floor(cast(embedding[0] as double) * 10000 + 0.5)"
-                " as bigint)"
-            ).alias("x"),
-            F.expr(
-                "cast(floor(cast(embedding[1] as double) * 10000 + 0.5)"
-                " as bigint)"
-            ).alias("y"),
-        )
-        .groupBy("x", "y")
-        .agg(F.count(F.lit(1)).alias("m"))
-    )
-    # pts feeds the cell join (twice, via probe/nbr) AND the flags
-    # join in a later job — uncheckpointed, embeddings scans twice
-    # (r9 code-review finding; explain-counted)
-    pts = _materialize(pts)
-    cells = pts.select(
-        "x",
-        "y",
-        "m",
-        F.expr(f"(x - pmod(x, {eps})) div {eps}").alias("cx"),
-        F.expr(f"(y - pmod(y, {eps})) div {eps}").alias("cy"),
-    )
-    offsets = F.array(
-        *[
-            F.struct(
-                (F.col("cx") + F.lit(dx)).alias("ncx"),
-                (F.col("cy") + F.lit(dy)).alias("ncy"),
-            )
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        ]
-    )
-    probe = cells.select(
-        "x", "y", F.explode(offsets).alias("o")
-    ).select("x", "y", F.col("o.ncx").alias("jcx"), F.col("o.ncy").alias("jcy"))
-    nbr = cells.select(
-        F.col("x").alias("bx"),
-        F.col("y").alias("by"),
-        F.col("m").alias("bm"),
-        F.col("cx").alias("jcx"),
-        F.col("cy").alias("jcy"),
-    )
-    pairs = (
-        probe.join(nbr, ["jcx", "jcy"])
-        .filter(
-            (F.col("x") - F.col("bx")) * (F.col("x") - F.col("bx"))
-            + (F.col("y") - F.col("by")) * (F.col("y") - F.col("by"))
-            <= F.lit(eps * eps)
-        )
-        .select("x", "y", "bx", "by", "bm")
-    )
-    # reused by BOTH the density aggregate and the border probe —
-    # materialize once (the ppjoin arrs lesson)
-    pairs = _materialize(pairs)
-    dens = pairs.groupBy("x", "y").agg(F.sum("bm").alias("density"))
-    flags = pts.join(dens, ["x", "y"]).select(
-        "x", "y", "m", (F.col("density") >= minpts).alias("is_core")
-    )
-    corepts = flags.filter(F.col("is_core")).select(
-        F.col("x").alias("bx"), F.col("y").alias("by")
-    )
-    border = (
-        pairs.join(corepts, ["bx", "by"])
-        .filter(
-            ~((F.col("x") == F.col("bx")) & (F.col("y") == F.col("by")))
-        )
-        .select("x", "y")
-        .distinct()
-        .withColumn("is_border", F.lit(True))
-    )
-    return (
-        flags.join(border, ["x", "y"], "left")
-        .select(
-            F.when(F.col("is_core"), F.lit("core"))
-            .when(F.col("is_border"), F.lit("border"))
-            .otherwise(F.lit("noise"))
-            .alias("dbscan_class"),
-            "m",
-        )
-        .groupBy("dbscan_class")
-        .agg(
-            F.count(F.lit(1)).alias("n_distinct"),
-            F.sum("m").alias("n_points"),
-        )
-    )
-
-
-ORACLE_GRID_DBSCAN = f"""
-WITH pts0 AS (
-  SELECT CAST(FLOOR(CAST(embedding[1] AS DOUBLE) * 10000 + 0.5)
-              AS BIGINT) AS x,
-         CAST(FLOOR(CAST(embedding[2] AS DOUBLE) * 10000 + 0.5)
-              AS BIGINT) AS y
-  FROM embeddings
-  WHERE embedding IS NOT NULL AND len(embedding) >= 2
-),
-pts AS (SELECT x, y, count(*) AS m FROM pts0 GROUP BY 1, 2),
-cells AS (
-  -- explicit floor-division twin of the engine's (x - pmod) DIV:
-  -- DuckDB // floors natively but the normalized form is mirrored so
-  -- negative coordinates provably agree
-  SELECT x, y, m,
-         (x - ((x % {_DBSCAN_EPS} + {_DBSCAN_EPS}) % {_DBSCAN_EPS}))
-           // {_DBSCAN_EPS} AS cx,
-         (y - ((y % {_DBSCAN_EPS} + {_DBSCAN_EPS}) % {_DBSCAN_EPS}))
-           // {_DBSCAN_EPS} AS cy
-  FROM pts
-),
-pairs AS MATERIALIZED (
-  SELECT a.x, a.y, b.x AS bx, b.y AS byy, b.m AS bm
-  FROM cells a JOIN cells b
-    ON b.cx BETWEEN a.cx - 1 AND a.cx + 1
-   AND b.cy BETWEEN a.cy - 1 AND a.cy + 1
-  WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-          <= {_DBSCAN_EPS * _DBSCAN_EPS}
-),
-dens AS (SELECT x, y, SUM(bm) AS density FROM pairs GROUP BY 1, 2),
-flags AS (
-  SELECT p.x, p.y, p.m, d.density >= {_DBSCAN_MINPTS} AS is_core
-  FROM pts p JOIN dens d USING (x, y)
-),
-border AS (
-  SELECT DISTINCT pr.x, pr.y
-  FROM pairs pr JOIN flags fb ON fb.x = pr.bx AND fb.y = pr.byy
-  WHERE fb.is_core AND NOT (pr.x = pr.bx AND pr.y = pr.byy)
-),
-cls AS (
-  SELECT f.m,
-         CASE WHEN f.is_core THEN 'core'
-              WHEN b.x IS NOT NULL THEN 'border'
-              ELSE 'noise' END AS dbscan_class
-  FROM flags f LEFT JOIN border b ON b.x = f.x AND b.y = f.y
-)
-SELECT dbscan_class, CAST(count(*) AS BIGINT) AS n_distinct,
-       CAST(SUM(m) AS BIGINT) AS n_points
-FROM cls GROUP BY dbscan_class
-"""
-
-
-# --------------------------------------------------------------------------
-# round-10 registrations — VERDICT r9 #6 slate (concept-grepped first:
-# pack_sequences packs by WHITESPACE budget and length_caps quantiles
-# whitespace lengths — neither is BPE-granular; minhash_lsh_portable
-# pins ONE (bands, rows) point — no sweep; reingest_drift_audit is
-# content-version governance — no quality/perplexity dimension)
-# --------------------------------------------------------------------------
-
-def q_bpe_packing_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-aware sequence-length / packing audit at BPE
-    granularity: per source, whitespace-vs-subword token totals, the
-    subword expansion ratio, and the packing numbers a training
-    pipeline actually pays for at max_seq_len = 512 — sequences
-    needed (Σ ceil(bpe/512)) and padding waste (Σ (512·ceil − bpe)) —
-    the BPE-granular sibling of ``pack_sequences`` (whitespace budget
-    bins) and ``length_caps`` (whitespace quantiles).  A corpus that
-    looks 400-token under whitespace splitting routinely exceeds 512
-    BPE pieces; this is the report that catches it before a truncated
-    training run.
-
-    Exactness: token counts are regexp counts (the repo's BPE-ish
-    pattern, cross-engine-pinned by ``text_quality``), ceil is the
-    non-negative integer tree ``(n + 511) DIV 512`` (Spark DIV ≡
-    DuckDB ``//`` on non-negatives), so every sum is exact; the two
-    ratios are guarded double divisions of exact sums.  NULL text
-    rows count in n_docs with NULL token counts (SUM skips), exactly
-    as the oracle's CASE/len propagation.
-
-    Scale: ONE scan, one |sources|-row partial-aggregating shuffle —
-    the mergeable-partials shape; no window, no join, no explode."""
-    docs = load_table(spark, sf_dir, "documents")
-    seqs = F.expr("(n_bpe + 511) div 512")
-    staged = docs.select(
-        "source",
-        token_count_expr("text").cast("long").alias("n_ws"),
-        bpe_token_count_expr("text").cast("long").alias("n_bpe"),
-    ).select(
-        "source",
-        "n_ws",
-        "n_bpe",
-        seqs.alias("n_seqs"),
-        (seqs * F.lit(512) - F.col("n_bpe")).alias("n_pad"),
-    )
-    g = staged.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_ws").alias("sum_ws_tokens"),
-        F.sum("n_bpe").alias("sum_bpe_tokens"),
-        F.sum("n_seqs").alias("n_seqs_512"),
-        F.sum("n_pad").alias("pad_waste_512"),
-    )
-    return g.select(
-        "source",
-        "n_docs",
-        "sum_ws_tokens",
-        "sum_bpe_tokens",
-        "n_seqs_512",
-        "pad_waste_512",
-        F.when(
-            F.col("sum_ws_tokens") > 0,
-            F.col("sum_bpe_tokens").cast("double")
-            / F.col("sum_ws_tokens").cast("double"),
-        ).alias("bpe_per_ws"),
-        F.when(
-            F.col("n_seqs_512") > 0,
-            F.col("sum_bpe_tokens").cast("double")
-            / (F.col("n_seqs_512").cast("double") * F.lit(512.0)),
-        ).alias("fill_ratio"),
-    )
-
-
-ORACLE_BPE_PACKING_AUDIT = r"""
-WITH t AS (
-  SELECT source,
-         CASE WHEN length(trim(lower(text))) = 0 THEN 0
-              ELSE len(string_split_regex(trim(lower(text)), '\s+'))
-         END AS n_ws,
-         len(regexp_extract_all(text,
-             '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS n_bpe
-  FROM documents
-)
-SELECT source,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(SUM(n_ws) AS BIGINT) AS sum_ws_tokens,
-       CAST(SUM(n_bpe) AS BIGINT) AS sum_bpe_tokens,
-       CAST(SUM((n_bpe + 511) // 512) AS BIGINT) AS n_seqs_512,
-       CAST(SUM((n_bpe + 511) // 512 * 512 - n_bpe) AS BIGINT)
-         AS pad_waste_512,
-       CASE WHEN SUM(n_ws) > 0
-            THEN CAST(SUM(n_bpe) AS DOUBLE) / CAST(SUM(n_ws) AS DOUBLE)
-       END AS bpe_per_ws,
-       CASE WHEN SUM((n_bpe + 511) // 512) > 0
-            THEN CAST(SUM(n_bpe) AS DOUBLE)
-                 / (CAST(SUM((n_bpe + 511) // 512) AS DOUBLE) * 512.0)
-       END AS fill_ratio
-FROM t GROUP BY source
-"""
-
-
-#: the (bands, rows-per-band) grid swept by q_lsh_param_recall — all
-#: factorizations of the shared 16-hash signature
-_LSH_SWEEP_SETTINGS: tuple[tuple[int, int], ...] = (
-    (16, 1),
-    (8, 2),
-    (4, 4),
-    (2, 8),
-)
-
-
-def q_lsh_param_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH parameter-sweep recall census — the dedup quality
-    knob: for every (bands b, rows-per-band r) factorization of ONE
-    shared 16-hash signature, how many candidate pairs does banding
-    emit, and what fraction of the TRUE Jaccard ≥ 0.5 pairs does it
-    recover?  (b=16, r=1) is the high-recall/high-cost corner, (2, 8)
-    the cheap/precise one; this table is how the threshold S-curve
-    gets picked before a corpus-wide dedup run
-    (``minhash_lsh_portable`` pins exactly one point of this grid).
-
-    Scale shape: the census runs on an md5-stable 1-in-2 DOCUMENT
-    sample (the 100 TB regime — exact-truth recall is only ever
-    measured on a sample; the sample predicate is the portable hash,
-    so both engines pick identical docs).  The 16-min signature is
-    computed ONCE and materialized (one md5 per shingle — the
-    Carter–Wegman family of ``minhash_lsh_pairs_portable``); the sweep
-    costs ONE single-hash collision self-join (whose pair set bounds
-    every setting's candidates from above), with each setting's
-    membership a boolean over the pair's 16 hash-equality bits — never
-    4 band joins, never 4 re-tokenizations.  Ground truth is one
-    shingle-posting join at Jaccard ≥ 0.5, also materialized once and
-    reused by the shared membership aggregate + the scalar count.  The
-    final 4-row grid rides broadcast joins (plan-lint ALLOWED: 4-row
-    VALUES grid × 1-row scalar).  Token-length envelope: the oracle's
-    shingle positions stop at 100k (constant range() bound in duckdb
-    1.0) — accepted constraint of the synthetic corpus, documented at
-    the cap (ADVICE r9 #2 family)."""
-    from fink_broker_spark.ext.dedup import (
-        MINHASH_PRIME,
-        _shingle_table,
-        jaccard_pairs,
-        md5_int_expr,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    sample = docs.filter(
-        md5_int_expr(F.col("doc_id").cast("string"), 8) % 2 == 0
-    )
-    num_hashes = 16
-    # tokenize ONCE for BOTH consumers (r10): the signature chain and
-    # the exact ground truth each ran their own _shingle_table over the
-    # sample — the corpus was tokenized twice.  One materialized raw
-    # shingle relation now feeds the md5 signature chain AND
-    # jaccard_pairs (via its pre-tokenized `shingles` input).
-    sh = _materialize(_shingle_table(sample, "doc_id", "text", 3))
-    hexed = sh.select(
-        "doc_id", F.md5(F.col("shingle")).alias("__hex")
-    ).select(
-        "doc_id",
-        F.conv(F.substring("__hex", 1, 10), 16, 10)
-        .cast("long")
-        .alias("__a"),
-        F.conv(F.substring("__hex", 11, 10), 16, 10)
-        .cast("long")
-        .alias("__b"),
-    )
-    sig = hexed.groupBy("doc_id").agg(
-        *[
-            F.min(
-                (F.col("__a") + F.lit(i) * F.col("__b"))
-                % F.lit(MINHASH_PRIME)
-            ).alias(f"__h{i}")
-            for i in range(num_hashes)
-        ]
-    )
-    # the signature feeds all 4 sweep settings and the truth feeds the
-    # 4 hit joins + the scalar denominator — materialize each once,
-    # with CONCURRENT jobs (they are independent projections of the
-    # shared shingle relation; r10, see _materialize_many)
-    truth = jaccard_pairs(
-        sample, threshold=0.5, n=3, shingles=sh
-    ).select("id_a", "id_b")
-    sig, truth = _materialize_many(sig, truth)
-    # ONE collision join instead of four (r10): a (b, r) band collision
-    # requires every member hash equal, so the single-hash collision
-    # pair set — the (16, 1) setting's own candidates — is a superset
-    # of EVERY sweep setting's candidates.  Each pair joins its two
-    # signatures back on and every setting's membership is a boolean
-    # over the 16 hash-equality bits (band = AND over its r hashes,
-    # candidate = OR over bands); the old plan ran 4 band self-joins +
-    # 4 dedups + 4 truth joins (33.7 s CPU in one fused stage,
-    # profiled).  Hash-tuple equality replaces the band-md5 equality —
-    # identical candidates (the md5 was injective over '#'-joined
-    # digit strings; parity-verified both scales).
-    b16 = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.col(f"__h{i}").alias("hv"),
-                    )
-                    for i in range(num_hashes)
-                ]
-            )
-        ).alias("bb"),
-    ).select(
-        "doc_id",
-        F.col("bb.band").alias("band"),
-        F.col("bb.hv").alias("hv"),
-    )
-    pairs = (
-        b16.alias("x")
-        .join(b16.alias("y"), on=["band", "hv"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("id_a"),
-            F.col("y.doc_id").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sa = sig.select(
-        F.col("doc_id").alias("id_a"),
-        *[F.col(f"__h{i}").alias(f"__a{i}") for i in range(num_hashes)],
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("id_b"),
-        *[F.col(f"__h{i}").alias(f"__b{i}") for i in range(num_hashes)],
-    )
-    flagged = (
-        pairs.join(sa, on="id_a")
-        .join(sb, on="id_b")
-        .join(
-            truth.select("id_a", "id_b", F.lit(1).alias("__t")),
-            on=["id_a", "id_b"],
-            how="left",
-        )
-    )
-    eq = [
-        F.col(f"__a{i}") == F.col(f"__b{i}") for i in range(num_hashes)
-    ]
-
-    def _cand_expr(nbands: int, rpb: int):
-        bands = []
-        for b in range(nbands):
-            cond = eq[b * rpb]
-            for i in range(b * rpb + 1, (b + 1) * rpb):
-                cond = cond & eq[i]
-            bands.append(cond)
-        out = bands[0]
-        for cond in bands[1:]:
-            out = out | cond
-        return out
-
-    member = flagged.select(
-        "__t",
-        F.explode(
-            F.array(
-                *[
-                    F.when(_cand_expr(nb, rpb), F.lit(nb).cast("int"))
-                    for nb, rpb in _LSH_SWEEP_SETTINGS
-                ]
-            )
-        ).alias("nbands"),
-    ).filter(F.col("nbands").isNotNull())
-    counts = member.groupBy("nbands").agg(
-        F.count(F.lit(1)).alias("n_candidates"),
-        F.sum(
-            F.when(F.col("__t").isNotNull(), 1).otherwise(0)
-        ).alias("n_hits"),
-    )
-    ncand = counts.select("nbands", "n_candidates")
-    hits = counts.select("nbands", "n_hits")
-    ntruth = truth.agg(F.count(F.lit(1)).alias("n_truth"))
-    grid = spark.createDataFrame(
-        list(_LSH_SWEEP_SETTINGS), "nbands int, rows_per_band int"
-    )
-    return (
-        grid.join(F.broadcast(ncand), "nbands", "left")
-        .join(F.broadcast(hits), "nbands", "left")
-        .crossJoin(F.broadcast(ntruth))
-        .select(
-            "nbands",
-            "rows_per_band",
-            F.coalesce("n_candidates", F.lit(0))
-            .cast("long")
-            .alias("n_candidates"),
-            F.col("n_truth").cast("long").alias("n_truth"),
-            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            F.when(
-                F.col("n_truth") > 0,
-                F.coalesce("n_hits", F.lit(0)).cast("double")
-                / F.col("n_truth").cast("double"),
-            ).alias("recall"),
-            F.when(
-                F.coalesce("n_candidates", F.lit(0)) > 0,
-                F.coalesce("n_hits", F.lit(0)).cast("double")
-                / F.coalesce("n_candidates", F.lit(0)).cast("double"),
-            ).alias("precision"),
-        )
-    )
-
-
-def _oracle_lsh_param_recall(num_hashes: int = 16) -> str:
-    """DuckDB twin of :func:`q_lsh_param_recall` — signature mins, the
-    per-setting band hashes, and the sweep grid are generated from the
-    same ``_LSH_SWEEP_SETTINGS`` the Spark plan uses, so the two sides
-    cannot drift independently."""
-    from fink_broker_spark.ext.dedup import MINHASH_PRIME
-
-    mins = ",\n         ".join(
-        f"MIN((a + {i} * b) % {MINHASH_PRIME}) AS h{i}"
-        for i in range(num_hashes)
-    )
-    band_rows = "\n  UNION ALL\n".join(
-        "  SELECT doc_id, {nb} AS nbands, {b} AS band,\n"
-        "         CAST('0x' || substr(md5({concat}), 1, 15) AS BIGINT)"
-        " AS bhash\n  FROM sig".format(
-            nb=nb,
-            b=b,
-            concat=" || '#' || ".join(
-                f"CAST(h{i} AS VARCHAR)"
-                for i in range(b * rpb, (b + 1) * rpb)
-            ),
-        )
-        for nb, rpb in _LSH_SWEEP_SETTINGS
-        for b in range(nb)
-    )
-    grid_rows = ", ".join(f"({nb}, {rpb})" for nb, rpb in _LSH_SWEEP_SETTINGS)
-    return rf"""
-WITH samp AS (
-  SELECT doc_id, text FROM documents
-  WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-          % 2 = 0
-), tok AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
-  FROM samp WHERE length(trim(text)) > 0
-), sh AS (
-  -- 100k-position cap: accepted token-length envelope of the
-  -- synthetic corpus (range() takes constant bounds in duckdb 1.0)
-  SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS shingle
-  FROM tok, range(1, 100000) t(i) WHERE i <= len(toks) - 2
-), seeds AS (
-  SELECT doc_id,
-         CAST('0x' || substr(md5(shingle), 1, 10) AS BIGINT) AS a,
-         CAST('0x' || substr(md5(shingle), 11, 10) AS BIGINT) AS b
-  FROM sh
-), sig AS MATERIALIZED (
-  SELECT doc_id,
-         {mins}
-  FROM seeds GROUP BY doc_id
-), bt AS (
-{band_rows}
-), cand AS MATERIALIZED (
-  SELECT DISTINCT x.nbands, x.doc_id AS id_a, y.doc_id AS id_b
-  FROM bt x JOIN bt y
-    ON x.nbands = y.nbands AND x.band = y.band AND x.bhash = y.bhash
-  WHERE x.doc_id < y.doc_id
-), sizes AS (
-  SELECT doc_id, count(*) AS nsh FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-  FROM sh a JOIN sh b USING (shingle)
-  WHERE a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), truth AS MATERIALIZED (
-  SELECT i.id_a, i.id_b
-  FROM inter i
-  JOIN sizes sa ON sa.doc_id = i.id_a
-  JOIN sizes sb ON sb.doc_id = i.id_b
-  WHERE CAST(i.inter AS DOUBLE)
-          / CAST(sa.nsh + sb.nsh - i.inter AS DOUBLE) >= 0.5
-), ncand AS (
-  SELECT nbands, count(*) AS n_candidates FROM cand GROUP BY 1
-), hits AS (
-  SELECT c.nbands, count(*) AS n_hits
-  FROM cand c JOIN truth t ON t.id_a = c.id_a AND t.id_b = c.id_b
-  GROUP BY 1
-), ntruth AS (SELECT count(*) AS n_truth FROM truth),
-grid AS (SELECT * FROM (VALUES {grid_rows}) g(nbands, rows_per_band))
-SELECT CAST(g.nbands AS INTEGER) AS nbands,
-       CAST(g.rows_per_band AS INTEGER) AS rows_per_band,
-       CAST(COALESCE(nc.n_candidates, 0) AS BIGINT) AS n_candidates,
-       CAST(nt.n_truth AS BIGINT) AS n_truth,
-       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-       CASE WHEN nt.n_truth > 0
-            THEN CAST(COALESCE(h.n_hits, 0) AS DOUBLE)
-                 / CAST(nt.n_truth AS DOUBLE) END AS recall,
-       CASE WHEN COALESCE(nc.n_candidates, 0) > 0
-            THEN CAST(COALESCE(h.n_hits, 0) AS DOUBLE)
-                 / CAST(COALESCE(nc.n_candidates, 0) AS DOUBLE)
-       END AS precision
-FROM grid g
-LEFT JOIN ncand nc ON nc.nbands = g.nbands
-LEFT JOIN hits h ON h.nbands = g.nbands
-CROSS JOIN ntruth nt
-"""
-
-
-ORACLE_LSH_PARAM_RECALL = _oracle_lsh_param_recall()
-
-
-def q_surprise_drift_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source perplexity-proxy drift series over ingest order —
-    the QUALITY companion to ``reingest_drift_audit``'s content
-    governance: walking each source's documents in doc_id (ingest)
-    order split into value-range deciles, the average token surprise
-    −ln p̂(token | source) under the source's own Laplace-smoothed
-    unigram distribution, and each decile's delta against the
-    source's first populated decile.  A rising curve means the
-    source's later crawls drift away from its own vocabulary (spam
-    injection, template churn, encoding rot) — the signal that gates
-    a re-crawl before it poisons the training mix.  Distinct from
-    ``vocab_entropy`` (one static H per source, no time axis) and
-    ``psi_drift`` (numeric value distributions, two fixed arms).
-
-    Exactness: p̂ = (n_tok + 1) / (N + V) is a double division of
-    exact integers (identical tree both engines); each token's
-    −ln p̂ ≥ 0 follows the repo's transcendental-sum discipline
-    (scale-9 round → DECIMAL(18,9), multiplied by the exact per-decile
-    count — positive operands, so Spark HALF_UP ≡ DuckDB half-away);
-    the per-decile average is one double division of the exact
-    decimal sum by the exact token count.  Envelope: the decimal sum
-    stays < 2⁵³ in unscaled units while per-(source, decile) token
-    mass < ~9·10⁶ — five orders above the sf0.1 lake.
-
-    Scale shape: deciles come from the doc_id VALUE range against a
-    1-row min/max broadcast (the ``vocab_growth`` rule — never an
-    ntile global sort); the (source, token) LM is a vocab-bounded
-    aggregate; the canonical doc relation is materialized once for
-    its two consumers (bounds + tokens); everything downstream of the
-    one tokenize+explode pass runs on vocab- or grid-sized relations.
-    Canonical per-doc rows via the dupdrift survivor rule (min(text),
-    min(source) after the empty filter)."""
-    docs = load_table(spark, sf_dir, "documents")
-    # keyed spread (guide §2.5): the canonical-row aggregate below
-    # would otherwise AQE-coalesce to 1-3 partitions, and the
-    # materialized relation INHERITS that width — the downstream
-    # tokenize+explode (the query's heaviest map work) then ran
-    # near-serial off the checkpoint blocks (profiled 1.4 s
-    # single-task stage).  A user repartition is never coalesced, so
-    # the checkpoint stays core-wide.  Guarded no-op on a wide lake.
-    uniq = (
-        ensure_keyed_parallelism(
-            docs.filter(F.col("source").isNotNull())
-            .filter(F.length(F.trim(F.lower(F.col("text")))) > 0)
-            .select("doc_id", "text", "source"),
-            "doc_id",
-        )
-        .groupBy("doc_id")
-        .agg(F.min("text").alias("text"), F.min("source").alias("source"))
-    )
-    # two consumers (id bounds + the token explode) — materialize once
-    uniq = _materialize(uniq)
-    bounds = uniq.agg(
-        F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-    )
-    dec = F.expr("cast((10 * (doc_id - lo)) div (hi - lo + 1) as int)")
-    toks = uniq.select(
-        "doc_id", "source", F.explode(tokens_expr("text")).alias("tok")
-    )
-    tok_dec = (
-        toks.crossJoin(F.broadcast(bounds))
-        .select("source", "tok", dec.alias("decile"))
-        .groupBy("source", "tok", "decile")
-        .agg(F.count(F.lit(1)).alias("n_dec"))
-    )
-    # the (source, tok, decile) grid feeds TWO consumers (the per-dec
-    # join side and the src_tok/src_tot LM chain) — uncut, the plan
-    # tokenizes the corpus twice (explain-counted two Generate
-    # explodes); the materialized relation is vocab×10-bounded
-    tok_dec = _materialize(tok_dec)
-    src_tok = tok_dec.groupBy("source", "tok").agg(
-        F.sum("n_dec").alias("n_src")
-    )
-    src_tot = src_tok.groupBy("source").agg(
-        F.sum("n_src").alias("n_total"),
-        F.count(F.lit(1)).alias("vocab"),
-    )
-    p_hat = (F.col("n_src") + F.lit(1)).cast("double") / (
-        F.col("n_total") + F.col("vocab")
-    ).cast("double")
-    term = F.round(-F.log(p_hat), 9).cast("decimal(18,9)")
-    per_dec = (
-        tok_dec.join(src_tok, ["source", "tok"])
-        .join(F.broadcast(src_tot), "source")
-        .select(
-            "source",
-            "decile",
-            "n_dec",
-            # the multiplier pins to DECIMAL(10,0): a bare BIGINT
-            # multiplicand needs decimal(39,9) > 38, which Spark
-            # resolves by SILENTLY dropping the 9th scale digit
-            # (allowPrecisionLoss) — measured ~1e-9·|vocab| drift vs
-            # the oracle's exact DECIMAL product
-            (term * F.col("n_dec").cast("decimal(10,0)")).alias(
-                "contrib"
-            ),
-        )
-        .groupBy("source", "decile")
-        .agg(
-            F.sum("n_dec").alias("n_tokens"),
-            F.sum("contrib").alias("sum_surprise"),
-        )
-        .select(
-            "source",
-            "decile",
-            "n_tokens",
-            (
-                F.col("sum_surprise").cast("double")
-                / F.col("n_tokens").cast("double")
-            ).alias("avg_surprise"),
-        )
-    )
-    first_dec = per_dec.groupBy("source").agg(
-        F.min("decile").alias("d0")
-    ).withColumnRenamed("source", "b_source")
-    baseline = per_dec.join(
-        first_dec,
-        (F.col("source") == F.col("b_source"))
-        & (F.col("decile") == F.col("d0")),
-    ).select(
-        F.col("b_source").alias("source"),
-        F.col("avg_surprise").alias("avg0"),
-    )
-    return per_dec.join(F.broadcast(baseline), "source").select(
-        "source",
-        "decile",
-        "n_tokens",
-        "avg_surprise",
-        (F.col("avg_surprise") - F.col("avg0")).alias("delta_vs_first"),
-    )
-
-
-ORACLE_SURPRISE_DRIFT_SERIES = r"""
-WITH uniq AS (
-  SELECT doc_id, min(text) AS text, min(source) AS source
-  FROM documents
-  WHERE source IS NOT NULL AND length(trim(lower(text))) > 0
-  GROUP BY doc_id
-),
-bounds AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi FROM uniq),
-toks AS (
-  SELECT doc_id, source, unnest(string_split_regex(trim(lower(text)),
-         '\s+')) AS tok
-  FROM uniq
-),
-tok_dec AS (
-  SELECT source, tok,
-         CAST((10 * (doc_id - lo)) // (hi - lo + 1) AS INTEGER)
-           AS decile,
-         count(*) AS n_dec
-  FROM toks, bounds
-  GROUP BY 1, 2, 3
-),
-src_tok AS (
-  SELECT source, tok, SUM(n_dec) AS n_src FROM tok_dec GROUP BY 1, 2
-),
-src_tot AS (
-  SELECT source, SUM(n_src) AS n_total, count(*) AS vocab
-  FROM src_tok GROUP BY 1
-),
-per_dec AS (
-  SELECT td.source, td.decile,
-         SUM(td.n_dec) AS n_tokens,
-         -- DECIMAL(10,0) multiplier mirrors the engine's exact
-         -- decimal(28,9) product (Spark would precision-lose at 39,9)
-         SUM(CAST(round(-ln(CAST(st.n_src + 1 AS DOUBLE)
-                            / CAST(tt.n_total + tt.vocab AS DOUBLE)), 9)
-                  AS DECIMAL(18,9))
-             * CAST(td.n_dec AS DECIMAL(10,0))) AS sum_surprise
-  FROM tok_dec td
-  JOIN src_tok st ON st.source = td.source AND st.tok = td.tok
-  JOIN src_tot tt ON tt.source = td.source
-  GROUP BY 1, 2
-),
-avgd AS (
-  SELECT source, decile, n_tokens,
-         CAST(sum_surprise AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-           AS avg_surprise
-  FROM per_dec
-),
-baseline AS (
-  SELECT a.source, a.avg_surprise AS avg0
-  FROM avgd a
-  JOIN (SELECT source, min(decile) AS d0 FROM avgd GROUP BY source) f
-    ON f.source = a.source AND a.decile = f.d0
-)
-SELECT a.source, a.decile,
-       CAST(a.n_tokens AS BIGINT) AS n_tokens,
-       a.avg_surprise,
-       a.avg_surprise - b.avg0 AS delta_vs_first
-FROM avgd a JOIN baseline b ON b.source = a.source
-"""
-
-
-# --------------------------------------------------------------------------
-# registry
-# --------------------------------------------------------------------------
-
-_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "pricing_summary": q_pricing_summary,
-    "shipping_priority": q_shipping_priority,
-    "order_priority_exists": q_order_priority_exists,
-    "customer_distribution": q_customer_distribution,
-    "anomaly_scores": q_anomaly_scores,
-    "local_supplier_volume": q_local_supplier_volume,
-    "quality_cuts": q_quality_cuts,
-    "event_type_stats": q_event_type_stats,
-    "conditional_recode": q_conditional_recode,
-    "broadcast_join": q_broadcast_join,
-    "top_revenue_customers": q_top_revenue_customers,
-    "semi_anti_join": q_semi_anti_join,
-    "last_event_per_user": q_last_event_per_user,
-    "topk_per_group": q_topk_per_group,
-    "dedup_exact": q_dedup_exact,
-    "jd_conversion": q_jd_conversion,
-    "night_partitions": q_night_partitions,
-    "salted_histogram": q_salted_histogram,
-    "rowkey_flatten": q_rowkey_flatten,
-    "index_buckets": q_index_buckets,
-    "explode_embeddings": q_explode_embeddings,
-    "embedding_norms": q_embedding_norms,
-    "ann_cosine_topk": q_ann_cosine_topk,
-    "embedding_neardup": q_embedding_neardup,
-    "text_quality": q_text_quality,
-    "lang_id": q_lang_id,
-    "doc_fingerprint": q_doc_fingerprint,
-    "corpus_mixture": q_corpus_mixture,
-    "decontaminate": q_decontaminate,
-    "pack_sequences": q_pack_sequences,
-    "stratified_sample": q_stratified_sample,
-    "pii_scrub": q_pii_scrub,
-    "repetition_rules": q_repetition_rules,
-    "jaccard_neardup": q_jaccard_neardup,
-    "minhash_lsh_neardup": q_minhash_lsh,
-    "minhash_lsh_portable": q_minhash_lsh_portable,
-    "simhash_neardup": q_simhash,
-    "simhash_portable": q_simhash_portable,
-    "window_exclude_current": q_window_exclude_current,
-    "welch_ttest": q_welch_ttest,
-    "spearman_corr": q_spearman_corr,
-    "mutual_information": q_mutual_information,
-    "bootstrap_ci": q_bootstrap_ci,
-    "sky_knn": q_sky_knn,
-    "stream_sliding_counts": q_stream_sliding_counts,
-    "sssp_bounded": q_sssp_bounded,
-    "hll_cardinality_portable": q_hll_cardinality_portable,
-    "dp_noisy_counts": q_dp_noisy_counts,
-    "ks_two_sample": q_ks_two_sample,
-    "kruskal_wallis": q_kruskal_wallis,
-    "ivf_ann_portable": q_ivf_ann_portable,
-    "scatter_power_iteration": q_scatter_power_iteration,
-    "stream_replay_counts": q_stream_replay_counts,
-    "stream_topk_users": q_stream_topk_users,
-    "rollup_aggregates": q_rollup,
-    "set_ops": q_set_ops,
-    "map_recode": q_map_recode,
-    "file_provenance": q_file_provenance,
-    "session_window_lag": q_session_lag,
-    "session_applyinpandas": q_session_applyinpandas,
-    "session_native": q_session_native,
-    "session_dynamic_gap": q_session_dynamic_gap,
-    "nightly_stats": q_nightly_stats,
-    "enrich_pipeline": q_enrich_pipeline,
-    "classification_cascade": q_classification_cascade,
-    "grid_pixelization": q_grid_pixelization,
-    "healpix_pixelization": q_healpix_pixelization,
-    "multires_index": q_multires_index,
-    "range_join_windows": q_range_join_windows,
-    "skew_join_salted": q_skew_join_salted,
-    "variant_json": q_variant_json,
-    "nation_trade_flows": q_nation_trade_flows,
-    "top_supplier_revenue": q_top_supplier_revenue,
-    "large_orders": q_large_orders,
-    "sole_late_supplier": q_sole_late_supplier,
-    "small_quantity_revenue": q_small_quantity_revenue,
-    "idle_customers": q_idle_customers,
-    "pareto_frontier": q_pareto_frontier,
-    "scd2_history": q_scd2_history,
-    "cdc_fold": q_cdc_fold,
-    "tfidf_topterms": q_tfidf_topterms,
-    "doc_chunks": q_doc_chunks,
-    "doc_chunks_udtf": q_doc_chunks_udtf,
-    "bigram_counts": q_bigram_counts,
-    "reservoir_sample": q_reservoir_sample,
-    "equidepth_histogram": q_equidepth_histogram,
-    "incremental_stats": q_incremental_stats,
-    "fuzzy_name_match": q_fuzzy_name_match,
-    "zorder_layout": q_zorder_layout,
-    "approx_quantiles": q_approx_quantiles,
-    "tracklet_clusters": q_tracklet_clusters,
-    "tracklet_candidates": q_tracklet_candidates,
-    "sky_tracklets": q_sky_tracklets,
-    "multimodal_features": q_multimodal_features,
-    "stream_dedup_watermark": q_stream_dedup,
-    "serialize_roundtrip": q_serialize_roundtrip,
-    "asof_join": q_asof_join,
-    "cone_crossmatch": q_cone_crossmatch,
-    "healpix_crossmatch": q_healpix_crossmatch,
-    "xmatch_enrich": q_xmatch_enrich,
-    "cube_stats": q_cube_stats,
-    "grouping_sets": q_grouping_sets,
-    "explode_outer_nulls": q_explode_outer_nulls,
-    "pivot_recode": q_pivot_recode,
-    "unpivot_stack": q_unpivot_stack,
-    "schema_defaults": q_schema_defaults,
-    "ivf_ann_topk": q_ivf_ann_topk,
-    "pq_ann_topk": q_pq_ann_topk,
-    "range_frame_window": q_range_frame_window,
-    "window_suite": q_window_suite,
-    "distribution_ranks": q_distribution_ranks,
-    "percentiles": q_percentiles,
-    "filter_fanout": q_filter_fanout,
-    "json_extract": q_json_extract,
-    "malformed_records": q_malformed_records,
-    "history_arrays": q_history_arrays,
-    "dedup_groups": q_dedup_groups,
-    "union_evolution": q_union_evolution,
-    "approx_cardinality": q_approx_cardinality,
-    "embedding_pca": q_embedding_pca,
-    "null_semantics": q_null_semantics,
-    "date_arithmetic": q_date_arithmetic,
-    "deterministic_ids": q_deterministic_ids,
-    "ann_kernel_topk": q_ann_kernel_topk,
-    "embedding_quantize": q_embedding_quantize,
-    "revenue_forecast": q_revenue_forecast,
-    "min_cost_supplier": q_min_cost_supplier,
-    "market_share": q_market_share,
-    "product_profit": q_product_profit,
-    "returned_items": q_returned_items,
-    "important_parts": q_important_parts,
-    "late_shipment_priority": q_late_shipment_priority,
-    "promo_revenue": q_promo_revenue,
-    "supplier_part_counts": q_supplier_part_counts,
-    "disjunctive_revenue": q_disjunctive_revenue,
-    "part_promotion": q_part_promotion,
-    "cms_heavy_hitters": q_cms_heavy_hitters,
-    "corpus_temperature": q_corpus_temperature,
-    "epoch_shuffle_order": q_epoch_shuffle_order,
-    "bloom_prefilter_join": q_bloom_prefilter_join,
-    "bloom_prefilter_sharded": q_bloom_prefilter_sharded,
-    "unigram_lm_scores": q_unigram_lm_scores,
-    "bm25_topk": q_bm25_topk,
-    "dsir_importance": q_dsir_importance,
-    "phase_fold": q_phase_fold,
-    "interpolate_ephemeris": q_interpolate_ephemeris,
-    "quality_logistic": q_quality_logistic,
-    "periodogram_power": q_periodogram_power,
-    "dup_span_coverage": q_dup_span_coverage,
-    "domain_quota_sample": q_domain_quota_sample,
-    "fading_trend": q_fading_trend,
-    "data_quality_report": q_data_quality_report,
-    "fanout_single_pass": q_fanout_single_pass,
-    "weighted_sample": q_weighted_sample,
-    "funnel_conversion": q_funnel_conversion,
-    "cohort_retention": q_cohort_retention,
-    "cusum_changepoint": q_cusum_changepoint,
-    "event_transitions": q_event_transitions,
-    "autocorrelation": q_autocorrelation,
-    "triangle_count": q_triangle_count,
-    "triangle_count_merge": q_triangle_count_merge,
-    "max_concurrency": q_max_concurrency,
-    "rolling_active_users": q_rolling_active_users,
-    "ab_test_zscore": q_ab_test_zscore,
-    "streak_detection": q_streak_detection,
-    "collocation_lift": q_collocation_lift,
-    "pagerank": q_pagerank,
-    "khop_reach": q_khop_reach,
-    "bitmap_segments": q_bitmap_segments,
-    "ewma_smooth": q_ewma_smooth,
-    "label_propagation": q_label_propagation,
-    "sparse_cosine_pairs": q_sparse_cosine_pairs,
-    "mad_scores": q_mad_scores,
-    "line_dedup": q_line_dedup,
-    "dedup_keep_best": q_dedup_keep_best,
-    "grouped_agg_udaf": q_grouped_agg_udaf,
-    "semantic_dedup": q_semantic_dedup,
-    "basket_pairs": q_basket_pairs,
-    "resample_fill": q_resample_fill,
-    "regression_trend": q_regression_trend,
-    "fk_orphans": q_fk_orphans,
-    "yoy_growth": q_yoy_growth,
-    "chisq_independence": q_chisq_independence,
-    "corr_matrix": q_corr_matrix,
-    "gini_by_nation": q_gini_by_nation,
-    "interval_islands": q_interval_islands,
-    "rfm_segments": q_rfm_segments,
-    "benford_digits": q_benford_digits,
-    "weighted_median": q_weighted_median,
-    "rank_delta": q_rank_delta,
-    "ks_uniformity": q_ks_uniformity,
-    "herfindahl_index": q_herfindahl_index,
-    "mannwhitney_u": q_mannwhitney_u,
-    "out_of_order_rate": q_out_of_order_rate,
-    "attribution_first_touch": q_attribution_first_touch,
-    "degree_stats": q_degree_stats,
-    "seasonality_index": q_seasonality_index,
-    "source_quality_matrix": q_source_quality_matrix,
-    "log2_histogram": q_log2_histogram,
-    "grid_quantiles": q_grid_quantiles,
-    "repeat_interval": q_repeat_interval,
-    "lexical_diversity": q_lexical_diversity,
-    "label_centroids": q_label_centroids,
-    "nearest_event": q_nearest_event,
-    "window_dedup_batch": q_window_dedup_batch,
-    "modal_event_type": q_modal_event_type,
-    "region_share_rollup": q_region_share_rollup,
-    "clamped_balance": q_clamped_balance,
-    "winsorized_stats": q_winsorized_stats,
-    "basket_novelty": q_basket_novelty,
-    "cross_correlation": q_cross_correlation,
-    "burstiness": q_burstiness,
-    "price_dispersion": q_price_dispersion,
-    "basket_size_dist": q_basket_size_dist,
-    "decayed_revenue": q_decayed_revenue,
-    "cosupplier_pairs": q_cosupplier_pairs,
-    "top_decile_share": q_top_decile_share,
-    "source_similarity": q_source_similarity,
-    "event_cooccurrence": q_event_cooccurrence,
-    "growth_accounting": q_growth_accounting,
-    "peak_detection": q_peak_detection,
-    "weekly_kpis": q_weekly_kpis,
-    "cross_source_dups": q_cross_source_dups,
-    "hourly_profile": q_hourly_profile,
-    "abc_classification": q_abc_classification,
-    "daily_backlog": q_daily_backlog,
-    "max_drawdown": q_max_drawdown,
-    "exact_substring_remove": q_exact_substring_remove,
-    "seat_apportionment": q_seat_apportionment,
-    "event_path_trigrams": q_event_path_trigrams,
-    "vocab_entropy": q_vocab_entropy,
-    "theil_index": q_theil_index,
-    "kl_divergence_sources": q_kl_divergence_sources,
-    "order_freq_quantiles": q_order_freq_quantiles,
-    "graph_modularity": q_graph_modularity,
-    "status_consistency_audit": q_status_consistency_audit,
-    "trending_events": q_trending_events,
-    "centroid_distances": q_centroid_distances,
-    "revenue_bridge": q_revenue_bridge,
-    "conversion_latency": q_conversion_latency,
-    "cohort_ltv": q_cohort_ltv,
-    "degree_assortativity": q_degree_assortativity,
-    "distinctive_terms": q_distinctive_terms,
-    "kcore_peel": q_kcore_peel,
-    "price_index": q_price_index,
-    "quartile_skewness": q_quartile_skewness,
-    "multires_rollup": q_multires_rollup,
-    "grid_smooth": q_grid_smooth,
-    "bounce_rate": q_bounce_rate,
-    "psi_drift": q_psi_drift,
-    "qgram_match": q_qgram_match,
-    "weekday_outliers": q_weekday_outliers,
-    "skew_report": q_skew_report,
-    "assoc_rules": q_assoc_rules,
-    "price_volume_mix": q_price_volume_mix,
-    "forecast_backtest": q_forecast_backtest,
-    "dataset_split": q_dataset_split,
-    "split_leakage": q_split_leakage,
-    "length_caps": q_length_caps,
-    "rolling_median": q_rolling_median,
-    "ohlc_weekly": q_ohlc_weekly,
-    "lateral_topk": q_lateral_topk,
-    "invoice_reconciliation": q_invoice_reconciliation,
-    "ppjoin_neardup": q_ppjoin_neardup,
-    "ppjoin_neardup_pruned": q_ppjoin_neardup_pruned,
-    "source_ngram_overlap": q_source_ngram_overlap,
-    "gdpr_cascade": q_gdpr_cascade,
-    "merge_upsert": q_merge_upsert,
-    "mann_kendall_trend": q_mann_kendall_trend,
-    "runs_test": q_runs_test,
-    "survival_counts": q_survival_counts,
-    "sigma_outliers": q_sigma_outliers,
-    "recursive_reach": q_recursive_reach,
-    "value_profile": q_value_profile,
-    "rolling_volatility": q_rolling_volatility,
-    "window_distinct_count": q_window_distinct_count,
-    "embedding_quant_audit": q_embedding_quant_audit,
-    "uniqueness_audit": q_uniqueness_audit,
-    "table_checksum": q_table_checksum,
-    "set_ops_all": q_set_ops_all,
-    "filter_clause_agg": q_filter_clause_agg,
-    "qualify_latest": q_qualify_latest,
-    "string_agg_ordered": q_string_agg_ordered,
-    "calendar_gaps": q_calendar_gaps,
-    "relational_division": q_relational_division,
-    "xor_fingerprint": q_xor_fingerprint,
-    "interval_coverage": q_interval_coverage,
-    "freshness_slo": q_freshness_slo,
-    "link_prediction": q_link_prediction,
-    "neighbor_feature_agg": q_neighbor_feature_agg,
-    "negative_sampling": q_negative_sampling,
-    "stream_static_enrich": q_stream_static_enrich,
-    "cogroup_asof": q_cogroup_asof,
-    "quantile_normalize": q_quantile_normalize,
-    # round-8 additions — the rotation ledger (registry_rounds.json)
-    # sorts these AFTER every never-sampled survivor, so dict position
-    # no longer matters for driver-window fairness
-    "pq_ann_portable": q_pq_ann_portable,
-    "ann_kernel_portable": q_ann_kernel_portable,
-    "semantic_dedup_portable": q_semantic_dedup_portable,
-    "reingest_drift_audit": q_reingest_drift_audit,
-    "neardup_clusters": q_neardup_clusters,
-    # round 9
-    "vocab_growth": q_vocab_growth,
-    "mixture_weights": q_mixture_weights,
-    "eval_contamination": q_eval_contamination,
-    "grid_dbscan": q_grid_dbscan,
-    "bpe_packing_audit": q_bpe_packing_audit,
-    "lsh_param_recall": q_lsh_param_recall,
-    "surprise_drift_series": q_surprise_drift_series,
-}
-
-_ORACLES: dict[str, str] = {
-    "pricing_summary": ORACLE_PRICING,
-    "shipping_priority": ORACLE_SHIPPING_PRIORITY,
-    "order_priority_exists": ORACLE_ORDER_PRIORITY_EXISTS,
-    "customer_distribution": ORACLE_CUSTOMER_DISTRIBUTION,
-    "anomaly_scores": ORACLE_ANOMALY_SCORES,
-    "local_supplier_volume": ORACLE_LOCAL_SUPPLIER_VOLUME,
-    "quality_cuts": ORACLE_QUALITY_CUTS,
-    "event_type_stats": ORACLE_EVENT_TYPE_STATS,
-    "conditional_recode": ORACLE_CONDITIONAL_RECODE,
-    "broadcast_join": ORACLE_BROADCAST_JOIN,
-    "top_revenue_customers": ORACLE_TOP_REVENUE,
-    "semi_anti_join": ORACLE_SEMI_ANTI,
-    "last_event_per_user": ORACLE_LAST_EVENT,
-    "topk_per_group": ORACLE_TOPK_PER_GROUP,
-    "dedup_exact": ORACLE_DEDUP_EXACT,
-    "jd_conversion": ORACLE_JD,
-    "night_partitions": ORACLE_NIGHT_PARTITIONS,
-    "salted_histogram": ORACLE_SALTED_HISTOGRAM,
-    "rowkey_flatten": ORACLE_ROWKEY_FLATTEN,
-    "index_buckets": ORACLE_INDEX_BUCKETS,
-    "explode_embeddings": ORACLE_EXPLODE_EMBEDDINGS,
-    "embedding_norms": ORACLE_EMBEDDING_NORMS,
-    "ann_cosine_topk": ORACLE_ANN_TOPK,
-    "embedding_neardup": ORACLE_EMBEDDING_NEARDUP,
-    "text_quality": ORACLE_TEXT_QUALITY,
-    "lang_id": ORACLE_LANG_ID,
-    "doc_fingerprint": ORACLE_DOC_FINGERPRINT,
-    "corpus_mixture": ORACLE_CORPUS_MIXTURE,
-    "decontaminate": ORACLE_DECONTAMINATE,
-    "pack_sequences": ORACLE_PACK_SEQUENCES,
-    "stratified_sample": ORACLE_STRATIFIED_SAMPLE,
-    "pii_scrub": ORACLE_PII_SCRUB,
-    "repetition_rules": ORACLE_REPETITION_RULES,
-    "jaccard_neardup": ORACLE_JACCARD_NEARDUP,
-    "minhash_lsh_portable": ORACLE_MINHASH_LSH_PORTABLE,
-    "simhash_portable": ORACLE_SIMHASH_PORTABLE,
-    "window_exclude_current": ORACLE_WINDOW_EXCLUDE_CURRENT,
-    "welch_ttest": ORACLE_WELCH_TTEST,
-    "spearman_corr": ORACLE_SPEARMAN_CORR,
-    "mutual_information": ORACLE_MUTUAL_INFORMATION,
-    "bootstrap_ci": ORACLE_BOOTSTRAP_CI,
-    "sky_knn": ORACLE_SKY_KNN,
-    "stream_sliding_counts": ORACLE_STREAM_SLIDING_COUNTS,
-    "sssp_bounded": ORACLE_SSSP_BOUNDED,
-    "hll_cardinality_portable": ORACLE_HLL_CARDINALITY_PORTABLE,
-    "dp_noisy_counts": ORACLE_DP_NOISY_COUNTS,
-    "ks_two_sample": ORACLE_KS_TWO_SAMPLE,
-    "kruskal_wallis": ORACLE_KRUSKAL_WALLIS,
-    "ivf_ann_portable": ORACLE_IVF_ANN_PORTABLE,
-    "scatter_power_iteration": ORACLE_SCATTER_POWER_ITERATION,
-    "stream_replay_counts": ORACLE_STREAM_REPLAY,
-    "stream_topk_users": ORACLE_STREAM_TOPK_USERS,
-    "rollup_aggregates": ORACLE_ROLLUP,
-    "set_ops": ORACLE_SET_OPS,
-    "map_recode": ORACLE_MAP_RECODE,
-    # the driver's DuckDB views hide file paths; the provenance oracle
-    # reads the sf0.01 parquet (the driver's correctness scale) directly
-    "file_provenance": ORACLE_FILE_PROVENANCE_TEMPLATE.format(
-        sf="/root/testdata/sf0.01"
-    ),
-    "session_window_lag": ORACLE_SESSIONS,
-    # the imperative grouped-map variant must match the same oracle
-    "session_applyinpandas": ORACLE_SESSIONS,
-    "session_native": ORACLE_SESSION_NATIVE,
-    "session_dynamic_gap": ORACLE_SESSION_DYNAMIC_GAP,
-    "nightly_stats": ORACLE_NIGHTLY_STATS,
-    "enrich_pipeline": ORACLE_ENRICH_PIPELINE,
-    "classification_cascade": ORACLE_CASCADE,
-    "grid_pixelization": ORACLE_GRID_PIX,
-    "healpix_pixelization": ORACLE_HEALPIX,
-    "multires_index": ORACLE_MULTIRES_INDEX,
-    "range_join_windows": ORACLE_RANGE_JOIN_WINDOWS,
-    "skew_join_salted": ORACLE_SKEW_JOIN_SALTED,
-    "variant_json": ORACLE_VARIANT_JSON,
-    "nation_trade_flows": ORACLE_NATION_TRADE_FLOWS,
-    "top_supplier_revenue": ORACLE_TOP_SUPPLIER_REVENUE,
-    "large_orders": ORACLE_LARGE_ORDERS,
-    "sole_late_supplier": ORACLE_SOLE_LATE_SUPPLIER,
-    "small_quantity_revenue": ORACLE_SMALL_QUANTITY_REVENUE,
-    "distribution_ranks": ORACLE_DISTRIBUTION_RANKS,
-    "idle_customers": ORACLE_IDLE_CUSTOMERS,
-    "pareto_frontier": ORACLE_PARETO_FRONTIER,
-    "scd2_history": ORACLE_SCD2_HISTORY,
-    "cdc_fold": ORACLE_CDC_FOLD,
-    "tfidf_topterms": ORACLE_TFIDF_TOPTERMS,
-    "doc_chunks": ORACLE_DOC_CHUNKS,
-    # the UDTF twin must hash-match the same oracle as the declarative form
-    "doc_chunks_udtf": ORACLE_DOC_CHUNKS,
-    "bigram_counts": ORACLE_BIGRAM_COUNTS,
-    "reservoir_sample": ORACLE_RESERVOIR_SAMPLE,
-    "equidepth_histogram": ORACLE_EQUIDEPTH_HISTOGRAM,
-    "incremental_stats": ORACLE_INCREMENTAL_STATS,
-    "fuzzy_name_match": ORACLE_FUZZY_NAME_MATCH,
-    "zorder_layout": ORACLE_ZORDER_LAYOUT,
-    # approx_quantiles: sketch estimates are engine-specific -> rows-only;
-    # error bound vs exact asserted in tests/test_pipeline_ops.py.
-    "tracklet_clusters": ORACLE_TRACKLETS,
-    "tracklet_candidates": ORACLE_TRACKLET_CANDIDATES,
-    "sky_tracklets": ORACLE_SKY_TRACKLETS,
-    "multimodal_features": ORACLE_MULTIMODAL,
-    "serialize_roundtrip": ORACLE_SERIALIZE_ROUNDTRIP,
-    "asof_join": ORACLE_ASOF_JOIN,
-    "cone_crossmatch": ORACLE_CONE_CROSSMATCH,
-    "healpix_crossmatch": ORACLE_HEALPIX_CROSSMATCH,
-    "xmatch_enrich": ORACLE_XMATCH_ENRICH,
-    "cube_stats": ORACLE_CUBE_STATS,
-    "grouping_sets": ORACLE_GROUPING_SETS,
-    "explode_outer_nulls": ORACLE_EXPLODE_OUTER,
-    "pivot_recode": ORACLE_PIVOT_RECODE,
-    "unpivot_stack": ORACLE_UNPIVOT_STACK,
-    "schema_defaults": ORACLE_SCHEMA_DEFAULTS,
-    "range_frame_window": ORACLE_RANGE_FRAME,
-    "window_suite": ORACLE_WINDOW_SUITE,
-    "percentiles": ORACLE_PERCENTILES,
-    "filter_fanout": ORACLE_FILTER_FANOUT,
-    "json_extract": ORACLE_JSON_EXTRACT,
-    "malformed_records": ORACLE_MALFORMED_RECORDS,
-    "history_arrays": ORACLE_HISTORY_ARRAYS,
-    "dedup_groups": ORACLE_DEDUP_GROUPS,
-    "union_evolution": ORACLE_UNION_EVOLUTION,
-    "null_semantics": ORACLE_NULL_SEMANTICS,
-    "date_arithmetic": ORACLE_DATE_ARITHMETIC,
-    "deterministic_ids": ORACLE_DETERMINISTIC_IDS,
-    "embedding_quantize": ORACLE_EMBEDDING_QUANTIZE,
-    # ann_kernel_topk: BLAS last-ulp variance → rows-only; equivalence
-    # with the exact expression baseline asserted in tests/test_ext.py.
-    # ivf_ann_topk: approximate (cell-probing) → rows-only check; recall
-    # vs the exact baseline asserted in tests/test_ext.py.
-    # minhash_lsh_neardup / simhash_neardup: engine-specific hashes →
-    # rows-only check; verified against exact jaccard in tests/.
-    # stream_dedup_watermark: stateful streaming op → rows-only check;
-    # batch-equivalence asserted in tests/test_streaming.py.
-    "revenue_forecast": ORACLE_REVENUE_FORECAST,
-    "min_cost_supplier": ORACLE_MIN_COST_SUPPLIER,
-    "market_share": ORACLE_MARKET_SHARE,
-    "product_profit": ORACLE_PRODUCT_PROFIT,
-    "returned_items": ORACLE_RETURNED_ITEMS,
-    "important_parts": ORACLE_IMPORTANT_PARTS,
-    "late_shipment_priority": ORACLE_LATE_SHIPMENT_PRIORITY,
-    "promo_revenue": ORACLE_PROMO_REVENUE,
-    "supplier_part_counts": ORACLE_SUPPLIER_PART_COUNTS,
-    "disjunctive_revenue": ORACLE_DISJUNCTIVE_REVENUE,
-    "part_promotion": ORACLE_PART_PROMOTION,
-    "cms_heavy_hitters": ORACLE_CMS_HEAVY_HITTERS,
-    "corpus_temperature": ORACLE_CORPUS_TEMPERATURE,
-    "epoch_shuffle_order": ORACLE_EPOCH_SHUFFLE_ORDER,
-    "bloom_prefilter_join": ORACLE_BLOOM_PREFILTER_JOIN,
-    "bloom_prefilter_sharded": ORACLE_BLOOM_PREFILTER_SHARDED,
-    "unigram_lm_scores": ORACLE_UNIGRAM_LM_SCORES,
-    "phase_fold": ORACLE_PHASE_FOLD,
-    "interpolate_ephemeris": ORACLE_INTERPOLATE_EPHEMERIS,
-    "quality_logistic": ORACLE_QUALITY_LOGISTIC,
-    "periodogram_power": _periodogram_oracle(),
-    "dup_span_coverage": ORACLE_DUP_SPAN_COVERAGE,
-    "domain_quota_sample": ORACLE_DOMAIN_QUOTA_SAMPLE,
-    "fading_trend": ORACLE_FADING_TREND,
-    "data_quality_report": ORACLE_DATA_QUALITY_REPORT,
-    "fanout_single_pass": ORACLE_FANOUT_SINGLE_PASS,
-    "weighted_sample": ORACLE_WEIGHTED_SAMPLE,
-    "funnel_conversion": ORACLE_FUNNEL_CONVERSION,
-    "cohort_retention": ORACLE_COHORT_RETENTION,
-    "cusum_changepoint": ORACLE_CUSUM_CHANGEPOINT,
-    "event_transitions": ORACLE_EVENT_TRANSITIONS,
-    "autocorrelation": ORACLE_AUTOCORRELATION,
-    "triangle_count": ORACLE_TRIANGLE_COUNT,
-    # both physical regimes must hash-match the same oracle
-    "triangle_count_merge": ORACLE_TRIANGLE_COUNT,
-    "max_concurrency": ORACLE_MAX_CONCURRENCY,
-    "rolling_active_users": ORACLE_ROLLING_ACTIVE_USERS,
-    "ab_test_zscore": ORACLE_AB_TEST_ZSCORE,
-    "streak_detection": ORACLE_STREAK_DETECTION,
-    "collocation_lift": ORACLE_COLLOCATION_LIFT,
-    "pagerank": ORACLE_PAGERANK,
-    "khop_reach": ORACLE_KHOP_REACH,
-    "bitmap_segments": ORACLE_BITMAP_SEGMENTS,
-    "ewma_smooth": ORACLE_EWMA_SMOOTH,
-    "label_propagation": ORACLE_LABEL_PROPAGATION,
-    "sparse_cosine_pairs": ORACLE_SPARSE_COSINE_PAIRS,
-    "mad_scores": ORACLE_MAD_SCORES,
-    "line_dedup": ORACLE_LINE_DEDUP,
-    "dedup_keep_best": ORACLE_DEDUP_KEEP_BEST,
-    "grouped_agg_udaf": ORACLE_GROUPED_AGG_UDAF,
-    # semantic_dedup: k-means model fit not ANSI-expressible → rows-only;
-    # exact keep-rule equivalence asserted in tests/test_ext.py.
-    "basket_pairs": ORACLE_BASKET_PAIRS,
-    "resample_fill": ORACLE_RESAMPLE_FILL,
-    "regression_trend": ORACLE_REGRESSION_TREND,
-    "fk_orphans": ORACLE_FK_ORPHANS,
-    "yoy_growth": ORACLE_YOY_GROWTH,
-    "chisq_independence": ORACLE_CHISQ_INDEPENDENCE,
-    "corr_matrix": ORACLE_CORR_MATRIX,
-    "gini_by_nation": ORACLE_GINI_BY_NATION,
-    "interval_islands": ORACLE_INTERVAL_ISLANDS,
-    "rfm_segments": ORACLE_RFM_SEGMENTS,
-    "benford_digits": ORACLE_BENFORD_DIGITS,
-    "weighted_median": ORACLE_WEIGHTED_MEDIAN,
-    "rank_delta": ORACLE_RANK_DELTA,
-    "ks_uniformity": ORACLE_KS_UNIFORMITY,
-    "herfindahl_index": ORACLE_HERFINDAHL_INDEX,
-    "mannwhitney_u": ORACLE_MANNWHITNEY_U,
-    "out_of_order_rate": ORACLE_OUT_OF_ORDER_RATE,
-    "attribution_first_touch": ORACLE_ATTRIBUTION_FIRST_TOUCH,
-    "degree_stats": ORACLE_DEGREE_STATS,
-    "seasonality_index": ORACLE_SEASONALITY_INDEX,
-    "source_quality_matrix": ORACLE_SOURCE_QUALITY_MATRIX,
-    "log2_histogram": ORACLE_LOG2_HISTOGRAM,
-    "grid_quantiles": ORACLE_GRID_QUANTILES,
-    "repeat_interval": ORACLE_REPEAT_INTERVAL,
-    "lexical_diversity": ORACLE_LEXICAL_DIVERSITY,
-    "label_centroids": ORACLE_LABEL_CENTROIDS,
-    "nearest_event": ORACLE_NEAREST_EVENT,
-    "window_dedup_batch": ORACLE_WINDOW_DEDUP_BATCH,
-    "modal_event_type": ORACLE_MODAL_EVENT_TYPE,
-    "region_share_rollup": ORACLE_REGION_SHARE_ROLLUP,
-    "clamped_balance": ORACLE_CLAMPED_BALANCE,
-    "winsorized_stats": ORACLE_WINSORIZED_STATS,
-    "basket_novelty": ORACLE_BASKET_NOVELTY,
-    "cross_correlation": ORACLE_CROSS_CORRELATION,
-    "burstiness": ORACLE_BURSTINESS,
-    "price_dispersion": ORACLE_PRICE_DISPERSION,
-    "basket_size_dist": ORACLE_BASKET_SIZE_DIST,
-    "decayed_revenue": ORACLE_DECAYED_REVENUE,
-    "cosupplier_pairs": ORACLE_COSUPPLIER_PAIRS,
-    "top_decile_share": ORACLE_TOP_DECILE_SHARE,
-    "source_similarity": ORACLE_SOURCE_SIMILARITY,
-    "event_cooccurrence": ORACLE_EVENT_COOCCURRENCE,
-    "growth_accounting": ORACLE_GROWTH_ACCOUNTING,
-    "peak_detection": ORACLE_PEAK_DETECTION,
-    "weekly_kpis": ORACLE_WEEKLY_KPIS,
-    "cross_source_dups": ORACLE_CROSS_SOURCE_DUPS,
-    "hourly_profile": ORACLE_HOURLY_PROFILE,
-    "abc_classification": ORACLE_ABC_CLASSIFICATION,
-    "daily_backlog": ORACLE_DAILY_BACKLOG,
-    "max_drawdown": ORACLE_MAX_DRAWDOWN,
-    "exact_substring_remove": ORACLE_EXACT_SUBSTRING_REMOVE,
-    "seat_apportionment": ORACLE_SEAT_APPORTIONMENT,
-    "event_path_trigrams": ORACLE_EVENT_PATH_TRIGRAMS,
-    "vocab_entropy": ORACLE_VOCAB_ENTROPY,
-    "theil_index": ORACLE_THEIL_INDEX,
-    "kl_divergence_sources": ORACLE_KL_DIVERGENCE_SOURCES,
-    "order_freq_quantiles": ORACLE_ORDER_FREQ_QUANTILES,
-    "graph_modularity": ORACLE_GRAPH_MODULARITY,
-    "status_consistency_audit": ORACLE_STATUS_CONSISTENCY_AUDIT,
-    "trending_events": ORACLE_TRENDING_EVENTS,
-    "centroid_distances": ORACLE_CENTROID_DISTANCES,
-    "revenue_bridge": ORACLE_REVENUE_BRIDGE,
-    "conversion_latency": ORACLE_CONVERSION_LATENCY,
-    "cohort_ltv": ORACLE_COHORT_LTV,
-    "degree_assortativity": ORACLE_DEGREE_ASSORTATIVITY,
-    "distinctive_terms": ORACLE_DISTINCTIVE_TERMS,
-    "kcore_peel": ORACLE_KCORE_PEEL,
-    "price_index": ORACLE_PRICE_INDEX,
-    "quartile_skewness": ORACLE_QUARTILE_SKEWNESS,
-    "multires_rollup": ORACLE_MULTIRES_ROLLUP,
-    "grid_smooth": ORACLE_GRID_SMOOTH,
-    "bounce_rate": ORACLE_BOUNCE_RATE,
-    "psi_drift": ORACLE_PSI_DRIFT,
-    "qgram_match": ORACLE_QGRAM_MATCH,
-    "weekday_outliers": ORACLE_WEEKDAY_OUTLIERS,
-    "skew_report": ORACLE_SKEW_REPORT,
-    "assoc_rules": ORACLE_ASSOC_RULES,
-    "price_volume_mix": ORACLE_PRICE_VOLUME_MIX,
-    "forecast_backtest": ORACLE_FORECAST_BACKTEST,
-    "dataset_split": ORACLE_DATASET_SPLIT,
-    "split_leakage": ORACLE_SPLIT_LEAKAGE,
-    "length_caps": ORACLE_LENGTH_CAPS,
-    "rolling_median": ORACLE_ROLLING_MEDIAN,
-    "ohlc_weekly": ORACLE_OHLC_WEEKLY,
-    "lateral_topk": ORACLE_LATERAL_TOPK,
-    "invoice_reconciliation": ORACLE_INVOICE_RECONCILIATION,
-    "ppjoin_neardup": ORACLE_PPJOIN_NEARDUP,
-    "ppjoin_neardup_pruned": ORACLE_PPJOIN_NEARDUP_PRUNED,
-    "source_ngram_overlap": ORACLE_SOURCE_NGRAM_OVERLAP,
-    "gdpr_cascade": ORACLE_GDPR_CASCADE,
-    "merge_upsert": ORACLE_MERGE_UPSERT,
-    "mann_kendall_trend": ORACLE_MANN_KENDALL_TREND,
-    "runs_test": ORACLE_RUNS_TEST,
-    "survival_counts": ORACLE_SURVIVAL_COUNTS,
-    "sigma_outliers": ORACLE_SIGMA_OUTLIERS,
-    "recursive_reach": ORACLE_RECURSIVE_REACH,
-    "value_profile": ORACLE_VALUE_PROFILE,
-    "rolling_volatility": ORACLE_ROLLING_VOLATILITY,
-    "window_distinct_count": ORACLE_WINDOW_DISTINCT_COUNT,
-    "embedding_quant_audit": ORACLE_EMBEDDING_QUANT_AUDIT,
-    "uniqueness_audit": ORACLE_UNIQUENESS_AUDIT,
-    "table_checksum": ORACLE_TABLE_CHECKSUM,
-    "set_ops_all": ORACLE_SET_OPS_ALL,
-    "filter_clause_agg": ORACLE_FILTER_CLAUSE_AGG,
-    "qualify_latest": ORACLE_QUALIFY_LATEST,
-    "string_agg_ordered": ORACLE_STRING_AGG_ORDERED,
-    "calendar_gaps": ORACLE_CALENDAR_GAPS,
-    "relational_division": ORACLE_RELATIONAL_DIVISION,
-    "xor_fingerprint": ORACLE_XOR_FINGERPRINT,
-    "interval_coverage": ORACLE_INTERVAL_COVERAGE,
-    "freshness_slo": ORACLE_FRESHNESS_SLO,
-    "link_prediction": ORACLE_LINK_PREDICTION,
-    "neighbor_feature_agg": ORACLE_NEIGHBOR_FEATURE_AGG,
-    "negative_sampling": ORACLE_NEGATIVE_SAMPLING,
-    "stream_static_enrich": ORACLE_STREAM_STATIC_ENRICH,
-    "cogroup_asof": ORACLE_COGROUP_ASOF,
-    "quantile_normalize": ORACLE_QUANTILE_NORMALIZE,
-    "pq_ann_portable": ORACLE_PQ_ANN_PORTABLE,
-    "ann_kernel_portable": ORACLE_ANN_KERNEL_PORTABLE,
-    "semantic_dedup_portable": ORACLE_SEMANTIC_DEDUP_PORTABLE,
-    "reingest_drift_audit": ORACLE_REINGEST_DRIFT_AUDIT,
-    "neardup_clusters": ORACLE_NEARDUP_CLUSTERS,
-    # round 9
-    "vocab_growth": ORACLE_VOCAB_GROWTH,
-    "mixture_weights": ORACLE_MIXTURE_WEIGHTS,
-    "eval_contamination": ORACLE_EVAL_CONTAMINATION,
-    "grid_dbscan": ORACLE_GRID_DBSCAN,
-    "bpe_packing_audit": ORACLE_BPE_PACKING_AUDIT,
-    "lsh_param_recall": ORACLE_LSH_PARAM_RECALL,
-    "surprise_drift_series": ORACLE_SURPRISE_DRIFT_SERIES,
-}
-
-
-def _retrieval_oracles() -> dict[str, str]:
-    """Parameter-derived oracle twins (built by the same module that
-    owns the operators, so the constants can never drift)."""
-    from fink_broker_spark.ext.retrieval import (
-        bm25_topk_oracle_sql,
-        dsir_importance_oracle_sql,
-    )
-
-    return {
-        "bm25_topk": bm25_topk_oracle_sql(_BM25_TERMS, k=20),
-        "dsir_importance": dsir_importance_oracle_sql("lang = 'en'", k=50),
-    }
-
-
-_ORACLES.update(_retrieval_oracles())
-
-
-# ---------------------------------------------------------------------------
-# Result-type parity: DuckDB auto-widens SUM over an integer expression
-# to HUGEINT (int128).  The local fetchall()-repr compare materializes a
-# HUGEINT as a plain Python int, so the difference is invisible here —
-# but the external driver's canonicalizer goes through an Arrow/pandas
-# fetch where HUGEINT arrives as Decimal('6')/6.0 against Spark's 6 and
-# every row hash-splits.  Round-6 forensics: 17 of the 19 non-FP red
-# rows in CORRECTNESS_r05.json had exactly one or more HUGEINT output
-# columns; zero green rows did (admin/typeaudit.py documents the
-# measurement).  Every oracle column listed here is re-typed to BIGINT
-# at registration via DuckDB's `SELECT * REPLACE` over the original
-# query — values are unchanged (all are counts / cents sums far below
-# 2^63; an overflow would error loudly, not silently truncate).  The
-# audit runs in CI (tests/test_type_parity.py): a new oracle with a
-# HUGEINT (or any cross-engine kind-mismatched) output column fails the
-# suite until it is cast inline or registered here.
-_BIGINT_CAST_COLS: dict[str, tuple[str, ...]] = {
-    "abc_classification": ("class_cents",),
-    "basket_novelty": ("n_items", "n_new"),
-    "centroid_distances": ("dot", "na", "nb"),
-    "clamped_balance": ("min_prefix", "final_balance"),
-    "cohort_ltv": ("cum_cents",),
-    "conversion_latency": ("n_converted",),
-    "daily_backlog": ("peak_backlog", "backlog_day_sum"),
-    "degree_assortativity": ("sx", "sxy", "sxx"),
-    "event_transitions": ("n_from",),
-    "fk_orphans": ("n_orphans",),
-    "forecast_backtest": ("sum_abs_err",),
-    "graph_modularity": ("sum_deg_sq",),
-    "grid_quantiles": ("n_orders",),
-    "grid_smooth": ("nbr_sum",),
-    "growth_accounting": ("n_new", "n_retained", "n_churned_next"),
-    "interval_islands": ("n_orders", "covered_days"),
-    "invoice_reconciliation": (
-        "worst_abs_diff_cents", "total_abs_diff_cents",
-    ),
-    "kcore_peel": ("core_edges",),
-    "kl_divergence_sources": ("n_tokens",),
-    "ks_uniformity": ("n_events",),
-    "length_caps": ("n_docs", "total_tokens", "dropped_tokens"),
-    "mannwhitney_u": ("n_returned", "n_accepted"),
-    "max_concurrency": ("max_concurrent",),
-    "max_drawdown": ("max_drawdown_cents",),
-    "modal_event_type": ("n_total",),
-    "multires_rollup": ("net_cents",),
-    "ohlc_weekly": ("open_cents", "high_cents", "low_cents", "close_cents"),
-    "order_freq_quantiles": ("n_customers",),
-    "out_of_order_rate": ("n_inversions",),
-    "peak_detection": ("n_peaks",),
-    "price_index": ("base_cents",),
-    "price_volume_mix": ("delta_cents",),
-    "quartile_skewness": ("n_orders",),
-    "rank_delta": ("rev_prev", "rev_cur"),
-    "region_share_rollup": ("rev_cents",),
-    "repeat_interval": ("n_gaps",),
-    "revenue_bridge": ("delta_cents", "base_cents", "cur_cents"),
-    "rfm_segments": ("monetary_cents",),
-    "rolling_median": ("max_med28",),
-    "seasonality_index": ("rev_cents",),
-    "seat_apportionment": ("rev_cents", "base_seats", "seats"),
-    "skew_report": ("n_rows",),
-    "split_leakage": ("leaked_eval_docs",),
-    "vocab_entropy": ("n_tokens",),
-    "weekday_outliers": ("rev",),
-    "weekly_kpis": ("revenue_cents",),
-    "weighted_median": ("total_weight",),
-    "window_dedup_batch": ("n_raw", "n_dropped"),
-    "winsorized_stats": ("n_rows", "n_clipped_low", "n_clipped_high"),
-}
-
-
-def _retype_bigint(sql: str, cols: tuple[str, ...]) -> str:
-    """Wrap *sql* so each named output column is BIGINT, not HUGEINT.
-
-    `* REPLACE` keeps the inner query's row set (an inner ORDER BY /
-    LIMIT has already selected the rows) and every other column
-    untouched; the driver's compare is row- and column-order
-    insensitive, so the wrap is behavior-preserving by construction.
-    """
-    repl = ", ".join(f"CAST({c} AS BIGINT) AS {c}" for c in cols)
-    return f"SELECT * REPLACE ({repl}) FROM (\n{sql}\n) __typed"
-
-
-for _name, _cols in _BIGINT_CAST_COLS.items():
-    _ORACLES[_name] = _retype_bigint(_ORACLES[_name], _cols)
-
-
-# Driver-channel sentinel probes (admin/probes.py): since the round-7
-# shrink the pinned tier holds only the two expected-green sentinels
-# (conf-policy uptake + the int32 type canary); the 8 retired
-# environment probes answered their questions in the round-6 artifact
-# and live unregistered in RETIRED_PROBE_QUERIES.  Pinned at the head
-# of the sampling rotation — see _driver_priority below.
-from fink_broker_spark.admin.probes import (  # noqa: E402
-    PROBE_ORACLES,
-    PROBE_QUERIES,
-)
-
-_QUERIES.update(PROBE_QUERIES)
-_ORACLES.update(PROBE_ORACLES)
-
 
 # Queries excluded from bench.py timing because a production-regime
 # twin covers the same operator: the provably-complete PPJoin prefix
 # join costs 4.5 % of the whole suite's wall time at sf0.1 and exists
 # to pin the pruned variant's verify semantics — the bench line should
-# show the regime a 100 TB deployment would run (VERDICT r5 #7).  The
-# correctness driver still samples every name in queries().
+# show the regime a 100 TB deployment would run.  The correctness
+# driver still samples every name in queries().
 BENCH_SKIP: tuple[str, ...] = ("ppjoin_neardup",)
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return q_pricing_summary(spark, SF001)
+    return relational.q_pricing_summary(spark, SF001)
 
 
-# Driver-sampling priority: the correctness driver checks the FIRST ~50
-# entries of queries() per round (dict order == iteration order).  The
-# order is DERIVED from the recorded CORRECTNESS_r*.json artifacts by
-# the rotation ledger (fink_broker_spark/admin/rotation.py), so it can
-# never go stale by hand again: most-recent-failure first, then
-# never-checked (newest additions land here automatically), then
-# previously-green stalest-round-first.
 def _driver_priority() -> list[str]:
+    """The correctness driver checks the FIRST ~50 entries of
+    ``queries()``; the rotation ledger (admin/rotation.py) derives their
+    order from the recorded ``CORRECTNESS_r*.json`` artifacts, with the
+    sentinel probes pinned at the head."""
     from fink_broker_spark.admin.rotation import driver_priority
 
     here = os.path.dirname(os.path.abspath(__file__))
+    pinned = [n for n in QUERIES if n.startswith("probe_")]
     try:
-        # probes lead unconditionally: their (spark_rows, oracle_rows)
-        # echo is the driver-environment telemetry this round exists to
-        # collect (VERDICT r5 #1)
-        return driver_priority(_QUERIES.keys(), here, pinned=PROBE_QUERIES)
+        return driver_priority(QUERIES.keys(), here, pinned=pinned)
     except Exception:  # ledger must never break queries()
-        return list(_QUERIES.keys())
+        return list(QUERIES)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {n: _QUERIES[n] for n in _driver_priority()}
+    return {n: QUERIES[n] for n in _driver_priority()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return dict(_ORACLES)
+    return dict(ORACLES)

@@ -1,10 +1,9 @@
 """Driver-drift reproduction harness.
 
-Round 4 proved a blind spot: every query passed the repo's parity suite
-on the COMMITTED testdata, yet the external driver — which regenerates
-the synthetic lake between rounds (and may run a different DuckDB
-build) — found five value mismatches. The committed-data-only loop
-cannot see physical-layout drift. This module closes that gap:
+A query can pass the repo's parity suite on the COMMITTED testdata and
+still split against an external driver that regenerates the synthetic
+lake (and may run a different DuckDB build): the committed-data-only
+loop cannot see physical-layout drift. This module closes that gap:
 
 1. **Variant generation** — rewrite a source lake into adversarial
    physical variants, deterministic per ``(seed, layout)``:
@@ -14,27 +13,27 @@ cannot see physical-layout drift. This module closes that gap:
      TIMESTAMP(NANOS) with seeded sub-microsecond jitter (truncates
      away at µs, so a correctly-normalizing engine returns identical
      results; an engine that casts the nanosAsLong BIGINT arrival
-     reinterprets ns as seconds — the exact r04 ``max_concurrency``
-     failure). Documents' text gains unicode/odd-whitespace suffixes
+     reinterprets ns as seconds, as ``max_concurrency`` once
+     did). Documents' text gains unicode/odd-whitespace suffixes
      on a seeded subset of rows (tokenizer-regex parity stress).
    - ``boundary`` — float ``value``/price columns snapped onto
      rounding half-boundaries at the scales the queries round at
      (``x.xxxxx5`` at scale 6 and exact ``.5`` halves): any
      terminal-ROUND-of-double or decimal-division construct that
-     differs between engines lights up (the r04 ``phase_fold``
+     differs between engines lights up (the ``phase_fold``
      class).
-   - ``int32keys`` (round 6) — every INT64 key column (``*key``,
+   - ``int32keys`` — every INT64 key column (``*key``,
      ``user_id``) whose values fit narrows to parquet INT32: Spark
      reads IntegerType, DuckDB INTEGER — joins/aggregates must stay
      value-identical and no query may leak a width-sensitive output
-     (a judge hypothesis for the r5 integer-output reds).
-   - ``nullfk`` (round 6) — ~1 % of foreign-key values
+     (integer-output width hypothesis).
+   - ``nullfk`` — ~1 % of foreign-key values
      (``o_custkey``, ``l_partkey``, ``l_suppkey``, ``events.user_id``)
      become NULL, deterministically per seed: both engines read the
      same NULLs, so every query's join/group/window null semantics
      must agree exactly (left-join flag sums, anti joins, null-safe
      grouping).
-   - ``decimalprice`` (round 6) — float64 money/measure columns
+   - ``decimalprice`` — float64 money/measure columns
      (``_MONEY_COLS``) quantize to 2 decimals and store as physical
      DECIMAL(15,2): Spark reads DecimalType, DuckDB DECIMAL — every
      money expression then runs decimal-typed.  First sweep found 5
@@ -45,14 +44,14 @@ cannot see physical-layout drift. This module closes that gap:
      EWMA and modulo expressions.  All fixed by pinning the value
      column to DOUBLE at staging on BOTH sides (a no-op on double
      lakes).
-   - ``sparse`` (round 7) — fact tables decimated to ~1-in-K rows
+   - ``sparse`` — fact tables decimated to ~1-in-K rows
      (dimensions whole, ``_SPARSE_KEEP_1_IN``): manufactures EMPTY
      intermediate sets (full-coverage sets, funnel completions,
      candidate pools) — the empty-input row-shape class where a Spark
      aggregate over zero rows (NULL max, missing row) and an oracle
-     scalar subquery can disagree (ADVICE r6's relational_division
-     NULL divisor; the r6 set_ops_all fix).
-   - ``nullmeasure`` (round 7) — ~2 % NULLs injected into MEASURE
+     scalar subquery can disagree (relational_division's NULL
+     divisor; set_ops_all).
+   - ``nullmeasure`` — ~2 % NULLs injected into MEASURE
      columns (``events.value``, ``customer.c_acctbal``,
      ``documents.n_chars``, ``documents.text``), the class ``nullfk``'s
      key injection misses.  First sweep found 7 real latent reds, all
@@ -64,14 +63,14 @@ cannot see physical-layout drift. This module closes that gap:
      EXCLUDED from distributional operators on both sides (a NULL has
      no position in a value distribution), and imperative paths mirror
      the declarative NULL propagation.
-   - ``dupdrift`` (round 8) — ~1-in-25 documents re-ingested with the
+   - ``dupdrift`` — ~1-in-25 documents re-ingested with the
      same doc_id but a REVISED body (one appended token; ~1-in-3 also
      re-detect lang): the upsert/re-crawl drift state.  Hunts doc-level
      dedups that keep an arbitrary row on one engine and a different
-     (or every distinct) row on the other — the ADVICE r7 #3 class;
+     (or every distinct) row on the other;
      fixed by deterministic min(text) survivor picks or same-tuple
      DISTINCT on both sides.
-   - ``emptystream`` (round 7) — zero-row events/documents/embeddings
+   - ``emptystream`` — zero-row events/documents/embeddings
      with full schemas (the "first night" operational state): model
      fits must return the empty answer, not crash (EmptyCorpusError →
      empty-schema fast paths), and no statistic may divide by an empty
@@ -113,7 +112,7 @@ from fink_broker_spark.sources.parquet import LAKE_TABLES
 #: cannot be checked against a relocated variant lake
 PATH_PINNED = frozenset({"file_provenance"})
 
-#: environment-fingerprint probes (admin/probes.py ``probe_env_*``)
+#: environment-fingerprint probes (queries/probes.py ``probe_env_*``)
 #: MISMATCH on adversarial layouts BY DESIGN: the Spark side reads the
 #: variant's real physical facts (ns unit, sub-µs jitter) while the
 #: pinned local DuckDB 1.0.0 truncates them at scan — exactly the
@@ -157,8 +156,7 @@ _MONEY_COLS = frozenset(
 #: whole).  The goal is EMPTY intermediate sets — full-coverage sets,
 #: funnel completions, cross-source candidate pools — the row-shape
 #: class where a Spark aggregate over zero rows and an oracle scalar
-#: subquery can disagree (ADVICE r6: relational_division; r6 fix:
-#: set_ops_all).
+#: subquery can disagree (relational_division, set_ops_all).
 _SPARSE_KEEP_1_IN = {
     "orders": 20,
     "lineitem": 20,
@@ -239,23 +237,21 @@ _NEGVALUE_COLS = {
     ("l_extendedprice", "lineitem"),
 }
 
-#: ``nullemb`` layout (round 9): ~1-in-50 embedding ARRAYS nulled
+#: ``nullemb`` layout: ~1-in-50 embedding ARRAYS nulled
 #: whole, plus ~1-in-66 of the survivors get ONE NULL ELEMENT at a
 #: seed-derived position — the failed-encoder / partial-write state a
 #: real vector lake ships.  Hunts the crash-vs-answer asymmetry class
-#: ADVICE r8 found latent in the ANN kernel (np.asarray(None) raises
-#: where DuckDB propagates NULL): NO prior layout nulled embeddings,
-#: which is exactly why that bug survived eight rounds of sweeps.
+#: of the ANN kernel (np.asarray(None) raises where DuckDB propagates
+#: NULL), which no other layout reaches because none nulls embeddings.
 #: Numpy kernels, HOF dot products, fixed-point integerizers, and
 #: grouped-map pandas paths must all drop-or-propagate IDENTICALLY to
 #: their oracles under both null shapes.
 _NULLEMB_ARR_1_IN = 50
 _NULLEMB_ELEM_1_IN = 66
 
-#: ``nanemb`` layout (round 10): the NaN sibling of ``nullemb``
-#: (VERDICT r9 Next #4).  ~1-in-50 embedding vectors get ONE NaN
-#: element at a seed-derived position, ~1-in-100 get +Inf, ~1-in-100
-#: get -Inf; plus the widest double measure column (``events.value``)
+#: ``nanemb`` layout: the NaN sibling of ``nullemb``.  ~1-in-50
+#: embedding vectors get ONE NaN element at a seed-derived position,
+#: ~1-in-100 get +Inf, ~1-in-100 get -Inf; plus the widest double measure column (``events.value``)
 #: gets ~1-in-200 NaN and ~1-in-500 of each infinity — the OTHER
 #: failed-encoder / overflow state a real vector lake ships (an
 #: exploded loss, a divide in the featurizer).  NaN is WORSE than the
@@ -328,8 +324,7 @@ def generate_variant(
             # with the SAME doc_id but a REVISED body (one appended
             # token), and ~1-in-3 of those also re-detect lang — the
             # at-least-once-delivery state where content changed
-            # between ingests (ADVICE r7 #3: "the natural next
-            # driftlab state").  Hunts every dedup that keeps an
+            # between ingests.  Hunts every dedup that keeps an
             # ARBITRARY row per doc_id on one engine while the oracle
             # keeps a DIFFERENT one (or all distinct tuples).  Scoped
             # to documents: a drifted TRANSACTIONAL PK (orders) is lake
@@ -681,8 +676,8 @@ def _arrow_rows(cur):
     """Fetch a DuckDB result THROUGH ARROW, the way a typed
     canonicalizer sees it.  ``fetchall()`` launders engine-specific
     types into plain Python objects (a HUGEINT arrives as ``int`` —
-    which is exactly how the round-5 reds stayed invisible to every
-    local sweep); the Arrow path preserves them (HUGEINT →
+    which is how HUGEINT outputs stay invisible to every local
+    sweep); the Arrow path preserves them (HUGEINT →
     decimal128(38,0) → ``Decimal('6')``), so a repr-hash over these
     rows splits wherever the external driver's Arrow/pandas fetch
     splits.  Returns ``(rows, cols)``."""
@@ -759,8 +754,8 @@ def run_parity(
         if not ok:
             results[name] = "MISMATCH"
             continue
-        # second gate (round 6): the same compare over an ARROW fetch of
-        # the oracle.  fetchall-equal but arrow-unequal == the r5 red
+        # second gate: the same compare over an ARROW fetch of
+        # the oracle.  fetchall-equal but arrow-unequal == the HUGEINT
         # class (engine-specific result types like HUGEINT that the
         # plain fetch launders into Python ints).  probe_type_* are
         # exempt — they carry adversarial types ON PURPOSE, to measure
@@ -781,7 +776,7 @@ def run_parity(
 
 
 #: every adversarial layout, in introduction order — ``--layouts all``
-#: (the ROUND-CLOSE regression gate, VERDICT r7 Next #7) expands to
+#: (the full regression gate) expands to
 #: this list so the full-surface sweep is one CLI invocation whose
 #: scope can never silently go stale against the layout registry
 ALL_LAYOUTS = [

@@ -1,9 +1,8 @@
 """Cross-engine result-TYPE parity audit.
 
-Round-5 forensics (VERDICT.md r5 "What's wrong" #1) found 21 driver
-hash mismatches that no local data layout could reproduce.  The round-6
-root cause turned out to be *result column types*, not values: 17 of
-the 19 non-FP red rows had a DuckDB ``HUGEINT`` output column
+Driver hash mismatches that no local data layout could reproduce
+turned out to be caused by *result column types*, not values: 17 of
+19 non-FP red rows had a DuckDB ``HUGEINT`` output column
 (``SUM`` over an INTEGER/BIGINT expression auto-widens to int128)
 where Spark emits ``bigint`` — and zero green rows did.  The local
 driver-sim compares ``fetchall()`` reprs, where a HUGEINT arrives as a
@@ -32,14 +31,12 @@ any pairing that can split under a typed canonicalizer:
   string, scale is not: ``Decimal('1.25')`` != ``Decimal('1.250')``);
 - 32-bit floats anywhere (``REAL``/``float`` — shortest-repr
   formatting differs from the value's double formatting);
-- decimal *precision > 18* on either side (round-8 hardening: DuckDB
-  backs decimals wider than 18 digits with HUGEINT internally, so the
-  driver's typed fetch path splits on them exactly like raw HUGEINT —
-  the r8 reds ``rolling_volatility``/``table_checksum`` were the only
-  two wide-decimal emitters in the registry, value-identical
-  cross-engine yet hash-red.  Wide decimals may ride INTERNALLY for
+- decimal *precision > 18* on either side (DuckDB backs decimals
+  wider than 18 digits with HUGEINT internally, so the driver's typed
+  fetch path splits on them exactly like raw HUGEINT, even on
+  value-identical results.  Wide decimals may ride INTERNALLY for
   overflow headroom but must leave a query as BIGINT limbs
-  (``__spark_entry__._limb3_bigints``), a ``_limb3_double``
+  (``queries/common._limb3_bigints``), a ``_limb3_double``
   conversion, or a string cast).
 
 CLI::
@@ -72,7 +69,7 @@ _FLOAT32 = {"REAL", "FLOAT", "FLOAT4"}
 
 #: widest decimal precision a query may EMIT: DuckDB backs p > 18 with
 #: HUGEINT (int128) internally and the driver's typed fetch path splits
-#: on it (the r8 wide-decimal red class) — same hazard as
+#: on it (the wide-decimal class) — same hazard as
 #: ``_FORBIDDEN_DUCK`` under a DECIMAL label
 _MAX_EMIT_DECIMAL_PRECISION = 18
 
@@ -190,7 +187,7 @@ def audit(
     oracles = entry_module.oracle_sql()
     out: dict[str, list[tuple[str, str, str]]] = {}
     for name in names if names else queries:
-        # fingerprint probes (admin/probes.py) carry adversarial types
+        # fingerprint probes (queries/probes.py) carry adversarial types
         # ON PURPOSE (probe_type_hugeint) — auditing them would fail
         # every clean run; explicit --names still reaches them
         if names is None and name.startswith("probe_"):

@@ -15,7 +15,9 @@ Two entry points:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import weakref
 import zipfile
@@ -60,6 +62,27 @@ _SESSION_IDS: "weakref.WeakKeyDictionary[SparkSession, str]" = (
 )
 
 
+#: This process's temporary directory (see :func:`_process_tmp`).
+_TMP_DIR: str | None = None
+
+
+def _process_tmp() -> str:
+    """One temporary directory per process for what sessions leave on
+    disk: the shipped package zip and the default SQL warehouse.  It is
+    removed at interpreter exit."""
+    global _TMP_DIR
+    if _TMP_DIR is None:
+        _TMP_DIR = tempfile.mkdtemp(prefix="fink_broker_spark_")
+        atexit.register(shutil.rmtree, _TMP_DIR, True)
+    return _TMP_DIR
+
+
+def default_driver_memory(phys_bytes: int) -> str:
+    """Driver heap for a host with *phys_bytes* of RAM: half of it,
+    capped at 32g (a ``spark.driver.memory`` value in MiB)."""
+    return f"{min(32 << 10, phys_bytes >> 21)}m"
+
+
 def session_id(spark: SparkSession) -> str:
     """Stable identity for a live session (cached applicationId)."""
     try:
@@ -94,9 +117,7 @@ def _ship_package(spark: SparkSession) -> None:
         return
     pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     root = os.path.dirname(pkg_dir)
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"fink_broker_spark_{os.getpid()}.zip"
-    )
+    zip_path = os.path.join(_process_tmp(), "fink_broker_spark.zip")
     if not os.path.exists(zip_path):
         with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
             for dirpath, _dirnames, filenames in os.walk(pkg_dir):
@@ -163,9 +184,19 @@ def get_session(
         builder = builder.config("spark.master", master)
     # local mode runs every executor thread inside the driver JVM, whose
     # default heap (1g) starves shuffles long before the machine does;
-    # static conf — only takes effect when this call launches the JVM
+    # static confs — they only take effect when this call launches the JVM
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
     builder = builder.config(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+        "spark.driver.memory",
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(phys),
+    )
+    # reliable checkpoints (plans/materialize.py) are deleted once their
+    # RDD is garbage-collected, instead of outliving the session
+    builder = builder.config(
+        "spark.cleaner.referenceTracking.cleanCheckpoints", "true"
+    )
+    builder = builder.config(
+        "spark.sql.warehouse.dir", os.path.join(_process_tmp(), "warehouse")
     )
     if shuffle_partitions is not None:
         builder = builder.config(

@@ -55,7 +55,7 @@ def brute_force_topk(
     symmetrically with SQL oracles, but a NaN cosine ranks FIRST in
     both engines' DESC orderings (NaN compares greatest), so a single
     NaN element would hijack the entire top-k (nanemb driftlab
-    layout, r10).
+    layout).
     """
     from fink_broker_spark.functions.vector import dot_expr, norm2_expr
 
@@ -181,8 +181,8 @@ def _cell_ranking_expr(vec_col: str, centroids: list[list[float]]) -> Column:
     unrolled form (one ``zip_with``+``aggregate`` lambda pair and ``dim``
     scalar literals PER centroid) built an O(nlist·dim) expression tree
     whose Catalyst analysis dominated wall time on bounded corpora
-    (ivf_ann_topk: 2.7 s of a 4.0 s run was driver-side plan work, r10
-    profile).  Arithmetic is bit-identical: same (x−y)·(x−y) doubles in
+    (ivf_ann_topk: 2.7 s of a 4.0 s run was driver-side plan work,
+    profiled).  Arithmetic is bit-identical: same (x−y)·(x−y) doubles in
     the same left-to-right ``aggregate`` order, same struct ordering
     (dist, then cell index) under ``array_sort``."""
     from fink_broker_spark.functions.vector import double_matrix_lit
@@ -234,8 +234,6 @@ def kmeans_centroids(
     # filter sits BELOW the orderBy/limit, so it is evaluated once per
     # corpus row during the TakeOrdered pass — one cheap array HOF on
     # a scan that happens anyway), not on the bounded sample
-    # (ADVICE r9 #3 wording fix; r9 review finding, accepted as
-    # intentional layering)
     sample = (
         well_formed_vectors(corpus, vec_col).select(vec_col)
         .orderBy(F.xxhash64(F.concat(F.col(id_col).cast("string"),
@@ -428,12 +426,12 @@ def well_formed_vectors(df: DataFrame, vec_col: str) -> DataFrame:
     Why a hard precondition instead of propagation: the numpy kernels
     crash on None (np.asarray / ragged np.array) while DuckDB
     propagates NULL and still answers — an asymmetric crash-vs-answer
-    split (ADVICE r8); and a NULL element turns every exact-integer
+    split; and a NULL element turns every exact-integer
     distance involving that vector NULL, where Spark's ASC window
     ranks NULLS FIRST and DuckDB's NULLS LAST, silently flipping
-    argmin cell/code assignments (the r9 ``nullemb`` driftlab layout
+    argmin cell/code assignments (the ``nullemb`` driftlab layout
     caught 8 such splits on its first sweep).  NaN/Inf elements are
-    WORSE (r10 ``nanemb`` layout, 14 embedding-op hits on its first
+    WORSE (the ``nanemb`` layout, 14 embedding-op hits on its first
     sweep): nothing crashes symmetrically — numpy propagates NaN
     silently and np.argmin returns the NaN position where a SQL
     window ranks NaN greatest, while the ANSI integerization tree
@@ -501,7 +499,7 @@ def _assign_cells(
     """Coarse-quantizer assignment: each ``(id, __e)`` row gets the
     ``cid`` of its squared-L2-nearest seed (ties break on cid).  THE
     single definition shared by the portable IVF and SemDeDup twins —
-    the r8 review flagged three drifting copies of this argmin."""
+    three drifting copies of this argmin existed before."""
     wcell = Window.partitionBy(id_col).orderBy("__d2", "cid")
     return (
         iv.crossJoin(F.broadcast(seeds))
@@ -751,7 +749,7 @@ def signature_expr(vec_col: Column | str, planes: list[list[float]]) -> Column:
     # plane matrix as ONE nested-array literal + one transform lambda:
     # the unrolled per-plane form built an O(nbits·dim) expression tree
     # whose Catalyst analysis cost scaled with the plane count (same
-    # compaction as _cell_ranking_expr, r10).  Bit order, dot-product
+    # compaction as _cell_ranking_expr).  Bit order, dot-product
     # accumulation order, and the >= 0 sign rule are unchanged.
     from fink_broker_spark.functions.vector import double_matrix_lit
 
@@ -922,8 +920,8 @@ def pq_encode(
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
     sub = books[0].shape[1]
     # well-formed domain like every other embedding-operator entry
-    # (r9 review: this was the one unguarded public entry — a direct
-    # caller on a nullemb-shaped corpus would crash in np.asarray)
+    # (a direct caller on a nullemb-shaped corpus would otherwise
+    # crash in np.asarray)
     df = well_formed_vectors(df, vec_col)
 
     @pandas_udf("array<int>")

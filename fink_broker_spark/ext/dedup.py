@@ -131,7 +131,7 @@ def jaccard_pairs(
     # + sizes, four with the max_df path) and the keyed-wide shingle
     # chain no longer ends at a reusable Exchange — uncut, each
     # consumer would re-tokenize the corpus (measured 3× CPU blow-up)
-    # lineage-truncation tradeoff: see __spark_entry__._materialize.
+    # lineage-truncation tradeoff: see plans/materialize.py.
     # A caller-provided ``shingles`` relation is already materialized
     # (that is the contract of passing it), so the barrier job here
     # would only re-store a cheap xxhash projection of it — recomputing
@@ -240,7 +240,7 @@ def minhash_lsh_pairs(
     # BOTH sides and the keyed-wide shingle chain below it no longer
     # ends at a reusable Exchange — uncut, each side re-tokenizes and
     # re-hashes the corpus (lineage-truncation tradeoff: see
-    # __spark_entry__._materialize); |docs| rows × num_hashes longs
+    # plans/materialize.py); |docs| rows × num_hashes longs
     sig = sig.transform(materialize)
     band_structs = [
         F.struct(
@@ -277,7 +277,7 @@ def minhash_lsh_pairs(
         return cands
     # candidate list feeds both the id set and the final join — one
     # materialization instead of re-running banding per consumer
-    # lineage-truncation tradeoff: see __spark_entry__._materialize
+    # lineage-truncation tradeoff: see plans/materialize.py
     cands = cands.transform(materialize)
     # verify only the candidate documents: a pair's shingle intersection
     # involves no third document, so Jaccard computed over the candidate
@@ -391,7 +391,7 @@ def simhash_pairs(
         # materialize: both band self-join sides consume the signature
         # and the tokenize → vote chain has no exchange to reuse —
         # uncut, the Arrow vote kernel runs twice over the corpus
-        # lineage-truncation tradeoff: see __spark_entry__._materialize
+        # lineage-truncation tradeoff: see plans/materialize.py
         .transform(materialize)
     )
     # static shifts per band (shiftright needs a literal shift amount)
@@ -493,7 +493,7 @@ def minhash_lsh_pairs_portable(
     # materialize: both band-table self-join sides consume sig, and the
     # keyed-wide shingle chain below no longer ends at a reusable
     # Exchange — uncut, each side re-tokenizes + re-md5s the corpus
-    # lineage-truncation tradeoff: see __spark_entry__._materialize
+    # lineage-truncation tradeoff: see plans/materialize.py
     sig = sig.transform(materialize)
     band_structs = [
         F.struct(
@@ -529,7 +529,7 @@ def minhash_lsh_pairs_portable(
     # optimization): a pair's Jaccard involves no third document, so
     # the exact join's fanout shrinks from the whole corpus to the
     # near-dup families — output-identical, ~5× cheaper at sf0.1
-    # lineage-truncation tradeoff: see __spark_entry__._materialize
+    # lineage-truncation tradeoff: see plans/materialize.py
     cands = cands.transform(materialize)
     cand_ids = (
         cands.select(F.col("id_a").alias(id_col))
@@ -589,7 +589,7 @@ def simhash_pairs_portable(
     # materialize: both band-table self-join sides consume the signature
     # and the keyed-wide shingle chain below no longer ends at a
     # reusable Exchange (same rationale as minhash_lsh_pairs_portable)
-    # lineage-truncation tradeoff: see __spark_entry__._materialize
+    # lineage-truncation tradeoff: see plans/materialize.py
     base = votes.select(
         F.col(id_col), simhash.alias("simhash")
     ).transform(materialize)
@@ -747,7 +747,7 @@ def dedup_groups(
         .distinct()
         # materialize ONCE: without this, every propagation round re-runs
         # the (possibly expensive) pair-generation lineage upstream
-        # lineage-truncation tradeoff: see __spark_entry__._materialize
+        # lineage-truncation tradeoff: see plans/materialize.py
         .transform(materialize)
     )
     # one job over the checkpoint: DataFrame.count() plans an aggregate
@@ -810,8 +810,8 @@ def dedup_groups(
                 ).alias("component"),
             )
         )
-        # lineage-truncation tradeoff: see __spark_entry__._materialize.
-        # LAZY on purpose (r10): the convergence agg below is the
+        # lineage-truncation tradeoff: see plans/materialize.py.
+        # LAZY on purpose: the convergence agg below is the
         # round's blocking action anyway, so it both computes the sum
         # AND materializes the checkpoint in ONE job — eager=True ran a
         # separate checkpoint job first, one extra job per round for
@@ -1021,7 +1021,7 @@ def dup_span_coverage(
     # materialize ONCE, as the docstring's plan note prescribes: the
     # window relation feeds both the frequency aggregate and the join
     # back — uncut, each branch re-tokenizes + re-md5s the corpus
-    # lineage-truncation tradeoff: see __spark_entry__._materialize
+    # lineage-truncation tradeoff: see plans/materialize.py
     windows = toks.select(
         "doc_id",
         F.explode(
@@ -1087,7 +1087,7 @@ def exact_substring_remove(
     """
     # canonical row per document: a re-ingested duplicate row (duprows
     # driftlab) is one document, and when re-ingest DRIFTS the body
-    # (same doc_id, different text — ADVICE r7 #3) both engines must
+    # (same doc_id, different text) both engines must
     # pick the SAME survivor, so the pick is min(text), never
     # dropDuplicates' arbitrary row.  The empty-body filter runs
     # BEFORE the pick on both sides, or a doc whose duplicates are
@@ -1096,7 +1096,7 @@ def exact_substring_remove(
     # exchange; materialize ONCE — toks feeds the window chain AND the
     # final clean-hash join, and win below feeds dup_w AND the covered
     # join (uncut, each consumer re-tokenizes / re-md5s the corpus)
-    # lineage-truncation tradeoff: see __spark_entry__._materialize
+    # lineage-truncation tradeoff: see plans/materialize.py
     toks = (
         ensure_keyed_parallelism(
             docs.filter(

@@ -202,16 +202,16 @@ def pagerank_fixedpoint(edges: DataFrame, iters: int = 3) -> DataFrame:
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     nodes = sym.select(F.col("src").alias("node")).distinct()
     n1 = nodes.agg(F.count(F.lit(1)).alias("n"))
-    # hoist the loop invariants (r10 optimization): the (node, n) base
+    # hoist the loop invariants: the (node, n) base
     # and the degree-annotated edge list are identical in every
     # iteration, but inside the unrolled loop each iteration re-planned
-    # them from scratch (the captured r10 before-plan re-derives the
+    # them from scratch (the unhoisted plan re-derives the
     # node distinct, the 1-row count AND the edge-degree join three
     # times — 26 Exchange nodes).  Materializing each ONCE (node-sized
     # and edge-sized respectively) leaves per-iteration work at the
     # contribution join + the dst-keyed sum, the true algorithmic
     # minimum.  Results bit-identical (pure loop-invariant hoisting).
-    # lineage-truncation tradeoff: see __spark_entry__._materialize
+    # lineage-truncation tradeoff: see plans/materialize.py
     base = nodes.crossJoin(F.broadcast(n1)).transform(materialize)
     ranks = base.select(
         "node", "n", F.expr(f"{PAGERANK_UNIT} DIV n").alias("ru")
@@ -252,16 +252,13 @@ def bounded_sssp(
     hops are absent (their distance is not yet settled — a bounded
     relaxation reports only what it has proven).
     """
-    # r11: the old form union+distinct'ed the FULL node set and
-    # checkpointed it — only to throw away every row but one: the
-    # distance init `nodes ⋈ broadcast(min(node))` keeps exactly the
-    # minimum-id source row.  min(src) over the symmetric edge list IS
-    # min over the node set (src-set = dst-set = nodes by symmetry,
-    # and MIN is distinct-insensitive), so the node-set aggregate, its
-    # checkpoint job, and the init join all vanish (guide §1.2 "don't
-    # compute things you throw away").  The NULL filter preserves the
-    # empty-graph contract: an empty edge list yields an empty dist
-    # (the old inner join's behavior), never a (NULL, 0) row.
+    # the distance init needs only the minimum-id source row, and
+    # min(src) over the symmetric edge list IS min over the node set
+    # (src-set = dst-set = nodes by symmetry, and MIN is
+    # distinct-insensitive), so no node-set aggregate, checkpoint job or
+    # init join is needed (guide §1.2 "don't compute things you throw
+    # away").  The NULL filter keeps the empty-graph contract: an empty
+    # edge list yields an empty dist, never a (NULL, 0) row.
     # Per-round checkpointing was MEASURED SLOWER here (2.67 → 3.29 s
     # at sf0.1): the three blocking checkpoint jobs cost more than the
     # dist-subtree duplication they remove, because AQE's runtime
@@ -331,7 +328,7 @@ def khop_reach(edges: DataFrame, exclude_self: bool = True) -> DataFrame:
     # replicated_skew_join's contract (pinned by the brute-force test).
     # The replication cost is bounded: the edge relation is support-cut
     # upstream, and at sf0.1 the whole wedge input is ~7.7k rows
-    # (max degree 10 — measured r11), so the salt is pure scale
+    # (max degree 10 —), so the salt is pure scale
     # insurance at zero bench cost.
     two = replicated_skew_join(
         sym.select(F.col("src").alias("node"), F.col("dst").alias("__k")),

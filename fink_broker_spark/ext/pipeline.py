@@ -189,7 +189,7 @@ def repetition_metrics(
     ``id_col`` may be a list: metrics key on the full tuple, so a
     caller carrying e.g. (doc_id, lang) keeps per-tuple token pools
     separate — required for oracle parity when a re-ingested doc_id
-    recurs with a different carried attribute (ADVICE r7 #3).
+    recurs with a different carried attribute.
     """
     ids = [id_col] if isinstance(id_col, str) else list(id_col)
     tok = df.select(

@@ -10,14 +10,14 @@ tokenize+explode pass, vocabulary-bounded aggregates, broadcast 1-row
 corpus statistics, and TakeOrdered top-k — no UDFs, no driver-side
 state.
 
-FP discipline (round-6 hardening): both scorers are now
+FP discipline: both scorers are
 **transcendental-free**.  The classic ``ln()``-based forms survived two
 rounds of quantization hardening (scale-9 summand rounds, terminal
 scale-5 quantize) and still hash-split on the external driver — a 1-ulp
 JVM-vs-libm ``ln()`` difference in ONE summand can always straddle some
 rounding boundary.  The scores below are exact ratios of integers,
 fixed-point-scaled with INTEGRAL division (Spark ``div`` ≡ DuckDB
-``//`` — both truncate toward zero, probe-measured in round 5), summed
+``//`` — both truncate toward zero, probe-measured), summed
 as plain BIGINTs: bit-identical on any engine, any libm, any data
 layout.
 
@@ -185,7 +185,7 @@ def bm25_topk(
     ).limit(k)
 
 
-#: honest name for the scorer (ADVICE r6): the IDF is the rational RSJ
+#: honest name for the scorer: the IDF is the rational RSJ
 #: weight, not its log — see the warning in the docstring
 rational_bm25_topk = bm25_topk
 

@@ -225,7 +225,7 @@ def semantic_dedup_portable(
     # materialize ONCE: ranked feeds three consumers (both pair-join
     # sides + the final membership aggregate); uncut, each would re-run
     # the integerization + seed-argmin assignment over the corpus
-    # lineage-truncation tradeoff: see __spark_entry__._materialize
+    # lineage-truncation tradeoff: see plans/materialize.py
     ranked = assigned.select(
         id_col,
         "__e",
@@ -253,7 +253,7 @@ def semantic_dedup_portable(
     )
 
     def d18(c):
-        # ANSI-throw-vs-answer envelope (ADVICE r8): the tau
+        # ANSI-throw-vs-answer envelope: the tau
         # inequality rides decimal(18,0) operands — 18+18+1 = 37-digit
         # products, still inside DECIMAL(38) after the tau multiply
         # while dot² · tau < 1e38 — against the oracle's unbounded

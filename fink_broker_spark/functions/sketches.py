@@ -149,7 +149,7 @@ def cms_build(
         # extract scalars before grouping: struct-field expressions as
         # grouping keys run inside the aggregate's grouping projection
         # and cost ~2x on the exploded hot path (measured on the
-        # basket_pairs pair aggregate, SCALING.md round-3d)
+        # basket_pairs pair aggregate, SCALING.md)
         .select(F.col("rp.r").alias("r"), F.col("rp.pos").alias("pos"))
         .groupBy("r", "pos")
         .agg(F.count(F.lit(1)).alias("counter"))

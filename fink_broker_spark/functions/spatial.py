@@ -745,7 +745,7 @@ def healpix_crossmatch(
     lt = left.withColumn("__pix", lpix)
     # spread the catalog scan before the cone-cover UDF: the per-row
     # disc sampling is Python work that otherwise runs in the single
-    # scan task of a one-split catalog file (measured r10: 1.7 s of the
+    # scan task of a one-split catalog file (measured: 1.7 s of the
     # broadcast build single-task; guide §2.5 / §4 — a guarded no-op on
     # any multi-split catalog)
     from fink_broker_spark.plans.partitioning import ensure_scan_parallelism

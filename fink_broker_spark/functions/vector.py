@@ -27,7 +27,7 @@ def double_matrix_lit(rows) -> Column:
 
     Built by parsing ONE SQL array expression instead of ``F.lit`` on a
     nested list: PySpark's lit converts nested sequences element-by-
-    element over py4j (~0.8 s for a 16×64 centroid matrix, measured r10),
+    element over py4j (~0.8 s for a 16×64 centroid matrix),
     while one Catalyst parse is ~3 ms. Bit-exact: ``repr(float)`` is the
     shortest round-trip form and Java's parseDouble returns the nearest
     double, i.e. the original (verified incl. -0.0 and denormals).

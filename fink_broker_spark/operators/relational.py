@@ -210,7 +210,7 @@ def asof_join(
         # SQL equality semantics: a NULL key matches nothing.  The
         # window partition would otherwise group all NULL-key rows
         # together and "match" them to each other — the nullfk driftlab
-        # layout caught exactly that (r6)
+        # layout caught exactly that
         *[
             F.when(F.col("__key").isNotNull(), F.col(f"__f_{c}"))
             .alias(c)

@@ -22,12 +22,16 @@ MB = 1024 * 1024
 #: guarded relations are overwhelmingly the SAME memoized table scans
 #: (load_table returns one DataFrame object per session × table), so
 #: one physical-planning pass per distinct relation per session
-#: suffices (r10 VERDICT item 4).  The file fingerprints — the same
+#: suffices.  The file fingerprints — the same
 #: (mtime_ns, size) key the load_table memo uses — invalidate the
 #: entry when a lake file is rewritten in place (the driftlab
 #: in-process regeneration), because a canonicalized plan hash alone
 #: does not see file sizes.  Conf-dependent width (maxPartitionBytes
 #: etc.) is stable within a session by engine policy.
+#: ``semanticHash`` is a 32-bit hash, so two different plans over the
+#: same files can collide and share a width.  A collision can only make
+#: ``ensure_scan_parallelism`` / ``ensure_keyed_parallelism`` add or skip
+#: a repartition; it never changes a result row.
 _WIDTH_MEMO: dict[tuple, int] = {}
 
 

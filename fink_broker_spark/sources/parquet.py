@@ -64,8 +64,7 @@ _LOAD_TABLE_CACHE: dict[tuple, "DataFrame"] = {}
 #: release (value → key cycle); instead the cache stays a plain dict
 #: and :func:`_evict_dead_sessions` sweeps entries whose session object
 #: was collected OR whose SparkContext was stopped — a long-lived
-#: service that cycles sessions no longer accumulates dead plans
-#: (r10 VERDICT item 5).
+#: service that cycles sessions does not accumulate dead plans.
 _SESSION_REFS: dict[str, object] = {}
 
 
@@ -147,7 +146,7 @@ def _timestamp_columns(path: str) -> tuple[tuple[str, str], ...]:
         # no pyarrow / exotic layout: fall back to dtype-only handling
         # for THIS call, but never cache the failure — a transient
         # footer-read error must not permanently disable the
-        # ns-as-bigint normalization (the r04 red class) for the
+        # ns-as-bigint normalization for the
         # process lifetime
         return ()
     _TS_COLS_CACHE[key] = tuple(out)
@@ -173,7 +172,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # this DataFrame costs ~130-230 ms of driver-side work (parquet
     # schema inference, a .dtypes analysis pass, the withColumn chain),
     # paid 1-3× by every one of ~300 bench queries — ~60 s of the
-    # bench total measured at r10.  A DataFrame is an immutable logical
+    # measured bench total.  A DataFrame is an immutable logical
     # plan, so the SAME object can seed every query: each action still
     # re-scans parquet (nothing is persisted or cached executor-side).
     # Keyed by session identity (a new/restarted session never reuses a

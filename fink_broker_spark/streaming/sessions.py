@@ -2,7 +2,7 @@
 
 Spark's ``session_window`` merges events into gap-bounded sessions
 inside the engine's windowing state machinery — the declarative form of
-the lag/cumulative-sum sessionizer in ``__spark_entry__``
+the lag/cumulative-sum sessionizer in ``queries/events.py``
 (``session_window_lag``) and the grouped-map twin
 (``session_applyinpandas``). In streaming it is watermark-aware: a
 session closes (and emits, in append mode) once the watermark passes

@@ -56,9 +56,10 @@ def _write_no_full_coverage_orders(tmp_path) -> str:
 
 def test_relational_division_empty_full_coverage(spark, tmp_path):
     import __spark_entry__ as em
+    from fink_broker_spark.queries.relational import q_relational_division
 
     sf_dir = _write_no_full_coverage_orders(tmp_path)
-    got = em.q_relational_division(spark, sf_dir).collect()
+    got = q_relational_division(spark, sf_dir).collect()
     assert len(got) == 1
     row = got[0].asDict()
     # the divisor must survive the empty full-coverage set
@@ -78,11 +79,11 @@ def test_relational_division_empty_full_coverage(spark, tmp_path):
 
 
 def test_gdpr_cascade_broadcasts_only_dimension_keys(spark):
-    import __spark_entry__ as em
+    from fink_broker_spark.queries.relational import q_gdpr_cascade
     from tests.conftest import SF0001
 
     plan = (
-        em.q_gdpr_cascade(spark, SF0001)
+        q_gdpr_cascade(spark, SF0001)
         ._jdf.queryExecution()
         .analyzed()
         .toString()

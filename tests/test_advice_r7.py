@@ -113,9 +113,10 @@ def test_mannwhitney_radicand_guard_all_ties(spark, tmp_path):
     exactly — z must be NULL on BOTH engines (DuckDB must never reach
     sqrt(0⁻); Spark must never emit NaN)."""
     import __spark_entry__ as em
+    from fink_broker_spark.queries.stats import q_mannwhitney_u
 
     sf_dir = _write_alltie_lineitem(tmp_path)
-    rows = em.q_mannwhitney_u(spark, sf_dir).collect()
+    rows = q_mannwhitney_u(spark, sf_dir).collect()
     assert len(rows) == 1 and rows[0]["z_score"] is None
     run_oracle_compare(spark, "mannwhitney_u", sf_dir)
     # structural pin: the oracle guards the materialized radicand
@@ -186,10 +187,10 @@ def test_reingest_drift_audit_values(spark, tmp_path):
     12 rows / 8 docs; docs 3, 4, 5, 8 multirow; doc 5's second row is
     the only verbatim dup; docs 3, 4, 8 drift text; doc 4 drifts
     lang."""
-    import __spark_entry__ as em
+    from fink_broker_spark.queries.text import q_reingest_drift_audit
 
     sf_dir = _write_drifted_documents(tmp_path)
-    row = em.q_reingest_drift_audit(spark, sf_dir).collect()[0].asDict()
+    row = q_reingest_drift_audit(spark, sf_dir).collect()[0].asDict()
     assert row == {
         "n_rows": 12,
         "n_docs": 8,
@@ -203,9 +204,9 @@ def test_reingest_drift_audit_values(spark, tmp_path):
 
 
 def test_spearman_rho_rounded_scale_9(spark):
-    import __spark_entry__ as em
+    from fink_broker_spark.queries.stats import q_spearman_corr
 
-    for row in em.q_spearman_corr(spark, SF0001).collect():
+    for row in q_spearman_corr(spark, SF0001).collect():
         rho = row["spearman_rho"]
         if rho is not None:
             assert rho == round(rho, 9), rho

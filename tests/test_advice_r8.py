@@ -15,13 +15,9 @@ level up).  These tests pin the closure:
 2. ``admin/typeaudit`` flags ANY output column with decimal
    precision > 18 on either engine (the gate that would have caught
    both reds pre-driver);
-3. ``probe_type_decimal38`` ANSWERED in CORRECTNESS_r9 (rows/schema
-   green, hash red — the predicted split) and is now RETIRED per its
-   contract; the test pins the retirement (unregistered, importable,
-   still locally green so it can be re-armed);
-4. (ADVICE r8 #1) ``kernel_portable_topk`` drops NULL embeddings
+3. (ADVICE r8 #1) ``kernel_portable_topk`` drops NULL embeddings
    symmetrically with the oracle instead of crashing in np.asarray;
-5. (ADVICE r8 #2) the semantic-dedup tau inequality rides
+4. (ADVICE r8 #2) the semantic-dedup tau inequality rides
    decimal(18,0): operands past the old 1e14 envelope now answer
    instead of ANSI-throwing against a DuckDB that answers.
 """
@@ -119,36 +115,6 @@ def test_typeaudit_flags_wide_decimal_either_side():
     assert not compare_types(
         [("v", "decimal(18,7)")], [("v", "DECIMAL(12,7)")]
     )
-
-
-# -- 3. the canary probe ---------------------------------------------------
-
-
-def test_probe_decimal38_retired_after_r9_answer(spark):
-    """CORRECTNESS_r9 recorded the answer (rows/schema green, hash red
-    on value-identical Decimal digit strings), so the canary retired
-    per its own contract — exactly as probe_type_hugeint after r6.
-    It must be OUT of the live registry (never re-pinnable by the
-    failed-first tier) yet importable and still locally green, so it
-    can be re-armed if the driver environment ever shifts."""
-    from fink_broker_spark.admin.probes import (
-        PROBE_QUERIES,
-        RETIRED_PROBE_ORACLES,
-        RETIRED_PROBE_QUERIES,
-    )
-
-    assert "probe_type_decimal38" not in PROBE_QUERIES
-    assert "probe_type_decimal38" not in em.queries()
-    assert "probe_type_decimal38" not in em.oracle_sql()
-    assert "probe_type_decimal38" in RETIRED_PROBE_QUERIES
-    assert "probe_type_decimal38" in RETIRED_PROBE_ORACLES
-    # the retired probe still runs and keeps its adversarial typing,
-    # so re-arming is a two-line move back into PROBE_QUERIES
-    df = RETIRED_PROBE_QUERIES["probe_type_decimal38"](spark, SF0001)
-    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    assert types["v_small"] == "decimal(38,0)"
-    assert types["v_big"] == "decimal(38,0)"
-    assert int(df.collect()[0]["v_big"]) > 2**63
 
 
 # -- 4. ADVICE #1: NULL embeddings drop symmetrically ----------------------

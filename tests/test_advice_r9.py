@@ -82,12 +82,12 @@ def test_spark_decimal_cast_nulls_nonfinite_even_ansi(spark, nonfinite_df):
 
 
 def test_finite_helper_mirrors_duckdb_isfinite(nonfinite_df):
-    import __spark_entry__ as em
+    from fink_broker_spark.queries.common import _finite
 
     got = {
         r["id"]: r["ok"]
         for r in nonfinite_df.select(
-            "id", em._finite("v").alias("ok")
+            "id", _finite("v").alias("ok")
         ).collect()
     }
     assert got == {1: True, 2: False, 3: False, 4: False, 5: None}
@@ -205,11 +205,11 @@ def test_duckdb_range_requires_constant_bounds():
 
 
 def test_materialize_routes_through_localcheckpoint(spark):
-    """The _materialize helper must actually truncate lineage via
+    """``materialize`` must actually truncate lineage via
     localCheckpoint — patched on the CONCRETE DataFrame class with a
     fired-flag, per the r9 monkeypatch lesson (the abstract
     pyspark.sql.DataFrame parent is a silent no-op to patch)."""
-    import __spark_entry__ as em
+    from fink_broker_spark.plans.materialize import materialize
 
     cls = type(spark.range(1))
     orig = cls.localCheckpoint
@@ -221,7 +221,7 @@ def test_materialize_routes_through_localcheckpoint(spark):
 
     cls.localCheckpoint = spy
     try:
-        out = em._materialize(spark.range(5))
+        out = materialize(spark.range(5))
         assert out.count() == 5
     finally:
         cls.localCheckpoint = orig

@@ -98,8 +98,7 @@ import __spark_entry__ as em
 def _tiny(spark, sf_dir):
     return spark.range(5).toDF("i")
 
-em._QUERIES = {"tiny_a": _tiny, "tiny_b": _tiny}
-em.queries = lambda: dict(em._QUERIES)
+em.queries = lambda: {"tiny_a": _tiny, "tiny_b": _tiny}
 em.BENCH_SKIP = ()
 
 # noise source 1: atexit hook (runs on normal interpreter exit; the

@@ -566,7 +566,7 @@ def test_ppjoin_prefix_filter_is_complete(spark, tmp_path):
     operator's output driven end-to-end through a temp lake."""
     import itertools
 
-    import __spark_entry__ as em
+    from fink_broker_spark.queries.dedup import q_ppjoin_neardup
 
     base = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"
     docs = [
@@ -580,7 +580,7 @@ def test_ppjoin_prefix_filter_is_complete(spark, tmp_path):
     df.coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
     got = {
         (r.da, r.db): r.n_shared
-        for r in em.q_ppjoin_neardup(spark, str(tmp_path)).collect()
+        for r in q_ppjoin_neardup(spark, str(tmp_path)).collect()
     }
 
     def shingles(text):
@@ -703,7 +703,7 @@ def test_interval_coverage_touching_intervals_merge(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    import __spark_entry__ as em
+    from fink_broker_spark.queries.events import q_interval_coverage
 
     t0 = datetime.datetime(2024, 1, 1, 12, 0, 0)
     # event_id 1 → 2-minute interval; event_id 2 → 3 minutes, starting
@@ -725,7 +725,7 @@ def test_interval_coverage_touching_intervals_merge(spark, tmp_path):
     pq.write_table(table, os.path.join(tmp_path, "events.parquet"))
     got = {
         r.user_id: r
-        for r in em.q_interval_coverage(spark, str(tmp_path)).collect()
+        for r in q_interval_coverage(spark, str(tmp_path)).collect()
     }
     assert got[7].n_islands == 1
     assert got[7].covered_us == 5 * 60_000_000  # 2 + 3 min, no overlap
@@ -744,7 +744,7 @@ def test_cogroup_asof_edges(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    import __spark_entry__ as em
+    from fink_broker_spark.queries.relational import q_cogroup_asof
 
     t = datetime.datetime(2024, 3, 1)
     m = datetime.timedelta(minutes=1)
@@ -782,7 +782,7 @@ def test_cogroup_asof_edges(spark, tmp_path):
         os.path.join(tmp_path, "events.parquet"),
     )
     got = {r.user_id: r for r in
-           em.q_cogroup_asof(spark, str(tmp_path)).collect()}
+           q_cogroup_asof(spark, str(tmp_path)).collect()}
     assert set(got) == {10, 11, 12}
     # user 10: order 1 matches the t+2m event (725); order 2 no match;
     # order 5's as-of pick is the duplicated instant t, whose collapse
@@ -800,13 +800,13 @@ def test_stream_static_enrich_equals_batch(spark):
     """The streaming join+aggregate must equal the same plan run as a
     plain batch query over the same lake (the stream ≡ batch invariant
     across a stream-static join)."""
-    import __spark_entry__ as em
+    from fink_broker_spark.queries.stream import q_stream_static_enrich
     from fink_broker_spark.sources.parquet import load_table
     from tests.conftest import SF0001
 
     streamed = {
         r.segment: (r.n_events, r.value_cents)
-        for r in em.q_stream_static_enrich(spark, SF0001).collect()
+        for r in q_stream_static_enrich(spark, SF0001).collect()
     }
     ev = load_table(spark, SF0001, "events")
     cu = load_table(spark, SF0001, "customer").select(

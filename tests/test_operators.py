@@ -541,13 +541,13 @@ def test_regression_trend_matches_native_aggregates(spark):
     API, the decomposition is the oracle-checkable twin."""
     import pyspark.sql.functions as F
 
-    import __spark_entry__ as em
+    from fink_broker_spark.queries.stats import q_regression_trend
     from fink_broker_spark.sources.parquet import load_table
     from tests.conftest import SF001
 
     got = {
         r.event_type: (r.slope, r.intercept, r.corr)
-        for r in em.q_regression_trend(spark, SF001).collect()
+        for r in q_regression_trend(spark, SF001).collect()
     }
     ev = load_table(spark, SF001, "events")
     x = F.floor(F.unix_micros(F.col("ts")) / F.lit(86_400_000_000)).cast(
@@ -578,12 +578,12 @@ def test_exploded_aggregates_group_on_scalars(spark):
     — Catalyst marks the latter as `_groupingexpression` aliases inside
     the aggregate's grouping projection, which costs ~2x on exploded
     hot paths (measured on basket_pairs: 10.9 s -> 4.9 s at 10x)."""
-    import __spark_entry__ as em
+    from fink_broker_spark.queries.relational import q_basket_pairs
     from fink_broker_spark.functions.sketches import cms_build
     from fink_broker_spark.sources.parquet import load_table
     from tests.conftest import SF0001
 
-    basket = em.q_basket_pairs(spark, SF0001)
+    basket = q_basket_pairs(spark, SF0001)
     plan = basket._jdf.queryExecution().executedPlan().toString()
     assert "_groupingexpression" not in plan
 
@@ -601,7 +601,7 @@ def test_funnel_walk_edge_semantics(spark):
 
     import pyspark.sql.functions as F
 
-    import __spark_entry__ as em
+    from fink_broker_spark.queries.events import q_funnel_conversion
 
     E = datetime.datetime(2024, 1, 1)
 
@@ -633,7 +633,7 @@ def test_funnel_walk_edge_semantics(spark):
         df.write.parquet(f"{d}/events.parquet")
         out = {
             r.stage: r.n_users
-            for r in em.q_funnel_conversion(spark, d).collect()
+            for r in q_funnel_conversion(spark, d).collect()
         }
     assert out == {0: 1, 1: 3, 2: 1, 3: 1}
 

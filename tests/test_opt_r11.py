@@ -45,7 +45,7 @@ def _mwu_reference(spark, sf_dir):
     """The pre-r11 single-global-window form, kept verbatim as the
     reference semantics (only the aggregate inputs — the grid walk —
     changed; the z-score tail is shared with the live query)."""
-    from __spark_entry__ import load_table
+    from fink_broker_spark.sources.parquet import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
     t = (
@@ -203,7 +203,7 @@ def test_max_concurrency_matches_reference_at_sf0001(spark):
     """Full-query pin at sf0.001: the live query's output must equal the
     old formulation's sweep run on the reference spans."""
     import __spark_entry__ as entrymod
-    from __spark_entry__ import load_table
+    from fink_broker_spark.sources.parquet import load_table
 
     live = sorted(
         map(tuple, entrymod.queries()["max_concurrency"](spark, SF0001).collect())
@@ -356,7 +356,7 @@ def test_load_table_cache_keeps_live_session(spark):
 
 
 def test_planned_width_matches_physical_plan(spark):
-    from __spark_entry__ import load_table
+    from fink_broker_spark.sources.parquet import load_table
     from fink_broker_spark.plans import partitioning as pt
 
     df = load_table(spark, SF0001, "lineitem").select(
@@ -414,7 +414,7 @@ def test_bounded_sssp_empty_and_tiny(spark):
 
 def test_weighted_median_chunked_equals_flag_window(spark):
     import __spark_entry__ as entrymod
-    from __spark_entry__ import load_table
+    from fink_broker_spark.sources.parquet import load_table
 
     li = load_table(spark, SF0001, "lineitem").filter(
         F.col("l_extendedprice").isNotNull()
@@ -457,7 +457,7 @@ def test_weighted_median_chunked_equals_flag_window(spark):
 
 def test_winsorized_stats_chunked_equals_flag_window(spark):
     import __spark_entry__ as entrymod
-    from __spark_entry__ import load_table
+    from fink_broker_spark.sources.parquet import load_table
 
     li = load_table(spark, SF0001, "lineitem").filter(
         F.col("l_extendedprice").isNotNull()

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
+from fink_broker_spark.queries.registry import QUERIES
 from tests.conftest import SF001, run_oracle_compare
 
 ORACLE_NAMES = sorted(entrymod.oracle_sql())
@@ -51,7 +52,7 @@ def test_driver_priority_names_resolve():
     query registry — a drop or duplicate silently shrinks the driver's
     50-row sample window."""
     priority = entrymod._driver_priority()
-    assert sorted(priority) == sorted(entrymod._QUERIES)
+    assert sorted(priority) == sorted(QUERIES)
     assert list(entrymod.queries()) == priority
 
 

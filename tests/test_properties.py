@@ -450,12 +450,12 @@ def _orders_lake(spark, tmp_path_factory, rows):
 )
 @given(rows=order_series)
 def test_mann_kendall_matches_naive(spark, tmp_path_factory, rows):
-    import __spark_entry__ as em
+    from fink_broker_spark.queries.stats import q_mann_kendall_trend
 
     sf = _orders_lake(spark, tmp_path_factory, rows)
     got = {
         r.priority: (r.n_buckets, r.n_pairs, r.s_stat)
-        for r in em.q_mann_kendall_trend(spark, sf).collect()
+        for r in q_mann_kendall_trend(spark, sf).collect()
     }
     # naive: exact cents per (priority, 30-day bucket), then the
     # quadratic double loop over ordered buckets.  Buckets are
@@ -487,12 +487,12 @@ def test_mann_kendall_matches_naive(spark, tmp_path_factory, rows):
 )
 @given(rows=order_series)
 def test_runs_test_matches_naive(spark, tmp_path_factory, rows):
-    import __spark_entry__ as em
+    from fink_broker_spark.queries.stats import q_runs_test
 
     sf = _orders_lake(spark, tmp_path_factory, rows)
     got = {
         r.priority: (r.n_up, r.n_down, r.n_runs)
-        for r in em.q_runs_test(spark, sf).collect()
+        for r in q_runs_test(spark, sf).collect()
     }
     series: dict = {}
     for p, d, v in rows:
@@ -527,7 +527,7 @@ def test_runs_test_matches_naive(spark, tmp_path_factory, rows):
 )
 @given(rows=order_series)
 def test_survival_counts_matches_naive(spark, tmp_path_factory, rows):
-    import __spark_entry__ as em
+    from fink_broker_spark.queries.stats import q_survival_counts
 
     # reuse (priority) as the customer id modulo 3 so lifespans vary
     sf = str(tmp_path_factory.mktemp("lake"))
@@ -540,7 +540,7 @@ def test_survival_counts_matches_naive(spark, tmp_path_factory, rows):
     ).coalesce(1).write.parquet(f"{sf}/orders.parquet")
     got = {
         r.bucket: (r.n_at_risk, r.n_events, r.n_censored)
-        for r in em.q_survival_counts(spark, sf).collect()
+        for r in q_survival_counts(spark, sf).collect()
     }
     per: dict = {}
     for i, (_, d, _) in enumerate(rows):
@@ -572,7 +572,7 @@ def test_survival_counts_matches_naive(spark, tmp_path_factory, rows):
 def test_window_distinct_count_matches_naive(
     spark, tmp_path_factory, evts
 ):
-    import __spark_entry__ as em
+    from fink_broker_spark.queries.events import q_window_distinct_count
 
     if not evts:
         return
@@ -586,7 +586,7 @@ def test_window_distinct_count_matches_naive(
     ).coalesce(1).write.parquet(f"{sf}/events.parquet")
     got = {
         r.d: r.n_cum_users
-        for r in em.q_window_distinct_count(spark, sf).collect()
+        for r in q_window_distinct_count(spark, sf).collect()
     }
     days = sorted({m for _, m in evts})
     epoch_day0 = int(EPOCH.timestamp()) // 86400

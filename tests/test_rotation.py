@@ -109,11 +109,12 @@ def test_registry_ledger_covers_live_registry():
     the persistent ledger — adding a query without syncing the ledger
     is the exact failure mode that let r7's additions jump the queue
     (they'd now sort last, but the ledger must still be kept honest)."""
-    import __spark_entry__ as entry
+    import __spark_entry__  # noqa: F401  (registers every query)
     from fink_broker_spark.admin.rotation import load_add_rounds
+    from fink_broker_spark.queries.registry import QUERIES
 
     ledger = load_add_rounds()
-    missing = set(entry._QUERIES) - set(ledger)
+    missing = set(QUERIES) - set(ledger)
     assert not missing, (
         f"sync registry_rounds.json (admin.rotation.sync_add_rounds): {missing}"
     )
@@ -144,20 +145,24 @@ def test_live_wiring():
     import json
 
     import __spark_entry__ as entry
+    from fink_broker_spark.queries import probes
+    from fink_broker_spark.queries.registry import QUERIES
 
     names = list(entry.queries().keys())
-    from fink_broker_spark.admin.probes import PROBE_QUERIES
+    pinned = [
+        n for n, fn in QUERIES.items() if fn.__module__ == probes.__name__
+    ]
 
-    expect = driver_priority(entry._QUERIES.keys(), REPO, pinned=PROBE_QUERIES)
+    expect = driver_priority(QUERIES.keys(), REPO, pinned=pinned)
     assert names == expect
     # the fingerprint-probe tier leads the rotation unconditionally
-    assert names[: len(PROBE_QUERIES)] == list(PROBE_QUERIES)
+    assert names[: len(pinned)] == list(pinned)
 
     ever_checked: set[str] = set()
     for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
         with open(path) as fh:
             ever_checked.update(json.load(fh).keys())
-    never = [n for n in entry._QUERIES if n not in ever_checked]
+    never = [n for n in QUERIES if n not in ever_checked]
     window = set(names[:50])
     # urgent = artifact-failed first, then never-checked; the window
     # holds BOTH tiers, so the fit test must count their union.  The
@@ -170,9 +175,9 @@ def test_live_wiring():
     # r7-retired hugeint canary) can leave a permanent failed row in
     # the ledger that no window could ever contain
     urgent = (
-        (set(never) | set(read_ledger(REPO)[1])) & set(entry._QUERIES)
-    ) - set(PROBE_QUERIES)
-    free = [n for n in names[:50] if n not in PROBE_QUERIES]
+        (set(never) | set(read_ledger(REPO)[1])) & set(QUERIES)
+    ) - set(pinned)
+    free = [n for n in names[:50] if n not in pinned]
     if len(urgent) <= len(free):
         missing = urgent - window
         assert not missing, f"outside 50-row driver window: {missing}"
@@ -186,4 +191,4 @@ def test_live_wiring():
     # standing sentinels + at most ONE active canary (the r9
     # probe_type_decimal38 canary answered in CORRECTNESS_r9 and
     # retired in r10, exactly as probe_type_hugeint retired after r6)
-    assert len(PROBE_QUERIES) <= 3
+    assert len(pinned) <= 3

@@ -17,6 +17,7 @@ from fink_broker_spark.ext.dedup import (
     simhash_pairs_portable,
 )
 from fink_broker_spark.ext.graph import bounded_sssp
+from fink_broker_spark.sources.parquet import load_table
 from tests.conftest import SF001
 
 
@@ -24,7 +25,7 @@ def test_minhash_portable_is_candidates_cap_exact(spark):
     """The portable LSH output must be a SUBSET of the exact-Jaccard
     pairs at the same threshold (banding can only lose pairs, never
     invent them), and every emitted jaccard must clear the threshold."""
-    docs = em.load_table(spark, SF001, "documents")
+    docs = load_table(spark, SF001, "documents")
     lsh = minhash_lsh_pairs_portable(docs, threshold=0.5).collect()
     exact = {
         (r["id_a"], r["id_b"]): r["jaccard"]
@@ -45,7 +46,7 @@ def test_simhash_portable_pigeonhole_recall(spark):
     import hashlib
     import re
 
-    docs = em.load_table(spark, SF001, "documents")
+    docs = load_table(spark, SF001, "documents")
     got = {
         (r["id_a"], r["id_b"]): r["hamming"]
         for r in simhash_pairs_portable(docs, max_hamming=3).collect()
@@ -128,7 +129,7 @@ def test_window_exclude_current_identity(spark):
     import collections
 
     by_cust = collections.defaultdict(list)
-    o = em.load_table(spark, SF001, "orders").select(
+    o = load_table(spark, SF001, "orders").select(
         "o_custkey",
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
         .cast("long")
@@ -147,7 +148,7 @@ def test_welch_ttest_matches_closed_form(spark):
     raw arm samples agree with the query's fixed IEEE tree."""
     rows = em.queries()["welch_ttest"](spark, SF001).collect()
     assert rows and all(r["t_welch"] is not None for r in rows)
-    o = em.load_table(spark, SF001, "orders").select(
+    o = load_table(spark, SF001, "orders").select(
         "o_orderpriority",
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
         .cast("long")
@@ -188,7 +189,7 @@ def test_sky_knn_is_true_topk(spark):
         per_q.setdefault(r["s_suppkey"], []).append(r)
     ev = [
         (r["event_id"], r["event_id"] % 360, (r["user_id"] * 7) % 180)
-        for r in em.load_table(spark, SF001, "events")
+        for r in load_table(spark, SF001, "events")
         .filter(F.col("user_id").isNotNull())
         .collect()
     ]
@@ -209,7 +210,7 @@ def test_stream_sliding_counts_equals_batch_window(spark):
         (r["window_start"], r["event_type"]): r["n_events"]
         for r in em.queries()["stream_sliding_counts"](spark, SF001).collect()
     }
-    ev = em.load_table(spark, SF001, "events")
+    ev = load_table(spark, SF001, "events")
     batch = {
         (r["window_start"], r["event_type"]): r["n_events"]
         for r in ev.groupBy(
@@ -240,7 +241,7 @@ def test_ks_two_sample_matches_brute_force(spark):
     """D recomputed in Python from the raw samples (sup over the merged
     value grid of |ecdf_A − ecdf_B|) equals the query's exact rational."""
     row = em.queries()["ks_two_sample"](spark, SF001).collect()[0]
-    docs = em.load_table(spark, SF001, "documents").select(
+    docs = load_table(spark, SF001, "documents").select(
         "source", "n_chars"
     ).collect()
     a = sorted(r["n_chars"] for r in docs if r["source"] == row["src_a"])
@@ -261,7 +262,7 @@ def test_kruskal_wallis_matches_rank_formula(spark):
     """H recomputed in Python with average ranks (no tie correction, as
     documented) agrees with the query's grid-algebra value."""
     row = em.queries()["kruskal_wallis"](spark, SF001).collect()[0]
-    o = em.load_table(spark, SF001, "orders").select(
+    o = load_table(spark, SF001, "orders").select(
         "o_orderpriority",
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
         .cast("long")
@@ -302,7 +303,7 @@ def test_ivf_portable_semantics(spark):
 
     emb = {
         r["vec_id"]: [math.floor(float(x) * 10000 + 0.5) for x in r["embedding"]]
-        for r in em.load_table(spark, SF001, "embeddings").collect()
+        for r in load_table(spark, SF001, "embeddings").collect()
     }
     seeds = sorted(
         emb,

@@ -20,7 +20,7 @@ import __spark_entry__ as entrymod
 from fink_broker_spark.admin.typeaudit import compare_types
 from tests.conftest import SF0001, duck_connection
 
-# admin/probes.py fingerprint probes are exempt: probe_type_hugeint
+# queries/probes.py fingerprint probes are exempt: probe_type_hugeint
 # carries a HUGEINT column ON PURPOSE (it exists to detect whether the
 # driver's canonicalizer distinguishes it)
 ORACLE_NAMES = sorted(
@@ -50,5 +50,5 @@ def test_result_types_cannot_split_a_typed_canonicalizer(spark, duck, name):
     flags = compare_types(spark_fields, duck_cols)
     assert not flags, (
         f"{name}: cross-engine type mismatch (cast the oracle column or "
-        f"register it in _BIGINT_CAST_COLS): {flags}"
+        f"list it in its @query(bigint=...)): {flags}"
     )
