@@ -19,6 +19,7 @@ from __future__ import annotations
 import argparse
 import os
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from fink_broker_spark.core import fs as hfs
@@ -233,13 +234,23 @@ def cmd_archive(args):
             key_cols = [
                 c for c in ("event_id", "ts") if c in chunk.columns
             ] or [chunk.columns[0]]
-            table = build_index_table(chunk, plan, key_cols)
+            # the index keeps every row: count them as the write reads
+            # them rather than in a second scan of the chunk. Observe the
+            # input: a metric node above build_index_table's
+            # sortWithinPartitions changes which sort the partitioned
+            # write keeps, and with it the row order of the index files.
+            rows = Observation()
+            table = build_index_table(
+                chunk.observe(rows, F.count(F.lit(1)).alias("n")),
+                plan,
+                key_cols,
+            )
             (
                 table.write.mode("append")
                 .partitionBy("salt_bucket")
                 .parquet(build_dir)
             )
-            return chunk.count()
+            return rows.get["n"]
 
         counts = ingest_chunks(
             spark, compacted, load_chunk, chunk_files=args.chunk_files

@@ -11,6 +11,9 @@ Two entry points:
 - :func:`get_session` — build a session (tests, CLI, bench).
 - :func:`configure_session` — apply the *runtime-settable* subset of the
   policy to an externally-owned session (e.g. the correctness driver's).
+
+A local session that :func:`get_session` launches also swaps in Hadoop's
+local file system from ``jvm/`` (:func:`local_fs_confs`).
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ import tempfile
 import weakref
 import zipfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 #: Runtime-settable SQL confs applied to every session the engine touches.
@@ -39,6 +43,22 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     # skewed keys re-split at runtime instead of hand-salting every join
     "spark.sql.adaptive.skewJoin.enabled": "true",
+}
+
+
+#: Hadoop's local file system with permissions set in-process (java.nio)
+#: instead of by a forked ``chmod`` per file: pip PySpark ships no
+#: ``libhadoop``, so ``RawLocalFileSystem.setPermission`` falls back to the
+#: shell for every directory, data file and ``.crc`` a write creates.
+#: Source in ``jvm/*.java``; rebuild the jar with ``tools/build_jvm.py``.
+LOCAL_FS_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-local-fs.jar"
+)
+LOCAL_FS_CLASSES: dict[str, str] = {
+    "spark.hadoop.fs.file.impl": "fink_broker_spark.core.jvm.NioLocalFileSystem",
+    # FileContext's entry point (streaming checkpoints, _spark_metadata)
+    "spark.hadoop.fs.AbstractFileSystem.file.impl":
+        "fink_broker_spark.core.jvm.NioLocalFs",
 }
 
 
@@ -81,6 +101,33 @@ def default_driver_memory(phys_bytes: int) -> str:
     """Driver heap for a host with *phys_bytes* of RAM: half of it,
     capped at 32g (a ``spark.driver.memory`` value in MiB)."""
     return f"{min(32 << 10, phys_bytes >> 21)}m"
+
+
+def local_fs_confs(confs: dict[str, str], jvm_running: bool) -> dict[str, str]:
+    """Confs that put :data:`LOCAL_FS_JAR`'s file systems under a session
+    whose JVM this process is about to launch, given the session's other
+    *confs*; empty unless the master is local.
+
+    A driver class path is only read at JVM launch, and in local mode the
+    executors are threads of that JVM, so an already running JVM (a reused
+    session, a gateway given by ``spark-submit``) or a cluster master gets
+    nothing: naming a class its JVM cannot load would fail every write.
+    The jar is appended to a caller's ``spark.driver.extraClassPath``, and
+    a file-system class the caller set is kept.
+    """
+    master = confs.get("spark.master", "")
+    if (
+        jvm_running
+        or not (master == "local" or master.startswith("local["))
+        or not os.path.exists(LOCAL_FS_JAR)
+    ):
+        return {}
+    out = {k: confs.get(k, v) for k, v in LOCAL_FS_CLASSES.items()}
+    prior = confs.get("spark.driver.extraClassPath")
+    out["spark.driver.extraClassPath"] = (
+        prior + os.pathsep + LOCAL_FS_JAR if prior else LOCAL_FS_JAR
+    )
+    return out
 
 
 def session_id(spark: SparkSession) -> str:
@@ -179,34 +226,32 @@ def get_session(
     runtime, so a single generous default scales from local tests to a
     1000-executor cluster.
     """
-    builder = SparkSession.builder.appName(app_name)
+    confs: dict[str, str] = {}
     if master:
-        builder = builder.config("spark.master", master)
+        confs["spark.master"] = master
     # local mode runs every executor thread inside the driver JVM, whose
     # default heap (1g) starves shuffles long before the machine does;
     # static confs — they only take effect when this call launches the JVM
     phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
-    builder = builder.config(
-        "spark.driver.memory",
-        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(phys),
+    confs["spark.driver.memory"] = (
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(phys)
     )
     # reliable checkpoints (plans/materialize.py) are deleted once their
     # RDD is garbage-collected, instead of outliving the session
-    builder = builder.config(
-        "spark.cleaner.referenceTracking.cleanCheckpoints", "true"
-    )
-    builder = builder.config(
-        "spark.sql.warehouse.dir", os.path.join(_process_tmp(), "warehouse")
-    )
+    confs["spark.cleaner.referenceTracking.cleanCheckpoints"] = "true"
+    confs["spark.sql.warehouse.dir"] = os.path.join(_process_tmp(), "warehouse")
     if shuffle_partitions is not None:
-        builder = builder.config(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
-    for key, value in RUNTIME_CONFS.items():
+        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    confs.update(RUNTIME_CONFS)
+    confs.update(extra_confs or {})
+    jvm_running = (
+        SparkContext._gateway is not None
+        or "PYSPARK_GATEWAY_PORT" in os.environ
+    )
+    confs.update(local_fs_confs(confs, jvm_running))
+    builder = SparkSession.builder.appName(app_name)
+    for key, value in confs.items():
         builder = builder.config(key, value)
-    if extra_confs:
-        for key, value in extra_confs.items():
-            builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return configure_session(spark)
